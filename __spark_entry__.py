@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from breweries_etl_spark.config import KEY_FIELDS
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.functions.exact import (
     sql_disc_price,
     sql_charge,
@@ -342,6 +343,7 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.subtract(b)
 
 
+@lifecycle.operator(release=False)
 def q_explode_shingle_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explode (lateral view) over per-document shingle arrays → corpus
     vocabulary stats."""
@@ -751,13 +753,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dups (approximate candidate generation; exact
-    verification). Not SQL-expressible → rows-only driver check.
-
-    ``release=False``: the contract/bench session consumes the result
-    immediately and exits, so paying a reliable-checkpoint write + cache
-    teardown INSIDE the timed call (r2's shape — 3.1× slower) buys
-    nothing. Library callers keep the release=True default; the
-    zero-pinned-RDD invariant is tested there (test_dedup.py)."""
+    verification). Not SQL-expressible → rows-only driver check."""
     return dedup.minhash_near_duplicates(
         load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
     )
@@ -817,20 +813,24 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a DuckDB recursive-CTE reachability closure."""
     from breweries_etl_spark.operators.graph import connected_components
 
-    pairs = dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
-    )
-    return connected_components(pairs)
+    # the scope frees the pair caches once the components are checkpointed
+    with lifecycle.scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+        )
+        return connected_components(pairs)
 
 
 def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster canonical summary (cluster sizes, docs to drop)."""
     from breweries_etl_spark.operators.graph import dedup_cluster_canonical
 
-    pairs = dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
-    )
-    return dedup_cluster_canonical(pairs)
+    # the scope frees the pair caches once the components are checkpointed
+    with lifecycle.scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+        )
+        return dedup_cluster_canonical(pairs)
 
 
 def q_streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3645,6 +3645,7 @@ FROM events
 """
 
 
+@lifecycle.operator(release=False)
 def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key salted join of lineitem (l_suppkey is the engineered
     skew key: 100 keys, heaviest ≈11× uniform) against supplier, then

@@ -586,19 +586,29 @@ def run_solo(name: str, n_timed: int) -> None:
     print("BENCH_SOLO " + json.dumps({name: round(best, 3)}), flush=True)
 
 
-def _solo_subprocess(name: str, n_timed: int) -> float | None:
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.abspath(__file__),
-            "--solo",
-            name,
-            str(n_timed),
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
+def _child(args: list[str], timeout: int, label: str, failures: dict[str, str]):
+    """Run one bench child process. A child that outlives ``timeout`` is
+    recorded in ``failures`` and yields None, so one hung query cannot
+    lose the whole run."""
+    try:
+        return subprocess.run(
+            [sys.executable, os.path.abspath(__file__), *args],
+            capture_output=True,
+            text=True,
+            timeout=timeout,
+        )
+    except subprocess.TimeoutExpired:
+        failures[label] = f"timeout after {timeout} s"
+        print(f"{label} timed out after {timeout} s", file=sys.stderr)
+        return None
+
+
+def _solo_subprocess(
+    name: str, n_timed: int, failures: dict[str, str]
+) -> float | None:
+    proc = _child(["--solo", name, str(n_timed)], 600, f"solo:{name}", failures)
+    if proc is None:
+        return None
     for line in proc.stdout.splitlines():
         if line.startswith("BENCH_SOLO "):
             return json.loads(line[len("BENCH_SOLO "):]).get(name)
@@ -614,18 +624,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
+    failures: dict[str, str] = {}
     canary: dict = {"query": CANARY_QUERY}
-    canary["start_sec"] = _solo_subprocess(CANARY_QUERY, 3)
+    canary["start_sec"] = _solo_subprocess(CANARY_QUERY, 3, failures)
 
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for family in FAMILIES:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--family", family],
-            capture_output=True,
-            text=True,
-            timeout=1200,
-        )
+        proc = _child(["--family", family], 1200, f"family:{family}", failures)
+        if proc is None:
+            continue
         got = False
         for line in proc.stdout.splitlines():
             if line.startswith("BENCH_FAMILY "):
@@ -640,7 +648,7 @@ def main() -> None:
                 file=sys.stderr,
             )
 
-    canary["end_sec"] = _solo_subprocess(CANARY_QUERY, 3)
+    canary["end_sec"] = _solo_subprocess(CANARY_QUERY, 3, failures)
 
     # Opt-in solo tail series (r13, VERDICT r12 #5): fresh-JVM min-of-N
     # for every slow-tail query, the window-insensitive series next to
@@ -653,12 +661,14 @@ def main() -> None:
         for name in sorted(timings, key=lambda n: (-timings[n], n)):
             if timings[name] < thresh:
                 break
-            v = _solo_subprocess(name, 2)
+            v = _solo_subprocess(name, 2, failures)
             if v is not None:
                 solo[name] = v
 
     total = round(sum(timings.values()), 3)
-    print(final_line(timings, total, sf, samples, canary, solo), flush=True)
+    print(
+        final_line(timings, total, sf, samples, canary, solo, failures), flush=True
+    )
 
 
 # The harness that runs this script captures only the last ~2000 chars of
@@ -680,6 +690,7 @@ def final_line(
     samples: dict[str, list[float]] | None = None,
     canary: dict | None = None,
     solo: dict[str, float] | None = None,
+    failures: dict[str, str] | None = None,
 ) -> str:
     samples = samples or {}
     self_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json")
@@ -720,6 +731,9 @@ def final_line(
                     ),
                     "enabled": bool(solo),
                 },
+                # child processes that timed out (family or solo); the
+                # run carries on without them.
+                "failures": failures or {},
             },
             f,
             indent=1,

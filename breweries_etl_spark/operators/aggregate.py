@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 
 def create_aggregation(
     df: DataFrame,
@@ -286,6 +288,7 @@ def abc_classification(
     )
 
 
+@lifecycle.operator
 def frequent_item_pairs(
     df: DataFrame,
     basket_col: str,
@@ -326,13 +329,10 @@ def frequent_item_pairs(
     # exchange-reuse rule does not unify them). Persisting the collapsed
     # basket relation — one row per basket, already the smallest form of
     # the data — pins the fact scan + distinct to exactly one
-    # computation; supports re-derive from the cached arrays. Same
-    # persist/release contract as the dedup pipelines: library callers
-    # get the cache dropped via an eager checkpoint of the (tiny) pair
-    # result; one-shot contract/bench sessions pass release=False.
+    # computation; supports re-derive from the cached arrays.
     all_baskets = items.groupBy("b").agg(
         F.sort_array(F.collect_list("i")).alias("is_")
-    ).persist()
+    ).transform(lifecycle.persist)
     all_baskets.count()
     n_baskets_df = all_baskets.agg(F.count(F.lit(1)).alias("nb"))
     item_support = (
@@ -384,8 +384,4 @@ def frequent_item_pairs(
         F.round(support, 6).alias("support"),
         F.round(lift, 6).alias("lift"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [all_baskets])
     return result

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.exact import round_half_up as _r6
 
 
@@ -527,6 +528,7 @@ def conversion_latency_percentiles(
     )
 
 
+@lifecycle.operator
 def event_cooccurrence_lift(
     df: DataFrame,
     min_users: int = 5,
@@ -556,7 +558,7 @@ def event_cooccurrence_lift(
         .distinct()
         .groupBy("user_id")
         .agg(F.sort_array(F.collect_list("event_type")).alias("ts_"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_user.count()
     n_users = per_user.agg(F.count(F.lit(1)).alias("__n_users"))
@@ -596,10 +598,6 @@ def event_cooccurrence_lift(
             "type_a", "type_b", "n_both", F.round(lift, 6).alias("lift")
         )
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [per_user])
     return result
 
 
@@ -769,6 +767,7 @@ def conversion_ab_ztest(
     )
 
 
+@lifecycle.operator
 def kaplan_meier_retention(
     df: DataFrame,
     user_col: str = "user_id",
@@ -800,7 +799,7 @@ def kaplan_meier_retention(
             F.min(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("first_us"),
             F.max(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("last_us"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     us.count()
     mx = us.agg(F.max("last_us").alias("max_us"))
@@ -854,9 +853,7 @@ def kaplan_meier_retention(
         .otherwise(F.round(F.exp(F.col("cum_term").cast("double")), 6))
         .alias("survival"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [us])
+    return result
 
 
 def event_transition_stats(
@@ -916,6 +913,7 @@ def event_transition_stats(
     )
 
 
+@lifecycle.operator
 def logrank_retention(
     df: DataFrame,
     user_col: str = "user_id",
@@ -946,7 +944,7 @@ def logrank_retention(
             F.max(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("last_us"),
             F.count(F.lit(1)).alias("n_ev"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     us.count()
     mx = us.agg(F.max("last_us").alias("max_us"))
@@ -1025,6 +1023,4 @@ def logrank_retention(
         F.round(e1d, 6).alias("expected_a"),
         F.when(vd > 0, F.round(chi2, 6)).alias("chi2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [us])
+    return result

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 from .sampling import _BUCKETS, hash_bucket_expr
 from .text import (
@@ -301,10 +302,12 @@ def leakage_safe_split(
     from .dedup import prefix_filtered_jaccard_pairs
     from .graph import connected_components
 
-    pairs = prefix_filtered_jaccard_pairs(
-        df, text_col, id_col, threshold=threshold, n=n, release=False
-    )
-    cc = connected_components(pairs)
+    # the scope frees the pair caches once the components are checkpointed
+    with lifecycle.scope():
+        pairs = prefix_filtered_jaccard_pairs(
+            df, text_col, id_col, threshold=threshold, n=n, release=False
+        )
+        cc = connected_components(pairs)
     labeled = (
         df.select(F.col(id_col))
         .join(cc.withColumnsRenamed({"doc_id": id_col}), id_col, "left")
@@ -390,6 +393,7 @@ def paragraph_dedup(
     )
 
 
+@lifecycle.operator
 def source_overlap_matrix(
     df: DataFrame,
     text_col: str = "text",
@@ -410,8 +414,7 @@ def source_overlap_matrix(
     exploding the same persisted relation (the earlier shingle
     self-join referenced the distinct relation three times, and the r5
     plan audit showed four corpus scans). The persisted relation is the
-    narrow (shingle, sources[]) aggregate; it is released via an eager
-    checkpoint of the (|sources|²-row) result.
+    narrow (shingle, sources[]) aggregate.
     """
     sets = (
         df.select(
@@ -421,7 +424,7 @@ def source_overlap_matrix(
         .distinct()
         .groupBy("s")
         .agg(F.sort_array(F.collect_list("source")).alias("srcs"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     sets.count()
     tot = (
@@ -456,10 +459,6 @@ def source_overlap_matrix(
             ).alias("jaccard"),
         )
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [sets])
     return result
 
 

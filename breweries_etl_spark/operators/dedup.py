@@ -17,12 +17,12 @@ Scale design:
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 from .text import normalize_text_expr, shingle_hashes_expr, shingles_expr
 
@@ -90,6 +90,7 @@ def dedup_exact_keep_best(
     )
 
 
+@lifecycle.operator(release=False)
 def shingle_sets(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3,
     cache: bool = True,
@@ -112,33 +113,8 @@ def shingle_sets(
         F.col(id_col), expr(F.col(text_col), n).alias("shingles")
     )
     if cache:
-        projected = projected.persist()
-    filtered = projected.filter(F.size("shingles") > 0)
-    # Handle for callers to release THE CACHED PLAN (the pre-filter
-    # projection), not the filtered view — unpersist() only drops the
-    # exact plan it was cached under.
-    filtered._shingle_cache = projected  # type: ignore[attr-defined]
-    return filtered
-
-
-def _release_caches(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
-    """Eagerly materialize ``result`` via a reliable (lineage-truncating)
-    checkpoint, then unpersist the intermediate caches it depended on.
-
-    Near-dup pipelines persist corpus-scale intermediates (shingle sets
-    are comparable in size to the raw text); returning a lazy plan that
-    still references them would pin that storage for the caller's
-    lifetime and evict everything else on a shared cluster. The pair
-    list being checkpointed is tiny next to the corpus, and the
-    recompute during the checkpoint write hits the still-warm caches.
-    """
-    sc = result.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="spark_dedup_ckpt_"))
-    out = result.checkpoint(eager=True)
-    for c in caches:
-        getattr(c, "_shingle_cache", c).unpersist()
-    return out
+        projected = lifecycle.persist(projected)
+    return projected.filter(F.size("shingles") > 0)
 
 
 def minhash_mins(
@@ -161,6 +137,7 @@ def minhash_mins(
     return exploded.groupBy(id_col).agg(*aggs)
 
 
+@lifecycle.operator(release=False)
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3,
     perms: int = MINHASH_PERMS,
@@ -246,6 +223,7 @@ def jaccard_expr(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+@lifecycle.operator
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -266,14 +244,11 @@ def minhash_near_duplicates(
     concurrently within one job — lazily, every branch would recompute
     them before the cache fills. The minima are tiny (~256 bytes/doc);
     the shingle-HASH arrays (8 bytes/shingle ≈ 8 bytes/word) are smaller
-    than the raw text but still corpus-scale, so with ``release=True``
-    (the default) the verified pair list is checkpointed eagerly and
-    both caches are dropped before returning: nothing corpus-scale stays
-    pinned in executor storage. Pass ``release=False`` to keep the lazy
-    plan (tests/inspection).
+    than the raw text but still corpus-scale; ``release`` follows
+    ``functions/lifecycle.py``.
     """
     sh = shingle_sets(df, text_col, id_col, n, hashed=True)
-    mins = minhash_mins(sh, id_col).persist()
+    mins = lifecycle.persist(minhash_mins(sh, id_col))
     mins.count()
     pairs = lsh_candidate_pairs(mins, id_col, max_bucket=max_bucket)
     result = (
@@ -286,11 +261,10 @@ def minhash_near_duplicates(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    if release:
-        return _release_caches(result, [sh, mins])
     return result
 
 
+@lifecycle.operator
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -394,11 +368,10 @@ def ngram_jaccard_pairs(
         )
     )
     result = cross.unionByName(within)
-    if release:
-        return _release_caches(result, [sh, rep_sh, members])
     return result
 
 
+@lifecycle.operator
 def prefix_filtered_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -480,11 +453,10 @@ def prefix_filtered_jaccard_pairs(
             F.round(jaccard_expr(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
         )
     )
-    if release:
-        return _release_caches(result, [sh])
     return result
 
 
+@lifecycle.operator
 def prefix_jaccard_incremental(
     base: DataFrame,
     incoming: DataFrame,
@@ -565,8 +537,6 @@ def prefix_jaccard_incremental(
             F.round(jaccard_expr(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
         )
     )
-    if release:
-        return _release_caches(result, [sh_b, sh_i])
     return result
 
 
@@ -633,6 +603,7 @@ def simhash_signatures(
     )
 
 
+@lifecycle.operator
 def simhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -645,7 +616,7 @@ def simhash_near_duplicates(
     radius must agree on at least one chunk, so the chunk equi-join is an
     exact candidate generator (no false negatives)."""
     # persist: the Pandas-UDF signature pass feeds both join sides
-    sigs = simhash_signatures(df, text_col, id_col).persist()
+    sigs = lifecycle.persist(simhash_signatures(df, text_col, id_col))
     chunks = sigs.select(
         id_col,
         "simhash",
@@ -681,8 +652,6 @@ def simhash_near_duplicates(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    if release:
-        return _release_caches(result, [sigs])
     return result
 
 
@@ -784,11 +753,11 @@ def _set_group_collapse(sh: DataFrame, id_col: str):
     # re-ran the xxhash64(sort_array(shingles)) pass over the whole
     # shingle cache — profiled at sf0.1 as three identical 3-6
     # task-second broadcast-future stages per query (guide §2.4: don't
-    # recompute what one pass already knows). Callers unpersist both
-    # alongside ``sh`` at their release site; the block-manager's
-    # per-block locking dedupes the concurrent broadcast-future
-    # computations of the same cached partition.
-    members = grouped.select("__g", F.col(id_col)).persist()
+    # recompute what one pass already knows). Both are freed with the
+    # caller's scope; the block-manager's per-block locking dedupes the
+    # concurrent broadcast-future computations of the same cached
+    # partition.
+    members = lifecycle.persist(grouped.select("__g", F.col(id_col)))
     rep_sh = (
         grouped.groupBy("__g")
         .agg(
@@ -797,11 +766,12 @@ def _set_group_collapse(sh: DataFrame, id_col: str):
             ).alias("m")
         )
         .select("__g", F.col("m.i").alias("__rid"), F.col("m.sh").alias("shingles"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     return rep_sh, members
 
 
+@lifecycle.operator
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -925,6 +895,4 @@ def containment_pairs(
         )
     )
     result = cross.unionByName(within)
-    if release:
-        return _release_caches(result, [sh, rep_sh, members])
     return result

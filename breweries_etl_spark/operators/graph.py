@@ -6,82 +6,24 @@ apply MinHash/SimHash results.
 Scale design: iterative min-label propagation. Each round is one
 aggregate + one join over (node, label) pairs — never the documents —
 and converges in O(cluster diameter) rounds; near-dup clusters are
-shallow (a page and its variants), so 3-5 rounds is typical. Every
-round eagerly (reliably) checkpoints the label frame: iterative plans
-otherwise double in depth each pass and re-execute from the source
-(lineage truncation is the standard Spark pattern for Pregel-style
-loops; GraphX checkpoints periodically for the same reason). Reliable
-checkpoints — not localCheckpoint — because they leave NOTHING pinned
-in executor storage (localCheckpoint persists RDD blocks that
-DataFrame.unpersist cannot release). The per-round convergence check is
-one count() of changed labels — a driver action per iteration is
-inherent to iterative algorithms, not a collect() of data.
+shallow (a page and its variants), so 3-5 rounds is typical. Each
+round's frame goes through a lineage barrier (``lifecycle.truncated``
+or ``lifecycle.materialized``), with a reliable checkpoint every
+CHECKPOINT_EVERY rounds: iterative plans otherwise double in depth each
+pass and re-execute from the source (lineage truncation is the standard
+Spark pattern for Pregel-style loops; GraphX checkpoints periodically
+for the same reason). How the barriers are released is in
+``functions/lifecycle.py``. The per-round convergence check is one
+count() of changed labels — a driver action per iteration is inherent
+to iterative algorithms, not a collect() of data.
 """
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpointed(df: DataFrame) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="spark_graph_ckpt_"))
-    return df.checkpoint(eager=True)
-
-
-def _materialized(df: DataFrame) -> tuple[DataFrame, int]:
-    """Persist + count: the cheap per-round lineage barrier. One job, no
-    checkpoint I/O — execution downstream reads the cached blocks, and
-    the count doubles as the convergence/emptiness signal, so iterative
-    loops pay ONE action per round instead of checkpoint-write + probe.
-    Callers must unpersist before returning (the zero-pinned-RDD
-    contract); reliable checkpoints are reserved for every few rounds
-    (lineage cap) and the final result (release point).
-
-    NOTE: persist() caches EXECUTION but does not truncate the LOGICAL
-    plan. Safe only where the round-over-round plan grows linearly (one
-    self-reference per round, as in label propagation / power
-    iteration). A loop whose round references the previous frame k ≥ 2
-    times grows a 3^N-node plan tree that Catalyst must re-analyze every
-    action — use ``_truncated`` there instead (measured: BFS hop 5 at
-    sf0.1 built a 164 MB plan string and spent 90 s in analysis)."""
-    out = df.persist()
-    return out, out.count()
-
-
-def _truncated(df: DataFrame, with_count: bool = True) -> tuple[DataFrame, int]:
-    """localCheckpoint(eager): materialize AND cut the logical plan to a
-    single leaf — the barrier for loops with multiplicative plan growth
-    (BFS references the frontier in both join directions plus every
-    prior frame via the visited union). In-memory, no reliable-storage
-    write; the count after is a cached scan. localCheckpoint pins RDD
-    blocks that DataFrame.unpersist cannot reach, so callers MUST
-    release them via ``_release_new_rdds`` before returning.
-
-    ``with_count=False`` skips the count action for loops that don't
-    consume it (PageRank runs a FIXED iteration count) — one fewer job
-    per round; the eager checkpoint already materialized everything."""
-    out = df.localCheckpoint(eager=True)
-    return out, (out.count() if with_count else -1)
-
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _release_new_rdds(sc, before: set[int]) -> None:
-    """Unpersist every RDD pinned since ``before`` was captured —
-    releases localCheckpoint blocks (invisible to the DataFrame-level
-    CacheManager). Scoped by id-diff, so pre-existing caches survive;
-    only the loop's own barriers are dropped."""
-    rdds = sc._jsc.getPersistentRDDs()
-    for k in rdds.keySet().toArray():
-        if int(k) not in before:
-            rdds.get(k).unpersist()
+from ..functions import lifecycle
 
 
 # Reliable-checkpoint cadence for iterative loops: between checkpoints the
@@ -139,23 +81,26 @@ def connected_components(
     """(doc_id, cluster_id) for every node in ``pairs``, where cluster_id
     is the minimum node id in the component — deterministic on any
     partitioning."""
-    spark = pairs.sparkSession
-    sc = spark.sparkContext
-    rdds_before = _persistent_rdd_ids(sc)
-    edges, n_edges = _materialized(
-        _undirected(pairs, src_col, dst_col)
-    )
-    with _loop_shuffle_partitions(spark, n_edges):
-        return _cc_loop(sc, rdds_before, edges, max_iterations)
+    # the sort stays outside the release checkpoint: inside, it would
+    # add a range-partitioning sample job
+    return _components(pairs, src_col, dst_col, max_iterations).orderBy("doc_id")
 
 
-def _cc_loop(sc, rdds_before, edges, max_iterations: int) -> DataFrame:
-    current, _ = _materialized(
+@lifecycle.operator
+def _components(
+    pairs: DataFrame, src_col: str, dst_col: str, max_iterations: int
+) -> DataFrame:
+    edges, n_edges = lifecycle.materialized(_undirected(pairs, src_col, dst_col))
+    with _loop_shuffle_partitions(pairs.sparkSession, n_edges):
+        return _cc_loop(edges, max_iterations)
+
+
+def _cc_loop(edges: DataFrame, max_iterations: int) -> DataFrame:
+    current, _ = lifecycle.materialized(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    live = [edges, current]
     for rnd in range(1, max_iterations + 1):
         # smallest label among each node's neighbors, then
         # keep min(own label, best neighbor label)
@@ -179,23 +124,19 @@ def _cc_loop(sc, rdds_before, edges, max_iterations: int) -> DataFrame:
         # leaf; the reliable checkpoint every CHECKPOINT_EVERY rounds
         # additionally caps recompute depth on block loss.
         if rnd % CHECKPOINT_EVERY == 0:
-            updated = _checkpointed(updated)
+            updated = lifecycle.checkpoint(updated)
         else:
-            updated, _ = _truncated(updated)
-            live.append(updated)
+            updated, _ = lifecycle.truncated(updated)
         n_changed = updated.filter(F.col("changed")).count()
         current = updated
         if n_changed == 0:
             break
-    result = _checkpointed(
-        current.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    return current.select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
-    for c in live:
-        c.unpersist()
-    _release_new_rdds(sc, rdds_before)
-    return result.orderBy("doc_id")
 
 
+@lifecycle.operator
 def bfs_levels(
     pairs: DataFrame,
     sources: "DataFrame | Callable[[DataFrame], DataFrame]",
@@ -220,8 +161,8 @@ def bfs_levels(
     wall time: O(nodes × diameter) checkpoint I/O). The visited set is
     the lazy union of the already-persisted hop frames, so lineage grows
     only linearly in hops; one final reliable checkpoint of the full
-    level table truncates everything and lets every persist be released
-    before returning (zero pinned RDDs).
+    level table truncates everything, so every persist is released
+    before returning.
 
     The edge list stays DIRECTED (half the rows of the materialized
     undirected doubling r2 built); each hop probes both directions.
@@ -234,8 +175,8 @@ def bfs_levels(
     Each hop references the frontier twice (both directions) plus every
     prior frame (visited union), so the logical plan would grow ~3^hops
     without truncation — per-hop frames therefore go through
-    ``_truncated`` (localCheckpoint), not ``_materialized``; see the
-    helper docstrings. All blocks are released before returning.
+    ``lifecycle.truncated`` (localCheckpoint), not
+    ``lifecycle.materialized``; see their docstrings.
 
     ``sources``: one-column DataFrame of starting node ids (column
     ``node``) — OR a callable ``(materialized_edges) -> DataFrame``
@@ -247,21 +188,18 @@ def bfs_levels(
     caller's, so the seed aggregate was a SECOND full fact scan
     (the dunn_pairwise class of bug; judge r10 open item #2).
     """
-    spark = pairs.sparkSession
-    sc = spark.sparkContext
-    rdds_before = _persistent_rdd_ids(sc)
     # Persisted because every hop re-joins the full edge list.
-    edges, n_edges = _materialized(
+    edges, n_edges = lifecycle.materialized(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     )
     if callable(sources):
         sources = sources(edges)
-    with _loop_shuffle_partitions(spark, n_edges):
-        return _bfs_loop(sc, rdds_before, edges, sources, max_hops)
+    with _loop_shuffle_partitions(pairs.sparkSession, n_edges):
+        return _bfs_loop(edges, sources, max_hops)
 
 
-def _bfs_loop(sc, rdds_before, edges, sources, max_hops: int) -> DataFrame:
-    frontier, _ = _truncated(
+def _bfs_loop(edges, sources, max_hops: int) -> DataFrame:
+    frontier, _ = lifecycle.truncated(
         sources.select("node").distinct().withColumn("level", F.lit(0))
     )
     hop_frames = [frontier]
@@ -275,7 +213,7 @@ def _bfs_loop(sc, rdds_before, edges, sources, max_hops: int) -> DataFrame:
         bwd = edges.join(frontier, edges.dst == frontier.node).select(
             F.col("src").alias("node")
         )
-        new, n_new = _truncated(
+        new, n_new = lifecycle.truncated(
             fwd.union(bwd)
             .join(visited.select("node"), "node", "left_anti")
             .distinct()
@@ -289,12 +227,9 @@ def _bfs_loop(sc, rdds_before, edges, sources, max_hops: int) -> DataFrame:
     for f in hop_frames[1:]:
         out = out.union(f)
     # The level table is node-scale but the union drags ~32 partitions per
-    # hop frame into the checkpoint — coalesce so the write is a handful
-    # of files, not hops×partitions shards.
-    result = _checkpointed(out.coalesce(16))
-    edges.unpersist()
-    _release_new_rdds(sc, rdds_before)
-    return result
+    # hop frame into the release checkpoint — coalesce so the write is a
+    # handful of files, not hops×partitions shards.
+    return out.coalesce(16)
 
 
 def _undirected(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -349,10 +284,12 @@ def _oriented_triangle_edges(
     O(√m) regardless of degree skew (Suri & Vassilvitskii WWW'11), so
     the arrays stay bounded at any scale.
 
-    Returns (und, deg, oriented, ew); the first three are persisted —
-    the CALLER must unpersist them once its statistic materializes."""
-    und = _undirected(pairs, src_col, dst_col).persist()
-    deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    Returns (und, deg, oriented, adj, ew); all but ``ew`` are persisted
+    in the caller's lifecycle scope."""
+    und = lifecycle.persist(_undirected(pairs, src_col, dst_col))
+    deg = lifecycle.persist(
+        und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )
     du = deg.select(F.col("src").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("src").alias("v"), F.col("deg").alias("dv"))
     # keep (u,v) iff (deg_u, u) < (deg_v, v): one direction per edge
@@ -364,19 +301,20 @@ def _oriented_triangle_edges(
             | ((F.col("du") == F.col("dv")) & (F.col("src") < F.col("dst")))
         )
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     # persisted: referenced by BOTH joins below — unpersisted, the
     # collect_list aggregate ran twice (profiled as two identical
     # 19MB-in/13MB-out stages)
     adj = oriented.groupBy("a").agg(
         F.sort_array(F.collect_list("b")).alias("__nb")
-    ).persist()
+    ).transform(lifecycle.persist)
     adj_b = adj.select(F.col("a").alias("b"), F.col("__nb").alias("__nb2"))
     ew = oriented.join(adj, "a").join(adj_b, "b")
     return und, deg, oriented, adj, ew
 
 
+@lifecycle.operator
 def triangle_stats(
     pairs: DataFrame,
     src_col: str = "src",
@@ -430,12 +368,10 @@ def triangle_stats(
             ).alias("clustering"),
         )
     )
-    result = _checkpointed(out)
-    for c in (adj, oriented, deg, und):
-        c.unpersist()
-    return result
+    return out
 
 
+@lifecycle.operator
 def pagerank(
     pairs: DataFrame,
     src_col: str = "src",
@@ -461,32 +397,26 @@ def pagerank(
     contributions), so persist+count would leave a 2^rounds logical
     plan that Catalyst re-analyzes on every action (measured: round 5
     at sf0.1 spent >10 s in pure plan analysis with execution fully
-    cached). The per-round barrier is therefore ``_truncated``
-    (localCheckpoint — plan cut to a leaf), same as BFS; blocks are
-    released via ``_release_new_rdds`` before returning.
+    cached). The per-round barrier is therefore ``lifecycle.truncated``
+    (localCheckpoint — plan cut to a leaf), same as BFS.
 
     Rows-only for the driver gate (float accumulation order makes exact
     cross-engine hashing meaningless); pytest verifies against a dense
     numpy power iteration at 1e-9 and the Σrank=1 invariant.
     """
-    spark = pairs.sparkSession
-    sc = spark.sparkContext
-    rdds_before = _persistent_rdd_ids(sc)
-    edges, n_edges = _materialized(
+    edges, n_edges = lifecycle.materialized(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     )
-    with _loop_shuffle_partitions(spark, n_edges):
-        return _pagerank_loop(sc, rdds_before, edges, iterations, damping)
+    with _loop_shuffle_partitions(pairs.sparkSession, n_edges):
+        return _pagerank_loop(edges, iterations, damping)
 
 
-def _pagerank_loop(
-    sc, rdds_before, edges, iterations: int, damping: float
-) -> DataFrame:
+def _pagerank_loop(edges, iterations: int, damping: float) -> DataFrame:
     # One aggregation pass yields the node table, each node's out-degree,
     # AND the dangling set (out_deg = 0) — r4's first cut ran three
     # separate jobs (nodes distinct, out_deg groupBy, dangling anti-join)
     # for facts one union+groupBy already knows.
-    nodes_deg, n = _materialized(
+    nodes_deg, n = lifecycle.materialized(
         edges.select(F.col("src").alias("node"), F.lit(1).alias("has_out"))
         .union(edges.select(F.col("dst").alias("node"), F.lit(0).alias("has_out")))
         .groupBy("node")
@@ -494,19 +424,17 @@ def _pagerank_loop(
     )
     nodes = nodes_deg.select("node")
     if n == 0:
-        result = _checkpointed(nodes.withColumn("rank", F.lit(0.0)))
-        edges.unpersist()
-        nodes_deg.unpersist()
-        return result
+        return nodes.withColumn("rank", F.lit(0.0))
     out_deg = nodes_deg.filter(F.col("out_deg") > 0).select(
         F.col("node").alias("src"), "out_deg"
     )
     # Loop-invariant: edge list with its source's out-degree attached
     # (division stays rank/out_deg inside the loop so the arithmetic is
     # operation-identical to the unrolled SQL oracle).
-    wedges, _ = _materialized(edges.join(out_deg, "src").select("src", "dst", "out_deg"))
-    live = [edges, nodes_deg, wedges]
-    ranks, _ = _truncated(nodes.withColumn("rank", F.lit(1.0 / n)), with_count=False)
+    wedges, _ = lifecycle.materialized(
+        edges.join(out_deg, "src").select("src", "dst", "out_deg")
+    )
+    ranks, _ = lifecycle.truncated(nodes.withColumn("rank", F.lit(1.0 / n)), with_count=False)
     for _it in range(1, iterations + 1):
         # One pass over ranks per round: the edge join yields both the
         # per-node in-mass AND (by mass conservation) the dangling
@@ -546,12 +474,8 @@ def _pagerank_loop(
                 ).alias("rank"),
             )
         )
-        ranks, _ = _truncated(new_ranks, with_count=False)
-    result = _checkpointed(ranks)
-    for c in live:
-        c.unpersist()
-    _release_new_rdds(sc, rdds_before)
-    return result
+        ranks, _ = lifecycle.truncated(new_ranks, with_count=False)
+    return ranks
 
 
 def dedup_cluster_canonical(
@@ -573,6 +497,7 @@ def dedup_cluster_canonical(
     )
 
 
+@lifecycle.operator
 def edge_embeddedness_topk(
     pairs: DataFrame,
     src_col: str = "src",
@@ -671,10 +596,7 @@ def edge_embeddedness_topk(
         .orderBy(F.desc("common_neighbors"), "id_a", "id_b")
         .limit(k)
     )
-    result = _checkpointed(joined)
-    for c in (adj, oriented, deg, und):
-        c.unpersist()
-    return result
+    return joined
 
 
 def kcore_summary(
@@ -700,60 +622,61 @@ def kcore_summary(
     count of strict node-count decreases on both sides. Output one
     row: (k, n_nodes_initial, n_edges_initial, n_peel_rounds,
     n_nodes_core, n_edges_core)."""
-    und = _undirected(pairs, src_col, dst_col).persist()
-    n_nodes0 = und.select("src").distinct().count()
-    # Seed the convergence check with the RAW materialized row count
-    # (ADVICE r12): _undirected collapses a self-loop (u,u) to ONE row,
-    # so und.count() can be odd — seeding with n_edges0 * 2 would then
-    # never match a converged round-0 and overcount n_peel_rounds by 1
-    # plus one wasted peel round. No entry query builds self-loops
-    # (pairs use a.p < b.p), but kcore_summary is a generic operator.
-    n_rows0 = und.count()
-    n_edges0 = n_rows0 // 2
-    cur = und
-    n_peel = 0
-    # Convergence signal (r12): the per-round EDGE-ROW count, not a
-    # distinct node count. Equivalence: nxt ⊆ cur row-wise, so equal
-    # row counts ⇔ nxt == cur ⇔ no node fell below k (a removed node
-    # had deg ≥ 1 — nodes exist only via edges — so removing one
-    # strictly removes rows; and if keep ⊇ nodes(cur), both semi-joins
-    # pass every row). The two signals break on the SAME round and
-    # count the SAME strict decreases — but the plain count() is
-    # answered by the persist materialization itself, where the old
-    # distinct-node count paid one extra full exchange + aggregate per
-    # round (guide §2.4: remove shuffles outright).
-    prev_rows = n_rows0
-    for _ in range(max_rounds):
-        keep = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
-        )
-        nxt = (
-            cur.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .persist()
-        )
-        n_rows = nxt.count()
-        # round i-1's relation is fully consumed once round i's count
-        # materializes nxt: release it NOW so peak executor storage is
-        # two consecutive rounds (plus und), not the sum of every
-        # round's shrinking edge relation (ADVICE r6 #3). und itself
-        # stays pinned for the n_edges0/initial stats contract.
-        if cur is not und:
-            cur.unpersist()
-        cur = nxt
-        if n_rows == prev_rows:
-            break
-        n_peel += 1
-        prev_rows = n_rows
-    # Final-core stats: ONE distinct node count on the fixed-point
-    # relation (the old loop paid it every round); the edge count is
-    # prev_rows — on break, nxt had exactly prev_rows rows; on
-    # max_rounds exhaustion, prev_rows was just updated to the last
-    # count.
-    n_nodes_core = cur.select("src").distinct().count()
+    with lifecycle.scope():
+        und = lifecycle.persist(_undirected(pairs, src_col, dst_col))
+        n_nodes0 = und.select("src").distinct().count()
+        # Seed the convergence check with the RAW materialized row count
+        # (ADVICE r12): _undirected collapses a self-loop (u,u) to ONE row,
+        # so und.count() can be odd — seeding with n_edges0 * 2 would then
+        # never match a converged round-0 and overcount n_peel_rounds by 1
+        # plus one wasted peel round. No entry query builds self-loops
+        # (pairs use a.p < b.p), but kcore_summary is a generic operator.
+        n_rows0 = und.count()
+        n_edges0 = n_rows0 // 2
+        cur = und
+        n_peel = 0
+        # Convergence signal (r12): the per-round EDGE-ROW count, not a
+        # distinct node count. Equivalence: nxt ⊆ cur row-wise, so equal
+        # row counts ⇔ nxt == cur ⇔ no node fell below k (a removed node
+        # had deg ≥ 1 — nodes exist only via edges — so removing one
+        # strictly removes rows; and if keep ⊇ nodes(cur), both semi-joins
+        # pass every row). The two signals break on the SAME round and
+        # count the SAME strict decreases — but the plain count() is
+        # answered by the persist materialization itself, where the old
+        # distinct-node count paid one extra full exchange + aggregate per
+        # round (guide §2.4: remove shuffles outright).
+        prev_rows = n_rows0
+        for _ in range(max_rounds):
+            keep = (
+                cur.groupBy("src")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .filter(F.col("deg") >= k)
+                .select("src")
+            )
+            nxt = (
+                cur.join(keep, "src", "left_semi")
+                .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
+                .transform(lifecycle.persist)
+            )
+            n_rows = nxt.count()
+            # round i-1's relation is fully consumed once round i's count
+            # materializes nxt: release it NOW so peak executor storage is
+            # two consecutive rounds (plus und), not the sum of every
+            # round's shrinking edge relation (ADVICE r6 #3). und itself
+            # stays pinned for the n_edges0/initial stats contract.
+            if cur is not und:
+                cur.unpersist()
+            cur = nxt
+            if n_rows == prev_rows:
+                break
+            n_peel += 1
+            prev_rows = n_rows
+        # Final-core stats: ONE distinct node count on the fixed-point
+        # relation (the old loop paid it every round); the edge count is
+        # prev_rows — on break, nxt had exactly prev_rows rows; on
+        # max_rounds exhaustion, prev_rows was just updated to the last
+        # count.
+        n_nodes_core = cur.select("src").distinct().count()
     n_edges_core = prev_rows // 2
     spark = pairs.sparkSession
     out = spark.createDataFrame(
@@ -761,12 +684,10 @@ def kcore_summary(
         "k long, n_nodes_initial long, n_edges_initial long, "
         "n_peel_rounds long, n_nodes_core long, n_edges_core long",
     )
-    if cur is not und:
-        cur.unpersist()
-    und.unpersist()
     return out
 
 
+@lifecycle.operator
 def degree_assortativity(
     pairs: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
@@ -781,7 +702,7 @@ def degree_assortativity(
     Output one row: (n_nodes, n_edges, assortativity)."""
     from .hypotests import dec_double
 
-    und = _undirected(pairs, src_col, dst_col).persist()
+    und = lifecycle.persist(_undirected(pairs, src_col, dst_col))
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     du = deg.select(F.col("src").alias("u"), F.col("deg").alias("dx"))
     dv = deg.select(F.col("src").alias("v"), F.col("deg").alias("dy"))
@@ -809,11 +730,10 @@ def degree_assortativity(
             "assortativity"
         ),
     )
-    result = _checkpointed(out)
-    und.unpersist()
-    return result
+    return out
 
 
+@lifecycle.operator
 def local_clustering_summary(
     pairs: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
@@ -871,10 +791,7 @@ def local_clustering_summary(
             ),
         ).alias("avg_clustering"),
     )
-    result = _checkpointed(out)
-    for c in (adj, oriented, deg, und):
-        c.unpersist()
-    return result
+    return out
 
 
 def degree_powerlaw_alpha(
@@ -922,6 +839,7 @@ def degree_powerlaw_alpha(
     )
 
 
+@lifecycle.operator
 def partition_modularity(
     pairs: DataFrame,
     communities: DataFrame,
@@ -954,7 +872,7 @@ def partition_modularity(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .transform(lifecycle.persist)
     )
     canon.count()
     comm = communities.select(
@@ -1025,11 +943,7 @@ def partition_modularity(
             ).alias("modularity"),
         )
     )
-    if not release:
-        return out
-    from .dedup import _release_caches
-
-    return _release_caches(out, [canon])
+    return out
 
 
 def harmonic_centrality_from(
@@ -1069,6 +983,7 @@ def harmonic_centrality_from(
     )
 
 
+@lifecycle.operator
 def rich_club_coefficients(
     pairs: DataFrame,
     src_col: str = "src",
@@ -1093,7 +1008,7 @@ def rich_club_coefficients(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .transform(lifecycle.persist)
     )
     canon.count()
     ends = canon.select(F.col("a").alias("n")).unionAll(
@@ -1151,9 +1066,7 @@ def rich_club_coefficients(
             ).alias("rich_club_phi"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(out, [canon])
+    return out
 
 
 def avg_neighbor_degree_curve(
@@ -1211,6 +1124,7 @@ def avg_neighbor_degree_curve(
     )
 
 
+@lifecycle.operator
 def degree_centralization(
     edges: DataFrame, src_col: str, dst_col: str
 ) -> DataFrame:
@@ -1228,7 +1142,6 @@ def degree_centralization(
     Output one row:
     (n_nodes, n_edges, max_degree, centralization, degree_gini,
     wedge_count)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import (
         dec_double_wide,
         grouped_value_prefix_counts,
@@ -1290,6 +1203,4 @@ def degree_centralization(
             "wedge_count"
         ),
     )
-    from .hypotests import _pc_caches
-
-    return _release_caches(result, _pc_caches(pc))
+    return result

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 
 def dec_double(col: Column) -> Column:
     """Engine-portable DECIMAL→DOUBLE cast for values with more than
@@ -147,17 +149,7 @@ def _lit_long(x) -> Column:
     return F.lit(x).cast("long")
 
 
-def _pc_caches(pc) -> list:
-    """The persisted intermediates a prefix-count frame carries: the
-    value-count relation plus (r13) the bucketed shuffled relation.
-    Every release site must unpersist BOTH (zero-pinned-RDD contract)."""
-    caches = [pc._vc_cache]
-    vb = getattr(pc, "_vb_cache", None)
-    if vb is not None:
-        caches.append(vb)
-    return caches
-
-
+@lifecycle.operator(release=False)
 def grouped_value_prefix_counts(
     df: DataFrame,
     value_col: str,
@@ -170,11 +162,9 @@ def grouped_value_prefix_counts(
     cumulative counts up to and including that value — the shared
     primitive for KS / Mann-Whitney / Gini.
 
-    The returned frame carries a ``_vc_cache`` handle to the persisted
-    distinct-value relation; callers release it via
-    ``dedup._release_caches`` once their (tiny) statistic is
-    materialized. NULL values are excluded (no total order contains
-    them)."""
+    The persisted distinct-value and bucketed relations join the
+    caller's lifecycle scope. NULL values are excluded (no total order
+    contains them)."""
     vals = df.select(
         F.col(value_col).alias("v"),
         # NULL group predicate -> group B, matching every SQL twin's
@@ -190,7 +180,7 @@ def grouped_value_prefix_counts(
             F.sum("ga").alias("ca"),
             (F.count(F.lit(1)) - F.sum("ga")).alias("cb"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     # Bucket boundaries only PARTITION the value domain — the final
     # cumulative counts are exact wherever the cuts land — so one
@@ -236,12 +226,11 @@ def grouped_value_prefix_counts(
     # stages per query). The cache materializes it once; cached plans
     # keep their output partitioning (canChangeCachedPlanOutputPartitioning
     # defaults false), so both (b)-keyed consumers still skip their
-    # exchanges (guide §2.4). Released with ``_vc_cache`` via
-    # ``_vb_cache``.
+    # exchanges (guide §2.4).
     vb = (
         vc.select("v", "ca", "cb", bucket_of.alias("b"))
         .repartition(F.col("b"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_b = vb.groupBy("b").agg(
         F.sum("ca").alias("sa"), F.sum("cb").alias("sb")
@@ -266,7 +255,6 @@ def grouped_value_prefix_counts(
         (F.col("oa") + F.sum("ca").over(wv)).alias("cum_a"),
         (F.col("ob") + F.sum("cb").over(wv)).alias("cum_b"),
     )
-    out._vc_cache = vc  # type: ignore[attr-defined]
     # Group totals as driver scalars (None on an empty relation — the
     # literal-NULL downstream matches what an aggregate over zero rows
     # produced before): closing folds inline these via F.lit instead of
@@ -276,10 +264,10 @@ def grouped_value_prefix_counts(
     out._extras = {  # type: ignore[attr-defined]
         k: row[f"__x_{k}"] for k in extra_aggs
     }
-    out._vb_cache = vb  # type: ignore[attr-defined]
     return out
 
 
+@lifecycle.operator(release=False)
 def multigroup_value_prefix_counts(
     df: DataFrame,
     value_col: str,
@@ -302,8 +290,7 @@ def multigroup_value_prefix_counts(
     the pair's own value set. Callers: ad_ksample (k folds, one scan),
     jonckheere_terpstra (k(k−1)/2 pair U-sums, one scan).
 
-    NULL values/groups excluded; rows outside ``groups`` excluded.
-    Carries a ``_vc_cache`` handle like the 2-group primitive."""
+    NULL values/groups excluded; rows outside ``groups`` excluded."""
     k = len(groups)
     vals = df.select(
         F.col(value_col).alias("v"), F.col(group_col).alias("__mg")
@@ -322,7 +309,7 @@ def multigroup_value_prefix_counts(
                 for i, g in enumerate(groups)
             ]
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     # ONE action (r13) — same shape as grouped_value_prefix_counts: the
     # collect materializes the persisted vc (cache-race protection the
@@ -346,7 +333,7 @@ def multigroup_value_prefix_counts(
     vb = (
         vc.select("v", *cnames, bucket_of.alias("b"))
         .repartition(F.col("b"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_b = vb.groupBy("b").agg(
         *[F.sum(c).alias(f"s{i}") for i, c in enumerate(cnames)]
@@ -373,23 +360,14 @@ def multigroup_value_prefix_counts(
             for i in range(k)
         ],
     )
-    out._vc_cache = vc  # type: ignore[attr-defined]
     # per-group totals as driver scalars (None over an empty relation,
     # matching an aggregate over zero rows) — see _tot_a on the 2-group
     # primitive for why.
     out._tots = [row[f"n{i}"] for i in range(k)]  # type: ignore[attr-defined]
-    out._vb_cache = vb  # type: ignore[attr-defined]
     return out
 
 
-def _released(result: DataFrame, pc: DataFrame, release: bool) -> DataFrame:
-    if not release:
-        return result
-    from .dedup import _release_caches
-
-    return _release_caches(result, _pc_caches(pc))
-
-
+@lifecycle.operator
 def ks_test_2samp(
     df: DataFrame,
     value_col: str,
@@ -429,9 +407,10 @@ def ks_test_2samp(
             6,
         ).alias("ks_stat"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def mann_whitney_u(
     df: DataFrame,
     value_col: str,
@@ -484,9 +463,10 @@ def mann_whitney_u(
         u.alias("u_stat"),
         F.when(var > 0, F.round((u - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def global_ecdf(
     df: DataFrame,
     value_col: str,
@@ -521,12 +501,13 @@ def global_ecdf(
         ).otherwise(F.lit(0.0)).alias("percent_rank"),
     )
     # result is distinct-value-sized (not a scalar), but the eager
-    # checkpoint in _released is still the right trade: one narrow
+    # release checkpoint is still the right trade: one narrow
     # materialization against a warm cache, versus pinning the cache
     # for the caller's lifetime.
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def theil_index(
     df: DataFrame,
     key_col: str,
@@ -552,7 +533,7 @@ def theil_index(
     per_key = (
         df.groupBy(key_col)
         .agg(F.sum(quantized_money(F.col(value_col))).alias("r"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_key.count()
     tot = per_key.agg(
@@ -588,9 +569,10 @@ def theil_index(
             ).alias("theil_t"),
         )
     )
-    return _released(result, _Handle(per_key), release)
+    return result
 
 
+@lifecycle.operator
 def lorenz_deciles(
     df: DataFrame,
     key_col: str,
@@ -658,16 +640,10 @@ def lorenz_deciles(
             ),
         ).alias("cum_value_share"),
     )
-    return _released(result, pc, release)
+    return result
 
 
-class _Handle:
-    """Minimal adapter so _released can unpersist a bare DataFrame."""
-
-    def __init__(self, cache: DataFrame):
-        self._vc_cache = cache
-
-
+@lifecycle.operator
 def quantile_normalize(
     df: DataFrame,
     group_col: str,
@@ -703,7 +679,7 @@ def quantile_normalize(
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     # ONE action (r13): the collect materializes the persisted gv (the
     # old gv.count()'s cache-race protection), returns the bucket
@@ -734,7 +710,7 @@ def quantile_normalize(
     gb = (
         gv.select("g", "v", "c", bucket_of.alias("b"))
         .repartition(F.col("g"), F.col("b"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     # within-group cumulative counts, bucket-parallel
     per_gb = gb.groupBy("g", "b").agg(F.sum("c").alias("s"))
@@ -801,13 +777,10 @@ def quantile_normalize(
         F.col("k").cast("long").alias("k"),
         F.col("qv").alias("normalized"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [gv, gb])
     return result
 
 
+@lifecycle.operator
 def gini_concentration(
     df: DataFrame,
     key_col: str,
@@ -867,9 +840,10 @@ def gini_concentration(
             ),
         ).alias("hhi"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator(release=False)
 def value_prefix_counts(
     df: DataFrame, value_col: str, extra_aggs: dict | None = None
 ) -> DataFrame:
@@ -879,22 +853,21 @@ def value_prefix_counts(
     ranks derive in closed integer form: the tied block for value v
     occupies positions cum−c+1 … cum, so twice its average rank is
     2·cum − c + 1 (an INTEGER — no .5 floats anywhere near the
-    arithmetic). Carries the same ``_vc_cache`` handle contract."""
+    arithmetic)."""
     pc = grouped_value_prefix_counts(
         df, value_col, F.lit(False), extra_aggs=extra_aggs
     )
     out = pc.select(
         "v", F.col("cb").alias("c"), F.col("cum_b").alias("cum")
     )
-    out._vc_cache = pc._vc_cache  # type: ignore[attr-defined]
     out._extras = pc._extras  # type: ignore[attr-defined]
-    out._vb_cache = pc._vb_cache  # type: ignore[attr-defined]
     # population total as a driver scalar (group A is empty, so all
     # mass is in _tot_b) — callers inline it; see _lit_long.
     out._tot = pc._tot_b  # type: ignore[attr-defined]
     return out
 
 
+@lifecycle.operator
 def spearman_rho(
     df: DataFrame,
     x_col: str,
@@ -953,15 +926,10 @@ def spearman_rho(
             "rho"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(
-            result, _pc_caches(px) + _pc_caches(py)
-        )
     return result
 
 
+@lifecycle.operator
 def kruskal_wallis(
     df: DataFrame,
     group_col: str,
@@ -1048,7 +1016,7 @@ def kruskal_wallis(
         F.round(h, 6).alias("h"),
         F.when(corr > 0, F.round(h / corr, 6)).alias("h_tie_corrected"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def anova_oneway(
@@ -1225,6 +1193,7 @@ def brown_forsythe(
     )
 
 
+@lifecycle.operator
 def cramers_v(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Cramér's V association between two categorical columns: the
     χ²-based effect size in [0,1] that, unlike raw χ², is comparable
@@ -1246,7 +1215,7 @@ def cramers_v(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
         .agg(F.count(F.lit(1)).alias("o"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     ra = cells.groupBy("a").agg(F.sum("o").alias("ra"))
     cb = cells.groupBy("b").agg(F.sum("o").alias("cb"))
@@ -1282,9 +1251,7 @@ def cramers_v(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
             ),
         ).alias("cramers_v"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells])
+    return result
 
 
 def partial_corr(
@@ -1516,6 +1483,7 @@ def chow_test(
     )
 
 
+@lifecycle.operator
 def js_divergence_split(
     df: DataFrame,
     key_col: str,
@@ -1544,7 +1512,7 @@ def js_divergence_split(
             F.sum(in_a.cast("long")).alias("ca"),
             F.sum((~in_a).cast("long")).alias("cb"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     tot = per_label.agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb")
@@ -1572,11 +1540,10 @@ def js_divergence_split(
         F.col("n_labels").cast("long").alias("n_labels"),
         F.round(F.col("t").cast("double") / 2.0, 6).alias("js_divergence"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [per_label])
+    return result
 
 
+@lifecycle.operator
 def roc_auc(
     df: DataFrame,
     score_col: str,
@@ -1621,9 +1588,10 @@ def roc_auc(
         F.when(ok, F.round(auc, 6)).alias("auc"),
         F.when(ok, F.round(auc * 2.0 - 1.0, 6)).alias("gini_coef"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def score_decile_lift(
     df: DataFrame,
     score_col: str,
@@ -1692,7 +1660,7 @@ def score_decile_lift(
             ),
         ).alias("cum_gain"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def mcnemar_test(
@@ -1857,6 +1825,7 @@ def grubbs_max_outlier(
     )
 
 
+@lifecycle.operator
 def generalized_esd_rounds(
     df: DataFrame, value_col: str, k: int = 3
 ) -> DataFrame:
@@ -1891,7 +1860,7 @@ def generalized_esd_rounds(
         df.select(quantized_money(F.col(value_col)).alias("__v"))
         .filter(F.col("__v").isNotNull())
         .select((F.col("__v") * F.lit(100)).cast("decimal(38,0)").alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     m = proj.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1993,6 +1962,7 @@ def levene_test(
     )
 
 
+@lifecycle.operator
 def kendall_tau_b(
     df: DataFrame, x_col: str, y_col: str, release: bool = True
 ) -> DataFrame:
@@ -2017,7 +1987,7 @@ def kendall_tau_b(
         .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     cells.count()
     a = cells.select(
@@ -2065,9 +2035,7 @@ def kendall_tau_b(
             F.round((dec_double_wide(nc) - dec_double_wide(nd)) / den, 6),
         ).alias("tau_b"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells]) if release else result
+    return result
 
 
 def cochran_q(
@@ -2118,6 +2086,7 @@ def cochran_q(
     )
 
 
+@lifecycle.operator
 def moods_median_test(
     df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
@@ -2213,9 +2182,10 @@ def moods_median_test(
             F.round(F.col("chi_fp").cast("double") / F.lit(1e6), 4),
         ).alias("chi2"),
     )
-    return _released(result, pc, True)
+    return result
 
 
+@lifecycle.operator
 def cvm_test_2samp(
     df: DataFrame,
     value_col: str,
@@ -2265,9 +2235,10 @@ def cvm_test_2samp(
             6,
         ).alias("cvm_t"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def anderson_darling_2samp(
     df: DataFrame,
     value_col: str,
@@ -2315,9 +2286,10 @@ def anderson_darling_2samp(
             na / nb * (dec_double_wide(F.col("a_fp")) / F.lit(1e9)), 6
         ).alias("ad_stat"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def cliffs_delta(
     df: DataFrame,
     value_col: str,
@@ -2366,9 +2338,10 @@ def cliffs_delta(
             ),
         ).alias("cliffs_delta"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def wilcoxon_signed_rank(
     df: DataFrame, diff_col: str, n_buckets: int = 64, release: bool = True
 ) -> DataFrame:
@@ -2417,7 +2390,7 @@ def wilcoxon_signed_rank(
             "z_score"
         ),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def odds_ratio_2x2(df: DataFrame, flag_a: Column, flag_b: Column) -> DataFrame:
@@ -2828,6 +2801,7 @@ def friedman_3(
     )
 
 
+@lifecycle.operator
 def quade_test(
     df: DataFrame,
     block_col: str,
@@ -2876,7 +2850,7 @@ def quade_test(
         # filter: un-persisted, the fact join + groupBy would run twice
         # (the dunn per_g class — caught by this round's self-audit of
         # its own new code)
-        .persist()
+        .transform(lifecycle.persist)
     )
     k_total = cells.select("trt").distinct().count()
     if k_total < 2:
@@ -2895,7 +2869,7 @@ def quade_test(
         )
         .filter(F.col("kb") == F.lit(k_total))
         .drop("kb")
-        .persist()
+        .transform(lifecycle.persist)
     )
     complete.count()
     cells.unpersist()
@@ -2974,11 +2948,10 @@ def quade_test(
         .cast("long")
         .alias("df2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [complete])
+    return result
 
 
+@lifecycle.operator
 def ansari_bradley(
     df: DataFrame,
     value_col: str,
@@ -3075,9 +3048,10 @@ def ansari_bradley(
         F.round(w, 6).alias("ab_stat"),
         F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def pr_curve_points(
     df: DataFrame,
     score_col: str,
@@ -3149,7 +3123,7 @@ def pr_curve_points(
             F.round(2.0 * prec * rec / (prec + rec), 6),
         ).alias("f1"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def brier_decomposition(
@@ -3241,6 +3215,7 @@ def brier_decomposition(
     )
 
 
+@lifecycle.operator
 def average_precision(
     df: DataFrame,
     score_col: str,
@@ -3292,9 +3267,10 @@ def average_precision(
             ),
         ).alias("average_precision"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def g_test_contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Likelihood-ratio (G) test of independence for two categorical
     columns: G = 2·Σ o·ln(o/e) — the log-linear dual of ``cramers_v``'s
@@ -3312,7 +3288,7 @@ def g_test_contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
         .agg(F.count(F.lit(1)).alias("o"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     cells.count()
     ra = cells.groupBy("a").agg(F.sum("o").alias("ra"))
@@ -3348,11 +3324,10 @@ def g_test_contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
             F.round(dec_double_wide(F.col("g_fp")) / F.lit(1e6), 4),
         ).alias("g_stat"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells])
+    return result
 
 
+@lifecycle.operator
 def ordinal_association(
     df: DataFrame, x_col: str, y_col: str, release: bool = True
 ) -> DataFrame:
@@ -3375,7 +3350,7 @@ def ordinal_association(
         .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     cells.count()
     a = cells.select(
@@ -3425,11 +3400,10 @@ def ordinal_association(
             den_xy > 0, F.round(F.lit(2.0) * (ncd - ndd) / den_xy, 6)
         ).alias("somers_dxy"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells]) if release else result
+    return result
 
 
+@lifecycle.operator
 def yuen_trimmed_t(
     df: DataFrame,
     value_col: str,
@@ -3537,9 +3511,10 @@ def yuen_trimmed_t(
         F.when(ok, F.round(t, 6)).alias("yuen_t"),
         F.when(ok, F.round(dof, 6)).alias("df"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def kuiper_test_2samp(
     df: DataFrame,
     value_col: str,
@@ -3584,9 +3559,10 @@ def kuiper_test_2samp(
         F.round(dm, 6).alias("d_minus"),
         F.round(dp + dm, 6).alias("kuiper_v"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def jonckheere_terpstra(
     df: DataFrame,
     group_col: str,
@@ -3621,7 +3597,6 @@ def jonckheere_terpstra(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, list(ordered_groups), n_buckets
     )
-    handles = _pc_caches(mg)
     # A = low group i, B = high group j: 2U_ij = 2·Σ c_j·(#A below)
     # + Σ c_i·c_j; one sum column per ordered pair, all in one agg
     pair_terms = []
@@ -3643,16 +3618,11 @@ def jonckheere_terpstra(
         c = F.col(f"u{x}")
         u2_total = c if u2_total is None else u2_total + c
     jt2 = u2_agg.select(u2_total.cast(d38).alias("jt2"))
-    # group sizes from the cached per-value counts (no second scan of
-    # df); a listed-but-absent group has n_g = 0 and must not enter
-    # k/Σn² — filter like the former groupBy relation did implicitly
-    stack_args = ", ".join(f"n{i}" for i in range(k))
-    sizes = (
-        mg._vc_cache.agg(  # type: ignore[attr-defined]
-            *[F.sum(f"c{i}").alias(f"n{i}") for i in range(k)]
-        )
-        .select(F.expr(f"stack({k}, {stack_args}) as (n_g)"))
-        .filter(F.col("n_g") > 0)
+    # group sizes from the primitive's collected per-group totals (no
+    # second scan of df); a listed-but-absent group has n_g = 0 (or
+    # None on an empty relation) and must not enter k/Σn²
+    sizes = df.sparkSession.createDataFrame(
+        [(t,) for t in mg._tots if t], "n_g long"  # type: ignore[attr-defined]
     )
     moments = sizes.agg(
         F.sum("n_g").alias("n"),
@@ -3681,13 +3651,10 @@ def jonckheere_terpstra(
             "z_score"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
     return result
 
 
+@lifecycle.operator
 def dunn_pairwise_z(
     df: DataFrame,
     group_col: str,
@@ -3705,15 +3672,7 @@ def dunn_pairwise_z(
     count relation; the pair grid is the k²-bounded self-join of the
     k-row per-group relation. Output k(k−1)/2 rows sorted by group
     labels: (group_a, group_b, n_a, n_b, mean_rank_a, mean_rank_b,
-    z_score). ``release=True`` (default) checkpoints the result and
-    frees the internal caches; with ``release=False`` the caches are
-    handed to the caller on ``result._dunn_caches`` for explicit
-    unpersist. CAVEAT (ADVICE r11): ``_dunn_caches`` is a plain Python
-    attribute on THIS DataFrame object — any further transformation
-    (``.select``/``.filter``/…) returns a NEW object without it, so
-    capture ``caches = result._dunn_caches`` IMMEDIATELY, before
-    wrapping the result, or the persisted intermediates leak for the
-    session lifetime."""
+    z_score)."""
     d38 = "decimal(38,0)"
     vals = df.select(
         F.col(group_col).alias("g"), F.col(value_col).alias("val")
@@ -3749,7 +3708,7 @@ def dunn_pairwise_z(
             F.sum((F.col("c_gv").cast("decimal(19,0)") * F.col("u")).cast(d38))
             .alias("r2"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     # Materialize the k-row per-group relation ONCE: a, b and tot below
     # all branch from it, and without the cache each branch re-runs the
@@ -3800,19 +3759,6 @@ def dunn_pairwise_z(
         F.round(rb, 6).alias("mean_rank_b"),
         F.when(se > 0, F.round((ra - rb) / se, 6)).alias("z_score"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(
-            result, _pc_caches(pc) + [per_g]
-        )
-    # release=False contract: the CALLER owns the two persisted
-    # intermediates (the prefix-count relation and the k-row per-group
-    # relation) and must unpersist them once the plan is consumed —
-    # they are handed over on the result as ``_dunn_caches`` so the
-    # per_g cache can't silently pin storage for the session lifetime
-    # (ADVICE r10 low).
-    result._dunn_caches = _pc_caches(pc) + [per_g]  # type: ignore[attr-defined]
     return result
 
 
@@ -4021,6 +3967,7 @@ def page_trend_3(
     )
 
 
+@lifecycle.operator
 def hellinger_bhattacharyya(
     df: DataFrame,
     value_col: str,
@@ -4077,7 +4024,6 @@ def hellinger_bhattacharyya(
     ).select(
         lit_na.alias("n_a"), lit_nb.alias("n_b"), "n_bins_used", "bc"
     )
-    folded = _released(folded, pc, True)
     bc = F.col("bc").cast("double")
     ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
     return folded.select(
@@ -4091,6 +4037,7 @@ def hellinger_bhattacharyya(
     )
 
 
+@lifecycle.operator
 def group_deviance(
     df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
@@ -4126,7 +4073,7 @@ def group_deviance(
             .cast("decimal(38,2)")
         ).alias("__s"),
     )
-    per_g = per_g.persist()
+    per_g = lifecycle.persist(per_g)
     n_total = per_g.agg(F.sum("__n_all").alias("n_total"))
     means = per_g.filter(F.col("__n") > 0).select(
         "__g",
@@ -4170,9 +4117,7 @@ def group_deviance(
             F.round(F.lit(2.0) * dec_double_wide_frac(F.col("dg")) / n, 6),
         ).alias("gamma_deviance"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [per_g])
+    return result
 
 
 def mantel_haenszel_or(
@@ -4362,6 +4307,7 @@ def poisson_rate_ratio(
     )
 
 
+@lifecycle.operator
 def robust_shape_profile(df: DataFrame, value_col: str) -> DataFrame:
     """Quantile-based robust shape summary: Bowley (quartile) skewness
     (Q3 + Q1 − 2·Q2)/(Q3 − Q1), Moors (octile) kurtosis
@@ -4398,9 +4344,6 @@ def robust_shape_profile(df: DataFrame, value_col: str) -> DataFrame:
             for k in range(1, 8)
         ],
     ).withColumn("n", lit_n)
-    from .dedup import _release_caches
-
-    agg = _release_caches(agg, _pc_caches(pc))
     e = lambda i: F.col(f"__e{i}").cast("double")  # noqa: E731
     q1, q2, q3 = e(2), e(4), e(6)
     iqr = q3 - q1
@@ -4600,6 +4543,7 @@ def uncertainty_coefficient(
     )
 
 
+@lifecycle.operator
 def ad_ksample(
     df: DataFrame,
     group_col: str,
@@ -4644,7 +4588,6 @@ def ad_ksample(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg)
     lsum = None
     for i in range(k):
         lsum = F.col(f"c{i}") if lsum is None else lsum + F.col(f"c{i}")
@@ -4726,10 +4669,6 @@ def ad_ksample(
     else:
         result = _adk_standardize(df.sparkSession, nn_v, folded, base_cols,
                                   n_buckets)
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
     return result
 
 
@@ -4996,6 +4935,7 @@ def pinball_loss(
     )
 
 
+@lifecycle.operator
 def wasserstein_1(
     df: DataFrame,
     value_col: str,
@@ -5061,7 +5001,7 @@ def wasserstein_1(
             ),
         ).alias("wasserstein_1"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def energy_distance(
@@ -5143,6 +5083,7 @@ def energy_distance(
     )
 
 
+@lifecycle.operator
 def qq_fit(
     df: DataFrame,
     value_col: str,
@@ -5237,9 +5178,10 @@ def qq_fit(
             F.round(sxy_c * sxy_c / (sxx_c * syy_c), 6),
         ).alias("r2"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def brunner_munzel(
     df: DataFrame,
     value_col: str,
@@ -5317,7 +5259,7 @@ def brunner_munzel(
             F.round(na * nb * (r_cb - r_ca) / (nn * F.sqrt(var)), 6),
         ).alias("bm_stat"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def theil_l_atkinson(
@@ -5368,6 +5310,7 @@ def theil_l_atkinson(
     )
 
 
+@lifecycle.operator
 def hoeffding_d(
     df: DataFrame,
     x_col: str,
@@ -5397,7 +5340,7 @@ def hoeffding_d(
         df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
         .groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     n_cells = cells.count()
     if n_cells > max_cells:
@@ -5407,7 +5350,6 @@ def hoeffding_d(
         # that is already 10^8 join rows; past it, fail instead of
         # silently running an accidental cross join. Bucket/round the
         # column first, or raise max_cells deliberately.
-        cells.unpersist()
         raise ValueError(
             f"hoeffding_d: {n_cells} distinct (x, y) cells exceeds "
             f"max_cells={max_cells}; the cell-pair placement join is "
@@ -5515,13 +5457,10 @@ def hoeffding_d(
             F.round(F.lit(30.0) * F.col("dsum").cast("double"), 6),
         ).alias("hoeffding_d"),
     )
-    from .dedup import _release_caches
-
-    if release:
-        return _release_caches(result, [cells])
     return result
 
 
+@lifecycle.operator
 def breslow_day(
     df: DataFrame,
     strata_col: str,
@@ -5555,7 +5494,7 @@ def breslow_day(
             F.sum(F.when(~e & y, 1).otherwise(0)).alias("c"),
             F.sum(F.when(~e & ~y, 1).otherwise(0)).alias("d"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_k.count()
     n_k = (
@@ -5645,11 +5584,10 @@ def breslow_day(
             F.round(F.col("chi2").cast("double"), 6),
         ).alias("bd_chi2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [per_k])
+    return result
 
 
+@lifecycle.operator
 def cuzick_trend(
     df: DataFrame,
     group_col: str,
@@ -5680,7 +5618,6 @@ def cuzick_trend(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg)
     lsum = None
     for i in range(k):
         lsum = F.col(f"c{i}") if lsum is None else lsum + F.col(f"c{i}")
@@ -5741,10 +5678,6 @@ def cuzick_trend(
             F.round((t_stat - e_t) / F.sqrt(var_t), 6),
         ).alias("z_score"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
     return result
 
 
@@ -5805,6 +5738,7 @@ def gk_lambda(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     )
 
 
+@lifecycle.operator
 def youden_j(
     df: DataFrame,
     score_col: str,
@@ -5860,25 +5794,22 @@ def youden_j(
     nn = F.col("n_neg").cast("double")
     tpr = (np_ - F.col("best.cum_a").cast("double")) / np_
     fpr = (nn - F.col("best.cum_b").cast("double")) / nn
-    return _released(
-        folded.select(
-            F.col("n_pos").cast("long").alias("n_pos"),
-            F.col("n_neg").cast("long").alias("n_neg"),
-            (-F.col("best.neg_v")).alias("best_threshold"),
-            F.when(F.col("n_pos") > 0, F.round(tpr, 6)).alias("tpr"),
-            F.when(F.col("n_neg") > 0, F.round(fpr, 6)).alias("fpr"),
-            F.when(
-                (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
-                F.round(
-                    dec_double(F.col("best.jnum")) / (np_ * nn), 6
-                ),
-            ).alias("youden_j"),
-        ),
-        pc,
-        release,
+    return folded.select(
+        F.col("n_pos").cast("long").alias("n_pos"),
+        F.col("n_neg").cast("long").alias("n_neg"),
+        (-F.col("best.neg_v")).alias("best_threshold"),
+        F.when(F.col("n_pos") > 0, F.round(tpr, 6)).alias("tpr"),
+        F.when(F.col("n_neg") > 0, F.round(fpr, 6)).alias("fpr"),
+        F.when(
+            (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
+            F.round(
+                dec_double(F.col("best.jnum")) / (np_ * nn), 6
+            ),
+        ).alias("youden_j"),
     )
 
 
+@lifecycle.operator
 def bws_test(
     df: DataFrame,
     value_col: str,
@@ -5990,16 +5921,12 @@ def bws_test(
         / F.lit(1e9)
         / F.col("fold_n_cb").cast("double")
     )
-    return _released(
-        j.select(
-            F.col("fold_n_ca").cast("long").alias("n_a"),
-            F.col("fold_n_cb").cast("long").alias("n_b"),
-            F.round(b_a, 6).alias("b_a"),
-            F.round(b_b, 6).alias("b_b"),
-            F.round((b_a + b_b) / F.lit(2.0), 6).alias("bws_b"),
-        ),
-        pc,
-        release,
+    return j.select(
+        F.col("fold_n_ca").cast("long").alias("n_a"),
+        F.col("fold_n_cb").cast("long").alias("n_b"),
+        F.round(b_a, 6).alias("b_a"),
+        F.round(b_b, 6).alias("b_b"),
+        F.round((b_a + b_b) / F.lit(2.0), 6).alias("bws_b"),
     )
 
 
@@ -6087,6 +6014,7 @@ def mardia_kurtosis(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     )
 
 
+@lifecycle.operator
 def mood_dispersion(
     df: DataFrame,
     value_col: str,
@@ -6180,7 +6108,7 @@ def mood_dispersion(
             F.round((t_stat - e_t) / F.sqrt(var_t), 6),
         ).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def welch_anova(
@@ -6340,6 +6268,7 @@ def norm_ppf(p: Column) -> Column:
     )
 
 
+@lifecycle.operator
 def van_der_waerden(
     df: DataFrame,
     group_col: str,
@@ -6366,7 +6295,6 @@ def van_der_waerden(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg)
     lsum = None
     msum = None
     for i in range(k):
@@ -6430,13 +6358,10 @@ def van_der_waerden(
             "t_stat"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
     return result
 
 
+@lifecycle.operator
 def fligner_killeen(
     df: DataFrame,
     group_col: str,
@@ -6465,7 +6390,6 @@ def fligner_killeen(
     mg1 = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg1)
     # group totals inlined as literals from the primitive's one collect
     # (r13) — no totals broadcast-subquery job + BNLJ per pass; see
     # ks_test_2samp.
@@ -6503,7 +6427,6 @@ def fligner_killeen(
     mg2 = multigroup_value_prefix_counts(
         centered, "__fk_z", "__fk_g", groups, n_buckets
     )
-    handles.extend(_pc_caches(mg2))
     lsum = None
     msum = None
     for i in range(k):
@@ -6575,10 +6498,6 @@ def fligner_killeen(
             "x2_stat"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
     return result
 
 
@@ -6603,6 +6522,7 @@ def norm_sf(x: Column) -> Column:
     return poly * F.exp(-(z * z)) / F.lit(2.0)
 
 
+@lifecycle.operator
 def cucconi_test(
     df: DataFrame,
     value_col: str,
@@ -6690,9 +6610,10 @@ def cucconi_test(
             F.round(c_stat, 6),
         ).alias("cucconi_c"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def lepage_test(
     df: DataFrame,
     value_col: str,
@@ -6804,7 +6725,7 @@ def lepage_test(
         F.when(ok, ll).alias("lepage_l"),
         F.when(ok, F.round(F.exp(-ll / F.lit(2.0)), 6)).alias("p_value"),
     )
-    return _released(result, pc, release)
+    return result
 
 
 def dagostino_k2(df: DataFrame, value_col: str) -> DataFrame:
@@ -6954,6 +6875,7 @@ def dagostino_k2(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
+@lifecycle.operator
 def siegel_tukey(
     df: DataFrame,
     value_col: str,
@@ -7072,9 +6994,10 @@ def siegel_tukey(
         F.round(w, 6).alias("st_stat"),
         F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def conover_squared_ranks(
     df: DataFrame,
     value_col: str,
@@ -7184,9 +7107,10 @@ def conover_squared_ranks(
             "z_score"
         ),
     )
-    return _released(result, pc, release)
+    return result
 
 
+@lifecycle.operator
 def friedman_aligned_ranks(
     df: DataFrame,
     block_col: str,
@@ -7234,7 +7158,7 @@ def friedman_aligned_ranks(
         )
         # two consumers (k_total count + complete filter) — persist or
         # the fact join runs twice (the quade/dunn lesson)
-        .persist()
+        .transform(lifecycle.persist)
     )
     k_total = cells.select("trt").distinct().count()
     if k_total < 2:
@@ -7250,7 +7174,7 @@ def friedman_aligned_ranks(
         )
         .filter(F.col("kb") == F.lit(k_total))
         .drop("kb")
-        .persist()
+        .transform(lifecycle.persist)
     )
     complete.count()
     cells.unpersist()
@@ -7265,7 +7189,7 @@ def friedman_aligned_ranks(
             (ksc * (F.col("y") * F.lit(100)).cast(d38)).cast(d38)
             - (F.col("sj") * F.lit(100)).cast(d38)
         ).cast(d38).alias("a"),
-    ).persist()
+    ).transform(lifecycle.persist)
     aligned.count()
     complete.unpersist()
     pc = grouped_value_prefix_counts(
@@ -7319,8 +7243,4 @@ def friedman_aligned_ranks(
         .cast("long")
         .alias("df"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(
-        result, [aligned] + _pc_caches(pc)
-    )
+    return result

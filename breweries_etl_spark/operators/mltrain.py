@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 
 MICRO = 1_000_000
@@ -64,50 +65,49 @@ def train_logreg_hashed(
     # replay's CASE-ELSE), a NULL text is an empty feature vector
     # (contributes to the bias gradient only). Unguarded, NULL rows
     # silently fell out of the gradient but stayed in n.
-    feats = df.select(
-        F.coalesce(label_expr.cast("long"), F.lit(0)).alias("y"),
-        F.coalesce(
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(toks, lambda t: hashed_bucket_expr(t, dims))
-                )
-            ),
-            F.array().cast("array<bigint>"),
-        ).alias("bs"),
-    ).persist()
-    n = feats.count()
-    spark = df.sparkSession
-    if n == 0:
-        feats.unpersist()
-        return spark.createDataFrame(
-            [(j, 0.0) for j in range(-1, dims)], "dim long, weight double"
-        )
-    bias = 0.0
-    w = [0.0] * dims
-    for _ in range(iterations):
-        welems = F.array(*[F.lit(float(x)) for x in w])
-        margin = F.lit(float(bias)) + F.aggregate(
-            F.col("bs"),
-            F.lit(0.0),
-            lambda acc, b: acc + F.element_at(welems, (b + 1).cast("int")),
-        )
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-        err_micro = F.floor((p - F.col("y").cast("double")) * MICRO).cast("long")
-        grad = (
-            feats.select(
-                err_micro.alias("e"),
-                F.explode(
-                    F.concat(F.array(F.lit(-1).cast("long")), F.col("bs"))
-                ).alias("b"),
+    with lifecycle.scope():
+        feats = df.select(
+            F.coalesce(label_expr.cast("long"), F.lit(0)).alias("y"),
+            F.coalesce(
+                F.array_sort(
+                    F.array_distinct(
+                        F.transform(toks, lambda t: hashed_bucket_expr(t, dims))
+                    )
+                ),
+                F.array().cast("array<bigint>"),
+            ).alias("bs"),
+        ).transform(lifecycle.persist)
+        n = feats.count()
+        spark = df.sparkSession
+        if n == 0:
+            return spark.createDataFrame(
+                [(j, 0.0) for j in range(-1, dims)], "dim long, weight double"
             )
-            .groupBy("b")
-            .agg(F.sum("e").alias("g"))
-            .collect()
-        )
-        gmap = {int(r["b"]): int(r["g"]) for r in grad}
-        bias = bias - lr * (gmap.get(-1, 0) / MICRO) / n
-        w = [w[j] - lr * (gmap.get(j, 0) / MICRO) / n for j in range(dims)]
-    feats.unpersist()
+        bias = 0.0
+        w = [0.0] * dims
+        for _ in range(iterations):
+            welems = F.array(*[F.lit(float(x)) for x in w])
+            margin = F.lit(float(bias)) + F.aggregate(
+                F.col("bs"),
+                F.lit(0.0),
+                lambda acc, b: acc + F.element_at(welems, (b + 1).cast("int")),
+            )
+            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
+            err_micro = F.floor((p - F.col("y").cast("double")) * MICRO).cast("long")
+            grad = (
+                feats.select(
+                    err_micro.alias("e"),
+                    F.explode(
+                        F.concat(F.array(F.lit(-1).cast("long")), F.col("bs"))
+                    ).alias("b"),
+                )
+                .groupBy("b")
+                .agg(F.sum("e").alias("g"))
+                .collect()
+            )
+            gmap = {int(r["b"]): int(r["g"]) for r in grad}
+            bias = bias - lr * (gmap.get(-1, 0) / MICRO) / n
+            w = [w[j] - lr * (gmap.get(j, 0) / MICRO) / n for j in range(dims)]
     # Round via Spark's SQL round (not Python's) so the decimal rounding
     # rule is the same one the DuckDB oracle applies.
     rows = [(-1, bias)] + [(j, w[j]) for j in range(dims)]
@@ -160,44 +160,43 @@ def kmeans_train_exact(
     # and hash aggregates. The expression form (per-centroid
     # aggregate(zip_with(...)) literals) kept the interpreted lambda in
     # the per-row hot path — 27 s vs ~3 s at sf0.1 for this rewrite.
-    ex = pts.select("pid", F.posexplode("q").alias("j", "v")).persist()
-    seed_rows = pts.orderBy("pid").limit(k).collect()
-    if not seed_rows:
-        ex.unpersist()
-        return spark.createDataFrame([], "cluster_id long, dim long, centroid_micro long")
-    cents = [list(r["q"]) for r in seed_rows]
-    dims = len(cents[0])
-    for _ in range(iterations):
-        cdf = F.broadcast(
-            spark.createDataFrame(
-                [(ci, j, int(cents[ci][j])) for ci in range(k) for j in range(dims)],
-                "cid long, j int, c long",
+    with lifecycle.scope():
+        ex = lifecycle.persist(pts.select("pid", F.posexplode("q").alias("j", "v")))
+        seed_rows = pts.orderBy("pid").limit(k).collect()
+        if not seed_rows:
+            return spark.createDataFrame([], "cluster_id long, dim long, centroid_micro long")
+        cents = [list(r["q"]) for r in seed_rows]
+        dims = len(cents[0])
+        for _ in range(iterations):
+            cdf = F.broadcast(
+                spark.createDataFrame(
+                    [(ci, j, int(cents[ci][j])) for ci in range(k) for j in range(dims)],
+                    "cid long, j int, c long",
+                )
             )
-        )
-        diff = F.col("v") - F.col("c")
-        dists = (
-            ex.join(cdf, "j")
-            .groupBy("pid", "cid")
-            .agg(F.sum(diff * diff).alias("d"))
-        )
-        best = dists.groupBy("pid").agg(
-            F.min(F.struct("d", "cid")).alias("b")
-        ).select("pid", F.col("b.cid").alias("cid"))
-        agg = (
-            ex.join(best, "pid")
-            .groupBy("cid", "j")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("m"))
-            .collect()
-        )
-        stats = {(int(r["cid"]), int(r["j"])): (int(r["s"]), int(r["m"])) for r in agg}
-        cents = [
-            [
-                _truncdiv(*stats[(ci, j)]) if (ci, j) in stats else cents[ci][j]
-                for j in range(dims)
+            diff = F.col("v") - F.col("c")
+            dists = (
+                ex.join(cdf, "j")
+                .groupBy("pid", "cid")
+                .agg(F.sum(diff * diff).alias("d"))
+            )
+            best = dists.groupBy("pid").agg(
+                F.min(F.struct("d", "cid")).alias("b")
+            ).select("pid", F.col("b.cid").alias("cid"))
+            agg = (
+                ex.join(best, "pid")
+                .groupBy("cid", "j")
+                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("m"))
+                .collect()
+            )
+            stats = {(int(r["cid"]), int(r["j"])): (int(r["s"]), int(r["m"])) for r in agg}
+            cents = [
+                [
+                    _truncdiv(*stats[(ci, j)]) if (ci, j) in stats else cents[ci][j]
+                    for j in range(dims)
+                ]
+                for ci in range(k)
             ]
-            for ci in range(k)
-        ]
-    ex.unpersist()
     rows = [
         (ci, j, int(cents[ci][j])) for ci in range(k) for j in range(dims)
     ]
@@ -521,48 +520,43 @@ def pca_top_component(
     )
     a = centered.select("rid", F.col("i").alias("ia"), F.col("c").alias("ca"))
     b = centered.select("rid", F.col("i").alias("jb"), F.col("c").alias("cb"))
-    scatter = (
-        a.join(b, "rid")
-        .filter(F.col("ia") <= F.col("jb"))
-        # Terms are scaled to INTEGER 1e-8 units (codegen'd long round,
-        # ~2x the throughput of per-term decimal construction — measured
-        # 5-7 s vs 2.5-3 s at sf0.1) and summed as DECIMAL(28,0) so the
-        # reduction cannot overflow at any corpus size. Same
-        # order-independence guarantee: integer-valued terms, exact sum.
-        .select(
-            F.col("ia").alias("i"),
-            F.col("jb").alias("j"),
-            F.expr("CAST(round(ca * cb * 100000000.0) AS BIGINT)")
-            .cast("decimal(28,0)")
-            .alias("t"),
+    # The scope frees the cached d×d frames on EVERY exit path: an
+    # exception mid-iteration must not pin them for the session (ADVICE r4).
+    with lifecycle.scope():
+        scatter = (
+            a.join(b, "rid")
+            .filter(F.col("ia") <= F.col("jb"))
+            # Terms are scaled to INTEGER 1e-8 units (codegen'd long round,
+            # ~2x the throughput of per-term decimal construction — measured
+            # 5-7 s vs 2.5-3 s at sf0.1) and summed as DECIMAL(28,0) so the
+            # reduction cannot overflow at any corpus size. Same
+            # order-independence guarantee: integer-valued terms, exact sum.
+            .select(
+                F.col("ia").alias("i"),
+                F.col("jb").alias("j"),
+                F.expr("CAST(round(ca * cb * 100000000.0) AS BIGINT)")
+                .cast("decimal(28,0)")
+                .alias("t"),
+            )
+            .groupBy("i", "j")
+            .agg(F.sum("t").alias("sm"))
+            # d(d+1)/2 rows: single-partition from here on — every
+            # downstream matvec/aggregate is one task instead of 32
+            # scheduler round-trips per tiny stage (measured: the iteration
+            # phase drops ~4x with the coalesce)
+            .coalesce(1)
+            .transform(lifecycle.persist)
         )
-        .groupBy("i", "j")
-        .agg(F.sum("t").alias("sm"))
-        # d(d+1)/2 rows: single-partition from here on — every
-        # downstream matvec/aggregate is one task instead of 32
-        # scheduler round-trips per tiny stage (measured: the iteration
-        # phase drops ~4x with the coalesce)
-        .coalesce(1)
-        .persist()
-    )
-    # Mirror the strict upper triangle to get the full symmetric matrix.
-    full = scatter.unionByName(
-        scatter.filter(F.col("i") < F.col("j")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "sm"
+        # Mirror the strict upper triangle to get the full symmetric matrix.
+        full = scatter.unionByName(
+            scatter.filter(F.col("i") < F.col("j")).select(
+                F.col("j").alias("i"), F.col("i").alias("j"), "sm"
+            )
+        ).select(
+            "i", "j", (F.col("sm").cast("double") / F.lit(1e8)).alias("a")
         )
-    ).select(
-        "i", "j", (F.col("sm").cast("double") / F.lit(1e8)).alias("a")
-    )
-    full = full.coalesce(1).persist()
-    try:
+        full = lifecycle.persist(full.coalesce(1))
         return _pca_power_phase(emb, scatter, full, dim, n_rows, iterations)
-    finally:
-        # Unpersist on EVERY exit path: the contract/bench session runs
-        # many queries in one JVM, so an exception mid-iteration must
-        # not pin the cached d×d frames for the session's lifetime
-        # (ADVICE r4).
-        scatter.unpersist()
-        full.unpersist()
 
 
 def _pca_power_phase(
@@ -732,6 +726,7 @@ def ridge2_fit(
     )
 
 
+@lifecycle.operator
 def boosted_stumps_2(
     df: DataFrame, x_col: str, y_col: str, release: bool = True
 ) -> DataFrame:
@@ -752,7 +747,6 @@ def boosted_stumps_2(
     prefix sums, so nothing order-dependent survives. Output one row:
     (n, sse_base, split_1, pred_left_1, pred_right_1, sse_1,
     split_2, adj_left_2, adj_right_2, sse_2)."""
-    from .dedup import _release_caches
     from breweries_etl_spark.operators.hypotests import (
         dec_double_wide_frac,
         quantized_money,
@@ -767,7 +761,7 @@ def boosted_stumps_2(
             F.sum(yq.cast("decimal(38,2)")).alias("sy"),
             F.sum((yq * yq).cast("decimal(38,4)")).alias("qy"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_x.count()
     tot = per_x.agg(
@@ -876,4 +870,4 @@ def boosted_stumps_2(
         F.round(F.col("b.ar"), 6).alias("adj_right_2"),
         F.col("b.sse").alias("sse_2"),
     )
-    return _release_caches(result, [per_x]) if release else result
+    return result

@@ -13,6 +13,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import lifecycle
+
 _NUMERIC = (T.IntegerType, T.LongType, T.ShortType, T.DoubleType, T.FloatType, T.DecimalType)
 
 
@@ -394,6 +396,7 @@ def winsorized_stats(
     )
 
 
+@lifecycle.operator
 def robust_scale_stats(
     df: DataFrame,
     value_col: str,
@@ -432,7 +435,7 @@ def robust_scale_stats(
             .cast("decimal(14,2)")
             .alias("med")
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     devs = df.join(F.broadcast(med), group_col).select(
         group_col, "med", F.abs(v - F.col("med")).alias("__dev")
@@ -464,10 +467,6 @@ def robust_scale_stats(
             ).alias("n_outliers"),
         )
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [med])
     return result
 
 
@@ -754,6 +753,7 @@ def mutual_information(
     )
 
 
+@lifecycle.operator
 def cohens_kappa(
     df: DataFrame, col_a: str, col_b: str, release: bool = True
 ) -> DataFrame:
@@ -772,14 +772,13 @@ def cohens_kappa(
     marginals, and without the persist each reference re-expands into
     its own full scan). Marginals are tiny groupBys of the cells joined
     full-outer on class; everything after the first aggregate is
-    bounded by label-set size, not data size. The persisted cells are
-    released via an eager checkpoint of the single-row result."""
+    bounded by label-set size, not data size."""
     cells = (
         df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .select(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("nab"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     cells.count()
     ma = cells.groupBy(F.col("a").alias("cls")).agg(F.sum("nab").alias("na"))
@@ -806,10 +805,6 @@ def cohens_kappa(
         F.round(pe, 6).alias("pe"),
         F.when(pe < 1.0, F.round((po - pe) / (F.lit(1.0) - pe), 6)).alias("kappa"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [cells])
     return result
 
 
@@ -1099,6 +1094,7 @@ def categorical_split_gain(
     )
 
 
+@lifecycle.operator
 def concentration_ratios(
     df: DataFrame,
     key_col: str,
@@ -1114,14 +1110,13 @@ def concentration_ratios(
     TakeOrderedAndProject over (total desc, key) — deterministic ties,
     no global sort materialized; the grand total folds separately.
     Output one row per k: (k, n_keys, total_value, top_share)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac, quantized_money
 
     per_key = (
         df.filter(F.col(key_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(F.col(key_col).alias("k"))
         .agg(F.sum(quantized_money(F.col(value_col))).alias("r"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     per_key.count()
     tot = per_key.agg(
@@ -1163,9 +1158,10 @@ def concentration_ratios(
             ),
         ).alias("top_share"),
     )
-    return _release_caches(result, [per_key])
+    return result
 
 
+@lifecycle.operator
 def hill_tail_index(
     df: DataFrame, value_col: str, k: int = 100
 ) -> DataFrame:
@@ -1190,7 +1186,7 @@ def hill_tail_index(
             F.row_number().over(_W.orderBy(F.col("x").desc())).alias("rank"),
             "x",
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     top.count()
     # Aggregate (not filter) so xk1 is ALWAYS one row: when the
@@ -1212,8 +1208,6 @@ def hill_tail_index(
             ).alias("ls")
         )
     )
-    from .dedup import _release_caches
-
     ls = F.col("ls").cast("double")
     result = (
         lsum.crossJoin(F.broadcast(nn))
@@ -1227,7 +1221,7 @@ def hill_tail_index(
             ),
         )
     )
-    return _release_caches(result, [top])
+    return result
 
 
 def ranking_stability(
@@ -1356,6 +1350,7 @@ def cronbach_alpha(df: DataFrame, item_cols: list) -> DataFrame:
     )
 
 
+@lifecycle.operator
 def mcc_multiclass(
     df: DataFrame, true_col: str, pred_col: str, release: bool = True
 ) -> DataFrame:
@@ -1377,7 +1372,7 @@ def mcc_multiclass(
             F.col(true_col).alias("t"), F.col(pred_col).alias("p")
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     cells.count()
     tm = cells.groupBy("t").agg(F.sum("c").alias("tk"))
@@ -1421,10 +1416,6 @@ def mcc_multiclass(
             F.round((c * s - tp) / denom, 6),
         ).alias("mcc"),
     )
-    from .dedup import _release_caches
-
-    if release:
-        return _release_caches(result, [cells])
     return result
 
 
@@ -1511,6 +1502,7 @@ def kendalls_w(df: DataFrame, key_col: str, metrics: list) -> DataFrame:
     )
 
 
+@lifecycle.operator
 def rank_biased_overlap(
     df: DataFrame,
     key_col: str,
@@ -1536,7 +1528,7 @@ def rank_biased_overlap(
     per_key = df.filter(F.col(key_col).isNotNull()).groupBy(
         F.col(key_col).alias("kk")
     ).agg(metric_a.alias("ma"), metric_b.alias("mb"))
-    per_key = per_key.persist()
+    per_key = lifecycle.persist(per_key)
     per_key.count()
 
     def toplist(metric, rank_name):

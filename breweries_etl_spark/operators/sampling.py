@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 
 # 4 hex chars = 65536 buckets → fraction granularity ~0.0015%
@@ -292,6 +293,7 @@ def bootstrap_mean_ci(
     )
 
 
+@lifecycle.operator
 def neyman_allocation(
     df: DataFrame,
     stratum_col: str,
@@ -310,7 +312,6 @@ def neyman_allocation(
     allocation rounds DOWN — the unallocated remainder is reported via
     the share column rather than redistributed, a closed form). Output
     per stratum: (stratum, n_rows, sd, share, alloc_n)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac, quantized_money
 
     per_h = (
@@ -342,7 +343,7 @@ def neyman_allocation(
         "n_rows",
         F.round(sd, 6).alias("sd"),
         F.round(n * sd, 6).alias("w"),
-    ).persist()
+    ).transform(lifecycle.persist)
     scored.count()
     tot = scored.agg(
         F.sum(F.col("w").cast("decimal(28,6)")).alias("wsum")
@@ -358,7 +359,7 @@ def neyman_allocation(
             F.floor(share * F.lit(float(total_n))).cast("long"),
         ).alias("alloc_n"),
     )
-    return _release_caches(result, [scored])
+    return result
 
 
 def capture_recapture_distinct(

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.exact import round_half_up as _r6
 
 from ..functions.partitioning import ensure_parallelism
@@ -240,6 +241,7 @@ def lsh_topk(
     )
 
 
+@lifecycle.operator
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -277,7 +279,7 @@ def ivf_topk(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).alias("c_vec"),
         F.col("prediction").alias("cell"),
-    ).persist()
+    ).transform(lifecycle.persist)
     assigned.count()
 
     centroids = [np.asarray(c).tolist() for c in model.clusterCenters()]

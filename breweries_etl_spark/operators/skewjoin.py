@@ -24,7 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 
+
+@lifecycle.operator(release=False)
 def heavy_keys(
     fact: DataFrame, key: str, heat_factor: float = 4.0
 ) -> DataFrame:
@@ -38,14 +41,14 @@ def heavy_keys(
     # 5 fact scans for one salted join). Persisting the narrow
     # (key, count) relation pins detection to ONE fact pass; it spills
     # to disk via the default MEMORY_AND_DISK level if the key domain
-    # outgrows executor storage. The cache cannot be eagerly released
-    # here (the joined result is corpus-scale, so a checkpoint-release
-    # is not an option) — instead the handle rides on the returned
-    # frame as ``_heavy_cache`` (and on through ``salted_join``), so a
-    # long-lived caller can ``df._heavy_cache.unpersist()``
-    # deterministically once the join has materialized, instead of
-    # reaching for session-wide clearCache (ADVICE r5).
-    counts = fact.groupBy(key).agg(F.count(F.lit(1)).alias("__cnt")).persist()
+    # outgrows executor storage. The joined result is corpus-scale, so
+    # the cache is never checkpoint-released here: it goes out on the
+    # lifecycle handle (through ``salted_join`` too), and a long-lived
+    # caller frees it with ``lifecycle.release`` once the join has
+    # materialized (ADVICE r5).
+    counts = lifecycle.persist(
+        fact.groupBy(key).agg(F.count(F.lit(1)).alias("__cnt"))
+    )
     totals = counts.agg(
         F.sum("__cnt").alias("__total"), F.count(F.lit(1)).alias("__nkeys")
     )
@@ -59,10 +62,10 @@ def heavy_keys(
         )
         .select(key)
     )
-    heavy._heavy_cache = counts  # type: ignore[attr-defined]
     return heavy
 
 
+@lifecycle.operator(release=False)
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -94,8 +97,7 @@ def salted_join(
     else:
         salt_src = F.xxhash64(salt_on)
 
-    heavy_raw = heavy_keys(fact, fact_key, heat_factor)
-    heavy = heavy_raw.withColumn("__heavy", F.lit(True))
+    heavy = heavy_keys(fact, fact_key, heat_factor).withColumn("__heavy", F.lit(True))
 
     f = (
         fact.join(F.broadcast(heavy), fact_key, "left")
@@ -131,8 +133,4 @@ def salted_join(
         d,
         (f[fact_key] == d[dim_key]) & (f["__salt"] == d["__salt"]),
     )
-    out = joined.drop(d["__salt"]).drop(f["__salt"])
-    # Propagate the heavy-key cache handle so callers can unpersist
-    # deterministically after materializing the join (ADVICE r5).
-    out._heavy_cache = heavy_raw._heavy_cache  # type: ignore[attr-defined]
-    return out
+    return joined.drop(d["__salt"]).drop(f["__salt"])

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.exact import money
 
 # Summed daily totals re-narrow from Spark's sum-widened (28,2) to the
@@ -899,6 +900,7 @@ def decayed_type_popularity(
     )
 
 
+@lifecycle.operator
 def acf_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -930,7 +932,7 @@ def acf_daily(
         df.select(day.alias("day"), y.alias("y"))
         .groupBy("day")
         .agg(F.sum("y").alias("y"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
@@ -969,11 +971,10 @@ def acf_daily(
         )
         .orderBy("lag")
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def theil_sen_daily_trend(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1004,7 +1005,7 @@ def theil_sen_daily_trend(
         df.select(day.alias("day"), y.alias("y"))
         .groupBy("day")
         .agg(F.sum("y").alias("y"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     d2 = daily.select(F.col("day").alias("day2"), F.col("y").alias("y2"))
     slopes = daily.join(d2, F.col("day") < F.col("day2")).select(
@@ -1041,11 +1042,10 @@ def theil_sen_daily_trend(
             F.round(F.col("intercept"), 4).alias("intercept"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def mann_kendall_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1070,7 +1070,7 @@ def mann_kendall_daily(
         df.select(day.alias("day"), y.alias("y"))
         .groupBy("day")
         .agg(F.sum("y").alias("y"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     d2 = daily.select(F.col("day").alias("day2"), F.col("y").alias("y2"))
     s = daily.join(d2, F.col("day") < F.col("day2")).agg(
@@ -1108,9 +1108,7 @@ def mann_kendall_daily(
             F.when(var_s > 0, F.round(z, 6)).alias("z"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def _daily_series(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
@@ -1128,6 +1126,7 @@ def _daily_series(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     )
 
 
+@lifecycle.operator
 def durbin_watson_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -1146,7 +1145,7 @@ def durbin_watson_daily(
     (n_days, slope, intercept, dw_stat)."""
     from .hypotests import dec_double, dec_double_wide
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     mn = daily.agg(F.min("day").alias("d0"))
     based = daily.crossJoin(F.broadcast(mn)).select(
@@ -1213,9 +1212,7 @@ def durbin_watson_daily(
             (F.col("den_fp") > 0) & (F.col("n_days") > 2), F.round(dw, 6)
         ).alias("dw_stat"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def runs_test_daily(
@@ -1325,6 +1322,7 @@ def rolling_ols_slope_daily(
     )
 
 
+@lifecycle.operator
 def cusum_change_point(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -1341,7 +1339,7 @@ def cusum_change_point(
     smallest-day tie-break, so the reported day is partition- and
     engine-independent. cusum_max = max|S'|/T returns to value units.
     Output one row: (n_days, change_day, cusum_max)."""
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     from .hypotests import dec_double
 
@@ -1377,11 +1375,10 @@ def cusum_change_point(
             4,
         ).alias("cusum_max"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def ljung_box_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1400,10 +1397,9 @@ def ljung_box_daily(
     so the final Σ is associative (a plain double SUM over even 7 rows
     is order-dependent in the last ulp). Output one row:
     (n_days, max_lag, lb_stat)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1452,9 +1448,10 @@ def ljung_box_daily(
             ),
         ).alias("lb_stat"),
     )
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def seasonal_decompose_weekday(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -1476,7 +1473,7 @@ def seasonal_decompose_weekday(
     (n_days, slope, effect_0 … effect_6, seasonal_strength)."""
     from .hypotests import dec_double, dec_double_wide
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     mn = daily.agg(F.min("day").alias("d0"))
     based = daily.crossJoin(F.broadcast(mn)).select(
@@ -1558,11 +1555,10 @@ def seasonal_decompose_weekday(
         ).alias("seasonal_strength")
     )
     result = effects.crossJoin(F.broadcast(strength))
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def lagged_xcorr_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1586,7 +1582,7 @@ def lagged_xcorr_daily(
         .select(day.alias("day"), F.col(value_col).cast("decimal(18,2)").alias("y"))
         .groupBy("day")
         .agg(F.sum("y").alias("y"), F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     daily.count()
     # guarded (28,2) -> (18,2) narrow before any product (see
@@ -1617,11 +1613,10 @@ def lagged_xcorr_daily(
             (vy > 0) & (vc > 0), F.round(cov / F.sqrt(vy * vc), 6)
         ).alias("xcorr"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def changepoint_binseg_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -1638,7 +1633,7 @@ def changepoint_binseg_daily(
     Output one row: (n_days, split_day, sse_total, sse_split, gain)."""
     from .hypotests import dec_double_wide, dec_double_wide_frac
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     # guarded (18,2) narrow before the square (the gini_concentration
     # rule; loud failure past the 10^16-cent envelope)
@@ -1690,11 +1685,10 @@ def changepoint_binseg_daily(
             F.floor((sst - sse_best) * F.lit(100.0)) / F.lit(100.0)
         ).alias("gain"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def theil_u_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -1709,7 +1703,7 @@ def theil_u_daily(
     Output one row: (n_pairs, theil_u)."""
     from .hypotests import dec_double_wide_frac
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     # guarded (18,2) narrow before products (the gini_concentration
     # rule; loud failure past the 10^16-cent envelope)
@@ -1738,9 +1732,7 @@ def theil_u_daily(
             rms_y + rms_p > 0, F.round(rmse / (rms_y + rms_p), 6)
         ).alias("theil_u"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def cox_stuart_trend_daily(
@@ -1793,6 +1785,7 @@ def cox_stuart_trend_daily(
     )
 
 
+@lifecycle.operator
 def seasonal_periodogram_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1815,7 +1808,7 @@ def seasonal_periodogram_daily(
     (period, n_days, power_fraction)."""
     from .hypotests import dec_double
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1882,9 +1875,7 @@ def seasonal_periodogram_daily(
             den > 0, F.round(F.lit(2.0) * (a * a + b * b) / (n * den), 6)
         ).alias("power_fraction"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def interarrival_burstiness(
@@ -1958,6 +1949,7 @@ def interarrival_burstiness(
     )
 
 
+@lifecycle.operator
 def hurst_rs_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1982,7 +1974,7 @@ def hurst_rs_daily(
     (n_days, n_blocks_used, hurst_h, r2)."""
     from .hypotests import dec_double
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     y18 = _narrow_daily_total(F.col("y"), "hurst_rs_daily")
     idx = daily.select(
@@ -2080,9 +2072,7 @@ def hurst_rs_daily(
         F.when(ok, F.round(sxy_c / sxx_c, 6)).alias("hurst_h"),
         F.when(ok, F.round(sxy_c * sxy_c / (sxx_c * syy_c), 6)).alias("r2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def type_mix_entropy_trend(
@@ -2214,6 +2204,7 @@ def evt_block_maxima(
     )
 
 
+@lifecycle.operator
 def mase_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -2233,7 +2224,7 @@ def mase_daily(
     mase)."""
     from .hypotests import dec_double_wide_frac
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
 
     def lag_mae(lag: int, tag: str):
@@ -2275,9 +2266,7 @@ def mase_daily(
             ).alias("mase"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def turning_points_daily(
@@ -2327,6 +2316,7 @@ def turning_points_daily(
     )
 
 
+@lifecycle.operator
 def sample_entropy_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -2348,7 +2338,7 @@ def sample_entropy_daily(
     corpus size). σ is the population SD from exact decimal moments;
     the r threshold and all comparisons are fixed double sequences.
     Output one row: (n_days, r_threshold, b_count, a_count, sampen)."""
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     win = Window.orderBy("day")
     walked = daily.select(
@@ -2409,11 +2399,10 @@ def sample_entropy_daily(
             ),
         ).alias("sampen"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def spectral_entropy_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -2432,7 +2421,7 @@ def spectral_entropy_daily(
     row: (n_days, n_freqs, peak_k, peak_share, spectral_entropy)."""
     from .hypotests import dec_double_wide_frac
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     win = Window.orderBy("day")
     idx = daily.select(
@@ -2549,9 +2538,7 @@ def spectral_entropy_daily(
             ).alias("spectral_entropy"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def dispersion_daily_counts(
@@ -2801,6 +2788,7 @@ def rayleigh_hour_uniformity(
     )
 
 
+@lifecycle.operator
 def pacf_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -2831,7 +2819,7 @@ def pacf_daily(
         .select(day.alias("day"), y.alias("y"))
         .groupBy("day")
         .agg(F.sum("y").alias("y"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2910,11 +2898,10 @@ def pacf_daily(
         F.round(F.col("p22"), 6).alias("pacf2"),
         F.round(p33, 6).alias("pacf3"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def seasonal_strength_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -2936,11 +2923,10 @@ def seasonal_strength_daily(
     both variances fold as floor(·10⁶) fixed point, so both engines
     agree bit-exactly. Output one row:
     (n_days, var_detrended, var_residual, seasonal_strength)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide
 
     half = (period - 1) // 2
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     w_ma = Window.orderBy("day").rangeBetween(-half, half)
     base = daily.select(
         F.expr(f"day % {period}").alias("dow"),
@@ -2997,7 +2983,7 @@ def seasonal_strength_daily(
         F.when((F.col("n") > 0) & (var_d > 0), F.round(strength, 6))
         .alias("seasonal_strength"),
     )
-    return _release_caches(result, [daily])
+    return result
 
 
 def bh_fdr_daily_counts(
@@ -3181,6 +3167,7 @@ def difference_sign_daily(
     )
 
 
+@lifecycle.operator
 def seasonal_mann_kendall(
     df: DataFrame,
     ts_col: str = "ts",
@@ -3210,7 +3197,7 @@ def seasonal_mann_kendall(
         .select(
             "day", "y", F.expr(f"day % {period}").alias("season")
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     d2 = daily.select(
         F.col("day").alias("day2"),
@@ -3272,9 +3259,7 @@ def seasonal_mann_kendall(
             ).alias("z_score"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def chatterjee_xi_daily(
@@ -3361,6 +3346,7 @@ def chatterjee_xi_daily(
     )
 
 
+@lifecycle.operator
 def pettitt_changepoint(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -3382,7 +3368,7 @@ def pettitt_changepoint(
     wasserstein annihilation lesson); change_day ties break to the
     EARLIEST day (deterministic, documented). Output one row:
     (n_days, k_stat, change_day, p_approx)."""
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     yc = daily.groupBy("y").agg(F.count(F.lit(1)).alias("c"))
     wy = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, 0)
@@ -3438,11 +3424,10 @@ def pettitt_changepoint(
         F.col("change_day").cast("long").alias("change_day"),
         F.when(F.col("n") > 1, F.round(p, 6)).alias("p_approx"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def foster_stuart_records(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -3465,7 +3450,7 @@ def foster_stuart_records(
     strict inequality — exact-decimal daily totals tie only on equal
     totals, which count as non-records, documented). Output one row:
     (n_days, n_upper, n_lower, d_stat, s_stat, z_trend, z_disp)."""
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     wd = Window.orderBy("day")
     wprev = wd.rowsBetween(Window.unboundedPreceding, -1)
@@ -3510,9 +3495,7 @@ def foster_stuart_records(
             "z_disp"
         ),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return result
 
 
 def permutation_entropy_daily(
@@ -3579,6 +3562,7 @@ def permutation_entropy_daily(
     )
 
 
+@lifecycle.operator
 def variance_ratio_daily(
     df: DataFrame,
     ts_col: str = "ts",
@@ -3599,7 +3583,7 @@ def variance_ratio_daily(
     windows over it. Per-row squared deviations fold as round-6
     decimals (the k-row double-fold rule). Output one row:
     (n_days, n_returns, vr_stat, z_score)."""
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     wd = Window.orderBy("day")
     lagged = daily.select(
@@ -3614,7 +3598,6 @@ def variance_ratio_daily(
             (F.col("y") - F.col("y1")).cast("decimal(38,2)")
         ).alias("sr"),
     )
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac
 
     j = lagged.crossJoin(F.broadcast(tot))
@@ -3657,9 +3640,10 @@ def variance_ratio_daily(
         F.when(ok, F.round(vr, 6)).alias("vr_stat"),
         F.when(ok, F.round((vr - F.lit(1.0)) / se, 6)).alias("z_score"),
     )
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def buishand_range_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -3675,10 +3659,9 @@ def buishand_range_daily(
     accumulation to diverge. One fact shuffle to the day relation; one
     cumulative window over it. Output one row:
     (n_days, q_stat, r_stat, q_scaled, r_scaled)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
@@ -3721,9 +3704,10 @@ def buishand_range_daily(
         ),
         F.when(ok, F.round(rng / scale, 6)).alias("r_scaled"),
     )
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def snht_daily_value(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -3746,10 +3730,9 @@ def snht_daily_value(
     exact integers. One fact shuffle to the bounded day relation; one
     cumulative window; 1-row output guarantee on empty/degenerate
     input. Output: (n_days, t_stat, change_day)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     d38 = "decimal(38,0)"
     base = daily.select(
@@ -3818,9 +3801,10 @@ def snht_daily_value(
             "change_day"
         ),
     )
-    return _release_caches(result, [daily])
+    return result
 
 
+@lifecycle.operator
 def distance_correlation_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -3857,7 +3841,6 @@ def distance_correlation_daily(
     with long-span, large-magnitude data should pre-scale value_col by
     a constant (dCor is scale-invariant; truncation error then lands
     in the input quantization, not mid-fold overflow)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     d38 = "decimal(38,0)"
@@ -3870,7 +3853,7 @@ def distance_correlation_daily(
             (F.sum("y") * F.lit(100)).cast(d38).alias("yc"),
             F.count(F.lit(1)).cast("decimal(19,0)").alias("m"),
         )
-        .persist()
+        .transform(lifecycle.persist)
     )
     daily2.count()
     aa = daily2.select(
@@ -3962,9 +3945,10 @@ def distance_correlation_daily(
         F.when(ok, F.round(dcor2, 6)).alias("dcor2"),
         F.when(ok, F.round(F.sqrt(dcor2), 6)).alias("dcor"),
     )
-    return _release_caches(result, [daily2])
+    return result
 
 
+@lifecycle.operator
 def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Watson's U² test of CIRCULAR uniformity for time-of-day at
     minute resolution — the rotation-invariant Cramér–von Mises
@@ -3991,7 +3975,6 @@ def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     discipline). Pre-epoch timestamps take the positive
     residue ((µs % 86.4e9)+86.4e9) % 86.4e9. Output one row:
     (n, u2_stat)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     d19 = "decimal(19,0)"
@@ -4005,7 +3988,7 @@ def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
         .select(minute.alias("m"))
         .groupBy("m")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     vc.count()
     tot = vc.agg(
@@ -4066,9 +4049,10 @@ def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
         F.col("n0").cast("long").alias("n"),
         F.when(F.col("n0") > 0, F.round(u2, 6)).alias("u2_stat"),
     )
-    return _release_caches(result, [vc])
+    return result
 
 
+@lifecycle.operator
 def epps_pulley_daily(
     df: DataFrame, ts_col: str = "ts", value_col: str = "value"
 ) -> DataFrame:
@@ -4090,11 +4074,10 @@ def epps_pulley_daily(
     folds are exact decimal sums with ONE closing sequence. Zero
     variance or empty input → NULL stat (1-row guarantee).
     Output: (n_days, tep_stat)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     d38 = "decimal(38,0)"
-    daily = _daily_series(df, ts_col, value_col).persist()
+    daily = lifecycle.persist(_daily_series(df, ts_col, value_col))
     daily.count()
     base = daily.select(
         "day", (F.col("y") * F.lit(100)).cast(d38).alias("c")
@@ -4157,4 +4140,4 @@ def epps_pulley_daily(
         nn.cast("long").alias("n_days"),
         F.when(ok, F.round(tep, 6)).alias("tep_stat"),
     )
-    return _release_caches(result, [daily])
+    return result

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 # Word tokens: ASCII alnum/underscore runs. `\\w` differs between regex
 # dialects (unicode classes); the explicit class does not.
 TOKEN_RE = "[A-Za-z0-9_]+"
@@ -346,6 +348,7 @@ def rolling_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return base.select("doc_id", h.alias("rolling_hash"))
 
 
+@lifecycle.operator
 def fingerprint(
     df: DataFrame, text_col: str = "text", n: int = 5, release: bool = True
 ) -> DataFrame:
@@ -360,22 +363,17 @@ def fingerprint(
     same 30× lesson as MinHash (operators/dedup.py). Short docs with no
     n-gram fall back to the whole-text md5 via the left join.
 
-    The persisted (md5, shingles) projection is corpus-scale; with
-    ``release=True`` (library default) the result is checkpointed
-    eagerly and the cache dropped before returning — same contract as
-    the near-dup pipelines (dedup._release_caches). Contract/bench
-    wrappers pass ``release=False``: a one-shot session consumes the
-    result and exits, and the checkpoint write does not belong in the
-    timed path (the r2 lesson).
+    The persisted (md5, shingles) projection is corpus-scale; its
+    ``release`` contract is the one in ``functions/lifecycle.py``.
     """
     from ..functions.partitioning import ensure_parallelism
-    from .dedup import _release_caches
 
+    # persist: a barrier that keeps the interpreted shingle transform one-pass
     base = ensure_parallelism(df.select("doc_id", text_col)).select(
         "doc_id",
         F.md5(normalize_text_expr(F.col(text_col))).alias("content_md5"),
         shingles_expr(F.col(text_col), n).alias("__sh"),
-    ).persist()  # barrier: keep the interpreted shingle transform one-pass
+    ).transform(lifecycle.persist)
     min_fp = (
         base.select("doc_id", F.explode("__sh").alias("s"))
         .groupBy("doc_id")
@@ -389,8 +387,6 @@ def fingerprint(
             "content_md5",
         )
     )
-    if release:
-        return _release_caches(result, [base])
     return result
 
 
@@ -485,6 +481,7 @@ def token_zipf_stats(
     )
 
 
+@lifecycle.operator
 def bigram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
@@ -541,8 +538,8 @@ def bigram_lm_scores(
     # sized cache instead of re-expanding the corpus aggregation (r5
     # plan audit: 4 corpus scans → 3, the floor while the score pass
     # must re-read the bigram relation and vocab needs ALL tokens).
-    bigram_counts = (
-        pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")).persist()
+    bigram_counts = lifecycle.persist(
+        pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     )
     bigram_counts.count()
     unigram_counts = bigram_counts.groupBy("w1").agg(F.sum("c2").alias("c1"))
@@ -584,14 +581,10 @@ def bigram_lm_scores(
         )
         .withColumn("ppl", F.round(F.exp(-F.col("avg_logprob")), 3))
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [bigram_counts])
-    result._bigram_cache = bigram_counts  # caller-managed release
     return result
 
 
+@lifecycle.operator
 def perplexity_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -638,12 +631,6 @@ def perplexity_buckets(
             .otherwise(F.lit("tail")),
         )
     )
-    if not release:
-        # Propagate the caller-managed cache handle: the r5 form left
-        # it stranded on the intermediate `scores` frame, which these
-        # transformations drop — making the bigram-count persist
-        # reclaimable only via session-wide clearCache (ADVICE r5).
-        result._bigram_cache = scores._bigram_cache  # type: ignore[attr-defined]
     return result
 
 
@@ -733,11 +720,9 @@ def collocation_pmi(
     tests/test_plan_budgets.py::test_collocation_pmi_no_vocab_broadcast.
     """
     counts, result = _pmi_counts_and_result(df, text_col, min_count, k)
-    counts.persist()
-    try:
+    with lifecycle.scope():
+        lifecycle.persist(counts)
         rows = result.collect()
-    finally:
-        counts.unpersist()
     out = df.sparkSession.createDataFrame(
         rows, "w1 string, w2 string, c_ab bigint, pmi double"
     )
@@ -949,6 +934,7 @@ def vocab_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+@lifecycle.operator
 def keyness_llr_top_terms(
     docs: DataFrame,
     source_col: str = "source",
@@ -989,7 +975,7 @@ def keyness_llr_top_terms(
     st = (
         toks.groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("a"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     st.count()
     term_tot = st.groupBy("term").agg(F.sum("a").alias("t"))
@@ -1038,13 +1024,10 @@ def keyness_llr_top_terms(
     result = scored.withColumn(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
-    if not release:
-        return result
-    from .dedup import _release_caches
-
-    return _release_caches(result, [st])
+    return result
 
 
+@lifecycle.operator
 def source_char_ngram_cosine(
     df: DataFrame,
     source_col: str = "source",
@@ -1079,7 +1062,7 @@ def source_char_ngram_cosine(
         )
         .groupBy("s", "g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(lifecycle.persist)
     )
     gc.count()
     d19 = "decimal(19,0)"
@@ -1089,13 +1072,13 @@ def source_char_ngram_cosine(
     # gram-count cache — profiled at sf0.1 as two full-pass stages for a
     # #sources-row relation. The cache bounds that to one pass (the
     # block manager serializes the concurrent futures' computation of
-    # the same partition). Released with gc below.
+    # the same partition).
     norms = gc.groupBy("s").agg(
         F.sum((F.col("c").cast(d19) * F.col("c").cast(d19)).cast(d38)).alias(
             "nrm2"
         ),
         F.sum("c").alias("n_grams"),
-    ).persist()
+    ).transform(lifecycle.persist)
     a = gc.select(F.col("s").alias("sa"), "g", F.col("c").alias("ca"))
     b = gc.select(F.col("s").alias("sb"), "g", F.col("c").alias("cb"))
     dots = (
@@ -1138,9 +1121,7 @@ def source_char_ngram_cosine(
             ).alias("cosine"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [gc, norms])
+    return result
 
 
 def pii_density_by_source(
@@ -1763,6 +1744,7 @@ def vocab_richness(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+@lifecycle.operator
 def burrows_delta(
     df: DataFrame,
     group_col: str = "source",
@@ -1797,7 +1779,7 @@ def burrows_delta(
         ).alias("term"),
     )
     tf = toks.groupBy("src", "term").agg(F.count(F.lit(1)).alias("c"))
-    tf = tf.persist()
+    tf = lifecycle.persist(tf)
     tf.count()
     totals = tf.groupBy("src").agg(F.sum("c").alias("n_s"))
     topk = (
@@ -1870,11 +1852,10 @@ def burrows_delta(
             ).alias("burrows_delta"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [tf])
+    return result
 
 
+@lifecycle.operator
 def log_odds_dirichlet(
     df: DataFrame,
     group_expr,
@@ -1914,7 +1895,7 @@ def log_odds_dirichlet(
             F.sum(F.when(F.col("in_a"), 0).otherwise(1)).alias("yb"),
         )
         .filter(F.col("ya") + F.col("yb") >= min_count)
-        .persist()
+        .transform(lifecycle.persist)
     )
     tf.count()
     tot = tf.agg(
@@ -1964,9 +1945,7 @@ def log_odds_dirichlet(
         )
     )
     result = top_a.unionByName(top_b)
-    from .dedup import _release_caches
-
-    return _release_caches(result, [tf])
+    return result
 
 
 def token_fertility_by_lang(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -45,6 +45,11 @@ def get_spark(
         # Broadcast small dimension tables aggressively (region/nation/
         # supplier-class dims stay far under this at any SF we run).
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Pinned, not defaulted: the prefix-count primitive persists its
+        # bucket-repartitioned relation so both (b)-keyed consumers read
+        # the cache without an Exchange. That plan shape holds only while
+        # cached plans keep their output partitioning.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..operators.dedup import prefix_jaccard_incremental
 
 
@@ -79,24 +80,23 @@ def neardup_admission_batch(
     pairs_dir = os.path.join(work_dir, "pairs", f"e{epoch_id}")
     base = read_accepted(spark, work_dir, before_epoch=epoch_id)
     if base is None:
-        matches = None
-        admitted = batch_df
-    else:
-        matches = prefix_jaccard_incremental(
-            base,
-            batch_df,
-            threshold=threshold,
-            n=n,
-            release=False,
-        ).persist()
+        batch_df.write.mode("overwrite").parquet(accepted_dir)
+        return
+    # the scope frees the persisted matches AND the shingle caches the
+    # release=False join merged into it
+    with lifecycle.scope():
+        matches = lifecycle.persist(
+            prefix_jaccard_incremental(
+                base, batch_df, threshold=threshold, n=n, release=False
+            )
+        )
         flagged = matches.select(F.col("incoming_id").alias("doc_id")).distinct()
-        admitted = batch_df.join(flagged, "doc_id", "left_anti")
-    admitted.write.mode("overwrite").parquet(accepted_dir)
-    if matches is not None:
+        batch_df.join(flagged, "doc_id", "left_anti").write.mode(
+            "overwrite"
+        ).parquet(accepted_dir)
         matches.withColumn("epoch", F.lit(epoch_id)).write.mode(
             "overwrite"
         ).parquet(pairs_dir)
-        matches.unpersist()
 
 
 def streaming_neardup_admission(

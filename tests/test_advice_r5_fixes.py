@@ -3,11 +3,11 @@
 1. streaming._batch_cents rounds HALF-UP per value (matching the
    oracle's CAST AS DECIMAL(12,2) in DuckDB), not pandas half-to-even
    — exercised on an exact-in-binary half-cent tie (0.125).
-2. heavy_keys / salted_join expose the per-key-count persist as a
-   ``_heavy_cache`` handle on the returned frame so long-lived callers
-   can unpersist deterministically.
-3. perplexity_buckets(release=False) propagates the bigram-count cache
-   handle to the FINAL frame (the r5 form stranded it on the dropped
+2. heavy_keys / salted_join hand the per-key-count persist over on the
+   lifecycle handle of the returned frame so long-lived callers can
+   free it deterministically.
+3. perplexity_buckets(release=False) carries the bigram-count cache on
+   the FINAL frame's handle (the r5 form stranded it on the dropped
    intermediate).
 """
 
@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pandas as pd
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.streaming.stateful import _batch_cents
 
 
@@ -48,14 +49,15 @@ def test_salted_join_propagates_heavy_cache(spark):
     )
     dim = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k2 long, v string")
     heavy = heavy_keys(fact, "k")
-    assert heavy._heavy_cache.storageLevel.useMemory
-    heavy._heavy_cache.unpersist()
+    (cache,) = lifecycle.handle(heavy).frames
+    assert cache.storageLevel.useMemory
+    lifecycle.release(heavy)
 
     joined = salted_join(fact, dim, "k", "k2", salt_on="row")
     assert joined.count() == 102
-    cache = joined._heavy_cache
+    (cache,) = lifecycle.handle(joined).frames
     assert cache.storageLevel.useMemory
-    cache.unpersist()
+    lifecycle.release(joined)
     assert not cache.storageLevel.useMemory
 
 
@@ -68,7 +70,7 @@ def test_perplexity_buckets_propagates_bigram_cache(spark):
     )
     out = perplexity_buckets(docs, release=False)
     assert out.count() == 6
-    cache = out._bigram_cache
+    (cache,) = lifecycle.handle(out).frames
     assert cache.storageLevel.useMemory
-    cache.unpersist()
+    lifecycle.release(out)
     assert not cache.storageLevel.useMemory

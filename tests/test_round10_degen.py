@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.aggregate import (
     skyline_2d,
     weighted_median,
@@ -100,6 +101,5 @@ def test_prefix_counts_null_predicate_lands_in_group_b(spark):
     )
     pc = grouped_value_prefix_counts(df, "v", F.col("lang") == "en")
     rows = {float(r["v"]): (r["ca"], r["cb"]) for r in pc.collect()}
-    pc._vc_cache.unpersist()  # type: ignore[attr-defined]
-    pc._vb_cache.unpersist()  # type: ignore[attr-defined]
+    lifecycle.release(pc)
     assert rows == {5.0: (1, 1), 7.0: (0, 2)}, rows

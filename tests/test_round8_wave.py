@@ -570,10 +570,12 @@ def test_ranking_stability_reversed_is_minus_one(spark):
 
 def test_dunn_release_false_hands_caches_to_caller(spark):
     """ADVICE r10 (low): with release=False the persisted internals
-    must be handed over on result._dunn_caches so the caller can free
-    them — previously per_g leaked for the session lifetime. r13: the
-    prefix-count primitive now persists the bucketed relation too, so
-    the handover carries THREE caches (value-counts, bucketed, per_g)."""
+    must be handed over on the result's lifecycle handle so the caller
+    can free them — previously per_g leaked for the session lifetime.
+    r13: the prefix-count primitive now persists the bucketed relation
+    too, so the handover carries THREE caches (value-counts, bucketed,
+    per_g)."""
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.hypotests import dunn_pairwise_z
 
     df = spark.createDataFrame(
@@ -582,10 +584,10 @@ def test_dunn_release_false_hands_caches_to_caller(spark):
         "g string, v double",
     )
     res = dunn_pairwise_z(df, "g", "v", release=False)
-    caches = getattr(res, "_dunn_caches", None)
+    handle = lifecycle.handle(res)
+    caches = handle.frames if handle is not None else None
     assert caches is not None and len(caches) == 3
     assert all(c.storageLevel.useMemory for c in caches)
     res.collect()
-    for c in caches:
-        c.unpersist()
+    lifecycle.release(res)
     assert all(not c.storageLevel.useMemory for c in caches)

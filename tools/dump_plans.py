@@ -3,10 +3,17 @@ so plan quality (pushdown, pruning, broadcast choices, exchange counts)
 is reviewable without running Spark.
 
 Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py --unreleased out_dir suffix q1 [q2 ...]
+
+``--unreleased`` writes out_dir/<q>_<suffix>.txt for the named queries
+with the lifecycle release point identity-patched INSIDE THIS TOOL
+ONLY: the release checkpoint would otherwise mask the plan as a scan of
+the checkpointed result. The SF directory comes from SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -204,7 +211,26 @@ def formatted_plan(df) -> str:
     )
 
 
+def dump_unreleased(out_dir: str, suffix: str, names: list[str]) -> None:
+    from breweries_etl_spark.functions import lifecycle
+
+    lifecycle._release = lambda result, scope: result
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
+    spark = get_spark("dump_plan")
+    qs = entrymod.queries()
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(formatted_plan(qs[name](spark, sf_dir)))
+        print(f"wrote {path}")
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--unreleased"]:
+        out_dir, suffix, *names = sys.argv[2:]
+        dump_unreleased(out_dir, suffix, names)
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("plan_dump")
     qs = entrymod.queries()
