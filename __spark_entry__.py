@@ -557,9 +557,7 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.fingerprint(
-        load_table(spark, sf_dir, "documents"), release=False
-    )
+    return text.fingerprint(load_table(spark, sf_dir, "documents"))
 
 
 def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -747,7 +745,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+        load_table(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
@@ -755,7 +753,7 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dups (approximate candidate generation; exact
     verification). Not SQL-expressible → rows-only driver check."""
     return dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+        load_table(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
@@ -764,7 +762,7 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same pair set as ground truth, so it shares the exact-Jaccard
     oracle shape (candidate strategy differs, result set cannot)."""
     return dedup.prefix_filtered_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+        load_table(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
@@ -777,9 +775,7 @@ def q_dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1_000_000
     )
-    return dedup.prefix_jaccard_incremental(
-        base, incoming, threshold=0.5, release=False
-    )
+    return dedup.prefix_jaccard_incremental(base, incoming, threshold=0.5)
 
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,9 +783,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-vote is deterministic, so the DuckDB oracle replays it exactly
     and brute-forces the radius-3 pairs (identical to the pigeonhole
     banding by its exactness guarantee)."""
-    return dedup.simhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), release=False
-    )
+    return dedup.simhash_near_duplicates(load_table(spark, sf_dir, "documents"))
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,7 +810,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scope frees the pair caches once the components are checkpointed
     with lifecycle.scope():
         pairs = dedup.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+            load_table(spark, sf_dir, "documents"), threshold=0.5
         )
         return connected_components(pairs)
 
@@ -828,7 +822,7 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scope frees the pair caches once the components are checkpointed
     with lifecycle.scope():
         pairs = dedup.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"), threshold=0.5, release=False
+            load_table(spark, sf_dir, "documents"), threshold=0.5
         )
         return dedup_cluster_canonical(pairs)
 
@@ -3498,9 +3492,7 @@ def q_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-trained bigram-LM perplexity per document (CCNet-style
     quality signal): corpus bigram/unigram counts + vocabulary, add-0.5
     smoothing, mean per-bigram log-prob rounded before averaging."""
-    return text.bigram_lm_scores(
-        load_table(spark, sf_dir, "documents"), release=False
-    )
+    return text.bigram_lm_scores(load_table(spark, sf_dir, "documents"))
 
 
 _ORACLES["bigram_lm_scores"] = """
@@ -3775,9 +3767,7 @@ def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail: per-language perplexity terciles over the
     bigram-LM scores; ntile over the total order (ppl, doc_id) is
     deterministic, so DuckDB replays the assignment exactly."""
-    return text.perplexity_buckets(
-        load_table(spark, sf_dir, "documents"), release=False
-    )
+    return text.perplexity_buckets(load_table(spark, sf_dir, "documents"))
 
 
 _ORACLES["ccnet_perplexity_buckets"] = """
@@ -4096,9 +4086,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, never document frequency)."""
     from breweries_etl_spark.operators.corpus import source_overlap_matrix
 
-    return source_overlap_matrix(
-        load_table(spark, sf_dir, "documents"), release=False
-    )
+    return source_overlap_matrix(load_table(spark, sf_dir, "documents"))
 
 
 def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4983,7 +4971,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset documents Jaccard misses; candidate machinery shared with
     the exact n-gram path (df-capped inverted index)."""
     return dedup.containment_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.8, release=False
+        load_table(spark, sf_dir, "documents"), threshold=0.8
     )
 
 
@@ -4993,9 +4981,7 @@ def q_robust_scale_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from breweries_etl_spark.operators.profiling import robust_scale_stats
 
     orders = load_table(spark, sf_dir, "orders")
-    return robust_scale_stats(
-        orders, "o_totalprice", "o_orderpriority", z_cut=3.0, release=False
-    )
+    return robust_scale_stats(orders, "o_totalprice", "o_orderpriority", z_cut=3.0)
 
 
 def q_rolling_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5134,7 +5120,7 @@ def q_event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collapsed (user, type) relation."""
     from breweries_etl_spark.operators.behavior import event_cooccurrence_lift
 
-    return event_cooccurrence_lift(load_events(spark, sf_dir), release=False)
+    return event_cooccurrence_lift(load_events(spark, sf_dir))
 
 
 def q_lang_distribution_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6199,9 +6185,7 @@ def q_frequent_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("l_partkey") == F.col("p_partkey"),
     )
-    return frequent_item_pairs(
-        baskets, "l_orderkey", "p_brand", min_count=2, release=False
-    )
+    return frequent_item_pairs(baskets, "l_orderkey", "p_brand", min_count=2)
 
 
 def q_price_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:

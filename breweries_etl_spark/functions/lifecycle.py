@@ -22,28 +22,29 @@ Pieces:
   through the frame that registered it, so a scope never frees a cache
   it does not own (an enclosing operator's, or the caller's), even
   when its own job was the first to fill it.
-- ``@operator`` ends every caching operator the same way. With
-  ``release=True`` (the default), or when the operator has no
-  ``release`` parameter, it takes an eager reliable checkpoint of the
-  result and frees the scope, so nothing the operator cached outlives
-  its return. The checkpoint is the release point because the result
-  is small next to what it was computed from, and its write re-reads
-  still-warm caches: at sf0.1 it costs +0.03-0.07 s, against +0.2-0.3 s
-  for a ``collect()`` -> ``createDataFrame`` round trip. A scope that
-  holds nothing (no frame still cached, no RDD pinned) returns its
-  result untouched.
-- With ``release=False`` the operator returns its lazy plan, caches
-  intact, so a one-shot consumer (the registry queries) does not pay
-  the checkpoint write and teardown inside its timed call (3.1x slower
-  on the MinHash pipeline). Called from inside another operator, its
-  scope merges into the enclosing one. Called from the top level, the
-  result carries one handle and ``release(result)`` frees it once the
-  result has been consumed. The handle is a plain attribute, so it does
-  not survive a transformation: call ``release`` on the frame the
-  operator returned, or capture ``handle(result)`` before deriving from
-  it. ``@operator(release=False)`` marks an operator whose result is
-  corpus-scale and therefore never checkpointed; it always hands its
-  caches over this way.
+- ``@operator`` ends every caching operator, in a mode fixed where the
+  operator is defined; no caller chooses it.
+
+  - ``@operator`` (checkpoint and free): the operator takes an eager
+    reliable checkpoint of its result and frees the scope, so nothing
+    it cached outlives its return. The checkpoint is the release point
+    because the result is small next to what it was computed from, and
+    its write re-reads still-warm caches: at sf0.1 it costs
+    +0.03-0.07 s, against +0.2-0.3 s for a ``collect()`` ->
+    ``createDataFrame`` round trip. A scope that holds nothing (no
+    frame still cached, no RDD pinned) returns its result untouched.
+  - ``@operator(release=False)`` (hand over): for the 22 results that
+    are corpus-scale (near-dup pairs, fingerprints, bigram scores,
+    shingle sets, the prefix-count primitives and the like), where the
+    checkpoint write and teardown would dominate a one-shot consumer's
+    call (3.1x slower on the MinHash pipeline). The operator returns
+    its lazy plan, caches intact. Called from inside another operator,
+    its scope merges into the enclosing one. Called from the top level,
+    the result carries one handle and ``release(result)`` frees it once
+    the result has been consumed. The handle is a plain attribute, so
+    it does not survive a transformation: call ``release`` on the frame
+    the operator returned, or capture ``handle(result)`` before
+    deriving from it.
 
 Operators whose result is built from driver-side rows (the mltrain
 fits) reference no cache once they return; they wrap the caching part
@@ -53,7 +54,6 @@ in ``with scope():``, which frees on exit without a checkpoint.
 from __future__ import annotations
 
 import functools
-import inspect
 import tempfile
 import threading
 
@@ -169,13 +169,6 @@ def checkpoint(df: DataFrame) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
-def _release(result: DataFrame, s: Scope) -> DataFrame:
-    """The release point: checkpoint the result, then free the scope."""
-    out = checkpoint(result)
-    s.free()
-    return out
-
-
 class scope:
     """``with scope():`` frees everything persisted inside on exit, with
     no checkpoint: for code whose result references no cache."""
@@ -189,26 +182,15 @@ class scope:
         _stack().pop().free()
 
 
-def operator(fn=None, *, release: bool | None = None):
-    """Finish a caching operator: checkpoint-and-free, or hand over.
-
-    ``release`` fixes the mode for operators without a ``release``
-    parameter; only ``release=False`` (always hand over) is meaningful.
-    """
+def operator(fn=None, *, release: bool = True):
+    """Finish a caching operator in its fixed mode: ``@operator``
+    checkpoints the result and frees its caches, ``@operator(release=False)``
+    hands them over with the lazy result (see the module docstring)."""
     if fn is None:
         return functools.partial(operator, release=release)
-    sig = inspect.signature(fn)
-    param = sig.parameters.get("release")
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        if release is not None:
-            releasing = release
-        elif param is None:
-            releasing = True
-        else:
-            bound = sig.bind_partial(*args, **kwargs).arguments
-            releasing = bound.get("release", param.default)
         stack = _stack()
         s = Scope()
         stack.append(s)
@@ -219,8 +201,12 @@ def operator(fn=None, *, release: bool | None = None):
             s.free()
             raise
         stack.pop()
-        if releasing:
-            return result if s.holds_nothing() else _release(result, s)
+        if release:
+            if s.holds_nothing():
+                return result
+            out = checkpoint(result)
+            s.free()
+            return out
         if stack:
             stack[-1].frames.extend(s.frames)
         elif not s.holds_nothing():
@@ -231,7 +217,7 @@ def operator(fn=None, *, release: bool | None = None):
 
 
 def handle(df: DataFrame) -> Scope | None:
-    """The caches a top-level ``release=False`` result holds, if any."""
+    """The caches a top-level hand-over result holds, if any."""
     return getattr(df, _HANDLE, None)
 
 

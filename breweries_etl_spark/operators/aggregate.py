@@ -288,14 +288,13 @@ def abc_classification(
     )
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def frequent_item_pairs(
     df: DataFrame,
     basket_col: str,
     item_col: str,
     min_count: int = 2,
     max_basket_size: int | None = 10000,
-    release: bool = True,
 ) -> DataFrame:
     """Market-basket pair mining: distinct item pairs co-occurring in at
     least ``min_count`` baskets, with support and lift — the first level

@@ -528,11 +528,10 @@ def conversion_latency_percentiles(
     )
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def event_cooccurrence_lift(
     df: DataFrame,
     min_users: int = 5,
-    release: bool = True,
 ) -> DataFrame:
     """Market-basket lift between event types at user granularity:
     lift(a,b) = P(a,b) / (P(a)·P(b)) over the user population — which

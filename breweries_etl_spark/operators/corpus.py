@@ -305,7 +305,7 @@ def leakage_safe_split(
     # the scope frees the pair caches once the components are checkpointed
     with lifecycle.scope():
         pairs = prefix_filtered_jaccard_pairs(
-            df, text_col, id_col, threshold=threshold, n=n, release=False
+            df, text_col, id_col, threshold=threshold, n=n
         )
         cc = connected_components(pairs)
     labeled = (
@@ -393,13 +393,12 @@ def paragraph_dedup(
     )
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def source_overlap_matrix(
     df: DataFrame,
     text_col: str = "text",
     source_col: str = "source",
     n: int = 3,
-    release: bool = True,
 ) -> DataFrame:
     """Pairwise content overlap between corpus sources: for every source
     pair (a < b), the number of shared distinct word n-grams and their

@@ -223,7 +223,7 @@ def jaccard_expr(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -231,7 +231,6 @@ def minhash_near_duplicates(
     threshold: float = 0.5,
     n: int = 3,
     max_bucket: int = 1000,
-    release: bool = True,
 ) -> DataFrame:
     """MinHash→LSH candidates → exact-Jaccard verification.
 
@@ -244,8 +243,8 @@ def minhash_near_duplicates(
     concurrently within one job — lazily, every branch would recompute
     them before the cache fills. The minima are tiny (~256 bytes/doc);
     the shingle-HASH arrays (8 bytes/shingle ≈ 8 bytes/word) are smaller
-    than the raw text but still corpus-scale; ``release`` follows
-    ``functions/lifecycle.py``.
+    than the raw text but still corpus-scale, so they are handed over
+    with the result (``functions/lifecycle.py``).
     """
     sh = shingle_sets(df, text_col, id_col, n, hashed=True)
     mins = lifecycle.persist(minhash_mins(sh, id_col))
@@ -264,7 +263,7 @@ def minhash_near_duplicates(
     return result
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -272,7 +271,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 3,
     max_df: int | None = 1000,
-    release: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs: candidates = pairs sharing ≥1
     *sufficiently rare* shingle, verified per-row with exact Jaccard.
@@ -371,14 +369,13 @@ def ngram_jaccard_pairs(
     return result
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def prefix_filtered_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
     n: int = 3,
-    release: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin
     family — Bayardo et al. WWW'07, Xiao et al. WWW'08): provably no
@@ -456,7 +453,7 @@ def prefix_filtered_jaccard_pairs(
     return result
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def prefix_jaccard_incremental(
     base: DataFrame,
     incoming: DataFrame,
@@ -464,7 +461,6 @@ def prefix_jaccard_incremental(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     n: int = 3,
-    release: bool = True,
 ) -> DataFrame:
     """Incremental EXACT near-dup: which INCOMING docs have Jaccard ≥ t
     against some BASE doc — the daily-ingestion shape. In production the
@@ -603,13 +599,12 @@ def simhash_signatures(
     )
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def simhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    release: bool = True,
 ) -> DataFrame:
     """SimHash near-dups within Hamming radius ≤ 3 via pigeonhole banding:
     split the 64-bit signature into 4×16-bit chunks — any pair within the
@@ -771,7 +766,7 @@ def _set_group_collapse(sh: DataFrame, id_col: str):
     return rep_sh, members
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -779,7 +774,6 @@ def containment_pairs(
     threshold: float = 0.8,
     n: int = 3,
     max_df: int | None = 1000,
-    release: bool = True,
 ) -> DataFrame:
     """Directional CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A| —
     the asymmetric overlap measure that catches quotes, excerpts, and

@@ -845,7 +845,6 @@ def partition_modularity(
     communities: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    release: bool = True,
 ) -> DataFrame:
     """Newman modularity Q of a GIVEN node partition over the
     undirected simple graph of ``pairs`` — the standard "is this

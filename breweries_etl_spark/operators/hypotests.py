@@ -373,7 +373,6 @@ def ks_test_2samp(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic
     D = sup_x |F_A(x) − F_B(x)| — the distribution-drift test a corpus
@@ -416,7 +415,6 @@ def mann_whitney_u(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact Mann–Whitney U (rank-sum) test with the standard tie
     correction — the nonparametric A/B location test for skewed metrics
@@ -471,7 +469,6 @@ def global_ecdf(
     df: DataFrame,
     value_col: str,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact global ECDF / percent-rank per distinct value — the
     whole-corpus rank feature (quantile normalization input, outlier
@@ -512,7 +509,6 @@ def theil_index(
     df: DataFrame,
     key_col: str,
     value_col: str,
-    release: bool = True,
 ) -> DataFrame:
     """Theil T inequality index of how a value concentrates across keys:
     T = (1/n)·Σ (xᵢ/μ)·ln(xᵢ/μ) — 0 at perfect equality, ln(n) at total
@@ -578,7 +574,6 @@ def lorenz_deciles(
     key_col: str,
     value_col: str,
     n_bins: int = 10,
-    release: bool = True,
 ) -> DataFrame:
     """Lorenz curve at decile resolution: for each population decile of
     keys (ordered by their value), the share of keys and of total value
@@ -650,7 +645,6 @@ def quantile_normalize(
     value_col: str,
     n_grid: int = 10,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Per-group quantile normalization onto the POOLED distribution —
     the batch-effect remover (classic in bioinformatics, equally the
@@ -786,7 +780,6 @@ def gini_concentration(
     key_col: str,
     value_col: str,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Gini coefficient and Herfindahl–Hirschman index of how a value
     concentrates across keys (revenue across customers, tokens across
@@ -872,7 +865,6 @@ def spearman_rho(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    release: bool = True,
 ) -> DataFrame:
     """Exact Spearman rank correlation (average ranks for ties) between
     two numeric columns — the robust monotone-association measure that
@@ -934,7 +926,6 @@ def kruskal_wallis(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    release: bool = True,
 ) -> DataFrame:
     """Exact Kruskal–Wallis H test (the k-group generalization of
     Mann–Whitney): are the value distributions of k groups shifted
@@ -1549,7 +1540,6 @@ def roc_auc(
     score_col: str,
     label_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact ROC AUC (with the standard tie treatment: ties count half)
     of a numeric score against a binary label — the rank statistic that
@@ -1597,7 +1587,6 @@ def score_decile_lift(
     score_col: str,
     label_expr: Column,
     n_tiles: int = 10,
-    release: bool = True,
 ) -> DataFrame:
     """Decile lift/gain table for a score against a binary outcome —
     the campaign-targeting diagnostic: sort by score, cut into ten
@@ -1963,9 +1952,7 @@ def levene_test(
 
 
 @lifecycle.operator
-def kendall_tau_b(
-    df: DataFrame, x_col: str, y_col: str, release: bool = True
-) -> DataFrame:
+def kendall_tau_b(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Exact Kendall τ-b (tie-adjusted) between two BOUNDED-DOMAIN
     numeric columns — the pair-concordance rank correlation; for
     near-all-distinct continuous columns use ``spearman_rho`` instead
@@ -2191,7 +2178,6 @@ def cvm_test_2samp(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact two-sample Cramér–von Mises statistic
     T = (n_a·n_b/N²)·Σ_z c_z·(F_A(z) − F_B(z))² — the whole-curve
@@ -2244,7 +2230,6 @@ def anderson_darling_2samp(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Two-sample Anderson–Darling statistic (Pettitt 1976 form)
     A² = (1/(n_a·n_b))·Σ_{z: B_z<N} c_z·(N·cum_a − n_a·B_z)²/(B_z·(N−B_z))
@@ -2295,7 +2280,6 @@ def cliffs_delta(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Cliff's delta ordinal effect size δ = (#{a>b} − #{a<b})/(n_a·n_b)
     — the assumption-free companion to the Mann–Whitney z: MW says
@@ -2343,7 +2327,7 @@ def cliffs_delta(
 
 @lifecycle.operator
 def wilcoxon_signed_rank(
-    df: DataFrame, diff_col: str, n_buckets: int = 64, release: bool = True
+    df: DataFrame, diff_col: str, n_buckets: int = 64
 ) -> DataFrame:
     """Exact Wilcoxon signed-rank test over a column of PAIRED
     differences (zeros dropped, the standard Wilcoxon convention) —
@@ -2957,7 +2941,6 @@ def ansari_bradley(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Ansari–Bradley rank test of equal DISPERSION between two samples
     with the same median — scores rank from BOTH ends
@@ -3058,7 +3041,6 @@ def pr_curve_points(
     label_expr: Column,
     n_points: int = 9,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Precision/recall/F1 at the score's decile thresholds — the
     threshold-sweep view that complements ``roc_auc``'s single number
@@ -3221,7 +3203,6 @@ def average_precision(
     score_col: str,
     label_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Average precision (the exact area under the PR curve's step
     interpolation) — the single-number ranking score that, unlike ROC
@@ -3328,9 +3309,7 @@ def g_test_contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
 
 
 @lifecycle.operator
-def ordinal_association(
-    df: DataFrame, x_col: str, y_col: str, release: bool = True
-) -> DataFrame:
+def ordinal_association(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Goodman–Kruskal gamma and both Somers' D directions for two
     ORDINAL columns — the tie-handling family around ``kendall_tau_b``
     (gamma ignores all ties; D_yx penalizes only y-ties: the right
@@ -3410,7 +3389,6 @@ def yuen_trimmed_t(
     group_expr: Column,
     trim: float = 0.2,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Yuen's trimmed-mean two-sample t test — the robust replacement
     for Welch when tails are heavy: compare 20%-trimmed means with
@@ -3520,7 +3498,6 @@ def kuiper_test_2samp(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact two-sample Kuiper statistic V = D⁺ + D⁻ (the supremum of
     the SIGNED ECDF gap plus the supremum of its negation) — KS's
@@ -3569,7 +3546,6 @@ def jonckheere_terpstra(
     value_col: str,
     ordered_groups: list,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Jonckheere–Terpstra test for an ORDERED alternative across k
     groups (are values stochastically increasing along the given group
@@ -3659,7 +3635,6 @@ def dunn_pairwise_z(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    release: bool = True,
 ) -> DataFrame:
     """Dunn's post-hoc pairwise z statistics after Kruskal–Wallis —
     WHICH groups differ, once the omnibus test fires. For every group
@@ -4550,7 +4525,6 @@ def ad_ksample(
     value_col: str,
     groups: list,
     n_buckets: int = 64,
-    release: bool = True,
     standardized: bool = False,
 ) -> DataFrame:
     """k-sample Anderson–Darling statistic (Scholz–Stephens 1987,
@@ -4941,7 +4915,6 @@ def wasserstein_1(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Exact 1-Wasserstein (earth mover's) distance between two
     samples: W₁ = ∫|F_A − F_B| dz = Σ_z |F_A(z) − F_B(z)|·Δz over the
@@ -5090,7 +5063,6 @@ def qq_fit(
     group_expr: Column,
     n_points: int = 9,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Robust Q-Q line between two samples: fit q_A = slope·q_B +
     intercept over the ``n_points`` inner quantile pairs — slope reads
@@ -5187,7 +5159,6 @@ def brunner_munzel(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Brunner–Munzel test of the stochastic-superiority hypothesis
     P(X_B > X_A) + ½P(=) = ½ — the modern replacement for
@@ -5266,7 +5237,6 @@ def theil_l_atkinson(
     df: DataFrame,
     key_col: str,
     value_col: str,
-    release: bool = True,
 ) -> DataFrame:
     """Theil L (mean log deviation) and the Atkinson(ε=1) inequality
     index of how a value concentrates across keys:
@@ -5316,7 +5286,6 @@ def hoeffding_d(
     x_col: str,
     y_col: str,
     max_cells: int = 10_000,
-    release: bool = True,
 ) -> DataFrame:
     """Hoeffding's D test of GENERAL dependence between two BOUNDED-
     domain columns — nonzero for ANY dependence (U-shapes, bands,
@@ -5594,7 +5563,6 @@ def cuzick_trend(
     value_col: str,
     groups: list,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Cuzick (1985) Wilcoxon-type test for trend across k ORDERED
     groups — "does the value tend to increase along the group order"
@@ -5744,7 +5712,6 @@ def youden_j(
     score_col: str,
     label_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Youden's J optimal operating point — the threshold that
     maximizes TPR − FPR for a numeric score against a binary label
@@ -5815,7 +5782,6 @@ def bws_test(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Baumgartner–Weiß–Schindler two-sample B statistic (1998) — the
     rank test whose variance-weighted squared rank deviations put
@@ -6020,7 +5986,6 @@ def mood_dispersion(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Mood's two-sample rank DISPERSION test — do the two groups have
     the same spread around a common center: scores
@@ -6275,7 +6240,6 @@ def van_der_waerden(
     value_col: str,
     groups: list,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Van der Waerden k-sample normal-scores test (Conover 1999
     §5.10) — Kruskal-Wallis power on heavy-tailed data AND near-ANOVA
@@ -6368,7 +6332,6 @@ def fligner_killeen(
     value_col: str,
     groups: list,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Fligner–Killeen scale test (the robust default variance-
     homogeneity screen — scipy's recommendation for non-normal data,
@@ -6528,7 +6491,6 @@ def cucconi_test(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Cucconi (1968) JOINT location-scale two-sample test — one rank
     statistic that reacts to a shift OR a spread change (Marozzi 2009
@@ -6619,7 +6581,6 @@ def lepage_test(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Lepage two-sample test of the joint location-OR-scale
     alternative: L = Z_W² + Z_AB², the squared standardized Wilcoxon
@@ -6881,7 +6842,6 @@ def siegel_tukey(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Siegel–Tukey (1960) rank test of equal DISPERSION: ranks are
     assigned ZIG-ZAG from the extremes of the pooled sorted sample
@@ -7003,7 +6963,6 @@ def conover_squared_ranks(
     value_col: str,
     group_expr: Column,
     n_buckets: int = 64,
-    release: bool = True,
 ) -> DataFrame:
     """Conover's squared-ranks test (Conover 1999 §5.3) of equal
     VARIANCE between two samples: rank the pooled absolute deviations

@@ -727,9 +727,7 @@ def ridge2_fit(
 
 
 @lifecycle.operator
-def boosted_stumps_2(
-    df: DataFrame, x_col: str, y_col: str, release: bool = True
-) -> DataFrame:
+def boosted_stumps_2(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Two rounds of gradient boosting with depth-1 regression trees
     (squared loss) over a BOUNDED feature domain — a real distributed
     training loop whose every step is exact and SQL-replayable: the

@@ -396,13 +396,12 @@ def winsorized_stats(
     )
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def robust_scale_stats(
     df: DataFrame,
     value_col: str,
     group_col: str,
     z_cut: float = 3.0,
-    release: bool = True,
 ) -> DataFrame:
     """Per-group MEDIAN/MAD robust-scaling statistics — the
     outlier-immune alternative to mean/stddev normalization (one wild
@@ -754,9 +753,7 @@ def mutual_information(
 
 
 @lifecycle.operator
-def cohens_kappa(
-    df: DataFrame, col_a: str, col_b: str, release: bool = True
-) -> DataFrame:
+def cohens_kappa(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Cohen's κ agreement between two categorical labelings of the same
     rows (Cohen 1960) — the inter-annotator / model-vs-heuristic
     agreement statistic a labeling pipeline reports before trusting
@@ -1351,9 +1348,7 @@ def cronbach_alpha(df: DataFrame, item_cols: list) -> DataFrame:
 
 
 @lifecycle.operator
-def mcc_multiclass(
-    df: DataFrame, true_col: str, pred_col: str, release: bool = True
-) -> DataFrame:
+def mcc_multiclass(df: DataFrame, true_col: str, pred_col: str) -> DataFrame:
     """Multiclass Matthews correlation coefficient (Gorodkin's R_K)
     from the true×pred contingency: MCC = (c·s − Σ_k t_k·p_k) /
     √((s² − Σp²)(s² − Σt²)) with c = correct, s = total, t_k/p_k the

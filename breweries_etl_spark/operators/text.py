@@ -348,10 +348,8 @@ def rolling_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return base.select("doc_id", h.alias("rolling_hash"))
 
 
-@lifecycle.operator
-def fingerprint(
-    df: DataFrame, text_col: str = "text", n: int = 5, release: bool = True
-) -> DataFrame:
+@lifecycle.operator(release=False)
+def fingerprint(df: DataFrame, text_col: str = "text", n: int = 5) -> DataFrame:
     """Document fingerprint, winnowing-style: the minimum MD5 over word
     n-gram shingles of the normalized text. Content-defined (robust to
     reordering of surrounding docs) and engine-portable (md5 is md5
@@ -363,8 +361,8 @@ def fingerprint(
     same 30× lesson as MinHash (operators/dedup.py). Short docs with no
     n-gram fall back to the whole-text md5 via the left join.
 
-    The persisted (md5, shingles) projection is corpus-scale; its
-    ``release`` contract is the one in ``functions/lifecycle.py``.
+    The persisted (md5, shingles) projection is corpus-scale, so it is
+    handed over with the result (``functions/lifecycle.py``).
     """
     from ..functions.partitioning import ensure_parallelism
 
@@ -481,12 +479,11 @@ def token_zipf_stats(
     )
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def bigram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
     alpha: float = 0.5,
-    release: bool = True,
 ) -> DataFrame:
     """CCNet-style LM quality signal: fit an add-alpha-smoothed bigram
     language model on the corpus itself, then score every document by
@@ -584,13 +581,12 @@ def bigram_lm_scores(
     return result
 
 
-@lifecycle.operator
+@lifecycle.operator(release=False)
 def perplexity_buckets(
     df: DataFrame,
     text_col: str = "text",
     lang_col: str = "lang",
     alpha: float = 0.5,
-    release: bool = True,
 ) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020 §4.3): rank
     documents by LM perplexity WITHIN each language and cut into
@@ -610,7 +606,7 @@ def perplexity_buckets(
     """
     from pyspark.sql import Window as W
 
-    scores = bigram_lm_scores(df, text_col=text_col, alpha=alpha, release=release)
+    scores = bigram_lm_scores(df, text_col=text_col, alpha=alpha)
     w = W.partitionBy(lang_col).orderBy(
         F.col("ppl").asc(), F.col("doc_id").asc()
     )
@@ -941,7 +937,6 @@ def keyness_llr_top_terms(
     text_col: str = "text",
     k: int = 10,
     min_count: int = 5,
-    release: bool = True,
 ) -> DataFrame:
     """Per-source keyword extraction by Dunning's log-likelihood ratio
     (the corpus-linguistics "keyness" G²): for each source, which terms

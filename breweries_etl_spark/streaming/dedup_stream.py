@@ -83,12 +83,10 @@ def neardup_admission_batch(
         batch_df.write.mode("overwrite").parquet(accepted_dir)
         return
     # the scope frees the persisted matches AND the shingle caches the
-    # release=False join merged into it
+    # hand-over join merged into it
     with lifecycle.scope():
         matches = lifecycle.persist(
-            prefix_jaccard_incremental(
-                base, batch_df, threshold=threshold, n=n, release=False
-            )
+            prefix_jaccard_incremental(base, batch_df, threshold=threshold, n=n)
         )
         flagged = matches.select(F.col("incoming_id").alias("doc_id")).distinct()
         batch_df.join(flagged, "doc_id", "left_anti").write.mode(

@@ -6,6 +6,7 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.session import get_spark
 
 
@@ -18,3 +19,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def unreleased():
+    """``unreleased(op)(...)`` runs a checkpoint-and-free operator as if it
+    were defined ``@lifecycle.operator(release=False)``: it returns the
+    lazy plan with its caches handed over, for plan-shape assertions.
+    Operators it calls keep their own mode."""
+    return lambda op: lifecycle.operator(op.__wrapped__, release=False)

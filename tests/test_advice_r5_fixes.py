@@ -6,7 +6,7 @@
 2. heavy_keys / salted_join hand the per-key-count persist over on the
    lifecycle handle of the returned frame so long-lived callers can
    free it deterministically.
-3. perplexity_buckets(release=False) carries the bigram-count cache on
+3. perplexity_buckets carries the bigram-count cache on
    the FINAL frame's handle (the r5 form stranded it on the dropped
    intermediate).
 """
@@ -68,7 +68,7 @@ def test_perplexity_buckets_propagates_bigram_cache(spark):
         [(i, "the quick brown fox jumps over the lazy dog", "en") for i in range(6)],
         schema="doc_id long, text string, lang string",
     )
-    out = perplexity_buckets(docs, release=False)
+    out = perplexity_buckets(docs)
     assert out.count() == 6
     (cache,) = lifecycle.handle(out).frames
     assert cache.storageLevel.useMemory

@@ -197,12 +197,15 @@ def test_conversion_latency_first_to_first_after(spark):
 
 
 def test_event_cooccurrence_lift_values(spark):
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.behavior import event_cooccurrence_lift
 
     # 10 users: all do A; users 0-4 also do B -> lift(A,B)=10*5/(10*5)=1.0
     rows = [(u, "A") for u in range(10)] + [(u, "B") for u in range(5)]
     df = spark.createDataFrame(rows, "user_id long, event_type string")
-    out = {(r["type_a"], r["type_b"]): r for r in event_cooccurrence_lift(df).collect()}
+    lift = event_cooccurrence_lift(df)
+    out = {(r["type_a"], r["type_b"]): r for r in lift.collect()}
+    lifecycle.release(lift)
     assert set(out) == {("A", "B")}
     r = out[("A", "B")]
     assert r["n_both"] == 5 and abs(float(r["lift"]) - 1.0) < 1e-9

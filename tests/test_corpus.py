@@ -196,6 +196,7 @@ def test_decontaminate_flags_leaked_train_doc(spark):
 def test_leakage_safe_split_keeps_neardups_together(spark, sf_dir):
     """Every near-dup cluster must land entirely on one side of the
     split (the leakage a plain per-doc hash split cannot prevent)."""
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.corpus import leakage_safe_split
     from breweries_etl_spark.operators.dedup import prefix_filtered_jaccard_pairs
 
@@ -203,7 +204,9 @@ def test_leakage_safe_split_keeps_neardups_together(spark, sf_dir):
     split = leakage_safe_split(docs)
     sides = {r["doc_id"]: r["split"] for r in split.collect()}
     clusters = {r["doc_id"]: r["cluster_id"] for r in split.collect()}
-    pairs = prefix_filtered_jaccard_pairs(docs, threshold=0.5, release=False).collect()
+    pairs_df = prefix_filtered_jaccard_pairs(docs, threshold=0.5)
+    pairs = pairs_df.collect()
+    lifecycle.release(pairs_df)
     assert pairs, "testdata should contain near-dup pairs"
     for r in pairs:
         assert sides[r["id_a"]] == sides[r["id_b"]], (r["id_a"], r["id_b"])
@@ -254,6 +257,7 @@ def test_paragraph_dedup_partitioning_invariant(spark):
 def test_source_overlap_matrix_counts_shared_shingles(spark):
     from pyspark.sql import Row
 
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.corpus import source_overlap_matrix
 
     shared = "alpha beta gamma"  # one shared trigram
@@ -264,7 +268,9 @@ def test_source_overlap_matrix_counts_shared_shingles(spark):
             Row(doc_id=3, text="totally different words here", source="c"),
         ]
     )
-    rows = {(r["source_a"], r["source_b"]): r for r in source_overlap_matrix(df).collect()}
+    overlap = source_overlap_matrix(df)
+    rows = {(r["source_a"], r["source_b"]): r for r in overlap.collect()}
+    lifecycle.release(overlap)
     assert ("a", "b") in rows
     ab = rows[("a", "b")]
     assert ab["n_shared"] == 1

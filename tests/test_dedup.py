@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.dedup import (
     dedup_exact,
     minhash_near_duplicates,
@@ -33,8 +34,9 @@ def test_dedup_exact_normalized(spark):
 
 def test_ngram_jaccard_finds_planted_pair(spark):
     df = spark.createDataFrame(DOCS)
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-             ngram_jaccard_pairs(df, threshold=0.5).collect()}
+    out = ngram_jaccard_pairs(df, threshold=0.5)
+    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+    lifecycle.release(out)
     assert pairs[(1, 2)] == 1.0  # identical after normalization
     assert (1, 3) in pairs  # high overlap
     assert all(4 not in p for p in pairs)
@@ -42,8 +44,12 @@ def test_ngram_jaccard_finds_planted_pair(spark):
 
 def test_minhash_catches_what_exact_catches(spark):
     df = spark.createDataFrame(DOCS)
-    exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
-    mh = {(r["id_a"], r["id_b"]) for r in minhash_near_duplicates(df, threshold=0.5).collect()}
+    exact_df = ngram_jaccard_pairs(df, threshold=0.5)
+    mh_df = minhash_near_duplicates(df, threshold=0.5)
+    exact = {(r["id_a"], r["id_b"]) for r in exact_df.collect()}
+    mh = {(r["id_a"], r["id_b"]) for r in mh_df.collect()}
+    lifecycle.release(exact_df)
+    lifecycle.release(mh_df)
     # identical pair must always collide in every band
     assert (1, 2) in mh
     # minhash output is a subset of the exact threshold-join
@@ -65,7 +71,9 @@ def test_simhash_identical_docs_zero_distance(spark):
     )
     sigs = {r["doc_id"]: r["simhash"] for r in simhash_signatures(df).collect()}
     assert sigs[1] == sigs[2]
-    pairs = simhash_near_duplicates(df).collect()
+    out = simhash_near_duplicates(df)
+    pairs = out.collect()
+    lifecycle.release(out)
     assert len(pairs) == 1 and pairs[0]["hamming"] == 0
 
 
@@ -74,6 +82,8 @@ def test_planted_neardups_in_testdata(spark, sf_dir):
     exact = ngram_jaccard_pairs(docs, threshold=0.5)
     mh = minhash_near_duplicates(docs, threshold=0.5)
     n_exact, n_mh = exact.count(), mh.count()
+    lifecycle.release(exact)
+    lifecycle.release(mh)
     assert n_exact > 0  # the generator plants near-duplicates
     # LSH with 8x4 bands at j>=0.5: collision prob per planted pair ~1;
     # allow a little slack but demand high recall
@@ -81,13 +91,15 @@ def test_planted_neardups_in_testdata(spark, sf_dir):
 
 
 def test_neardup_release_leaves_no_persisted_rdds(spark):
-    """The near-dup pipelines persist corpus-scale intermediates; with
-    release=True (the default) nothing may stay pinned after return."""
+    """The near-dup pipelines hand their corpus-scale intermediates over
+    with the result; once each result is released nothing may stay
+    pinned."""
     spark.catalog.clearCache()  # drop caches left by lazy inspection helpers
     df = spark.createDataFrame(DOCS)
-    minhash_near_duplicates(df).collect()
-    ngram_jaccard_pairs(df).collect()
-    simhash_near_duplicates(df).collect()
+    for op in (minhash_near_duplicates, ngram_jaccard_pairs, simhash_near_duplicates):
+        out = op(df)
+        out.collect()
+        lifecycle.release(out)
     persistent = spark.sparkContext._jsc.getPersistentRDDs()
     assert persistent.size() == 0, f"leaked {persistent.size()} persisted RDDs"
 
@@ -102,8 +114,11 @@ def test_ngram_df_cap_bounds_boilerplate_blowup(spark):
         for i in range(20)
     ]
     df = spark.createDataFrame(docs)
-    capped = ngram_jaccard_pairs(df, threshold=0.1, max_df=10).collect()
-    uncapped = ngram_jaccard_pairs(df, threshold=0.1, max_df=None).collect()
+    capped_df = ngram_jaccard_pairs(df, threshold=0.1, max_df=10)
+    uncapped_df = ngram_jaccard_pairs(df, threshold=0.1, max_df=None)
+    capped, uncapped = capped_df.collect(), uncapped_df.collect()
+    lifecycle.release(capped_df)
+    lifecycle.release(uncapped_df)
     # every shared shingle has df=20 > cap -> no candidates at all
     assert len(capped) == 0
     # ground truth without the cap: all 190 pairs share the boilerplate
@@ -120,10 +135,9 @@ def test_ngram_df_cap_preserves_rare_shingle_pairs(spark):
         Row(doc_id=101, text=f"rare payload sentence about spark engines {boiler}"),
     ]
     df = spark.createDataFrame(docs)
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(df, threshold=0.5, max_df=5).collect()
-    }
+    out = ngram_jaccard_pairs(df, threshold=0.5, max_df=5)
+    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    lifecycle.release(out)
     assert (100, 101) in pairs
 
 
@@ -141,10 +155,9 @@ def test_prefix_incremental_equals_ground_truth(spark, sf_dir):
     incoming = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1_000_000
     )
-    got = {
-        (r["incoming_id"], r["base_id"]): r["jaccard"]
-        for r in prefix_jaccard_incremental(base, incoming, threshold=0.5).collect()
-    }
+    out = prefix_jaccard_incremental(base, incoming, threshold=0.5)
+    got = {(r["incoming_id"], r["base_id"]): r["jaccard"] for r in out.collect()}
+    lifecycle.release(out)
 
     def shingles(text):
         norm = re.sub(r" +", " ", re.sub(r"[^a-z0-9]+", " ", (text or "").lower())).strip()

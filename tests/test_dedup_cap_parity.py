@@ -29,6 +29,7 @@ import pandas as pd
 import pytest
 
 from __spark_entry__ import _capped_collapse_cte
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
 
 BOILER = "the quick brown fox jumps"
@@ -113,21 +114,27 @@ UNION ALL SELECT id_a, id_b, containment_ab, containment_ba FROM within
 """
 
 
+def _released_rows(pairs):
+    rows = pairs.collect()
+    lifecycle.release(pairs)
+    return rows
+
+
 def test_jaccard_cap_binds_and_engine_equals_oracle(corpus):
     sdf, con = corpus
     cap, thr = 3, 0.2
 
     capped = {
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(
-            sdf, threshold=thr, n=3, max_df=cap, release=False
-        ).collect()
+        for r in _released_rows(
+            ngram_jaccard_pairs(sdf, threshold=thr, n=3, max_df=cap)
+        )
     }
     uncapped = {
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(
-            sdf, threshold=thr, n=3, max_df=None, release=False
-        ).collect()
+        for r in _released_rows(
+            ngram_jaccard_pairs(sdf, threshold=thr, n=3, max_df=None)
+        )
     }
     oracle = {tuple(t) for t in con.execute(_jaccard_oracle_sql(cap, thr)).fetchall()}
 
@@ -152,15 +159,15 @@ def test_containment_cap_binds_and_engine_equals_oracle(corpus):
 
     capped = {
         (r["id_a"], r["id_b"], r["containment_ab"], r["containment_ba"])
-        for r in containment_pairs(
-            sdf, threshold=thr, n=3, max_df=cap, release=False
-        ).collect()
+        for r in _released_rows(
+            containment_pairs(sdf, threshold=thr, n=3, max_df=cap)
+        )
     }
     uncapped = {
         (r["id_a"], r["id_b"], r["containment_ab"], r["containment_ba"])
-        for r in containment_pairs(
-            sdf, threshold=thr, n=3, max_df=None, release=False
-        ).collect()
+        for r in _released_rows(
+            containment_pairs(sdf, threshold=thr, n=3, max_df=None)
+        )
     }
     oracle = {
         tuple(t) for t in con.execute(_containment_oracle_sql(cap, thr)).fetchall()

@@ -4,6 +4,7 @@ nothing in one partition of a 100 TB run."""
 
 from __future__ import annotations
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.aggregate import gold_aggregations
 from breweries_etl_spark.operators.asof import asof_join_backward
 from breweries_etl_spark.operators.dedup import (
@@ -31,6 +32,13 @@ def test_silver_chain_on_empty(spark):
     assert "location" in out.columns  # schema still fully derived
 
 
+def _released_count(df) -> int:
+    """Count a hand-over operator's result, then free its caches."""
+    n = df.count()
+    lifecycle.release(df)
+    return n
+
+
 def test_gold_on_empty_silver(spark):
     df = spark.createDataFrame([], "brewery_type string, location string, state string, city string")
     gold = gold_aggregations(df)
@@ -41,8 +49,8 @@ def test_gold_on_empty_silver(spark):
 def test_dedup_on_empty_docs(spark):
     df = spark.createDataFrame([], DOCS_SCHEMA)
     assert dedup_exact(df).count() == 0
-    assert ngram_jaccard_pairs(df).count() == 0
-    assert minhash_near_duplicates(df).count() == 0
+    assert _released_count(ngram_jaccard_pairs(df)) == 0
+    assert _released_count(minhash_near_duplicates(df)) == 0
 
 
 def test_temporal_on_empty_events(spark):
@@ -77,7 +85,7 @@ def test_round4_operators_on_empty(spark):
     from breweries_etl_spark.operators.text import bigram_lm_scores
 
     docs = spark.createDataFrame([], DOCS_SCHEMA)
-    assert bigram_lm_scores(docs).count() == 0
+    assert _released_count(bigram_lm_scores(docs)) == 0
 
     emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert semantic_dedup(emb, leading_centroids(emb, 4), 0.9).count() == 0
@@ -127,7 +135,7 @@ def test_round3_continuation_ops_on_empty(spark):
     assert winnowing_fingerprints(docs).count() == 0
     assert collocation_pmi(docs).count() == 0
     assert paragraph_dedup(docs).count() == 0
-    assert source_overlap_matrix(docs).count() == 0
+    assert _released_count(source_overlap_matrix(docs)) == 0
     assert dedup_exact_keep_best(docs).count() == 0
     assert decayed_user_value(events).count() == 0
     assert top_event_paths(events).count() == 0
@@ -173,9 +181,9 @@ def test_round3_cont2_operators_on_empty(spark):
     assert bloom_semi_join(fact, empty_kv.select("k"), "k", "k").count() == 0
     assert cms_heavy_hitters(empty_kv, "k", threshold=1).count() == 0
     assert edit_distance_pairs(empty_docs).count() == 0
-    assert containment_pairs(empty_docs, release=False).count() == 0
+    assert _released_count(containment_pairs(empty_docs)) == 0
     assert winsorized_stats(empty_kv, "v", "g").count() == 0
-    assert robust_scale_stats(empty_kv, "v", "g").count() == 0
+    assert _released_count(robust_scale_stats(empty_kv, "v", "g")) == 0
     assert rolling_time_window(empty_events).count() == 0
     assert downsample_first_per_bucket(empty_events).count() == 0
     assert curriculum_buckets(empty_docs).count() == 0

@@ -50,8 +50,42 @@ def test_one_checkpoint_dir_bootstrap():
     assert hits == ["functions/lifecycle.py"], hits
 
 
+def test_cache_mode_is_fixed_where_each_operator_is_defined():
+    """No function takes a ``release`` parameter (only the decorator's own
+    keyword) and no caller passes ``release=`` (only to
+    ``lifecycle.operator``)."""
+    root = PKG.parent
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                if "release" in names and not (
+                    path.name == "lifecycle.py" and node.name == "operator"
+                ):
+                    offenders.append(f"{path.name}:{node.lineno} def {node.name}")
+    callers = [
+        *PKG.rglob("*.py"),
+        root / "__spark_entry__.py",
+        root / "bench.py",
+        *(root / "tools").glob("*.py"),
+    ]
+    for path in sorted(callers):
+        if path.name == "lifecycle.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            if ast.unparse(node.func) == "lifecycle.operator":
+                continue
+            if any(k.arg == "release" for k in node.keywords):
+                offenders.append(f"{path.name}:{node.lineno} release=")
+    assert not offenders, offenders
+
+
 # Queries that kept 1-3 persisted RDDs after running into the noop sink:
-# four on the library's default path, the rest built with release=False.
+# four on a checkpoint-and-free path, the rest on hand-over operators.
 LEAKERS = [
     "rbo_customers",
     "similarity_ivf_topk",
@@ -70,7 +104,7 @@ LEAKERS = [
     "robust_scale_orders",
     "event_cooccurrence",
     "frequent_brand_pairs",
-    # release=False pairs consumed by connected components inside a scope
+    # hand-over pairs consumed by connected components inside a scope
     "dedup_clusters",
     "dedup_cluster_stats",
 ]
@@ -117,14 +151,14 @@ def test_default_path_operators_pin_nothing_on_return(spark, sf_dir):
 
 
 def test_dedup_release_false_hands_over_every_cache(spark, sf_dir):
-    """ADVICE r13: rep_sh/members had no handle under release=False."""
+    """ADVICE r13: rep_sh/members had no handle when handed over."""
     from breweries_etl_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
     from breweries_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     for op in (ngram_jaccard_pairs, containment_pairs):
         spark.catalog.clearCache()
-        out = op(docs, release=False)
+        out = op(docs)
         # sh, rep_sh and members
         assert len(lifecycle.handle(out).frames) == 3
         out.write.format("noop").mode("overwrite").save()
@@ -134,7 +168,7 @@ def test_dedup_release_false_hands_over_every_cache(spark, sf_dir):
 
 
 def test_nested_release_keeps_enclosing_caches(spark):
-    """An inner release=True operator must not free an RDD that backs a
+    """An inner checkpoint-and-free operator must not free an RDD that backs a
     frame of the enclosing scope, even when its job filled it first."""
     from breweries_etl_spark.operators.hypotests import ks_test_2samp
 
@@ -181,7 +215,7 @@ def test_cached_plan_partitioning_pinned(spark):
     )
 
 
-def test_bucketed_persist_consumer_has_no_exchange_above_cache(spark):
+def test_bucketed_persist_consumer_has_no_exchange_above_cache(spark, unreleased):
     """VERDICT r13 #2: the (b)-keyed consumers of the prefix-count
     primitive's persisted bucket relation read it without a shuffle."""
     from breweries_etl_spark.operators.hypotests import ks_test_2samp
@@ -190,7 +224,7 @@ def test_bucketed_persist_consumer_has_no_exchange_above_cache(spark):
     df = spark.range(2000).select(
         (F.col("id") % 113).cast("double").alias("v"), (F.col("id") % 3 == 0).alias("g")
     )
-    out = ks_test_2samp(df, "v", F.col("g"), release=False)
+    out = unreleased(ks_test_2samp)(df, "v", F.col("g"))
     out.collect()
     plan = out._jdf.queryExecution().executedPlan()
     lines = plan.toString().splitlines()

@@ -298,7 +298,7 @@ def test_frequent_item_pairs_single_fact_scan(spark, sf_dir):
         F.broadcast(part.select("p_partkey", "p_brand")),
         F.col("l_partkey") == F.col("p_partkey"),
     )
-    df = frequent_item_pairs(baskets, "l_orderkey", "p_brand", release=False)
+    df = frequent_item_pairs(baskets, "l_orderkey", "p_brand")
     try:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -439,7 +439,7 @@ def test_ewma_single_exchange(spark, sf_dir):
     assert _exchanges(ewma_user_value(load_events(spark, sf_dir))) <= 1
 
 
-def test_cohens_kappa_single_fact_scan(spark, sf_dir):
+def test_cohens_kappa_single_fact_scan(spark, sf_dir, unreleased):
     """The persisted cell relation pins the corpus to ONE scan — the
     diagonal, both marginals, and pe all derive from the cache."""
     from pyspark.sql import functions as F
@@ -451,7 +451,7 @@ def test_cohens_kappa_single_fact_scan(spark, sf_dir):
     labeled = docs.select(
         F.col("lang"), text.lang_pred_expr(F.col("text")).alias("lang_pred")
     )
-    df = cohens_kappa(labeled, "lang", "lang_pred", release=False)
+    df = unreleased(cohens_kappa)(labeled, "lang", "lang_pred")
     try:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -464,7 +464,7 @@ def test_cohens_kappa_single_fact_scan(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_hypotests_no_datasized_global_sort(spark, sf_dir):
+def test_hypotests_no_datasized_global_sort(spark, sf_dir, unreleased):
     """KS/MWU/Gini compute exact rank statistics WITHOUT a global sort:
     the only SinglePartition exchanges are aggregate-buffer merges and
     the n_buckets-row bucket-subtotal relation. The distinct-value
@@ -475,8 +475,8 @@ def test_hypotests_no_datasized_global_sort(spark, sf_dir):
     from breweries_etl_spark.operators.hypotests import ks_test_2samp
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    df = ks_test_2samp(
-        li, "l_extendedprice", F.col("l_returnflag") == "R", release=False
+    df = unreleased(ks_test_2samp)(
+        li, "l_extendedprice", F.col("l_returnflag") == "R"
     )
     try:
         plan = _plan(df)
@@ -575,9 +575,7 @@ def test_frequent_pairs_no_item_support_broadcast(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        result = frequent_item_pairs(
-            orders, "o_custkey", "o_orderpriority", release=False
-        )
+        result = frequent_item_pairs(orders, "o_custkey", "o_orderpriority")
         plan = _plan(result)
         n_bcast = len(
             re.findall(r"(?<![A-Za-z])BroadcastExchange \(\d+\)", plan)
@@ -598,7 +596,7 @@ def test_frequent_pairs_no_item_support_broadcast(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_spearman_no_datasized_global_sort(spark, sf_dir):
+def test_spearman_no_datasized_global_sort(spark, sf_dir, unreleased):
     """Spearman's ranks come from the bucketed prefix-count primitive:
     no raw value column (v/x/y) may ride a SinglePartition exchange —
     the only unpartitioned shapes allowed are aggregate-buffer merges
@@ -606,7 +604,7 @@ def test_spearman_no_datasized_global_sort(spark, sf_dir):
     from breweries_etl_spark.operators.hypotests import spearman_rho
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    df = spearman_rho(li, "l_extendedprice", "l_quantity", release=False)
+    df = unreleased(spearman_rho)(li, "l_extendedprice", "l_quantity")
     try:
         plan = _plan(df)
         for m in re.finditer(
@@ -620,7 +618,7 @@ def test_spearman_no_datasized_global_sort(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_keyness_single_corpus_scan_no_vocab_broadcast(spark, sf_dir):
+def test_keyness_single_corpus_scan_no_vocab_broadcast(spark, sf_dir, unreleased):
     """keyness_llr_top_terms derives term totals, source totals, the
     grand total AND the scored relation from ONE persisted (source,
     term) count — the corpus must be tokenized once, not four times.
@@ -635,7 +633,7 @@ def test_keyness_single_corpus_scan_no_vocab_broadcast(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        df = keyness_llr_top_terms(docs, release=False)
+        df = unreleased(keyness_llr_top_terms)(docs)
         plan = _plan(df)
         assert plan.count("documents.parquet") <= 1, "corpus re-scan"
         assert "InMemoryTableScan" in plan
@@ -648,7 +646,7 @@ def test_keyness_single_corpus_scan_no_vocab_broadcast(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_roc_auc_no_datasized_global_sort(spark, sf_dir):
+def test_roc_auc_no_datasized_global_sort(spark, sf_dir, unreleased):
     """ROC AUC rides the bucketed prefix-count primitive: the score
     column must never pass through a SinglePartition exchange (only
     aggregate buffers and the bounded bucket-subtotal relation may)."""
@@ -659,9 +657,7 @@ def test_roc_auc_no_datasized_global_sort(spark, sf_dir):
     from breweries_etl_spark.operators.hypotests import roc_auc
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    df = roc_auc(
-        o, "o_totalprice", F.col("o_orderstatus") == "F", release=False
-    )
+    df = unreleased(roc_auc)(o, "o_totalprice", F.col("o_orderstatus") == "F")
     try:
         plan = _plan(df)
         for m in _re.finditer(
@@ -688,7 +684,7 @@ def test_cooks_topk_is_take_ordered_not_global_sort(spark, sf_dir):
     assert "Sort (" not in plan, f"global sort materialized:\n{plan}"
 
 
-def test_cvm_and_wilcoxon_no_datasized_single_partition(spark, sf_dir):
+def test_cvm_and_wilcoxon_no_datasized_single_partition(spark, sf_dir, unreleased):
     """The CvM statistic and the Wilcoxon rank fold both ride the
     bucketed prefix-count primitive: the raw value column must never
     enter a SinglePartition exchange (only bounded bucket subtotals
@@ -704,15 +700,14 @@ def test_cvm_and_wilcoxon_no_datasized_single_partition(spark, sf_dir):
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     frames = [
-        cvm_test_2samp(
-            li, "l_extendedprice", F.col("l_returnflag") == "R", release=False
+        unreleased(cvm_test_2samp)(
+            li, "l_extendedprice", F.col("l_returnflag") == "R"
         ),
-        wilcoxon_signed_rank(
+        unreleased(wilcoxon_signed_rank)(
             li.select(
                 (F.col("l_extendedprice") - F.col("l_quantity")).alias("d")
             ),
             "d",
-            release=False,
         ),
     ]
     try:
@@ -728,7 +723,7 @@ def test_cvm_and_wilcoxon_no_datasized_single_partition(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_modularity_no_node_map_broadcast(spark, sf_dir):
+def test_modularity_no_node_map_broadcast(spark, sf_dir, unreleased):
     """partition_modularity's node->community joins must stay shuffle
     joins: the community map is node-sized, so a static broadcast hint
     would OOM at graph scale. Only size-gated runtime promotion is
@@ -752,7 +747,7 @@ def test_modularity_no_node_map_broadcast(spark, sf_dir):
             (F.col("o_custkey") % 500).alias("node"),
             (F.col("o_custkey") % 7).cast("string").alias("comm"),
         ).distinct()
-        df = partition_modularity(edges, comm, release=False)
+        df = unreleased(partition_modularity)(edges, comm)
         plan = _plan(df)
         # only the two hinted one-row-ish folds (folded/n_nodes) may
         # broadcast under -1; the comm joins must not
@@ -769,7 +764,9 @@ def test_modularity_no_node_map_broadcast(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_dunn_and_adksample_no_datasized_single_partition(spark, sf_dir):
+def test_dunn_and_adksample_no_datasized_single_partition(
+    spark, sf_dir, unreleased
+):
     """The round-8 rank statistics must keep the prefix-count
     discipline: no raw fact value column may ride a SinglePartition
     exchange (the bounded bucket-subtotal relation is the only
@@ -783,10 +780,10 @@ def test_dunn_and_adksample_no_datasized_single_partition(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     try:
         for df in (
-            dunn_pairwise_z(li, "l_returnflag", "l_extendedprice",
-                            release=False),
-            ad_ksample(li, "l_returnflag", "l_extendedprice",
-                       ["A", "N", "R"], release=False),
+            unreleased(dunn_pairwise_z)(li, "l_returnflag", "l_extendedprice"),
+            unreleased(ad_ksample)(
+                li, "l_returnflag", "l_extendedprice", ["A", "N", "R"]
+            ),
         ):
             plan = _plan(df)
             for m in re.finditer(
@@ -833,7 +830,7 @@ def test_bnlj_build_sides_bounded_across_headline_plans(spark, sf_dir):
     assert not bad, f"fact-scale broadcast under a nested-loop join: {bad}"
 
 
-def test_qq_fit_single_prefix_relation(spark, sf_dir):
+def test_qq_fit_single_prefix_relation(spark, sf_dir, unreleased):
     """qq_fit reads BOTH groups' quantiles off one shared prefix
     relation — the plan must contain exactly one parquet lineitem
     read lineage (the persisted value-count cache)."""
@@ -841,8 +838,7 @@ def test_qq_fit_single_prefix_relation(spark, sf_dir):
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    df = qq_fit(li, "l_extendedprice", F.col("l_returnflag") == "R",
-                release=False)
+    df = unreleased(qq_fit)(li, "l_extendedprice", F.col("l_returnflag") == "R")
     try:
         plan = _plan(df)
         assert plan.count("lineitem.parquet") <= 1, plan

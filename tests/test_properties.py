@@ -101,16 +101,14 @@ def test_prefix_filter_equals_brute_force(spark, docs_words, threshold):
     empty docs, and ceil-boundary prefix lengths."""
     from pyspark.sql import Row
 
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.dedup import prefix_filtered_jaccard_pairs
 
     rows = [Row(doc_id=i, text=" ".join(w)) for i, w in enumerate(docs_words)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in prefix_filtered_jaccard_pairs(
-            df, threshold=threshold, release=False
-        ).collect()
-    }
+    pairs = prefix_filtered_jaccard_pairs(df, threshold=threshold)
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+    lifecycle.release(pairs)
 
     def shingles(words):
         return {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}

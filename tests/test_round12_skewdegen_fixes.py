@@ -67,15 +67,16 @@ def test_winsorized_all_null_group_counts_zero(spark):
 
 
 def test_robust_scale_all_null_group_counts_zero(spark):
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.profiling import robust_scale_stats
 
     df = spark.createDataFrame(
         [("g1", 1.0), ("g1", 2.0), ("g1", 50.0), ("gx", None)],
         "g string, v double",
     )
-    out = {
-        r["g"]: r for r in robust_scale_stats(df, "v", "g").collect()
-    }
+    stats = robust_scale_stats(df, "v", "g")
+    out = {r["g"]: r for r in stats.collect()}
+    lifecycle.release(stats)
     assert out["gx"]["mad"] is None
     assert out["gx"]["n_outliers"] == 0
 

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators import clustering, incremental, text
 from breweries_etl_spark.operators.profiling import mergeable_distinct_sketches
 from breweries_etl_spark.operators.skewjoin import heavy_keys, salted_join
@@ -21,7 +22,9 @@ def test_bigram_lm_matches_hand_computation(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=1, text="a b a b"), Row(doc_id=2, text="a b c")]
     )
-    out = {r["doc_id"]: r for r in text.bigram_lm_scores(docs).collect()}
+    scores = text.bigram_lm_scores(docs)
+    out = {r["doc_id"]: r for r in scores.collect()}
+    lifecycle.release(scores)
     # corpus bigrams: doc1 -> (a,b),(b,a),(a,b); doc2 -> (a,b),(b,c)
     # counts: c2(a,b)=3, c2(b,a)=1, c2(b,c)=1; c1(a)=3, c1(b)=2; V=3
     v, al = 3, 0.5
@@ -53,7 +56,9 @@ def test_bigram_lm_skips_short_and_null_docs(spark):
             Row(doc_id=3, text="two tokens"),
         ]
     )
-    rows = text.bigram_lm_scores(docs).collect()
+    scores = text.bigram_lm_scores(docs)
+    rows = scores.collect()
+    lifecycle.release(scores)
     assert {r["doc_id"] for r in rows} == {3}
 
 
@@ -307,7 +312,9 @@ def test_vacuum_snapshots_keeps_committed(spark, tmp_path):
 
 def test_perplexity_buckets_tercile_sizes_and_order(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    out = text.perplexity_buckets(docs).collect()
+    buckets = text.perplexity_buckets(docs)
+    out = buckets.collect()
+    lifecycle.release(buckets)
     by_lang = {}
     for r in out:
         by_lang.setdefault(r["lang"], []).append(r)

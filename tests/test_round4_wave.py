@@ -454,13 +454,16 @@ def test_shipping_sla_report_exact_days(spark):
 
 
 def test_frequent_item_pairs_support_and_lift(spark):
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.aggregate import frequent_item_pairs
 
     # 4 baskets: {x,y} {x,y} {x} {y,z} -> (x,y): n_both=2, support=.5,
     # lift = .5/(.75*.75); (y,z) below min_count=2
     rows = [(1, "x"), (1, "y"), (2, "x"), (2, "y"), (3, "x"), (4, "y"), (4, "z")]
     df = spark.createDataFrame([Row(b=b, i=i) for b, i in rows])
-    out = frequent_item_pairs(df, "b", "i", min_count=2).collect()
+    pairs = frequent_item_pairs(df, "b", "i", min_count=2)
+    out = pairs.collect()
+    lifecycle.release(pairs)
     assert len(out) == 1
     r = out[0]
     assert (r["item_a"], r["item_b"], r["n_both"]) == ("x", "y", 2)

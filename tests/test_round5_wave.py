@@ -78,6 +78,7 @@ def test_frequent_item_pairs_basket_cap(spark):
     import duckdb
     import pandas as pd
 
+    from breweries_etl_spark.functions import lifecycle
     from breweries_etl_spark.operators.aggregate import frequent_item_pairs
 
     rows = []
@@ -89,14 +90,18 @@ def test_frequent_item_pairs_basket_cap(spark):
             rows.append((b, it))
     df = spark.createDataFrame(rows, schema="b long, i string")
 
+    capped_df = frequent_item_pairs(df, "b", "i", max_basket_size=4)
+    uncapped_df = frequent_item_pairs(df, "b", "i", max_basket_size=None)
     capped = {
         (r["item_a"], r["item_b"], r["n_both"], r["support"], r["lift"])
-        for r in frequent_item_pairs(df, "b", "i", max_basket_size=4).collect()
+        for r in capped_df.collect()
     }
     uncapped = {
         (r["item_a"], r["item_b"], r["n_both"], r["support"], r["lift"])
-        for r in frequent_item_pairs(df, "b", "i", max_basket_size=None).collect()
+        for r in uncapped_df.collect()
     }
+    lifecycle.release(capped_df)
+    lifecycle.release(uncapped_df)
     assert capped != uncapped  # the cap binds on this fixture
     # capped: only pairs from baskets 2,3 — n_both=2 (basket 1 dropped
     # from pair generation), but supports still count basket 1: x/y/z
@@ -324,39 +329,32 @@ def test_ewma_single_event_is_identity(spark):
 def test_cohens_kappa_perfect_and_independent(spark):
     from breweries_etl_spark.operators.profiling import cohens_kappa
 
-    try:
-        perfect = spark.createDataFrame(
-            [("a", "a"), ("b", "b"), ("c", "c"), ("a", "a")],
-            schema="x string, y string",
-        )
-        r = cohens_kappa(perfect, "x", "y", release=False).collect()[0]
-        assert r["po"] == 1.0 and abs(r["kappa"] - 1.0) < 1e-9
+    perfect = spark.createDataFrame(
+        [("a", "a"), ("b", "b"), ("c", "c"), ("a", "a")],
+        schema="x string, y string",
+    )
+    r = cohens_kappa(perfect, "x", "y").collect()[0]
+    assert r["po"] == 1.0 and abs(r["kappa"] - 1.0) < 1e-9
 
-        # balanced independent 2x2: po == pe == 0.5 -> kappa 0
-        indep = spark.createDataFrame(
-            [("a", "a"), ("a", "b"), ("b", "a"), ("b", "b")],
-            schema="x string, y string",
-        )
-        r = cohens_kappa(indep, "x", "y", release=False).collect()[0]
-        assert r["po"] == 0.5 and r["pe"] == 0.5
-        assert abs(r["kappa"]) < 1e-9
-    finally:
-        # release=False intentionally leaves the cells cache alive
-        spark.catalog.clearCache()
+    # balanced independent 2x2: po == pe == 0.5 -> kappa 0
+    indep = spark.createDataFrame(
+        [("a", "a"), ("a", "b"), ("b", "a"), ("b", "b")],
+        schema="x string, y string",
+    )
+    r = cohens_kappa(indep, "x", "y").collect()[0]
+    assert r["po"] == 0.5 and r["pe"] == 0.5
+    assert abs(r["kappa"]) < 1e-9
 
 
 def test_cohens_kappa_excludes_nulls(spark):
     from breweries_etl_spark.operators.profiling import cohens_kappa
 
-    try:
-        df = spark.createDataFrame(
-            [("a", "a"), (None, "b"), ("b", None), ("b", "b")],
-            schema="x string, y string",
-        )
-        r = cohens_kappa(df, "x", "y", release=False).collect()[0]
-        assert r["n_rows"] == 2 and r["n_agree"] == 2
-    finally:
-        spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [("a", "a"), (None, "b"), ("b", None), ("b", "b")],
+        schema="x string, y string",
+    )
+    r = cohens_kappa(df, "x", "y").collect()[0]
+    assert r["n_rows"] == 2 and r["n_agree"] == 2
 
 
 def test_calibration_bins_invariants(spark, sf_dir):

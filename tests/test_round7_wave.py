@@ -100,7 +100,7 @@ def test_ansari_bradley_known_scores(spark):
         [("A", 1.0), ("A", 9.0), ("B", 4.0), ("B", 5.0), ("B", 6.0)],
         "g string, v double",
     )
-    r = ansari_bradley(df, "v", F.col("g") == "A", release=False).collect()[0]
+    r = ansari_bradley(df, "v", F.col("g") == "A").collect()[0]
     assert r["n_a"] == 2 and r["n_b"] == 3
     assert float(r["ab_stat"]) == pytest.approx(2.0)
 
@@ -115,7 +115,7 @@ def test_ansari_bradley_ties_average_scores(spark):
         [("A", 2.0), ("B", 1.0), ("B", 2.0), ("B", 3.0)],
         "g string, v double",
     )
-    r = ansari_bradley(df, "v", F.col("g") == "A", release=False).collect()[0]
+    r = ansari_bradley(df, "v", F.col("g") == "A").collect()[0]
     assert float(r["ab_stat"]) == pytest.approx(2.0)
 
 
@@ -127,7 +127,7 @@ def test_pr_curve_monotone_recall(spark):
     rows = [(float(i), i >= 60) for i in range(100)]
     df = spark.createDataFrame(rows, "score double, pos boolean")
     out = (
-        pr_curve_points(df, "score", F.col("pos"), release=False)
+        pr_curve_points(df, "score", F.col("pos"))
         .orderBy("decile")
         .collect()
     )
@@ -372,13 +372,13 @@ def test_average_precision_perfect_ranking(spark):
 
     rows = [(float(i), i >= 50) for i in range(100)]
     df = spark.createDataFrame(rows, "score double, pos boolean")
-    r = average_precision(df, "score", F.col("pos"), release=False).collect()[0]
+    r = average_precision(df, "score", F.col("pos")).collect()[0]
     assert r["n_pos"] == 50 and r["n_neg"] == 50
     assert r["average_precision"] == pytest.approx(1.0)
     rev = spark.createDataFrame(
         [(float(i), i < 50) for i in range(100)], "score double, pos boolean"
     )
-    r2 = average_precision(rev, "score", F.col("pos"), release=False).collect()[0]
+    r2 = average_precision(rev, "score", F.col("pos")).collect()[0]
     assert r2["average_precision"] < 0.5
 
 
@@ -390,7 +390,7 @@ def test_average_precision_tie_atomic(spark):
         [(1.0, True), (1.0, False), (1.0, True), (1.0, False)],
         "score double, pos boolean",
     )
-    r = average_precision(df, "score", F.col("pos"), release=False).collect()[0]
+    r = average_precision(df, "score", F.col("pos")).collect()[0]
     assert r["average_precision"] == pytest.approx(0.5)
 
 
@@ -498,7 +498,7 @@ def test_ordinal_association_known_values(spark):
     df = spark.createDataFrame(
         [(1, 1), (2, 2), (3, 3), (4, 4)], "x int, y int"
     )
-    r = ordinal_association(df, "x", "y", release=False).collect()[0]
+    r = ordinal_association(df, "x", "y").collect()[0]
     assert r["gamma"] == pytest.approx(1.0)
     assert r["somers_dyx"] == pytest.approx(1.0)
     assert r["somers_dxy"] == pytest.approx(1.0)
@@ -506,7 +506,7 @@ def test_ordinal_association_known_values(spark):
     df2 = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 2), (4, 2)], "x int, y int"
     )
-    r2 = ordinal_association(df2, "x", "y", release=False).collect()[0]
+    r2 = ordinal_association(df2, "x", "y").collect()[0]
     assert r2["gamma"] == pytest.approx(1.0)  # ignores ties entirely
     # D_xy (x predicted from y): penalizes x-ties -> none, so n0 den:
     # 2*(4-0)/(4*3 - 0) = 8/12
@@ -524,9 +524,7 @@ def test_yuen_trimmed_t_outlier_robust(spark):
     df = spark.createDataFrame(
         [("a", v) for v in a] + [("b", v) for v in b], "g string, v double"
     )
-    r = yuen_trimmed_t(
-        df, "v", F.col("g") == "a", release=False
-    ).collect()[0]
+    r = yuen_trimmed_t(df, "v", F.col("g") == "a").collect()[0]
     # g = floor(10*0.2) = 2, h = 6: trimmed mean of a = mean(12..17)
     assert r["h_a"] == 6 and r["h_b"] == 6
     assert r["tmean_a"] == pytest.approx(14.5)
@@ -545,9 +543,7 @@ def test_yuen_matches_untrimmed_welch_at_zero_trim(spark):
         ("b", float(v)) for v in [1, 3, 5, 7]
     ]
     df = spark.createDataFrame(rows, "g string, v double")
-    y = yuen_trimmed_t(
-        df, "v", F.col("g") == "a", trim=0.0, release=False
-    ).collect()[0]
+    y = yuen_trimmed_t(df, "v", F.col("g") == "a", trim=0.0).collect()[0]
     w = welch_t_test(df, "v", F.col("g") == "a").collect()[0]
     assert y["tmean_a"] == pytest.approx(w["mean_a"])
     assert y["yuen_t"] == pytest.approx(w["t_stat"], abs=1e-4)
@@ -617,8 +613,8 @@ def test_kuiper_vs_ks_relation(spark):
         ("b", float(v) + 5.0) for v in range(10)
     ]
     df = spark.createDataFrame(rows, "g string, v double")
-    k = kuiper_test_2samp(df, "v", F.col("g") == "a", release=False).collect()[0]
-    ks = ks_test_2samp(df, "v", F.col("g") == "a", release=False).collect()[0]
+    k = kuiper_test_2samp(df, "v", F.col("g") == "a").collect()[0]
+    ks = ks_test_2samp(df, "v", F.col("g") == "a").collect()[0]
     assert k["d_minus"] == pytest.approx(0.0)
     assert k["d_plus"] == pytest.approx(0.5)  # shift of 5 over 10 values
     assert k["kuiper_v"] == pytest.approx(ks["ks_stat"])
@@ -627,7 +623,7 @@ def test_kuiper_vs_ks_relation(spark):
         ("b", float(v) * 3) for v in range(10)
     ]
     df2 = spark.createDataFrame(rows2, "g string, v double")
-    k2 = kuiper_test_2samp(df2, "v", F.col("g") == "a", release=False).collect()[0]
-    ks2 = ks_test_2samp(df2, "v", F.col("g") == "a", release=False).collect()[0]
+    k2 = kuiper_test_2samp(df2, "v", F.col("g") == "a").collect()[0]
+    ks2 = ks_test_2samp(df2, "v", F.col("g") == "a").collect()[0]
     assert k2["d_plus"] > 0 and k2["d_minus"] > 0
     assert k2["kuiper_v"] > ks2["ks_stat"]

@@ -568,8 +568,8 @@ def test_ranking_stability_reversed_is_minus_one(spark):
     assert same["kendall_tau"] == 1.0
 
 
-def test_dunn_release_false_hands_caches_to_caller(spark):
-    """ADVICE r10 (low): with release=False the persisted internals
+def test_dunn_release_false_hands_caches_to_caller(spark, unreleased):
+    """ADVICE r10 (low): handed over, the persisted internals
     must be handed over on the result's lifecycle handle so the caller
     can free them — previously per_g leaked for the session lifetime.
     r13: the prefix-count primitive now persists the bucketed relation
@@ -583,7 +583,7 @@ def test_dunn_release_false_hands_caches_to_caller(spark):
         + [("b", float(i) + 5.0) for i in range(10)],
         "g string, v double",
     )
-    res = dunn_pairwise_z(df, "g", "v", release=False)
+    res = unreleased(dunn_pairwise_z)(df, "g", "v")
     handle = lifecycle.handle(res)
     caches = handle.frames if handle is not None else None
     assert caches is not None and len(caches) == 3

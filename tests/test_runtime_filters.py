@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.bloomjoin import (
     bloom_prefilter,
     bloom_semi_join,
@@ -171,7 +172,9 @@ def test_containment_catches_subset_doc(spark):
         [(1, big), (2, sub), (3, "totally different words here entirely")],
         "doc_id long, text string",
     )
-    rows = containment_pairs(docs, threshold=0.9, release=False).collect()
+    pairs = containment_pairs(docs, threshold=0.9)
+    rows = pairs.collect()
+    lifecycle.release(pairs)
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
     r = rows[0]
     # every shingle of the subset doc appears in the big doc
@@ -192,8 +195,11 @@ def test_containment_vs_jaccard_asymmetry(spark):
     docs = spark.createDataFrame(
         [(1, big), (2, sub)], "doc_id long, text string"
     )
-    cont = containment_pairs(docs, threshold=0.9, release=False).collect()
-    jac = ngram_jaccard_pairs(docs, threshold=0.5, release=False).collect()
+    cont_df = containment_pairs(docs, threshold=0.9)
+    jac_df = ngram_jaccard_pairs(docs, threshold=0.5)
+    cont, jac = cont_df.collect(), jac_df.collect()
+    lifecycle.release(cont_df)
+    lifecycle.release(jac_df)
     assert len(cont) == 1 and len(jac) == 0
 
 
@@ -205,7 +211,9 @@ def test_robust_scale_stats_median_mad(spark):
 
     vals = [10.0] * 5 + [12.0] * 5 + [1000.0]  # one wild outlier
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v double")
-    row = robust_scale_stats(df, "v", "g", z_cut=3.0).collect()[0]
+    stats = robust_scale_stats(df, "v", "g", z_cut=3.0)
+    row = stats.collect()[0]
+    lifecycle.release(stats)
     # percentile_disc(0.5) picks the 6th of 11 sorted values
     assert float(row["med"]) == 12.0
     # deviations sorted: 0 x5, 2 x5, 988 -> disc median = 6th = 2
@@ -219,7 +227,9 @@ def test_robust_scale_flags_outlier_when_mad_positive(spark):
 
     vals = [float(v) for v in range(1, 12)] + [500.0]
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v double")
-    row = robust_scale_stats(df, "v", "g", z_cut=3.0).collect()[0]
+    stats = robust_scale_stats(df, "v", "g", z_cut=3.0)
+    row = stats.collect()[0]
+    lifecycle.release(stats)
     med, mad = float(row["med"]), float(row["mad"])
     expected = sum(1 for v in vals if abs(v - med) > 3.0 * mad)
     assert row["n_outliers"] == expected and row["n_outliers"] >= 1

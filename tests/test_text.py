@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.text import (
     fingerprint,
     lang_id,
@@ -98,7 +99,9 @@ def test_fingerprint_stable_and_content_defined(spark):
             Row(doc_id=3, text="totally different words here now ok"),
         ]
     )
-    rows = {r["doc_id"]: r for r in fingerprint(df).collect()}
+    fp = fingerprint(df)
+    rows = {r["doc_id"]: r for r in fp.collect()}
+    lifecycle.release(fp)
     assert rows[1]["fingerprint"] == rows[2]["fingerprint"]
     assert rows[1]["content_md5"] == rows[2]["content_md5"]
     assert rows[1]["fingerprint"] != rows[3]["fingerprint"]
@@ -148,8 +151,9 @@ def test_token_zipf_stats_matches_numpy(spark):
 
 
 def test_fingerprint_release_leaves_no_persisted_rdds(spark):
-    """fingerprint's corpus-scale (md5, shingles) cache must be released
-    with the library default, same contract as the near-dup pipelines."""
+    """fingerprint hands its corpus-scale (md5, shingles) cache over with
+    the result, same contract as the near-dup pipelines; once the result
+    is released nothing may stay pinned."""
     from breweries_etl_spark.operators.text import fingerprint
 
     spark.catalog.clearCache()
@@ -158,7 +162,9 @@ def test_fingerprint_release_leaves_no_persisted_rdds(spark):
          (2, "one two three four five six seven eight")],
         "doc_id long, text string",
     )
-    fingerprint(df).collect()
+    fp = fingerprint(df)
+    fp.collect()
+    lifecycle.release(fp)
     persistent = spark.sparkContext._jsc.getPersistentRDDs()
     assert persistent.size() == 0, f"leaked {persistent.size()} persisted RDDs"
 

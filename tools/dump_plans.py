@@ -6,14 +6,17 @@ Usage: python tools/dump_plans.py [sf_dir]
        python tools/dump_plans.py --unreleased out_dir suffix q1 [q2 ...]
 
 ``--unreleased`` writes out_dir/<q>_<suffix>.txt for the named queries
-with the lifecycle release point identity-patched INSIDE THIS TOOL
-ONLY: the release checkpoint would otherwise mask the plan as a scan of
-the checkpointed result. The SF directory comes from SPARK_GRAFT_SF_DIR.
+with every checkpoint-and-free operator re-wrapped, INSIDE THIS TOOL
+ONLY, to hand its caches over the way a ``release=False`` operator does:
+the release checkpoint would otherwise mask the plan as a scan of the
+checkpointed result. The SF directory comes from SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 import re
 import sys
 
@@ -212,9 +215,22 @@ def formatted_plan(df) -> str:
 
 
 def dump_unreleased(out_dir: str, suffix: str, names: list[str]) -> None:
+    import breweries_etl_spark
     from breweries_etl_spark.functions import lifecycle
 
-    lifecycle._release = lambda result, scope: result
+    # every module up front: queries import some operators at call time
+    mods = [entrymod] + [
+        importlib.import_module(m.name)
+        for m in pkgutil.walk_packages(
+            breweries_etl_spark.__path__, "breweries_etl_spark."
+        )
+    ]
+    # every @lifecycle.operator wrapper shares one code object
+    wrapper = lifecycle.operator(lambda: None).__code__
+    for mod in mods:
+        for name, fn in list(vars(mod).items()):
+            if getattr(fn, "__code__", None) is wrapper:
+                setattr(mod, name, lifecycle.operator(fn.__wrapped__, release=False))
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     spark = get_spark("dump_plan")
     qs = entrymod.queries()
