@@ -13,6 +13,7 @@ bit-identical; per-row derived floats are rounded to 6 dp on both sides.
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 
@@ -10677,470 +10678,22 @@ FROM m
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _wrap(fn) for name, fn in _query_table().items()}
-
-
-def _query_table() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # reference parity (SURVEY.md §2)
-        "gold_by_type_location": q_gold_by_type_location,
-        "gold_by_location": q_gold_by_location,
-        "silver_transform": q_silver_transform,
-        "brewery_type_recode": q_brewery_type_recode,
-        "quarantine_valid": q_quarantine_valid,
-        "quarantine_rejected": q_quarantine_rejected,
-        "null_counts": q_null_counts,
-        "count_distinct_location": q_count_distinct_location,
-        "duplicate_key_count": q_duplicate_key_count,
-        "value_counts_events": q_value_counts_events,
-        "row_count_lineitem": q_row_count_lineitem,
-        "union_fanin": q_union_fanin,
-        "sample_top3": q_sample_top3,
-        # relational analytics
-        "tpch_q1": analytics.tpch_q1,
-        "tpch_q3": analytics.tpch_q3,
-        "tpch_q5": analytics.tpch_q5,
-        "tpch_q6": analytics.tpch_q6,
-        "topk_orders_per_customer": analytics.topk_orders_per_customer,
-        "rollup_orders": analytics.rollup_orders,
-        "semi_join_customers": analytics.customers_with_big_orders,
-        "anti_join_customers": analytics.customers_without_recent_orders,
-        "full_outer_nation_counts": analytics.nation_customer_supplier_counts,
-        "tpch_q7_nation_volume": analytics.tpch_q7_nation_volume,
-        "hourly_heavy_hitters": analytics.hourly_heavy_hitters,
-        # batch-3 relational analytics
-        "tpch_q10": analytics.tpch_q10,
-        "tpch_q14_promo": analytics.tpch_q14_promo,
-        "tpch_q18_large_orders": analytics.tpch_q18_large_orders,
-        "tpch_q19_brand_quantity": analytics.tpch_q19_brand_quantity,
-        "tpch_q13_order_distribution": analytics.tpch_q13_order_distribution,
-        "tpch_q15_top_supplier": analytics.tpch_q15_top_supplier,
-        "tpch_q17_small_quantity": analytics.tpch_q17_small_quantity,
-        # TPC-H completion set (round 2; partsupp-free adaptations)
-        "tpch_q2_best_supplier": analytics.tpch_q2_best_supplier,
-        "tpch_q4_priority": analytics.tpch_q4_priority,
-        "tpch_q8_market_share": analytics.tpch_q8_market_share,
-        "tpch_q9_nation_profit": analytics.tpch_q9_nation_profit,
-        "tpch_q11_important_stock": analytics.tpch_q11_important_stock,
-        "tpch_q12_late_priority": analytics.tpch_q12_late_priority,
-        "tpch_q16_supplier_count": analytics.tpch_q16_supplier_count,
-        "tpch_q20_part_shippers": analytics.tpch_q20_part_shippers,
-        "tpch_q21_waiting_supplier": analytics.tpch_q21_waiting_supplier,
-        "tpch_q22_dormant_customers": analytics.tpch_q22_dormant_customers,
-        "cube_orders": analytics.cube_orders,
-        "pivot_events": analytics.pivot_events,
-        "price_quantiles": analytics.price_quantiles,
-        "running_aggregates": analytics.running_aggregates,
-        "customers_above_nation_avg": analytics.customers_above_nation_avg,
-        "asof_purchase_view": q_asof_purchase_view,
-        "similarity_topk_pandas": q_similarity_topk_pandas,
-        "pipeline_e2e": q_pipeline_e2e,
-        "profile_orders": q_profile_orders,
-        "dedup_incremental": q_dedup_incremental,
-        "text_redact_pii": q_text_redact_pii,
-        "json_extract_stats": q_json_extract_stats,
-        "variant_props_stats": q_variant_props_stats,
-        "set_intersect": q_set_intersect,
-        "set_except": q_set_except,
-        "explode_shingle_vocab": q_explode_shingle_vocab,
-        "string_functions": q_string_functions,
-        "approx_distinct_users": q_approx_distinct_users,  # rows-only (exact twin below)
-        "distinct_users_exact": q_distinct_users_exact,
-        "merge_upsert": q_merge_upsert,
-        "salted_value_counts": q_salted_value_counts,
-        "custom_datasource": q_custom_datasource,
-        "stateful_user_profiles": q_stateful_user_profiles,
-        # temporal / streaming
-        "events_tumbling": q_events_tumbling,
-        "events_sliding": q_events_sliding,
-        "events_sessionize": q_events_sessionize,
-        "events_session_window": q_events_session_window,
-        "streaming_tumbling": q_streaming_tumbling,
-        "streaming_sliding": q_streaming_sliding,
-        "streaming_session_window": q_streaming_session_window,
-        # text analysis
-        "text_stats": q_text_stats,
-        "text_quality": q_text_quality,
-        "text_lang_id": q_text_lang_id,
-        "text_fingerprint": q_text_fingerprint,
-        "text_token_counts": q_text_token_counts,
-        "text_rolling_hash": q_text_rolling_hash,
-        "top_terms_per_source": q_top_terms_per_source,
-        "window_function_suite": q_window_function_suite,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "hash_sample_documents": q_hash_sample_documents,
-        "train_test_counts": q_train_test_counts,
-        "unpivot_order_metrics": q_unpivot_order_metrics,
-        "order_value_deciles": q_order_value_deciles,
-        "price_quantity_corr": q_price_quantity_corr,
-        "hourly_unique_users": q_hourly_unique_users,
-        "multimodal_frame_sample": q_multimodal_frame_sample,
-        "similarity_ivf_topk": q_similarity_ivf_topk,  # rows-only
-        # dedup
-        "dedup_exact": q_dedup_exact,
-        "training_data_prep": q_training_data_prep,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_cluster_stats": q_dedup_cluster_stats,
-        "graph_bfs_levels": q_graph_bfs_levels,
-        "graph_triangle_stats": q_graph_triangle_stats,
-        "graph_pagerank_top": q_graph_pagerank_top,
-        "contamination_check": q_contamination_check,
-        "decontaminate_train": q_decontaminate_train,
-        "leakage_safe_split": q_leakage_safe_split,
-        "scd2_user_state": q_scd2_user_state,
-        "interval_coverage": q_interval_coverage,
-        "event_transitions": q_event_transitions,
-        "streaming_latest_state": q_streaming_latest_state,
-        "pack_sequences": q_pack_sequences,
-        "quantize_embeddings": q_quantize_embeddings,
-        "order_price_outliers": q_order_price_outliers,
-        "entity_resolution": q_entity_resolution,
-        "feature_hash_counts": q_feature_hash_counts,
-        "streaming_click_attribution": q_streaming_click_attribution,
-        # range joins (bin-bucketed, no equi-key)
-        "range_join_error_window": q_range_join_error_window,
-        "range_join_session_overlap": q_range_join_session_overlap,
-        # behavioral analytics
-        "funnel_conversion": q_funnel_conversion,
-        "retention_cohorts": q_retention_cohorts,
-        "user_value_trend": q_user_value_trend,
-        "user_value_trend_pandas": q_user_value_trend_pandas,
-        "approx_order_percentiles": q_approx_order_percentiles,  # rows-only (exact twin below)
-        "order_percentiles_disc": q_order_percentiles_disc,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_prefix_jaccard": q_dedup_prefix_jaccard,
-        "dedup_incremental_jaccard": q_dedup_incremental_jaccard,
-        "dedup_minhash_pairs": q_dedup_minhash_pairs,  # rows-only
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        # similarity search
-        "embedding_neardup": q_embedding_neardup,
-        "similarity_topk": q_similarity_topk,
-        "similarity_lsh_topk": q_similarity_lsh_topk,
-        # multimodal
-        "multimodal_meta_stats": q_multimodal_meta_stats,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_decode_stats": q_multimodal_decode_stats,
-        "multimodal_resize_stats": q_multimodal_resize_stats,
-        # round-4 corpus/ops profiling wave
-        "doc_length_histogram": q_doc_length_histogram,
-        "char_class_profile": q_char_class_profile,
-        "seasonal_hour_profile": q_seasonal_hour_profile,
-        "rolling_count_anomaly": q_rolling_count_anomaly,
-        "session_bounce_rate": q_session_bounce_rate,
-        "mode_event_type": q_mode_event_type,
-        "weighted_median_price": q_weighted_median_price,
-        "benford_orders": q_benford_orders,
-        "fd_audit_orders": q_fd_audit_orders,
-        "label_centroid_similarity": q_label_centroid_similarity,
-        "ols_price_on_quantity": q_ols_price_on_quantity,
-        "skyline_price_quantity": q_skyline_price_quantity,
-        "time_weighted_value": q_time_weighted_value,
-        "user_activity_streaks": q_user_activity_streaks,
-        "pca_top_component": q_pca_top_component,
-        "reservoir_sample_docs": q_reservoir_sample_docs,
-        "cusum_changepoint_users": q_cusum_changepoint_users,
-        "abc_parts_revenue": q_abc_parts_revenue,
-        "incremental_join_maintenance": q_incremental_join_maintenance,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "hourly_coverage_gaps": q_hourly_coverage_gaps,
-        "loo_encoding_orders": q_loo_encoding_orders,
-        "streaming_dedup_counts": q_streaming_dedup_counts,
-        "lateness_profile": q_lateness_profile,
-        "wow_change": q_wow_change,
-        "shipping_sla_report": q_shipping_sla_report,
-        "numeric_corr_matrix": q_numeric_corr_matrix,
-        "cohort_ltv": q_cohort_ltv,
-        "frequent_brand_pairs": q_frequent_brand_pairs,
-        "price_percent_rank": q_price_percent_rank,
-        "user_feature_store": q_user_feature_store,
-        "psi_value_drift": q_psi_value_drift,
-        "decayed_type_popularity": q_decayed_type_popularity,
-        "mutual_information_orders": q_mutual_information_orders,
-        "chi2_day_drift": q_chi2_day_drift,
-        "price_histogram": q_price_histogram,
-        # corpus prep: stratified sampling / chunking
-        "stratified_sample_docs": q_stratified_sample_docs,
-        "chunk_documents": q_chunk_documents,
-        # SQL-surface breadth
-        "grouping_sets_orders": q_grouping_sets_orders,
-        "datetime_functions": q_datetime_functions,
-        "array_functions": q_array_functions,
-        "skew_profile_lineitem": q_skew_profile_lineitem,
-        # Gopher-style quality filtering
-        "text_repetition_stats": q_text_repetition_stats,
-        "token_zipf_stats": q_token_zipf_stats,
-        "gopher_quality_flags": q_gopher_quality_flags,
-        "classifier_quality_score": q_classifier_quality_score,
-        "corpus_dup_ngrams": q_corpus_dup_ngrams,
-        # embedding clustering / data mixing
-        "cluster_assign": q_cluster_assign,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "corpus_mix_weights": q_corpus_mix_weights,
-        # round 4: LM signal / incremental MV / semantic dedup / sketches
-        # / skew join / UDTF
-        "bigram_lm_scores": q_bigram_lm_scores,
-        "gold_incremental_merge": q_gold_incremental_merge,
-        "semantic_dedup": q_semantic_dedup,
-        "distinct_sketch_merge": q_distinct_sketch_merge,
-        "salted_skew_join": q_salted_skew_join,
-        "split_sentences_udtf": q_split_sentences_udtf,
-        "streaming_gold_merge": q_streaming_gold_merge,
-        "ccnet_perplexity_buckets": q_ccnet_perplexity_buckets,
-        "audio_frame_features": q_audio_frame_features,
-        "geo_mean_order_price": q_geo_mean_order_price,
-        # round 3 (cont.): weighted sampling / corpus diversity / decay
-        "weighted_sample_docs": q_weighted_sample_docs,
-        "ngram_diversity": q_ngram_diversity,
-        "decayed_user_value": q_decayed_user_value,
-        "paragraph_dedup": q_paragraph_dedup,
-        "top_event_paths": q_top_event_paths,
-        "rfm_segments": q_rfm_segments,
-        "temperature_mix_weights": q_temperature_mix_weights,
-        "winnowing_fingerprints": q_winnowing_fingerprints,
-        "collocation_pmi": q_collocation_pmi,
-        "dedup_exact_keep_best": q_dedup_exact_keep_best,
-        "source_overlap_matrix": q_source_overlap_matrix,
-        "events_sessionize_capped": q_events_sessionize_capped,
-        "logreg_train_weights": q_logreg_train_weights,
-        "kmeans_train_centroids": q_kmeans_train_centroids,
-        "naive_bayes_model": q_naive_bayes_model,
-        # round 3 (cont. 2): runtime filters / sketch-verified exact ops
-        "bloom_prefilter_join": q_bloom_prefilter_join,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "dedup_edit_distance": q_dedup_edit_distance,
-        "winsorized_price_stats": q_winsorized_price_stats,
-        "dedup_containment": q_dedup_containment,
-        "robust_scale_orders": q_robust_scale_orders,
-        "rolling_hour_user_value": q_rolling_hour_user_value,
-        "downsample_events": q_downsample_events,
-        "curriculum_stages": q_curriculum_stages,
-        "cdc_apply_customers": q_cdc_apply_customers,
-        "snapshot_diff_orders": q_snapshot_diff_orders,
-        "ab_test_value": q_ab_test_value,
-        "conversion_latency": q_conversion_latency,
-        "event_cooccurrence": q_event_cooccurrence,
-        "contract_check_orders": q_contract_check_orders,
-        "lang_distribution_shift": q_lang_distribution_shift,
-        "k_anonymity_customers": q_k_anonymity_customers,
-        "column_entropy_orders": q_column_entropy_orders,
-        "join_size_orders_lineitem": q_join_size_orders_lineitem,
-        "embedding_norm_profile": q_embedding_norm_profile,
-        "event_gap_stats": q_event_gap_stats,
-        "user_event_novelty": q_user_event_novelty,
-        # round 5: scale-safe twins of the global-sort window forms
-        "curriculum_stages_scalable": q_curriculum_stages_scalable,
-        "rfm_segments_scalable": q_rfm_segments_scalable,
-        # round 5: positional substring dedup, DSIR weights, image aHash
-        "duplicate_span_stats": q_duplicate_span_stats,
-        "dsir_importance_weights": q_dsir_importance_weights,
-        "image_ahash_pairs": q_image_ahash_pairs,
-        # round 5: model diagnostics / closed-form training
-        "score_calibration_bins": q_score_calibration_bins,
-        "decision_stump_price_split": q_decision_stump_price_split,
-        "ols2_price_qty_discount": q_ols2_price_qty_discount,
-        "ewma_user_value": q_ewma_user_value,
-        "cohens_kappa_lang": q_cohens_kappa_lang,
-        # round 5: sortless hypothesis tests / concentration
-        "ks_test_price_returnflag": q_ks_test_price_returnflag,
-        "mann_whitney_price_returnflag": q_mann_whitney_price_returnflag,
-        "gini_customer_revenue": q_gini_customer_revenue,
-        "lineitem_price_ecdf": q_lineitem_price_ecdf,
-        "conversion_ab_ztest": q_conversion_ab_ztest,
-        "kaplan_meier_retention": q_kaplan_meier_retention,
-        "theil_customer_revenue": q_theil_customer_revenue,
-        "lorenz_customer_revenue": q_lorenz_customer_revenue,
-        "quantile_normalize_price": q_quantile_normalize_price,
-        "spearman_price_qty": q_spearman_price_qty,
-        "kruskal_wallis_price_flag": q_kruskal_wallis_price_flag,
-        "anova_f_price_flag": q_anova_f_price_flag,
-        "welch_t_price_returnflag": q_welch_t_price_returnflag,
-        "graph_edge_embeddedness": q_graph_edge_embeddedness,
-        "graph_kcore_summary": q_graph_kcore_summary,
-        "referential_orphans": q_referential_orphans,
-        "acf_daily_revenue": q_acf_daily_revenue,
-        "theil_sen_daily_trend": q_theil_sen_daily_trend,
-        "ridge2_price_qty_discount": q_ridge2_price_qty_discount,
-        "hapax_vocab_stats": q_hapax_vocab_stats,
-        "mann_kendall_daily": q_mann_kendall_daily,
-        "brown_forsythe_price_flag": q_brown_forsythe_price_flag,
-        "cramers_v_status_flag": q_cramers_v_status_flag,
-        "partial_corr_price_qty": q_partial_corr_price_qty,
-        "event_transition_entropy": q_event_transition_entropy,
-        "js_divergence_docs_lang": q_js_divergence_docs_lang,
-        "gini_by_nation_revenue": q_gini_by_nation_revenue,
-        "chow_test_price_qty_flag": q_chow_test_price_qty_flag,
-        "graph_degree_assortativity": q_graph_degree_assortativity,
-        "graph_local_clustering": q_graph_local_clustering,
-        "roc_auc_order_status": q_roc_auc_order_status,
-        "score_lift_deciles": q_score_lift_deciles,
-        "mcnemar_doc_filters": q_mcnemar_doc_filters,
-        "cohens_d_price_returnflag": q_cohens_d_price_returnflag,
-        "grubbs_order_price": q_grubbs_order_price,
-        "levene_price_flag": q_levene_price_flag,
-        "durbin_watson_daily_value": q_durbin_watson_daily_value,
-        "runs_test_daily_value": q_runs_test_daily_value,
-        "rolling_slope_daily_value": q_rolling_slope_daily_value,
-        "graph_degree_powerlaw": q_graph_degree_powerlaw,
-        "keyness_llr_sources": q_keyness_llr_sources,
-        "kendall_tau_qty_discount": q_kendall_tau_qty_discount,
-        "cochran_q_doc_filters": q_cochran_q_doc_filters,
-        "moods_median_price_flag": q_moods_median_price_flag,
-        "cvm_test_price_returnflag": q_cvm_test_price_returnflag,
-        "anderson_darling_price_flag": q_anderson_darling_price_flag,
-        "cliffs_delta_price_returnflag": q_cliffs_delta_price_returnflag,
-        "wilcoxon_signed_user_value": q_wilcoxon_signed_user_value,
-        "cusum_daily_value": q_cusum_daily_value,
-        "odds_ratio_doc_flags": q_odds_ratio_doc_flags,
-        "jarque_bera_price": q_jarque_bera_price,
-        "breusch_pagan_price_qty": q_breusch_pagan_price_qty,
-        "cooks_distance_price_qty": q_cooks_distance_price_qty,
-        "ljung_box_daily_value": q_ljung_box_daily_value,
-        # round-7 wave
-        "bartlett_price_flag": q_bartlett_price_flag,
-        "friedman_order_status": q_friedman_order_status,
-        "ansari_bradley_price_flag": q_ansari_bradley_price_flag,
-        "pr_curve_order_status": q_pr_curve_order_status,
-        "brier_decomposition_docs": q_brier_decomposition_docs,
-        "seasonal_weekday_value": q_seasonal_weekday_value,
-        "lagged_xcorr_daily_value": q_lagged_xcorr_daily_value,
-        "changepoint_binseg_value": q_changepoint_binseg_value,
-        "theil_u_daily_value": q_theil_u_daily_value,
-        "graph_modularity_nation": q_graph_modularity_nation,
-        "graph_harmonic_centrality": q_graph_harmonic_centrality,
-        "embedding_pair_cosine_hist": q_embedding_pair_cosine_hist,
-        "source_ngram_cosine": q_source_ngram_cosine,
-        "pii_density_by_source": q_pii_density_by_source,
-        "token_budget_mix_docs": q_token_budget_mix_docs,
-        "bootstrap_mean_orders": q_bootstrap_mean_orders,
-        "average_precision_order_status": q_average_precision_order_status,
-        "graph_rich_club": q_graph_rich_club,
-        "graph_knn_degree_curve": q_graph_knn_degree_curve,
-        "ece_docs": q_ece_docs,
-        "readability_by_source": q_readability_by_source,
-        "g_test_status_flag": q_g_test_status_flag,
-        "ordinal_assoc_qty_discount": q_ordinal_assoc_qty_discount,
-        "yuen_trimmed_price_flag": q_yuen_trimmed_price_flag,
-        "allen_session_relations": q_allen_session_relations,
-        "monotonicity_user_value": q_monotonicity_user_value,
-        "kuiper_test_price_returnflag": q_kuiper_test_price_returnflag,
-        # round-8 wave
-        "jonckheere_qty_returnflag": q_jonckheere_qty_returnflag,
-        "dunn_pairwise_price_flag": q_dunn_pairwise_price_flag,
-        "lin_ccc_price_qty": q_lin_ccc_price_qty,
-        "cohens_h_status_price": q_cohens_h_status_price,
-        "hodges_lehmann_qty_flag": q_hodges_lehmann_qty_flag,
-        "page_trend_weekday": q_page_trend_weekday,
-        "hellinger_price_flag": q_hellinger_price_flag,
-        "deviance_price_flag": q_deviance_price_flag,
-        "tv_distance_lang_source": q_tv_distance_lang_source,
-        "heaps_law_docs": q_heaps_law_docs,
-        "lexical_diversity_source": q_lexical_diversity_source,
-        "cox_stuart_daily_value": q_cox_stuart_daily_value,
-        "periodogram_daily_value": q_periodogram_daily_value,
-        "burstiness_user_events": q_burstiness_user_events,
-        "graph_degree_centralization": q_graph_degree_centralization,
-        "benford_second_digit_orders": q_benford_second_digit_orders,
-        "last_digit_uniformity_price": q_last_digit_uniformity_price,
-        "ks_doclen_lang": q_ks_doclen_lang,
-        "mantel_haenszel_status_price": q_mantel_haenszel_status_price,
-        "cochran_armitage_priority": q_cochran_armitage_priority,
-        "poisson_rate_ratio_events": q_poisson_rate_ratio_events,
-        "robust_shape_price": q_robust_shape_price,
-        "variance_homogeneity_price_flag": q_variance_homogeneity_price_flag,
-        "yules_k_docs": q_yules_k_docs,
-        "bigram_cond_entropy_docs": q_bigram_cond_entropy_docs,
-        "source_vocab_jaccard_docs": q_source_vocab_jaccard_docs,
-        "hurst_daily_value": q_hurst_daily_value,
-        "spiegelhalter_docs": q_spiegelhalter_docs,
-        "uncertainty_event_dow": q_uncertainty_event_dow,
-        "ad_ksample_price_flag": q_ad_ksample_price_flag,
-        "ad_ksample_standardized": q_ad_ksample_standardized,
-        "cuzick_trend_qty_flag": q_cuzick_trend_qty_flag,
-        "gk_lambda_status_priority": q_gk_lambda_status_priority,
-        "max_drawdown_daily_value": q_max_drawdown_daily_value,
-        "youden_j_order_status": q_youden_j_order_status,
-        "bws_test_price_status": q_bws_test_price_status,
-        "mardia_kurtosis_price_qty": q_mardia_kurtosis_price_qty,
-        "term_dispersion_dp_docs": q_term_dispersion_dp_docs,
-        "lexical_constants_docs": q_lexical_constants_docs,
-        "kpss_daily_value": q_kpss_daily_value,
-        "rayleigh_hour_events": q_rayleigh_hour_events,
-        "mood_dispersion_price_status": q_mood_dispersion_price_status,
-        "join_key_discovery": q_join_key_discovery,
-        "pacf_daily_value": q_pacf_daily_value,
-        "seasonal_strength_daily": q_seasonal_strength_daily,
-        "welch_anova_price_flag": q_welch_anova_price_flag,
-        "van_der_waerden_price_flag": q_van_der_waerden_price_flag,
-        "fligner_killeen_price_flag": q_fligner_killeen_price_flag,
-        "cucconi_price_status": q_cucconi_price_status,
-        "bh_fdr_daily_events": q_bh_fdr_daily_events,
-        "bartels_rank_daily_value": q_bartels_rank_daily_value,
-        "difference_sign_daily_value": q_difference_sign_daily_value,
-        "seasonal_mann_kendall_daily": q_seasonal_mann_kendall_daily,
-        "chatterjee_xi_daily": q_chatterjee_xi_daily,
-        "wilson_ci_priority": q_wilson_ci_priority,
-        "jackknife_ratio_nation": q_jackknife_ratio_nation,
-        "logrank_retention_cohorts": q_logrank_retention_cohorts,
-        "lepage_price_flag": q_lepage_price_flag,
-        "pettitt_daily_value": q_pettitt_daily_value,
-        "foster_stuart_daily_value": q_foster_stuart_daily_value,
-        "fleiss_kappa_docs": q_fleiss_kappa_docs,
-        "dagostino_k2_price": q_dagostino_k2_price,
-        "permutation_entropy_daily": q_permutation_entropy_daily,
-        "variance_ratio_daily": q_variance_ratio_daily,
-        "buishand_range_daily": q_buishand_range_daily,
-        "diversity_sources_docs": q_diversity_sources_docs,
-        "bland_altman_doclen": q_bland_altman_doclen,
-        "pinball_loss_price": q_pinball_loss_price,
-        "type_mix_entropy_trend": q_type_mix_entropy_trend,
-        "embedding_dim_profile": q_embedding_dim_profile,
-        "lang_pred_quality": q_lang_pred_quality,
-        "wasserstein_qty_flag": q_wasserstein_qty_flag,
-        "energy_distance_qty_flag": q_energy_distance_qty_flag,
-        "qq_fit_price_flag": q_qq_fit_price_flag,
-        "neyman_allocation_price": q_neyman_allocation_price,
-        "evt_block_maxima_daily": q_evt_block_maxima_daily,
-        "mase_daily_value": q_mase_daily_value,
-        "split_gain_priority_price": q_split_gain_priority_price,
-        "concentration_customer_revenue": q_concentration_customer_revenue,
-        "hill_tail_price": q_hill_tail_price,
-        "ranking_stability_nations": q_ranking_stability_nations,
-        # round-9 wave
-        "brunner_munzel_price_flag": q_brunner_munzel_price_flag,
-        "theil_l_customer_revenue": q_theil_l_customer_revenue,
-        "vocab_richness_docs": q_vocab_richness_docs,
-        "turning_points_daily_value": q_turning_points_daily_value,
-        "cronbach_alpha_lineitem": q_cronbach_alpha_lineitem,
-        "mcc_lang_pred": q_mcc_lang_pred,
-        "hoeffding_d_qty_discount": q_hoeffding_d_qty_discount,
-        "kendalls_w_nations": q_kendalls_w_nations,
-        "sample_entropy_daily_value": q_sample_entropy_daily_value,
-        "spectral_entropy_daily_value": q_spectral_entropy_daily_value,
-        "burrows_delta_sources": q_burrows_delta_sources,
-        "rbo_customers": q_rbo_customers,
-        "capture_recapture_docs": q_capture_recapture_docs,
-        "covariate_balance_lineitem": q_covariate_balance_lineitem,
-        "log_odds_dirichlet_lang": q_log_odds_dirichlet_lang,
-        "breslow_day_status_price": q_breslow_day_status_price,
-        "token_fertility_lang": q_token_fertility_lang,
-        "bernstein_ci_order_price": q_bernstein_ci_order_price,
-        "dispersion_daily_events": q_dispersion_daily_events,
-        "boosted_stumps_price_qty": q_boosted_stumps_price_qty,
-        # round-11 wave: iterative outlier rounds, Hill numbers, Quade
-        "generalized_esd_orders": q_generalized_esd_orders,
-        "hill_diversity_docs": q_hill_diversity_docs,
-        "quade_nation_priority": q_quade_nation_priority,
-        # round-11 wave 21b: changepoint family completion + dependence
-        "snht_daily_value": q_snht_daily_value,
-        "dcor_daily_value_volume": q_dcor_daily_value_volume,
-        # round-12 wave 22: zig-zag/squared-rank dispersion, circular
-        # uniformity, CF normality, aligned-rank blocks
-        "siegel_tukey_price_flag": q_siegel_tukey_price_flag,
-        "conover_sqranks_price_flag": q_conover_sqranks_price_flag,
-        "watson_u2_minute_events": q_watson_u2_minute_events,
-        "epps_pulley_daily_value": q_epps_pulley_daily_value,
-        "aligned_ranks_nation_priority": q_aligned_ranks_nation_priority,
+    """The registry, in definition order: every top-level ``q_<name>``
+    function of this module keyed ``<name>``, then every public function
+    defined in ``plans/analytics.py`` keyed by its own name."""
+    own = {
+        name[2:]: fn
+        for name, fn in globals().items()
+        if name.startswith("q_") and inspect.isfunction(fn)
     }
+    relational = {
+        name: fn
+        for name, fn in vars(analytics).items()
+        if not name.startswith("_")
+        and inspect.isfunction(fn)
+        and fn.__module__ == analytics.__name__
+    }
+    return {name: _wrap(fn) for name, fn in {**own, **relational}.items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -17234,7 +16787,7 @@ FROM h
 # guarantees ONE output row on empty input (the annihilation-hardened
 # contract), but these twelve twins' final stages read FROM a relation
 # that is empty at zero rows, so the SQL replay emitted nothing
-# (empty-table sweep, ORACLE_EMPTY_r10.json). Each twin is wrapped with
+# (empty-table sweep). Each twin is wrapped with
 # a NOT EXISTS anchor that emits exactly the engine's empty-input row
 # (typed NULLs; count columns that the engine prints as 0 are 0 here
 # too). No effect whatsoever on non-empty input.

@@ -2,57 +2,25 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric", "value" (total sec), "unit", "queries", "sf"}.
 
-Methodology (r3 — after r2's 2.2× session-bleed regression):
+Full per-query detail goes to BENCH_SELF.json in the repo root.
 
-- **Per-family JVM isolation.** r2 timed all 32 queries in one shared
-  session, two interleaved passes; accumulated state (pinned caches,
-  checkpoint dirs, Python-worker memory, GC pressure) from heavyweight
-  queries inflated unrelated timings up to 10× (similarity_topk_pandas
-  0.95 s → 9.58 s on unchanged code). Each family now runs in its own
-  subprocess — a heavyweight family cannot pollute another family's
-  JVM — ordered cheap→heavy inside each.
-- **Per-query protocol: warm ×1, timed ×2 (best), then hygiene.** The
-  warm run pays codegen compilation, Python-worker spin-up, and any
-  caches the query builds internally; the timed runs measure
-  steady-state plan cost. After each query, clearCache() + System.gc()
-  drops anything it pinned so cross-QUERY cache reuse never flatters
-  the next number (intra-query reuse is the steady state being
-  measured).
-- **Worker pre-warm.** Every family session warms one trivial
-  mapInPandas so the first Python-worker query doesn't pay
-  pyspark.daemon startup inside its timing (r2 conflated the two).
+Protocol:
 
-Each query's full plan is forced with the noop sink (executes
-everything, writes nothing) rather than count() — count() would let
-Catalyst prune the projections we want measured.
-
-r7 family-split + the r6 "phantom regression" classification (judge r6
-#4): the 27-query "core" and 16-query "temporal" families are split at
-the merge/diff boundary (core/corestate/coreprofile,
-temporal/temporal_state). Isolated re-measurement of the four flagged
-queries (sf0.1, this machine):
-
-  query                 r5(best-of-2)  r6(27q family)  r7(split family)  r7(solo JVM)
-  asof_purchase_view    0.49           1.15            0.76              -
-  robust_scale_orders   1.05           2.26            1.46              1.72
-  cdc_apply_customers   0.40           0.84            0.61              1.32
-  snapshot_diff_orders  0.73           1.32            0.92              1.27
-  winsorized_price_stats 2.06          3.16            3.16              3.16
-
-Classification, with evidence:
-1. `git diff <r5>..HEAD` over asof/profiling/merge/incremental/
-   bloomjoin is EMPTY — no plan changed; any delta is protocol.
-2. Family bleed was real: the split recovers 30-40% on the three
-   merge/diff queries (2.26->1.46 etc.).
-3. The remaining gap vs r5 is the r5->r6 PROTOCOL change itself:
-   r5 recorded best-of-2, r6+ records median-of-3 (r5 verdict #5
-   closure). Best-of-2 systematically reads lower than median-of-3
-   under the same noise; r5 numbers are not reproducible under the
-   current, stricter protocol. The solo-JVM column shows the opposite
-   bias (sub-second queries pay cold-JIT tails without deep warm-up),
-   bracketing the in-family medians as the honest middle.
-r5-vs-r7 deltas within each query's bracket => protocol artifact
-confirmed, not plan regression.
+- **Per-family JVMs.** Each ``FAMILIES`` entry runs in its own
+  subprocess, so the state a heavyweight query leaves behind (pinned
+  caches, checkpoint dirs, Python-worker memory, GC pressure) cannot
+  inflate another family's timings. Queries run cheap→heavy inside a
+  family, after a trivial query and a trivial mapInPandas have warmed
+  the JVM and the Python worker pool.
+- **Warm ×1, then median-of-3.** The warm run pays codegen, worker
+  spin-up and any caches the query builds internally; a warm run over
+  5 s that is still improving is repeated (at most 3 more) until the JIT
+  settles. The recorded time is the median of three timed runs.
+- **Hygiene.** After each query, clearCache() + System.gc() drop what it
+  pinned, so cross-query cache reuse never flatters the next number.
+- **Noop sink.** Every run forces the full plan with the noop sink
+  (executes everything, writes nothing) rather than count(), which
+  would let Catalyst prune the projections being measured.
 """
 
 from __future__ import annotations
@@ -550,8 +518,8 @@ def run_family(family: str) -> None:
 
 # Noise canary (r13, VERDICT r12 "what's wrong" #1): this host's
 # wall-clock swings 2-8x between time windows on UNCHANGED code
-# (OPTIMIZATION_r12.md documents identical queries at 0.78 s and 1.61 s
-# eighty minutes apart), which is exactly what confounded the r12
+# (OPTIMIZATION_r12.md, removed; last present at commit ddbadb8,
+# documents identical queries at 0.78 s and 1.61 s eighty minutes apart), which is exactly what confounded the r12
 # cross-round comparison. A fixed, plan-stable query timed SOLO in a
 # fresh JVM at the START and END of every bench run gives each committed
 # artifact a window-drift reading a judge can normalize by. Additions
@@ -652,9 +620,8 @@ def main() -> None:
 
     # Opt-in solo tail series (r13, VERDICT r12 #5): fresh-JVM min-of-N
     # for every slow-tail query, the window-insensitive series next to
-    # the family medians. Opt-IN via env so the driver's runs keep the
-    # exact r12 cost/protocol; the committed BENCH_SELF_r{N}.json is
-    # produced with it on.
+    # the family medians. Opt-IN via env so a default run keeps the
+    # family-only cost and protocol.
     solo: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_SOLO_TAIL", "") not in ("", "0"):
         thresh = float(os.environ.get("SPARK_GRAFT_SOLO_MIN_SEC", "2.5"))
@@ -674,8 +641,7 @@ def main() -> None:
 # The harness that runs this script captures only the last ~2000 chars of
 # stdout and parses the final line as JSON (r3's 75-query line overflowed
 # that window and the round recorded "parsed": null). Contract:
-#   * FULL per-query detail goes to BENCH_SELF.json in the repo root
-#     (committed per round as BENCH_SELF_r{N}.json);
+#   * FULL per-query detail goes to BENCH_SELF.json in the repo root;
 #   * the final stdout line is ONE compact JSON object, byte-capped at
 #     MAX_LINE_BYTES, whose "queries" dict carries the most expensive
 #     queries first until the cap is reached ("n_queries" records how
@@ -705,9 +671,9 @@ def final_line(
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                # Raw timed runs per query (n=3 median for sub-1.5 s
-                # queries, n=2 min otherwise — see run_family): drift
-                # classification needs the spread, not one number.
+                # Raw timed runs per query (n=3, median — see
+                # run_family): drift classification needs the spread,
+                # not one number.
                 "samples": samples,
                 "protocol": {
                     q: {"n": len(v), "stat": "median" if len(v) >= 3 else "min"}

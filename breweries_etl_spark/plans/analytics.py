@@ -12,6 +12,9 @@ expressed as declarative DataFrame plans Catalyst can optimize:
   handles skew and coalesces post-shuffle partitions.
 - Filters are written against base columns before joins so Catalyst
   pushes them into the parquet scan (check: PushedFilters in .explain).
+
+Every public function here is a registered query under its own name
+(``__spark_entry__.queries()``); helpers take a leading underscore.
 """
 
 from __future__ import annotations
@@ -143,7 +146,7 @@ def rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (SQL EXISTS): customers having any order above a
     threshold. Semi-join short-circuits on first match — cheaper than a
     join+distinct."""
@@ -439,7 +442,7 @@ def hourly_heavy_hitters(spark: SparkSession, sf_dir: str, k: int = 2) -> DataFr
     return ranked.filter(F.col("rank") <= k)
 
 
-def nation_customer_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def full_outer_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of two aggregates: per-nation customer counts vs
     supplier counts — nations appearing on either side survive with
     zero-filled gaps. Completes the join-type family (inner/left/semi/
@@ -462,7 +465,7 @@ def nation_customer_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def customers_without_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (SQL NOT EXISTS): customers with no order since
     2000-01-01."""
     cust = load_table(spark, sf_dir, "customer")

@@ -5,7 +5,10 @@ set and cross-check every tool's query list against the registry."""
 
 from __future__ import annotations
 
+import ast
+
 import __spark_entry__ as entrymod
+from breweries_etl_spark.plans import analytics
 
 # the four documented not-SQL-replayable queries (COVERAGE.md
 # "Rows-only ↔ exact-twin pairing")
@@ -49,3 +52,17 @@ def test_dump_plans_queries_exist():
 
     qs = set(entrymod.queries())
     assert set(INTERESTING) - qs == set()
+
+
+def _top_level_defs(module) -> list[str]:
+    with open(module.__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    return [n.name for n in tree.body if isinstance(n, ast.FunctionDef)]
+
+
+def test_query_sources_are_disjoint():
+    # a q_tpch_q1 would otherwise silently shadow analytics.tpch_q1
+    own = {n[2:] for n in _top_level_defs(entrymod) if n.startswith("q_")}
+    relational = {n for n in _top_level_defs(analytics) if not n.startswith("_")}
+    assert own & relational == set()
+    assert len(entrymod.queries()) == len(own) + len(relational)

@@ -10,9 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...] [--json OUT]
                                     [--sample N --seed R]
 
 ``--json OUT`` additionally writes a per-query JSON artifact
-({name: {"status": "ok"|"rows_only"|"fail", "rows": N, "err": ...}}) —
-the committed evidence file (ORACLE_SELFCHECK_r{N}.json) that covers the
-queries the driver's 50-per-round sample doesn't reach.
+({name: {"status": "ok"|"rows_only"|"fail", "rows": N, "err": ...}}).
 
 ``--sample N --seed R`` draws a deterministic random subset of N
 registry names using ``random.Random(R).sample`` over the sorted name
@@ -35,9 +33,11 @@ coverage (the driver has replayed the identical 50 names since r1).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -97,15 +97,13 @@ def main() -> int:
     only = set(argv[1:])
     if sample_n is not None:
         import glob
-        import os
         import random
 
         assert not only, "--sample is incompatible with explicit names"
         names = sorted(__import__("__spark_entry__").queries())
         if exclude_driver:
-            repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
             driver_names: set[str] = set()
-            for p in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+            for p in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
                 with open(p) as fh:
                     driver_names.update(json.load(fh))
             before = len(names)

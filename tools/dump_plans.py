@@ -20,7 +20,8 @@ import pkgutil
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from bench import HEADLINE
@@ -274,7 +275,7 @@ def main() -> None:
             plan,
         )
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(INTERESTING)} plans)")
 

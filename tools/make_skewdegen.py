@@ -21,8 +21,7 @@ min-keys planted by make_skew). Usage:
 
     python tools/make_skew.py                  # sf0.01 -> /tmp/sfskew
     python tools/make_skewdegen.py             # -> /tmp/sfskewdegen
-    python tools/check_oracle.py /tmp/sfskewdegen --json \\
-        ORACLE_SKEWDEGEN_r{N}.json
+    python tools/check_oracle.py /tmp/sfskewdegen
 
 Both engines read the same parquet, so any divergence in hot-key
 semantics under NULL-heavy groups fails loudly as a parity mismatch.

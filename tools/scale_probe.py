@@ -15,7 +15,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCALING_MD = os.path.join(REPO, "SCALING.md")
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from breweries_etl_spark.session import get_spark
@@ -348,14 +350,14 @@ def main() -> None:
     # body survives verbatim
     preserved = ""
     try:
-        with open("/root/repo/SCALING.md", encoding="utf-8") as f:
+        with open(SCALING_MD, encoding="utf-8") as f:
             old = f.read()
         idx = old.find("\n## ")
         if idx >= 0:
             preserved = old[idx:]
     except OSError:
         pass
-    with open("/root/repo/SCALING.md", "w", encoding="utf-8") as f:
+    with open(SCALING_MD, "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + "\n" + preserved)
     print(json.dumps(results))
 
