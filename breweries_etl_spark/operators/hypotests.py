@@ -4818,6 +4818,9 @@ def bland_altman(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     )
 
 
+PINBALL_MAX_COLLECT_GROUPS = 10_000
+
+
 def pinball_loss(
     df: DataFrame,
     group_col: str,
@@ -4832,17 +4835,24 @@ def pinball_loss(
 
     One grouped percentile pass (k-row relation, broadcast back), one
     loss scan; per-row losses fold with the round-6 decimal recipe.
-    Output one row per tau: (tau, n, k_groups, mean_pinball)."""
+    Output one row per tau: (tau, n, k_groups, mean_pinball).
+
+    BOUNDED-GROUP-DOMAIN assumption: the k-row relation is collected to
+    the driver only while k ≤ ``PINBALL_MAX_COLLECT_GROUPS``. Past the
+    cap it stays a plan: k_groups is counted by its own job and the
+    join strategy is left to the planner (broadcast only under
+    ``spark.sql.autoBroadcastJoinThreshold``), so the answer is the same
+    exact one at the cost of a second percentile pass."""
     # ONE percentile pass (r13): preds feeds TWO consumers — the
-    # k_groups count and the broadcast join below — and each broadcast
-    # future re-ran the whole sort-based percentile_disc pass over the
-    # fact table. The k-row relation is collected once (group domains
-    # are bounded — the same driver-scalar pattern as the prefix-count
-    # primitive's boundaries) and re-enters the plan as a local
-    # relation, so k_groups is a literal and the join broadcast builds
-    # from local rows: one fact pass, no cache to release, no extra
-    # jobs. Decimal/whatever values round-trip exactly through the
-    # explicit schema.
+    # k_groups count and the join below — and each re-runs the whole
+    # sort-based percentile_disc pass over the fact table. Under the cap
+    # the k-row relation is collected once and re-enters the plan as a
+    # local relation, so k_groups is a literal and the join broadcast
+    # builds from local rows: one fact pass, no cache to release.
+    # Decimal/whatever values round-trip exactly through the explicit
+    # schema. The probe is a top-(cap+1) by group key: one job over all
+    # partitions (a plain limit's collect scans them in rounds, one job
+    # each), and at most cap+1 rows per partition reach the driver.
     spark = df.sparkSession
     preds = (
         df.filter(
@@ -4859,17 +4869,19 @@ def pinball_loss(
             ]
         )
     )
-    pred_schema = preds.schema
-    pred_rows = preds.collect()
-    k_groups = len(pred_rows)
-    preds = spark.createDataFrame(pred_rows, pred_schema)
+    pred_rows = preds.orderBy("__g").limit(PINBALL_MAX_COLLECT_GROUPS + 1).collect()
+    if len(pred_rows) <= PINBALL_MAX_COLLECT_GROUPS:
+        k_groups = len(pred_rows)
+        preds = F.broadcast(spark.createDataFrame(pred_rows, preds.schema))
+    else:
+        k_groups = preds.count()
     base = df.filter(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(
         F.col(group_col).alias("__g"),
         quantized_money(F.col(value_col)).cast("double").alias("__y"),
     )
-    joined = base.join(F.broadcast(preds), "__g")
+    joined = base.join(preds, "__g")
     rows = joined.select(
         "__y",
         F.explode(

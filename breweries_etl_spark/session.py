@@ -7,6 +7,19 @@ environment rather than Spark's default 200.
 
 On a real cluster the same builder applies — only master/memory change; the
 SQL-level configs here are cluster-safe defaults.
+
+Driver-side build cost: ``spark.python.sql.dataFrameDebugging.enabled``
+is pinned to ``false``. With it on, PySpark wraps every ``Column`` and
+``functions`` call in a call-site capture (a session lookup, a JVM class
+lookup, a conf read, a Python stack walk, a set and a clear of the JVM's
+current origin: about five py4j round trips per call), and building one
+registry query's plan makes thousands of such calls. The price is that
+analysis errors no longer carry the Python call site
+(``DataFrameQueryContext``). To get it back while debugging, start a
+fresh process with
+``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"})``:
+the conf is static, and PySpark caches its value process-wide on first
+use.
 """
 
 from __future__ import annotations
@@ -50,6 +63,8 @@ def get_spark(
         # the cache without an Exchange. That plan shape holds only while
         # cached plans keep their output partitioning.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+        # Static: no per-call Python call-site capture (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

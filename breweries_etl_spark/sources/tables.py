@@ -11,16 +11,60 @@ recovers partition columns, with partition *pruning* pushed into the scan
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import TESTDATA_TABLES
 
+# The confs that change how a parquet footer maps to a Spark schema.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# absolute path -> (the stamp it was read under, what was read); one
+# entry per path, replaced when the file or a conf changes
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+_ts_nanos: dict[str, tuple[tuple, bool]] = {}
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(size, mtime) of a plain file. None for a directory, whose own
+    stat does not change when a file inside it is rewritten, so
+    directory reads are never cached; None for a missing path too, so
+    that Spark reports it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_size, st.st_mtime_ns)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table (``{sf_dir}/{name}.parquet``)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Load one testdata table (``{sf_dir}/{name}.parquet``).
+
+    Spark infers a parquet schema with a one-task job that reads the
+    footer. The first read of a file does that; later reads of the same
+    unchanged file, under the same schema-conversion confs, pass the
+    schema it inferred and launch no job."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    stamp += tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    key = os.path.abspath(path)
+    hit = _schemas.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[key] = (stamp, df.schema)
+    return df
 
 
 def _assert_utc_session(spark: SparkSession) -> None:
@@ -70,14 +114,23 @@ def normalize_event_ts(df: DataFrame, parquet_path: str | None = None) -> DataFr
 def _ts_is_parquet_nanos(path: str) -> bool:
     """True iff the parquet footer declares ``ts`` as timestamp[ns]
     (what the legacy nanosAsLong conf surfaces to Spark as long). Footer
-    read only — no data pages touched; gated on pyarrow availability."""
+    read only — no data pages touched; gated on pyarrow availability.
+    The answer is kept per file identity, like :func:`load_table`'s
+    schemas."""
+    stamp, key = _file_stamp(path), os.path.abspath(path)
+    hit = _ts_nanos.get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return hit[1]
     try:
         import pyarrow.dataset as ds
         import pyarrow as pa
     except ImportError:  # pragma: no cover - pyarrow is a baked-in dep
         return True
     field = ds.dataset(path, format="parquet").schema.field("ts")
-    return field.type == pa.timestamp("ns")
+    nanos = field.type == pa.timestamp("ns")
+    if stamp is not None:
+        _ts_nanos[key] = (stamp, nanos)
+    return nanos
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

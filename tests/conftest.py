@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -29,3 +30,27 @@ def unreleased():
     lazy plan with its caches handed over, for plan-shape assertions.
     Operators it calls keep their own mode."""
     return lambda op: lifecycle.operator(op.__wrapped__, release=False)
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(fn)`` runs ``fn()`` in a job group of its own and returns
+    ``(fn's result, the number of Spark jobs it launched)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_in-{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        # job-start events reach the status tracker asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

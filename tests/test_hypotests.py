@@ -192,3 +192,24 @@ def test_quantile_normalize_equalizes_marginals(spark):
     grid = dict(by_group["A"])
     assert grid[1] == 2.0 and grid[10] == 110.0
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+
+
+def test_pinball_loss_past_group_cap_matches_collected_path(spark, monkeypatch):
+    """Past PINBALL_MAX_COLLECT_GROUPS the k-row percentile relation
+    stays in the plan instead of on the driver; the rows are the same."""
+    from breweries_etl_spark.operators import hypotests
+
+    rows = [(g, float(v)) for g in ("a", "b", "c") for v in range(1, 6 + ord(g) % 5)]
+    df = spark.createDataFrame(rows, "g string, v double").repartition(3)
+
+    def plan(out):
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    default = hypotests.pinball_loss(df, "g", "v")
+    assert "percentile_disc" not in plan(default)  # the groups came back as rows
+    collected = sorted(default.collect())
+    monkeypatch.setattr(hypotests, "PINBALL_MAX_COLLECT_GROUPS", 1)
+    planned = hypotests.pinball_loss(df, "g", "v")
+    assert "percentile_disc" in plan(planned)
+    assert sorted(planned.collect()) == collected
+    assert {r["k_groups"] for r in collected} == {3}

@@ -215,6 +215,14 @@ def test_cached_plan_partitioning_pinned(spark):
     )
 
 
+def test_call_site_capture_off(spark):
+    """Building a plan makes no per-call origin round trips (session.py)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
 def test_bucketed_persist_consumer_has_no_exchange_above_cache(spark, unreleased):
     """VERDICT r13 #2: the (b)-keyed consumers of the prefix-count
     primitive's persisted bucket relation read it without a shuffle."""

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from breweries_etl_spark.plans import analytics
 
 
@@ -844,3 +846,19 @@ def test_qq_fit_single_prefix_relation(spark, sf_dir, unreleased):
         assert plan.count("lineitem.parquet") <= 1, plan
     finally:
         spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("name", ["brown_forsythe_price_flag", "gini_by_nation_revenue"])
+def test_second_build_launches_no_job(spark, sf_dir, jobs_in, name):
+    """Building a plan runs nothing once its tables' schemas are known:
+    the parquet schema of an unchanged file is inferred once
+    (sources/tables.py:load_table)."""
+    import __spark_entry__ as e
+
+    build = e.queries()[name]
+    try:
+        build(spark, sf_dir)
+        _df, jobs = jobs_in(lambda: build(spark, sf_dir))
+    finally:
+        spark.catalog.clearCache()
+    assert jobs == 0
