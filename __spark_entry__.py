@@ -6,14 +6,12 @@ scale extensions) as (spark, sf_dir) -> DataFrame; ``oracle_sql()``
 carries the DuckDB-equivalent SQL per query. Column names/aliases match
 pairwise so the driver's order-insensitive value hash compares cleanly.
 
-Float policy: money-style aggregates go through exact DECIMAL sums in
-BOTH engines (see breweries_etl_spark/functions/exact.py) so doubles are
-bit-identical; per-row derived floats are rounded to 6 dp on both sides.
+Both are read from the query records in ``breweries_etl_spark/queries/``:
+one record per query, declared with its builder.
 """
 
 from __future__ import annotations
 
-import inspect
 import os
 import sys
 
@@ -23,3868 +21,18 @@ _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from breweries_etl_spark.config import KEY_FIELDS
-from breweries_etl_spark.functions import lifecycle
-from breweries_etl_spark.functions.exact import (
-    sql_disc_price,
-    sql_charge,
-    sql_sum_money,
-)
-from breweries_etl_spark.functions.synthetic import (
-    BREWERY_RAW_SQL,
-    ENTITY_RAW_SQL,
-    brewery_raw,
-)
-from breweries_etl_spark.operators import aggregate as agg_ops
-from breweries_etl_spark.operators import dedup, multimodal, quality, similarity
-from breweries_etl_spark.operators import standardize, temporal, text
-from breweries_etl_spark.plans import analytics
-from breweries_etl_spark.sources.tables import load_events, load_table
-from breweries_etl_spark.streaming.events import run_tumbling_once
-
-# ---------------------------------------------------------------------------
-# Shared SQL fragments (oracle side)
-# ---------------------------------------------------------------------------
-
-_CANON = "('micro','nano','regional','brewpub','large','planning','bar','contract','proprietor','closed')"
-
-# SQL replication of operators/standardize.py silver chain (C1-C5, C8),
-# minus the nondeterministic processed_at column.
-_SILVER_SELECT = f"""
-SELECT
-  id,
-  name,
-  CASE
-    WHEN brewery_type IS NULL THEN 'unknown'
-    WHEN lower(trim(brewery_type)) IN {_CANON} THEN lower(trim(brewery_type))
-    ELSE 'other'
-  END AS brewery_type,
-  upper(state) AS state,
-  upper(city) AS city,
-  upper(country) AS country,
-  upper(country) AS location,
-  CASE
-    WHEN website_url IS NULL OR trim(website_url) = '' THEN NULL
-    WHEN trim(website_url) LIKE 'http://%' OR trim(website_url) LIKE 'https://%'
-      THEN trim(website_url)
-    ELSE 'http://' || trim(website_url)
-  END AS website_url,
-  '1.0' AS etl_version
-FROM valid
-"""
-
-_VALID_FILTER = " AND ".join(f"{c} IS NOT NULL" for c in KEY_FIELDS)
-
-_SILVER_CTE = f"""
-WITH raw AS ({BREWERY_RAW_SQL}),
-valid AS (SELECT * FROM raw WHERE {_VALID_FILTER}),
-silver AS ({_SILVER_SELECT})
-"""
-
-_SILVER_OUT_COLS = [
-    "id",
-    "name",
-    "brewery_type",
-    "state",
-    "city",
-    "country",
-    "location",
-    "website_url",
-    "etl_version",
-]
-
-
-def _silver_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine-side silver: shared raw constructor -> package operators."""
-    raw = brewery_raw(spark, sf_dir)
-    valid, _quarantined = quality.split_invalid_records(raw)
-    return standardize.silver_transform(valid).select(*_SILVER_OUT_COLS)
-
-
-# ---------------------------------------------------------------------------
-# Queries — reference parity (SURVEY.md §2)
-# ---------------------------------------------------------------------------
-
-
-def q_gold_by_type_location(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/A2 — THE gold aggregation over the standardized silver frame."""
-    silver = _silver_df(spark, sf_dir)
-    return agg_ops.create_aggregation(
-        silver, ["brewery_type", "location", "state", "city"], "brewery_count"
-    )
-
-
-def q_gold_by_location(spark: SparkSession, sf_dir: str) -> DataFrame:
-    silver = _silver_df(spark, sf_dir)
-    return agg_ops.gold_aggregations(silver)["by_location"]
-
-
-def q_silver_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _silver_df(spark, sf_dir)
-
-
-def q_brewery_type_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 in isolation, applied pre-split so the NULL→'unknown' branch is
-    exercised (the pipeline quarantines NULL keys before recode)."""
-    raw = brewery_raw(spark, sf_dir)
-    return raw.select(
-        F.col("name"),
-        standardize.brewery_type_expr(F.col("brewery_type")).alias("brewery_type_std"),
-    )
-
-
-def q_quarantine_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = brewery_raw(spark, sf_dir)
-    valid, _ = quality.split_invalid_records(raw)
-    return valid.select("id", "name", "brewery_type", "state", "city", "country")
-
-
-def q_quarantine_rejected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = brewery_raw(spark, sf_dir)
-    _, rejected = quality.split_invalid_records(raw)
-    # quarantine_timestamp is wall-clock → excluded from the compared frame
-    return rejected.select("name", "id", "country", "quarantine_reason")
-
-
-def q_null_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = brewery_raw(spark, sf_dir)
-    return quality.null_counts(raw, KEY_FIELDS)
-
-
-def q_count_distinct_location(spark: SparkSession, sf_dir: str) -> DataFrame:
-    silver = _silver_df(spark, sf_dir)
-    return quality.count_distinct(silver, "location")
-
-
-def q_duplicate_key_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return quality.count_duplicate_ids(li, "l_orderkey")
-
-
-def q_value_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_events(spark, sf_dir)
-    return agg_ops.value_counts(ev, "event_type", "count")
-
-
-def q_row_count_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg_ops.row_count(load_table(spark, sf_dir, "lineitem"))
-
-
-def q_union_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1 — unionByName fan-in of two disjoint slices (the reference's
-    manual partition-concat, obsolete under native partition discovery)."""
-    orders = load_table(spark, sf_dir, "orders")
-    lo = orders.filter(F.col("o_orderkey") % 2 == 0)
-    hi = orders.filter(F.col("o_orderkey") % 2 == 1)
-    return lo.unionByName(hi).select("o_orderkey", "o_orderstatus", "o_totalprice")
-
-
-def q_sample_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O2 — deterministic limit-n diagnostic sample (reference uses
-    head(3); ordered here so the result is stable)."""
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        cust.select("c_name")
-        .na.drop()
-        .orderBy("c_name")
-        .limit(3)
-    )
-
-
-_PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
-
-
-def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass table profile (nulls/distinct/min/max per column)."""
-    from breweries_etl_spark.operators.profiling import profile_table
-
-    return profile_table(load_table(spark, sf_dir, "orders"), _PROFILE_COLS)
-
-
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingestion dedup: synthetic incoming batch (every 5th
-    doc re-sent under a new id) checked against the base corpus index."""
-    from breweries_etl_spark.operators.dedup import dedup_incremental
-
-    docs = load_table(spark, sf_dir, "documents")
-    incoming = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    return dedup_incremental(docs, incoming).select("incoming_id", "base_id")
-
-
-def q_text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over text with deterministic injected email/phone."""
-    from breweries_etl_spark.operators.text import redact_pii
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.substring("text", 1, 40),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or +1 (555) 000-"),
-            F.col("doc_id").cast("string"),
-            F.lit(" now"),
-        ).alias("text"),
-    )
-    return redact_pii(docs).select("doc_id", F.col("text").alias("redacted"))
-
-
-def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ENTIRE medallion pipeline as one contract query: deterministic
-    landing JSON built from nation rows (incl. quarantine and recode edge
-    cases) → bronze → silver(+quarantine) → gold; returns the gold
-    by_type_location table. The oracle replicates the full chain in SQL.
-    """
-    import json
-    import os
-    import tempfile
-
-    from breweries_etl_spark.config import MedallionPaths
-    from breweries_etl_spark.plans.pipeline import run_pipeline
-    from breweries_etl_spark.sinks.writers import prepare_landing_directory
-
-    nations = load_table(spark, sf_dir, "nation").orderBy("n_nationkey").collect()
-    records = [
-        {
-            "id": None if r["n_nationkey"] % 7 == 0 else str(r["n_nationkey"]),
-            "name": r["n_name"],
-            "brewery_type": [" Micro ", "NANO", "taproom", None][r["n_nationkey"] % 4],
-            "state": r["n_name"].lower(),
-            "city": f"city_{r['n_nationkey'] % 5}",
-            "country": f"country_{r['n_regionkey']}",
-            "website_url": ["", "www.x.io", "https://y.io", None][r["n_nationkey"] % 4],
-        }
-        for r in nations
-    ]
-    # mkdtemp: concurrent drivers must not collide on a shared path
-    root = tempfile.mkdtemp(prefix="medallion_e2e_")
-    paths = MedallionPaths(root)
-    prepare_landing_directory(paths.landing)
-    with open(os.path.join(paths.landing, "page1.json"), "w", encoding="utf-8") as f:
-        json.dump(records, f)
-    run_pipeline(spark, paths, retries=1)
-    gold = spark.read.parquet(paths.gold_table("by_type_location"))
-    return gold.select("brewery_type", "location", "state", "city", "brewery_count")
-
-
-def q_classifier_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-linear quality-classifier score (fasttext-filter shape) —
-    pure per-row expressions, weight vector as plan literals, no
-    shuffle; oracled by replaying the md5 bucket arithmetic and the
-    same literal weights in SQL."""
-    from breweries_etl_spark.operators.filtering import classifier_quality_score
-
-    return classifier_quality_score(load_table(spark, sf_dir, "documents"))
-
-
-def q_variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schemaless semi-structured handling via Spark 4's VARIANT type:
-    ``parse_json`` once into a binary variant, then typed path extraction
-    (``try_variant_get``) — the scale posture for ragged JSON where a
-    declared from_json schema would drop unknown fields. Shares its
-    oracle semantics with json_extract_stats but exercises the variant
-    codepath; quantile-free aggregates keep it engine-portable."""
-    ev = load_events(spark, sf_dir)
-    k = F.try_variant_get(F.parse_json(F.col("props")), "$.k", "bigint")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-        )
-    )
-
-
-def q_json_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured column handling: parse the JSON props string with
-    a DECLARED schema (from_json) and aggregate the extracted field —
-    stays fully JVM-side."""
-    ev = load_events(spark, sf_dir)
-    k = F.from_json(F.col("props"), "k BIGINT").getField("k")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (distinct): BUILDING-segment customers who also placed a
-    300k+ order."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    a = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    b = orders.filter(F.col("o_totalprice") > 300000).select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    return a.intersect(b)
-
-
-def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): BUILDING-segment customers with no 300k+ order."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    a = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    b = orders.filter(F.col("o_totalprice") > 300000).select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    return a.subtract(b)
-
-
-@lifecycle.operator(release=False)
-def q_explode_shingle_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explode (lateral view) over per-document shingle arrays → corpus
-    vocabulary stats."""
-    from breweries_etl_spark.operators.dedup import shingle_sets
-
-    # cache barrier matters: without it the Generate (explode) inlines the
-    # interpreted shingle transform and re-evaluates it per OUTPUT row
-    sh = shingle_sets(load_table(spark, sf_dir, "documents"))
-    inv = sh.select(F.explode("shingles").alias("shingle"))
-    return inv.agg(
-        F.count_distinct("shingle").alias("n_distinct_shingles"),
-        F.count(F.lit(1)).alias("n_shingles"),
-    )
-
-
-def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar string-function surface (substring/lpad/replace/reverse/
-    split_part/lower) — one pass, all codegen."""
-    cust = load_table(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.substring("c_name", 1, 8).alias("name8"),
-        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias("padded"),
-        F.replace(F.col("c_name"), F.lit("Customer"), F.lit("Cust")).alias("swapped"),
-        F.reverse(F.substring("c_name", 1, 8)).alias("rev8"),
-        F.split_part(F.col("c_name"), F.lit("#"), F.lit(2)).alias("num_part"),
-        F.lower(F.col("c_mktsegment")).alias("segment_lc"),
-    )
-
-
-def q_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL approximate distinct (deterministic sketch; no SQL oracle —
-    DuckDB's approx sketch differs) → rows-only."""
-    ev = load_events(spark, sf_dir)
-    return ev.agg(
-        F.approx_count_distinct("user_id").alias("approx_users"),
-        F.approx_count_distinct("event_id").alias("approx_events"),
-    )
-
-
-def _customer_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic synthetic update set: every 10th customer gets a
-    raised balance and a renamed record."""
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        cust.filter(F.col("c_custkey") % 10 == 0)
-        .withColumn("c_acctbal", F.round(F.col("c_acctbal") + 100.0, 2))
-        .withColumn("c_name", F.concat(F.col("c_name"), F.lit("_u")))
-    )
-
-
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from breweries_etl_spark.operators.merge import merge_upsert
-
-    cust = load_table(spark, sf_dir, "customer")
-    merged = merge_upsert(cust, _customer_updates(spark, sf_dir), "c_custkey")
-    return merged.select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-
-
-def q_salted_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-phase aggregation — must equal the plain group count
-    (same oracle as value_counts_events)."""
-    from breweries_etl_spark.operators.merge import salted_group_count
-
-    ev = load_events(spark, sf_dir)
-    return salted_group_count(ev, "event_type", "count")
-
-
-def q_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 Python DataSource: page-partitioned REST source read in
-    offline fixture mode (pages derived deterministically from nation)."""
-    import json
-    import os
-    import tempfile
-
-    from breweries_etl_spark.sources.brewery_datasource import BreweryDataSource
-
-    nations = load_table(spark, sf_dir, "nation").orderBy("n_nationkey").collect()
-    records = [
-        {
-            "id": str(r["n_nationkey"]),
-            "name": r["n_name"],
-            "brewery_type": "micro" if r["n_nationkey"] % 2 == 0 else "taproom",
-            "country": r["n_name"],
-        }
-        for r in nations
-    ]
-    pages = [records[:20], records[20:]]
-    fixture = os.path.join(
-        tempfile.mkdtemp(prefix="brewery_fixture_"), "pages.json"
-    )
-    with open(fixture, "w", encoding="utf-8") as f:
-        json.dump(pages, f)
-
-    try:
-        spark.dataSource.register(BreweryDataSource)
-    except Exception:
-        pass  # already registered in this session
-    df = (
-        spark.read.format("openbrewerydb")
-        .option("fixture_json", fixture)
-        .load()
-    )
-    return df.groupBy("brewery_type").agg(F.count(F.lit(1)).alias("n"))
-
-
-def q_stateful_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState),
-    projected to the FINAL state per user — promoted from rows-only to
-    hash-matched (VERDICT r4 #6): the state now accumulates exact
-    integer cents (streaming/stateful.py:_batch_cents), so the final
-    per-user profile is independent of micro-batch boundaries and
-    replayable as a plain SQL aggregate. Update-mode intermediate
-    emissions remain covered by tests/test_merge_datasource_stateful.py.
-
-    The memory sink holds one row per (user, emitting micro-batch);
-    n_events strictly increases across a user's emissions, so max_by on
-    n_events is a deterministic final-state pick."""
-    from breweries_etl_spark.streaming.stateful import run_user_profiles_once
-
-    emissions = run_user_profiles_once(spark, sf_dir)
-    return emissions.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.expr("max_by(total_value, n_events)").alias("total_value"),
-        F.max("last_ts_us").alias("last_ts_us"),
-    )
-
-
-def q_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: for each purchase event, the user's most recent view
-    event at or before it (operators/asof.py union-window composition)."""
-    from breweries_etl_spark.operators.asof import asof_join_backward
-
-    ev = load_events(spark, sf_dir).withColumn(
-        "ts_us", F.unix_micros(F.col("ts"))
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts_us", "event_id"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts_us", "value"
-    )
-    return asof_join_backward(
-        purchases, views, by="user_id", on="ts_us",
-        left_cols=["event_id"], right_cols=["value"],
-    )
-
-
-def q_similarity_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy physical strategy for the same exact top-k (same
-    oracle as similarity_topk)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = similarity.brute_force_topk_pandas(emb.filter(F.col("vec_id") < 10), emb, k=5)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-# ---------------------------------------------------------------------------
-# Queries — scale extensions (temporal, text, dedup, similarity, multimodal)
-# ---------------------------------------------------------------------------
-
-
-def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return temporal.tumbling_counts(load_events(spark, sf_dir))
-
-
-def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return temporal.sliding_counts(load_events(spark, sf_dir))
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return temporal.sessionize(load_events(spark, sf_dir))
-
-
-def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window aggregation — oracle derives the same
-    sessions via the lag+cumsum formulation (independent algorithms must
-    agree on the boundaries)."""
-    return temporal.session_window_agg(load_events(spark, sf_dir))
-
-
-def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming twin of events_tumbling — same oracle."""
-    return run_tumbling_once(spark, sf_dir)
-
-
-def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming twin of events_sliding — same oracle."""
-    from breweries_etl_spark.streaming.events import run_sliding_once
-
-    return run_sliding_once(spark, sf_dir)
-
-
-def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked streaming session_window driven to completion — same
-    session boundaries as the batch lag+cumsum oracle."""
-    from breweries_etl_spark.streaming.events import run_session_window_once
-
-    return run_session_window_once(spark, sf_dir)
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.text_stats(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.quality_score(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.lang_id(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.fingerprint(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.token_counts(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.rolling_hash(load_table(spark, sf_dir, "documents"))
-
-
-def q_window_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic-function breadth in one pass per customer order history:
-    lag/lead, first_value, percent_rank, cume_dist — all over a single
-    window partitioning (one shuffle)."""
-    from pyspark.sql import Window as W
-
-    orders = load_table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.first("o_orderkey").over(w).alias("first_order"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF terms per document (smoothed idf, deterministic
-    tie-breaks)."""
-    return text.tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
-
-
-def q_hash_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible 20% corpus subsample keyed by content hash (identical
-    membership on any partitioning/engine)."""
-    from breweries_etl_spark.operators.sampling import hash_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return hash_sample(docs, "doc_id", 0.2).select("doc_id", "lang")
-
-
-def q_train_test_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-keyed train/test split: per-language row counts of both
-    sides (rows can never migrate between splits across reruns)."""
-    from breweries_etl_spark.operators.sampling import train_test_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    train, test = train_test_split(docs, "doc_id", test_fraction=0.1)
-    return (
-        train.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).withColumn(
-            "split", F.lit("train")
-        )
-        .unionByName(
-            test.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).withColumn(
-                "split", F.lit("test")
-            )
-        )
-    )
-
-
-def q_unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT (melt): wide per-order metrics to long (metric, value)
-    rows — the inverse of pivot, via the native unpivot API."""
-    orders = load_table(spark, sf_dir, "orders")
-    wide = orders.select(
-        "o_orderkey",
-        F.col("o_totalprice").alias("totalprice"),
-        F.col("o_custkey").cast("double").alias("custkey_num"),
-    )
-    return wide.unpivot(
-        ids=["o_orderkey"],
-        values=["totalprice", "custkey_num"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    )
-
-
-def q_order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile(10) decile assignment over a total order (value, key) —
-    per-decile counts and exact-decimal sums."""
-    from pyspark.sql import Window as W
-
-    orders = load_table(spark, sf_dir, "orders")
-    # explicit NULLS LAST (Spark ASC = NULLS FIRST, DuckDB = NULLS
-    # LAST: a NULL price rotated every ntile boundary; degen sweep r10)
-    w = W.orderBy(
-        F.asc_nulls_last("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("decile", F.ntile(10).over(w).cast("long"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(12,2)"))
-            .cast("double")
-            .alias("total"),
-        )
-    )
-
-
-def q_price_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation computed from EXACT decimal component sums
-    (n, Σx, Σy, Σxy, Σx², Σy²) with the final arithmetic in double —
-    reproducible at any parallelism, unlike streaming corr aggregates
-    whose update order varies."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(12,2)")
-    y = F.col("l_extendedprice").cast("decimal(12,2)")
-    agg = li.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
-    corr = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / F.sqrt(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
-    return agg.select(F.round(corr, 6).alias("qty_price_corr"))
-
-
-def q_top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus term-frequency: top-5 word tokens per source (explode →
-    count → ranking window)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source",
-        F.explode(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9_]+"), 0)).alias(
-            "term"
-        ),
-    )
-    counts = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("n"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("source").orderBy(F.desc("n"), F.asc("term"))
-    return (
-        counts.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("source", "term", "n", "rank")
-    )
-
-
-def q_hourly_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct users per tumbling hour (windowed count-distinct)."""
-    ev = load_events(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count_distinct("user_id").alias("unique_users"))
-        .select(
-            F.col("w.start").cast("long").alias("window_start"), "unique_users"
-        )
-    )
-
-
-def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-frame feature rows from the (stub-decoded) video sampler —
-    the md5-derived fake features are deterministic, so DuckDB replays
-    them exactly via hex arithmetic (oracle below)."""
-    assets = multimodal.assets_from_documents(load_table(spark, sf_dir, "documents"))
-    frames = multimodal.frame_sample(assets)
-    return frames.select(
-        "asset_id",
-        "frame_idx",
-        F.round(
-            F.aggregate(F.col("features"), F.lit(0.0), lambda a, x: a + x), 6
-        ).alias("feature_sum"),
-    )
-
-
-def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (KMeans-partitioned) approximate top-k → rows-only (KMeans
-    init is seed-deterministic but not SQL-expressible)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.dedup_exact(load_table(spark, sf_dir, "documents"))
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5
-    )
-
-
-def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dups (approximate candidate generation; exact
-    verification). Not SQL-expressible → rows-only driver check."""
-    return dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), threshold=0.5
-    )
-
-
-def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AllPairs/PPJoin prefix-filtered EXACT Jaccard pairs — provably
-    the same pair set as ground truth, so it shares the exact-Jaccard
-    oracle shape (candidate strategy differs, result set cannot)."""
-    return dedup.prefix_filtered_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5
-    )
-
-
-def q_dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact near-dup vs a persisted base index: every 7th
-    doc re-arrives with an offset id and is matched against the base
-    corpus (docs not ≡0 mod 5) by prefix-filtered Jaccard ≥ 0.5."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    incoming = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1_000_000
-    )
-    return dedup.prefix_jaccard_incremental(base, incoming, threshold=0.5)
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-≤3 pairs (Pandas-UDF signatures); the md5
-    bit-vote is deterministic, so the DuckDB oracle replays it exactly
-    and brute-forces the radius-3 pairs (identical to the pigeonhole
-    banding by its exactness guarantee)."""
-    return dedup.simhash_near_duplicates(load_table(spark, sf_dir, "documents"))
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.embedding_near_duplicates(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.35
-    )
-
-
-def q_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite corpus-prep pipeline (operators/corpus.py): lang filter →
-    quality floor → exact dedup → hash split → per-split accounting, all
-    signals computed in one scan."""
-    from breweries_etl_spark.operators.corpus import training_data_prep
-
-    return training_data_prep(load_table(spark, sf_dir, "documents"))
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the exact n-gram Jaccard pair list
-    (operators/graph.py): iterative min-label propagation; oracled
-    against a DuckDB recursive-CTE reachability closure."""
-    from breweries_etl_spark.operators.graph import connected_components
-
-    # the scope frees the pair caches once the components are checkpointed
-    with lifecycle.scope():
-        pairs = dedup.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"), threshold=0.5
-        )
-        return connected_components(pairs)
-
-
-def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cluster canonical summary (cluster sizes, docs to drop)."""
-    from breweries_etl_spark.operators.graph import dedup_cluster_canonical
-
-    # the scope frees the pair caches once the components are checkpointed
-    with lifecycle.scope():
-        pairs = dedup.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"), threshold=0.5
-        )
-        return dedup_cluster_canonical(pairs)
-
-
-def q_streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (click → purchase attribution) driven
-    to completion over the static events table; oracled against the
-    equivalent batch range join."""
-    from breweries_etl_spark.streaming.events import run_click_attribution_once
-
-    return run_click_attribution_once(spark, sf_dir)
-
-
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view→click→purchase funnel via chained conditional-min
-    aggregations on one shuffle key."""
-    from breweries_etl_spark.operators.behavior import funnel_steps
-
-    return funnel_steps(load_events(spark, sf_dir))
-
-
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention on epoch-day integers (first-active day ×
-    day offset × distinct actives)."""
-    from breweries_etl_spark.operators.behavior import retention_cohorts
-
-    return retention_cohorts(load_events(spark, sf_dir))
-
-
-def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hop-distance distribution over the customer–supplier bipartite
-    graph (nodes encoded 2·custkey / 2·suppkey+1) from the minimum
-    customer node — frontier BFS with per-round checkpoints, oracled by
-    a DuckDB recursive CTE (integer levels are engine-deterministic)."""
-    from breweries_etl_spark.operators.graph import bfs_levels
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    # seed = min customer node, derived from the MATERIALIZED edge
-    # relation inside bfs_levels (callable form) — deriving it from
-    # the edges plan here would re-run the orders⋈lineitem join +
-    # distinct a second time (the dunn uncached-multi-consumer class)
-    levels = bfs_levels(
-        edges, lambda e: e.agg(F.min("src").alias("node")), max_hops=6
-    )
-    return (
-        levels.groupBy(F.col("level").cast("long").alias("level"))
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-    )
-
-
-def q_decontaminate_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-TRAIN-doc overlap vs the TEST shingle vocabulary with the
-    removal flag (GPT-3-style decontamination, actionable form). Same
-    hash split as contamination_check, roles reversed."""
-    from breweries_etl_spark.operators.corpus import decontaminate_train
-    from breweries_etl_spark.operators.sampling import train_test_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    train, test_split = train_test_split(docs, "doc_id", 0.1)
-    return decontaminate_train(train, test_split)
-
-
-def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup-cluster-aware train/test split: same-cluster docs land
-    on the same side (hash of the cluster id, not the doc id)."""
-    from breweries_etl_spark.operators.corpus import leakage_safe_split
-
-    return leakage_safe_split(load_table(spark, sf_dir, "documents"))
-
-
-def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 dimension build from the event change-log: one validity row
-    per (user, event_type run) with version numbers and current flag."""
-    from breweries_etl_spark.operators.temporal import scd2_history
-
-    out = scd2_history(load_events(spark, sf_dir))
-    return out.withColumn("version", F.col("version").cast("long"))
-
-
-def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge overlapping 10-minute event intervals per user
-    (gaps-and-islands) and report island counts + covered time."""
-    from breweries_etl_spark.operators.temporal import interval_coverage
-
-    return interval_coverage(load_events(spark, sf_dir))
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition counts between event types."""
-    from breweries_etl_spark.operators.temporal import transition_counts
-
-    return transition_counts(load_events(spark, sf_dir))
-
-
-def q_streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming foreachBatch MERGE sink driven over the events table in
-    4 micro-batches (maxFilesPerTrigger=1): final snapshot is the latest
-    event per user under the total order (us, event_id) — deterministic
-    for ANY batch split, so the streaming sink itself is oracle-checked
-    (argmax window in DuckDB), not just its batch twin."""
-    import os
-    import tempfile
-
-    from breweries_etl_spark.streaming.merge_sink import (
-        read_latest_snapshot,
-        streaming_latest_merge_sink,
-    )
-
-    events = load_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="spark_merge_sink_")
-    src = os.path.join(work, "src")
-    tbl = os.path.join(work, "table")
-    projected = events.select(
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("us"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    projected.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(projected.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = streaming_latest_merge_sink(
-        stream, tbl, "user_id", ["us", "event_id"], query_name="latest_state_q"
-    )
-    q.awaitTermination()
-    snap = read_latest_snapshot(spark, tbl)
-    return snap.select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.col("us").alias("last_us"),
-        F.col("value").alias("last_value"),
-    )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy token-budget sequence packing over the document corpus
-    (16 hash shards, 512-token bins); the DuckDB oracle replays the
-    sequential first-fit decision per shard with a recursive CTE."""
-    from breweries_etl_spark.operators.corpus import pack_sequences
-
-    return pack_sequences(
-        load_table(spark, sf_dir, "documents"), budget=512, n_shards=16
-    )
-
-
-def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric per-vector int8 quantization of the embeddings table,
-    exploded to (vec_id, pos, qval, scale) so codes hash-compare
-    exactly against the DuckDB list formulation."""
-    from breweries_etl_spark.operators.similarity import quantize_int8
-
-    return quantize_int8(load_table(spark, sf_dir, "embeddings"))
-
-
-def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Record linkage over a shared-SQL dirty-customer-record relation:
-    block → levenshtein ≤ 1 → connected components; singletons keep
-    their own id. Block sizes here are ~100× below the 1000 cap, so
-    Spark's capped candidate generation and the uncapped oracle see
-    identical pairs."""
-    from breweries_etl_spark.functions.synthetic import entity_raw
-    from breweries_etl_spark.operators.entity import resolve_entities
-
-    return resolve_entities(entity_raw(spark, sf_dir))
-
-
-def q_order_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-priority z-score outliers of order totalprice, with the mean
-    and variance derived from exact decimal sums so the z values
-    themselves hash-match the oracle."""
-    from breweries_etl_spark.operators.profiling import zscore_outliers_exact
-
-    return zscore_outliers_exact(
-        load_table(spark, sf_dir, "orders"),
-        "o_totalprice",
-        "o_orderkey",
-        "o_orderpriority",
-        z=1.5,
-    )
-
-
-def q_feature_hash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick sparse featurization of the document corpus
-    (1024-dim md5 buckets, no vocabulary join)."""
-    from breweries_etl_spark.operators.text import feature_hash_counts
-
-    return feature_hash_counts(load_table(spark, sf_dir, "documents"), dim=1024)
-
-
-def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark-decontamination signal: for each test-split document,
-    the fraction of its distinct trigram shingles present anywhere in
-    the train split (hash-keyed 90/10 split, so membership is
-    engine-invariant and the oracle can reproduce it)."""
-    from breweries_etl_spark.operators.corpus import contamination_check
-    from breweries_etl_spark.operators.sampling import train_test_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    train, test = train_test_split(docs, "doc_id", test_fraction=0.1)
-    return contamination_check(train, test, n=3)
-
-
-def q_graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global triangle census of the part co-purchase graph (parts are
-    adjacent when some order contains both; orders with >50 distinct
-    parts dropped — same cap as the oracle). Degree-ordered-orientation
-    counting; DuckDB oracle uses the count-identical canonical (src<dst)
-    orientation."""
-    from breweries_etl_spark.operators.dedup import bucket_candidate_pairs
-    from breweries_etl_spark.operators.graph import triangle_stats
-
-    li = load_table(spark, sf_dir, "lineitem")
-    membership = li.select("l_orderkey", "l_partkey").distinct()
-    edges = bucket_candidate_pairs(membership, ["l_orderkey"], "l_partkey", 50)
-    return triangle_stats(edges, "id_a", "id_b")
-
-
-def q_graph_pagerank_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 PageRank nodes of the directed customer→supplier purchase
-    graph (all suppliers dangling — exercises the mass-redistribution
-    path). Oracled by a fixed-5-iteration UNROLLED power iteration in
-    DuckDB; ranks round to 9 decimals on both sides (absolute float
-    divergence from summation order is ~1e-15, far below the rounding),
-    and the top-20 cut orders by the ROUNDED rank + node so both engines
-    select the same rows. Accuracy is additionally pinned by the 1e-9
-    numpy comparison in test_graph.py."""
-    from breweries_etl_spark.operators.graph import pagerank
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    ranks = pagerank(edges, iterations=5).select(
-        "node", F.round("rank", 9).alias("rank")
-    )
-    return ranks.orderBy(F.col("rank").desc(), F.col("node")).limit(20)
-
-
-def q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user OLS value slope from exact component sums (native)."""
-    from breweries_etl_spark.operators.behavior import value_trend
-
-    return value_trend(load_events(spark, sf_dir))
-
-
-def q_user_value_trend_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map applyInPandas twin — same oracle as user_value_trend."""
-    from breweries_etl_spark.operators.behavior import value_trend_pandas
-
-    return value_trend_pandas(load_events(spark, sf_dir))
-
-
-def q_approx_order_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based percentiles (percentile_approx / KLL-style) — the
-    100 TB path where exact sort-based quantiles are a full shuffle.
-    Rows-only for the driver (sketch internals differ from DuckDB's);
-    tests bound the error vs the exact quantiles instead."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.agg(
-        *[
-            F.percentile_approx("o_totalprice", p, 10_000).alias(f"p{int(p * 100)}")
-            for p in (0.5, 0.9, 0.99)
-        ]
-    )
-
-
-def q_order_percentiles_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact twin of ``approx_order_percentiles``: percentile_disc picks
-    an ACTUAL element (no interpolation arithmetic), so Spark and DuckDB
-    agree bit-for-bit and the sketch-based operator gets a hash-matched
-    sibling in the driver gate."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.agg(
-        *[
-            F.expr(
-                f"percentile_disc({p}) WITHIN GROUP (ORDER BY o_totalprice)"
-            ).alias(f"p{int(p * 100)}")
-            for p in (0.5, 0.9, 0.99)
-        ]
-    )
-
-
-def q_distinct_users_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact twin of ``approx_distinct_users`` (count distinct vs HLL
-    sketch) — gives the distinct-count operator a hash-matched row while
-    the sketch variant stays rows-only."""
-    ev = load_events(spark, sf_dir)
-    return ev.agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.countDistinct("event_id").alias("n_events"),
-    )
-
-
-def q_range_join_error_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bin-bucketed point-in-interval join with no equi-key: non-error
-    events landing inside each error's 10-minute incident window."""
-    from breweries_etl_spark.operators.rangejoin import error_window_coverage
-
-    return error_window_coverage(load_events(spark, sf_dir))
-
-
-def q_range_join_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bin-bucketed interval-overlap join: concurrent sessions across
-    different users, exactly-once via the later-start-bin rule."""
-    from breweries_etl_spark.operators.rangejoin import session_overlap_pairs
-
-    return session_overlap_pairs(load_events(spark, sf_dir))
-
-
-def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = similarity.brute_force_topk(
-        emb.filter(F.col("vec_id") < 10), emb, k=5
-    )
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-def q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k — seeded hyperplanes are
-    deterministic, so the DuckDB oracle replays signatures, multi-probe
-    fan-out, and the cosine rank exactly (literal plane arrays)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = similarity.lsh_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-def q_multimodal_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    assets = multimodal.assets_from_documents(load_table(spark, sf_dir, "documents"))
-    return multimodal.asset_metadata_stats(assets)
-
-
-def q_multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image pipeline end-to-end: per-document deterministic
-    grayscale PNG (pixel = (doc_id·31 + 7x + 13y) mod 256) encoded by
-    the pure-stdlib codec, then decoded back and reduced to exact
-    integer pixel stats — the closed-form pixel function makes the
-    decode output SQL-replayable (functions/pngcodec.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    assets = multimodal.synthetic_image_assets(docs, width=16, height=16)
-    return multimodal.image_stats(assets)
-
-
-def q_image_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual near-dup image pairs over the REAL PNG decode path:
-    aHash (8x8 nearest resample, exact-integer mean threshold) grouped
-    through the shared bounded-bucket pair machinery. The synthetic
-    closed-form pixel function (multimodal.synthetic_image_assets) makes
-    the hash — and hence the pair set — SQL-replayable."""
-    docs = load_table(spark, sf_dir, "documents")
-    assets = multimodal.synthetic_image_assets(docs, width=16, height=16)
-    return multimodal.image_ahash_dup_pairs(assets)
-
-
-def q_duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional exact-substring duplication spans (Lee et al. 2022
-    arXiv:2107.06499) — per-doc duplicated-window, merged-span, and
-    removable-token stats at k=8 tokens."""
-    from breweries_etl_spark.operators.corpus import duplicate_span_stats
-
-    return duplicate_span_stats(load_table(spark, sf_dir, "documents"))
-
-
-def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance-resampling weights (Xie et al. 2023
-    arXiv:2302.03169): hashed-unigram log-likelihood ratio of the
-    target-language slice vs the raw corpus, per document."""
-    from breweries_etl_spark.operators.corpus import dsir_importance_weights
-
-    return dsir_importance_weights(load_table(spark, sf_dir, "documents"))
-
-
-def q_multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """decode → nearest-neighbor resample to 8×8 → stats. Source pixel
-    selection is floor(dst·src/dst) = even coordinates, so the oracle
-    sums the pixel function over x,y ∈ {0,2,…,14} exactly."""
-    docs = load_table(spark, sf_dir, "documents")
-    assets = multimodal.synthetic_image_assets(docs, width=16, height=16)
-    return multimodal.image_stats(assets, resize_to=(8, 8))
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary decode→feature plumbing (deterministic fake extractor) —
-    md5-derived features replayed exactly by the DuckDB oracle."""
-    assets = multimodal.assets_from_documents(load_table(spark, sf_dir, "documents"))
-    feats = multimodal.fake_feature_extractor(assets)
-    return feats.select(
-        "asset_id",
-        F.round(
-            F.aggregate(F.col("features"), F.lit(0.0), lambda a, x: a + x), 6
-        ).alias("feature_sum"),
-    )
-
-
-def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width 20-bucket histogram of o_totalprice — single-row
-    min/max broadcast back, fixed-order IEEE bucket arithmetic so edges
-    and assignment hash-match any engine."""
-    from breweries_etl_spark.operators.profiling import equi_width_histogram
-
-    return equi_width_histogram(load_table(spark, sf_dir, "orders"), "o_totalprice", 20)
-
-
-def q_stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language hash-stratified sample (deterministic sampleBy):
-    en 50%, de 100%, fr/es 25%, zh 10% — membership is content-hash
-    keyed, so the sample is identical on any partitioning/engine."""
-    from breweries_etl_spark.operators.sampling import stratified_hash_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return stratified_hash_sample(
-        docs,
-        "doc_id",
-        "lang",
-        {"en": 0.5, "de": 1.0, "fr": 0.25, "es": 0.25, "zh": 0.1},
-    ).select("doc_id", "lang")
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping fixed-token chunking (64-token windows, stride 48):
-    sequence+posexplode in-row, chunk content as md5 so the output stays
-    narrow."""
-    from breweries_etl_spark.operators.corpus import chunk_documents
-
-    return chunk_documents(
-        load_table(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
-    )
-
-
-def q_grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS ((status, priority), (status), ()) with
-    grouping_id — the finer/coarser/global rollup in ONE aggregation pass
-    (Spark expands sets in a single Expand+HashAggregate, no re-scan)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupingSets(
-            [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
-            "o_orderstatus",
-            "o_orderpriority",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.grouping_id().alias("gid"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "n_orders", F.col("gid").cast("long").alias("gid"))
-    )
-
-
-def q_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar datetime-function surface over o_orderdate: truncation,
-    month arithmetic, last-day, ISO weekday/week, day difference from the
-    epoch of the dataset — one pass, all codegen, dialect-portable."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.select(
-        "o_orderkey",
-        F.year("o_orderdate").cast("long").alias("yr"),
-        F.quarter("o_orderdate").cast("long").alias("qtr"),
-        F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month_start"),
-        F.add_months(F.col("o_orderdate"), 3).alias("plus3m"),
-        F.last_day(F.col("o_orderdate")).alias("eom"),
-        (F.weekday(F.col("o_orderdate")) + 1).cast("long").alias("isodow"),
-        F.weekofyear(F.col("o_orderdate")).cast("long").alias("isoweek"),
-        F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("date"))
-        .cast("long")
-        .alias("days_since_92"),
-    )
-
-
-def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-function surface: per-order sorted line-number array derived
-    scalars (size, sliced sum, min/max, membership, position) — the
-    collect_list is made deterministic by sort_array before anything
-    reads element order."""
-    li = load_table(spark, sf_dir, "lineitem")
-    arr = F.sort_array(F.collect_list("l_linenumber"))
-    return (
-        li.groupBy("l_orderkey")
-        .agg(arr.alias("arr"))
-        .select(
-            "l_orderkey",
-            F.size("arr").cast("long").alias("n_lines"),
-            F.aggregate(
-                F.slice("arr", 1, 3), F.lit(0).cast("long"), lambda a, x: a + x
-            ).alias("sum_first3"),
-            F.array_max("arr").cast("long").alias("max_line"),
-            F.array_min("arr").cast("long").alias("min_line"),
-            F.array_contains("arr", F.lit(4)).alias("has_line4"),
-            F.array_position("arr", F.lit(2)).cast("long").alias("pos_line2"),
-        )
-    )
-
-
-def q_skew_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 heaviest l_suppkey join keys with row share and heat factor
-    (cnt / uniform-key average) — the pre-join skew diagnostic."""
-    from breweries_etl_spark.operators.profiling import key_skew_profile
-
-    return key_skew_profile(load_table(spark, sf_dir, "lineitem"), "l_suppkey", 20)
-
-
-def q_token_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus token-frequency profile + Zipf exponent (log-log OLS over
-    the top-100 tokens) — TakeOrderedAndProject top-k, exact-sums fit."""
-    return text.token_zipf_stats(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style per-document repetition signals (word / distinct-word
-    counts, duplicate-word and top-word/top-bigram fractions) — one
-    tagged explode, two hash aggregations."""
-    from breweries_etl_spark.operators.filtering import repetition_stats
-
-    return repetition_stats(load_table(spark, sf_dir, "documents"))
-
-
-def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher Table-A1 keep/drop flags (word count, mean word length,
-    symbol ratio, stopword floor, bigram repetition cap) with the numeric
-    signals behind them; `keep` is the conjunction."""
-    from breweries_etl_spark.operators.filtering import gopher_quality_flags
-
-    return gopher_quality_flags(load_table(spark, sf_dir, "documents"))
-
-
-def q_corpus_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document fraction of distinct 5-gram shingles shared with at
-    least one other document — window-count doc frequency, no self-join,
-    no pair blowup."""
-    from breweries_etl_spark.operators.filtering import ngram_dup_fraction
-
-    return ngram_dup_fraction(load_table(spark, sf_dir, "documents"), n=5)
-
-
-def q_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid assignment of every embedding to the 8
-    lowest-id seed vectors (cosine, ties to smallest cluster) — the
-    deterministic coarse-quantizer step of semantic dedup."""
-    from breweries_etl_spark.operators.clustering import (
-        centroid_assign,
-        leading_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return centroid_assign(emb, leading_centroids(emb, 8))
-
-
-def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-ordered quota sample of at most 40 members per centroid
-    cluster — the data-mixing primitive that flattens over-represented
-    domains; reproducible on any partitioning."""
-    from breweries_etl_spark.operators.clustering import (
-        centroid_assign,
-        cluster_balanced_sample,
-        leading_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned = centroid_assign(emb, leading_centroids(emb, 8))
-    return cluster_balanced_sample(assigned, 40)
-
-
-def q_corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language resampling weights to hit a target mixture (observed
-    share vs target share, multiplier = target/observed)."""
-    from breweries_etl_spark.operators.clustering import mixture_weights
-
-    return mixture_weights(
-        load_table(spark, sf_dir, "documents"),
-        "lang",
-        {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15},
-    )
-
-
-# ---------------------------------------------------------------------------
-# Oracle SQL
-# ---------------------------------------------------------------------------
-
-# Shared text-normalization fragments (must replicate
-# operators/text.py:normalize_text_expr / shingles_expr semantics; note
-# DuckDB regexp_replace needs the 'g' flag — Spark's is global by default).
-_NORM = (
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),"
-    " ' +', ' ', 'g'))"
-)
-_TOKS = "regexp_extract_all(text, '[A-Za-z0-9_]+')"
-# whole-word regex counts (must mirror operators/text.py word_list_re)
-_STOP_HITS = f"len(regexp_extract_all(text, '{text.STOPWORDS_RE}'))"
-
-
-def _marker_hits(lang: str) -> str:
-    return (
-        f"len(regexp_extract_all(lower(text), '{text.word_list_re(text.LANG_MARKERS[lang])}'))"
-    )
-
-
-def _shingle_cte(n: int) -> str:
-    """Distinct word n-gram shingles (DuckDB list slice is 1-based,
-    inclusive-end: w[i:i+n-1] is the n-gram at i)."""
-    return f"""
-norm AS (SELECT doc_id, {_NORM} AS nt FROM documents),
-words AS (SELECT doc_id, nt, string_split(nt, ' ') AS w FROM norm),
-sh AS (
-  SELECT doc_id, nt,
-    list_distinct([array_to_string(w[i:i+{n - 1}], ' ')
-                   FOR i IN range(1, len(w)-{n - 2})]) AS s
-  FROM words
-)
-"""
-
-
-def _capped_collapse_cte(n: int, max_df: int) -> str:
-    """Mirror of the engine's scale-path candidate machinery
-    (operators/dedup.py: _set_group_collapse + bucket_candidate_pairs):
-    collapse shingle-set-identical docs to a min-id representative,
-    count document frequency over DISTINCT sets, drop shingles with
-    df > max_df, and emit candidate representative pairs. Both the
-    engine and this oracle now run the SAME capped algorithm, so parity
-    no longer depends on no shingle exceeding the cap in the test data
-    (ADVICE r3). Ends with CTEs: g (doc_id, s, gk), rep (gk, rid, rs),
-    cand (ra, rb)."""
-    return f"""
-WITH {_shingle_cte(n)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-g AS (SELECT doc_id, s, md5(CAST(list_sort(s) AS VARCHAR)) AS gk FROM sh_ok),
-rep AS (SELECT gk, min(doc_id) AS rid, arg_min(s, doc_id) AS rs FROM g GROUP BY gk),
-inv AS (SELECT rid, unnest(rs) AS shingle FROM rep),
-kept AS (SELECT shingle FROM inv GROUP BY shingle
-         HAVING count(*) BETWEEN 2 AND {max_df}),
-invk AS (SELECT i.rid, i.shingle FROM inv i JOIN kept k USING (shingle)),
-cand AS (
-  SELECT DISTINCT a.rid AS ra, b.rid AS rb
-  FROM invk a JOIN invk b ON a.shingle = b.shingle AND a.rid < b.rid
-)
-"""
-
-
-_TUMBLING_SQL = """
-SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS window_start,
-  event_type, count(*) AS n_events,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2
-"""
-
-_SLIDING_SQL = """
-WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS t, value FROM events),
-ks AS (SELECT unnest([0, 1, 2, 3]) AS k),
-w AS (
-  SELECT (epoch_us(t) // 900000000) * 900 - k * 900 AS window_start, value
-  FROM e CROSS JOIN ks
-)
-SELECT window_start, count(*) AS n_events,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM w GROUP BY window_start
-"""
-
-_SESSION_WINDOW_SQL = """
-WITH e AS (
-  SELECT user_id, event_id, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-  FROM e
-), sess AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-)
-SELECT user_id, count(*) AS n_events, min(us) AS start_us, max(us) AS end_us,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM sess GROUP BY user_id, session_id
-"""
-
-_GREATEST = "greatest(h_en, h_es, h_de, h_fr)"
-
-def _ddw(c: str) -> str:
-    """Portable wide DECIMAL->DOUBLE split (SQL twin of
-    operators/hypotests.dec_double_wide) for INTEGER sums past 2^63:
-    exact hugeint split at 10^9 on abs(s), two int64->double paths,
-    sign reapplied as an exact multiply — sign-safe, so Spark decimal
-    % and DuckDB HUGEINT % never see a negative operand."""
-    return (
-        f"(CASE WHEN ({c}) < 0 THEN -1.0 ELSE 1.0 END *"
-        f" (CAST(CAST(abs({c}) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9"
-        f" + CAST(CAST(abs({c}) AS HUGEINT) % 1000000000 AS DOUBLE)))"
-    )
-
-
-def _ddwf(c: str) -> str:
-    """Portable wide DECIMAL->DOUBLE for FRACTION-CARRYING sums past
-    2^63 (SQL twin of operators/hypotests.dec_double_wide_frac):
-    integer part via the sign-safe hugeint split, exact sub-1 fraction
-    in one final IEEE add."""
-    return (
-        f"(CASE WHEN ({c}) < 0 THEN -1.0 ELSE 1.0 END *"
-        f" (CAST(CAST(floor(abs({c})) AS HUGEINT) // 1000000000 AS DOUBLE)"
-        f" * 1e9"
-        f" + CAST(CAST(floor(abs({c})) AS HUGEINT) % 1000000000 AS DOUBLE)"
-        f" + CAST(abs({c}) - floor(abs({c})) AS DOUBLE)))"
-    )
-
-
-
-_ORACLES: dict[str, str] = {
-    "gold_by_type_location": _SILVER_CTE
-    + """
-SELECT brewery_type, location, state, city, count(*) AS brewery_count
-FROM silver GROUP BY brewery_type, location, state, city
-""",
-    "gold_by_location": _SILVER_CTE
-    + """
-SELECT location, state, city, count(*) AS brewery_count
-FROM silver GROUP BY location, state, city
-""",
-    "silver_transform": _SILVER_CTE + "SELECT * FROM silver",
-    "brewery_type_recode": f"""
-WITH raw AS ({BREWERY_RAW_SQL})
-SELECT name,
-  CASE
-    WHEN brewery_type IS NULL THEN 'unknown'
-    WHEN lower(trim(brewery_type)) IN {_CANON} THEN lower(trim(brewery_type))
-    ELSE 'other'
-  END AS brewery_type_std
-FROM raw
-""",
-    "quarantine_valid": f"""
-WITH raw AS ({BREWERY_RAW_SQL})
-SELECT id, name, brewery_type, state, city, country
-FROM raw WHERE {_VALID_FILTER}
-""",
-    "quarantine_rejected": f"""
-WITH raw AS ({BREWERY_RAW_SQL})
-SELECT name, id, country, 'missing_key_values' AS quarantine_reason
-FROM raw WHERE NOT ({_VALID_FILTER})
-""",
-    "null_counts": f"""
-WITH raw AS ({BREWERY_RAW_SQL})
-SELECT
-  {", ".join(f"count(CASE WHEN {c} IS NULL THEN 1 END) AS {c}_nulls" for c in KEY_FIELDS)}
-FROM raw
-""",
-    "count_distinct_location": _SILVER_CTE
-    + "SELECT count(DISTINCT location) AS location_distinct FROM silver",
-    "duplicate_key_count": """
-SELECT CAST(coalesce(sum(CASE WHEN cnt > 1 THEN cnt - 1 END), 0) AS BIGINT) AS duplicate_count
-FROM (SELECT l_orderkey, count(*) AS cnt FROM lineitem GROUP BY l_orderkey)
-""",
-    "value_counts_events": """
-SELECT event_type, count(*) AS count FROM events GROUP BY event_type
-""",
-    "row_count_lineitem": "SELECT count(*) AS n_rows FROM lineitem",
-    "union_fanin": """
-SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 2 = 0
-UNION ALL
-SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 2 = 1
-""",
-    "sample_top3": """
-SELECT c_name FROM customer WHERE c_name IS NOT NULL ORDER BY c_name LIMIT 3
-""",
-    # ----- relational analytics (joins/windows/rollup; SURVEY.md §2.6 note)
-    "tpch_q1": f"""
-SELECT l_returnflag, l_linestatus,
-  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-  {sql_sum_money('l_extendedprice', 'sum_base_price')},
-  CAST(SUM({sql_disc_price()}) AS DOUBLE) AS sum_disc_price,
-  CAST(SUM({sql_charge()}) AS DOUBLE) AS sum_charge,
-  CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) / count(*) AS avg_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_price,
-  CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_disc,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "tpch_q3": f"""
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-  CAST(SUM({sql_disc_price()}) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < DATE '1998-03-15'
-  AND l_shipdate > DATE '1998-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderdate, l_orderkey
-LIMIT 10
-""",
-    "tpch_q5": f"""
-SELECT n_name, CAST(SUM({sql_disc_price()}) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""",
-    "tpch_q6": """
-SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-FROM lineitem
-WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-""",
-    "topk_orders_per_customer": """
-SELECT o_custkey, o_orderkey, o_totalprice, rank_in_customer
-FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)
-      AS rank_in_customer
-  FROM orders
-)
-WHERE rank_in_customer <= 3
-""",
-    "rollup_orders": """
--- Spark grouping-sets DEVIATION, mirrored deliberately: the SQL
--- standard (and DuckDB) emit the grand-total () grouping-set row even
--- for an EMPTY table; Spark emits nothing. The EXISTS guard reproduces
--- Spark's behavior exactly and is a no-op on any non-empty input
--- (empty-table sweep r10).
-WITH __r AS (
-SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price,
-  grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS grouping_level
-FROM orders
-GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-) SELECT * FROM __r WHERE EXISTS (SELECT 1 FROM orders)
-""",
-    "semi_join_customers": """
-SELECT c_custkey, c_name, c_mktsegment FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-""",
-    "anti_join_customers": """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders
-  WHERE o_custkey = c_custkey AND o_orderdate >= DATE '2000-01-01'
-)
-""",
-    # ----- batch-3 relational analytics
-    "tpch_q10": f"""
-SELECT c_custkey, c_name, n_name, CAST(SUM({sql_disc_price()}) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-07-01'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey LIMIT 20
-""",
-    "tpch_q14_promo": f"""
-SELECT round(100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%' THEN {sql_disc_price()} ELSE 0 END) AS DOUBLE)
-  / CAST(SUM({sql_disc_price()}) AS DOUBLE), 6) AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= DATE '1996-03-01' AND l_shipdate < DATE '1996-04-01'
-""",
-    "tpch_q18_large_orders": """
-WITH big AS (
-  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS BIGINT)) > 150
-)
-SELECT c_custkey, c_name, l_orderkey, o_totalprice, sum_qty
-FROM big JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-""",
-    "tpch_q19_brand_quantity": f"""
-SELECT CAST(SUM({sql_disc_price()}) AS DOUBLE) AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND l_quantity BETWEEN 1 AND 15)
-   OR (p_brand = 'Brand#2' AND l_quantity BETWEEN 10 AND 25)
-   OR (p_brand = 'Brand#3' AND l_quantity BETWEEN 20 AND 35)
-""",
-    "tpch_q13_order_distribution": """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-  GROUP BY c_custkey
-)
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""",
-    "tpch_q15_top_supplier": f"""
-WITH revenue AS (
-  SELECT l_suppkey, CAST(SUM({sql_disc_price()}) AS DOUBLE) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM revenue JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-""",
-    "tpch_q17_small_quantity": """
-WITH avg_qty AS (
-  SELECT l_partkey AS pk,
-    (CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) / count(*)) * 0.2 AS qty_threshold
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / 7.0 AS avg_yearly
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN avg_qty ON l_partkey = pk
-WHERE p_brand = 'Brand#3' AND l_quantity < qty_threshold
-""",
-    # ----- TPC-H completion set (round 2)
-    "tpch_q4_priority": """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem
-    WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-  )
-GROUP BY o_orderpriority ORDER BY o_orderpriority
-""",
-    "tpch_q8_market_share": f"""
-SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-  round(
-    CAST(SUM(CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END) AS DOUBLE)
-      / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
-FROM (
-  SELECT o_orderdate, n1.n_name AS supp_nation, {sql_disc_price()} AS volume,
-    n2.n_regionkey AS c_rk
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN part ON l_partkey = p_partkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-  WHERE p_type = 'PROMO'
-    AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1998-01-01'
-)
-JOIN region ON c_rk = r_regionkey
-WHERE r_name = 'ASIA'
-GROUP BY o_year ORDER BY o_year
-""",
-    "tpch_q9_nation_profit": f"""
-SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-  CAST(SUM({sql_disc_price()}
-    - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(0.60 AS DECIMAL(3,2))
-      * CAST(l_quantity AS BIGINT)) AS DOUBLE) AS sum_profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%red%'
-GROUP BY n_name, o_year ORDER BY n_name, o_year DESC
-""",
-    "tpch_q12_late_priority": """
-SELECT l_linestatus,
-  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
-    AS high_line_count,
-  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT)
-    AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-GROUP BY l_linestatus ORDER BY l_linestatus
-""",
-    "tpch_q21_waiting_supplier": """
-WITH lo AS (
-  SELECT l_orderkey, l_suppkey,
-    l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-)
-SELECT s_name, count(*) AS numwait
-FROM lo l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-WHERE l1.late
-  AND EXISTS (
-    SELECT 1 FROM lo l2
-    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
-  )
-  AND NOT EXISTS (
-    SELECT 1 FROM lo l3
-    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-      AND l3.late
-  )
-GROUP BY s_name ORDER BY numwait DESC, s_name
-""",
-    "tpch_q22_dormant_customers": """
-SELECT c_mktsegment, count(*) AS numcust,
-  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS totacctbal
-FROM customer
-WHERE c_acctbal > (
-    SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / count(*)
-    FROM customer WHERE c_acctbal > 0
-  )
-  AND NOT EXISTS (
-    SELECT 1 FROM orders
-    WHERE o_custkey = c_custkey AND o_orderdate >= DATE '1999-01-01'
-  )
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-""",
-    "tpch_q2_best_supplier": """
-WITH bridge AS (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey FROM lineitem),
-cand AS (
-  SELECT ps_partkey, s_acctbal, s_name, n_name, p_partkey, p_name
-  FROM bridge
-  JOIN part ON ps_partkey = p_partkey
-  JOIN supplier ON ps_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE p_type = 'LARGE' AND p_size >= 25 AND r_name = 'EUROPE'
-)
-SELECT s_acctbal, s_name, n_name, p_partkey, p_name
-FROM cand c1
-WHERE s_acctbal = (SELECT max(s_acctbal) FROM cand c2 WHERE c2.ps_partkey = c1.ps_partkey)
-ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-""",
-    "tpch_q11_important_stock": """
-WITH national AS (
-  SELECT l_partkey AS ps_partkey,
-    CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS value
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  WHERE n_name = 'NATION_3'
-  GROUP BY l_partkey
-)
-SELECT ps_partkey, round(value, 6) AS value
-FROM national
-WHERE value > (SELECT SUM(value) / 1000.0 FROM national)
-ORDER BY value DESC, ps_partkey
-""",
-    "tpch_q16_supplier_count": """
-WITH bridge AS (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey FROM lineitem)
-SELECT p_brand, p_type, p_size, count(DISTINCT ps_suppkey) AS supplier_cnt
-FROM bridge JOIN part ON ps_partkey = p_partkey
-WHERE p_brand <> 'Brand#1' AND p_size IN (10, 20, 30, 40, 49)
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-""",
-    "tpch_q20_part_shippers": """
-WITH heavy AS (
-  SELECT l_suppkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS shipped_qty
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_name LIKE '%blue%'
-    AND l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-  GROUP BY l_suppkey
-  HAVING SUM(CAST(l_quantity AS BIGINT)) > 100
-)
-SELECT s_suppkey, s_name, shipped_qty
-FROM supplier
-JOIN nation ON s_nationkey = n_nationkey
-JOIN heavy ON s_suppkey = l_suppkey
-WHERE n_name = 'NATION_5'
-ORDER BY s_name
-""",
-    "cube_orders": """
--- Spark grouping-sets DEVIATION, mirrored deliberately: the SQL
--- standard (and DuckDB) emit the grand-total () grouping-set row even
--- for an EMPTY table; Spark emits nothing. The EXISTS guard reproduces
--- Spark's behavior exactly and is a no-op on any non-empty input
--- (empty-table sweep r10).
-WITH __r AS (
-SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price,
-  grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS grouping_level
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-) SELECT * FROM __r WHERE EXISTS (SELECT 1 FROM orders)
-""",
-    "pivot_events": """
-SELECT user_id,
-  count(*) FILTER (event_type = 'click') AS n_click,
-  count(*) FILTER (event_type = 'error') AS n_error,
-  count(*) FILTER (event_type = 'purchase') AS n_purchase,
-  count(*) FILTER (event_type = 'signup') AS n_signup,
-  count(*) FILTER (event_type = 'view') AS n_view
-FROM events GROUP BY user_id
-""",
-    "price_quantiles": """
-SELECT round(quantile_cont(l_extendedprice, 0.25), 6) AS q25,
-       round(quantile_cont(l_extendedprice, 0.5), 6) AS q50,
-       round(quantile_cont(l_extendedprice, 0.75), 6) AS q75
-FROM lineitem
-""",
-    "running_aggregates": """
-WITH e AS (
-  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-    CAST(value AS DECIMAL(12,2)) AS v
-  FROM events
-)
-SELECT event_id, user_id, ts_us,
-  CAST(SUM(v) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total,
-  CAST(SUM(v) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
-    / count(*) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                     ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS avg_last3
-FROM e
-""",
-    "customers_above_nation_avg": """
-WITH na AS (
-  SELECT c_nationkey,
-    CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS nation_avg
-  FROM customer GROUP BY c_nationkey
-)
-SELECT c_custkey, c_acctbal, round(nation_avg, 6) AS nation_avg
-FROM customer JOIN na USING (c_nationkey)
-WHERE c_acctbal > nation_avg
-""",
-    "asof_purchase_view": """
-WITH p AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id
-  FROM events WHERE event_type = 'purchase'
-), v AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value
-  FROM events WHERE event_type = 'view'
-)
-SELECT p.user_id, p.ts_us, p.event_id,
-  v.value AS asof_value, v.ts_us AS asof_ts_us
-FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts_us <= p.ts_us
-""",
-    "profile_orders": "\nUNION ALL\n".join(
-        f"""SELECT '{c}' AS col_name, count({c}) AS n_nonnull,
-  count(CASE WHEN {c} IS NULL THEN 1 END) AS n_nulls,
-  count(DISTINCT {c}) AS n_distinct,
-  CAST(min({c}) AS STRING) AS min_value, CAST(max({c}) AS STRING) AS max_value
-FROM orders"""
-        for c in _PROFILE_COLS
-    ),
-    "dedup_incremental": f"""
-WITH keyed AS (SELECT doc_id, md5({_NORM}) AS content_key FROM documents),
-base AS (SELECT content_key, min(doc_id) AS base_id FROM keyed GROUP BY content_key),
-incoming AS (SELECT doc_id + 1000000 AS incoming_id, content_key
-             FROM keyed WHERE doc_id % 5 = 0)
-SELECT incoming_id, base_id FROM incoming JOIN base USING (content_key)
-""",
-    "text_redact_pii": """
-WITH injected AS (
-  SELECT doc_id,
-    substring(text, 1, 40) || ' contact user' || CAST(doc_id AS STRING)
-      || '@example.com or +1 (555) 000-' || CAST(doc_id AS STRING) || ' now' AS text
-  FROM documents
-)
-SELECT doc_id,
-  regexp_replace(
-    regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-    '\\+?[0-9][0-9()\\- ]{7,}[0-9]', '<PHONE>', 'g') AS redacted
-FROM injected
-""",
-    "pipeline_e2e": f"""
-WITH raw AS (
-  SELECT
-    CASE WHEN n_nationkey % 7 = 0 THEN NULL ELSE CAST(n_nationkey AS STRING) END AS id,
-    CASE n_nationkey % 4 WHEN 0 THEN ' Micro ' WHEN 1 THEN 'NANO'
-      WHEN 2 THEN 'taproom' ELSE NULL END AS brewery_type,
-    lower(n_name) AS state,
-    'city_' || CAST(n_nationkey % 5 AS STRING) AS city,
-    'country_' || CAST(n_regionkey AS STRING) AS country
-  FROM nation
-), valid AS (
-  SELECT * FROM raw
-  WHERE id IS NOT NULL AND brewery_type IS NOT NULL AND state IS NOT NULL
-    AND city IS NOT NULL AND country IS NOT NULL
-), silver AS (
-  SELECT
-    CASE WHEN lower(trim(brewery_type)) IN {_CANON}
-         THEN lower(trim(brewery_type)) ELSE 'other' END AS brewery_type,
-    upper(country) AS location, upper(state) AS state, upper(city) AS city
-  FROM valid
-)
-SELECT brewery_type, location, state, city, count(*) AS brewery_count
-FROM silver GROUP BY brewery_type, location, state, city
-""",
-    "json_extract_stats": """
-SELECT event_type, count(*) AS n,
-  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-FROM events GROUP BY event_type
-""",
-    "variant_props_stats": """
-SELECT event_type, count(*) AS n,
-  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-  MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k
-FROM events GROUP BY event_type
-""",
-    "set_intersect": """
-SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-INTERSECT
-SELECT o_custkey FROM orders WHERE o_totalprice > 300000
-""",
-    "set_except": """
-SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-EXCEPT
-SELECT o_custkey FROM orders WHERE o_totalprice > 300000
-""",
-    "explode_shingle_vocab": f"""
-WITH {_shingle_cte(3)},
-inv AS (SELECT unnest(s) AS shingle FROM sh WHERE len(s) > 0)
-SELECT count(DISTINCT shingle) AS n_distinct_shingles, count(*) AS n_shingles
-FROM inv
-""",
-    "string_functions": """
-SELECT c_custkey,
-  substring(c_name, 1, 8) AS name8,
-  lpad(CAST(c_custkey AS STRING), 8, '0') AS padded,
-  replace(c_name, 'Customer', 'Cust') AS swapped,
-  reverse(substring(c_name, 1, 8)) AS rev8,
-  split_part(c_name, '#', 2) AS num_part,
-  lower(c_mktsegment) AS segment_lc
-FROM customer
-""",
-    "tpch_q7_nation_volume": f"""
-SELECT supp_nation, cust_nation, l_year, CAST(SUM(dp) AS DOUBLE) AS revenue
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-    year(l_shipdate) AS l_year, {sql_disc_price()} AS dp
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-  WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1998-01-01'
-    AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-)
-GROUP BY supp_nation, cust_nation, l_year
-""",
-    "hourly_heavy_hitters": """
-WITH hourly AS (
-  SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS window_start,
-    event_type, count(*) AS n
-  FROM events GROUP BY 1, 2
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY window_start
-                               ORDER BY n DESC,
-                                        event_type ASC NULLS LAST) AS rank
-  FROM hourly
-)
-SELECT window_start, event_type, n, rank FROM ranked WHERE rank <= 2
-""",
-    "full_outer_nation_counts": """
-WITH c AS (
-  SELECT c_nationkey AS nationkey, count(*) AS n_customers
-  FROM customer GROUP BY c_nationkey
-), s AS (
-  SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
-  FROM supplier GROUP BY s_nationkey
-)
-SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-  coalesce(n_customers, 0) AS n_customers,
-  coalesce(n_suppliers, 0) AS n_suppliers
-FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
-""",
-    "merge_upsert": """
-WITH updates AS (
-  SELECT c_custkey, c_name || '_u' AS c_name,
-    round(c_acctbal + 100.0, 2) AS c_acctbal, c_mktsegment
-  FROM customer WHERE c_custkey % 10 = 0
-)
-SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-WHERE c_custkey NOT IN (SELECT c_custkey FROM updates)
-UNION ALL
-SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM updates
-""",
-    "salted_value_counts": """
-SELECT event_type, count(*) AS count FROM events GROUP BY event_type
-""",
-    "custom_datasource": """
-SELECT CASE WHEN n_nationkey % 2 = 0 THEN 'micro' ELSE 'taproom' END AS brewery_type,
-  count(*) AS n
-FROM nation GROUP BY 1
-""",
-    # ----- temporal / streaming
-    "events_tumbling": _TUMBLING_SQL,
-    "streaming_tumbling": _TUMBLING_SQL,
-    "events_sliding": _SLIDING_SQL,
-    "streaming_sliding": _SLIDING_SQL,
-    "events_sessionize": """
-WITH e AS (
-  SELECT user_id, event_id, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-  FROM e
-), sess AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-  count(*) AS n_events, min(us) AS start_us, max(us) AS end_us,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM sess GROUP BY user_id, session_id
-""",
-    "events_session_window": _SESSION_WINDOW_SQL,
-    "streaming_session_window": _SESSION_WINDOW_SQL,
-    # ----- text analysis
-    "text_stats": f"""
-SELECT doc_id,
-  length(text) AS n_chars_actual,
-  len({_TOKS}) AS n_tokens,
-  len(regexp_extract_all(text, '[.,;:!?]')) AS n_punct,
-  length(regexp_replace(text, '[^A-Za-z0-9_]', '', 'g')) AS n_alnum_chars,
-  round(CASE WHEN len({_TOKS}) > 0
-    THEN CAST(length(regexp_replace(text, '[^A-Za-z0-9_]', '', 'g')) AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE)
-    ELSE 0.0 END, 6) AS avg_token_len,
-  round(CASE WHEN len({_TOKS}) > 0
-    THEN CAST({_STOP_HITS} AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE)
-    ELSE 0.0 END, 6) AS stopword_ratio
-FROM documents
-""",
-    "text_quality": f"""
-SELECT doc_id, round(
-  0.5 * least(1.0, CAST(len({_TOKS}) AS DOUBLE) / 100.0)
-  + 0.3 * (CASE WHEN len({_TOKS}) > 0
-      THEN CAST({_STOP_HITS} AS DOUBLE)
-           / CAST(len({_TOKS}) AS DOUBLE) ELSE 0.0 END)
-  + 0.2 * (1.0 - CASE WHEN len({_TOKS}) > 0
-      THEN least(1.0, CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
-                      / CAST(len({_TOKS}) AS DOUBLE)) ELSE 0.0 END)
-, 6) AS quality_score
-FROM documents
-""",
-    "text_lang_id": f"""
-WITH hits AS (
-  SELECT doc_id, text,
-    {_marker_hits("en")} AS h_en,
-    {_marker_hits("es")} AS h_es,
-    {_marker_hits("de")} AS h_de,
-    {_marker_hits("fr")} AS h_fr
-  FROM documents
-)
-SELECT doc_id,
-  CASE WHEN len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]')) > 0 THEN 'zh'
-       WHEN {_GREATEST} = 0 THEN 'unknown'
-       WHEN h_en = {_GREATEST} THEN 'en'
-       WHEN h_es = {_GREATEST} THEN 'es'
-       WHEN h_de = {_GREATEST} THEN 'de'
-       ELSE 'fr' END AS lang_pred
-FROM hits
-""",
-    "text_fingerprint": f"""
-WITH {_shingle_cte(5)}
-SELECT doc_id,
-  coalesce(list_aggregate([md5(x) FOR x IN s], 'min'), md5(nt)) AS fingerprint,
-  md5(nt) AS content_md5
-FROM sh
-""",
-    "window_function_suite": """
-SELECT o_custkey, o_orderkey,
-  lag(o_totalprice) OVER w AS prev_price,
-  lead(o_totalprice) OVER w AS next_price,
-  first_value(o_orderkey) OVER w AS first_order,
-  round(percent_rank() OVER w, 6) AS pct_rank,
-  round(cume_dist() OVER w, 6) AS cume
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-""",
-    "tfidf_top_terms": """
-WITH tokens AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM tokens GROUP BY doc_id, term
-), docfreq AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY term
-), n AS (SELECT count(*) AS n_docs FROM documents),
-scored AS (
-  SELECT doc_id, term,
-    round(tf * (ln(CAST(n_docs + 1 AS DOUBLE) / (df + 1)) + 1.0), 6) AS tfidf
-  FROM tf JOIN docfreq USING (term) CROSS JOIN n
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, tfidf, rank FROM ranked WHERE rank <= 3
-""",
-    "dedup_clusters": f"""
-WITH RECURSIVE {_shingle_cte(3)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh_ok),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-),
-j AS (
-  SELECT id_a, id_b,
-    CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-      / CAST(len(list_distinct(list_concat(x.s, y.s))) AS DOUBLE) AS jac
-  FROM cand JOIN sh_ok x ON x.doc_id = id_a JOIN sh_ok y ON y.doc_id = id_b
-),
-pairs AS (SELECT id_a, id_b FROM j WHERE round(jac, 6) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-reach AS (
-  SELECT node, node AS r FROM nodes
-  UNION
-  SELECT e.dst AS node, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
-)
-SELECT node AS doc_id, min(r) AS cluster_id
-FROM reach GROUP BY node ORDER BY doc_id
-""",
-    "dedup_cluster_stats": f"""
-WITH RECURSIVE {_shingle_cte(3)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh_ok),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-),
-j AS (
-  SELECT id_a, id_b,
-    CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-      / CAST(len(list_distinct(list_concat(x.s, y.s))) AS DOUBLE) AS jac
-  FROM cand JOIN sh_ok x ON x.doc_id = id_a JOIN sh_ok y ON y.doc_id = id_b
-),
-pairs AS (SELECT id_a, id_b FROM j WHERE round(jac, 6) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-reach AS (
-  SELECT node, node AS r FROM nodes
-  UNION
-  SELECT e.dst AS node, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
-),
-cc AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node)
-SELECT cluster_id, count(*) AS cluster_size,
-  count(*) - 1 AS n_to_drop
-FROM cc GROUP BY cluster_id ORDER BY cluster_id
-""",
-    "user_value_trend": """
-WITH e AS (
-  SELECT user_id,
-    CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 - 1704067200 AS BIGINT) AS x,
-    CAST(value AS DECIMAL(12,2)) AS y
-  FROM events
-), agg AS (
-  SELECT user_id, count(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-    SUM(x * y) AS sxy, SUM(x * x) AS sxx
-  FROM e GROUP BY user_id
-)
-SELECT user_id,
-  round(CAST(CAST(n AS DECIMAL(38,2)) * sxy - CAST(sx AS DECIMAL(38,2)) * sy
-             AS DOUBLE)
-        / CAST(n * sxx - sx * sx AS DOUBLE) * 3600.0, 6) AS slope_per_hour,
-  n AS n_events
-FROM agg WHERE n * sxx - sx * sx > 0
-""",
-    "funnel_conversion": """
-WITH e AS (
-  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events
-  WHERE user_id IS NOT NULL
-), t1 AS (
-  SELECT user_id, min(us) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id
-), t2 AS (
-  SELECT e.user_id, min(us) AS t2 FROM e JOIN t1 ON e.user_id = t1.user_id
-  WHERE e.event_type = 'click' AND e.us >= t1.t1 GROUP BY e.user_id
-), t3 AS (
-  SELECT e.user_id, min(us) AS t3 FROM e JOIN t2 ON e.user_id = t2.user_id
-  WHERE e.event_type = 'purchase' AND e.us >= t2.t2 GROUP BY e.user_id
-)
-SELECT (SELECT count(*) FROM t1) AS n_step1,
-       (SELECT count(*) FROM t2) AS n_step2,
-       (SELECT count(*) FROM t3) AS n_step3
-""",
-    "retention_cohorts": """
-WITH a AS (
-  SELECT DISTINCT user_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS active_day
-  FROM events
-), c AS (
-  SELECT user_id, min(active_day) AS cohort_day FROM a GROUP BY user_id
-)
-SELECT cohort_day, active_day - cohort_day AS day_offset,
-  count(DISTINCT a.user_id) AS n_active_users
-FROM a JOIN c ON a.user_id = c.user_id
-WHERE active_day - cohort_day <= 30
-GROUP BY cohort_day, day_offset
-""",
-    "graph_bfs_levels": """
-WITH RECURSIVE e0 AS (
-  SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), edges AS (
-  SELECT src, dst FROM e0 UNION SELECT dst AS src, src AS dst FROM e0
-), reach AS (
-  SELECT CAST((SELECT min(src) FROM e0) AS BIGINT) AS node, 0 AS level
-  UNION
-  SELECT e.dst AS node, r.level + 1 AS level
-  FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.level < 6
-), dist AS (
-  SELECT node, min(level) AS lvl FROM reach GROUP BY node
-)
-SELECT CAST(lvl AS BIGINT) AS level, count(*) AS n_nodes
-FROM dist GROUP BY lvl
-""",
-    "pack_sequences": """
-WITH RECURSIVE t AS (
-  SELECT doc_id,
-    CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) % 16
-      AS shard,
-    CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+')) AS BIGINT) AS n_tokens
-  FROM documents
-), o AS (
-  SELECT doc_id, shard, n_tokens,
-    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-  FROM t
-), packed AS (
-  SELECT doc_id, shard, n_tokens, rn,
-    CAST(0 AS BIGINT) AS bin_idx, n_tokens AS cum
-  FROM o WHERE rn = 1
-  UNION ALL
-  SELECT o.doc_id, o.shard, o.n_tokens, o.rn,
-    CASE WHEN p.cum + o.n_tokens > 512 THEN p.bin_idx + 1 ELSE p.bin_idx END,
-    CASE WHEN p.cum + o.n_tokens > 512 THEN o.n_tokens
-         ELSE p.cum + o.n_tokens END
-  FROM packed p JOIN o ON o.shard = p.shard AND o.rn = p.rn + 1
-)
-SELECT doc_id, shard, n_tokens, bin_idx FROM packed
-""",
-    "entity_resolution": f"""
-WITH RECURSIVE recs AS ({ENTITY_RAW_SQL}),
-cand AS (
-  SELECT a.record_id AS id_a, b.record_id AS id_b
-  FROM recs a JOIN recs b ON a.block = b.block AND a.record_id < b.record_id
-  WHERE levenshtein(a.name, b.name) <= 1
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM cand
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM cand
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-reach AS (
-  SELECT node, node AS r FROM nodes
-  UNION
-  SELECT e.dst AS node, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
-),
-cc AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node)
-SELECT recs.record_id, COALESCE(cc.cluster_id, recs.record_id) AS entity_id
-FROM recs LEFT JOIN cc ON recs.record_id = cc.node
-""",
-    "order_price_outliers": """
-WITH stats AS (
-  SELECT o_orderpriority, count(*) AS n,
-    SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS s,
-    SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2))
-             * CAST(o_totalprice AS DECIMAL(12,2)) AS DECIMAL(38,4))) AS ss
-  FROM orders GROUP BY o_orderpriority
-), d AS (
-  SELECT o_orderpriority, n, CAST(s AS DOUBLE) AS sd, CAST(ss AS DOUBLE) AS ssd
-  FROM stats
-)
-SELECT o_orderkey, o.o_orderpriority,
-  round((CAST(o_totalprice AS DOUBLE) - sd / n)
-        / sqrt((ssd - sd * sd / n) / n), 6) AS zscore
-FROM orders o JOIN d ON o.o_orderpriority = d.o_orderpriority
-WHERE (ssd - sd * sd / n) / n > 0
-  AND abs(round((CAST(o_totalprice AS DOUBLE) - sd / n)
-        / sqrt((ssd - sd * sd / n) / n), 6)) > 1.5
-""",
-    "feature_hash_counts": """
-SELECT doc_id,
-  CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT) % 1024 AS feature_idx,
-  count(*) AS n
-FROM (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS tok
-  FROM documents
-)
-GROUP BY doc_id, feature_idx
-""",
-    "quantize_embeddings": """
-WITH s AS (
-  SELECT vec_id, embedding,
-    CAST(list_max([abs(x) FOR x IN embedding]) AS DOUBLE) / 127.0 AS scale
-  FROM embeddings
-), u AS (
-  SELECT vec_id, scale,
-    unnest(range(1, len(embedding) + 1)) AS i,
-    unnest(embedding) AS x
-  FROM s
-)
-SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
-  CAST(CASE WHEN scale = 0 THEN 0
-       WHEN CAST(x AS DOUBLE) / scale >= 0
-         THEN floor(CAST(x AS DOUBLE) / scale + 0.5)
-       ELSE ceil(CAST(x AS DOUBLE) / scale - 0.5) END AS BIGINT) AS qval,
-  round(scale, 6) AS scale
-FROM u
-""",
-    "streaming_latest_state": """
-WITH e AS (
-  SELECT user_id, event_type, value,
-    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    row_number() OVER (
-      PARTITION BY user_id
-      ORDER BY epoch_us(CAST(ts AS TIMESTAMP)) DESC, event_id DESC
-    ) AS rn
-  FROM events
-)
-SELECT user_id, event_type AS last_event_type, us AS last_us,
-  value AS last_value
-FROM e WHERE rn = 1
-""",
-    "scd2_user_state": """
-WITH e AS (
-  SELECT user_id, event_type, event_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(event_type) OVER (
-      PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id
-    ) AS prev
-  FROM events
-), ch AS (
-  SELECT user_id, event_type, us, event_id FROM e
-  WHERE prev IS NULL OR prev <> event_type
-)
-SELECT user_id, event_type AS state, us AS valid_from_us,
-  lead(us) OVER w AS valid_to_us,
-  row_number() OVER w AS version,
-  lead(us) OVER w IS NULL AS is_current
-FROM ch WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-""",
-    "interval_coverage": """
-WITH base AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS s,
-    epoch_us(CAST(ts AS TIMESTAMP)) + 600000000 AS e
-  FROM events
-), flagged AS (
-  SELECT user_id, s, e,
-    CASE WHEN max(e) OVER (PARTITION BY user_id ORDER BY s, e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              IS NULL
-      OR s > max(e) OVER (PARTITION BY user_id ORDER BY s, e
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-    THEN 1 ELSE 0 END AS new_island
-  FROM base
-), numbered AS (
-  SELECT user_id, s, e,
-    sum(new_island) OVER (PARTITION BY user_id ORDER BY s, e
-                          ROWS UNBOUNDED PRECEDING) AS island
-  FROM flagged
-), islands AS (
-  SELECT user_id, island, count(*) AS n_intervals,
-    min(s) AS island_s, max(e) AS island_e
-  FROM numbered GROUP BY user_id, island
-)
-SELECT user_id, CAST(SUM(n_intervals) AS BIGINT) AS n_intervals,
-  count(*) AS n_islands,
-  CAST(SUM(island_e - island_s) AS BIGINT) AS covered_us
-FROM islands GROUP BY user_id
-""",
-    "event_transitions": """
-WITH e AS (
-  SELECT user_id, event_type,
-    lag(event_type) OVER (
-      PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id
-    ) AS from_state
-  FROM events
-)
-SELECT from_state, event_type AS to_state,
-  count(*) AS n_transitions, count(DISTINCT user_id) AS n_users
-FROM e WHERE from_state IS NOT NULL
-GROUP BY from_state, to_state
-""",
-    "contamination_check": f"""
-WITH {_shingle_cte(3)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-b AS (
-  SELECT doc_id,
-    CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) AS bucket
-  FROM documents
-),
-test_sh AS (
-  SELECT sh_ok.doc_id, unnest(s) AS sg
-  FROM sh_ok JOIN b ON sh_ok.doc_id = b.doc_id WHERE bucket < 6553
-),
-train_vocab AS (
-  SELECT DISTINCT unnest(s) AS sg
-  FROM sh_ok JOIN b ON sh_ok.doc_id = b.doc_id WHERE bucket >= 6553
-),
-tot AS (SELECT doc_id, count(*) AS n_shingles FROM test_sh GROUP BY doc_id),
-hit AS (
-  SELECT doc_id, count(*) AS n_overlap FROM test_sh
-  WHERE sg IN (SELECT sg FROM train_vocab) GROUP BY doc_id
-)
-SELECT t.doc_id, t.n_shingles,
-  COALESCE(h.n_overlap, 0) AS n_overlap,
-  round(COALESCE(h.n_overlap, 0) / t.n_shingles, 6) AS contamination
-FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
-""",
-    "graph_triangle_stats": """
-WITH m AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), ok AS (
-  SELECT o FROM m GROUP BY o HAVING count(*) BETWEEN 2 AND 50
-), e AS (
-  SELECT DISTINCT a.p AS src, b.p AS dst
-  FROM m a JOIN m b ON a.o = b.o AND a.p < b.p
-  JOIN ok ON a.o = ok.o
-), deg AS (
-  SELECT n, count(*) AS deg FROM (
-    SELECT src AS n FROM e UNION ALL SELECT dst AS n FROM e
-  ) GROUP BY n
-)
-SELECT
-  (SELECT count(*) FROM deg) AS n_nodes,
-  (SELECT count(*) FROM e) AS n_edges,
-  (SELECT CAST(SUM(deg * (deg - 1) // 2) AS BIGINT) FROM deg) AS n_wedges,
-  (SELECT count(*) FROM e e1
-     JOIN e e2 ON e1.dst = e2.src
-     JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst) AS n_triangles,
-  round(3.0 * (SELECT count(*) FROM e e1
-     JOIN e e2 ON e1.dst = e2.src
-     JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst)
-    / (SELECT SUM(deg * (deg - 1) // 2) FROM deg), 6) AS clustering
-""",
-    "range_join_error_window": """
-WITH err AS (
-  SELECT event_id AS err_id, epoch_us(CAST(ts AS TIMESTAMP)) AS s,
-    epoch_us(CAST(ts AS TIMESTAMP)) + 600000000 AS e
-  FROM events WHERE event_type = 'error'
-), pts AS (
-  SELECT event_id, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-  FROM events WHERE event_type <> 'error'
-)
-SELECT err_id, count(*) AS n_covered,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM err JOIN pts ON us >= s AND us < e
-GROUP BY err_id
-""",
-    "range_join_session_overlap": """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-  FROM e
-), sess AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-), s AS (
-  SELECT user_id, min(us) AS s_us, max(us) AS e_us
-  FROM sess GROUP BY user_id, session_id
-)
-SELECT a.user_id AS user_a, b.user_id AS user_b,
-  count(*) AS n_session_pairs,
-  CAST(SUM(least(a.e_us, b.e_us) - greatest(a.s_us, b.s_us)) AS BIGINT)
-    AS total_overlap_us
-FROM s a JOIN s b
-  ON a.user_id < b.user_id AND a.s_us <= b.e_us AND b.s_us <= a.e_us
-GROUP BY user_a, user_b
-""",
-    "streaming_click_attribution": """
-WITH c AS (
-  SELECT event_id AS click_id, user_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) AS c_us
-  FROM events WHERE event_type = 'click'
-), p AS (
-  SELECT event_id AS purchase_id, user_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) AS p_us
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT click_id, purchase_id, p.user_id,
-  (p_us // 1000000) - (c_us // 1000000) AS gap_seconds
-FROM p JOIN c ON p.user_id = c.user_id
-  AND p_us >= c_us AND p_us <= c_us + 1800000000
-""",
-    "training_data_prep": f"""
-WITH hits AS (
-  SELECT doc_id, text,
-    {_marker_hits("en")} AS h_en,
-    {_marker_hits("es")} AS h_es,
-    {_marker_hits("de")} AS h_de,
-    {_marker_hits("fr")} AS h_fr
-  FROM documents
-), base AS (
-  SELECT doc_id,
-    CASE WHEN len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]')) > 0 THEN 'zh'
-         WHEN {_GREATEST} = 0 THEN 'unknown'
-         WHEN h_en = {_GREATEST} THEN 'en'
-         WHEN h_es = {_GREATEST} THEN 'es'
-         WHEN h_de = {_GREATEST} THEN 'de'
-         ELSE 'fr' END AS lang_pred,
-    round(
-      0.5 * least(1.0, CAST(len({_TOKS}) AS DOUBLE) / 100.0)
-      + 0.3 * (CASE WHEN len({_TOKS}) > 0
-          THEN CAST({_STOP_HITS} AS DOUBLE)
-               / CAST(len({_TOKS}) AS DOUBLE) ELSE 0.0 END)
-      + 0.2 * (1.0 - CASE WHEN len({_TOKS}) > 0
-          THEN least(1.0, CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
-                          / CAST(len({_TOKS}) AS DOUBLE)) ELSE 0.0 END)
-    , 6) AS q,
-    CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-    md5({_NORM}) AS content_key,
-    CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) AS bucket
-  FROM hits
-), filtered AS (
-  SELECT * FROM base WHERE lang_pred = 'en' AND q >= 0.5
-), keepers AS (
-  SELECT content_key, min(doc_id) AS doc_id FROM filtered GROUP BY content_key
-)
-SELECT CASE WHEN bucket < 6553 THEN 'test' ELSE 'train' END AS split,
-  count(*) AS n_docs,
-  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-  round(CAST(SUM(CAST(q AS DECIMAL(10,6))) AS DOUBLE) / count(*), 6) AS avg_quality
-FROM filtered f
-JOIN keepers k ON f.doc_id = k.doc_id
-GROUP BY split ORDER BY split
-""",
-    "hash_sample_documents": """
-SELECT doc_id, lang FROM documents
-WHERE CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) < 13107
-""",
-    "train_test_counts": """
-WITH b AS (
-  SELECT lang,
-    CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) AS bucket
-  FROM documents
-)
-SELECT lang, count(*) AS n, 'train' AS split FROM b WHERE bucket >= 6553 GROUP BY lang
-UNION ALL
-SELECT lang, count(*) AS n, 'test' AS split FROM b WHERE bucket < 6553 GROUP BY lang
-""",
-    "unpivot_order_metrics": """
-SELECT o_orderkey, 'totalprice' AS metric, o_totalprice AS value FROM orders
-UNION ALL
-SELECT o_orderkey, 'custkey_num' AS metric, CAST(o_custkey AS DOUBLE) AS value FROM orders
-""",
-    "order_value_deciles": """
-WITH d AS (
-  SELECT o_totalprice,
-    ntile(10) OVER (ORDER BY o_totalprice ASC NULLS LAST,
-                    o_orderkey ASC) AS decile
-  FROM orders
-)
-SELECT CAST(decile AS BIGINT) AS decile, count(*) AS n,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-FROM d GROUP BY decile
-""",
-    "price_quantity_corr": """
-WITH s AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-    CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sx,
-    CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sy,
-    CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sxy,
-    CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sxx,
-    CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS syy
-  FROM lineitem
-)
-SELECT round((n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-  AS qty_price_corr
-FROM s
-""",
-    "top_terms_per_source": """
-WITH toks AS (
-  SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS term
-  FROM documents
-), counts AS (
-  SELECT source, term, count(*) AS n FROM toks GROUP BY source, term
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY source ORDER BY n DESC, term ASC) AS rank
-  FROM counts
-)
-SELECT source, term, n, rank FROM ranked WHERE rank <= 5
-""",
-    "hourly_unique_users": """
-SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS window_start,
-  count(DISTINCT user_id) AS unique_users
-FROM events GROUP BY 1
-""",
-    "text_rolling_hash": f"""
-SELECT doc_id,
-  CASE WHEN {_NORM} IS NULL THEN NULL ELSE
-  list_reduce(
-    list_prepend(CAST(0 AS BIGINT), [CAST(ascii(c) AS BIGINT) FOR c IN string_split({_NORM}, '')]),
-    (acc, c) -> (acc * 31 + c) % 1000000007
-  ) END AS rolling_hash
-FROM documents
-""",
-    "text_token_counts": """
-SELECT doc_id,
-  CASE WHEN trim(text) = '' THEN 0
-       ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_ws_tokens,
-  len(regexp_extract_all(text, '[A-Za-z0-9_]+')) AS n_word_tokens,
-  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+')) AS n_bpe_tokens
-FROM documents
-""",
-    # ----- dedup
-    "dedup_exact": f"""
-SELECT md5({_NORM}) AS content_key, min(doc_id) AS doc_id
-FROM documents GROUP BY 1
-""",
-    # Uncapped inverted-index ground truth — the oracle for the
-    # prefix-filter (AllPairs) query, which is provably exact.
-    "dedup_prefix_jaccard": f"""
-WITH {_shingle_cte(3)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh_ok),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-),
-j AS (
-  SELECT id_a, id_b,
-    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-          / CAST(len(list_distinct(list_concat(x.s, y.s))) AS DOUBLE), 6) AS jaccard
-  FROM cand JOIN sh_ok x ON x.doc_id = id_a JOIN sh_ok y ON y.doc_id = id_b
-)
-SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.5
-""",
-    "embedding_neardup": """
-WITH p AS (
-  SELECT a.vec_id AS ia, b.vec_id AS ib,
-    unnest(a.embedding)::DOUBLE AS x, unnest(b.embedding)::DOUBLE AS y
-  FROM embeddings a JOIN embeddings b
-    ON a.label = b.label AND a.vec_id < b.vec_id
-), d AS (
-  SELECT ia, ib, sum(x*y) AS dp, sum(x*x) AS na, sum(y*y) AS nb
-  FROM p GROUP BY ia, ib
-)
-SELECT ia AS id_a, ib AS id_b, round(dp / sqrt(na * nb), 6) AS cosine
-FROM d WHERE round(dp / sqrt(na * nb), 6) >= 0.35
-""",
-    # ----- similarity search
-    "similarity_topk": """
-WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-p AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-    unnest(q.embedding)::DOUBLE AS x, unnest(c.embedding)::DOUBLE AS y
-  FROM q JOIN embeddings c ON c.vec_id <> q.vec_id
-), d AS (
-  SELECT query_id, corpus_id, sum(x*y) AS dp, sum(x*x) AS na, sum(y*y) AS nb
-  FROM p GROUP BY query_id, corpus_id
-), s AS (
-  SELECT query_id, corpus_id, round(dp / sqrt(na * nb), 6) AS cosine FROM d
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, corpus_id ASC) AS rank
-  FROM s
-)
-SELECT query_id, corpus_id, cosine, rank FROM r WHERE rank <= 5
-""",
-    # ----- multimodal
-    "multimodal_meta_stats": """
--- GROUP BY the constant mime: the engine side is a real groupBy that
--- yields ZERO rows on an empty corpus; a bare global aggregate here
--- fabricated one (empty-table sweep r10)
-SELECT 'text/plain' AS mime, count(*) AS n_assets,
-  CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-  CAST(MAX(octet_length(encode(text))) AS BIGINT) AS max_bytes
-FROM documents GROUP BY 1
-""",
-}
-
-
-# Same exact result, different physical strategy — shared oracle.
-_ORACLES["similarity_topk_pandas"] = _ORACLES["similarity_topk"]
-_ORACLES["user_value_trend_pandas"] = _ORACLES["user_value_trend"]
-
-_ORACLES["price_histogram"] = """
-WITH st AS (
-  SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx FROM orders
-), b AS (
-  SELECT CASE WHEN mx = mn THEN 1
-              ELSE least(20, CAST(floor(((o_totalprice - mn) / (mx - mn)) * 20)
-                                 AS BIGINT) + 1) END AS bucket,
-         mn, mx
-  FROM orders, st
-)
-SELECT bucket,
-  round(mn + (bucket - 1) * (mx - mn) / 20, 6) AS lo,
-  round(mn + bucket * (mx - mn) / 20, 6) AS hi,
-  CAST(count(*) AS BIGINT) AS cnt
-FROM b GROUP BY bucket, mn, mx
-"""
-
-# ----- corpus prep: stratified sampling / chunking
-_ORACLES["stratified_sample_docs"] = """
-SELECT doc_id, lang FROM documents
-WHERE CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) <
-  CASE lang WHEN 'en' THEN 32768 WHEN 'de' THEN 65536 WHEN 'fr' THEN 16384
-            WHEN 'es' THEN 16384 WHEN 'zh' THEN 6553 ELSE 0 END
-"""
-
-_ORACLES["chunk_documents"] = f"""
-WITH base AS (
-  SELECT doc_id, string_split({_NORM}, ' ') AS toks FROM documents
-), s AS (
-  SELECT doc_id, toks, unnest(generate_series(1, len(toks), 48)) AS start
-  FROM base WHERE len(toks) > 0 AND toks[1] <> ''
-)
-SELECT doc_id,
-  CAST((start - 1) // 48 AS BIGINT) AS chunk_idx,
-  CAST(start AS BIGINT) AS start_token,
-  CAST(len(toks[start:start + 63]) AS BIGINT) AS n_chunk_tokens,
-  md5(array_to_string(toks[start:start + 63], ' ')) AS chunk_md5
-FROM s
-"""
-
-# ----- SQL-surface breadth: grouping sets / datetime / arrays / skew
-_ORACLES["grouping_sets_orders"] = """
--- Spark grouping-sets DEVIATION, mirrored deliberately: the SQL
--- standard (and DuckDB) emit the grand-total () grouping-set row even
--- for an EMPTY table; Spark emits nothing. The EXISTS guard reproduces
--- Spark's behavior exactly and is a no-op on any non-empty input
--- (empty-table sweep r10).
-WITH __r AS (
-SELECT o_orderstatus, o_orderpriority,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-) SELECT * FROM __r WHERE EXISTS (SELECT 1 FROM orders)
-"""
-
-_ORACLES["datetime_functions"] = """
-SELECT o_orderkey,
-  CAST(year(o_orderdate) AS BIGINT) AS yr,
-  CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-  CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
-  CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus3m,
-  last_day(o_orderdate) AS eom,
-  CAST(isodow(o_orderdate) AS BIGINT) AS isodow,
-  CAST(weekofyear(o_orderdate) AS BIGINT) AS isoweek,
-  CAST(date_diff('day', DATE '1992-01-01', o_orderdate) AS BIGINT)
-    AS days_since_92
-FROM orders
-"""
-
-_ORACLES["array_functions"] = """
-WITH a AS (
-  SELECT l_orderkey, list_sort(list(l_linenumber)) AS arr
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT l_orderkey,
-  CAST(len(arr) AS BIGINT) AS n_lines,
-  CAST(list_sum(arr[1:3]) AS BIGINT) AS sum_first3,
-  CAST(list_max(arr) AS BIGINT) AS max_line,
-  CAST(list_min(arr) AS BIGINT) AS min_line,
-  list_contains(arr, 4) AS has_line4,
-  CAST(coalesce(list_position(arr, 2), 0) AS BIGINT) AS pos_line2
-FROM a
-"""
-
-_ORACLES["skew_profile_lineitem"] = """
-WITH c AS (
-  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS cnt
-  FROM lineitem GROUP BY l_suppkey
-), t AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS total,
-         CAST(count(*) AS BIGINT) AS nkeys FROM c
-)
-SELECT l_suppkey, cnt,
-  round(cnt / CAST(total AS DOUBLE), 6) AS share,
-  round(cnt * nkeys / CAST(total AS DOUBLE), 6) AS heat
-FROM c, t
-ORDER BY cnt DESC, l_suppkey ASC LIMIT 20
-"""
-
-# ----- Gopher-style quality filtering (operators/filtering.py)
-_REPETITION_CTE = f"""
-base AS (
-  SELECT doc_id,
-    list_filter(string_split({_NORM}, ' '), w -> w <> '') AS words
-  FROM documents
-), toks AS (
-  SELECT doc_id, 1 AS n, unnest(words) AS tok FROM base
-  UNION ALL
-  SELECT doc_id, 2 AS n,
-    unnest(list_transform(range(1, len(words)),
-                          i -> words[i] || ' ' || words[i + 1])) AS tok
-  FROM base
-), tok_counts AS (
-  SELECT doc_id, n, tok, count(*) AS c FROM toks GROUP BY doc_id, n, tok
-), per_doc AS (
-  SELECT doc_id,
-    CAST(sum(c) FILTER (n = 1) AS BIGINT) AS n_words,
-    CAST(count(*) FILTER (n = 1) AS BIGINT) AS n_distinct_words,
-    CAST(max(c) FILTER (n = 1) AS BIGINT) AS top_word_c,
-    CAST(coalesce(sum(c) FILTER (n = 2), 0) AS BIGINT) AS n_bigrams,
-    CAST(max(c) FILTER (n = 2) AS BIGINT) AS top_bigram_c
-  FROM tok_counts GROUP BY doc_id
-), reps AS (
-  SELECT doc_id, n_words, n_distinct_words,
-    round(1.0 - n_distinct_words / CAST(n_words AS DOUBLE), 6)
-      AS dup_word_fraction,
-    round(top_word_c / CAST(n_words AS DOUBLE), 6) AS top_word_fraction,
-    n_bigrams,
-    coalesce(round(top_bigram_c / CAST(n_bigrams AS DOUBLE), 6), 0.0)
-      AS top_bigram_fraction
-  FROM per_doc
-)"""
-
-_ORACLES["text_repetition_stats"] = f"""
-WITH {_REPETITION_CTE}
-SELECT doc_id, n_words, n_distinct_words, dup_word_fraction,
-  top_word_fraction, n_bigrams, top_bigram_fraction
-FROM reps
-"""
-
-_ORACLES["gopher_quality_flags"] = f"""
-WITH {_REPETITION_CTE}, scal AS (
-  SELECT doc_id,
-    round(CAST(l_norm - (n_words_sc - 1) AS DOUBLE) / n_words_sc, 6)
-      AS mean_word_len,
-    round((hash_count + ellipsis_count) / n_words_sc, 6) AS symbol_ratio,
-    stop_hits AS stopword_hits
-  FROM (
-    SELECT doc_id,
-      CASE WHEN len(norm) = 0 THEN 0
-           ELSE len(string_split(norm, ' ')) END AS n_words_sc,
-      len(norm) AS l_norm,
-      len(text) - len(replace(text, '#', '')) AS hash_count,
-      (len(text) - len(replace(text, '...', ''))) / 3 AS ellipsis_count,
-      CAST({_STOP_HITS} AS BIGINT) AS stop_hits
-    FROM (SELECT doc_id, text, {_NORM} AS norm FROM documents)
-  )
-), flagged AS (
-  SELECT r.doc_id, r.n_words, s.mean_word_len, s.symbol_ratio,
-    s.stopword_hits, r.dup_word_fraction, r.top_bigram_fraction,
-    (r.n_words >= 50 AND r.n_words <= 100000) AS ok_word_count,
-    (s.mean_word_len >= 3.0 AND s.mean_word_len <= 10.0) AS ok_mean_word_len,
-    (s.symbol_ratio <= 0.1) AS ok_symbol_ratio,
-    (s.stopword_hits >= 2) AS ok_stopwords,
-    (r.top_bigram_fraction <= 0.2) AS ok_repetition
-  FROM reps r JOIN scal s USING (doc_id)
-)
-SELECT *, (ok_word_count AND ok_mean_word_len AND ok_symbol_ratio
-           AND ok_stopwords AND ok_repetition) AS keep
-FROM flagged
-"""
-
-_ORACLES["corpus_dup_ngrams"] = f"""
-WITH base AS (
-  SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 3),
-      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-             || ' ' || w[i+4])) AS grams
-  FROM (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents)
-), sh AS (
-  SELECT doc_id, unnest(grams) AS s FROM base
-), wf AS (
-  SELECT doc_id, count(*) OVER (PARTITION BY s) AS doc_freq FROM sh
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-  CAST(count(*) FILTER (doc_freq >= 2) AS BIGINT) AS n_shared,
-  round(count(*) FILTER (doc_freq >= 2) / CAST(count(*) AS DOUBLE), 6)
-    AS shared_fraction
-FROM wf GROUP BY doc_id
-"""
-
-# ----- embedding clustering (operators/clustering.py)
-_CLUSTER_ASSIGN_CTE = """
-c AS (
-  SELECT vec_id AS cluster_id, embedding AS c_vec
-  FROM embeddings ORDER BY vec_id LIMIT 8
-), p AS (
-  SELECT e.vec_id, c.cluster_id,
-    unnest(e.embedding)::DOUBLE AS x, unnest(c.c_vec)::DOUBLE AS y
-  FROM embeddings e CROSS JOIN c
-), d AS (
-  SELECT vec_id, cluster_id, sum(x*y) AS dp, sum(x*x) AS na, sum(y*y) AS nb
-  FROM p GROUP BY vec_id, cluster_id
-), s AS (
-  SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-    round(dp / sqrt(na * nb), 6) AS sim FROM d
-), best AS (
-  SELECT vec_id, cluster_id, sim,
-    row_number() OVER (PARTITION BY vec_id
-                       ORDER BY sim DESC, cluster_id ASC) AS rn
-  FROM s
-)"""
-
-_ORACLES["cluster_assign"] = f"""
-WITH {_CLUSTER_ASSIGN_CTE}
-SELECT vec_id, cluster_id, sim FROM best WHERE rn = 1
-"""
-
-_ORACLES["cluster_balanced_sample"] = f"""
-WITH {_CLUSTER_ASSIGN_CTE}, ranked AS (
-  SELECT vec_id, cluster_id,
-    row_number() OVER (PARTITION BY cluster_id ORDER BY
-      CAST('0x' || substring(md5(CAST(vec_id AS STRING)), 1, 4) AS BIGINT)
-        ASC, vec_id ASC) AS sample_rank
-  FROM best WHERE rn = 1
-)
-SELECT vec_id, cluster_id, CAST(sample_rank AS BIGINT) AS sample_rank
-FROM ranked WHERE sample_rank <= 40
-"""
-
-_ORACLES["corpus_mix_weights"] = """
-WITH t AS (
-  SELECT lang, CAST(target_share AS DOUBLE) AS target_share
-  FROM (VALUES ('de', 0.15), ('en', 0.4), ('es', 0.15),
-               ('fr', 0.15), ('zh', 0.15)) AS v(lang, target_share)
-), c AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang
-), s AS (
-  SELECT lang, n_docs,
-    round(n_docs / CAST((SELECT sum(n_docs) FROM c) AS DOUBLE), 6) AS share
-  FROM c
-)
-SELECT s.lang, s.n_docs, s.share, t.target_share,
-  round(t.target_share / s.share, 6) AS weight
-FROM s JOIN t USING (lang)
-"""
-
-# ----- exact twins + fixed-iteration oracles for formerly rows-only ops
-
-_ORACLES["token_zipf_stats"] = """
-WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS tok
-  FROM documents
-), counts AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY tok
-), totals AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_distinct
-  FROM counts
-), top AS (
-  SELECT tok, c, row_number() OVER (ORDER BY c DESC, tok ASC) AS rank
-  FROM counts ORDER BY c DESC, tok ASC LIMIT 100
-), pts AS (
-  SELECT tok, c, rank, ln(CAST(rank AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y
-  FROM top
-), fit AS (
-  SELECT
-    max(CASE WHEN rank = 1 THEN tok END) AS top_token,
-    max(CASE WHEN rank = 1 THEN c END) AS top_count,
-    round((count(*) * sum(x*y) - sum(x) * sum(y))
-          / (count(*) * sum(x*x) - sum(x) * sum(x)), 6) AS zipf_slope
-  FROM pts
-)
-SELECT n_tokens, n_distinct, top_token, top_count, zipf_slope
-FROM totals, fit
-"""
-
-_ORACLES["decontaminate_train"] = f"""
-WITH {_shingle_cte(3)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-b AS (
-  SELECT doc_id,
-    CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) AS bucket
-  FROM documents
-),
-train_sh AS (
-  SELECT sh_ok.doc_id, unnest(s) AS sg
-  FROM sh_ok JOIN b ON sh_ok.doc_id = b.doc_id WHERE bucket >= 6553
-),
-test_vocab AS (
-  SELECT DISTINCT unnest(s) AS sg
-  FROM sh_ok JOIN b ON sh_ok.doc_id = b.doc_id WHERE bucket < 6553
-),
-tot AS (SELECT doc_id, count(*) AS n_shingles FROM train_sh GROUP BY doc_id),
-hit AS (
-  SELECT doc_id, count(*) AS n_overlap FROM train_sh
-  WHERE sg IN (SELECT sg FROM test_vocab) GROUP BY doc_id
-),
-scored AS (
-  SELECT d.doc_id,
-    CAST(COALESCE(t.n_shingles, 0) AS BIGINT) AS n_shingles,
-    CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-    round(COALESCE(h.n_overlap, 0)
-          / greatest(COALESCE(t.n_shingles, 0), 1), 6) AS contamination
-  FROM documents d
-  JOIN b ON d.doc_id = b.doc_id
-  LEFT JOIN tot t ON d.doc_id = t.doc_id
-  LEFT JOIN hit h ON d.doc_id = h.doc_id
-  WHERE b.bucket >= 6553
-)
-SELECT doc_id, n_shingles, n_overlap, contamination,
-  contamination <= 0.2 AS keep
-FROM scored
-"""
-
-_ORACLES["leakage_safe_split"] = f"""
-WITH RECURSIVE {_shingle_cte(3)},
-sh_ok AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh_ok),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-),
-j AS (
-  SELECT id_a, id_b,
-    CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-      / CAST(len(list_distinct(list_concat(x.s, y.s))) AS DOUBLE) AS jac
-  FROM cand JOIN sh_ok x ON x.doc_id = id_a JOIN sh_ok y ON y.doc_id = id_b
-),
-pairs AS (SELECT id_a, id_b FROM j WHERE round(jac, 6) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-reach AS (
-  SELECT node, node AS r FROM nodes
-  UNION
-  SELECT e.dst AS node, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
-),
-clusters AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node),
-lab AS (
-  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-  FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id
-)
-SELECT doc_id, cluster_id,
-  CASE WHEN CAST('0x' || substring(md5(CAST(cluster_id AS STRING)), 1, 4) AS BIGINT) < 6553
-       THEN 'test' ELSE 'train' END AS split
-FROM lab
-"""
-
-_ORACLES["order_percentiles_disc"] = """
-SELECT quantile_disc(o_totalprice, 0.5) AS p50,
-       quantile_disc(o_totalprice, 0.9) AS p90,
-       quantile_disc(o_totalprice, 0.99) AS p99
-FROM orders
-"""
-
-_ORACLES["distinct_users_exact"] = """
-SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_events
-FROM events
-"""
-
-
-def _mm_vals(hex_col: str, dim: int = 8) -> str:
-    """The fake feature extractor's md5→uint16-LE vector, as DuckDB hex
-    arithmetic: element j = byte(2j) + 256·byte(2j+1) of the digest
-    (numpy little-endian uint16 view, multimodal.py)."""
-    return ", ".join(
-        f"(('0x' || substr({hex_col}, {4 * j + 1}, 2))::BIGINT"
-        f" + 256 * ('0x' || substr({hex_col}, {4 * j + 3}, 2))::BIGINT)::DOUBLE"
-        for j in range(dim)
-    )
-
-
-_ORACLES["multimodal_features"] = f"""
-WITH h AS (
-  SELECT doc_id AS asset_id, md5(coalesce(text, '')) AS hx FROM documents
-), v AS (
-  SELECT asset_id, [{_mm_vals("hx")}] AS vs FROM h
-)
-SELECT asset_id,
-  round(list_sum(list_transform(vs,
-    x -> round(x / sqrt(list_sum(list_transform(vs, y -> y * y))), 6))), 6)
-    AS feature_sum
-FROM v
-"""
-
-# frame_sample salts the payload with the 4-byte big-endian frame index;
-# frame_idx < 4 makes that salt chr(0)*3 || chr(i) byte-for-byte.
-_ORACLES["multimodal_frame_sample"] = f"""
-WITH f AS (
-  SELECT doc_id AS asset_id, CAST(i AS INTEGER) AS frame_idx,
-    md5(coalesce(text, '') || chr(0) || chr(0) || chr(0) || chr(CAST(i AS INTEGER)))
-      AS hx
-  FROM documents, (SELECT unnest(range(4)) AS i)
-), v AS (
-  SELECT asset_id, frame_idx, [{_mm_vals("hx")}] AS vs FROM f
-)
-SELECT asset_id, frame_idx,
-  round(list_sum(list_transform(vs,
-    x -> round(x / sqrt(list_sum(list_transform(vs, y -> y * y))), 6))), 6)
-    AS feature_sum
-FROM v
-"""
-
-# The synthetic-image pipeline's pixel function is closed-form
-# ((doc_id*31 + 7x + 13y) mod 256), so the REAL encode->PNG->decode
-# round trip reduces to an exactly replayable integer sum.
-_ORACLES["multimodal_decode_stats"] = """
-WITH px AS (
-  SELECT d.doc_id, (d.doc_id * 31 + xs.x * 7 + ys.y * 13) % 256 AS v
-  FROM documents d,
-       (SELECT unnest(range(0, 16)) AS x) xs,
-       (SELECT unnest(range(0, 16)) AS y) ys
-)
-SELECT doc_id AS asset_id,
-  CAST(16 AS INTEGER) AS width, CAST(16 AS INTEGER) AS height,
-  CAST(1 AS INTEGER) AS channels,
-  CAST(SUM(v) AS BIGINT) AS sum_pixels,
-  round(CAST(SUM(v) AS DOUBLE) / 256, 6) AS mean_pixel
-FROM px GROUP BY doc_id
-"""
-
-# Nearest-neighbor 16->8: source index floor(dst*16/8) = even coords.
-_ORACLES["multimodal_resize_stats"] = """
-WITH px AS (
-  SELECT d.doc_id, (d.doc_id * 31 + xs.x * 7 + ys.y * 13) % 256 AS v
-  FROM documents d,
-       (SELECT unnest(range(0, 16, 2)) AS x) xs,
-       (SELECT unnest(range(0, 16, 2)) AS y) ys
-)
-SELECT doc_id AS asset_id,
-  CAST(8 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height,
-  CAST(1 AS INTEGER) AS channels,
-  CAST(SUM(v) AS BIGINT) AS sum_pixels,
-  round(CAST(SUM(v) AS DOUBLE) / 64, 6) AS mean_pixel
-FROM px GROUP BY doc_id
-"""
-
-
-def _pagerank_oracle(iterations: int = 5, damping: float = 0.85) -> str:
-    """Fixed-iteration PageRank as UNROLLED SQL (one CTE chain per power
-    iteration — recursive CTEs can't reference the prior frame the three
-    times each round needs). Expression shapes/parenthesization mirror
-    operators/graph.py:pagerank exactly so the IEEE ops agree; both
-    sides round to 9 decimals (summation-order divergence ~1e-15)."""
-    parts = [
-        """
-WITH edges AS (
-  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), cnt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-outdeg AS (SELECT src, CAST(count(*) AS BIGINT) AS od FROM edges GROUP BY src),
-r0 AS (SELECT node, 1.0 / cnt.n AS rank FROM nodes, cnt)"""
-    ]
-    for k in range(1, iterations + 1):
-        p = k - 1
-        parts.append(
-            f""",
-d{p} AS (
-  SELECT coalesce(sum(r.rank), 0.0) AS mass
-  FROM r{p} r LEFT JOIN outdeg o ON r.node = o.src WHERE o.src IS NULL
-), c{p} AS (
-  SELECT e.dst AS node, sum(r.rank / o.od) AS in_mass
-  FROM r{p} r JOIN outdeg o ON r.node = o.src JOIN edges e ON e.src = r.node
-  GROUP BY e.dst
-), r{k} AS (
-  SELECT nd.node,
-    ((1.0 - {damping}) / cnt.n + {damping} * d{p}.mass / cnt.n)
-      + {damping} * coalesce(c{p}.in_mass, 0.0) AS rank
-  FROM nodes nd CROSS JOIN cnt CROSS JOIN d{p}
-  LEFT JOIN c{p} ON nd.node = c{p}.node
-)"""
-        )
-    parts.append(
-        f"""
-SELECT node, round(rank, 9) AS rank FROM r{iterations}
-ORDER BY rank DESC, node LIMIT 20"""
-    )
-    return "".join(parts)
-
-
-_ORACLES["graph_pagerank_top"] = _pagerank_oracle()
-
-
-def _lsh_topk_oracle(dim: int = 64, n_planes: int = 6, seed: int = 42, k: int = 5) -> str:
-    """Sign-LSH multi-probe top-k replayed in SQL: the seeded hyperplanes
-    are baked in as literal arrays (same numpy values the Spark plan
-    embeds — similarity.hyperplanes), signatures recomputed per vector,
-    query probes = own bucket plus each 1-bit flip (probe_hamming=1),
-    then the same cosine + rank-k as similarity_topk. Sign decisions are
-    float-robust: a flip needs |dot| below summation-order noise
-    (~1e-13)."""
-    from breweries_etl_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim, n_planes, seed)
-    plane_rows = ", ".join(
-        f"({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
-        for i, p in enumerate(planes)
-    )
-    # Spark folds sig = (((b0·2)+b1)·2+b2)... → plane i carries bit 2^(n-1-i)
-    return f"""
-WITH planes(pi, pv) AS (VALUES {plane_rows}),
-dots AS (
-  SELECT e.vec_id, p.pi,
-    (SELECT sum(e.embedding[j]::DOUBLE * p.pv[j]) FROM range(1, {dim + 1}) r(j)) AS dp
-  FROM embeddings e, planes p
-), sigs AS (
-  SELECT vec_id,
-    CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, {n_planes - 1} - pi) AS BIGINT)
-             ELSE 0 END) AS BIGINT) AS sig
-  FROM dots GROUP BY vec_id
-), probes AS (
-  SELECT s.vec_id AS query_id, xor(s.sig, CAST(b AS BIGINT)) AS sig
-  FROM sigs s, (SELECT 0 AS b UNION ALL
-                SELECT CAST(power(2, i) AS INTEGER) FROM range({n_planes}) t(i)) bits
-  WHERE s.vec_id < 10
-), cand AS (
-  SELECT p.query_id, c.vec_id AS corpus_id
-  FROM probes p JOIN sigs c USING (sig)
-  WHERE c.vec_id <> p.query_id
-), pairs AS (
-  SELECT cand.query_id, cand.corpus_id,
-    unnest(q.embedding)::DOUBLE AS x, unnest(c.embedding)::DOUBLE AS y
-  FROM cand
-  JOIN embeddings q ON q.vec_id = cand.query_id
-  JOIN embeddings c ON c.vec_id = cand.corpus_id
-), d AS (
-  SELECT query_id, corpus_id, sum(x*y) AS dp, sum(x*x) AS na, sum(y*y) AS nb
-  FROM pairs GROUP BY query_id, corpus_id
-), s AS (
-  SELECT query_id, corpus_id, round(dp / sqrt(na * nb), 6) AS cosine FROM d
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, corpus_id ASC) AS rank
-  FROM s
-)
-SELECT query_id, corpus_id, cosine, rank FROM r WHERE rank <= {k}"""
-
-
-_ORACLES["similarity_lsh_topk"] = _lsh_topk_oracle()
-
-
-# dedup_simhash_pairs: the Arrow-batched bit-vote is just md5 arithmetic,
-# so DuckDB replays it — per-token digest bits (numpy unpackbits is
-# MSB-first within each byte), +1/-1 votes, sign-bit wrap to signed
-# BIGINT at j=63, then brute-force Hamming<=3 pairs (the Spark side's
-# 4x16-bit pigeonhole banding is exact for radius 3, so the pair sets
-# are identical by construction).
-# Capped mirror of the engine's default scale path (max_df=1000 over
-# DISTINCT shingle sets, set-group collapse, within-group jaccard=1):
-# same algorithm on both sides, not a coincidence on current data.
-_ORACLES["dedup_ngram_jaccard"] = f"""
-{_capped_collapse_cte(3, 1000)},
-vp AS (
-  SELECT xa.gk AS ka, xb.gk AS kb,
-    round(CAST(len(list_intersect(xa.rs, xb.rs)) AS DOUBLE)
-          / CAST(len(list_distinct(list_concat(xa.rs, xb.rs))) AS DOUBLE), 6) AS jaccard
-  FROM cand JOIN rep xa ON xa.rid = cand.ra JOIN rep xb ON xb.rid = cand.rb
-),
-ver AS (SELECT * FROM vp WHERE jaccard >= 0.5),
-cross_p AS (
-  SELECT least(ma.doc_id, mb.doc_id) AS id_a,
-         greatest(ma.doc_id, mb.doc_id) AS id_b, ver.jaccard
-  FROM ver JOIN g ma ON ma.gk = ver.ka JOIN g mb ON mb.gk = ver.kb
-),
-within AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, 1.0 AS jaccard
-  FROM g a JOIN g b ON a.gk = b.gk AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, jaccard FROM cross_p
-UNION ALL SELECT id_a, id_b, jaccard FROM within
-"""
-
-# Incremental prefix-filtered Jaccard: exact ground truth over the
-# incoming (every 7th doc, id-offset) x base (id not multiple of 5)
-# cross-set -- candidate generation differs (persisted prefix index),
-# the verified pair set provably cannot.
-_ORACLES["dedup_incremental_jaccard"] = """
-WITH
-norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' +', ' ', 'g')) AS nt FROM documents),
-words AS (SELECT doc_id, string_split(nt, ' ') AS w FROM norm),
-sh AS (
-  SELECT doc_id,
-    list_distinct([array_to_string(w[i:i+2], ' ')
-                   FOR i IN range(1, len(w)-1)]) AS s
-  FROM words
-),
-base AS (SELECT doc_id AS base_id, s FROM sh WHERE doc_id % 5 <> 0 AND len(s) > 0),
-inc AS (SELECT doc_id + 1000000 AS incoming_id, s FROM sh WHERE doc_id % 7 = 0 AND len(s) > 0),
-inv_b AS (SELECT base_id, unnest(s) AS shingle FROM base),
-inv_i AS (SELECT incoming_id, unnest(s) AS shingle FROM inc),
-cand AS (
-  SELECT DISTINCT i.incoming_id, b.base_id
-  FROM inv_i i JOIN inv_b b ON i.shingle = b.shingle
-),
-j AS (
-  SELECT incoming_id, base_id,
-    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-          / CAST(len(list_distinct(list_concat(x.s, y.s))) AS DOUBLE), 6) AS jaccard
-  FROM cand JOIN inc x USING (incoming_id) JOIN base y USING (base_id)
-)
-SELECT incoming_id, base_id, jaccard FROM j WHERE jaccard >= 0.5
-"""
-
-from breweries_etl_spark.operators.filtering import classifier_weights as _clf_w
-
-_CLF_WEIGHTS = "[" + ", ".join(repr(x) for x in _clf_w(256, 13)) + "]::DOUBLE[]"
-
-_ORACLES["classifier_quality_score"] = f"""
-WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(coalesce(text, '')), '[A-Za-z0-9_]+'),
-      tok -> ({_CLF_WEIGHTS})[
-        (CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT) % 256 + 1)::INTEGER
-      ]) AS ws
-  FROM documents
-), z AS (
-  SELECT doc_id, CASE WHEN len(ws) > 0
-    THEN round(1.0 / (1.0 + exp(-(list_sum(ws) / len(ws)))), 6)
-    ELSE 0.5 END AS quality_score
-  FROM t
-)
-SELECT doc_id, quality_score, quality_score >= 0.5 AS keep FROM z
-"""
-
-_ORACLES["dedup_simhash_pairs"] = """
-WITH toks AS (
-  SELECT doc_id,
-    unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\\s+'),
-                       t -> t <> '')) AS tok
-  FROM documents
-), th AS (
-  SELECT doc_id, md5(tok) AS h FROM toks
-), votes AS (
-  SELECT doc_id, j,
-    sum(CASE WHEN ((('0x' || substr(h, (j // 8) * 2 + 1, 2))::BIGINT
-                    >> (7 - (j % 8))) & 1) = 1 THEN 1 ELSE -1 END) AS v
-  FROM th, range(64) r(j) GROUP BY doc_id, j
-), sig0 AS (
-  SELECT doc_id,
-    CAST(sum(CASE WHEN v > 0 THEN
-               CASE WHEN j = 63 THEN -9223372036854775808
-                    ELSE (1::BIGINT << j) END
-             ELSE 0 END) AS BIGINT) AS sig
-  FROM votes GROUP BY doc_id
-), sigs AS (
-  SELECT d.doc_id, coalesce(s.sig, 0) AS sig
-  FROM documents d LEFT JOIN sig0 s USING (doc_id)
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(bit_count(xor(a.sig, b.sig)) AS INTEGER) AS hamming
-FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sig, b.sig)) <= 3
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-4 additions: LM quality signal, incremental view maintenance,
-# semantic dedup, mergeable sketches, salted skew join, UDTF surface
-# ---------------------------------------------------------------------------
-
-
-def q_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-trained bigram-LM perplexity per document (CCNet-style
-    quality signal): corpus bigram/unigram counts + vocabulary, add-0.5
-    smoothing, mean per-bigram log-prob rounded before averaging."""
-    return text.bigram_lm_scores(load_table(spark, sf_dir, "documents"))
-
-
-_ORACLES["bigram_lm_scores"] = """
-WITH docs AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_]+') AS toks
-  FROM documents
-), d2 AS (
-  SELECT doc_id, toks FROM docs WHERE len(toks) >= 2
-), idx AS (
-  SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM d2
-), big AS (
-  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2 FROM idx
-), bc AS (
-  SELECT w1, w2, count(*) AS c2 FROM big GROUP BY 1, 2
-), uc AS (
-  SELECT w1, sum(c2) AS c1 FROM bc GROUP BY 1
-), vocab AS (
-  SELECT count(DISTINCT w) AS v FROM (SELECT unnest(toks) AS w FROM docs) u
-), scored AS (
-  SELECT b.doc_id,
-    CAST(round(ln((bc.c2 + 0.5) / (uc.c1 + 0.5 * vocab.v)) * 1e6, 0)
-         AS BIGINT) AS lp_micro
-  FROM big b JOIN bc ON b.w1 = bc.w1 AND b.w2 = bc.w2
-  JOIN uc ON b.w1 = uc.w1 CROSS JOIN vocab
-), agg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-    round(sum(lp_micro) / (CAST(count(*) AS DOUBLE) * 1e6), 6)
-      AS avg_logprob
-  FROM scored GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams, avg_logprob,
-  round(exp(-avg_logprob), 3) AS ppl
-FROM agg
-"""
-
-
-_GOLD_CUTOFF = "1995-07-01"
-
-
-def q_gold_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-view maintenance: gold counts/revenue by (status,
-    priority) built from orders before the cutoff, then incrementally
-    merged with the post-cutoff delta — NEVER recomputed from scratch.
-    The oracle is the full recompute, so the hash match IS the
-    incremental-equals-batch equivalence proof."""
-    from breweries_etl_spark.operators import incremental
-
-    orders = load_table(spark, sf_dir, "orders")
-    keys = ["o_orderstatus", "o_orderpriority"]
-    measures = {"n_orders": "count"}
-    base_rows = orders.filter(F.col("o_orderdate") < F.lit(_GOLD_CUTOFF))
-    delta_rows = orders.filter(F.col("o_orderdate") >= F.lit(_GOLD_CUTOFF))
-
-    def state(rows: DataFrame) -> DataFrame:
-        return rows.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("__rev"),
-        )
-
-    base = state(base_rows)
-    delta = state(delta_rows)
-    merged = incremental.merge_aggregate_state(
-        base.withColumn("__rev", F.col("__rev").cast("decimal(14,2)")),
-        delta.withColumn("__rev", F.col("__rev").cast("decimal(14,2)")),
-        keys,
-        {"n_orders": "sum", "__rev": "sum"},
-    )
-    return merged.select(
-        *keys,
-        F.col("n_orders").cast("long").alias("n_orders"),
-        F.col("__rev").cast("double").alias("revenue"),
-    )
-
-
-_ORACLES["gold_incremental_merge"] = f"""
-SELECT o_orderstatus, o_orderpriority,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-FROM orders
-GROUP BY o_orderstatus, o_orderpriority
-"""
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: nearest-centroid clustering (8 leading centroids) +
-    within-cluster cosine ≥ 0.35 drops all but the smallest-id member
-    of each similarity neighborhood. Threshold calibrated to the
-    synthetic embeddings (production uses ≈0.95+ — see operator doc)."""
-    from breweries_etl_spark.operators import clustering
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = clustering.leading_centroids(emb, 8)
-    return clustering.semantic_dedup(emb, cents, 0.35)
-
-
-_ORACLES["semantic_dedup"] = f"""
-WITH {{cluster_cte}},
-assign AS (SELECT vec_id, cluster_id FROM best WHERE rn = 1),
-pv AS (
-  SELECT a.vec_id, a.cluster_id, e.embedding
-  FROM assign a JOIN embeddings e USING (vec_id)
-), pp AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-    unnest(x.embedding)::DOUBLE AS px, unnest(y.embedding)::DOUBLE AS py
-  FROM pv x JOIN pv y
-    ON x.cluster_id = y.cluster_id AND x.vec_id > y.vec_id
-), ps AS (
-  SELECT id_a, id_b,
-    round(sum(px * py) / sqrt(sum(px * px) * sum(py * py)), 6) AS sim
-  FROM pp GROUP BY id_a, id_b
-), dropped AS (
-  SELECT DISTINCT id_a AS vec_id FROM ps WHERE sim >= 0.35
-)
-SELECT a.vec_id, CAST(a.cluster_id AS BIGINT) AS cluster_id,
-  (d.vec_id IS NULL) AS keep
-FROM assign a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-""".replace("{cluster_cte}", _CLUSTER_ASSIGN_CTE)
-
-
-def q_distinct_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch distinct count: one HLL sketch per event_type,
-    union-merged to a global users estimate, asserted within 5% of the
-    exact count. The estimate itself is Datasketches-implementation-
-    defined; the contract (merge ≍ exact) is the oracle-stable output."""
-    from breweries_etl_spark.operators.profiling import (
-        mergeable_distinct_sketches,
-    )
-
-    return mergeable_distinct_sketches(
-        load_events(spark, sf_dir), "user_id", "event_type"
-    )
-
-
-_ORACLES["distinct_sketch_merge"] = """
--- n_groups counts the NULL group too (it is a real sketch bucket in
--- the groupBy), which count(DISTINCT ...) would silently drop
-SELECT (SELECT CAST(count(*) AS BIGINT)
-        FROM (SELECT DISTINCT event_type FROM events)) AS n_groups,
-  CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-  TRUE AS est_ok
-FROM events
-"""
-
-
-@lifecycle.operator(release=False)
-def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key salted join of lineitem (l_suppkey is the engineered
-    skew key: 100 keys, heaviest ≈11× uniform) against supplier, then
-    revenue per supplier nation. Salting is result-invariant — the
-    oracle runs the PLAIN join — while the salted plan bounds any
-    task's share of a hot key to 1/8. force_shuffle pins the
-    shuffle-hash path so the salted exchange is what executes here
-    (a broadcastable dim needs no salting; the 100 TB dim isn't)."""
-    from breweries_etl_spark.operators.skewjoin import salted_join
-    from breweries_etl_spark.functions.exact import disc_price
-
-    li = load_table(spark, sf_dir, "lineitem")
-    sup = load_table(spark, sf_dir, "supplier")
-    joined = salted_join(
-        li,
-        sup,
-        "l_suppkey",
-        "s_suppkey",
-        n_salts=8,
-        heat_factor=4.0,
-        salt_on="l_orderkey",
-        force_shuffle=True,
-    )
-    return joined.groupBy(F.col("s_nationkey").cast("long").alias("nationkey")).agg(
-        F.count(F.lit(1)).alias("n_lineitems"),
-        F.sum(disc_price()).cast("double").alias("revenue"),
-    )
-
-
-_ORACLES["salted_skew_join"] = f"""
-SELECT CAST(s.s_nationkey AS BIGINT) AS nationkey,
-  CAST(count(*) AS BIGINT) AS n_lineitems,
-  CAST(sum({sql_disc_price()}) AS DOUBLE) AS revenue
-FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-GROUP BY s.s_nationkey
-"""
-
-
-def q_split_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF (Spark 4 table-function API) applied via LATERAL:
-    one row per non-empty sentence with index and length. Regex-simple
-    semantics so DuckDB list algebra replays them exactly."""
-    from breweries_etl_spark.operators.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__udtf_docs")
-    return spark.sql(
-        """
-        SELECT d.doc_id, s.sent_idx, s.sentence,
-               CAST(s.n_chars AS BIGINT) AS sent_chars
-        FROM __udtf_docs d, LATERAL split_sentences(d.text) s
-        """
-    )
-
-
-def q_geo_mean_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas GROUPED_AGG UDAF surface: per-priority geometric mean of
-    order totals (log-mean rounded before exponentiation on both
-    engines)."""
-    return agg_ops.geometric_mean_by(
-        load_table(spark, sf_dir, "orders"), "o_orderpriority", "o_totalprice"
-    )
-
-
-_ORACLES["geo_mean_order_price"] = """
-WITH lm AS (
-  SELECT o_orderpriority, round(avg(ln(o_totalprice)), 6) AS log_mean
-  FROM orders WHERE o_totalprice > 0
-  GROUP BY o_orderpriority
-)
-SELECT o_orderpriority, log_mean, round(exp(log_mean), 3) AS geo_mean
-FROM lm
-"""
-
-
-def q_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio plumbing over the asset table: payload bytes as 16-bit LE
-    PCM → 256-sample frames → exact-integer RMS + mean-centered
-    zero-crossing count per frame. The corpus is ASCII (verified), so
-    the DuckDB oracle's character arithmetic equals Spark's byte view."""
-    docs = load_table(spark, sf_dir, "documents")
-    assets = multimodal.assets_from_documents(docs)
-    return multimodal.audio_frame_features(assets)
-
-
-_ORACLES["audio_frame_features"] = """
-WITH a AS (
-  SELECT doc_id AS asset_id, text FROM documents
-  WHERE text IS NOT NULL AND len(text) >= 2
-), off AS (
-  SELECT asset_id, text,
-    unnest(generate_series(0, len(text) // 2 * 2 - 2, 2)) AS o
-  FROM a
-), samp AS (
-  SELECT asset_id, o // 2 AS i,
-    ascii(substring(text, o + 1, 1))
-      + 256 * ascii(substring(text, o + 2, 1)) AS v
-  FROM off
-), fr AS (
-  SELECT asset_id, i // 256 AS frame_idx, i, v FROM samp
-), st AS (
-  SELECT asset_id, frame_idx, count(*) AS n,
-    sum(v * v) AS ss, sum(v) AS sv
-  FROM fr GROUP BY 1, 2
-), zc AS (
-  SELECT f1.asset_id, f1.frame_idx,
-    count(*) FILTER (
-      (f1.v * st.n - st.sv) * (f2.v * st.n - st.sv) < 0
-    ) AS zcr
-  FROM fr f1
-  JOIN fr f2 ON f2.asset_id = f1.asset_id AND f2.i = f1.i + 1
-    AND f2.i // 256 = f1.frame_idx
-  JOIN st ON st.asset_id = f1.asset_id AND st.frame_idx = f1.frame_idx
-  GROUP BY 1, 2
-)
-SELECT st.asset_id, CAST(st.frame_idx AS BIGINT) AS frame_idx,
-  CAST(st.n AS BIGINT) AS n_samples,
-  round(sqrt(st.ss / CAST(st.n AS DOUBLE)), 6) AS rms,
-  CAST(coalesce(zc.zcr, 0) AS BIGINT) AS zcr
-FROM st LEFT JOIN zc
-  ON zc.asset_id = st.asset_id AND zc.frame_idx = st.frame_idx
-"""
-
-
-def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail: per-language perplexity terciles over the
-    bigram-LM scores; ntile over the total order (ppl, doc_id) is
-    deterministic, so DuckDB replays the assignment exactly."""
-    return text.perplexity_buckets(load_table(spark, sf_dir, "documents"))
-
-
-_ORACLES["ccnet_perplexity_buckets"] = """
-WITH docs AS (
-  SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9_]+') AS toks
-  FROM documents
-), d2 AS (
-  SELECT doc_id, toks FROM docs WHERE len(toks) >= 2
-), idx AS (
-  SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM d2
-), big AS (
-  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2 FROM idx
-), bc AS (
-  SELECT w1, w2, count(*) AS c2 FROM big GROUP BY 1, 2
-), uc AS (
-  SELECT w1, sum(c2) AS c1 FROM bc GROUP BY 1
-), vocab AS (
-  SELECT count(DISTINCT w) AS v FROM (SELECT unnest(toks) AS w FROM docs) u
-), scored AS (
-  SELECT b.doc_id,
-    CAST(round(ln((bc.c2 + 0.5) / (uc.c1 + 0.5 * vocab.v)) * 1e6, 0)
-         AS BIGINT) AS lp_micro
-  FROM big b JOIN bc ON b.w1 = bc.w1 AND b.w2 = bc.w2
-  JOIN uc ON b.w1 = uc.w1 CROSS JOIN vocab
-), agg AS (
-  SELECT doc_id,
-    round(sum(lp_micro) / (CAST(count(*) AS DOUBLE) * 1e6), 6)
-      AS avg_logprob
-  FROM scored GROUP BY doc_id
-), ppls AS (
-  SELECT d.doc_id, d.lang, round(exp(-a.avg_logprob), 3) AS ppl
-  FROM documents d JOIN agg a ON d.doc_id = a.doc_id
-), cut AS (
-  SELECT doc_id, lang, ppl,
-    CAST(ntile(3) OVER (PARTITION BY lang ORDER BY ppl ASC, doc_id ASC)
-         AS BIGINT) AS bucket
-  FROM ppls
-)
-SELECT doc_id, lang, ppl, bucket,
-  CASE bucket WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-              ELSE 'tail' END AS slice
-FROM cut
-"""
-
-
-def q_streaming_gold_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming materialized-aggregate maintenance over the events
-    table in 4 micro-batches: per-(event_type) count + exact-decimal
-    value sum merged into a snapshot table per epoch. Monoid merges of
-    exact sums make the final snapshot independent of the batch split,
-    so a plain batch GROUP BY oracles the stream end-to-end."""
-    import os
-    import tempfile
-
-    from breweries_etl_spark.streaming.merge_sink import (
-        read_latest_snapshot,
-        streaming_aggregate_merge_sink,
-    )
-
-    events = load_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="spark_gold_merge_")
-    src = os.path.join(work, "src")
-    tbl = os.path.join(work, "table")
-    projected = events.select("event_type", "value")
-    projected.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(projected.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = streaming_aggregate_merge_sink(
-        stream, tbl, ["event_type"], count_col="n_events",
-        sum_col="total_value", sum_src="value", query_name="gold_merge_q",
-    )
-    q.awaitTermination()
-    snap = read_latest_snapshot(spark, tbl)
-    return snap.select(
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("total_value").cast("double").alias("total_value"),
-    )
-
-
-_ORACLES["streaming_gold_merge"] = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY event_type
-"""
-
-
-_ORACLES["split_sentences_udtf"] = """
-WITH split AS (
-  SELECT doc_id,
-    list_filter(
-      list_transform(string_split_regex(text, '[.!?]+'),
-                     x -> regexp_replace(x, '^[ \\t\\n\\r]+|[ \\t\\n\\r]+$', '', 'g')),
-      x -> x <> '') AS sents
-  FROM documents WHERE text IS NOT NULL
-), idx AS (
-  SELECT doc_id, sents, unnest(generate_series(1, len(sents))) AS i FROM split
-)
-SELECT doc_id, CAST(i - 1 AS INTEGER) AS sent_idx, sents[i] AS sentence,
-  CAST(length(sents[i]) AS BIGINT) AS sent_chars
-FROM idx
-"""
-
-
-# ---------------------------------------------------------------------------
-# Driver contract
-# ---------------------------------------------------------------------------
+from breweries_etl_spark.queries import REGISTRY
+from breweries_etl_spark.queries.core import q_gold_by_type_location
+from breweries_etl_spark.queries.record import Builder
 
 
 def _pin_session(spark: SparkSession) -> None:
-    """The driver supplies its own SparkSession; pin the two runtime
-    confs correctness depends on (UTC so timestamp rendering matches the
-    tz-naive oracle; nanos-as-long so the events parquet reads)."""
+    """The driver supplies its own SparkSession; pin the four runtime
+    confs correctness and plan shape depend on: UTC, so timestamp
+    rendering matches the tz-naive oracle; nanos-as-long, so the events
+    parquet reads; 32 shuffle partitions and AQE on."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Right-size shuffles for the local test SFs (Spark's default 200
@@ -3893,1344 +41,13 @@ def _pin_session(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
+def _wrap(fn: Builder) -> Builder:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pin_session(spark)
         return fn(spark, sf_dir)
 
     run.__name__ = getattr(fn, "__name__", "query")
     return run
-
-
-def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement (Efraimidis–Spirakis A-ES
-    keys over a content-hash uniform): k=50 docs, inclusion ∝ n_chars.
-    Deterministic membership ⇒ exact oracle twin."""
-    from breweries_etl_spark.operators.sampling import weighted_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return weighted_sample(docs, "doc_id", "n_chars", k=50).select(
-        "doc_id", "lang", "n_chars"
-    )
-
-
-def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source 3-gram type/token diversity — the cross-document
-    repetitiveness signal for boilerplate-heavy sources."""
-    return text.ngram_diversity(load_table(spark, sf_dir, "documents"))
-
-
-def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most common 3-step behavior paths (per-user event-type trigrams,
-    global top-20, path-text tiebreak)."""
-    from breweries_etl_spark.operators.behavior import top_event_paths
-
-    return top_event_paths(load_events(spark, sf_dir))
-
-
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM quartile segmentation of purchasers (deterministic ntile
-    tiebreaks; exact decimal spend)."""
-    from breweries_etl_spark.operators.behavior import rfm_segments
-
-    return rfm_segments(load_events(spark, sf_dir))
-
-
-def q_temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-2 sampling weights per language (share^(1/T) rule,
-    max-normalized so no cross-group float sums)."""
-    from breweries_etl_spark.operators.clustering import temperature_mix_weights
-
-    return temperature_mix_weights(
-        load_table(spark, sf_dir, "documents"), "lang"
-    )
-
-
-def q_logreg_train_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed logistic-regression TRAINING (5 full-batch GD
-    iterations, hashed bag-of-words, en-vs-rest label). Gradients
-    accumulate in integer micro-units so the whole training run is
-    order-independent and replays bit-for-bit in SQL."""
-    from breweries_etl_spark.operators.mltrain import train_logreg_hashed
-
-    docs = load_table(spark, sf_dir, "documents")
-    return train_logreg_hashed(docs, F.col("lang") == "en")
-
-
-def _logreg_oracle_sql(dims: int = 32, lr: float = 0.5, iterations: int = 5) -> str:
-    """Unrolled k-iteration replay of train_logreg_hashed: weights ride
-    between CTEs as a list (ws[1] = bias, ws[j+2] = bucket j)."""
-    parts = [
-        f"""WITH feats AS (
-  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-    COALESCE(list_sort(list_distinct(list_transform(
-      regexp_extract_all(lower(text), '[a-z0-9_]+'),
-      t -> CAST('0x' || substring(md5(t), 1, 4) AS BIGINT) % {dims}))),
-      CAST([] AS BIGINT[])) AS bs
-  FROM documents
-), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM feats),
-w0 AS (SELECT list_transform(range(0, {dims + 1}), i -> 0.0) AS ws)"""
-    ]
-    for k in range(1, iterations + 1):
-        prev = f"w{k - 1}"
-        parts.append(f""", e{k} AS (
-  SELECT y, bs,
-    CAST(floor((1.0 / (1.0 + exp(-( pw.ws[1] +
-      list_reduce(list_prepend(0.0, list_transform(bs,
-        b -> pw.ws[CAST(b + 2 AS INT)])), (a, x) -> a + x)
-    ))) - y) * 1000000) AS BIGINT) AS e
-  FROM feats CROSS JOIN {prev} pw
-), g{k} AS (
-  SELECT b, sum(e) AS g FROM (
-    SELECT e, unnest(list_prepend(CAST(-1 AS BIGINT), bs)) AS b FROM e{k}
-  ) GROUP BY b
-), w{k} AS (
-  SELECT list(wj ORDER BY j) AS ws FROM (
-    SELECT t.j AS j,
-      CASE WHEN nn.n = 0 THEN pw.ws[CAST(t.j + 1 AS INT)]
-      ELSE pw.ws[CAST(t.j + 1 AS INT)]
-        - {lr} * (COALESCE(g.g, 0) / 1000000.0) / nn.n END AS wj
-    FROM range(0, {dims + 1}) t(j)
-    CROSS JOIN {prev} pw CROSS JOIN nn
-    LEFT JOIN g{k} g ON g.b = t.j - 1
-  )
-)""")
-    parts.append(f"""
-SELECT CAST(t.j - 1 AS BIGINT) AS dim,
-  round(pw.ws[CAST(t.j + 1 AS INT)], 6) AS weight
-FROM range(0, {dims + 1}) t(j) CROSS JOIN w{iterations} pw""")
-    return "".join(parts)
-
-
-def q_kmeans_train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-arithmetic KMeans training (3 Lloyd iterations on the
-    integer micro-lattice): zero floats inside the loop, so the full
-    clustering run replays bit-for-bit in SQL."""
-    from breweries_etl_spark.operators.mltrain import kmeans_train_exact
-
-    return kmeans_train_exact(load_table(spark, sf_dir, "embeddings"))
-
-
-def _kmeans_oracle_sql(k: int = 8, dims: int = 64, iterations: int = 3) -> str:
-    """Unrolled Lloyd replay; centroids ride between CTEs as BIGINT
-    lists (1-based list index i ↔ dim i-1)."""
-    rng = f"range(1, {dims + 1})"
-    parts = [
-        f"""WITH pts AS (
-  SELECT vec_id AS pid,
-    list_transform(embedding,
-      x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
-  FROM embeddings
-), c0 AS (
-  SELECT row_number() OVER (ORDER BY pid ASC) - 1 AS cid, q AS c
-  FROM (SELECT pid, q FROM pts ORDER BY pid ASC LIMIT {k})
-)"""
-    ]
-    for it in range(1, iterations + 1):
-        prev = f"c{it - 1}"
-        parts.append(f""", a{it} AS (
-  SELECT pid, q, cid FROM (
-    SELECT pts.pid, pts.q, c.cid,
-      row_number() OVER (PARTITION BY pts.pid ORDER BY
-        list_sum(list_transform({rng}, i ->
-          (q[CAST(i AS INT)] - c.c[CAST(i AS INT)])
-          * (q[CAST(i AS INT)] - c.c[CAST(i AS INT)]))) ASC,
-        c.cid ASC) AS rn
-    FROM pts CROSS JOIN {prev} c
-  ) WHERE rn = 1
-), s{it} AS (
-  SELECT cid, t.j AS j, sum(q[CAST(t.j AS INT)]) AS s,
-    CAST(count(*) AS BIGINT) AS m
-  FROM a{it} CROSS JOIN {rng} t(j)
-  GROUP BY cid, t.j
-), c{it} AS (
-  SELECT p.cid AS cid,
-    list(CAST(COALESCE(s.s // s.m, p.c[CAST(t.j AS INT)]) AS BIGINT)
-         ORDER BY t.j) AS c
-  FROM {prev} p CROSS JOIN {rng} t(j)
-  LEFT JOIN s{it} s ON s.cid = p.cid AND s.j = t.j
-  GROUP BY p.cid
-)""")
-    parts.append(f"""
-SELECT CAST(p.cid AS BIGINT) AS cluster_id,
-  CAST(t.j - 1 AS BIGINT) AS dim,
-  CAST(p.c[CAST(t.j AS INT)] AS BIGINT) AS centroid_micro
-FROM c{iterations} p CROSS JOIN {rng} t(j)""")
-    return "".join(parts)
-
-
-def q_naive_bayes_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial Naive Bayes training over (lang, token) counts:
-    add-1 smoothed log-likelihoods in integer micro-nats."""
-    from breweries_etl_spark.operators.mltrain import train_naive_bayes
-
-    return train_naive_bayes(load_table(spark, sf_dir, "documents"))
-
-
-def q_events_sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GA-style dual-rule sessions: 30-min idle gap plus a 4-hour
-    duration cap (sub-split anchored at the gap-session start); both
-    window passes share one user_id shuffle."""
-    return temporal.sessionize_capped(load_events(spark, sf_dir))
-
-
-def q_dedup_exact_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup keeping the highest-quality copy per content group
-    (score = n_chars, ties → min id) — argmax as one map-side-combinable
-    struct-max aggregate."""
-    return dedup.dedup_exact_keep_best(load_table(spark, sf_dir, "documents"))
-
-
-def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise shared-shingle counts + Jaccard between sources — the
-    corpus-health matrix (per-shingle pair blow-up bounded by the source
-    count, never document frequency)."""
-    from breweries_etl_spark.operators.corpus import source_overlap_matrix
-
-    return source_overlap_matrix(load_table(spark, sf_dir, "documents"))
-
-
-def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint index (k=4 word-grams, window 5): the
-    MOSS-style local-similarity detector; md5-derived hashes replay
-    exactly in SQL."""
-    return text.winnowing_fingerprints(load_table(spark, sf_dir, "documents"))
-
-
-def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 adjacent-token collocations by PMI (min bigram count 5,
-    broadcast unigram joins, single-expression double arithmetic)."""
-    return text.collocation_pmi(load_table(spark, sf_dir, "documents"))
-
-
-def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document exact dedup (RefinedWeb/Dolma-style): fixed 20-word
-    paragraphs, global first occurrence kept, text reconstructed."""
-    from breweries_etl_spark.operators.corpus import paragraph_dedup
-
-    return paragraph_dedup(load_table(spark, sf_dir, "documents"))
-
-
-def q_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated-EWMA recency feature per event (alpha 0.5, depth 4):
-    fixed lag-chain with binary-exact weights ⇒ bit-identical on any
-    engine/partitioning, one window shuffle."""
-    return temporal.decayed_user_value(load_events(spark, sf_dir))
-
-
-_ORACLES["weighted_sample_docs"] = """
-SELECT doc_id, lang, n_chars FROM (
-  SELECT doc_id, lang, n_chars,
-    ln((CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 15) AS BIGINT) + 1)
-       / 1152921504606846976.0) / CAST(n_chars AS DOUBLE) AS aes_key
-  FROM documents WHERE n_chars > 0
-) ORDER BY aes_key DESC, doc_id ASC LIMIT 50
-"""
-
-_ORACLES["ngram_diversity"] = f"""
-WITH norm AS (SELECT source, string_split({_NORM}, ' ') AS w FROM documents),
-g AS (
-  SELECT source,
-    unnest(list_transform(range(1, len(w) - 1),
-                          i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
-  FROM norm
-)
-SELECT source, CAST(count(*) AS BIGINT) AS total_ngrams,
-  CAST(count(DISTINCT g) AS BIGINT) AS distinct_ngrams,
-  round(count(DISTINCT g) / CAST(count(*) AS DOUBLE), 6) AS diversity
-FROM g GROUP BY source
-"""
-
-_ORACLES["logreg_train_weights"] = _logreg_oracle_sql()
-
-_ORACLES["kmeans_train_centroids"] = _kmeans_oracle_sql()
-
-_ORACLES["naive_bayes_model"] = """
-WITH toks AS (
-  SELECT lang AS label,
-    unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS tok
-  FROM documents
-), c AS (
-  SELECT label, tok, CAST(count(*) AS BIGINT) AS c
-  FROM toks GROUP BY label, tok
-), tot AS (
-  SELECT label, CAST(count(*) AS BIGINT) AS total FROM toks GROUP BY label
-), vocab AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v FROM toks)
-SELECT label, tok, c,
-  CAST(floor(ln(CAST(c + 1 AS DOUBLE) / CAST(total + v AS DOUBLE)) * 1000000)
-       AS BIGINT) AS logprob_micro
-FROM c JOIN tot USING (label) CROSS JOIN vocab
-"""
-
-_ORACLES["events_sessionize_capped"] = """
-WITH o AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t, value,
-    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-      AS prev_t
-  FROM events
-), g AS (
-  SELECT *, CAST(sum(CASE WHEN prev_t IS NULL OR t - prev_t > 1800000000
-                          THEN 1 ELSE 0 END)
-    OVER (PARTITION BY user_id ORDER BY t ASC, event_id ASC) AS BIGINT)
-    AS gap_session
-  FROM o
-), s AS (
-  SELECT *, CAST((t - min(t) OVER (PARTITION BY user_id, gap_session))
-                 // 14400000000 AS BIGINT) AS sub_session
-  FROM g
-)
-SELECT user_id, gap_session, sub_session,
-  CAST(count(*) AS BIGINT) AS n_events,
-  min(t) AS start_us, max(t) AS end_us,
-  CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM s GROUP BY 1, 2, 3
-"""
-
-_ORACLES["dedup_exact_keep_best"] = f"""
-SELECT content_key, -(b.neg_id) AS doc_id, b.s AS n_chars, n_copies
-FROM (
-  SELECT md5({_NORM}) AS content_key,
-    max(struct_pack(s := n_chars, neg_id := -doc_id)) AS b,
-    CAST(count(*) AS BIGINT) AS n_copies
-  FROM documents GROUP BY 1
-)
-"""
-
-_ORACLES["source_overlap_matrix"] = f"""
-WITH norm AS (
-  SELECT source, {_NORM} AS nt FROM documents
-), words AS (
-  SELECT source, string_split(nt, ' ') AS w FROM norm
-), sh AS (
-  SELECT DISTINCT source,
-    unnest(list_distinct(list_transform(range(1, len(w) - 1),
-      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-  FROM words
-), tot AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY source
-), shared AS (
-  SELECT a.source AS source_a, b.source AS source_b,
-    CAST(count(*) AS BIGINT) AS n_shared
-  FROM sh a JOIN sh b ON a.s = b.s AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT source_a, source_b, n_shared,
-  round(n_shared / CAST(ta.n_sh + tb.n_sh - n_shared AS DOUBLE), 6) AS jaccard
-FROM shared
-JOIN tot ta ON shared.source_a = ta.source
-JOIN tot tb ON shared.source_b = tb.source
-"""
-
-_ORACLES["winnowing_fingerprints"] = f"""
-WITH norm AS (
-  SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-), g AS (
-  SELECT doc_id,
-    list_transform(range(1, len(w) - 2),
-      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]) AS grams
-  FROM norm
-), h AS (
-  SELECT doc_id,
-    list_transform(grams,
-      s -> CAST('0x' || substring(md5(s), 1, 15) AS BIGINT)) AS hs
-  FROM g
-), f AS (
-  SELECT doc_id,
-    list_distinct(list_transform(range(1, greatest(len(hs) - 4, 0) + 1),
-      j -> list_min(hs[j:j+4]))) AS fps
-  FROM h
-)
-SELECT doc_id, unnest(fps) AS fingerprint FROM f WHERE len(fps) > 0
-"""
-
-_ORACLES["collocation_pmi"] = """
-WITH base AS (
-  SELECT regexp_extract_all(lower(text), '[a-z0-9_]+') AS toks FROM documents
-), uni AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest(toks) AS tok FROM base) GROUP BY tok
-), n_tok AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uni),
-bg AS (
-  SELECT toks[i] AS w1, toks[i + 1] AS w2, CAST(count(*) AS BIGINT) AS c_ab
-  FROM (SELECT toks, unnest(range(1, len(toks))) AS i FROM base)
-  GROUP BY 1, 2
-), n_bg AS (SELECT CAST(sum(c_ab) AS BIGINT) AS b FROM bg)
-SELECT w1, w2, c_ab,
-  round(ln((CAST(c_ab AS DOUBLE) * n * n)
-           / (CAST(b AS DOUBLE) * ca.c * cb.c)), 6) AS pmi
-FROM bg
-JOIN uni ca ON bg.w1 = ca.tok
-JOIN uni cb ON bg.w2 = cb.tok
-CROSS JOIN n_tok CROSS JOIN n_bg
-WHERE c_ab >= 5
-ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 20
-"""
-
-_ORACLES["top_event_paths"] = """
-WITH tri AS (
-  SELECT event_type AS s1,
-    lead(event_type, 1) OVER w AS s2,
-    lead(event_type, 2) OVER w AS s3
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-)
-SELECT s1 || ' > ' || s2 || ' > ' || s3 AS path,
-  CAST(count(*) AS BIGINT) AS n_paths
-FROM tri WHERE s3 IS NOT NULL
-GROUP BY s1, s2, s3
-ORDER BY n_paths DESC, path ASC LIMIT 20
-"""
-
-_ORACLES["rfm_segments"] = """
-WITH per_user AS (
-  SELECT user_id,
-    max(epoch_us(ts)) AS last_purchase_us,
-    CAST(count(*) AS BIGINT) AS frequency,
-    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS monetary
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-)
-SELECT user_id, frequency, monetary,
-  CAST(ntile(4) OVER (ORDER BY last_purchase_us DESC NULLS LAST,
-                      user_id ASC NULLS LAST) AS BIGINT) AS r_bucket,
-  CAST(ntile(4) OVER (ORDER BY frequency DESC NULLS LAST,
-                      user_id ASC NULLS LAST) AS BIGINT) AS f_bucket,
-  CAST(ntile(4) OVER (ORDER BY monetary DESC NULLS LAST,
-                      user_id ASC NULLS LAST) AS BIGINT) AS m_bucket,
-  CAST(ntile(4) OVER (ORDER BY last_purchase_us DESC NULLS LAST,
-                      user_id ASC NULLS LAST) AS VARCHAR)
-    || '-' || CAST(ntile(4) OVER (ORDER BY frequency DESC NULLS LAST,
-                      user_id ASC NULLS LAST) AS VARCHAR)
-    || '-' || CAST(ntile(4) OVER (ORDER BY monetary DESC NULLS LAST,
-                      user_id ASC NULLS LAST) AS VARCHAR)
-    AS segment
-FROM per_user
-"""
-
-_ORACLES["temperature_mix_weights"] = """
-WITH c AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang
-), s AS (
-  SELECT lang, n_docs,
-    n_docs / CAST((SELECT sum(n_docs) FROM c) AS DOUBLE) AS share_raw
-  FROM c
-), r AS (
-  SELECT lang, n_docs, share_raw, 1.0 / sqrt(share_raw) AS raw FROM s
-)
-SELECT lang, n_docs, round(share_raw, 6) AS share,
-  round(raw / (SELECT max(raw) FROM r), 6) AS temp_weight
-FROM r
-"""
-
-_ORACLES["paragraph_dedup"] = f"""
-WITH base AS (
-  SELECT doc_id, string_split({_NORM}, ' ') AS toks FROM documents
-), s AS (
-  SELECT doc_id, toks, unnest(generate_series(1, len(toks), 20)) AS start
-  FROM base WHERE len(toks) > 0 AND toks[1] <> ''
-), p AS (
-  SELECT doc_id, CAST((start - 1) // 20 AS BIGINT) AS pidx,
-    array_to_string(toks[start:start + 19], ' ') AS para
-  FROM s
-), r AS (
-  SELECT doc_id, pidx, para,
-    row_number() OVER (PARTITION BY para ORDER BY doc_id, pidx) AS rn
-  FROM p
-), tot AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_paras FROM p GROUP BY doc_id
-), k AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-    string_agg(para, ' ' ORDER BY pidx ASC) AS new_text
-  FROM r WHERE rn = 1 GROUP BY doc_id
-)
-SELECT t.doc_id, t.n_paras,
-  COALESCE(k.n_kept, 0) AS n_kept,
-  COALESCE(k.new_text, '') AS new_text
-FROM tot t LEFT JOIN k ON t.doc_id = k.doc_id
-"""
-
-_ORACLES["bloom_prefilter_join"] = """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-FROM lineitem
-WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 400000)
-"""
-
-_ORACLES["cms_heavy_hitters"] = """
-SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-FROM events GROUP BY user_id HAVING count(*) >= 75
-"""
-
-_ORACLES["dedup_edit_distance"] = """
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist
-FROM documents a
-JOIN documents b
-  ON a.source = b.source
- AND a.doc_id < b.doc_id
- AND abs(length(a.text) - length(b.text)) <= 16
-WHERE levenshtein(a.text, b.text) <= 16
-"""
-
-_ORACLES["winsorized_price_stats"] = """
-WITH bounds AS (
-  SELECT l_returnflag,
-         quantile_disc(l_extendedprice, 0.05) AS p_lo,
-         quantile_disc(l_extendedprice, 0.95) AS p_hi
-  FROM lineitem GROUP BY l_returnflag
-)
-SELECT l.l_returnflag,
-  CAST(CAST(min(b.p_lo) AS DECIMAL(14,2)) AS DOUBLE) AS p_lo,
-  CAST(CAST(min(b.p_hi) AS DECIMAL(14,2)) AS DOUBLE) AS p_hi,
-  CAST(SUM(CAST(greatest(b.p_lo, least(b.p_hi, l.l_extendedprice)) AS DECIMAL(14,2))) AS DOUBLE) AS sum_clipped,
-  CAST(SUM(CASE WHEN l.l_extendedprice < b.p_lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_low,
-  CAST(SUM(CASE WHEN l.l_extendedprice > b.p_hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_high
-FROM lineitem l JOIN bounds b USING (l_returnflag)
-GROUP BY l.l_returnflag
-"""
-
-# Capped mirror of the engine scale path (see dedup_ngram_jaccard note):
-# identical max_df algorithm, direction swap on id reorder, within-group
-# full containment.
-_ORACLES["dedup_containment"] = f"""
-{_capped_collapse_cte(3, 1000)},
-vp AS (
-  SELECT xa.gk AS ka, xb.gk AS kb,
-    round(CAST(len(list_intersect(xa.rs, xb.rs)) AS DOUBLE) / len(xa.rs), 6) AS c_ab,
-    round(CAST(len(list_intersect(xa.rs, xb.rs)) AS DOUBLE) / len(xb.rs), 6) AS c_ba
-  FROM cand JOIN rep xa ON xa.rid = cand.ra JOIN rep xb ON xb.rid = cand.rb
-),
-ver AS (SELECT * FROM vp WHERE c_ab >= 0.8 OR c_ba >= 0.8),
-cross_p AS (
-  SELECT least(ma.doc_id, mb.doc_id) AS id_a,
-         greatest(ma.doc_id, mb.doc_id) AS id_b,
-         CASE WHEN ma.doc_id < mb.doc_id THEN c_ab ELSE c_ba END AS containment_ab,
-         CASE WHEN ma.doc_id < mb.doc_id THEN c_ba ELSE c_ab END AS containment_ba
-  FROM ver JOIN g ma ON ma.gk = ver.ka JOIN g mb ON mb.gk = ver.kb
-),
-within AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         1.0 AS containment_ab, 1.0 AS containment_ba
-  FROM g a JOIN g b ON a.gk = b.gk AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, containment_ab, containment_ba FROM cross_p
-UNION ALL SELECT id_a, id_b, containment_ab, containment_ba FROM within
-"""
-
-_ORACLES["robust_scale_orders"] = """
-WITH med AS (
-  SELECT o_orderpriority,
-         CAST(quantile_disc(o_totalprice, 0.5) AS DECIMAL(14,2)) AS med
-  FROM orders GROUP BY o_orderpriority
-),
-mad AS (
-  SELECT o.o_orderpriority,
-         quantile_disc(abs(CAST(o.o_totalprice AS DECIMAL(14,2)) - m.med), 0.5) AS mad
-  FROM orders o JOIN med m USING (o_orderpriority)
-  GROUP BY o.o_orderpriority
-)
-SELECT o.o_orderpriority,
-  CAST(count(*) AS BIGINT) AS n,
-  CAST(min(m.med) AS DOUBLE) AS med,
-  CAST(min(d.mad) AS DOUBLE) AS mad,
-  CAST(SUM(CASE WHEN abs(CAST(o.o_totalprice AS DECIMAL(14,2)) - m.med) * 10 > d.mad * 30
-                 AND d.mad > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-FROM orders o JOIN med m USING (o_orderpriority) JOIN mad d USING (o_orderpriority)
-GROUP BY o.o_orderpriority
-"""
-
-_ORACLES["rolling_hour_user_value"] = """
-SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-  CAST(count(*) OVER w AS BIGINT) AS n_trailing,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER w AS DOUBLE) AS sum_trailing
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-_ORACLES["downsample_events"] = """
-WITH b AS (
-  SELECT user_id, epoch_us(ts) // 60000000 AS bucket,
-         epoch_us(ts) AS ts_us, event_id
-  FROM events
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, bucket
-                               ORDER BY ts_us ASC, event_id ASC) AS rn,
-         count(*) OVER (PARTITION BY user_id, bucket) AS n
-  FROM b
-)
-SELECT user_id, bucket, event_id, ts_us,
-       CAST(n - 1 AS BIGINT) AS n_dropped
-FROM r WHERE rn = 1
-"""
-
-_ORACLES["curriculum_stages"] = """
-WITH s AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS sc,
-         ntile(4) OVER (ORDER BY n_chars ASC, doc_id ASC) AS stage
-  FROM documents
-)
-SELECT stage, CAST(count(*) AS BIGINT) AS n_docs,
-  min(sc) AS min_score, max(sc) AS max_score,
-  CAST(SUM(sc) AS DOUBLE) / count(*) AS mean_score
-FROM s GROUP BY stage
-"""
-
-# Lee et al. 2022 positional substring dedup: k=8 token windows hashed
-# to a 16-hex md5 prefix; a window is duplicated iff its hash occurs
-# >= 2 times corpus-wide; spans merge via lead() over per-doc starts
-# (sorted starts s_1..s_m cover sum(min(k, s_{i+1}-s_i)) + k tokens).
-_ORACLES["duplicate_span_stats"] = f"""
-WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
-tt AS (SELECT doc_id, w, len(w) AS n FROM t WHERE len(w) >= 8 AND w[1] <> ''),
-idx AS (SELECT doc_id, w, unnest(generate_series(0, n - 8)) AS start FROM tt),
-win AS (SELECT doc_id, start,
-        substring(md5(array_to_string(w[start+1:start+8], ' ')), 1, 16) AS h
-        FROM idx),
-duph AS (SELECT h FROM win GROUP BY h HAVING count(*) >= 2),
-d AS (SELECT doc_id, start FROM win JOIN duph USING (h)),
-sp AS (SELECT doc_id, start,
-       lead(start) OVER (PARTITION BY doc_id ORDER BY start) AS nxt FROM d),
-agg AS (SELECT doc_id,
-        CAST(count(*) AS BIGINT) AS n_dup_windows,
-        CAST(sum(CASE WHEN nxt IS NULL OR nxt - start >= 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_spans,
-        CAST(sum(CASE WHEN nxt IS NULL THEN 8 ELSE least(8, nxt - start) END) AS BIGINT) AS removed_tokens
-        FROM sp GROUP BY doc_id)
-SELECT tt.doc_id, CAST(tt.n AS BIGINT) AS n_tokens,
-  coalesce(a.n_dup_windows, 0) AS n_dup_windows,
-  coalesce(a.n_spans, 0) AS n_spans,
-  coalesce(a.removed_tokens, 0) AS removed_tokens,
-  round(coalesce(a.removed_tokens, 0) / CAST(tt.n AS DOUBLE), 6) AS removed_fraction
-FROM tt LEFT JOIN agg a USING (doc_id)
-"""
-
-# DSIR (Xie et al. 2023): hashed-unigram log-likelihood ratio, portable
-# md5 bucket, per-bucket log-ratio rounded to 6dp, per-doc sum as
-# integer-count x 6dp-decimal (order-independent).
-_ORACLES["dsir_importance_weights"] = f"""
-WITH toks AS (
-  SELECT doc_id, lang, unnest(string_split({_NORM}, ' ')) AS tok FROM documents
-),
-tk AS (SELECT doc_id, lang,
-       CAST('0x' || substring(md5(tok), 1, 4) AS BIGINT) % 256 AS b
-       FROM toks WHERE tok <> ''),
-dc AS (SELECT doc_id, b, count(*) AS c FROM tk GROUP BY 1, 2),
-raw AS (SELECT b, count(*) AS cr FROM tk GROUP BY 1),
-tgt AS (SELECT b, count(*) AS ct FROM tk WHERE lang = 'en' GROUP BY 1),
-nr AS (SELECT sum(cr) AS nr FROM raw),
-nt AS (SELECT sum(ct) AS nt FROM tgt),
-lr AS (SELECT raw.b,
-       round(ln((coalesce(tgt.ct, 0) + 1) / CAST(nt.nt + 256 AS DOUBLE))
-             - ln((raw.cr + 1) / CAST(nr.nr + 256 AS DOUBLE)), 6) AS lr
-       FROM raw LEFT JOIN tgt USING (b), nr, nt)
-SELECT dc.doc_id,
-  CAST(sum(dc.c) AS BIGINT) AS n_tokens,
-  CAST(sum(CAST(dc.c * lr.lr AS DECIMAL(24,6))) AS DOUBLE) AS log_weight
-FROM dc JOIN lr USING (b)
-GROUP BY dc.doc_id
-"""
-
-# aHash near-dup image pairs: 8x8 nearest resample of the closed-form
-# 16x16 pixel field picks source (2y, 2x) -> v = (d*31 + 14x + 26y) % 256;
-# bit = 1 iff v*64 >= sum (exact integer mean threshold), row-major.
-# The engine routes pairs through the shared bounded-bucket machinery
-# (max_bucket=10000), so the oracle mirrors the cap: hash groups above
-# it emit NO pairs. The synthetic aHash depends only on doc_id % 256,
-# so bucket sizes grow linearly with corpus size and the cap WILL bind
-# at a large enough SF — without the mirrored HAVING the replay would
-# silently diverge there (ADVICE r5). Cap-binding parity is proven on a
-# fixture in tests/test_ahash_cap_parity.py.
-_ORACLES["image_ahash_pairs"] = """
-WITH px AS (
-  SELECT d.doc_id, ys.y, xs.x,
-         (d.doc_id * 31 + xs.x * 14 + ys.y * 26) % 256 AS v
-  FROM documents d,
-       (SELECT unnest(range(0, 8)) AS x) xs,
-       (SELECT unnest(range(0, 8)) AS y) ys
-),
-tot AS (SELECT doc_id, sum(v) AS t FROM px GROUP BY doc_id),
-bits AS (
-  SELECT px.doc_id,
-    string_agg(CASE WHEN v * 64 >= t THEN '1' ELSE '0' END, '' ORDER BY y, x) AS ahash
-  FROM px JOIN tot USING (doc_id) GROUP BY px.doc_id
-),
-kept AS (SELECT ahash FROM bits GROUP BY ahash HAVING count(*) <= 10000)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.ahash
-FROM bits a JOIN bits b ON a.ahash = b.ahash AND a.doc_id < b.doc_id
-JOIN kept ON a.ahash = kept.ahash
-"""
-
-# Scale-safe twin: percentile_disc boundaries + scan-local range
-# assignment — mirrors operators/corpus.py:curriculum_stages_scalable
-# (ties at a boundary land in the LOWER stage on both sides).
-_ORACLES["curriculum_stages_scalable"] = """
-WITH s AS (SELECT CAST(n_chars AS BIGINT) AS sc FROM documents),
-b AS (SELECT quantile_disc(sc, [0.25, 0.5, 0.75]) AS bs FROM s)
-SELECT CAST(1 + len(list_filter(b.bs, x -> s.sc > x)) AS BIGINT) AS stage,
-  CAST(count(*) AS BIGINT) AS n_docs,
-  min(sc) AS min_score, max(sc) AS max_score,
-  CAST(SUM(sc) AS DOUBLE) / count(*) AS mean_score
-FROM s, b GROUP BY 1
-"""
-
-# Scale-safe RFM twin: per-metric quantile_disc thresholds, bucket 1 =
-# top quantile, ties land in the better bucket — mirrors
-# operators/behavior.py:rfm_segments_scalable.
-# Final streaming state == the batch aggregate (exact-cents state makes
-# this batching-independent; see q_stateful_user_profiles).
-_ORACLES["stateful_user_profiles"] = """
-SELECT user_id,
-  CAST(count(*) AS BIGINT) AS n_events,
-  CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value,
-  max(epoch_us(ts)) AS last_ts_us
-FROM events GROUP BY user_id
-"""
-
-_ORACLES["rfm_segments_scalable"] = """
-WITH per_user AS (
-  SELECT user_id,
-    max(epoch_us(ts)) AS last_purchase_us,
-    CAST(count(*) AS BIGINT) AS frequency,
-    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS monetary
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-),
-th AS (
-  SELECT quantile_disc(last_purchase_us, [0.25, 0.5, 0.75]) AS tr,
-         quantile_disc(frequency, [0.25, 0.5, 0.75]) AS tf,
-         quantile_disc(monetary, [0.25, 0.5, 0.75]) AS tm
-  FROM per_user
-),
-b AS (
-  SELECT user_id, frequency, monetary,
-    CAST(4 - len(list_filter(th.tr, t -> per_user.last_purchase_us >= t)) AS BIGINT) AS r_bucket,
-    CAST(4 - len(list_filter(th.tf, t -> per_user.frequency >= t)) AS BIGINT) AS f_bucket,
-    CAST(4 - len(list_filter(th.tm, t -> per_user.monetary >= t)) AS BIGINT) AS m_bucket
-  FROM per_user, th
-)
-SELECT user_id, frequency, monetary, r_bucket, f_bucket, m_bucket,
-  CAST(r_bucket AS VARCHAR) || '-' || CAST(f_bucket AS VARCHAR)
-    || '-' || CAST(m_bucket AS VARCHAR) AS segment
-FROM b
-"""
-
-_ORACLES["cdc_apply_customers"] = """
-WITH base AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-chg AS (
-  SELECT c_custkey, 2 AS version, 'U' AS op, c_name,
-         CAST(c_acctbal + 100 AS DOUBLE) AS c_acctbal
-  FROM customer WHERE c_custkey % 7 = 0
-  UNION ALL
-  SELECT c_custkey, 1, 'U', c_name, CAST(c_acctbal + 999 AS DOUBLE)
-  FROM customer WHERE c_custkey % 7 = 0
-  UNION ALL
-  SELECT c_custkey, 3, 'D', c_name, c_acctbal
-  FROM customer WHERE c_custkey % 13 = 0
-  UNION ALL
-  SELECT c_custkey + 1000000, 1, 'I', c_name, CAST(0.0 AS DOUBLE)
-  FROM customer WHERE c_custkey % 11 = 0
-),
-latest AS (
-  SELECT * FROM (
-    SELECT c_custkey, op, c_name, c_acctbal,
-           row_number() OVER (PARTITION BY c_custkey ORDER BY version DESC) AS rn
-    FROM chg
-  ) WHERE rn = 1
-)
-SELECT b.c_custkey, b.c_name, b.c_acctbal FROM base b
-WHERE b.c_custkey NOT IN (SELECT c_custkey FROM latest)
-UNION ALL
-SELECT c_custkey, c_name, c_acctbal FROM latest WHERE op <> 'D'
-"""
-
-_ORACLES["snapshot_diff_orders"] = """
-WITH old AS (
-  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-),
-new AS (
-  SELECT o_orderkey, o_orderstatus,
-    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1 ELSE o_totalprice END AS o_totalprice
-  FROM orders WHERE o_orderkey % 17 <> 0
-  UNION ALL
-  SELECT o_orderkey + 10000000, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey % 19 = 0
-)
-SELECT status, CAST(count(*) AS BIGINT) AS n_keys FROM (
-  SELECT CASE
-    WHEN o.o_orderkey IS NULL THEN 'added'
-    WHEN n.o_orderkey IS NULL THEN 'removed'
-    WHEN o.o_orderstatus <> n.o_orderstatus
-      OR o.o_totalprice <> n.o_totalprice THEN 'changed'
-    ELSE 'unchanged' END AS status
-  FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
-) GROUP BY status
-"""
-
-_ORACLES["ab_test_value"] = """
-WITH t AS (
-  SELECT CAST('0x' || substring(md5(CAST(user_id AS STRING)), 1, 4) AS BIGINT) % 2
-           AS arm_raw,
-         CAST(value AS DECIMAL(12,2)) AS v
-  FROM events WHERE user_id IS NOT NULL
-),
-per AS (
-  SELECT arm_raw AS arm, CAST(count(*) AS BIGINT) AS n,
-         SUM(v) AS s, SUM(CAST(v * v AS DECIMAL(38,4))) AS ss
-  FROM t GROUP BY arm_raw
-),
-stats AS (
-  SELECT arm, n,
-    round(CAST(s AS DOUBLE) / n, 6) AS mean,
-    round((CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n)
-          / (n - 1), 6) AS var
-  FROM per
-),
-z AS (
-  SELECT round((a.mean - b.mean) / sqrt(a.var / a.n + b.var / b.n), 6) AS z,
-         abs((a.mean - b.mean) / sqrt(a.var / a.n + b.var / b.n)) >= 1.96
-           AS significant
-  FROM stats a, stats b WHERE a.arm = 0 AND b.arm = 1
-)
-SELECT s.arm, s.n, s.mean, s.var, z.z, z.significant FROM stats s, z
-"""
-
-_ORACLES["conversion_latency"] = """
-WITH f AS (
-  SELECT user_id, min(epoch_us(ts)) AS t0 FROM events
-  WHERE event_type = 'click' GROUP BY user_id
-),
-c AS (
-  SELECT e.user_id, min(epoch_us(e.ts) - f.t0) AS latency_us
-  FROM events e JOIN f USING (user_id)
-  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= f.t0
-  GROUP BY e.user_id
-)
-SELECT CAST(count(*) AS BIGINT) AS n_converted,
-  quantile_disc(latency_us, 0.5) AS p50_us,
-  quantile_disc(latency_us, 0.9) AS p90_us,
-  quantile_disc(latency_us, 0.99) AS p99_us
-FROM c
-"""
-
-_ORACLES["event_cooccurrence"] = """
-WITH ut AS (SELECT DISTINCT user_id, event_type FROM events
-            WHERE user_id IS NOT NULL),
-nu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM ut),
-tc AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_type FROM ut GROUP BY event_type),
-pc AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         CAST(count(*) AS BIGINT) AS n_both
-  FROM ut a JOIN ut b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2 HAVING count(*) >= 5
-)
-SELECT pc.type_a, pc.type_b, pc.n_both,
-  round(CAST(pc.n_both AS DOUBLE) * CAST(nu.n_users AS DOUBLE)
-        / (CAST(ta.n_type AS DOUBLE) * CAST(tb.n_type AS DOUBLE)), 6) AS lift
-FROM pc
-JOIN tc ta ON ta.event_type = pc.type_a
-JOIN tc tb ON tb.event_type = pc.type_b
-CROSS JOIN nu
-"""
-
-_ORACLES["contract_check_orders"] = """
-SELECT 'not_null' AS "constraint", 'o_orderkey' AS "column",
-       CAST(count(CASE WHEN o_orderkey IS NULL THEN 1 END) AS BIGINT) AS n_violations
-FROM orders
-UNION ALL
-SELECT 'not_null', 'o_custkey',
-       CAST(count(CASE WHEN o_custkey IS NULL THEN 1 END) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'unique', 'o_orderkey',
-       CAST(COALESCE(SUM(n - 1), 0) AS BIGINT)
-FROM (SELECT count(*) AS n FROM orders WHERE o_orderkey IS NOT NULL
-      GROUP BY o_orderkey HAVING count(*) > 1)
-UNION ALL
-SELECT 'accepted_values', 'o_orderstatus',
-       CAST(count(CASE WHEN o_orderstatus IS NOT NULL
-                        AND o_orderstatus NOT IN ('O','F','P') THEN 1 END) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'references', 'o_custkey', CAST(count(*) AS BIGINT)
-FROM orders o
-WHERE o.o_custkey IS NOT NULL
-  AND o.o_custkey NOT IN (SELECT c_custkey FROM customer)
-"""
-
-_ORACLES["lang_distribution_shift"] = """
-WITH a AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_a FROM documents
-  WHERE CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) < 32768
-  GROUP BY lang
-),
-b AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_b FROM documents
-  WHERE CAST('0x' || substring(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT) >= 32768
-  GROUP BY lang
-),
-cats AS (
-  SELECT COALESCE(a.lang, b.lang) AS lang,
-         COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b
-  FROM a FULL OUTER JOIN b ON a.lang = b.lang
-),
-tot AS (
-  SELECT CAST(SUM(n_a) AS BIGINT) AS ta, CAST(SUM(n_b) AS BIGINT) AS tb,
-         CAST(count(*) AS BIGINT) AS k
-  FROM cats
-),
-terms AS (
-  SELECT c.lang, c.n_a, c.n_b,
-    round(CAST(c.n_a + 1 AS DOUBLE) / (t.ta + t.k), 6) AS p_a,
-    round(CAST(c.n_b + 1 AS DOUBLE) / (t.tb + t.k), 6) AS p_b,
-    round((CAST(c.n_a + 1 AS DOUBLE) / (t.ta + t.k))
-          * ln((CAST(c.n_a + 1 AS DOUBLE) / (t.ta + t.k))
-               / (CAST(c.n_b + 1 AS DOUBLE) / (t.tb + t.k))), 6) AS kl_term,
-    round(abs(CAST(c.n_a + 1 AS DOUBLE) / (t.ta + t.k)
-              - CAST(c.n_b + 1 AS DOUBLE) / (t.tb + t.k)) / 2, 6) AS tv_term
-  FROM cats c CROSS JOIN tot t
-),
-sums AS (
-  SELECT CAST(SUM(CAST(kl_term AS DECIMAL(18,6))) AS DOUBLE) AS total_kl,
-         CAST(SUM(CAST(tv_term AS DECIMAL(18,6))) AS DOUBLE) AS total_tv
-  FROM terms
-)
-SELECT terms.*, sums.total_kl, sums.total_tv FROM terms CROSS JOIN sums
-"""
-
-_ORACLES["k_anonymity_customers"] = """
-WITH c AS (
-  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n
-  FROM customer GROUP BY c_nationkey, c_mktsegment
-)
-SELECT CAST(5 AS BIGINT) AS k,
-  CAST(count(*) AS BIGINT) AS n_classes,
-  CAST(SUM(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_unsafe_classes,
-  CAST(SUM(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-  CAST(min(n) AS BIGINT) AS min_class_size
-FROM c
-"""
-
-_ORACLES["column_entropy_orders"] = """
-WITH pairs AS (
-  SELECT 'o_orderstatus' AS col_name,
-         COALESCE(CAST(o_orderstatus AS STRING), chr(0) || 'null') AS val
-  FROM orders
-  UNION ALL
-  SELECT 'o_orderpriority', COALESCE(CAST(o_orderpriority AS STRING), chr(0) || 'null')
-  FROM orders
-),
-counts AS (
-  SELECT col_name, val, CAST(count(*) AS BIGINT) AS n
-  FROM pairs GROUP BY col_name, val
-),
-totals AS (
-  SELECT col_name, CAST(SUM(n) AS BIGINT) AS total,
-         CAST(count(*) AS BIGINT) AS n_distinct
-  FROM counts GROUP BY col_name
-)
-SELECT c.col_name, t.n_distinct,
-  CAST(SUM(CAST(round(-(CAST(c.n AS DOUBLE) / t.total)
-                      * log2(CAST(c.n AS DOUBLE) / t.total), 6)
-                AS DECIMAL(18,6))) AS DOUBLE) AS entropy_bits
-FROM counts c JOIN totals t USING (col_name)
-GROUP BY c.col_name, t.n_distinct
-"""
-
-_ORACLES["join_size_orders_lineitem"] = """
-WITH lc AS (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS nl
-            FROM orders GROUP BY o_orderkey),
-rc AS (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS nr
-       FROM lineitem GROUP BY l_orderkey),
-pk AS (SELECT lc.k, nl * nr AS o FROM lc JOIN rc USING (k))
-SELECT CAST(COALESCE(SUM(o), 0) AS BIGINT) AS n_join_rows,
-  CAST(count(*) AS BIGINT) AS n_matching_keys,
-  CAST(COALESCE(MAX(o), 0) AS BIGINT) AS max_key_rows,
-  (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_left,
-  (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_right
-FROM pk
-"""
-
-_ORACLES["embedding_norm_profile"] = """
-WITH norms AS (
-  SELECT vec_id, len(embedding) AS dim,
-    round(sqrt((SELECT SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-                FROM unnest(embedding) AS t(x))), 6) AS nrm
-  FROM embeddings
-),
-base AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-    CAST(max(dim) AS INTEGER) AS dim,
-    round(CAST(SUM(CAST(nrm AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
-      AS mean_norm,
-    min(nrm) AS min_norm, max(nrm) AS max_norm
-  FROM norms
-),
-dims AS (
-  SELECT i,
-    round(CAST(SUM(CAST(CAST(e.embedding[i] AS DOUBLE) AS DECIMAL(28,8)))
-               AS DOUBLE), 6)
-      AS s,
-    CAST(count(*) AS BIGINT) AS n
-  FROM embeddings e, unnest(range(1, len(e.embedding) + 1)) AS t(i)
-  GROUP BY i
-),
-mv AS (
-  SELECT round(sqrt(CAST(SUM(CAST(round((s / n) * (s / n), 8)
-                                  AS DECIMAL(28,8))) AS DOUBLE)), 6)
-           AS mean_vector_norm
-  FROM dims
-)
-SELECT base.*, mv.mean_vector_norm FROM base CROSS JOIN mv
-"""
-
-_ORACLES["event_gap_stats"] = """
-WITH g AS (
-  SELECT user_id, epoch_us(ts) AS us,
-    epoch_us(ts) - lag(epoch_us(ts)) OVER
-      (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS gap_us
-  FROM events
-)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-  max(gap_us) AS max_gap_us,
-  CAST(SUM(CASE WHEN gap_us > 86400000000 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_large_gaps,
-  max(us) - min(us) AS span_us
-FROM g GROUP BY user_id
-"""
-
-_ORACLES["user_event_novelty"] = """
-WITH f AS (
-  SELECT event_id, user_id, epoch_us(ts) AS us,
-    CASE WHEN row_number() OVER
-      (PARTITION BY user_id, event_type ORDER BY epoch_us(ts), event_id) = 1
-      THEN 1 ELSE 0 END AS is_new
-  FROM events
-)
-SELECT event_id, user_id,
-  CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-    AS n_types_seen
-FROM f
-"""
-
-_ORACLES["decayed_user_value"] = """
-SELECT user_id, event_id,
-  value + 0.5 * COALESCE(lag(value, 1) OVER w, 0)
-        + 0.25 * COALESCE(lag(value, 2) OVER w, 0)
-        + 0.125 * COALESCE(lag(value, 3) OVER w, 0) AS decayed_value
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-"""
-
-
-def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime bloom-filter pre-filtered semi-join: lineitem rows whose
-    order is a high-value order (o_totalprice > 400k). The bloom filter
-    prunes the fact-side shuffle; the trailing exact semi-join removes
-    false positives, so the result — asserted by the oracle — is
-    EXACTLY the plain semi-join aggregate."""
-    from breweries_etl_spark.operators.bloomjoin import bloom_semi_join
-
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice") > 400000
-    )
-    kept = bloom_semi_join(lineitem, orders, "l_orderkey", "o_orderkey")
-    return kept.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-        .cast("double")
-        .alias("sum_price"),
-    )
-
-
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min-Sketch candidate phase + exact verify: users with ≥75
-    events. Bounded-state sketch build (depth×width cells regardless of
-    key cardinality) — the CMS over-counts, never under-counts, so the
-    verified output equals the direct GROUP BY/HAVING the oracle runs."""
-    from breweries_etl_spark.operators.profiling import cms_heavy_hitters
-
-    events = load_events(spark, sf_dir)
-    return cms_heavy_hitters(events, "user_id", threshold=75)
-
-
-def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Levenshtein near-dup pairs (dist ≤ 16) under provably
-    lossless length-bucket blocking (pairs within edit distance d differ
-    ≤ d in length ⇒ same/adjacent bucket of width ≥ d)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.edit_distance_pairs(
-        docs, text_col="text", id_col="doc_id", block_col="source",
-        max_dist=16, bucket_width=32,
-    )
-    return pairs.select("id_a", "id_b", F.col("dist").cast("long").alias("dist"))
-
-
-def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directional containment (quote/excerpt) pairs at 0.8 — catches
-    subset documents Jaccard misses; candidate machinery shared with
-    the exact n-gram path (df-capped inverted index)."""
-    return dedup.containment_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.8
-    )
-
-
-def q_robust_scale_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-priority median/MAD robust scaling stats with exact-decimal
-    outlier tally (percentile_disc picks, no interpolation)."""
-    from breweries_etl_spark.operators.profiling import robust_scale_stats
-
-    orders = load_table(spark, sf_dir, "orders")
-    return robust_scale_stats(orders, "o_totalprice", "o_orderpriority", z_cut=3.0)
-
-
-def q_rolling_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-1h RANGE-frame velocity features per user (microsecond-
-    exact frame boundaries; tie-safe by RANGE-peer semantics)."""
-    from breweries_etl_spark.operators.temporal import rolling_time_window
-
-    return rolling_time_window(load_events(spark, sf_dir), window_seconds=3600)
-
-
-def q_downsample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep each user's earliest event per minute (argmin struct, no
-    window over raw rows)."""
-    from breweries_etl_spark.operators.temporal import (
-        downsample_first_per_bucket,
-    )
-
-    return downsample_first_per_bucket(load_events(spark, sf_dir))
-
-
-def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum-learning stage cuts (deterministic ntile over a
-    (score, id) total order) with per-stage summary."""
-    from breweries_etl_spark.operators.corpus import curriculum_buckets
-
-    return curriculum_buckets(load_table(spark, sf_dir, "documents"))
-
-
-def q_curriculum_stages_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-safe twin of curriculum_stages: percentile_disc stage
-    boundaries broadcast as a range filter — no global sort, no window
-    (VERDICT r4 #6). Tie mass at a boundary lands in the lower stage,
-    so stage populations differ from the ntile twin only at ties."""
-    from breweries_etl_spark.operators.corpus import curriculum_stages_scalable
-
-    return curriculum_stages_scalable(load_table(spark, sf_dir, "documents"))
-
-
-def q_rfm_segments_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-safe twin of rfm_segments: per-metric percentile_disc
-    thresholds broadcast back for scan-local bucketing — no triple
-    global-sort ntile window (VERDICT r4 #6)."""
-    from breweries_etl_spark.operators.behavior import rfm_segments_scalable
-
-    return rfm_segments_scalable(load_events(spark, sf_dir))
-
-
-def q_cdc_apply_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-independent CDC changelog apply (I/U/D + out-of-order
-    versions): the synthetic feed carries a stale version-1 update that
-    must LOSE to version 2, and deletes at version 3 that must beat
-    both. Unique (key, version) pairs by construction, so the argmax
-    tiebreak never fires and the SQL row_number replay is exact."""
-    from breweries_etl_spark.operators.merge import cdc_apply
-
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-    upd2 = cust.filter(F.col("c_custkey") % 7 == 0).select(
-        "c_custkey",
-        F.lit(2).alias("version"),
-        F.lit("U").alias("op"),
-        "c_name",
-        (F.col("c_acctbal") + 100).cast("double").alias("c_acctbal"),
-    )
-    upd1 = cust.filter(F.col("c_custkey") % 7 == 0).select(
-        "c_custkey",
-        F.lit(1).alias("version"),
-        F.lit("U").alias("op"),
-        "c_name",
-        (F.col("c_acctbal") + 999).cast("double").alias("c_acctbal"),
-    )
-    dels = cust.filter(F.col("c_custkey") % 13 == 0).select(
-        "c_custkey",
-        F.lit(3).alias("version"),
-        F.lit("D").alias("op"),
-        "c_name",
-        F.col("c_acctbal").cast("double"),
-    )
-    ins = cust.filter(F.col("c_custkey") % 11 == 0).select(
-        (F.col("c_custkey") + 1000000).alias("c_custkey"),
-        F.lit(1).alias("version"),
-        F.lit("I").alias("op"),
-        "c_name",
-        F.lit(0.0).alias("c_acctbal"),
-    )
-    changelog = upd2.unionByName(upd1).unionByName(dels).unionByName(ins)
-    return cdc_apply(cust, changelog, "c_custkey")
-
-
-def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-hash snapshot diff between orders and a perturbed copy
-    (removed %17, price-changed %5, added %19 with offset keys) —
-    digests shuffle, payloads don't."""
-    from breweries_etl_spark.operators.merge import snapshot_diff
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    changed = orders.filter(F.col("o_orderkey") % 17 != 0).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.when(
-            F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1
-        ).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
-    )
-    added = orders.filter(F.col("o_orderkey") % 19 == 0).select(
-        (F.col("o_orderkey") + 10000000).alias("o_orderkey"),
-        "o_orderstatus",
-        "o_totalprice",
-    )
-    new = changed.unionByName(added)
-    return snapshot_diff(orders, new, "o_orderkey")
-
-
-def q_ab_test_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-arm experiment readout over a portable md5 hash split:
-    exact-decimal component sums → fixed-sequence double z-statistic."""
-    from breweries_etl_spark.operators.behavior import ab_test_stats
-
-    return ab_test_stats(load_events(spark, sf_dir))
-
-
-def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-click→first-purchase latency percentiles (disc picks over
-    integer microsecond deltas)."""
-    from breweries_etl_spark.operators.behavior import (
-        conversion_latency_percentiles,
-    )
-
-    return conversion_latency_percentiles(load_events(spark, sf_dir))
-
-
-def q_event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket lift between event types at user granularity over
-    the collapsed (user, type) relation."""
-    from breweries_etl_spark.operators.behavior import event_cooccurrence_lift
-
-    return event_cooccurrence_lift(load_events(spark, sf_dir))
-
-
-def q_lang_distribution_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-mix drift between the two md5-hash halves of the corpus:
-    smoothed per-lang probabilities, KL contributions, decimal-summed
-    totals — all fixed-order double arithmetic, round-6 stable."""
-    from breweries_etl_spark.operators.profiling import distribution_shift
-    from breweries_etl_spark.operators.sampling import hash_bucket_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    bucket = hash_bucket_expr(F.col("doc_id"))
-    return distribution_shift(
-        docs.filter(bucket < 32768), docs.filter(bucket >= 32768), "lang"
-    )
-
-
-def q_event_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user max silence / large-gap count / activity span — dead
-    sensor detection from the data itself (integer µs deltas)."""
-    from breweries_etl_spark.operators.temporal import event_gap_stats
-
-    return event_gap_stats(load_events(spark, sf_dir), gap_threshold_s=86_400)
-
-
-def q_user_event_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running distinct-event-type count per user (exploration curve)."""
-    from breweries_etl_spark.operators.behavior import user_event_novelty
-
-    return user_event_novelty(load_events(spark, sf_dir))
-
-
-def q_join_size_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact orders⋈lineitem output cardinality WITHOUT running the
-    join — key-count relations only."""
-    from breweries_etl_spark.operators.profiling import join_size_estimate
-
-    return join_size_estimate(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        "o_orderkey",
-        "l_orderkey",
-    )
-
-
-def q_embedding_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector-quality profile: norm spread + mean-vector norm
-    (anisotropy smell test); decimal-carried sums, round-6 stable."""
-    from breweries_etl_spark.operators.profiling import embedding_norm_stats
-
-    return embedding_norm_stats(load_table(spark, sf_dir, "embeddings"))
-
-
-def q_k_anonymity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Re-identification audit on (nation, market segment) quasi-
-    identifiers at k=5: class counts and rows-at-risk, one hash agg."""
-    from breweries_etl_spark.operators.quality import k_anonymity_check
-
-    return k_anonymity_check(
-        load_table(spark, sf_dir, "customer"),
-        ["c_nationkey", "c_mktsegment"],
-        k=5,
-    )
-
-
-def q_column_entropy_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column Shannon entropy (status + priority) from one shared
-    groupBy pass; round-6 terms decimal-summed for order independence."""
-    from breweries_etl_spark.operators.profiling import categorical_entropy
-
-    return categorical_entropy(
-        load_table(spark, sf_dir, "orders"), ["o_orderstatus", "o_orderpriority"]
-    )
-
-
-def q_contract_check_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative data-contract gate on orders: not-null keys, unique
-    primary key, accepted status values, customer FK — one union plan,
-    violation counts per constraint (zeros kept for completeness)."""
-    from breweries_etl_spark.operators.quality import contract_violations
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    return contract_violations(
-        orders,
-        not_null=["o_orderkey", "o_custkey"],
-        unique=["o_orderkey"],
-        accepted_values={"o_orderstatus": ["O", "F", "P"]},
-        references=[("o_custkey", customer, "c_custkey")],
-    )
-
-
-def q_winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-returnflag winsorized price statistics: percentile_disc clip
-    bounds (actual data elements — engine-identical), decimal clipped
-    sum (order-independent), and clip tallies."""
-    from breweries_etl_spark.operators.profiling import winsorized_stats
-
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    out = winsorized_stats(
-        lineitem, "l_extendedprice", "l_returnflag", lo_p=0.05, hi_p=0.95
-    )
-    return out.select(
-        "l_returnflag",
-        F.col("p_lo").cast("double").alias("p_lo"),
-        F.col("p_hi").cast("double").alias("p_hi"),
-        F.col("sum_clipped").cast("double").alias("sum_clipped"),
-        "n_clipped_low",
-        "n_clipped_high",
-    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -5240,11616 +57,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_gold_by_type_location(spark, "/root/testdata/sf0.001")
 
 
-# --------------------------------------------------------------------------
-# Round 4 — corpus/ops profiling wave
-
-
-def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-of-two length histogram; bucket index via integer base-2
-    digit count (never floor(log2(double)) — boundary-exact)."""
-    from breweries_etl_spark.operators.text import length_histogram
-
-    return length_histogram(load_table(spark, sf_dir, "documents"))
-
-
-def q_char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source char-class composition (alpha/digit/space/other) from
-    exact integer counts — corpus-drift tripwire."""
-    from breweries_etl_spark.operators.text import char_class_profile
-
-    return char_class_profile(load_table(spark, sf_dir, "documents"))
-
-
-def q_seasonal_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day seasonality per event type with per-type traffic
-    share."""
-    from breweries_etl_spark.operators.temporal import seasonal_hour_profile
-
-    return seasonal_hour_profile(load_events(spark, sf_dir))
-
-
-def q_rolling_count_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user daily-volume z-score vs the trailing 7 observed days
-    (exact integer window sums; NULL z until the history supports a
-    scale)."""
-    from breweries_etl_spark.operators.temporal import rolling_count_anomaly
-
-    return rolling_count_anomaly(load_events(spark, sf_dir))
-
-
-def q_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-event-session rate over the gap-sessionized stream."""
-    from breweries_etl_spark.operators.behavior import session_bounce_rate
-
-    return session_bounce_rate(load_events(spark, sf_dir))
-
-
-_ORACLES["doc_length_histogram"] = """
-SELECT CAST(length(printf('%b', length(text))) - 1 AS BIGINT) AS len_bucket,
-  CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(SUM(length(text)) AS BIGINT) AS sum_chars,
-  round(CAST(SUM(length(text)) AS DOUBLE) / count(*), 6) AS mean_chars,
-  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_words
-FROM documents WHERE length(text) > 0
-GROUP BY 1
-"""
-
-_ORACLES["char_class_profile"] = """
-WITH per AS (
-  SELECT source, length(text) AS n,
-    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS a,
-    length(regexp_replace(text, '[^0-9]', '', 'g')) AS d,
-    length(regexp_replace(text, '[^ ]', '', 'g')) AS s
-  FROM documents
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(SUM(n) AS BIGINT) AS total_chars,
-  round(CAST(SUM(a) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 6) AS alpha_ratio,
-  round(CAST(SUM(d) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 6) AS digit_ratio,
-  round(CAST(SUM(s) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 6) AS space_ratio,
-  round(CAST(SUM(n) - SUM(a) - SUM(d) - SUM(s) AS DOUBLE)
-        / CAST(SUM(n) AS DOUBLE), 6) AS other_ratio
-FROM per GROUP BY source
-"""
-
-_ORACLES["seasonal_hour_profile"] = """
-WITH per AS (
-  SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS INTEGER) AS hour,
-    CAST(count(*) AS BIGINT) AS n_events,
-    SUM(CAST(value AS DECIMAL(12,2))) AS sm
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, hour, n_events,
-  CAST(sm AS DOUBLE) AS total_value,
-  round(CAST(n_events AS DOUBLE)
-        / CAST(SUM(n_events) OVER (PARTITION BY event_type) AS DOUBLE), 6)
-    AS hour_share
-FROM per
-"""
-
-_ORACLES["rolling_count_anomaly"] = """
-WITH daily AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), win AS (
-  SELECT user_id, day, n,
-    count(n) OVER w AS n7, SUM(n) OVER w AS s7, SUM(n * n) OVER w AS ss7
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY day
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT user_id, day, n,
-  CAST(n7 AS BIGINT) AS n_trailing_days,
-  CASE WHEN n7 >= 1 THEN round(CAST(s7 AS DOUBLE) / n7, 6) END AS trailing_mean,
-  CASE WHEN n7 >= 2
-        AND (CAST(ss7 AS DOUBLE)
-             - CAST(s7 AS DOUBLE) * CAST(s7 AS DOUBLE) / n7) / (n7 - 1) > 0
-       THEN round((n - CAST(s7 AS DOUBLE) / n7)
-                  / sqrt((CAST(ss7 AS DOUBLE)
-                          - CAST(s7 AS DOUBLE) * CAST(s7 AS DOUBLE) / n7)
-                         / (n7 - 1)), 6)
-  END AS z
-FROM win
-"""
-
-_ORACLES["session_bounce_rate"] = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-  FROM e
-), sess AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-), per AS (
-  SELECT user_id, session_id, count(*) AS n_events FROM sess GROUP BY 1, 2
-)
-SELECT CAST(count(*) AS BIGINT) AS n_sessions,
-  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounces,
-  round(CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS bounce_rate,
-  round(CAST(SUM(n_events) AS DOUBLE) / count(*), 6) AS mean_events_per_session
-FROM per
-"""
-
-
-def q_mode_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user exact modal event type (tie → smallest value), two
-    map-side-combinable aggregates, no window over the pair relation."""
-    from breweries_etl_spark.operators.aggregate import exact_mode
-
-    return exact_mode(load_events(spark, sf_dir), "user_id", "event_type")
-
-
-def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantity-weighted lower-median extended price per return flag —
-    exact decimal cumulative weights, boundary compared as 2·cum ≥ tot."""
-    from breweries_etl_spark.operators.aggregate import weighted_median
-
-    return weighted_median(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_extendedprice",
-        "l_quantity",
-    )
-
-
-def q_benford_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-digit distribution of order totals vs Benford expectation."""
-    from breweries_etl_spark.operators.quality import benford_first_digit
-
-    return benford_first_digit(load_table(spark, sf_dir, "orders"), "o_totalprice")
-
-
-def q_fd_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Functional-dependency audit o_custkey → o_orderpriority (expected
-    violated — measures how far)."""
-    from breweries_etl_spark.operators.quality import fd_violation_stats
-
-    return fd_violation_stats(
-        load_table(spark, sf_dir, "orders"), ["o_custkey"], "o_orderpriority"
-    )
-
-
-def q_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise cosine between per-label embedding centroids (45 pairs
-    over 10 labels) — order-independent decimal term sums."""
-    from breweries_etl_spark.operators.similarity import label_centroid_similarity
-
-    return label_centroid_similarity(load_table(spark, sf_dir, "embeddings"))
-
-
-def q_ols_price_on_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form per-flag OLS of extended price on quantity (normal
-    equations from exact decimal component sums)."""
-    from breweries_etl_spark.operators.mltrain import ols_fit
-
-    return ols_fit(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        "l_extendedprice",
-    )
-
-
-_ORACLES["mode_event_type"] = """
-WITH c AS (
-  SELECT user_id, event_type AS value, count(*) AS cnt
-  FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2
-), r AS (
-  SELECT user_id, value, cnt,
-    row_number() OVER (PARTITION BY user_id ORDER BY cnt DESC, value ASC) AS rn
-  FROM c
-)
-SELECT user_id, value AS mode_value, CAST(cnt AS BIGINT) AS mode_count
-FROM r WHERE rn = 1
-"""
-
-_ORACLES["weighted_median_price"] = """
-WITH pv AS (
-  SELECT l_returnflag, l_extendedprice AS value,
-    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS vw
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-  GROUP BY 1, 2
-), win AS (
-  SELECT l_returnflag, value,
-    SUM(vw) OVER (PARTITION BY l_returnflag ORDER BY value
-                  ROWS UNBOUNDED PRECEDING) AS cum,
-    SUM(vw) OVER (PARTITION BY l_returnflag) AS total
-  FROM pv
-)
-SELECT l_returnflag, min(value) AS weighted_median,
-  CAST(max(total) AS DOUBLE) AS total_weight
-FROM win WHERE cum * 2 >= total
-GROUP BY l_returnflag
-"""
-
-_ORACLES["benford_orders"] = """
-WITH b AS (
-  SELECT CAST(substring(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
-                        1, 1) AS INTEGER) AS digit,
-         count(*) AS n
-  FROM orders WHERE o_totalprice >= 1 GROUP BY 1
-), t AS (SELECT CAST(SUM(n) AS DOUBLE) AS tot FROM b)
-SELECT digit, CAST(n AS BIGINT) AS n,
-  round(CAST(n AS DOUBLE) / tot, 6) AS observed_freq,
-  round(log10(1 + 1.0 / digit), 6) AS benford_freq,
-  round(CAST(n AS DOUBLE) / tot - log10(1 + 1.0 / digit), 6) AS deviation
-FROM b CROSS JOIN t
-"""
-
-_ORACLES["fd_audit_orders"] = """
-WITH pairs AS (
-  SELECT DISTINCT o_custkey,
-    CASE WHEN o_orderpriority IS NULL THEN chr(0) || 'null'
-         ELSE 'v' || o_orderpriority END AS y
-  FROM orders
-), per AS (
-  SELECT o_custkey, count(*) AS n_values FROM pairs GROUP BY 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_keys,
-  CAST(SUM(CASE WHEN n_values > 1 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_violating_keys,
-  round(CAST(SUM(CASE WHEN n_values > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS violation_rate
-FROM per
-"""
-
-_ORACLES["label_centroid_similarity"] = """
-WITH d AS (
-  SELECT label, i,
-    round(CAST(SUM(CAST(CAST(e.embedding[i] AS DOUBLE) AS DECIMAL(28,8)))
-               AS DOUBLE) / count(*), 6) AS m
-  FROM embeddings e, unnest(range(1, len(e.embedding) + 1)) AS t(i)
-  GROUP BY label, i
-), norms AS (
-  SELECT label,
-    CAST(SUM(CAST(round(m * m, 8) AS DECIMAL(28,8))) AS DOUBLE) AS sq
-  FROM d GROUP BY label
-), dots AS (
-  SELECT a.label AS label_a, b.label AS label_b,
-    CAST(SUM(CAST(round(a.m * b.m, 8) AS DECIMAL(28,8))) AS DOUBLE) AS dot
-  FROM d a JOIN d b ON a.i = b.i AND a.label < b.label
-  GROUP BY 1, 2
-)
-SELECT label_a, label_b,
-  round(dot / (sqrt(na.sq) * sqrt(nb.sq)), 6) AS cosine
-FROM dots
-JOIN norms na ON na.label = label_a
-JOIN norms nb ON nb.label = label_b
-"""
-
-_OLS_VARX = "(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)))"
-_OLS_VARY = "(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))"
-_OLS_COV = "(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sy AS DOUBLE))"
-_OLS_SLOPE = f"({_OLS_COV} / {_OLS_VARX})"
-
-_ORACLES["ols_price_on_quantity"] = f"""
-WITH s AS (
-  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
-    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sy,
-    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
-             * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxy,
-    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
-             * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-             * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy
-  FROM lineitem GROUP BY 1
-)
-SELECT l_returnflag, n,
-  CASE WHEN {_OLS_VARX} > 0 THEN round({_OLS_SLOPE}, 6) END AS slope,
-  CASE WHEN {_OLS_VARX} > 0 THEN
-    round((CAST(sy AS DOUBLE) - {_OLS_SLOPE} * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)))
-          / CAST(n AS DOUBLE), 6) END AS intercept,
-  CASE WHEN {_OLS_VARX} > 0 AND {_OLS_VARY} > 0 THEN
-    round(({_OLS_COV} * {_OLS_COV}) / ({_OLS_VARX} * {_OLS_VARY}), 6)
-  END AS r2
-FROM s
-"""
-
-
-def q_skyline_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto frontier: min extended price, max quantity — bucketed
-    prefilter, exact strict-dominance window over survivors only."""
-    from breweries_etl_spark.operators.aggregate import skyline_2d
-
-    return skyline_2d(
-        load_table(spark, sf_dir, "lineitem"), "l_extendedprice", "l_quantity"
-    )
-
-
-def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user TWAP with exact integer-microsecond durations and
-    decimal v·Δt sums."""
-    from breweries_etl_spark.operators.temporal import time_weighted_value
-
-    return time_weighted_value(load_events(spark, sf_dir))
-
-
-def q_user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands consecutive-day streaks per user (count, longest,
-    earliest start of the longest)."""
-    from breweries_etl_spark.operators.temporal import user_activity_streaks
-
-    return user_activity_streaks(load_events(spark, sf_dir))
-
-
-_ORACLES["skyline_price_quantity"] = """
-WITH pairs AS (
-  SELECT l_extendedprice AS x, l_quantity AS y, CAST(count(*) AS BIGINT) AS n_rows
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-  GROUP BY 1, 2
-), win AS (
-  SELECT x, y, n_rows,
-    max(y) OVER (ORDER BY x ASC, y DESC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS cm
-  FROM pairs
-)
-SELECT x, y, n_rows FROM win WHERE cm IS NULL OR y > cm
-"""
-
-_ORACLES["time_weighted_value"] = """
-WITH e AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    CAST(value AS DECIMAL(12,2)) AS v,
-    lead(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-  FROM events
-), s AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-    max(us) - min(us) AS span_us,
-    SUM(v * (nxt - us)) AS svdt, SUM(nxt - us) AS sdt
-  FROM e GROUP BY 1
-)
-SELECT user_id, n_events, span_us,
-  CASE WHEN span_us > 0 THEN round(CAST(svdt AS DOUBLE) / sdt, 6) END AS twap
-FROM s
-"""
-
-_ORACLES["user_activity_streaks"] = """
-WITH days AS (
-  SELECT DISTINCT user_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-  FROM events
-), isl AS (
-  SELECT user_id, day,
-    day - dense_rank() OVER (PARTITION BY user_id ORDER BY day) AS island
-  FROM days
-), per AS (
-  SELECT user_id, island, CAST(count(*) AS BIGINT) AS len,
-    min(day) AS start_day
-  FROM isl GROUP BY 1, 2
-), r AS (
-  SELECT user_id, len, start_day,
-    row_number() OVER (PARTITION BY user_id
-                       ORDER BY len DESC, start_day ASC) AS rn,
-    count(*) OVER (PARTITION BY user_id) AS n_streaks,
-    SUM(len) OVER (PARTITION BY user_id) AS n_active
-  FROM per
-)
-SELECT user_id, CAST(n_streaks AS BIGINT) AS n_streaks,
-  CAST(n_active AS BIGINT) AS n_active_days,
-  len AS max_streak_days, start_day AS max_streak_start_day
-FROM r WHERE rn = 1
-"""
-
-
-def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA (top component, 3 power iterations) with the
-    bit-exact-replay discipline: rounded decimal term sums throughout,
-    iterations run as Spark joins over the d×d scatter frame."""
-    from breweries_etl_spark.operators.mltrain import pca_top_component
-
-    return pca_top_component(load_table(spark, sf_dir, "embeddings"))
-
-
-def _pca_oracle(dim: int = 64, iterations: int = 3) -> str:
-    """Unrolled power-iteration replay (same shape as the unrolled
-    pagerank oracle): matvec terms round to 8 dp and sum as decimal, the
-    normalized vector rounds to 6 dp per iteration — mirroring
-    operators/mltrain.py:pca_top_component step for step."""
-    it_ctes = ""
-    prev = "v0"
-    for k in range(1, iterations + 1):
-        it_ctes += f""",
-u{k} AS (
-  SELECT A.i, CAST(SUM(CAST(round(A.a * {prev}.v, 8) AS DECIMAL(28,8)))
-               AS DOUBLE) AS u
-  FROM A JOIN {prev} ON {prev}.j = A.j GROUP BY A.i
-),
-n{k} AS (
-  SELECT sqrt(CAST(SUM(CAST(round(u * u, 8) AS DECIMAL(28,8))) AS DOUBLE)) AS nrm
-  FROM u{k}
-),
-v{k} AS (SELECT i AS j, round(u / nrm, 6) AS v FROM u{k} CROSS JOIN n{k})"""
-        prev = f"v{k}"
-    return f"""
-WITH means AS (
-  SELECT i, round(CAST(SUM(CAST(CAST(e.embedding[i] AS DOUBLE)
-                              AS DECIMAL(28,8))) AS DOUBLE) / count(*), 6) AS m
-  FROM embeddings e, unnest(range(1, len(e.embedding) + 1)) AS t(i)
-  GROUP BY i
-),
-cr AS (
-  SELECT e.vec_id AS rid, t.i, CAST(e.embedding[t.i] AS DOUBLE) - m.m AS c
-  FROM embeddings e, unnest(range(1, len(e.embedding) + 1)) AS t(i)
-  JOIN means m ON m.i = t.i
-),
-scat AS (
-  SELECT a.i AS i, b.i AS j,
-    SUM(CAST(CAST(round(a.c * b.c * 100000000.0) AS BIGINT)
-             AS DECIMAL(28,0))) AS sm
-  FROM cr a JOIN cr b ON a.rid = b.rid AND a.i <= b.i
-  GROUP BY 1, 2
-),
-A AS (
-  SELECT i, j, CAST(sm AS DOUBLE) / 100000000.0 AS a FROM scat
-  UNION ALL
-  SELECT j AS i, i AS j, CAST(sm AS DOUBLE) / 100000000.0 AS a
-  FROM scat WHERE i < j
-),
-v0 AS (SELECT i AS j, 1.0 / sqrt(CAST({dim} AS DOUBLE)) AS v FROM means){it_ctes},
-uf AS (
-  SELECT A.i, CAST(SUM(CAST(round(A.a * {prev}.v, 8) AS DECIMAL(28,8)))
-               AS DOUBLE) AS u
-  FROM A JOIN {prev} ON {prev}.j = A.j GROUP BY A.i
-),
-ray AS (
-  SELECT
-    CAST(SUM(CAST(round(vv.v * uf.u, 8) AS DECIMAL(28,8))) AS DOUBLE) AS num,
-    CAST(SUM(CAST(round(vv.v * vv.v, 8) AS DECIMAL(28,8))) AS DOUBLE) AS den
-  FROM {prev} vv JOIN uf ON uf.i = vv.j
-),
-tr AS (SELECT CAST(SUM(sm) AS DOUBLE) / 100000000.0 AS tr
-       FROM scat WHERE i = j),
-nn AS (SELECT count(*) AS n FROM embeddings)
-SELECT CAST(n AS BIGINT) AS n, CAST({dim} AS INTEGER) AS dim,
-  round(tr / (n - 1), 6) AS trace_cov,
-  round((num / den) / (n - 1), 6) AS top_eigenvalue,
-  round((num / den) / tr, 6) AS explained_ratio
-FROM ray CROSS JOIN tr CROSS JOIN nn
-"""
-
-
-_ORACLES["pca_top_component"] = _pca_oracle()
-
-
-def q_reservoir_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-k-per-source deterministic sample via md5 ranking."""
-    from breweries_etl_spark.operators.sampling import reservoir_sample_per_group
-
-    return reservoir_sample_per_group(
-        load_table(spark, sf_dir, "documents"), "source", "doc_id", k=5
-    )
-
-
-def q_cusum_changepoint_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user CUSUM change-point day over daily counts — integer
-    scaled deviations, no float mean inside the cumulative sum."""
-    from breweries_etl_spark.operators.temporal import cusum_changepoint
-
-    return cusum_changepoint(load_events(spark, sf_dir))
-
-
-def q_abc_parts_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto/ABC classification of parts by revenue (80/95 cumulative
-    share cuts), per-class counts and totals."""
-    from breweries_etl_spark.operators.aggregate import abc_classification
-
-    return abc_classification(
-        load_table(spark, sf_dir, "lineitem"), "l_partkey", "l_extendedprice"
-    )
-
-
-_ORACLES["reservoir_sample_docs"] = """
-WITH h AS (
-  SELECT source, doc_id, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents
-), r AS (
-  SELECT source, doc_id,
-    row_number() OVER (PARTITION BY source ORDER BY hx, doc_id) AS rk
-  FROM h
-)
-SELECT source, doc_id, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 5
-"""
-
-_ORACLES["cusum_changepoint_users"] = """
-WITH daily AS (
-  SELECT user_id AS key,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), sc AS (
-  SELECT key, day, n,
-    count(*) OVER (PARTITION BY key) AS n_days,
-    SUM(n) OVER (PARTITION BY key) AS total
-  FROM daily
-), cs AS (
-  SELECT key, day, n_days,
-    SUM(n * n_days - total) OVER (PARTITION BY key ORDER BY day
-                                  ROWS UNBOUNDED PRECEDING) AS cusum_scaled
-  FROM sc
-), r AS (
-  SELECT key, day, n_days, cusum_scaled,
-    row_number() OVER (PARTITION BY key
-                       ORDER BY abs(cusum_scaled) DESC, day ASC) AS rn
-  FROM cs
-)
-SELECT key AS user_id, day AS changepoint_day,
-  CAST(n_days AS BIGINT) AS n_days,
-  CAST(abs(cusum_scaled) AS BIGINT) AS peak_abs_cusum_scaled,
-  round(CAST(cusum_scaled AS DOUBLE) / n_days, 6) AS peak_cusum
-FROM r WHERE rn = 1
-"""
-
-_ORACLES["abc_parts_revenue"] = """
-WITH pk AS (
-  SELECT l_partkey AS key, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS kv
-  FROM lineitem GROUP BY 1
-), cum AS (
-  SELECT key, kv,
-    SUM(kv) OVER (ORDER BY kv DESC, key ASC ROWS UNBOUNDED PRECEDING) AS cum,
-    SUM(kv) OVER () AS total
-  FROM pk
-), cl AS (
-  SELECT key, kv,
-    CASE WHEN CAST(cum AS DOUBLE) <= 0.8 * CAST(total AS DOUBLE) THEN 'A'
-         WHEN CAST(cum AS DOUBLE) <= 0.95 * CAST(total AS DOUBLE) THEN 'B'
-         ELSE 'C' END AS abc_class
-  FROM cum
-)
-SELECT abc_class, CAST(count(*) AS BIGINT) AS n_keys,
-  CAST(SUM(kv) AS DOUBLE) AS class_value
-FROM cl GROUP BY 1
-"""
-
-
-def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-then-aggregate materialized view maintained from a fact
-    delta (orders ≡ 0 mod 7) without rescanning the base; the oracle is
-    the full recompute the maintained state must equal."""
-    from breweries_etl_spark.operators.incremental import maintain_join_aggregate
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    return maintain_join_aggregate(
-        orders.filter(F.col("o_orderkey") % 7 != 0),
-        orders.filter(F.col("o_orderkey") % 7 == 0),
-        customer,
-        "o_custkey",
-        "c_custkey",
-        "c_nationkey",
-        "o_totalprice",
-    )
-
-
-def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 within-word character-pair frequencies — the first BPE
-    merge candidate table."""
-    from breweries_etl_spark.operators.text import bpe_pair_counts
-
-    return bpe_pair_counts(load_table(spark, sf_dir, "documents"))
-
-
-def q_hourly_coverage_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense-grid zero-event hour audit per event type."""
-    from breweries_etl_spark.operators.temporal import hourly_coverage_gaps
-
-    return hourly_coverage_gaps(load_events(spark, sf_dir))
-
-
-_ORACLES["incremental_join_maintenance"] = """
-SELECT c.c_nationkey, CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-GROUP BY 1
-"""
-
-_ORACLES["bpe_pair_counts"] = """
-WITH norm AS (
-  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),
-              ' +', ' ', 'g')) AS nt
-  FROM documents
-), wrds AS (
-  SELECT unnest(string_split(nt, ' ')) AS w FROM norm
-), prs AS (
-  SELECT unnest([substring(w, i, 2) FOR i IN range(1, greatest(len(w), 1))]) AS pair
-  FROM wrds
-), c AS (
-  SELECT pair, CAST(count(*) AS BIGINT) AS n
-  FROM prs WHERE length(pair) = 2 GROUP BY 1
-), r AS (
-  SELECT pair, n, row_number() OVER (ORDER BY n DESC, pair ASC) AS rank FROM c
-)
-SELECT pair, n, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 20
-"""
-
-_ORACLES["hourly_coverage_gaps"] = """
-WITH b AS (
-  SELECT min(epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) AS lo,
-         max(epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) AS hi
-  FROM events
-), grid AS (
-  SELECT unnest(range(lo, hi + 1)) AS h FROM b
-), obs AS (
-  SELECT DISTINCT event_type,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS h
-  FROM events
-), types AS (SELECT DISTINCT event_type FROM events),
-dense AS (SELECT t.event_type, g.h FROM types t CROSS JOIN grid g),
-miss AS (
-  SELECT d.event_type, d.h
-  FROM dense d LEFT JOIN obs o
-    ON o.event_type IS NOT DISTINCT FROM d.event_type AND o.h = d.h
-  WHERE o.h IS NULL
-), pm AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS missing_hours,
-    min(h) AS first_missing_hour
-  FROM miss GROUP BY 1
-), tot AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS total_hours
-  FROM dense GROUP BY 1
-)
-SELECT tot.event_type, tot.total_hours,
-  COALESCE(pm.missing_hours, 0) AS missing_hours, pm.first_missing_hour
-FROM tot LEFT JOIN pm
-  ON pm.event_type IS NOT DISTINCT FROM tot.event_type
-"""
-
-
-def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup under doubled (at-least-once) delivery —
-    per-type totals must equal the clean batch aggregate."""
-    from breweries_etl_spark.streaming.events import run_streaming_dedup_once
-
-    return run_streaming_dedup_once(spark, sf_dir)
-
-
-_ORACLES["streaming_dedup_counts"] = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1
-"""
-
-
-def q_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-order arrival profile per event type (arrival order =
-    event_id) — the watermark-picking measurement."""
-    from breweries_etl_spark.operators.temporal import lateness_profile
-
-    return lateness_profile(load_events(spark, sf_dir))
-
-
-def q_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly per-type volumes with percent change vs previous observed
-    week."""
-    from breweries_etl_spark.operators.temporal import week_over_week_change
-
-    return week_over_week_change(load_events(spark, sf_dir))
-
-
-_ORACLES["lateness_profile"] = """
-WITH t AS (
-  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    max(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS runmax
-  FROM events
-), lt AS (
-  SELECT event_type,
-    CASE WHEN runmax > us THEN runmax - us ELSE 0 END AS late
-  FROM t
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-  CAST(SUM(CASE WHEN late > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-  round(CAST(SUM(CASE WHEN late > 0 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS late_share,
-  CAST(max(late) AS BIGINT) AS max_lateness_us,
-  round(CAST(SUM(late) AS DOUBLE) / count(*), 6) AS mean_lateness_us
-FROM lt GROUP BY 1
-"""
-
-_ORACLES["wow_change"] = """
-WITH weekly AS (
-  SELECT event_type,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 // 7 AS week,
-    CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, week, n_events,
-  CASE WHEN lag(n_events) OVER w IS NOT NULL THEN
-    round(CAST(n_events - lag(n_events) OVER w AS DOUBLE)
-          / lag(n_events) OVER w, 6)
-  END AS pct_change
-FROM weekly WINDOW w AS (PARTITION BY event_type ORDER BY week)
-"""
-
-
-def q_loo_encoding_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out target encoding of order priority by total price —
-    leakage-free categorical feature, NULL for singleton groups."""
-    from breweries_etl_spark.operators.profiling import loo_target_encoding
-
-    return loo_target_encoding(
-        load_table(spark, sf_dir, "orders"),
-        "o_orderkey",
-        "o_orderpriority",
-        "o_totalprice",
-    )
-
-
-def q_mutual_information_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MI(o_orderpriority; o_orderstatus) in nats via rounded decimal
-    term sums."""
-    from breweries_etl_spark.operators.profiling import mutual_information
-
-    return mutual_information(
-        load_table(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus"
-    )
-
-
-def q_chi2_day_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square homogeneity between even/odd-day event-type mixes."""
-    from breweries_etl_spark.operators.profiling import chi2_drift
-
-    return chi2_drift(load_events(spark, sf_dir))
-
-
-_ORACLES["loo_encoding_orders"] = """
-WITH w AS (
-  SELECT o_orderkey, o_orderpriority, o_totalprice,
-    SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-      OVER (PARTITION BY o_orderpriority) AS s,
-    count(*) OVER (PARTITION BY o_orderpriority) AS n
-  FROM orders
-)
-SELECT o_orderkey, o_orderpriority,
-  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-  CASE WHEN n > 1 THEN
-    round(CAST(s - CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) / (n - 1), 6)
-  END AS loo_mean
-FROM w
-"""
-
-_ORACLES["mutual_information_orders"] = """
-WITH cells AS (
-  SELECT o_orderpriority AS x, o_orderstatus AS y,
-    CAST(count(*) AS BIGINT) AS nxy
-  FROM orders GROUP BY 1, 2
-), xm AS (SELECT x, SUM(nxy) AS nx FROM cells GROUP BY 1),
-ym AS (SELECT y, SUM(nxy) AS ny FROM cells GROUP BY 1),
-tot AS (SELECT SUM(nxy) AS n FROM cells),
-j AS (
-  SELECT c.nxy, xm.nx, ym.ny, tot.n
-  FROM cells c
-  JOIN xm ON c.x IS NOT DISTINCT FROM xm.x
-  JOIN ym ON c.y IS NOT DISTINCT FROM ym.y
-  CROSS JOIN tot
-)
-SELECT CAST(max(n) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_cells,
-  CAST(SUM(CAST(round(
-    (nxy / CAST(n AS DOUBLE))
-    * ln((CAST(nxy AS DOUBLE) * CAST(n AS DOUBLE))
-         / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE))), 6)
-    AS DECIMAL(18,6))) AS DOUBLE) AS mi_nats
-FROM j
-"""
-
-_ORACLES["chi2_day_drift"] = """
-WITH cells AS (
-  SELECT event_type AS t,
-    CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 % 2 AS INTEGER) AS p,
-    CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), tm AS (SELECT t, SUM(c) AS ct FROM cells GROUP BY 1),
-pm AS (SELECT p, SUM(c) AS cp FROM cells GROUP BY 1),
-tot AS (SELECT SUM(c) AS n FROM cells),
-j AS (
-  SELECT c.c, tm.ct, pm.cp, tot.n
-  FROM cells c
-  JOIN tm ON c.t IS NOT DISTINCT FROM tm.t
-  JOIN pm ON c.p IS NOT DISTINCT FROM pm.p
-  CROSS JOIN tot
-)
-SELECT CAST(max(n) AS BIGINT) AS n_events, CAST(count(*) AS BIGINT) AS n_cells,
-  CAST(SUM(CAST(round(
-    (c - CAST(ct AS DOUBLE) * CAST(cp AS DOUBLE) / CAST(n AS DOUBLE))
-    * (c - CAST(ct AS DOUBLE) * CAST(cp AS DOUBLE) / CAST(n AS DOUBLE))
-    / (CAST(ct AS DOUBLE) * CAST(cp AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-    AS DECIMAL(18,6))) AS DOUBLE) AS chi2
-FROM j
-"""
-
-
-def q_shipping_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-to-ship day deltas per priority: count, disc percentiles,
-    max, late share."""
-    from breweries_etl_spark.operators.profiling import shipping_sla_report
-
-    return shipping_sla_report(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def q_numeric_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All pairwise Pearson correlations over four lineitem measures in
-    one scan (exact decimal component sums)."""
-    from breweries_etl_spark.operators.profiling import numeric_corr_matrix
-
-    return numeric_corr_matrix(
-        load_table(spark, sf_dir, "lineitem"),
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-    )
-
-
-def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly-cohort LTV accumulation: active users, revenue, and
-    running revenue per cohort member."""
-    from breweries_etl_spark.operators.behavior import cohort_ltv
-
-    return cohort_ltv(load_events(spark, sf_dir))
-
-
-_ORACLES["shipping_sla_report"] = """
-WITH sla AS (
-  SELECT o.o_orderpriority,
-    epoch_us(CAST(l.l_shipdate AS TIMESTAMP)) // 86400000000
-      - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) // 86400000000 AS days
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-)
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_lines,
-  CAST(quantile_disc(days, 0.5) AS BIGINT) AS p50_days,
-  CAST(quantile_disc(days, 0.9) AS BIGINT) AS p90_days,
-  CAST(max(days) AS BIGINT) AS max_days,
-  round(CAST(SUM(CASE WHEN days > 90 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS late_share
-FROM sla GROUP BY 1
-"""
-
-
-def _corr_matrix_oracle() -> str:
-    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    # DECIMAL(24,6): forces int128 storage in DuckDB — its int64
-    # multiply overflows at DECIMAL(18) for price*price rows. Values
-    # are exact either way, so Spark keeping (18,6) stays value-equal.
-    d6 = lambda c: f"CAST({c} AS DECIMAL(24,6))"  # noqa: E731
-    sums = ["CAST(count(*) AS BIGINT) AS n"]
-    for c in cols:
-        sums.append(f"SUM({d6(c)}) AS s_{c}")
-        sums.append(f"SUM(CAST({d6(c)} * {d6(c)} AS DECIMAL(38,8))) AS ss_{c}")
-    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
-    for a, b in pairs:
-        sums.append(f"SUM(CAST({d6(a)} * {d6(b)} AS DECIMAL(38,8))) AS sp_{a}_{b}")
-    rows = []
-    for a, b in pairs:
-        va = f"(CAST(n AS DOUBLE) * CAST(ss_{a} AS DOUBLE) - CAST(s_{a} AS DOUBLE) * CAST(s_{a} AS DOUBLE))"
-        vb = f"(CAST(n AS DOUBLE) * CAST(ss_{b} AS DOUBLE) - CAST(s_{b} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
-        num = f"(CAST(n AS DOUBLE) * CAST(sp_{a}_{b} AS DOUBLE) - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
-        rows.append(
-            f"SELECT '{a}' AS col_a, '{b}' AS col_b, "
-            f"CASE WHEN {va} > 0 AND {vb} > 0 THEN "
-            f"round({num} / (sqrt({va}) * sqrt({vb})), 6) END AS corr FROM s"
-        )
-    return (
-        "WITH s AS (SELECT " + ", ".join(sums) + " FROM lineitem)\n"
-        + "\nUNION ALL\n".join(rows)
-    )
-
-
-_ORACLES["numeric_corr_matrix"] = _corr_matrix_oracle()
-
-_ORACLES["cohort_ltv"] = """
-WITH ev AS (
-  SELECT user_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 // 7 AS wk,
-    CAST(value AS DECIMAL(12,2)) AS v
-  FROM events
-), fw AS (SELECT user_id, min(wk) AS cohort_week FROM ev GROUP BY 1),
-sizes AS (
-  SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_size
-  FROM fw GROUP BY 1
-), cells AS (
-  SELECT f.cohort_week, e.wk - f.cohort_week AS age_weeks,
-    CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_active_users,
-    SUM(e.v) AS revenue
-  FROM ev e JOIN fw f USING (user_id) GROUP BY 1, 2
-), cum AS (
-  SELECT cohort_week, age_weeks, n_active_users, revenue,
-    SUM(revenue) OVER (PARTITION BY cohort_week ORDER BY age_weeks
-                       ROWS UNBOUNDED PRECEDING) AS cumrev
-  FROM cells
-)
-SELECT c.cohort_week, c.age_weeks, c.n_active_users,
-  CAST(c.revenue AS DOUBLE) AS revenue,
-  round(CAST(c.cumrev AS DOUBLE) / s.cohort_size, 6)
-    AS cum_revenue_per_member
-FROM cum c JOIN sizes s USING (cohort_week)
-"""
-
-
-def q_frequent_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket mining: brand pairs co-bought within an order, with
-    support and lift (pair blowup bounded by basket size)."""
-    from breweries_etl_spark.operators.aggregate import frequent_item_pairs
-
-    baskets = load_table(spark, sf_dir, "lineitem").join(
-        F.broadcast(
-            load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        ),
-        F.col("l_partkey") == F.col("p_partkey"),
-    )
-    return frequent_item_pairs(baskets, "l_orderkey", "p_brand", min_count=2)
-
-
-def q_price_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ECDF feature: percent_rank of each order's total within its
-    priority class."""
-    orders = load_table(spark, sf_dir, "orders")
-    from pyspark.sql import Window as _W
-
-    # explicit NULLS LAST: Spark's ASC default is NULLS FIRST, DuckDB's
-    # is NULLS LAST — a NULL price would shift every percent_rank in
-    # its partition (degen sweep r10)
-    w = _W.partitionBy("o_orderpriority").orderBy(
-        F.asc_nulls_last("o_totalprice")
-    )
-    return orders.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        F.round(F.percent_rank().over(w), 6).alias("pr"),
-    )
-
-
-# Mirrors the engine's max_basket_size=10000 cap (aggregate.py:
-# frequent_item_pairs): oversized baskets are excluded from PAIR
-# GENERATION only — supports and the nb denominator still see every
-# basket. Same algorithm on both sides even when the cap binds
-# (tests/test_round5_wave.py proves it on a cap-binding fixture).
-_ORACLES["frequent_brand_pairs"] = """
-WITH items AS (
-  SELECT DISTINCT l.l_orderkey AS b, p.p_brand AS i
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-), nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS nb FROM items),
-sup AS (SELECT i, CAST(count(*) AS BIGINT) AS ni FROM items GROUP BY 1),
-ok_b AS (SELECT b FROM items GROUP BY b HAVING count(*) <= 10000),
-pairs AS (
-  SELECT a.i AS item_a, b2.i AS item_b, CAST(count(*) AS BIGINT) AS n_both
-  FROM items a JOIN ok_b USING (b) JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT p.item_a, p.item_b, p.n_both,
-  round(p.n_both / CAST(nb.nb AS DOUBLE), 6) AS support,
-  round((p.n_both / CAST(nb.nb AS DOUBLE))
-        / ((sa.ni / CAST(nb.nb AS DOUBLE)) * (sb.ni / CAST(nb.nb AS DOUBLE))),
-        6) AS lift
-FROM pairs p
-JOIN sup sa ON sa.i = p.item_a
-JOIN sup sb ON sb.i = p.item_b
-CROSS JOIN nb
-"""
-
-_ORACLES["price_percent_rank"] = """
-SELECT o_orderkey, o_orderpriority,
-  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-  round(percent_rank() OVER (PARTITION BY o_orderpriority
-                             ORDER BY o_totalprice NULLS LAST), 6) AS pr
-FROM orders
-"""
-
-
-def q_user_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite per-user feature frame (volume, sessions, streaks,
-    TWAP, modal type, activity span) — the wide table an ML job
-    consumes; all components share the user-hash partitioning."""
-    from breweries_etl_spark.operators.features import user_feature_store
-
-    return user_feature_store(load_events(spark, sf_dir))
-
-
-_ORACLES["user_feature_store"] = """
-WITH base AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-    CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value,
-    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS first_day,
-    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS last_day
-  FROM events GROUP BY 1
-), e AS (
-  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-  FROM e
-), sess AS (
-  SELECT user_id, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-), sessions AS (
-  SELECT user_id, CAST(count(DISTINCT session_id) AS BIGINT) AS n_sessions
-  FROM sess GROUP BY 1
-), days AS (
-  SELECT DISTINCT user_id,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-  FROM events
-), isl AS (
-  SELECT user_id, day,
-    day - dense_rank() OVER (PARTITION BY user_id ORDER BY day) AS island
-  FROM days
-), per_isl AS (
-  SELECT user_id, island, CAST(count(*) AS BIGINT) AS len FROM isl GROUP BY 1, 2
-), streaks AS (
-  SELECT user_id, SUM(len) AS n_active_days, max(len) AS max_streak_days
-  FROM per_isl GROUP BY 1
-), tw AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    CAST(value AS DECIMAL(12,2)) AS v,
-    lead(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-  FROM events
-), twagg AS (
-  SELECT user_id, max(us) - min(us) AS span_us,
-    SUM(v * (nxt - us)) AS svdt, SUM(nxt - us) AS sdt
-  FROM tw GROUP BY 1
-), twap AS (
-  SELECT user_id,
-    CASE WHEN span_us > 0 THEN round(CAST(svdt AS DOUBLE) / sdt, 6) END AS twap
-  FROM twagg
-), mc AS (
-  SELECT user_id, event_type AS value, count(*) AS cnt
-  FROM events GROUP BY 1, 2
-), mr AS (
-  SELECT user_id, value,
-    row_number() OVER (PARTITION BY user_id ORDER BY cnt DESC, value ASC) AS rn
-  FROM mc
-), md AS (SELECT user_id, value AS top_event_type FROM mr WHERE rn = 1)
-SELECT b.user_id, b.n_events, b.total_value, b.first_day, b.last_day,
-  s.n_sessions, CAST(st.n_active_days AS BIGINT) AS n_active_days,
-  CAST(st.max_streak_days AS BIGINT) AS max_streak_days, t.twap,
-  m.top_event_type
-FROM base b
-JOIN sessions s USING (user_id)
-JOIN streaks st USING (user_id)
-JOIN twap t USING (user_id)
-JOIN md m USING (user_id)
-"""
-
-
-def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index between even/odd-day value
-    distributions over global exact-decile bins."""
-    from breweries_etl_spark.operators.profiling import psi_value_drift
-
-    return psi_value_drift(load_events(spark, sf_dir))
-
-
-def q_decayed_type_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Half-life-decayed popularity per event type (engine-exact dyadic
-    weight decomposition)."""
-    from breweries_etl_spark.operators.temporal import decayed_type_popularity
-
-    return decayed_type_popularity(load_events(spark, sf_dir))
-
-
-_PSI_CUTS_SQL = ", ".join(
-    f"quantile_disc(value, {i / 10})" for i in range(1, 10)
-)
-
-_ORACLES["psi_value_drift"] = f"""
-WITH cuts AS (SELECT [{_PSI_CUTS_SQL}] AS cuts FROM events),
-t AS (
-  SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 % 2 AS INTEGER)
-           AS p,
-         CAST(value AS DOUBLE) AS v
-  FROM events
-), binned AS (
-  SELECT p, len(list_filter(c.cuts, x -> t.v > x)) AS bin FROM t, cuts c
-), cells AS (
-  SELECT p, bin, CAST(count(*) AS BIGINT) AS c FROM binned GROUP BY 1, 2
-), tot AS (SELECT p, SUM(c) AS tp FROM cells GROUP BY 1),
-a AS (SELECT bin, c AS c0 FROM cells WHERE p = 0),
-b AS (SELECT bin, c AS c1 FROM cells WHERE p = 1),
-ta AS (SELECT tp AS ta FROM tot WHERE p = 0),
-tb AS (SELECT tp AS tb FROM tot WHERE p = 1),
-j AS (SELECT a.bin, a.c0, b.c1 FROM a JOIN b USING (bin))
-SELECT CAST(count(*) AS BIGINT) AS n_bins_used,
-  CAST(SUM(CAST(round(
-    (CAST(c0 AS DOUBLE) / ta - CAST(c1 AS DOUBLE) / tb)
-    * ln((CAST(c0 AS DOUBLE) / ta) / (CAST(c1 AS DOUBLE) / tb)), 6)
-    AS DECIMAL(18,6))) AS DOUBLE) AS psi
-FROM j CROSS JOIN ta CROSS JOIN tb
-"""
-
-_DECAY_FRAC = [round(2.0 ** (-r / 7), 10) for r in range(7)]
-
-_ORACLES["decayed_type_popularity"] = f"""
-WITH mx AS (
-  SELECT max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS mxd FROM events
-), t AS (
-  SELECT event_type,
-    mx.mxd - epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS age
-  FROM events CROSS JOIN mx
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-  CAST(SUM(CAST(round(
-    pow(0.5, CAST((age - age % 7) / 7 AS DOUBLE))
-    * ([{", ".join(str(x) for x in _DECAY_FRAC)}])[CAST(age % 7 AS INTEGER) + 1],
-    8) AS DECIMAL(20,8))) AS DOUBLE) AS decayed_count
-FROM t GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-5 wave: model-diagnostics / closed-form-training additions
-
-
-def q_score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability-diagram bins (Guo et al. 2017 ECE terms) for the
-    hashed-linear quality classifier vs the independent heuristic
-    label — one scan, one 10-row aggregate."""
-    from breweries_etl_spark.operators.filtering import calibration_bins
-
-    return calibration_bins(load_table(spark, sf_dir, "documents"))
-
-
-def q_decision_stump_price_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-returnflag best SSE-reducing binary split of extended price
-    on quantity — the CART/GBDT building block as two aggregations."""
-    from breweries_etl_spark.operators.mltrain import decision_stump
-
-    return decision_stump(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        "l_extendedprice",
-    )
-
-
-def q_ols2_price_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-feature closed-form regression (price ~ quantity + discount)
-    per returnflag via explicit 2×2 normal equations."""
-    from breweries_etl_spark.operators.mltrain import ols2_fit
-
-    return ols2_fit(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        "l_discount",
-        "l_extendedprice",
-    )
-
-
-def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-history EWMA (α=0.5 — dyadic weights are bit-portable) of
-    each user's value sequence, closed form in one window pass."""
-    return temporal.ewma_user_value(load_events(spark, sf_dir))
-
-
-def q_cohens_kappa_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's κ between the corpus `lang` labels and the heuristic
-    language-ID prediction — chance-corrected labeler agreement."""
-    from breweries_etl_spark.operators import profiling
-
-    docs = load_table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.col("lang"), text.lang_pred_expr(F.col("text")).alias("lang_pred")
-    )
-    return profiling.cohens_kappa(labeled, "lang", "lang_pred")
-
-
-_CLF_SCORE_SQL = f"""CASE WHEN len(regexp_extract_all(lower(coalesce(text, '')), '[A-Za-z0-9_]+')) > 0
-      THEN round(1.0 / (1.0 + exp(-(
-        list_sum(list_transform(
-          regexp_extract_all(lower(coalesce(text, '')), '[A-Za-z0-9_]+'),
-          tok -> ({_CLF_WEIGHTS})[
-            (CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT) % 256 + 1)::INTEGER
-          ]))
-        / len(regexp_extract_all(lower(coalesce(text, '')), '[A-Za-z0-9_]+'))))), 6)
-      ELSE 0.5 END"""
-
-_HEUR_QUALITY_SQL = f"""round(
-  0.5 * least(1.0, CAST(len({_TOKS}) AS DOUBLE) / 100.0)
-  + 0.3 * (CASE WHEN len({_TOKS}) > 0
-      THEN CAST({_STOP_HITS} AS DOUBLE)
-           / CAST(len({_TOKS}) AS DOUBLE) ELSE 0.0 END)
-  + 0.2 * (1.0 - CASE WHEN len({_TOKS}) > 0
-      THEN least(1.0, CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
-                      / CAST(len({_TOKS}) AS DOUBLE)) ELSE 0.0 END)
-, 6)"""
-
-_ORACLES["score_calibration_bins"] = f"""
-WITH scored AS (
-  SELECT {_CLF_SCORE_SQL} AS pred,
-    CASE WHEN {_HEUR_QUALITY_SQL} >= 0.5 THEN 1 ELSE 0 END AS pos
-  FROM documents
-), binned AS (
-  SELECT least(CAST(9 AS BIGINT),
-               CAST(round(pred * 1000000.0) AS BIGINT) // 100000) AS bin,
-         pred, pos
-  FROM scored
-)
-SELECT bin, CAST(count(*) AS BIGINT) AS n,
-  round(CAST(SUM(CAST(pred AS DECIMAL(18,6))) AS DOUBLE)
-        / CAST(count(*) AS DOUBLE), 6) AS mean_pred,
-  CAST(SUM(pos) AS BIGINT) AS n_positive,
-  round(CAST(SUM(pos) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS frac_positive,
-  round(abs(
-    round(CAST(SUM(CAST(pred AS DECIMAL(18,6))) AS DOUBLE)
-          / CAST(count(*) AS DOUBLE), 6)
-    - round(CAST(SUM(pos) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)), 6) AS abs_gap
-FROM binned GROUP BY bin
-"""
-
-_ORACLES["decision_stump_price_split"] = f"""
-WITH per_x AS (
-  SELECT l_returnflag, l_quantity AS threshold, count(*) AS nx,
-    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sy_x,
-    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-             * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy_x
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-  GROUP BY 1, 2
-), cum AS (
-  SELECT l_returnflag, threshold,
-    SUM(nx) OVER wcum AS cn, SUM(sy_x) OVER wcum AS csy,
-    SUM(syy_x) OVER wcum AS csyy,
-    SUM(nx) OVER wtot AS tn, SUM(sy_x) OVER wtot AS tsy,
-    SUM(syy_x) OVER wtot AS tsyy
-  FROM per_x
-  WINDOW wcum AS (PARTITION BY l_returnflag ORDER BY threshold ASC
-                  ROWS UNBOUNDED PRECEDING),
-         wtot AS (PARTITION BY l_returnflag)
-), sc AS (
-  SELECT l_returnflag, threshold,
-    CAST(cn AS BIGINT) AS n_left, CAST(tn - cn AS BIGINT) AS n_right,
-    round(({_ddwf('csy')}) / CAST(cn AS DOUBLE), 6) AS mean_left,
-    round((({_ddwf('tsy')}) - ({_ddwf('csy')}))
-          / (CAST(tn AS DOUBLE) - CAST(cn AS DOUBLE)), 6) AS mean_right,
-    -- 2-dp fixed-point half-up (see mltrain.decision_stump: round(.,6)
-    -- diverges between engines at SSE magnitudes)
-    (CASE WHEN
-      ((({_ddwf('tsyy')}) - ({_ddwf('tsy')}) * ({_ddwf('tsy')})
-                              / CAST(tn AS DOUBLE))
-      - (({_ddwf('csyy')}) - ({_ddwf('csy')}) * ({_ddwf('csy')})
-                                / CAST(cn AS DOUBLE))
-      - ((({_ddwf('tsyy')}) - ({_ddwf('csyy')}))
-         - (({_ddwf('tsy')}) - ({_ddwf('csy')}))
-           * (({_ddwf('tsy')}) - ({_ddwf('csy')}))
-           / (CAST(tn AS DOUBLE) - CAST(cn AS DOUBLE)))) < 0
-     THEN -1.0 ELSE 1.0 END
-     * floor(abs(
-      (({_ddwf('tsyy')}) - ({_ddwf('tsy')}) * ({_ddwf('tsy')})
-                              / CAST(tn AS DOUBLE))
-      - (({_ddwf('csyy')}) - ({_ddwf('csy')}) * ({_ddwf('csy')})
-                                / CAST(cn AS DOUBLE))
-      - ((({_ddwf('tsyy')}) - ({_ddwf('csyy')}))
-         - (({_ddwf('tsy')}) - ({_ddwf('csy')}))
-           * (({_ddwf('tsy')}) - ({_ddwf('csy')}))
-           / (CAST(tn AS DOUBLE) - CAST(cn AS DOUBLE)))) * 100.0 + 0.5))
-     / 100.0 + 0.0 AS sse_reduction
-  FROM cum WHERE cn < tn
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY l_returnflag
-    ORDER BY sse_reduction DESC, threshold ASC) AS rn
-  FROM sc
-)
-SELECT l_returnflag, threshold, n_left, n_right, mean_left, mean_right,
-       sse_reduction
-FROM ranked WHERE rn = 1
-"""
-
-_OLS2_MOM = """
-  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s1,
-    SUM(CAST(l_discount AS DECIMAL(18,2))) AS s2,
-    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sy,
-    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
-             * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS s11,
-    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
-             * CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS s12,
-    SUM(CAST(CAST(l_discount AS DECIMAL(18,2))
-             * CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS s22,
-    SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
-             * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS s1y,
-    SUM(CAST(CAST(l_discount AS DECIMAL(18,2))
-             * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS s2y,
-    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-             * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy
-  FROM lineitem GROUP BY 1
-"""
-
-_O2N = "CAST(n AS DOUBLE)"
-_O2 = {k: f"CAST({k} AS DOUBLE)"
-       for k in ["s1", "s2", "sy", "s11", "s12", "s22", "s1y", "s2y", "syy"]}
-_O2C11 = f"({_O2N} * {_O2['s11']} - {_O2['s1']} * {_O2['s1']})"
-_O2C12 = f"({_O2N} * {_O2['s12']} - {_O2['s1']} * {_O2['s2']})"
-_O2C22 = f"({_O2N} * {_O2['s22']} - {_O2['s2']} * {_O2['s2']})"
-_O2C1Y = f"({_O2N} * {_O2['s1y']} - {_O2['s1']} * {_O2['sy']})"
-_O2C2Y = f"({_O2N} * {_O2['s2y']} - {_O2['s2']} * {_O2['sy']})"
-_O2DET = f"({_O2C11} * {_O2C22} - {_O2C12} * {_O2C12})"
-_O2SST = f"({_O2N} * {_O2['syy']} - {_O2['sy']} * {_O2['sy']})"
-_O2B1 = f"(({_O2C1Y} * {_O2C22} - {_O2C2Y} * {_O2C12}) / {_O2DET})"
-_O2B2 = f"(({_O2C2Y} * {_O2C11} - {_O2C1Y} * {_O2C12}) / {_O2DET})"
-
-_ORACLES["ols2_price_qty_discount"] = f"""
-WITH s AS ({_OLS2_MOM})
-SELECT l_returnflag, n,
-  CASE WHEN {_O2DET} > 0 THEN round({_O2B1}, 6) END AS b1,
-  CASE WHEN {_O2DET} > 0 THEN round({_O2B2}, 6) END AS b2,
-  CASE WHEN {_O2DET} > 0 THEN
-    round(({_O2['sy']} - {_O2B1} * {_O2['s1']} - {_O2B2} * {_O2['s2']})
-          / {_O2N}, 6) END AS intercept,
-  CASE WHEN {_O2DET} > 0 AND {_O2SST} > 0 THEN
-    round(({_O2B1} * {_O2C1Y} + {_O2B2} * {_O2C2Y}) / {_O2SST}, 6)
-  END AS r2
-FROM s
-"""
-
-_ORACLES["ewma_user_value"] = """
-WITH e AS (
-  SELECT user_id, value, event_id,
-    row_number() OVER (PARTITION BY user_id
-      ORDER BY epoch_us(CAST(ts AS TIMESTAMP)) DESC, event_id DESC) AS rd,
-    count(*) OVER (PARTITION BY user_id) AS n
-  FROM events
-), t AS (
-  SELECT user_id, n, rd, value,
-    CASE WHEN rd = n THEN power(0.5, CAST(n - 1 AS DOUBLE))
-         ELSE 0.5 * power(0.5, CAST(rd - 1 AS DOUBLE)) END AS coef
-  FROM e
-)
-SELECT user_id, CAST(max(n) AS BIGINT) AS n_events,
-  max(CASE WHEN rd = 1 THEN CAST(value AS DOUBLE) END) AS last_value,
-  CAST(SUM(CAST(floor(CAST(value AS DOUBLE) * coef * 1000000.0) AS BIGINT))
-       AS DOUBLE) / 1000000.0 AS ewma
-FROM t GROUP BY user_id
-"""
-
-_ORACLES["cohens_kappa_lang"] = f"""
-WITH hits AS (
-  SELECT lang, text,
-    {_marker_hits("en")} AS h_en,
-    {_marker_hits("es")} AS h_es,
-    {_marker_hits("de")} AS h_de,
-    {_marker_hits("fr")} AS h_fr
-  FROM documents
-), p AS (
-  SELECT lang AS a,
-    CASE WHEN len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]')) > 0 THEN 'zh'
-         WHEN {_GREATEST} = 0 THEN 'unknown'
-         WHEN h_en = {_GREATEST} THEN 'en'
-         WHEN h_es = {_GREATEST} THEN 'es'
-         WHEN h_de = {_GREATEST} THEN 'de'
-         ELSE 'fr' END AS b
-  FROM hits
-), cells AS (
-  SELECT a, b, count(*) AS nab FROM p
-  WHERE a IS NOT NULL AND b IS NOT NULL GROUP BY 1, 2
-), ma AS (SELECT a AS cls, SUM(nab) AS na FROM cells GROUP BY 1),
-mb AS (SELECT b AS cls, SUM(nab) AS nb FROM cells GROUP BY 1),
-marg AS (
-  SELECT coalesce(ma.na, 0) AS na, coalesce(mb.nb, 0) AS nb
-  FROM ma FULL OUTER JOIN mb USING (cls)
-), pe_t AS (
-  SELECT SUM(CAST(na * nb AS DECIMAL(28,0))) AS pe_num FROM marg
-), tot AS (
-  SELECT SUM(nab) AS n,
-    SUM(CASE WHEN a = b THEN nab ELSE 0 END) AS n_agree
-  FROM cells
-)
-SELECT CAST(n AS BIGINT) AS n_rows, CAST(n_agree AS BIGINT) AS n_agree,
-  round(CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-  round(CAST(pe_num AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pe,
-  CASE WHEN CAST(pe_num AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) < 1.0
-    THEN round(
-      (CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE)
-       - CAST(pe_num AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-      / (1.0 - CAST(pe_num AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-  END AS kappa
-FROM tot CROSS JOIN pe_t
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-5 wave 2: sortless hypothesis tests / concentration measures
-
-
-def q_ks_test_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample KS statistic between returned ('R') and other
-    lineitems' extended price — distributed prefix counts, no global
-    sort (operators/hypotests.py)."""
-    from breweries_etl_spark.operators.hypotests import ks_test_2samp
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return ks_test_2samp(li, "l_extendedprice", F.col("l_returnflag") == "R")
-
-
-def q_mann_whitney_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact tie-corrected Mann-Whitney U between returned and other
-    lineitems' extended price."""
-    from breweries_etl_spark.operators.hypotests import mann_whitney_u
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return mann_whitney_u(li, "l_extendedprice", F.col("l_returnflag") == "R")
-
-
-def q_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini + HHI of order revenue across customers — closed-form rank
-    sum from bucketed prefix counts, no rank column materialized."""
-    from breweries_etl_spark.operators.hypotests import gini_concentration
-
-    return gini_concentration(
-        load_table(spark, sf_dir, "orders"), "o_custkey", "o_totalprice"
-    )
-
-
-# Shared one-way-ANOVA machinery twin (operators/hypotests.anova_oneway),
-# reused verbatim by the anova / brown_forsythe / levene oracles: the
-# `s` CTE folds the per-group fixed-point SSW terms; the tail closes
-# SST/SSB/F/eta^2 in the engine's exact double sequence. All moment
-# conversions ride the wide fraction-aware _ddwf (judge r6 #2).
-_ANOVA_S_CTE = f"""  SELECT SUM(n_g) AS n, count(*) AS k,
-    SUM(CAST(s_g AS DECIMAL(38,2))) AS sx,
-    SUM(CAST(q_g AS DECIMAL(38,4))) AS q,
-    SUM(CAST(floor(({_ddwf('q_g')}
-                    - {_ddwf('s_g')} * {_ddwf('s_g')} / CAST(n_g AS DOUBLE))
-                   * 100.0)
-             AS DECIMAL(38,0))) AS ssw
-  FROM per_g"""
-
-
-def _anova_tail_sql(fcol: str) -> str:
-    sst = f"({_ddwf('q')} - {_ddwf('sx')} * {_ddwf('sx')} / CAST(n AS DOUBLE))"
-    ssw = f"({_ddw('ssw')} / 100.0)"
-    ssb = f"({sst} - {ssw})"
-    return f"""SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  floor({ssb} * 100.0) / 100.0 AS ss_between,
-  {ssw} AS ss_within,
-  CASE WHEN k > 1 AND {ssw} > 0 THEN
-    round(({ssb} / (CAST(k AS DOUBLE) - 1.0))
-          / ({ssw} / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE))), 6)
-  END AS {fcol},
-  CASE WHEN {sst} > 0 THEN round({ssb} / {sst}, 6) END AS eta_sq
-FROM s"""
-
-
-_KS_VC = """
-vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM vc
-)"""
-
-_KS_GAP = (
-    "max(abs(CAST(cum_a AS DECIMAL(19,0)) * CAST(n_b AS DECIMAL(19,0))"
-    " - CAST(cum_b AS DECIMAL(19,0)) * CAST(n_a AS DECIMAL(19,0))))"
-)
-
-_ORACLES["ks_test_price_returnflag"] = f"""
-WITH {_KS_VC},
-tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM vc)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round({_ddw(_KS_GAP)}
-        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6) AS ks_stat
-FROM cum CROSS JOIN tot GROUP BY n_a, n_b
-"""
-
-_MWU_N = "(CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))"
-_MWU_U = f"({_ddw('u2')} / 2.0)"
-_MWU_MEAN = "(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 2.0)"
-_MWU_VAR = (
-    f"(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 * (({_MWU_N} + 1.0)"
-    f" - {_ddw('ties3')} / ({_MWU_N} * ({_MWU_N} - 1.0))))"
-)
-
-_ORACLES["mann_whitney_price_returnflag"] = f"""
-WITH {_KS_VC},
-s AS (
-  SELECT SUM(ca) AS n_a, SUM(cb) AS n_b,
-    SUM(CAST(2 * CAST(ca AS DECIMAL(19,0)) * CAST(cum_b - cb AS DECIMAL(19,0))
-             + CAST(ca AS DECIMAL(19,0)) * CAST(cb AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS u2,
-    SUM(CAST(CAST(ca + cb AS DECIMAL(19,0)) * CAST(ca + cb AS DECIMAL(19,0))
-               * CAST(ca + cb AS DECIMAL(19,0))
-             - CAST(ca + cb AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS ties3
-  FROM cum
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  {_MWU_U} AS u_stat,
-  CASE WHEN {_MWU_VAR} > 0 THEN
-    round(({_MWU_U} - {_MWU_MEAN}) / sqrt({_MWU_VAR}), 6)
-  END AS z_score
-FROM s
-"""
-
-_ORACLES["gini_customer_revenue"] = f"""
-WITH per_key AS (
-  SELECT o_custkey,
-    SUM(CAST((CASE WHEN o_totalprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS r
-  FROM orders GROUP BY 1
-), vc AS (
-  SELECT CAST(r AS DECIMAL(18,2)) AS v, count(*) AS ca
-  FROM per_key WHERE r IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a
-  FROM vc
-), s AS (
-  SELECT SUM(ca) AS n_keys,
-    SUM(CAST(v * CAST(ca AS DECIMAL(19,0)) AS DECIMAL(38,2))) AS total,
-    SUM(CAST(v * CAST(ca AS DECIMAL(19,0))
-             * (2 * CAST(cum_a AS DECIMAL(19,0)) - CAST(ca AS DECIMAL(19,0)) + 1)
-             AS DECIMAL(38,2))) AS num2,
-    -- v is a PER-CUSTOMER revenue sum: under a hot key it reaches
-    -- 11+ digits and a bare DECIMAL(18) x DECIMAL(18) multiply
-    -- overflows in DuckDB (skew-axis sweep r11); widen before
-    -- squaring (grubbs idiom — Spark widens automatically)
-    SUM(CAST(CAST(v AS DECIMAL(24,2)) * CAST(v AS DECIMAL(24,2))
-             * CAST(ca AS DECIMAL(19,0)) AS DECIMAL(38,4))) AS sumsq
-  FROM cum
-)
-SELECT CAST(n_keys AS BIGINT) AS n_keys, {_ddwf('total')} AS total_value,
-  CASE WHEN {_ddwf('total')} > 0 THEN
-    round({_ddwf('num2')}
-          / (CAST(n_keys AS DOUBLE) * {_ddwf('total')})
-          - (CAST(n_keys AS DOUBLE) + 1.0) / CAST(n_keys AS DOUBLE), 6)
-  END AS gini,
-  CASE WHEN {_ddwf('total')} > 0 THEN
-    round({_ddwf('sumsq')}
-          / ({_ddwf('total')} * {_ddwf('total')}), 6)
-  END AS hhi
-FROM s
-"""
-
-
-def q_lineitem_price_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact global ECDF / percent-rank per distinct price — prefix
-    counts, no single-partition global window."""
-    from breweries_etl_spark.operators.hypotests import global_ecdf
-
-    return global_ecdf(load_table(spark, sf_dir, "lineitem"), "l_extendedprice")
-
-
-def q_conversion_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test on a hash-assigned user split: purchase
-    conversion rate arm B vs arm A."""
-    from breweries_etl_spark.operators.behavior import conversion_ab_ztest
-
-    return conversion_ab_ztest(load_events(spark, sf_dir))
-
-
-def q_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier user-lifetime survival curve with right-censoring of
-    still-active users."""
-    from breweries_etl_spark.operators.behavior import kaplan_meier_retention
-
-    return kaplan_meier_retention(load_events(spark, sf_dir))
-
-
-_ORACLES["lineitem_price_ecdf"] = """
-WITH vc AS (
-  SELECT l_extendedprice AS v, count(*) AS ca
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a
-  FROM vc
-), tot AS (SELECT SUM(ca) AS n FROM vc)
-SELECT v, CAST(ca AS BIGINT) AS n_rows, CAST(cum_a AS BIGINT) AS cum_n,
-  round(CAST(cum_a AS DOUBLE) / CAST(n AS DOUBLE), 6) AS ecdf,
-  CASE WHEN n > 1 THEN
-    round(CAST(cum_a - ca AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0), 6)
-  ELSE 0.0 END AS percent_rank
-FROM cum CROSS JOIN tot
-"""
-
-_ZT_NA = "CAST(n_a AS DOUBLE)"
-_ZT_NB = "CAST(n_b AS DOUBLE)"
-_ZT_PA = f"(CAST(conv_a AS DOUBLE) / {_ZT_NA})"
-_ZT_PB = f"(CAST(conv_b AS DOUBLE) / {_ZT_NB})"
-_ZT_POOL = f"(CAST(conv_a + conv_b AS DOUBLE) / ({_ZT_NA} + {_ZT_NB}))"
-_ZT_SE2 = f"({_ZT_POOL} * (1.0 - {_ZT_POOL}) * (1.0 / {_ZT_NA} + 1.0 / {_ZT_NB}))"
-_ZT_Z = f"(({_ZT_PB} - {_ZT_PA}) / sqrt({_ZT_SE2}))"
-_ZT_OK = f"(n_a > 0 AND n_b > 0 AND {_ZT_SE2} > 0)"
-
-_ORACLES["conversion_ab_ztest"] = f"""
-WITH pu AS (
-  SELECT user_id,
-    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-  FROM events GROUP BY 1
-), armed AS (
-  SELECT CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 4) AS BIGINT)
-           % 2 AS arm,
-         conv
-  FROM pu
-), c AS (
-  SELECT
-    SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-    SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
-    SUM(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS conv_a,
-    SUM(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS conv_b
-  FROM armed
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CAST(conv_a AS BIGINT) AS conv_a, CAST(conv_b AS BIGINT) AS conv_b,
-  CASE WHEN n_a > 0 THEN round({_ZT_PA}, 6) END AS rate_a,
-  CASE WHEN n_b > 0 THEN round({_ZT_PB}, 6) END AS rate_b,
-  CASE WHEN {_ZT_OK} THEN round({_ZT_Z}, 6) END AS z_score,
-  CASE WHEN {_ZT_OK} THEN abs({_ZT_Z}) >= 1.96 END AS significant
-FROM c
-"""
-
-_ORACLES["kaplan_meier_retention"] = """
-WITH us AS (
-  SELECT user_id,
-    min(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
-    max(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us
-  FROM events GROUP BY 1
-), mx AS (SELECT max(last_us) AS max_us FROM us),
-per AS (
-  SELECT (last_us - first_us) // 86400000000 AS day,
-    CASE WHEN last_us < max_us - 604800000000 THEN 1 ELSE 0 END AS churn
-  FROM us CROSS JOIN mx
-), pd AS (
-  SELECT day, SUM(churn) AS n_churned, count(*) AS ends FROM per GROUP BY 1
-), ar AS (
-  SELECT day, n_churned, ends,
-    SUM(ends) OVER (ORDER BY day DESC ROWS UNBOUNDED PRECEDING) AS n_at_risk
-  FROM pd
-), t AS (
-  SELECT day, n_at_risk, n_churned,
-    SUM(CAST(CASE WHEN n_churned > 0 AND n_churned < n_at_risk
-      THEN round(ln(1.0 - CAST(n_churned AS DOUBLE)
-                         / CAST(n_at_risk AS DOUBLE)), 6)
-      ELSE 0.0 END AS DECIMAL(18,6)))
-      OVER (ORDER BY day ASC ROWS UNBOUNDED PRECEDING) AS cum_term,
-    SUM(CASE WHEN n_churned > 0 AND n_churned >= n_at_risk THEN 1 ELSE 0 END)
-      OVER (ORDER BY day ASC ROWS UNBOUNDED PRECEDING) AS cum_dead
-  FROM ar
-)
-SELECT day, CAST(n_at_risk AS BIGINT) AS n_at_risk,
-  CAST(n_churned AS BIGINT) AS n_churned,
-  CASE WHEN cum_dead > 0 THEN 0.0
-       ELSE round(exp(CAST(cum_term AS DOUBLE)), 6) END AS survival
-FROM t
-"""
-
-
-def q_theil_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil T inequality of order revenue across customers — the
-    decomposable complement of the Gini query."""
-    from breweries_etl_spark.operators.hypotests import theil_index
-
-    return theil_index(
-        load_table(spark, sf_dir, "orders"), "o_custkey", "o_totalprice"
-    )
-
-
-def q_lorenz_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz curve at decile resolution: cumulative population vs
-    revenue share, from bucketed prefix counts (no rank column)."""
-    from breweries_etl_spark.operators.hypotests import lorenz_deciles
-
-    return lorenz_deciles(
-        load_table(spark, sf_dir, "orders"), "o_custkey", "o_totalprice"
-    )
-
-
-_TH_MU = "(CAST(total AS DOUBLE) / CAST(n AS DOUBLE))"
-_TH_RATIO = f"(CAST(r AS DOUBLE) / {_TH_MU})"
-
-_ORACLES["theil_customer_revenue"] = f"""
-WITH per_key AS (
-  SELECT o_custkey, SUM(CAST((CASE WHEN o_totalprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS r
-  FROM orders GROUP BY 1
-), tot AS (SELECT count(*) AS n, SUM(r) AS total FROM per_key)
-SELECT CAST(n AS BIGINT) AS n_keys, CAST(total AS DOUBLE) AS total_value,
-  CASE WHEN CAST(total AS DOUBLE) > 0 THEN
-    round(CAST(SUM(CAST(
-      CASE WHEN CAST(r AS DOUBLE) > 0
-        THEN round({_TH_RATIO} * ln({_TH_RATIO}), 6)
-        ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-      / CAST(n AS DOUBLE), 6)
-  END AS theil_t
-FROM per_key CROSS JOIN tot GROUP BY n, total
-"""
-
-_ORACLES["lorenz_customer_revenue"] = """
-WITH per_key AS (
-  SELECT o_custkey, SUM(CAST((CASE WHEN o_totalprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS r
-  FROM orders GROUP BY 1
-), vc AS (
-  SELECT CAST(r AS DECIMAL(18,2)) AS v, count(*) AS ca
-  FROM per_key WHERE r IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a
-  FROM vc
-), tot AS (
-  SELECT SUM(ca) AS n,
-    SUM(CAST(v * CAST(ca AS DECIMAL(19,0)) AS DECIMAL(38,2))) AS total
-  FROM vc
-), binned AS (
-  SELECT ((cum_a - 1) * 10) // n AS decile, ca,
-    CAST(v * CAST(ca AS DECIMAL(19,0)) AS DECIMAL(38,2)) AS mass, n, total
-  FROM cum CROSS JOIN tot
-), pb AS (
-  SELECT decile, SUM(ca) AS n_keys, SUM(mass) AS mass,
-    max(n) AS n, max(total) AS total
-  FROM binned GROUP BY 1
-)
-SELECT CAST(decile AS BIGINT) AS decile, CAST(n_keys AS BIGINT) AS n_keys,
-  round(CAST(SUM(n_keys) OVER wo AS DOUBLE) / CAST(n AS DOUBLE), 6)
-    AS cum_pop_share,
-  CASE WHEN CAST(total AS DOUBLE) > 0 THEN
-    round(CAST(SUM(mass) OVER wo AS DOUBLE) / CAST(total AS DOUBLE), 6)
-  END AS cum_value_share
-FROM pb
-WINDOW wo AS (ORDER BY decile ROWS UNBOUNDED PRECEDING)
-"""
-
-
-def q_quantile_normalize_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-returnflag quantile normalization of extended price onto the
-    pooled decile grid — integer-exact, no percentile function, no
-    single-partition windows."""
-    from breweries_etl_spark.operators.hypotests import quantile_normalize
-
-    return quantile_normalize(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-_ORACLES["quantile_normalize_price"] = """
-WITH gv AS (
-  SELECT l_returnflag AS g, l_extendedprice AS v, count(*) AS c
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1, 2
-), within AS (
-  SELECT g, v, c,
-    SUM(c) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_g,
-    SUM(c) OVER (PARTITION BY g) AS n_g
-  FROM gv
-), pooled AS (
-  SELECT v, SUM(c) AS cp FROM gv GROUP BY 1
-), pcum AS (
-  SELECT v, cp,
-    SUM(cp) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM pooled
-), tot AS (SELECT SUM(cp) AS n FROM pooled),
-grid AS (
-  SELECT k, min(v) AS qv
-  FROM pcum CROSS JOIN tot
-       CROSS JOIN (SELECT unnest(range(1, 11)) AS k) ks
-  WHERE cum >= (k * n + 9) // 10 AND cum - cp < (k * n + 9) // 10
-  GROUP BY k
-)
-SELECT g, v, CAST(c AS BIGINT) AS n_rows, CAST(k AS BIGINT) AS k,
-  qv AS normalized
-FROM within JOIN grid ON (10 * cum_g + n_g - 1) // n_g = k
-"""
-
-
-
-
-# ---------------------------------------------------------------- round 6
-# Rank/parametric statistics wave: Spearman, Kruskal-Wallis, one-way
-# ANOVA, Welch's t — all on the sortless prefix-count / exact-decimal
-# discipline (operators/hypotests.py).
-
-
-def q_spearman_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Spearman rank correlation (average ranks for ties) between
-    lineitem price and quantity — doubled integer ranks from the
-    bucketed prefix-count primitive, no global sort."""
-    from breweries_etl_spark.operators.hypotests import spearman_rho
-
-    return spearman_rho(
-        load_table(spark, sf_dir, "lineitem"), "l_extendedprice", "l_quantity"
-    )
-
-
-def q_kruskal_wallis_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal-Wallis H across the three return flags on price, with the
-    standard tie correction; fixed-point per-group terms."""
-    from breweries_etl_spark.operators.hypotests import kruskal_wallis
-
-    return kruskal_wallis(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_anova_f_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA F and eta-squared of price across return flags —
-    one conditional-moment pass, 6dp-rounded SSW terms."""
-    from breweries_etl_spark.operators.hypotests import anova_oneway
-
-    return anova_oneway(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_welch_t_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch unequal-variance t test of price, returned vs not, with
-    Welch-Satterthwaite degrees of freedom."""
-    from breweries_etl_spark.operators.hypotests import welch_t_test
-
-    return welch_t_test(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-_SPEAR_RANKS = """
-t AS (
-  SELECT l_extendedprice AS x, l_quantity AS y FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-), xv AS (SELECT x AS v, count(*) AS c FROM t GROUP BY 1),
-xc AS (
-  SELECT v, 2 * SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - c + 1 AS u
-  FROM xv
-), yv AS (SELECT y AS v, count(*) AS c FROM t GROUP BY 1),
-yc AS (
-  SELECT v, 2 * SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - c + 1 AS w
-  FROM yv
-)"""
-
-_ORACLES["spearman_price_qty"] = f"""
-WITH {_SPEAR_RANKS},
-r AS (
-  SELECT xc.u, yc.w FROM t
-  JOIN xc ON t.x = xc.v JOIN yc ON t.y = yc.v
-), s AS (
-  SELECT count(*) AS n,
-    SUM(CAST(u AS DECIMAL(38,0))) AS su,
-    SUM(CAST(w AS DECIMAL(38,0))) AS sw,
-    SUM(CAST(CAST(u AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS suu,
-    SUM(CAST(CAST(w AS DECIMAL(19,0)) * CAST(w AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS sww,
-    SUM(CAST(CAST(u AS DECIMAL(19,0)) * CAST(w AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS suw
-  FROM r
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN sqrt(CAST(n AS DOUBLE) * (CAST(CAST((suu) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((suu) AS HUGEINT) % 1000000000 AS DOUBLE))
-                 - (CAST(CAST((su) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((su) AS HUGEINT) % 1000000000 AS DOUBLE)) * (CAST(CAST((su) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((su) AS HUGEINT) % 1000000000 AS DOUBLE))) > 0
-        AND sqrt(CAST(n AS DOUBLE) * (CAST(CAST((sww) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sww) AS HUGEINT) % 1000000000 AS DOUBLE))
-                 - (CAST(CAST((sw) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sw) AS HUGEINT) % 1000000000 AS DOUBLE)) * (CAST(CAST((sw) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sw) AS HUGEINT) % 1000000000 AS DOUBLE))) > 0 THEN
-    round((CAST(n AS DOUBLE) * (CAST(CAST((suw) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((suw) AS HUGEINT) % 1000000000 AS DOUBLE))
-           - (CAST(CAST((su) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((su) AS HUGEINT) % 1000000000 AS DOUBLE)) * (CAST(CAST((sw) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sw) AS HUGEINT) % 1000000000 AS DOUBLE)))
-          / (sqrt(CAST(n AS DOUBLE) * (CAST(CAST((suu) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((suu) AS HUGEINT) % 1000000000 AS DOUBLE))
-                  - (CAST(CAST((su) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((su) AS HUGEINT) % 1000000000 AS DOUBLE)) * (CAST(CAST((su) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((su) AS HUGEINT) % 1000000000 AS DOUBLE)))
-             * sqrt(CAST(n AS DOUBLE) * (CAST(CAST((sww) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sww) AS HUGEINT) % 1000000000 AS DOUBLE))
-                    - (CAST(CAST((sw) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sw) AS HUGEINT) % 1000000000 AS DOUBLE)) * (CAST(CAST((sw) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((sw) AS HUGEINT) % 1000000000 AS DOUBLE)))), 6)
-  END AS rho
-FROM s
-"""
-
-_ORACLES["kruskal_wallis_price_flag"] = """
-WITH vals AS (
-  SELECT l_returnflag AS g, l_extendedprice AS val FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-), vv AS (SELECT val AS v, count(*) AS c FROM vals GROUP BY 1),
-uu AS (
-  SELECT v, c,
-    2 * SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - c + 1 AS u
-  FROM vv
-), gv AS (SELECT g, val AS v, count(*) AS c_gv FROM vals GROUP BY 1, 2),
-pg AS (
-  SELECT g, SUM(c_gv) AS n_g,
-    SUM(CAST(CAST(c_gv AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS r2
-  FROM gv JOIN uu USING (v) GROUP BY g
-), ag AS (
-  SELECT SUM(n_g) AS n, count(*) AS k,
-    SUM(CAST(floor(((CAST(CAST((r2) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((r2) AS HUGEINT) % 1000000000 AS DOUBLE)) / 2.0) * ((CAST(CAST((r2) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((r2) AS HUGEINT) % 1000000000 AS DOUBLE)) / 2.0)
-                   / CAST(n_g AS DOUBLE) * 100.0) AS DECIMAL(38,0))) AS t_sum
-  FROM pg
-), tie AS (
-  SELECT SUM(CAST(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-                  * CAST(c AS DECIMAL(19,0)) - c AS DECIMAL(38,0))) AS tie_sum
-  FROM vv
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  round(12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-        * ((CAST(CAST((t_sum) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((t_sum) AS HUGEINT) % 1000000000 AS DOUBLE)) / 100.0)
-        - 3.0 * (CAST(n AS DOUBLE) + 1.0), 6) AS h,
-  CASE WHEN 1.0 - (CAST(CAST((tie_sum) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((tie_sum) AS HUGEINT) % 1000000000 AS DOUBLE))
-            / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-               - CAST(n AS DOUBLE)) > 0 THEN
-    round((12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-           * ((CAST(CAST((t_sum) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((t_sum) AS HUGEINT) % 1000000000 AS DOUBLE)) / 100.0)
-           - 3.0 * (CAST(n AS DOUBLE) + 1.0))
-          / (1.0 - (CAST(CAST((tie_sum) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9 + CAST(CAST((tie_sum) AS HUGEINT) % 1000000000 AS DOUBLE))
-             / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                - CAST(n AS DOUBLE))), 6)
-  END AS h_tie_corrected
-FROM ag CROSS JOIN tie
-"""
-
-_ORACLES["anova_f_price_flag"] = f"""
-WITH per_g AS (
-  SELECT l_returnflag AS g, count(*) AS n_g,
-    SUM(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS s_g,
-    SUM(CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS q_g
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-  GROUP BY 1
-), s AS (
-{_ANOVA_S_CTE}
-)
-{_anova_tail_sql("f_stat")}
-"""
-
-_ORACLES["welch_t_price_returnflag"] = f"""
-WITH s AS (
-  SELECT
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS na,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS nb,
-    SUM(CASE WHEN l_returnflag = 'R'
-         THEN CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-         ELSE CAST(0 AS DECIMAL(18,2)) END) AS sa,
-    SUM(CASE WHEN l_returnflag = 'R'
-         THEN CAST(0 AS DECIMAL(18,2))
-         ELSE CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) END) AS sb,
-    SUM(CASE WHEN l_returnflag = 'R'
-         THEN CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-                   * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))
-         ELSE CAST(0 AS DECIMAL(38,4)) END) AS qa,
-    SUM(CASE WHEN l_returnflag = 'R'
-         THEN CAST(0 AS DECIMAL(38,4))
-         ELSE CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-                   * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))
-         END) AS qb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-), m AS (
-  -- the EXACT double sequence the engine uses: ma reused inside va;
-  -- moment sums through the wide fraction-aware split (_ddwf)
-  SELECT na, nb,
-    {_ddwf('sa')} / CAST(na AS DOUBLE) AS ma,
-    {_ddwf('sb')} / CAST(nb AS DOUBLE) AS mb,
-    ({_ddwf('qa')} - {_ddwf('sa')}
-       * ({_ddwf('sa')} / CAST(na AS DOUBLE)))
-      / (CAST(na AS DOUBLE) - 1.0) AS va,
-    ({_ddwf('qb')} - {_ddwf('sb')}
-       * ({_ddwf('sb')} / CAST(nb AS DOUBLE)))
-      / (CAST(nb AS DOUBLE) - 1.0) AS vb
-  FROM s
-), e AS (
-  SELECT na, nb, ma, mb,
-    va / CAST(na AS DOUBLE) AS sea,
-    vb / CAST(nb AS DOUBLE) AS seb
-  FROM m
-)
-SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-  round(ma, 6) AS mean_a,
-  round(mb, 6) AS mean_b,
-  CASE WHEN na > 1 AND nb > 1 AND sea + seb > 0 THEN
-    round((ma - mb) / sqrt(sea + seb), 6)
-  END AS t_stat,
-  CASE WHEN na > 1 AND nb > 1 AND sea + seb > 0 THEN
-    round((sea + seb) * (sea + seb)
-          / (sea * sea / (CAST(na AS DOUBLE) - 1.0)
-             + seb * seb / (CAST(nb AS DOUBLE) - 1.0)), 6)
-  END AS df
-FROM e
-"""
-
-
-
-
-def q_graph_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 part co-purchase edges by embeddedness (common-neighbor
-    count = triangles through the edge) with neighbor-Jaccard and
-    Adamic-Adar — triangles enumerated once under degree-ordered
-    orientation, never per-pair adjacency joins."""
-    from breweries_etl_spark.operators.dedup import bucket_candidate_pairs
-    from breweries_etl_spark.operators.graph import edge_embeddedness_topk
-
-    li = load_table(spark, sf_dir, "lineitem")
-    membership = li.select("l_orderkey", "l_partkey").distinct()
-    edges = bucket_candidate_pairs(membership, ["l_orderkey"], "l_partkey", 50)
-    return edge_embeddedness_topk(edges, "id_a", "id_b", k=20)
-
-
-def q_graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-core of the part co-purchase graph by iterative peeling
-    (<= 8 rounds, early-stopped at the fixed point); oracled by an
-    8-iteration unrolled SQL replay where post-convergence iterations
-    are no-ops."""
-    from breweries_etl_spark.operators.dedup import bucket_candidate_pairs
-    from breweries_etl_spark.operators.graph import kcore_summary
-
-    li = load_table(spark, sf_dir, "lineitem")
-    membership = li.select("l_orderkey", "l_partkey").distinct()
-    edges = bucket_candidate_pairs(membership, ["l_orderkey"], "l_partkey", 50)
-    return kcore_summary(edges, "id_a", "id_b", k=4, max_rounds=8)
-
-
-_ORACLES["graph_edge_embeddedness"] = """
-WITH m AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), ok AS (
-  SELECT o FROM m GROUP BY o HAVING count(*) BETWEEN 2 AND 50
-), e AS (
-  SELECT DISTINCT a.p AS src, b.p AS dst
-  FROM m a JOIN m b ON a.o = b.o AND a.p < b.p
-  JOIN ok ON a.o = ok.o
-), adj AS (
-  SELECT src AS a, dst AS c FROM e UNION ALL SELECT dst AS a, src AS c FROM e
-), deg AS (SELECT a AS n, count(*) AS deg FROM adj GROUP BY 1),
-cn AS (
-  SELECT e.src AS x, e.dst AS y, a1.c AS o
-  FROM e
-  JOIN adj a1 ON a1.a = e.src
-  JOIN adj a2 ON a2.a = e.dst AND a2.c = a1.c
-), pe AS (
-  SELECT x, y, count(*) AS cn,
-    SUM(CAST(round(1.0 / ln(dc.deg), 6) AS DECIMAL(18,6))) AS aa
-  FROM cn JOIN deg dc ON cn.o = dc.n GROUP BY 1, 2
-)
-SELECT e.src AS id_a, e.dst AS id_b,
-  CAST(COALESCE(pe.cn, 0) AS BIGINT) AS common_neighbors,
-  CASE WHEN dx.deg + dy.deg - 2 - COALESCE(pe.cn, 0) > 0 THEN
-    round(CAST(COALESCE(pe.cn, 0) AS DOUBLE)
-          / (CAST(dx.deg AS DOUBLE) + CAST(dy.deg AS DOUBLE) - 2.0
-             - CAST(COALESCE(pe.cn, 0) AS DOUBLE)), 6)
-  END AS jaccard,
-  COALESCE(CAST(pe.aa AS DOUBLE), 0.0) AS adamic_adar
-FROM e
-LEFT JOIN pe ON e.src = pe.x AND e.dst = pe.y
-JOIN deg dx ON e.src = dx.n
-JOIN deg dy ON e.dst = dy.n
-ORDER BY common_neighbors DESC, id_a ASC, id_b ASC LIMIT 20
-"""
-
-_ORACLES["graph_kcore_summary"] = """WITH m AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), ok AS MATERIALIZED (
-  SELECT o FROM m GROUP BY o HAVING count(*) BETWEEN 2 AND 50
-), e0 AS MATERIALIZED (
-  SELECT DISTINCT a.p AS src, b.p AS dst
-  FROM m a JOIN m b ON a.o = b.o AND a.p < b.p
-  JOIN ok ON a.o = ok.o
-), n0 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e0 UNION ALL SELECT dst FROM e0)
-),
-k1 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e0 UNION ALL SELECT dst FROM e0)
-  GROUP BY n HAVING count(*) >= 4
-), e1 AS MATERIALIZED (
-  SELECT src, dst FROM e0
-  WHERE src IN (SELECT n FROM k1) AND dst IN (SELECT n FROM k1)
-), n1 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e1 UNION ALL SELECT dst FROM e1)
-),
-k2 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e1 UNION ALL SELECT dst FROM e1)
-  GROUP BY n HAVING count(*) >= 4
-), e2 AS MATERIALIZED (
-  SELECT src, dst FROM e1
-  WHERE src IN (SELECT n FROM k2) AND dst IN (SELECT n FROM k2)
-), n2 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e2 UNION ALL SELECT dst FROM e2)
-),
-k3 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e2 UNION ALL SELECT dst FROM e2)
-  GROUP BY n HAVING count(*) >= 4
-), e3 AS MATERIALIZED (
-  SELECT src, dst FROM e2
-  WHERE src IN (SELECT n FROM k3) AND dst IN (SELECT n FROM k3)
-), n3 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e3 UNION ALL SELECT dst FROM e3)
-),
-k4 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e3 UNION ALL SELECT dst FROM e3)
-  GROUP BY n HAVING count(*) >= 4
-), e4 AS MATERIALIZED (
-  SELECT src, dst FROM e3
-  WHERE src IN (SELECT n FROM k4) AND dst IN (SELECT n FROM k4)
-), n4 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e4 UNION ALL SELECT dst FROM e4)
-),
-k5 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e4 UNION ALL SELECT dst FROM e4)
-  GROUP BY n HAVING count(*) >= 4
-), e5 AS MATERIALIZED (
-  SELECT src, dst FROM e4
-  WHERE src IN (SELECT n FROM k5) AND dst IN (SELECT n FROM k5)
-), n5 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e5 UNION ALL SELECT dst FROM e5)
-),
-k6 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e5 UNION ALL SELECT dst FROM e5)
-  GROUP BY n HAVING count(*) >= 4
-), e6 AS MATERIALIZED (
-  SELECT src, dst FROM e5
-  WHERE src IN (SELECT n FROM k6) AND dst IN (SELECT n FROM k6)
-), n6 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e6 UNION ALL SELECT dst FROM e6)
-),
-k7 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e6 UNION ALL SELECT dst FROM e6)
-  GROUP BY n HAVING count(*) >= 4
-), e7 AS MATERIALIZED (
-  SELECT src, dst FROM e6
-  WHERE src IN (SELECT n FROM k7) AND dst IN (SELECT n FROM k7)
-), n7 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e7 UNION ALL SELECT dst FROM e7)
-),
-k8 AS MATERIALIZED (
-  SELECT n FROM (SELECT src AS n FROM e7 UNION ALL SELECT dst FROM e7)
-  GROUP BY n HAVING count(*) >= 4
-), e8 AS MATERIALIZED (
-  SELECT src, dst FROM e7
-  WHERE src IN (SELECT n FROM k8) AND dst IN (SELECT n FROM k8)
-), n8 AS MATERIALIZED (
-  SELECT count(DISTINCT n) AS nn FROM
-    (SELECT src AS n FROM e8 UNION ALL SELECT dst FROM e8)
-)
-SELECT CAST(4 AS BIGINT) AS k,
-  CAST((SELECT nn FROM n0) AS BIGINT) AS n_nodes_initial,
-  CAST((SELECT count(*) FROM e0) AS BIGINT) AS n_edges_initial,
-  CAST(CASE WHEN (SELECT nn FROM n1) < (SELECT nn FROM n0) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n2) < (SELECT nn FROM n1) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n3) < (SELECT nn FROM n2) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n4) < (SELECT nn FROM n3) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n5) < (SELECT nn FROM n4) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n6) < (SELECT nn FROM n5) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n7) < (SELECT nn FROM n6) THEN 1 ELSE 0 END + CASE WHEN (SELECT nn FROM n8) < (SELECT nn FROM n7) THEN 1 ELSE 0 END AS BIGINT) AS n_peel_rounds,
-  CAST((SELECT nn FROM n8) AS BIGINT) AS n_nodes_core,
-  CAST((SELECT count(*) FROM e8) AS BIGINT) AS n_edges_core
-"""
-
-
-
-
-def q_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FK orphan audit over the four TPC-H-ish relationships — one
-    left-anti join each, AQE free to broadcast genuinely small
-    parents."""
-    from breweries_etl_spark.operators.quality import (
-        referential_integrity_audit,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    part = load_table(spark, sf_dir, "part")
-    supplier = load_table(spark, sf_dir, "supplier")
-    customer = load_table(spark, sf_dir, "customer")
-    return referential_integrity_audit(
-        [
-            ("lineitem.orderkey->orders", li, "l_orderkey", orders, "o_orderkey"),
-            ("lineitem.partkey->part", li, "l_partkey", part, "p_partkey"),
-            ("lineitem.suppkey->supplier", li, "l_suppkey", supplier, "s_suppkey"),
-            ("orders.custkey->customer", orders, "o_custkey", customer, "c_custkey"),
-        ]
-    )
-
-
-def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag 1..7 autocorrelation of the daily event-value series —
-    calendar-bounded daily relation, exact decimal moment expansion,
-    no per-term rounding."""
-    from breweries_etl_spark.operators.temporal import acf_daily
-
-    return acf_daily(load_events(spark, sf_dir))
-
-
-def q_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust slope of daily event value: median of the
-    calendar-bounded pairwise-slope set via percentile_disc picks."""
-    from breweries_etl_spark.operators.temporal import theil_sen_daily_trend
-
-    return theil_sen_daily_trend(load_events(spark, sf_dir))
-
-
-def q_ridge2_price_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form 2-feature ridge regression (lambda=1e6) per
-    returnflag — penalized twin of ols2_price_qty_discount."""
-    from breweries_etl_spark.operators.mltrain import ridge2_fit
-
-    return ridge2_fit(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        "l_discount",
-        "l_extendedprice",
-    )
-
-
-def q_hapax_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row corpus vocabulary fingerprint: token/vocab totals, hapax
-    and dis legomena, type-token ratio."""
-    return text.vocab_stats(load_table(spark, sf_dir, "documents"))
-
-
-_ORACLES["referential_orphans"] = """
-WITH rels AS (
-  SELECT 'lineitem.orderkey->orders' AS relationship,
-    (SELECT count(*) FROM lineitem) AS n_child_rows,
-    (SELECT count(*) FROM lineitem WHERE l_orderkey IS NULL) AS n_null_keys,
-    (SELECT count(*) FROM lineitem c WHERE c.l_orderkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM orders p WHERE p.o_orderkey = c.l_orderkey))
-      AS n_orphan_rows,
-    (SELECT count(DISTINCT c.l_orderkey) FROM lineitem c
-      WHERE c.l_orderkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM orders p WHERE p.o_orderkey = c.l_orderkey))
-      AS n_orphan_keys
-  UNION ALL
-  SELECT 'lineitem.partkey->part',
-    (SELECT count(*) FROM lineitem),
-    (SELECT count(*) FROM lineitem WHERE l_partkey IS NULL),
-    (SELECT count(*) FROM lineitem c WHERE c.l_partkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = c.l_partkey)),
-    (SELECT count(DISTINCT c.l_partkey) FROM lineitem c
-      WHERE c.l_partkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = c.l_partkey))
-  UNION ALL
-  SELECT 'lineitem.suppkey->supplier',
-    (SELECT count(*) FROM lineitem),
-    (SELECT count(*) FROM lineitem WHERE l_suppkey IS NULL),
-    (SELECT count(*) FROM lineitem c WHERE c.l_suppkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM supplier p WHERE p.s_suppkey = c.l_suppkey)),
-    (SELECT count(DISTINCT c.l_suppkey) FROM lineitem c
-      WHERE c.l_suppkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM supplier p WHERE p.s_suppkey = c.l_suppkey))
-  UNION ALL
-  SELECT 'orders.custkey->customer',
-    (SELECT count(*) FROM orders),
-    (SELECT count(*) FROM orders WHERE o_custkey IS NULL),
-    (SELECT count(*) FROM orders c WHERE c.o_custkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM customer p WHERE p.c_custkey = c.o_custkey)),
-    (SELECT count(DISTINCT c.o_custkey) FROM orders c
-      WHERE c.o_custkey IS NOT NULL
-      AND NOT EXISTS (SELECT 1 FROM customer p WHERE p.c_custkey = c.o_custkey))
-)
-SELECT relationship, CAST(n_child_rows AS BIGINT) AS n_child_rows,
-  CAST(n_null_keys AS BIGINT) AS n_null_keys,
-  CAST(n_orphan_rows AS BIGINT) AS n_orphan_rows,
-  CAST(n_orphan_keys AS BIGINT) AS n_orphan_keys
-FROM rels
-"""
-
-_ORACLES["acf_daily_revenue"] = """
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events GROUP BY 1
-), tot AS (
-  SELECT count(*) AS n,
-    SUM(CAST(y AS DECIMAL(38,2))) AS s,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS q
-  FROM daily
-), lags AS (SELECT unnest(range(1, 8)) AS lag),
-pairs AS (
-  SELECT lags.lag, a.y AS y, b.y AS y2
-  FROM daily a CROSS JOIN lags JOIN daily b ON b.day = a.day + lags.lag
-), per_lag AS (
-  SELECT lag, count(*) AS n_pairs,
-    SUM(CAST(y * y2 AS DECIMAL(38,4))) AS p,
-    SUM(CAST(y AS DECIMAL(38,2))) AS a,
-    SUM(CAST(y2 AS DECIMAL(38,2))) AS b
-  FROM pairs GROUP BY lag
-)
-SELECT CAST(lag AS BIGINT) AS lag, CAST(n_pairs AS BIGINT) AS n_pairs,
-  CASE WHEN (CAST(CAST(floor(q) AS BIGINT) AS DOUBLE) + CAST(q - floor(q) AS DOUBLE))
-            - (CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) * ((CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) / CAST(n AS DOUBLE)) > 0
-  THEN
-    round(((CAST(CAST(floor(p) AS BIGINT) AS DOUBLE) + CAST(p - floor(p) AS DOUBLE))
-           - ((CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) / CAST(n AS DOUBLE))
-             * ((CAST(CAST(floor(a) AS BIGINT) AS DOUBLE) + CAST(a - floor(a) AS DOUBLE)) + (CAST(CAST(floor(b) AS BIGINT) AS DOUBLE) + CAST(b - floor(b) AS DOUBLE)))
-           + CAST(n_pairs AS DOUBLE)
-             * ((CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) / CAST(n AS DOUBLE))
-             * ((CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) / CAST(n AS DOUBLE)))
-          / ((CAST(CAST(floor(q) AS BIGINT) AS DOUBLE) + CAST(q - floor(q) AS DOUBLE))
-             - (CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) * ((CAST(CAST(floor(s) AS BIGINT) AS DOUBLE) + CAST(s - floor(s) AS DOUBLE)) / CAST(n AS DOUBLE))), 6)
-  END AS acf
-FROM per_lag CROSS JOIN tot
-ORDER BY lag
-"""
-
-_ORACLES["theil_sen_daily_trend"] = """
-WITH daily AS MATERIALIZED (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events GROUP BY 1
-), slopes AS (
-  SELECT (CAST(b.y AS DOUBLE) - CAST(a.y AS DOUBLE))
-         / CAST(b.day - a.day AS DOUBLE) AS slope
-  FROM daily a JOIN daily b ON a.day < b.day
-), med AS (
-  SELECT count(*) AS n_pairs, quantile_disc(slope, 0.5) AS slope_med
-  FROM slopes
-), resid AS (
-  SELECT CAST(d.y AS DOUBLE) - med.slope_med * CAST(d.day AS DOUBLE) AS r
-  FROM daily d CROSS JOIN med
-)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
-  CAST(med.n_pairs AS BIGINT) AS n_pairs,
-  round(med.slope_med, 6) AS slope_per_day,
-  round((SELECT quantile_disc(r, 0.5) FROM resid), 4) AS intercept
-FROM med
-"""
-
-_R2A11 = f"({_O2C11} + 1000000.0 * {_O2N})"
-_R2A22 = f"({_O2C22} + 1000000.0 * {_O2N})"
-_R2DET = f"({_R2A11} * {_R2A22} - {_O2C12} * {_O2C12})"
-_R2B1 = f"(({_O2C1Y} * {_R2A22} - {_O2C2Y} * {_O2C12}) / {_R2DET})"
-_R2B2 = f"(({_O2C2Y} * {_R2A11} - {_O2C1Y} * {_O2C12}) / {_R2DET})"
-
-_ORACLES["ridge2_price_qty_discount"] = f"""
-WITH s AS ({_OLS2_MOM})
-SELECT l_returnflag, n,
-  round({_R2B1}, 6) AS b1,
-  round({_R2B2}, 6) AS b2,
-  round(({_O2['sy']} - {_R2B1} * {_O2['s1']} - {_R2B2} * {_O2['s2']})
-        / {_O2N}, 6) AS intercept,
-  CASE WHEN {_O2SST} > 0 THEN
-    round(({_R2B1} * {_O2C1Y} + {_R2B2} * {_O2C2Y}) / {_O2SST}, 6)
-  END AS explained
-FROM s
-"""
-
-_ORACLES["hapax_vocab_stats"] = """
-WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS tok
-  FROM documents
-), uni AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok),
-s AS (
-  SELECT SUM(c) AS n_tokens, count(*) AS vocab,
-    SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS hapax,
-    SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS dis
-  FROM uni
-)
-SELECT CAST(n_tokens AS BIGINT) AS n_tokens,
-  CAST(vocab AS BIGINT) AS vocab_size,
-  CAST(hapax AS BIGINT) AS hapax_count,
-  CAST(dis AS BIGINT) AS dis_count,
-  round(CAST(hapax AS DOUBLE) / CAST(vocab AS DOUBLE), 6) AS hapax_fraction,
-  round(CAST(vocab AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS type_token_ratio
-FROM s
-"""
-
-
-
-
-def q_mann_kendall_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall monotone-trend test on the daily event-value series
-    (tie-corrected variance, continuity-corrected z)."""
-    from breweries_etl_spark.operators.temporal import mann_kendall_daily
-
-    return mann_kendall_daily(load_events(spark, sf_dir))
-
-
-def q_brown_forsythe_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown-Forsythe variance-equality W across return flags: ANOVA on
-    absolute deviations from per-group medians."""
-    from breweries_etl_spark.operators.hypotests import brown_forsythe
-
-    return brown_forsythe(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_cramers_v_status_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramer's V association between linestatus and returnflag from one
-    contingency aggregate."""
-    from breweries_etl_spark.operators.hypotests import cramers_v
-
-    return cramers_v(
-        load_table(spark, sf_dir, "lineitem"), "l_linestatus", "l_returnflag"
-    )
-
-
-def q_partial_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial correlation of price and quantity controlling for
-    discount - one moment pass, fixed double combination."""
-    from breweries_etl_spark.operators.hypotests import partial_corr
-
-    return partial_corr(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        "l_quantity",
-        "l_discount",
-    )
-
-
-_ORACLES["mann_kendall_daily"] = """
-WITH daily AS MATERIALIZED (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events GROUP BY 1
-), s AS (
-  SELECT SUM(CAST(sign(b.y - a.y) AS BIGINT)) AS s
-  FROM daily a JOIN daily b ON a.day < b.day
-), nt AS (SELECT count(*) AS n FROM daily),
-ties AS (
-  SELECT SUM(CAST(CAST(c AS DECIMAL(19,0)) * (CAST(c AS DECIMAL(19,0)) - 1)
-                  * (2 * CAST(c AS DECIMAL(19,0)) + 5) AS DECIMAL(38,0)))
-    AS tie_sum
-  FROM (SELECT y, count(*) AS c FROM daily GROUP BY y)
-)
-SELECT CAST(n AS BIGINT) AS n_days, CAST(s AS BIGINT) AS s_stat,
-  round(CAST(CAST(CAST(n AS DECIMAL(19,0)) * (CAST(n AS DECIMAL(19,0)) - 1)
-                  * (2 * CAST(n AS DECIMAL(19,0)) + 5) AS DECIMAL(38,0))
-             - tie_sum AS DOUBLE) / 18.0, 4) AS var_s,
-  CASE WHEN CAST(CAST(CAST(n AS DECIMAL(19,0)) * (CAST(n AS DECIMAL(19,0)) - 1)
-                  * (2 * CAST(n AS DECIMAL(19,0)) + 5) AS DECIMAL(38,0))
-             - tie_sum AS DOUBLE) / 18.0 > 0 THEN
-    round(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0)
-                / sqrt(CAST(CAST(CAST(n AS DECIMAL(19,0))
-                       * (CAST(n AS DECIMAL(19,0)) - 1)
-                       * (2 * CAST(n AS DECIMAL(19,0)) + 5) AS DECIMAL(38,0))
-                       - tie_sum AS DOUBLE) / 18.0)
-               WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0)
-                / sqrt(CAST(CAST(CAST(n AS DECIMAL(19,0))
-                       * (CAST(n AS DECIMAL(19,0)) - 1)
-                       * (2 * CAST(n AS DECIMAL(19,0)) + 5) AS DECIMAL(38,0))
-                       - tie_sum AS DOUBLE) / 18.0)
-               ELSE 0.0 END, 6)
-  END AS z
-FROM nt CROSS JOIN s CROSS JOIN ties
-"""
-
-_ORACLES["brown_forsythe_price_flag"] = f"""
-WITH base AS (
-  SELECT l_returnflag AS g, CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS v
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-), meds AS (
-  SELECT g, CAST(quantile_disc(v, 0.5) AS DECIMAL(18,2)) AS med
-  FROM base GROUP BY g
-), z AS (
-  SELECT base.g, CAST(abs(base.v - meds.med) AS DECIMAL(18,2)) AS zv
-  FROM base JOIN meds USING (g)
-), per_g AS (
-  SELECT g, count(*) AS n_g,
-    SUM(CAST(zv AS DECIMAL(18,2))) AS s_g,
-    SUM(CAST(CAST(zv AS DECIMAL(18,2))
-             * CAST(zv AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS q_g
-  FROM z GROUP BY 1
-), s AS (
-{_ANOVA_S_CTE}
-)
-{_anova_tail_sql("bf_w")}
-"""
-
-_ORACLES["cramers_v_status_flag"] = """
-WITH cells AS (
-  SELECT l_linestatus AS a, l_returnflag AS b, count(*) AS o
-  FROM lineitem
-  WHERE l_linestatus IS NOT NULL AND l_returnflag IS NOT NULL
-  GROUP BY 1, 2
-), ra AS (SELECT a, SUM(o) AS ra FROM cells GROUP BY a),
-cb AS (SELECT b, SUM(o) AS cb FROM cells GROUP BY b),
-tot AS (
-  SELECT SUM(o) AS n, count(DISTINCT a) AS ka, count(DISTINCT b) AS kb
-  FROM cells
-), grid AS (
-  SELECT ra.a, cb.b, ra.ra, cb.cb, COALESCE(cells.o, 0) AS o
-  FROM ra CROSS JOIN cb LEFT JOIN cells ON cells.a = ra.a AND cells.b = cb.b
-), chi AS (
-  SELECT SUM(CAST(floor(
-    (CAST(o AS DOUBLE)
-     - CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tot.n AS DOUBLE))
-    * (CAST(o AS DOUBLE)
-       - CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tot.n AS DOUBLE))
-    / (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tot.n AS DOUBLE))
-    * 1000000.0) AS DECIMAL(38,0))) AS chi_fp
-  FROM grid CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CAST(ka AS BIGINT) AS n_cat_a, CAST(kb AS BIGINT) AS n_cat_b,
-  round(CAST(chi_fp AS DOUBLE) / 1e6, 4) AS chi2,
-  CASE WHEN least(ka - 1, kb - 1) > 0 THEN
-    round(sqrt((CAST(chi_fp AS DOUBLE) / 1e6)
-               / (CAST(n AS DOUBLE)
-                  * CAST(least(ka - 1, kb - 1) AS DOUBLE))), 6)
-  END AS cramers_v
-FROM tot CROSS JOIN chi
-"""
-
-_ORACLES["partial_corr_price_qty"] = """
-WITH s AS (
-  SELECT count(*) AS n,
-    SUM(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS sx,
-    SUM(CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS sy,
-    SUM(CAST((CASE WHEN l_discount < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_discount AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS sz,
-    SUM(CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy,
-    SUM(CAST(CAST((CASE WHEN l_discount < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_discount AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_discount < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_discount AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS szz,
-    SUM(CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxy,
-    SUM(CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_discount < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_discount AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxz,
-    SUM(CAST(CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_discount < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_discount AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syz
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-    AND l_discount IS NOT NULL
-)
-SELECT CAST(n AS BIGINT) AS n,
-  round(((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sy AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))), 6) AS r_xy,
-  round(((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))), 6) AS r_xz,
-  round(((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))), 6) AS r_yz,
-  CASE WHEN sqrt((1.0 - ((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))) * ((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE))))) * (1.0 - ((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))) * ((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))))) > 0 THEN
-    round((((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sy AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) - ((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))) * ((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))))
-          / sqrt((1.0 - ((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))) * ((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE))))) * (1.0 - ((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))) * ((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))))), 6)
-  END AS partial_r
-FROM s
-"""
-
-
-
-
-def q_event_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition table over user event streams with
-    per-source-state conditional entropy."""
-    from breweries_etl_spark.operators.behavior import event_transition_stats
-
-    return event_transition_stats(load_events(spark, sf_dir))
-
-
-def q_js_divergence_docs_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jensen-Shannon divergence of the language mix between two
-    md5-hash halves of the corpus (portable split, bounded label
-    domain)."""
-    from breweries_etl_spark.operators.hypotests import js_divergence_split
-
-    return js_divergence_split(
-        load_table(spark, sf_dir, "documents"), "doc_id", "lang"
-    )
-
-
-def q_gini_by_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation Gini of customer revenue: group-partitioned rank-sum
-    windows over the collapsed value relation."""
-    from breweries_etl_spark.operators.hypotests import gini_by_group
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    joined = orders.join(
-        customer, orders.o_custkey == customer.c_custkey
-    ).join(nation, customer.c_nationkey == nation.n_nationkey)
-    return gini_by_group(joined, "n_name", "o_custkey", "o_totalprice")
-
-
-def q_chow_test_price_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chow-style slope-heterogeneity F across return flags for
-    price ~ quantity (pooled vs per-group SSE from one moment pass)."""
-    from breweries_etl_spark.operators.hypotests import chow_test
-
-    return chow_test(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        "l_extendedprice",
-    )
-
-
-def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the part co-purchase graph (Pearson over
-    edge-endpoint degree pairs, both orientations)."""
-    from breweries_etl_spark.operators.dedup import bucket_candidate_pairs
-    from breweries_etl_spark.operators.graph import degree_assortativity
-
-    li = load_table(spark, sf_dir, "lineitem")
-    membership = li.select("l_orderkey", "l_partkey").distinct()
-    edges = bucket_candidate_pairs(membership, ["l_orderkey"], "l_partkey", 50)
-    return degree_assortativity(edges, "id_a", "id_b")
-
-
-def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Average Watts-Strogatz local clustering of the co-purchase graph
-    from one oriented triangle enumeration."""
-    from breweries_etl_spark.operators.dedup import bucket_candidate_pairs
-    from breweries_etl_spark.operators.graph import local_clustering_summary
-
-    li = load_table(spark, sf_dir, "lineitem")
-    membership = li.select("l_orderkey", "l_partkey").distinct()
-    edges = bucket_candidate_pairs(membership, ["l_orderkey"], "l_partkey", 50)
-    return local_clustering_summary(edges, "id_a", "id_b")
-
-
-_ORACLES["event_transition_entropy"] = """
-WITH e AS (
-  SELECT event_type AS cur,
-    lead(event_type, 1) OVER (PARTITION BY user_id
-      ORDER BY ts ASC, event_id ASC) AS nxt
-  FROM events
-), p AS (
-  SELECT cur, nxt, count(*) AS c FROM e WHERE nxt IS NOT NULL GROUP BY 1, 2
-), t AS (SELECT cur, SUM(c) AS ct FROM p GROUP BY cur),
-s AS (
-  SELECT p.cur, p.nxt, p.c,
-    CAST(p.c AS DOUBLE) / CAST(t.ct AS DOUBLE) AS pr
-  FROM p JOIN t USING (cur)
-), h AS (
-  SELECT cur, SUM(CAST(round(-pr * ln(pr), 6) AS DECIMAL(18,6))) AS h
-  FROM s GROUP BY cur
-)
-SELECT s.cur AS cur_type, s.nxt AS next_type,
-  CAST(s.c AS BIGINT) AS n_transitions,
-  round(pr, 6) AS p_next,
-  CAST(h.h AS DOUBLE) AS cur_entropy
-FROM s JOIN h USING (cur)
-"""
-
-_ORACLES["js_divergence_docs_lang"] = """
-WITH d AS (
-  SELECT lang,
-    CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) AS b
-  FROM documents WHERE lang IS NOT NULL
-), pl AS (
-  SELECT lang,
-    SUM(CASE WHEN b < 32768 THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN b >= 32768 THEN 1 ELSE 0 END) AS cb
-  FROM d GROUP BY lang
-), tot AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM pl),
-terms AS (
-  SELECT
-    CASE WHEN ca > 0 THEN
-      round((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-            * ln((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-                 / ((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                     + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) / 2.0)), 6)
-    ELSE 0.0 END AS ta,
-    CASE WHEN cb > 0 THEN
-      round((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-            * ln((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                 / ((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                     + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) / 2.0)), 6)
-    ELSE 0.0 END AS tb,
-    na, nb
-  FROM pl CROSS JOIN tot
-)
-SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-  CAST(count(*) AS BIGINT) AS n_labels,
-  round(CAST(SUM(CAST(ta AS DECIMAL(18,6)) + CAST(tb AS DECIMAL(18,6)))
-             AS DOUBLE) / 2.0, 6) AS js_divergence
-FROM terms
-"""
-
-_ORACLES["gini_by_nation_revenue"] = f"""
-WITH per_key AS (
-  SELECT n.n_name AS g, o.o_custkey AS k,
-    SUM(CAST((CASE WHEN o_totalprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS r
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  GROUP BY 1, 2
-), vc AS (
-  SELECT g, r AS v, count(*) AS c FROM per_key WHERE r IS NOT NULL
-  GROUP BY 1, 2
-), cum AS (
-  SELECT g, v, c,
-    SUM(c) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS cm
-  FROM vc
-), s AS (
-  SELECT g, SUM(c) AS n_keys,
-    SUM(CAST(v * CAST(c AS DECIMAL(19,0)) AS DECIMAL(38,2))) AS total,
-    SUM(CAST(v * CAST(c AS DECIMAL(19,0))
-             * (2 * CAST(cm AS DECIMAL(19,0)) - CAST(c AS DECIMAL(19,0)) + 1)
-             AS DECIMAL(38,2))) AS num2
-  FROM cum GROUP BY g
-)
-SELECT g AS n_name, CAST(n_keys AS BIGINT) AS n_keys,
-  {_ddwf('total')} AS total_value,
-  CASE WHEN {_ddwf('total')} > 0 THEN
-    round({_ddwf('num2')} / (CAST(n_keys AS DOUBLE) * {_ddwf('total')})
-          - (CAST(n_keys AS DOUBLE) + 1.0) / CAST(n_keys AS DOUBLE), 6)
-  END AS gini
-FROM s
-"""
-
-_ORACLES["chow_test_price_qty_flag"] = """
-WITH per_g AS (
-  SELECT l_returnflag AS g, count(*) AS n_g,
-    SUM(CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS sx,
-    SUM(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS sy,
-    SUM(CAST(CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxy,
-    SUM(CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    AND l_returnflag IS NOT NULL
-  GROUP BY 1
-), s AS (
-  SELECT SUM(n_g) AS n, count(*) AS k,
-    SUM(CAST(sx AS DECIMAL(38,2))) AS tsx,
-    SUM(CAST(sy AS DECIMAL(38,2))) AS tsy,
-    SUM(CAST(sxx AS DECIMAL(38,4))) AS tsxx,
-    SUM(CAST(sxy AS DECIMAL(38,4))) AS tsxy,
-    SUM(CAST(syy AS DECIMAL(38,4))) AS tsyy,
-    SUM(CAST(floor(CASE WHEN n_g > 2 AND ((CAST(CAST(floor(sxx) AS BIGINT) AS DOUBLE) + CAST(sxx - floor(sxx) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) / CAST(n_g AS DOUBLE)) > 0
-                   THEN (((CAST(CAST(floor(syy) AS BIGINT) AS DOUBLE) + CAST(syy - floor(syy) AS DOUBLE)) - (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)) * (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)) / CAST(n_g AS DOUBLE)) - ((CAST(CAST(floor(sxy) AS BIGINT) AS DOUBLE) + CAST(sxy - floor(sxy) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)) / CAST(n_g AS DOUBLE)) * ((CAST(CAST(floor(sxy) AS BIGINT) AS DOUBLE) + CAST(sxy - floor(sxy) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)) / CAST(n_g AS DOUBLE)) / ((CAST(CAST(floor(sxx) AS BIGINT) AS DOUBLE) + CAST(sxx - floor(sxx) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) / CAST(n_g AS DOUBLE))) ELSE 0.0 END * 100.0)
-             AS DECIMAL(38,0))) AS ssw_fp
-  FROM per_g
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  floor((((CAST(CAST(floor(tsyy) AS BIGINT) AS DOUBLE) + CAST(tsyy - floor(tsyy) AS DOUBLE)) - (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) * (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) / CAST(n AS DOUBLE)) - ((CAST(CAST(floor(tsxy) AS BIGINT) AS DOUBLE) + CAST(tsxy - floor(tsxy) AS DOUBLE)) - (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) * (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) / CAST(n AS DOUBLE)) * ((CAST(CAST(floor(tsxy) AS BIGINT) AS DOUBLE) + CAST(tsxy - floor(tsxy) AS DOUBLE)) - (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) * (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) / CAST(n AS DOUBLE)) / ((CAST(CAST(floor(tsxx) AS BIGINT) AS DOUBLE) + CAST(tsxx - floor(tsxx) AS DOUBLE)) - (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) * (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) / CAST(n AS DOUBLE))) * 100.0) / 100.0 AS sse_pooled,
-  ((CAST(CAST(floor(ssw_fp) AS BIGINT) AS DOUBLE) + CAST(ssw_fp - floor(ssw_fp) AS DOUBLE)) / 100.0) AS sse_within,
-  CASE WHEN k > 1 AND ((CAST(CAST(floor(ssw_fp) AS BIGINT) AS DOUBLE) + CAST(ssw_fp - floor(ssw_fp) AS DOUBLE)) / 100.0) > 0 THEN
-    round((((((CAST(CAST(floor(tsyy) AS BIGINT) AS DOUBLE) + CAST(tsyy - floor(tsyy) AS DOUBLE)) - (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) * (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) / CAST(n AS DOUBLE)) - ((CAST(CAST(floor(tsxy) AS BIGINT) AS DOUBLE) + CAST(tsxy - floor(tsxy) AS DOUBLE)) - (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) * (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) / CAST(n AS DOUBLE)) * ((CAST(CAST(floor(tsxy) AS BIGINT) AS DOUBLE) + CAST(tsxy - floor(tsxy) AS DOUBLE)) - (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) * (CAST(CAST(floor(tsy) AS BIGINT) AS DOUBLE) + CAST(tsy - floor(tsy) AS DOUBLE)) / CAST(n AS DOUBLE)) / ((CAST(CAST(floor(tsxx) AS BIGINT) AS DOUBLE) + CAST(tsxx - floor(tsxx) AS DOUBLE)) - (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) * (CAST(CAST(floor(tsx) AS BIGINT) AS DOUBLE) + CAST(tsx - floor(tsx) AS DOUBLE)) / CAST(n AS DOUBLE))) - ((CAST(CAST(floor(ssw_fp) AS BIGINT) AS DOUBLE) + CAST(ssw_fp - floor(ssw_fp) AS DOUBLE)) / 100.0)) / (2.0 * (CAST(k AS DOUBLE) - 1.0)))
-          / (((CAST(CAST(floor(ssw_fp) AS BIGINT) AS DOUBLE) + CAST(ssw_fp - floor(ssw_fp) AS DOUBLE)) / 100.0) / (CAST(n AS DOUBLE) - 2.0 * CAST(k AS DOUBLE))), 6)
-  END AS chow_f
-FROM s
-"""
-
-_ORACLES["graph_degree_assortativity"] = """
-WITH m AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), ok AS (
-  SELECT o FROM m GROUP BY o HAVING count(*) BETWEEN 2 AND 50
-), e AS (
-  SELECT DISTINCT a.p AS src, b.p AS dst
-  FROM m a JOIN m b ON a.o = b.o AND a.p < b.p
-  JOIN ok ON a.o = ok.o
-), adj AS (
-  SELECT src AS a, dst AS c FROM e UNION ALL SELECT dst AS a, src AS c FROM e
-), deg AS (SELECT a AS n, count(*) AS deg FROM adj GROUP BY 1),
-rows_ AS (
-  SELECT da.deg AS dx, db.deg AS dy
-  FROM adj JOIN deg da ON adj.a = da.n JOIN deg db ON adj.c = db.n
-), s AS (
-  SELECT count(*) AS m2,
-    SUM(CAST(dx AS DECIMAL(38,0))) AS sx,
-    SUM(CAST(dy AS DECIMAL(38,0))) AS sy,
-    SUM(CAST(CAST(dx AS DECIMAL(19,0)) * CAST(dx AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS sxx,
-    SUM(CAST(CAST(dy AS DECIMAL(19,0)) * CAST(dy AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS syy,
-    SUM(CAST(CAST(dx AS DECIMAL(19,0)) * CAST(dy AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS sxy
-  FROM rows_
-)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
-  CAST(m2 // 2 AS BIGINT) AS n_edges,
-  CASE WHEN sqrt(CAST(m2 AS DOUBLE) * (CAST(CAST(floor(sxx) AS BIGINT) AS DOUBLE) + CAST(sxx - floor(sxx) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE))) > 0
-        AND sqrt(CAST(m2 AS DOUBLE) * (CAST(CAST(floor(syy) AS BIGINT) AS DOUBLE) + CAST(syy - floor(syy) AS DOUBLE)) - (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)) * (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE))) > 0 THEN
-    round((CAST(m2 AS DOUBLE) * (CAST(CAST(floor(sxy) AS BIGINT) AS DOUBLE) + CAST(sxy - floor(sxy) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)))
-          / (sqrt(CAST(m2 AS DOUBLE) * (CAST(CAST(floor(sxx) AS BIGINT) AS DOUBLE) + CAST(sxx - floor(sxx) AS DOUBLE)) - (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)) * (CAST(CAST(floor(sx) AS BIGINT) AS DOUBLE) + CAST(sx - floor(sx) AS DOUBLE)))
-             * sqrt(CAST(m2 AS DOUBLE) * (CAST(CAST(floor(syy) AS BIGINT) AS DOUBLE) + CAST(syy - floor(syy) AS DOUBLE)) - (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)) * (CAST(CAST(floor(sy) AS BIGINT) AS DOUBLE) + CAST(sy - floor(sy) AS DOUBLE)))), 6)
-  END AS assortativity
-FROM s
-"""
-
-_ORACLES["graph_local_clustering"] = """
-WITH m AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), ok AS (
-  SELECT o FROM m GROUP BY o HAVING count(*) BETWEEN 2 AND 50
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.p AS src, b.p AS dst
-  FROM m a JOIN m b ON a.o = b.o AND a.p < b.p
-  JOIN ok ON a.o = ok.o
-), deg AS (
-  SELECT n, count(*) AS deg FROM (
-    SELECT src AS n FROM e UNION ALL SELECT dst AS n FROM e
-  ) GROUP BY n
-), tri AS (
-  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-  FROM e e1 JOIN e e2 ON e1.dst = e2.src
-  JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst
-), nt AS (
-  SELECT node, count(*) AS t FROM (
-    SELECT a AS node FROM tri UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) GROUP BY node
-), pn AS (
-  SELECT deg.n, deg.deg, COALESCE(nt.t, 0) AS t
-  FROM deg LEFT JOIN nt ON deg.n = nt.node
-  WHERE deg.deg >= 2
-), f AS (
-  SELECT count(*) AS n2,
-    SUM(CAST(round(2.0 * CAST(t AS DOUBLE)
-                   / (CAST(deg AS DOUBLE) * (CAST(deg AS DOUBLE) - 1.0)), 6)
-             AS DECIMAL(18,6))) AS csum,
-    SUM(t) AS t3
-  FROM pn
-)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
-  CAST(n2 AS BIGINT) AS n_deg2plus,
-  CAST(t3 // 3 AS BIGINT) AS n_triangles,
-  CASE WHEN n2 > 0 THEN
-    round((CAST(CAST(floor(csum) AS BIGINT) AS DOUBLE) + CAST(csum - floor(csum) AS DOUBLE)) / CAST(n2 AS DOUBLE), 6)
-  END AS avg_clustering
-FROM f
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-6 wave 5: classifier-evaluation rank statistics
-
-
-def _dd(c: str) -> str:
-    """Portable DECIMAL->DOUBLE split cast (SQL twin of
-    operators/hypotests.dec_double) for sums past double's 15-digit
-    correctly-rounded envelope."""
-    return (
-        f"(CAST(CAST(floor({c}) AS BIGINT) AS DOUBLE)"
-        f" + CAST({c} - floor({c}) AS DOUBLE))"
-    )
-
-
-def q_roc_auc_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact tie-aware ROC AUC of order price as a predictor of
-    finished status — Mann-Whitney normalization over bucketed prefix
-    counts, no global sort (operators/hypotests.py:roc_auc)."""
-    from breweries_etl_spark.operators.hypotests import roc_auc
-
-    o = load_table(spark, sf_dir, "orders")
-    return roc_auc(o, "o_totalprice", F.col("o_orderstatus") == "F")
-
-
-def q_score_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile lift/gain table of order price vs finished status —
-    closed-form integer tiling from exact cumulative counts, no ntile
-    global sort (operators/hypotests.py:score_decile_lift)."""
-    from breweries_etl_spark.operators.hypotests import score_decile_lift
-
-    o = load_table(spark, sf_dir, "orders")
-    return score_decile_lift(o, "o_totalprice", F.col("o_orderstatus") == "F")
-
-
-def q_mcnemar_doc_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar paired test between two document quality filters (char
-    floor vs word floor) scored on the same corpus
-    (operators/hypotests.py:mcnemar_test)."""
-    from breweries_etl_spark.operators.hypotests import mcnemar_test
-
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    words = (
-        F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))) + 1
-    )
-    return mcnemar_test(d, F.col("n_chars") >= 300, words >= 50)
-
-
-def q_cohens_d_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's d effect size of returned vs other lineitems' extended
-    price — the magnitude companion to welch_t_price_returnflag
-    (operators/hypotests.py:cohens_d)."""
-    from breweries_etl_spark.operators.hypotests import cohens_d
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return cohens_d(li, "l_extendedprice", F.col("l_returnflag") == "R")
-
-
-_AUC_VC = """
-vc AS (
-  SELECT o_totalprice AS v,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS cb
-  FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM vc
-)"""
-
-_ORACLES["roc_auc_order_status"] = f"""
-WITH {_AUC_VC},
-s AS (
-  SELECT SUM(ca) AS n_pos, SUM(cb) AS n_neg,
-    SUM(CAST(2 * CAST(ca AS DECIMAL(19,0)) * CAST(cum_b - cb AS DECIMAL(19,0))
-             + CAST(ca AS DECIMAL(19,0)) * CAST(cb AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS u2
-  FROM cum
-)
-SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
-  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-    round({_ddw('u2')}
-          / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 6)
-  END AS auc,
-  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-    round({_ddw('u2')}
-          / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE))
-          * 2.0 - 1.0, 6)
-  END AS gini_coef
-FROM s
-"""
-
-_ORACLES["score_lift_deciles"] = f"""
-WITH {_AUC_VC},
-tot AS (SELECT SUM(ca) AS tp, SUM(ca) + SUM(cb) AS tn FROM vc),
-tiles AS (
-  SELECT (((cum_a + cum_b - 1) * 10) // tn) + 1 AS tile,
-    SUM(ca + cb) AS n, SUM(ca) AS n_pos, max(tp) AS tp, max(tn) AS tn
-  FROM cum CROSS JOIN tot GROUP BY 1
-)
-SELECT CAST(tile AS BIGINT) AS tile, CAST(n AS BIGINT) AS n,
-  CAST(n_pos AS BIGINT) AS n_pos,
-  round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS pos_rate,
-  CASE WHEN tp > 0 THEN
-    round((CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
-          / (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)), 6)
-  END AS lift,
-  CASE WHEN tp > 0 THEN
-    round(CAST(SUM(n_pos) OVER (ORDER BY tile DESC ROWS UNBOUNDED PRECEDING)
-               AS DOUBLE) / CAST(tp AS DOUBLE), 6)
-  END AS cum_gain
-FROM tiles
-"""
-
-_ORACLES["mcnemar_doc_filters"] = """
-WITH f AS (
-  SELECT (n_chars >= 300) AS fa,
-    ((length(text) - length(replace(text, ' ', '')) + 1) >= 50) AS fb
-  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL
-), s AS (
-  SELECT count(*) AS n,
-    SUM(CASE WHEN fa AND fb THEN 1 ELSE 0 END) AS n_both,
-    SUM(CASE WHEN fa AND NOT fb THEN 1 ELSE 0 END) AS n_a_only,
-    SUM(CASE WHEN NOT fa AND fb THEN 1 ELSE 0 END) AS n_b_only,
-    SUM(CASE WHEN NOT fa AND NOT fb THEN 1 ELSE 0 END) AS n_neither
-  FROM f
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_both AS BIGINT) AS n_both,
-  CAST(n_a_only AS BIGINT) AS n_a_only,
-  CAST(n_b_only AS BIGINT) AS n_b_only,
-  CAST(n_neither AS BIGINT) AS n_neither,
-  CASE WHEN n_a_only + n_b_only > 0 THEN
-    round((CAST(n_a_only AS DOUBLE) - CAST(n_b_only AS DOUBLE))
-          * (CAST(n_a_only AS DOUBLE) - CAST(n_b_only AS DOUBLE))
-          / (CAST(n_a_only AS DOUBLE) + CAST(n_b_only AS DOUBLE)), 6)
-  END AS mcnemar_chi2
-FROM s
-"""
-
-_ORACLES["cohens_d_price_returnflag"] = f"""
-WITH s AS (
-  SELECT
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS na,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS nb,
-    SUM(CASE WHEN l_returnflag = 'R'
-        THEN CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-        ELSE CAST(0 AS DECIMAL(18,2)) END) AS sa,
-    SUM(CASE WHEN l_returnflag <> 'R'
-        THEN CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-        ELSE CAST(0 AS DECIMAL(18,2)) END) AS sb,
-    SUM(CASE WHEN l_returnflag = 'R'
-        THEN CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-                  * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))
-        ELSE CAST(0 AS DECIMAL(38,4)) END) AS qa,
-    SUM(CASE WHEN l_returnflag <> 'R'
-        THEN CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-                  * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))
-        ELSE CAST(0 AS DECIMAL(38,4)) END) AS qb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-)
-SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-  round({_ddwf('sa')} / CAST(na AS DOUBLE), 6) AS mean_a,
-  round({_ddwf('sb')} / CAST(nb AS DOUBLE), 6) AS mean_b,
-  CASE WHEN na + nb > 2 AND na > 0 AND nb > 0
-        AND (({_ddwf('qa')} - {_ddwf('sa')} * ({_ddwf('sa')} / CAST(na AS DOUBLE)))
-             + ({_ddwf('qb')} - {_ddwf('sb')} * ({_ddwf('sb')} / CAST(nb AS DOUBLE))))
-            / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0) > 0 THEN
-    round(sqrt((({_ddwf('qa')} - {_ddwf('sa')} * ({_ddwf('sa')} / CAST(na AS DOUBLE)))
-                + ({_ddwf('qb')} - {_ddwf('sb')} * ({_ddwf('sb')} / CAST(nb AS DOUBLE))))
-               / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0)), 6)
-  END AS pooled_sd,
-  CASE WHEN na + nb > 2 AND na > 0 AND nb > 0
-        AND (({_ddwf('qa')} - {_ddwf('sa')} * ({_ddwf('sa')} / CAST(na AS DOUBLE)))
-             + ({_ddwf('qb')} - {_ddwf('sb')} * ({_ddwf('sb')} / CAST(nb AS DOUBLE))))
-            / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0) > 0 THEN
-    round(({_ddwf('sa')} / CAST(na AS DOUBLE)
-           - {_ddwf('sb')} / CAST(nb AS DOUBLE))
-          / sqrt((({_ddwf('qa')} - {_ddwf('sa')} * ({_ddwf('sa')} / CAST(na AS DOUBLE)))
-                  + ({_ddwf('qb')} - {_ddwf('sb')} * ({_ddwf('sb')} / CAST(nb AS DOUBLE))))
-                 / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0)), 6)
-  END AS cohens_d
-FROM s
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-6 wave 5B: outlier/variance screens + daily-series diagnostics
-
-
-def q_grubbs_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grubbs max-outlier screen on order totals: exact moments + one
-    struct-argmax, no sort (operators/hypotests.py:grubbs_max_outlier)."""
-    from breweries_etl_spark.operators.hypotests import grubbs_max_outlier
-
-    return grubbs_max_outlier(
-        load_table(spark, sf_dir, "orders"), "o_orderkey", "o_totalprice"
-    )
-
-
-def q_levene_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean-centered Levene equality-of-variances across return flags —
-    the classical companion to brown_forsythe_price_flag
-    (operators/hypotests.py:levene_test)."""
-    from breweries_etl_spark.operators.hypotests import levene_test
-
-    return levene_test(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_durbin_watson_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durbin-Watson statistic of the daily event-value series around
-    its OLS trend (operators/temporal.py:durbin_watson_daily)."""
-    from breweries_etl_spark.operators.temporal import durbin_watson_daily
-
-    return durbin_watson_daily(load_events(spark, sf_dir))
-
-
-def q_runs_test_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test on day-over-day sign changes of the
-    daily event-value series (operators/temporal.py:runs_test_daily)."""
-    from breweries_etl_spark.operators.temporal import runs_test_daily
-
-    return runs_test_daily(load_events(spark, sf_dir))
-
-
-def q_rolling_slope_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-day rolling OLS slope per day of the daily
-    event-value series (operators/temporal.py:rolling_ols_slope_daily)."""
-    from breweries_etl_spark.operators.temporal import rolling_ols_slope_daily
-
-    return rolling_ols_slope_daily(load_events(spark, sf_dir))
-
-
-_GRB_MEAN = f"({_ddwf('s')} / CAST(n AS DOUBLE))"
-_GRB_VAR = f"(({_ddwf('q')} - {_ddwf('s')} * {_GRB_MEAN}) / (CAST(n AS DOUBLE) - 1.0))"
-
-_ORACLES["grubbs_order_price"] = f"""
-WITH base AS (
-  SELECT o_orderkey AS k, CAST((CASE WHEN o_totalprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS x
-  FROM orders WHERE o_totalprice IS NOT NULL
-), m AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x AS DECIMAL(38,2))) AS s,
-    SUM(CAST(CAST(x AS DECIMAL(24,2)) * CAST(x AS DECIMAL(24,2))
-             AS DECIMAL(38,4))) AS q
-  FROM base
-), top AS (
-  SELECT k, x,
-    CAST(floor(abs(CAST(x AS DOUBLE) - {_GRB_MEAN}) * 1000000.0) AS BIGINT) AS d
-  FROM base CROSS JOIN m
-  ORDER BY d DESC, k ASC LIMIT 1
-)
-SELECT CAST(n AS BIGINT) AS n,
-  round({_GRB_MEAN}, 6) AS mean_value,
-  CASE WHEN n > 2 AND {_GRB_VAR} > 0 THEN round(sqrt({_GRB_VAR}), 6) END
-    AS sd_value,
-  CAST(k AS BIGINT) AS outlier_key,
-  CAST(x AS DOUBLE) AS outlier_value,
-  CASE WHEN n > 2 AND {_GRB_VAR} > 0 THEN
-    round(CAST(d AS DOUBLE) / 1000000.0 / sqrt({_GRB_VAR}), 6)
-  END AS grubbs_g
-FROM top CROSS JOIN m
-"""
-
-_LEV_MU = f"({_ddwf('gs')} / CAST(gn AS DOUBLE))"
-
-_ORACLES["levene_price_flag"] = f"""
-WITH base AS (
-  SELECT l_returnflag AS g, CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS v
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-), means AS (
-  SELECT g, count(*) AS gn, SUM(CAST(v AS DECIMAL(38,2))) AS gs
-  FROM base GROUP BY g
-), z AS (
-  SELECT base.g,
-    CAST(CAST(floor(abs(CAST(v AS DOUBLE) - {_LEV_MU}) * 100.0)
-              AS DECIMAL(18,2)) / 100 AS DECIMAL(18,2)) AS zv
-  FROM base JOIN means USING (g)
-), per_g AS (
-  SELECT g, count(*) AS n_g,
-    SUM(CAST(zv AS DECIMAL(18,2))) AS s_g,
-    SUM(CAST(CAST(zv AS DECIMAL(18,2))
-             * CAST(zv AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS q_g
-  FROM z GROUP BY 1
-), s AS (
-{_ANOVA_S_CTE}
-)
-{_anova_tail_sql("levene_w")}
-"""
-
-_DAILY_EVENTS = """
-daily AS MATERIALIZED (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-)"""
-
-_DW_DEN = (
-    f"(CAST(n AS DOUBLE) * {_dd('sxx')} - {_dd('sx')} * {_dd('sx')})"
-)
-_DW_SLOPE = (
-    f"((CAST(n AS DOUBLE) * {_dd('sxy')} - {_dd('sx')} * {_dd('sy')})"
-    f" / {_DW_DEN})"
-)
-_DW_ICEPT = f"(({_dd('sy')} - {_DW_SLOPE} * {_dd('sx')}) / CAST(n AS DOUBLE))"
-
-_ORACLES["durbin_watson_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-mn AS (SELECT min(day) AS d0 FROM daily),
-based AS (
-  SELECT day, y, CAST(day - d0 AS BIGINT) AS x FROM daily CROSS JOIN mn
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-    SUM(CAST(y AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-    SUM(CAST(CAST(y AS DECIMAL(24,2)) * x AS DECIMAL(38,4))) AS sxy
-  FROM based
-), resid AS (
-  SELECT day,
-    CAST(y AS DOUBLE) - ({_DW_ICEPT} + {_DW_SLOPE} * CAST(x AS DOUBLE)) AS e
-  FROM based CROSS JOIN mom
-), lagged AS (
-  SELECT e, lag(e, 1) OVER (ORDER BY day) AS ep FROM resid
-), sums AS (
-  -- fixed-point at 1e6 (sub-unit daily residuals floored to 0 at unit
-  -- granularity); wide conversion below since the scaled sums pass 2^63
-  SELECT count(*) AS n_days,
-    SUM(CAST(floor(e * e * 1e6) AS DECIMAL(38,0))) AS den_fp,
-    SUM(CASE WHEN ep IS NOT NULL THEN
-      CAST(floor((e - ep) * (e - ep) * 1e6) AS DECIMAL(38,0)) END) AS num_fp
-  FROM lagged
-)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-  CASE WHEN {_DW_DEN} > 0 THEN round({_DW_SLOPE}, 6) END AS slope,
-  CASE WHEN {_DW_DEN} > 0 THEN floor({_DW_ICEPT} * 10000.0) / 10000.0 END
-    AS intercept,
-  CASE WHEN den_fp > 0 AND n_days > 2 THEN
-    round({_ddw('num_fp')} / {_ddw('den_fp')}, 6)
-  END AS dw_stat
-FROM sums CROSS JOIN mom
-"""
-
-_ORACLES["runs_test_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-diffed AS (
-  SELECT day, y - lag(y, 1) OVER (ORDER BY day) AS d FROM daily
-), signs AS (
-  SELECT day, CASE WHEN d > 0 THEN 1 WHEN d < 0 THEN -1 END AS sgn
-  FROM diffed WHERE d IS NOT NULL AND d <> 0
-), flips AS (
-  SELECT sgn,
-    CASE WHEN lag(sgn, 1) OVER (ORDER BY day) IS NULL
-           OR sgn <> lag(sgn, 1) OVER (ORDER BY day) THEN 1 ELSE 0 END
-      AS is_start
-  FROM signs
-), s AS (
-  SELECT count(*) AS n,
-    SUM(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS n_plus,
-    SUM(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS n_minus,
-    SUM(is_start) AS n_runs
-  FROM flips
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_plus AS BIGINT) AS n_plus,
-  CAST(n_minus AS BIGINT) AS n_minus, CAST(n_runs AS BIGINT) AS n_runs,
-  CASE WHEN n_plus > 0 AND n_minus > 0 AND n > 1 THEN
-    round(2.0 * CAST(n_plus AS DOUBLE) * CAST(n_minus AS DOUBLE)
-          / CAST(n AS DOUBLE) + 1.0, 6)
-  END AS expected_runs,
-  CASE WHEN n_plus > 0 AND n_minus > 0 AND n > 1
-        AND (2.0 * CAST(n_plus AS DOUBLE) * CAST(n_minus AS DOUBLE))
-            * ((2.0 * CAST(n_plus AS DOUBLE) * CAST(n_minus AS DOUBLE)) - CAST(n AS DOUBLE))
-            / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) > 0 THEN
-    round((CAST(n_runs AS DOUBLE)
-           - (2.0 * CAST(n_plus AS DOUBLE) * CAST(n_minus AS DOUBLE)
-              / CAST(n AS DOUBLE) + 1.0))
-          / sqrt((2.0 * CAST(n_plus AS DOUBLE) * CAST(n_minus AS DOUBLE))
-                 * ((2.0 * CAST(n_plus AS DOUBLE) * CAST(n_minus AS DOUBLE)) - CAST(n AS DOUBLE))
-                 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))), 6)
-  END AS z_score
-FROM s
-"""
-
-_RS_DEN = (
-    f"(CAST(nw AS DOUBLE) * {_dd('sxx')} - {_dd('sx')} * {_dd('sx')})"
-)
-_RS_SLOPE = (
-    f"((CAST(nw AS DOUBLE) * {_dd('sxy')} - {_dd('sx')} * {_dd('sy')})"
-    f" / {_RS_DEN})"
-)
-
-_ORACLES["rolling_slope_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-agg AS (
-  SELECT day,
-    count(*) OVER w AS nw,
-    SUM(CAST(day AS DECIMAL(38,0))) OVER w AS sx,
-    SUM(CAST(y AS DECIMAL(38,2))) OVER w AS sy,
-    SUM(CAST(day * day AS DECIMAL(38,0))) OVER w AS sxx,
-    SUM(CAST(CAST(y AS DECIMAL(24,2)) * day AS DECIMAL(38,4))) OVER w AS sxy
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-)
-SELECT CAST(day AS BIGINT) AS day,
-  CASE WHEN {_RS_DEN} > 0 THEN floor({_RS_SLOPE} * 100.0) / 100.0 END
-    AS slope_w
-FROM agg WHERE nw = 7
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-6 wave 5C: degree power-law MLE + corpus keyness
-
-
-def q_graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clauset-Shalizi-Newman continuous power-law exponent MLE over
-    the co-purchase graph's degree distribution
-    (operators/graph.py:degree_powerlaw_alpha)."""
-    from breweries_etl_spark.operators.dedup import bucket_candidate_pairs
-    from breweries_etl_spark.operators.graph import degree_powerlaw_alpha
-
-    li = load_table(spark, sf_dir, "lineitem")
-    membership = li.select("l_orderkey", "l_partkey").distinct()
-    edges = bucket_candidate_pairs(membership, ["l_orderkey"], "l_partkey", 50)
-    return degree_powerlaw_alpha(edges, "id_a", "id_b")
-
-
-def q_keyness_llr_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 keyness terms per document source by Dunning's
-    log-likelihood G² vs the rest of the corpus
-    (operators/text.py:keyness_llr_top_terms)."""
-    from breweries_etl_spark.operators.text import keyness_llr_top_terms
-
-    return keyness_llr_top_terms(load_table(spark, sf_dir, "documents"))
-
-
-_ORACLES["graph_degree_powerlaw"] = """
-WITH m AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), ok AS (
-  SELECT o FROM m GROUP BY o HAVING count(*) BETWEEN 2 AND 50
-), e AS (
-  SELECT DISTINCT a.p AS src, b.p AS dst
-  FROM m a JOIN m b ON a.o = b.o AND a.p < b.p
-  JOIN ok ON a.o = ok.o
-), deg AS (
-  SELECT n, count(*) AS deg FROM (
-    SELECT src AS n FROM e UNION ALL SELECT dst AS n FROM e
-  ) GROUP BY n
-), s AS (
-  SELECT count(*) AS n_nodes,
-    SUM(CASE WHEN deg >= 2 THEN 1 ELSE 0 END) AS n_tail,
-    SUM(CAST(CASE WHEN deg >= 2
-        THEN round(ln(CAST(deg AS DOUBLE) / 2.0), 6) ELSE 0.0 END
-        AS DECIMAL(18,6))) AS lsum
-  FROM deg
-)
-SELECT CAST(n_nodes AS BIGINT) AS n_nodes, CAST(n_tail AS BIGINT) AS n_tail,
-  CAST(2 AS BIGINT) AS d_min,
-  CASE WHEN CAST(lsum AS DOUBLE) > 0 THEN
-    round(1.0 + CAST(n_tail AS DOUBLE) / CAST(lsum AS DOUBLE), 6)
-  END AS alpha
-FROM s
-"""
-
-_ORACLES["keyness_llr_sources"] = """
-WITH toks AS (
-  SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS term
-  FROM documents
-), st AS (
-  SELECT source, term, count(*) AS a FROM toks GROUP BY 1, 2
-), term_tot AS (SELECT term, SUM(a) AS t FROM st GROUP BY term),
-src_tot AS (SELECT source, SUM(a) AS s FROM st GROUP BY source),
-tot AS (SELECT SUM(a) AS nn FROM st),
-base AS (
-  SELECT st.source, st.term,
-    CAST(st.a AS DOUBLE) AS a,
-    CAST(term_tot.t - st.a AS DOUBLE) AS b,
-    CAST(src_tot.s - st.a AS DOUBLE) AS c,
-    CAST(tot.nn AS DOUBLE) - CAST(st.a AS DOUBLE)
-      - CAST(term_tot.t - st.a AS DOUBLE)
-      - CAST(src_tot.s - st.a AS DOUBLE) AS d,
-    CAST(tot.nn AS DOUBLE) AS nn,
-    st.a AS a_raw, term_tot.t - st.a AS rest_raw
-  FROM st JOIN term_tot USING (term) JOIN src_tot USING (source)
-  CROSS JOIN tot
-  WHERE st.a >= 5
-), scored AS (
-  SELECT source, term, a_raw AS n_source, rest_raw AS n_rest,
-    round(2.0 * (
-      (CASE WHEN a > 0 THEN a * ln(a / ((a + b) * (a + c) / nn)) ELSE 0.0 END)
-      + (CASE WHEN b > 0 THEN b * ln(b / ((a + b) * (nn - (a + c)) / nn)) ELSE 0.0 END)
-      + (CASE WHEN c > 0 THEN c * ln(c / ((nn - (a + b)) * (a + c) / nn)) ELSE 0.0 END)
-      + (CASE WHEN d > 0 THEN d * ln(d / ((nn - (a + b)) * (nn - (a + c)) / nn)) ELSE 0.0 END)
-    ), 6) AS g2,
-    CASE WHEN a * (nn - (a + c)) > b * (a + c) THEN 1 ELSE 0 END AS enriched
-  FROM base
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY source ORDER BY g2 DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT source, term, CAST(n_source AS BIGINT) AS n_source,
-  CAST(n_rest AS BIGINT) AS n_rest, g2, CAST(enriched AS INTEGER) AS enriched,
-  CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 10
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-6 wave 5D: bounded-domain Kendall, Cochran's Q, Mood's median
-
-
-def q_kendall_tau_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact tie-adjusted Kendall tau-b between quantity and discount —
-    bounded value domains make the cell-pair enumeration cheap
-    (operators/hypotests.py:kendall_tau_b)."""
-    from breweries_etl_spark.operators.hypotests import kendall_tau_b
-
-    return kendall_tau_b(
-        load_table(spark, sf_dir, "lineitem"), "l_quantity", "l_discount"
-    )
-
-
-def q_cochran_q_doc_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran's Q across three paired document filters (char floor,
-    word floor, marker token) — the k=3 McNemar generalization
-    (operators/hypotests.py:cochran_q)."""
-    from breweries_etl_spark.operators.hypotests import cochran_q
-
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    words = (
-        F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))) + 1
-    )
-    return cochran_q(
-        d,
-        F.col("n_chars") >= 300,
-        words >= 50,
-        F.instr(F.lower(F.col("text")), "the") > 0,
-    )
-
-
-def q_moods_median_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mood's median test of extended price across return flags — the
-    grand median read off the prefix-count primitive, no global
-    percentile buffer (operators/hypotests.py:moods_median_test)."""
-    from breweries_etl_spark.operators.hypotests import moods_median_test
-
-    return moods_median_test(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-_KTB_DEN = (
-    "(sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)"
-    f" - {_ddw('tie2x')})"
-    " * (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)"
-    f" - {_ddw('tie2y')})) / 2.0)"
-)
-
-_ORACLES["kendall_tau_qty_discount"] = f"""
-WITH cells AS MATERIALIZED (
-  SELECT l_quantity AS x, l_discount AS y, count(*) AS c
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT
-    SUM(CASE WHEN a.y < b.y THEN
-      CAST(CAST(a.c AS DECIMAL(19,0)) * CAST(b.c AS DECIMAL(19,0))
-           AS DECIMAL(38,0)) END) AS nc0,
-    SUM(CASE WHEN a.y > b.y THEN
-      CAST(CAST(a.c AS DECIMAL(19,0)) * CAST(b.c AS DECIMAL(19,0))
-           AS DECIMAL(38,0)) END) AS nd0
-  FROM cells a JOIN cells b ON a.x < b.x
-), tx AS (SELECT x, SUM(c) AS t FROM cells GROUP BY x),
-ty AS (SELECT y, SUM(c) AS t FROM cells GROUP BY y),
-tiex AS (
-  SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * (CAST(t AS DECIMAL(19,0)) - 1)
-                  AS DECIMAL(38,0))) AS tie2x FROM tx
-), tiey AS (
-  SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * (CAST(t AS DECIMAL(19,0)) - 1)
-                  AS DECIMAL(38,0))) AS tie2y FROM ty
-), tot AS (SELECT SUM(c) AS n, count(*) AS n_cells FROM cells),
-f AS (
-  SELECT n, n_cells,
-    COALESCE(nc0, CAST(0 AS DECIMAL(38,0))) AS nc,
-    COALESCE(nd0, CAST(0 AS DECIMAL(38,0))) AS nd,
-    tie2x, tie2y
-  FROM tot CROSS JOIN pairs CROSS JOIN tiex CROSS JOIN tiey
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_cells AS BIGINT) AS n_cells,
-  CAST(nc AS DECIMAL(38,0)) AS n_concordant,
-  CAST(nd AS DECIMAL(38,0)) AS n_discordant,
-  CASE WHEN {_KTB_DEN} > 0 THEN
-    round(({_ddw('nc')} - {_ddw('nd')}) / {_KTB_DEN}, 6)
-  END AS tau_b
-FROM f
-"""
-
-_ORACLES["cochran_q_doc_filters"] = """
-WITH f AS (
-  SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS fa,
-    CASE WHEN (length(text) - length(replace(text, ' ', '')) + 1) >= 50
-         THEN 1 ELSE 0 END AS fb,
-    CASE WHEN instr(lower(text), 'the') > 0 THEN 1 ELSE 0 END AS fc
-  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL
-), s AS (
-  SELECT count(*) AS n, SUM(fa) AS ca, SUM(fb) AS cb, SUM(fc) AS cc,
-    SUM(fa + fb + fc) AS t,
-    SUM((fa + fb + fc) * (fa + fb + fc)) AS r2
-  FROM f
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(ca AS BIGINT) AS c_a,
-  CAST(cb AS BIGINT) AS c_b, CAST(cc AS BIGINT) AS c_c,
-  CASE WHEN 3.0 * CAST(t AS DOUBLE) - CAST(r2 AS DOUBLE) > 0 THEN
-    round(3.0 * 2.0 * (
-      (CAST(ca AS DOUBLE) - CAST(t AS DOUBLE) / 3.0) * (CAST(ca AS DOUBLE) - CAST(t AS DOUBLE) / 3.0)
-      + (CAST(cb AS DOUBLE) - CAST(t AS DOUBLE) / 3.0) * (CAST(cb AS DOUBLE) - CAST(t AS DOUBLE) / 3.0)
-      + (CAST(cc AS DOUBLE) - CAST(t AS DOUBLE) / 3.0) * (CAST(cc AS DOUBLE) - CAST(t AS DOUBLE) / 3.0)
-    ) / (3.0 * CAST(t AS DOUBLE) - CAST(r2 AS DOUBLE)), 6)
-  END AS cochran_q
-FROM s
-"""
-
-_ORACLES["moods_median_price_flag"] = """
-WITH base AS MATERIALIZED (
-  -- explicit half-up integer cents (the _batch_cents discipline):
-  -- a bare DECIMAL(18,2) cast diverges on negative half-cent ties
-  SELECT l_returnflag AS g,
-    CAST(CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END
-         * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)
-         AS BIGINT) AS v
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-), vc AS (
-  SELECT v, count(*) AS c FROM base GROUP BY v
-), cum AS (
-  SELECT v, SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), nn AS (SELECT max(cum) AS nn FROM cum),
-med AS (
-  SELECT min(v) AS med FROM cum CROSS JOIN nn WHERE 2 * cum >= nn
-), per_g AS (
-  SELECT g, max(med) AS med,
-    SUM(CASE WHEN v > med THEN 1 ELSE 0 END) AS above,
-    SUM(CASE WHEN v <= med THEN 1 ELSE 0 END) AS below
-  FROM base CROSS JOIN med GROUP BY g
-), tot AS (
-  SELECT SUM(above + below) AS n, count(*) AS k,
-    SUM(above) AS ta, SUM(below) AS tb, max(med) AS med
-  FROM per_g
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CAST(tot.med AS DOUBLE) / 100.0 AS grand_median,
-  CASE WHEN least(ta, tb) > 0 THEN
-    round(CAST(SUM(
-      CAST(floor(((CAST(above AS DOUBLE) - CAST(above + below AS DOUBLE) * CAST(ta AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(above AS DOUBLE) - CAST(above + below AS DOUBLE) * CAST(ta AS DOUBLE) / CAST(n AS DOUBLE))
-                  / (CAST(above + below AS DOUBLE) * CAST(ta AS DOUBLE) / CAST(n AS DOUBLE))) * 1000000.0)
-           AS DECIMAL(38,0))
-      + CAST(floor(((CAST(below AS DOUBLE) - CAST(above + below AS DOUBLE) * CAST(tb AS DOUBLE) / CAST(n AS DOUBLE))
-                    * (CAST(below AS DOUBLE) - CAST(above + below AS DOUBLE) * CAST(tb AS DOUBLE) / CAST(n AS DOUBLE))
-                    / (CAST(above + below AS DOUBLE) * CAST(tb AS DOUBLE) / CAST(n AS DOUBLE))) * 1000000.0)
-             AS DECIMAL(38,0))
-    ) AS DOUBLE) / 1000000.0, 4)
-  END AS chi2
-FROM per_g CROSS JOIN tot
-GROUP BY n, k, tot.med, ta, tb
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-6 wave 6: ECDF drift family completion (CvM, Anderson-Darling,
-# Cliff's delta), paired Wilcoxon, CUSUM change point, odds ratio
-
-
-def q_cvm_test_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Cramér–von Mises statistic of extended price,
-    returned vs other lineitems — integrates EVERY ECDF gap where KS
-    reads only the largest (operators/hypotests.py:cvm_test_2samp)."""
-    from breweries_etl_spark.operators.hypotests import cvm_test_2samp
-
-    return cvm_test_2samp(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_anderson_darling_price_flag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-sample Anderson-Darling statistic (Pettitt form) of extended
-    price, returned vs other lineitems — the tail-weighted member of
-    the drift family (operators/hypotests.py:anderson_darling_2samp)."""
-    from breweries_etl_spark.operators.hypotests import anderson_darling_2samp
-
-    return anderson_darling_2samp(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_cliffs_delta_price_returnflag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cliff's delta ordinal effect size of extended price, returned vs
-    other lineitems (operators/hypotests.py:cliffs_delta)."""
-    from breweries_etl_spark.operators.hypotests import cliffs_delta
-
-    return cliffs_delta(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_wilcoxon_signed_user_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Wilcoxon signed-rank test on each user's last-minus-first event
-    value (deterministic (ts, event_id) endpoint ordering) — did user
-    values shift within the observation window?
-    (operators/hypotests.py:wilcoxon_signed_rank)."""
-    from breweries_etl_spark.operators.hypotests import wilcoxon_signed_rank
-
-    e = load_events(spark, sf_dir).filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    # explicit half-up integer cents (the _batch_cents discipline,
-    # judge r6 #3): a bare DECIMAL(18,2) cast diverges from DuckDB on
-    # negative half-cent ties; cent differences are exact BIGINTs and
-    # the ranks (hence W+ and z) are invariant to the 100x scale
-    xd = F.col("value").cast("double")
-    v = (
-        F.signum(xd) * F.floor(F.abs(xd) * F.lit(100.0) + F.lit(0.5))
-    ).cast("long")
-    per_user = e.groupBy("user_id").agg(
-        F.min_by(v, key).alias("vf"), F.max_by(v, key).alias("vl")
-    )
-    diffs = per_user.select((F.col("vl") - F.col("vf")).alias("d"))
-    return wilcoxon_signed_rank(diffs, "d")
-
-
-def q_cusum_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM mean-shift change-point scan over the daily event-value
-    series (operators/temporal.py:cusum_change_point)."""
-    from breweries_etl_spark.operators.temporal import cusum_change_point
-
-    return cusum_change_point(load_events(spark, sf_dir))
-
-
-def q_odds_ratio_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Odds ratio with Woolf 95% CI between the long-document flag and
-    the marker-token flag (operators/hypotests.py:odds_ratio_2x2)."""
-    from breweries_etl_spark.operators.hypotests import odds_ratio_2x2
-
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    return odds_ratio_2x2(
-        d,
-        F.col("n_chars") >= 300,
-        F.instr(F.lower(F.col("text")), "the") > 0,
-    )
-
-
-_PRICE_FLAG_PC = """
-vc AS MATERIALIZED (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM vc
-), tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM vc)"""
-
-_ORACLES["cvm_test_price_returnflag"] = f"""
-WITH {_PRICE_FLAG_PC},
-terms AS (
-  SELECT
-    CAST(floor(
-      CAST(ca + cb AS DOUBLE)
-      * ({_ddw("abs(CAST(cum_a AS DECIMAL(19,0)) * CAST(n_b AS DECIMAL(19,0)) - CAST(cum_b AS DECIMAL(19,0)) * CAST(n_a AS DECIMAL(19,0)))")}
-         / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))
-      * ({_ddw("abs(CAST(cum_a AS DECIMAL(19,0)) * CAST(n_b AS DECIMAL(19,0)) - CAST(cum_b AS DECIMAL(19,0)) * CAST(n_a AS DECIMAL(19,0)))")}
-         / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))
-      * 1e12) AS DECIMAL(38,0)) AS t_fp,
-    n_a, n_b
-  FROM cum CROSS JOIN tot
-)
-SELECT CAST(max(n_a) AS BIGINT) AS n_a, CAST(max(n_b) AS BIGINT) AS n_b,
-  round(
-    (CAST(max(n_a) AS DOUBLE) * CAST(max(n_b) AS DOUBLE)
-     / ((CAST(max(n_a) AS DOUBLE) + CAST(max(n_b) AS DOUBLE))
-        * (CAST(max(n_a) AS DOUBLE) + CAST(max(n_b) AS DOUBLE))))
-    * (CAST(SUM(t_fp) AS DOUBLE) / 1e12), 6) AS cvm_t
-FROM terms
-"""
-
-_ORACLES["anderson_darling_price_flag"] = f"""
-WITH {_PRICE_FLAG_PC},
-norm AS (
-  SELECT ca, cb,
-    CAST(cum_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS fa,
-    CAST(cum_a + cum_b AS DOUBLE)
-      / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) AS h,
-    n_a, n_b
-  FROM cum CROSS JOIN tot
-), terms AS (
-  SELECT n_a, n_b,
-    CASE WHEN h * (1.0 - h) > 0 THEN
-      CAST(floor(CAST(ca + cb AS DOUBLE) * (fa - h) * (fa - h)
-                 / (h * (1.0 - h)) * 1e9) AS DECIMAL(38,0))
-    END AS a_fp
-  FROM norm
-), folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, SUM(a_fp) AS a_fp FROM terms
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round(CAST(n_a AS DOUBLE) / CAST(n_b AS DOUBLE)
-        * ({_ddw('a_fp')} / 1e9), 6) AS ad_stat
-FROM folded
-"""
-
-_ORACLES["cliffs_delta_price_returnflag"] = f"""
-WITH {_PRICE_FLAG_PC},
-sums AS (
-  SELECT SUM(ca) AS n_a, SUM(cb) AS n_b,
-    SUM(CAST(CAST(ca AS DECIMAL(19,0)) * CAST(cum_b - cb AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS n_gt,
-    SUM(CAST(CAST(cb AS DECIMAL(19,0)) * CAST(cum_a - ca AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS n_lt
-  FROM cum
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CAST(n_gt AS BIGINT) AS n_gt, CAST(n_lt AS BIGINT) AS n_lt,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(({_ddw('n_gt')} - {_ddw('n_lt')})
-          / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-  END AS cliffs_delta
-FROM sums
-"""
-
-_WSR_N = "CAST(n AS DOUBLE)"
-_WSR_MEAN = f"({_WSR_N} * ({_WSR_N} + 1.0) / 4.0)"
-_WSR_VAR = (
-    f"({_WSR_N} * ({_WSR_N} + 1.0) * (2.0 * {_WSR_N} + 1.0) / 24.0"
-    f" - {_ddw('ties3')} / 48.0)"
-)
-
-_ORACLES["wilcoxon_signed_user_value"] = f"""
-WITH ranked AS (
-  -- explicit half-up integer cents (see q_wilcoxon_signed_user_value)
-  SELECT user_id,
-    CAST(CASE WHEN value < 0 THEN -1.0 ELSE 1.0 END
-         * floor(abs(CAST(value AS DOUBLE)) * 100.0 + 0.5) AS BIGINT) AS v,
-    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-    count(*) OVER (PARTITION BY user_id) AS cnt
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-), pairs AS (
-  SELECT user_id,
-    max(CASE WHEN rn = 1 THEN v END) AS vf,
-    max(CASE WHEN rn = cnt THEN v END) AS vl
-  FROM ranked GROUP BY user_id
-), d0 AS (
-  SELECT vl - vf AS d FROM pairs WHERE vl - vf <> 0
-), vc AS (
-  SELECT abs(d) AS a, count(*) AS c,
-    SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS cpos
-  FROM d0 GROUP BY 1
-), cum AS (
-  SELECT a, c, cpos,
-    SUM(c) OVER (ORDER BY a ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), sums AS (
-  SELECT SUM(c) AS n,
-    SUM(CAST(CAST(cpos AS DECIMAL(19,0))
-             * (2 * CAST(cum AS DECIMAL(19,0)) - CAST(c AS DECIMAL(19,0)) + 1)
-             AS DECIMAL(38,0))) AS w2,
-    SUM(CAST(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-             * CAST(c AS DECIMAL(19,0)) - c AS DECIMAL(38,0))) AS ties3
-  FROM cum
-)
-SELECT CAST(n AS BIGINT) AS n_pairs,
-  {_ddw('w2')} / 2.0 AS w_plus,
-  CASE WHEN {_WSR_VAR} > 0 THEN
-    round(({_ddw('w2')} / 2.0 - {_WSR_MEAN}) / sqrt({_WSR_VAR}), 6)
-  END AS z_score
-FROM sums
-"""
-
-_ORACLES["cusum_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-tot AS (SELECT count(*) AS t_days, SUM(y) AS total FROM daily),
-cum AS (
-  SELECT day, t_days,
-    CAST(t_days AS DECIMAL(10,0))
-      * CAST(SUM(y) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-             AS DECIMAL(27,2))
-    - CAST(row_number() OVER (ORDER BY day) AS DECIMAL(10,0))
-      * CAST(total AS DECIMAL(27,2)) AS s
-  FROM daily CROSS JOIN tot
-), pick AS (
-  SELECT t_days AS n_days, abs(s) AS a, day,
-    row_number() OVER (ORDER BY abs(s) DESC, day ASC) AS rk
-  FROM cum
-)
-SELECT CAST(n_days AS BIGINT) AS n_days, CAST(day AS BIGINT) AS change_day,
-  round({_dd('a')} / CAST(n_days AS DOUBLE), 4) AS cusum_max
-FROM pick WHERE rk = 1
-"""
-
-_ORACLES["odds_ratio_doc_flags"] = """
-WITH f AS (
-  SELECT (n_chars >= 300) AS fa, (instr(lower(text), 'the') > 0) AS fb
-  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL
-), cells AS (
-  SELECT
-    SUM(CASE WHEN fa AND fb THEN 1 ELSE 0 END) AS n_11,
-    SUM(CASE WHEN fa AND NOT fb THEN 1 ELSE 0 END) AS n_10,
-    SUM(CASE WHEN NOT fa AND fb THEN 1 ELSE 0 END) AS n_01,
-    SUM(CASE WHEN NOT fa AND NOT fb THEN 1 ELSE 0 END) AS n_00
-  FROM f
-)
-SELECT CAST(n_11 AS BIGINT) AS n_11, CAST(n_10 AS BIGINT) AS n_10,
-  CAST(n_01 AS BIGINT) AS n_01, CAST(n_00 AS BIGINT) AS n_00,
-  CASE WHEN n_11 > 0 AND n_10 > 0 AND n_01 > 0 AND n_00 > 0 THEN
-    round(CAST(n_11 AS DOUBLE) * CAST(n_00 AS DOUBLE)
-          / (CAST(n_10 AS DOUBLE) * CAST(n_01 AS DOUBLE)), 6)
-  END AS odds_ratio,
-  CASE WHEN n_11 > 0 AND n_10 > 0 AND n_01 > 0 AND n_00 > 0 THEN
-    round(exp(ln(CAST(n_11 AS DOUBLE) * CAST(n_00 AS DOUBLE)
-                 / (CAST(n_10 AS DOUBLE) * CAST(n_01 AS DOUBLE)))
-              - 1.959964 * sqrt(1.0 / CAST(n_11 AS DOUBLE)
-                                + 1.0 / CAST(n_10 AS DOUBLE)
-                                + 1.0 / CAST(n_01 AS DOUBLE)
-                                + 1.0 / CAST(n_00 AS DOUBLE))), 6)
-  END AS ci_low,
-  CASE WHEN n_11 > 0 AND n_10 > 0 AND n_01 > 0 AND n_00 > 0 THEN
-    round(exp(ln(CAST(n_11 AS DOUBLE) * CAST(n_00 AS DOUBLE)
-                 / (CAST(n_10 AS DOUBLE) * CAST(n_01 AS DOUBLE)))
-              + 1.959964 * sqrt(1.0 / CAST(n_11 AS DOUBLE)
-                                + 1.0 / CAST(n_10 AS DOUBLE)
-                                + 1.0 / CAST(n_01 AS DOUBLE)
-                                + 1.0 / CAST(n_00 AS DOUBLE))), 6)
-  END AS ci_high
-FROM cells
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-6 wave 7: regression/normality diagnostics + portmanteau test
-
-
-def q_jarque_bera_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jarque-Bera normality screen of extended price from exact raw
-    moments (operators/hypotests.py:jarque_bera)."""
-    from breweries_etl_spark.operators.hypotests import jarque_bera
-
-    return jarque_bera(load_table(spark, sf_dir, "lineitem"), "l_extendedprice")
-
-
-def q_breusch_pagan_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breusch-Pagan heteroscedasticity test for price ~ quantity
-    (operators/hypotests.py:breusch_pagan)."""
-    from breweries_etl_spark.operators.hypotests import breusch_pagan
-
-    return breusch_pagan(
-        load_table(spark, sf_dir, "lineitem"), "l_quantity", "l_extendedprice"
-    )
-
-
-def q_cooks_distance_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 most influential lineitems of the price ~ quantity OLS by
-    Cook's distance (operators/hypotests.py:cooks_distance_top)."""
-    from breweries_etl_spark.operators.hypotests import cooks_distance_top
-
-    return cooks_distance_top(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_quantity",
-        "l_extendedprice",
-        ["l_orderkey", "l_linenumber"],
-        k=10,
-    )
-
-
-def q_ljung_box_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ljung-Box portmanteau autocorrelation test of the daily
-    event-value series, lags 1..7
-    (operators/temporal.py:ljung_box_daily)."""
-    from breweries_etl_spark.operators.temporal import ljung_box_daily
-
-    return ljung_box_daily(load_events(spark, sf_dir))
-
-
-_JB_BASE = """
-base AS MATERIALIZED (
-  -- explicit half-up cent quantization (sign * floor(|v|*100 + 0.5)):
-  -- a bare DECIMAL(12,2) cast rounds negative half-cent ties
-  -- differently in Spark vs DuckDB; 104857600 = 100 * 2^20
-  SELECT (CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END
-          * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5))
-         / 104857600.0 AS w
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-), m AS (
-  SELECT count(*) AS n,
-    SUM(CAST(floor(w * 1e12) AS DECIMAL(38,0))) AS s1,
-    SUM(CAST(floor(w * w * 1e14) AS DECIMAL(38,0))) AS s2,
-    SUM(CAST(floor(w * w * w * 1e15) AS DECIMAL(38,0))) AS s3,
-    SUM(CAST(floor(w * w * w * w * 1e16) AS DECIMAL(38,0))) AS s4
-  FROM base
-)"""
-
-_ORACLES["jarque_bera_price"] = f"""
-WITH {_JB_BASE},
-d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddw('s1')} / 1e12 AS s1d, {_ddw('s2')} / 1e14 AS s2d,
-    {_ddw('s3')} / 1e15 AS s3d, {_ddw('s4')} / 1e16 AS s4d
-  FROM m
-), c AS (SELECT *, s1d / nd AS mu FROM d),
-cm AS (
-  SELECT n, nd,
-    s2d / nd - mu * mu AS m2,
-    s3d / nd - 3.0 * mu * (s2d / nd) + 2.0 * mu * mu * mu AS m3,
-    s4d / nd - 4.0 * mu * (s3d / nd) + 6.0 * mu * mu * (s2d / nd)
-      - 3.0 * mu * mu * mu * mu AS m4
-  FROM c
-), sk AS (
-  SELECT n, nd, m2,
-    m3 / pow(m2, 1.5) AS skew,
-    m4 / (m2 * m2) - 3.0 AS kurt
-  FROM cm
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN m2 > 0 THEN round(skew, 6) END AS skewness,
-  CASE WHEN m2 > 0 THEN round(kurt, 6) END AS kurtosis_excess,
-  CASE WHEN m2 > 0 THEN
-    round(nd / 6.0 * (skew * skew + kurt * kurt / 4.0), 4)
-  END AS jb_stat
-FROM sk
-"""
-
-_ORACLES["breusch_pagan_price_qty"] = f"""
-WITH base AS MATERIALIZED (
-  SELECT CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(12,2)) AS x,
-    CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(12,2)) AS y
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-), m AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x AS DECIMAL(38,2))) AS sx,
-    SUM(CAST(y AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(x * x AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(x * y AS DECIMAL(38,4))) AS sxy
-  FROM base
-), d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd, {_dd('sx')} AS sxd, {_dd('sy')} AS syd,
-    {_dd('sxx')} AS sxxd, {_dd('sxy')} AS sxyd
-  FROM m
-), fit AS (
-  SELECT *, (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd) AS b FROM d
-), fit2 AS (SELECT *, (syd - b * sxd) / nd AS a FROM fit),
-g0 AS (
-  SELECT x, n, nd, sxd, sxxd, b,
-    (floor((CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))) * 100.0)
-     / 131072.0)
-    * (floor((CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))) * 100.0)
-       / 131072.0) AS g
-  FROM base CROSS JOIN fit2
-), aux AS (
-  SELECT max(n) AS n, max(nd) AS nd, max(sxd) AS sxd, max(sxxd) AS sxxd,
-    max(b) AS b,
-    SUM(CAST(floor(g * 1e8) AS DECIMAL(38,0))) AS sg,
-    SUM(CAST(floor(g * g * 1e4) AS DECIMAL(38,0))) AS sgg,
-    SUM(CAST(floor(CAST(x AS DOUBLE) * g * 1e6) AS DECIMAL(38,0))) AS sxg
-  FROM g0
-), cd AS (
-  SELECT n, nd, b,
-    nd * sxxd - sxd * sxd AS sxx_c,
-    nd * ({_ddw('sgg')} / 1e4) - ({_ddw('sg')} / 1e8) * ({_ddw('sg')} / 1e8)
-      AS sgg_c,
-    nd * ({_ddw('sxg')} / 1e6) - sxd * ({_ddw('sg')} / 1e8) AS sxg_c
-  FROM aux
-)
-SELECT CAST(n AS BIGINT) AS n, round(b, 6) AS slope,
-  CASE WHEN sxx_c > 0 AND sgg_c > 0 THEN
-    round(sxg_c * sxg_c / (sxx_c * sgg_c), 6)
-  END AS r2_aux,
-  CASE WHEN sxx_c > 0 AND sgg_c > 0 THEN
-    round(nd * (sxg_c * sxg_c / (sxx_c * sgg_c)), 4)
-  END AS lm_stat
-FROM cd
-"""
-
-_ORACLES["cooks_distance_price_qty"] = f"""
-WITH base AS MATERIALIZED (
-  SELECT CAST((CASE WHEN l_quantity < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_quantity AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(12,2)) AS x,
-    CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(12,2)) AS y,
-    l_orderkey, l_linenumber
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-), m AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x AS DECIMAL(38,2))) AS sx,
-    SUM(CAST(y AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(x * x AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(x * y AS DECIMAL(38,4))) AS sxy
-  FROM base
-), d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd, {_dd('sx')} AS sxd, {_dd('sy')} AS syd,
-    {_dd('sxx')} AS sxxd, {_dd('sxy')} AS sxyd
-  FROM m
-), fit AS (
-  SELECT *, (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd) AS b FROM d
-), fit2 AS (SELECT *, (syd - b * sxd) / nd AS a FROM fit),
-sse AS (
-  SELECT SUM(CAST(floor(
-    (CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE)))
-    * (CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))) * 1e4)
-    AS DECIMAL(38,0))) AS sse_fp
-  FROM base CROSS JOIN fit2
-), scored AS (
-  SELECT l_orderkey, l_linenumber,
-    round(
-      (CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE)))
-      * (CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE)))
-      * (1.0 / nd + (CAST(x AS DOUBLE) - sxd / nd) * (CAST(x AS DOUBLE) - sxd / nd)
-         / ((nd * sxxd - sxd * sxd) / nd))
-      / (2.0 * (CAST(sse_fp AS DOUBLE) / 1e4 / (nd - 2.0))
-         * (1.0 - (1.0 / nd + (CAST(x AS DOUBLE) - sxd / nd) * (CAST(x AS DOUBLE) - sxd / nd)
-                   / ((nd * sxxd - sxd * sxd) / nd)))
-         * (1.0 - (1.0 / nd + (CAST(x AS DOUBLE) - sxd / nd) * (CAST(x AS DOUBLE) - sxd / nd)
-                   / ((nd * sxxd - sxd * sxd) / nd)))), 6) AS cooks_d
-  FROM base CROSS JOIN fit2 CROSS JOIN sse
-)
-SELECT l_orderkey, l_linenumber, cooks_d
-FROM scored
-ORDER BY cooks_d DESC, l_orderkey, l_linenumber
-LIMIT 10
-"""
-
-_ORACLES["ljung_box_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-tot AS (
-  SELECT count(*) AS n,
-    SUM(CAST(y AS DECIMAL(38,2))) AS s,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS q
-  FROM daily
-), lags AS (SELECT unnest(generate_series(1, 7)) AS lag),
-per_lag AS (
-  SELECT l.lag AS lag, count(*) AS n_pairs,
-    SUM(CAST(a.y * b.y AS DECIMAL(38,4))) AS p,
-    SUM(CAST(a.y AS DECIMAL(38,2))) AS a,
-    SUM(CAST(b.y AS DECIMAL(38,2))) AS b
-  FROM daily a CROSS JOIN lags l JOIN daily b ON b.day = a.day + l.lag
-  GROUP BY 1
-), dd AS (
-  SELECT lag, CAST(n_pairs AS DOUBLE) AS npd, CAST(n AS DOUBLE) AS nd, n,
-    {_dd('p')} AS pd, {_dd('a')} AS ad, {_dd('b')} AS bd,
-    {_dd('s')} AS sd, {_dd('q')} AS qd
-  FROM per_lag CROSS JOIN tot
-), rhos AS (
-  SELECT lag, n, nd,
-    qd - sd * (sd / nd) AS den,
-    (pd - (sd / nd) * (ad + bd) + npd * (sd / nd) * (sd / nd)) AS num
-  FROM dd
-), folded AS (
-  SELECT max(n) AS n, max(nd) AS nd,
-    max(CASE WHEN den > 0 THEN 1 ELSE 0 END) AS ok,
-    SUM(CASE WHEN den > 0 THEN
-      CAST(floor((num / den) * (num / den) / (nd - CAST(lag AS DOUBLE)) * 1e12)
-           AS DECIMAL(38,0)) END) AS lb_fp
-  FROM rhos
-)
-SELECT CAST(n AS BIGINT) AS n_days, CAST(7 AS BIGINT) AS max_lag,
-  CASE WHEN ok = 1 THEN
-    round(nd * (nd + 2.0) * (CAST(lb_fp AS DOUBLE) / 1e12), 4)
-  END AS lb_stat
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-7 wave: variance/rank/paired tests completion (Bartlett, Friedman,
-# Ansari-Bradley), classifier threshold sweep + Brier decomposition,
-# distributed Poisson bootstrap, daily-series decomposition/changepoint/
-# forecastability, partition modularity + harmonic centrality, embedding
-# isotropy histogram, cross-source fingerprints, PII triage, token budgeting.
-
-
-def q_bartlett_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartlett equal-variance test of price across return flags — the
-    likelihood-ratio member of the levene/brown_forsythe trio
-    (operators/hypotests.py:bartlett_test)."""
-    from breweries_etl_spark.operators.hypotests import bartlett_test
-
-    return bartlett_test(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_friedman_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Friedman paired-rank test of the three order-status counts per
-    customer block (operators/hypotests.py:friedman_3)."""
-    from breweries_etl_spark.operators.hypotests import friedman_3
-
-    o = load_table(spark, sf_dir, "orders")
-    blocks = o.groupBy("o_custkey").agg(
-        F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("xa"),
-        F.sum(F.when(F.col("o_orderstatus") == "O", 1).otherwise(0)).alias("xb"),
-        F.sum(F.when(F.col("o_orderstatus") == "P", 1).otherwise(0)).alias("xc"),
-    )
-    return friedman_3(blocks, "o_custkey", F.col("xa"), F.col("xb"), F.col("xc"))
-
-
-def q_ansari_bradley_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ansari-Bradley dispersion test of price, returned vs other —
-    both-ends rank scores off the prefix-count primitive
-    (operators/hypotests.py:ansari_bradley)."""
-    from breweries_etl_spark.operators.hypotests import ansari_bradley
-
-    return ansari_bradley(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_pr_curve_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision/recall/F1 at price-decile thresholds for finished
-    status — the threshold-sweep companion to roc_auc_order_status
-    (operators/hypotests.py:pr_curve_points)."""
-    from breweries_etl_spark.operators.hypotests import pr_curve_points
-
-    return pr_curve_points(
-        load_table(spark, sf_dir, "orders"),
-        "o_totalprice",
-        F.col("o_orderstatus") == "F",
-    )
-
-
-def q_brier_decomposition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Murphy decomposition of the hashed-linear classifier's Brier
-    score vs the heuristic quality label — same two independent signals
-    as score_calibration_bins (operators/hypotests.py:
-    brier_decomposition)."""
-    from breweries_etl_spark.operators.filtering import classifier_score_expr
-    from breweries_etl_spark.operators.hypotests import brier_decomposition
-    from breweries_etl_spark.operators.text import quality_score_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    return brier_decomposition(
-        docs,
-        classifier_score_expr(F.col("text")),
-        quality_score_expr(F.col("text")) >= F.lit(0.5),
-    )
-
-
-def q_seasonal_weekday_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trend + weekday-effect decomposition with seasonal strength of
-    the daily event-value series
-    (operators/temporal.py:seasonal_decompose_weekday)."""
-    from breweries_etl_spark.operators.temporal import seasonal_decompose_weekday
-
-    return seasonal_decompose_weekday(load_events(spark, sf_dir))
-
-
-def q_lagged_xcorr_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 cross-correlation between daily event count and next-day
-    total value (operators/temporal.py:lagged_xcorr_daily)."""
-    from breweries_etl_spark.operators.temporal import lagged_xcorr_daily
-
-    return lagged_xcorr_daily(load_events(spark, sf_dir))
-
-
-def q_changepoint_binseg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best single change point (binary segmentation SSE split) of the
-    daily event-value series
-    (operators/temporal.py:changepoint_binseg_daily)."""
-    from breweries_etl_spark.operators.temporal import changepoint_binseg_daily
-
-    return changepoint_binseg_daily(load_events(spark, sf_dir))
-
-
-def q_theil_u_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil's U1 naive-forecastability of the daily event-value series
-    (operators/temporal.py:theil_u_daily)."""
-    from breweries_etl_spark.operators.temporal import theil_u_daily
-
-    return theil_u_daily(load_events(spark, sf_dir))
-
-
-def q_graph_modularity_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the NATION partition over the
-    customer-supplier purchase graph — is purchasing nation-assortative
-    (operators/graph.py:partition_modularity)."""
-    from breweries_etl_spark.operators.graph import partition_modularity
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    comm = c.select(
-        (F.col("c_custkey") * 2).alias("node"),
-        F.col("c_nationkey").cast("string").alias("comm"),
-    ).unionAll(
-        s.select(
-            (F.col("s_suppkey") * 2 + 1).alias("node"),
-            F.col("s_nationkey").cast("string").alias("comm"),
-        )
-    )
-    return partition_modularity(edges, comm)
-
-
-def q_graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harmonic centrality of the minimum customer node over the
-    purchase graph — 1/distance fold over the same frontier BFS as
-    graph_bfs_levels (operators/graph.py:harmonic_centrality_from)."""
-    from breweries_etl_spark.operators.graph import harmonic_centrality_from
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    # seed from the materialized edge relation (callable form): the
-    # eager seed aggregate was a SECOND full orders⋈lineitem scan —
-    # the judge-r10 driver-vs-solo gap suspect for this query
-    return harmonic_centrality_from(
-        edges, lambda e: e.agg(F.min("src").alias("node")), max_hops=6
-    )
-
-
-def q_embedding_pair_cosine_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine histogram over consecutive-id embedding pairs — the O(n)
-    isotropy/collapse diagnostic
-    (operators/similarity.py:pair_cosine_histogram)."""
-    from breweries_etl_spark.operators.similarity import pair_cosine_histogram
-
-    return pair_cosine_histogram(load_table(spark, sf_dir, "embeddings"))
-
-
-def q_source_ngram_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise char-trigram cosine between source profiles — the
-    near-duplicate-source screen
-    (operators/text.py:source_char_ngram_cosine)."""
-    from breweries_etl_spark.operators.text import source_char_ngram_cosine
-
-    return source_char_ngram_cosine(load_table(spark, sf_dir, "documents"))
-
-
-def q_pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Email/phone pattern density per ingest source — the redaction
-    triage table (operators/text.py:pii_density_by_source)."""
-    from breweries_etl_spark.operators.text import pii_density_by_source
-
-    return pii_density_by_source(load_table(spark, sf_dir, "documents"))
-
-
-def q_token_budget_mix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sqrt-proportional token-budget allocation across sources with an
-    epoch cap (operators/corpus.py:token_budget_mix)."""
-    from breweries_etl_spark.operators.corpus import token_budget_mix
-
-    return token_budget_mix(load_table(spark, sf_dir, "documents"), 1_000_000)
-
-
-def q_bootstrap_mean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap percentile CI for the mean order price — the
-    Chamandy-style one-pass distributed bootstrap, hash-deterministic
-    (operators/sampling.py:bootstrap_mean_ci)."""
-    from breweries_etl_spark.operators.sampling import bootstrap_mean_ci
-
-    return bootstrap_mean_ci(
-        load_table(spark, sf_dir, "orders"), "o_orderkey", "o_totalprice"
-    )
-
-
-_BTL_VARG = (
-    f"(({_ddwf('q_g')} - {_ddwf('s_g')} * {_ddwf('s_g')}"
-    f" / CAST(n_g AS DOUBLE)) / (CAST(n_g AS DOUBLE) - 1.0))"
-)
-
-_ORACLES["bartlett_price_flag"] = f"""
-WITH per_g AS (
-  SELECT l_returnflag AS g, count(*) AS n_g,
-    SUM(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))) AS s_g,
-    SUM(CAST(CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2))
-             * CAST((CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0 AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS q_g
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-  GROUP BY 1
-), s AS (
-  SELECT SUM(n_g) AS n, count(*) AS k,
-    SUM(CASE WHEN n_g < 2 OR NOT ({_BTL_VARG} > 0) THEN 1 ELSE 0 END) AS n_bad,
-    SUM(CASE WHEN n_g >= 2 AND {_BTL_VARG} > 0 THEN
-      CAST(floor({_BTL_VARG} * (CAST(n_g AS DOUBLE) - 1.0) * 100.0)
-           AS DECIMAL(38,0)) END) AS ss,
-    SUM(CASE WHEN n_g >= 2 AND {_BTL_VARG} > 0 THEN
-      CAST(CAST(floor(ln({_BTL_VARG}) * 1e12) AS DECIMAL(38,0))
-           * CAST(n_g - 1 AS DECIMAL(19,0)) AS DECIMAL(38,0)) END) AS lnsum,
-    SUM(CASE WHEN n_g >= 2 AND {_BTL_VARG} > 0 THEN
-      CAST(floor(1e12 / (CAST(n_g AS DOUBLE) - 1.0)) AS DECIMAL(38,0))
-      END) AS invsum
-  FROM per_g
-), d AS (
-  SELECT n, k, n_bad,
-    (({_ddw('ss')} / 100.0) / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE))) AS sp2,
-    {_ddw('lnsum')} / 1e12 AS lns,
-    {_ddw('invsum')} / 1e12 AS invs
-  FROM s
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN n_bad = 0 AND k > 1 AND sp2 > 0 THEN round(sp2, 6) END
-    AS pooled_var,
-  CASE WHEN n_bad = 0 AND k > 1 AND sp2 > 0 THEN
-    round(((CAST(n AS DOUBLE) - CAST(k AS DOUBLE)) * ln(sp2) - lns)
-          / (1.0 + (invs - 1.0 / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-                   / (3.0 * (CAST(k AS DOUBLE) - 1.0))), 6)
-  END AS bartlett_stat
-FROM d
-"""
-
-_FRD_S2 = _ddw(
-    "CAST(CAST(sa AS DECIMAL(19,0)) * CAST(sa AS DECIMAL(19,0))"
-    " AS DECIMAL(38,0))"
-    " + CAST(CAST(sb AS DECIMAL(19,0)) * CAST(sb AS DECIMAL(19,0))"
-    " AS DECIMAL(38,0))"
-    " + CAST(CAST(sc AS DECIMAL(19,0)) * CAST(sc AS DECIMAL(19,0))"
-    " AS DECIMAL(38,0))"
-)
-_FRD_CHI2 = (
-    f"({_FRD_S2} / (4.0 * CAST(n AS DOUBLE)) - 12.0 * CAST(n AS DOUBLE))"
-)
-
-_ORACLES["friedman_order_status"] = f"""
-WITH blocks AS (
-  SELECT o_custkey,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS xa,
-    SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS xb,
-    SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS xc
-  FROM orders GROUP BY o_custkey
-), r AS (
-  SELECT
-    2 + 2 * (CASE WHEN xb < xa THEN 1 ELSE 0 END
-             + CASE WHEN xc < xa THEN 1 ELSE 0 END)
-      + (CASE WHEN xb = xa THEN 1 ELSE 0 END
-         + CASE WHEN xc = xa THEN 1 ELSE 0 END) AS ra,
-    2 + 2 * (CASE WHEN xa < xb THEN 1 ELSE 0 END
-             + CASE WHEN xc < xb THEN 1 ELSE 0 END)
-      + (CASE WHEN xa = xb THEN 1 ELSE 0 END
-         + CASE WHEN xc = xb THEN 1 ELSE 0 END) AS rb,
-    2 + 2 * (CASE WHEN xa < xc THEN 1 ELSE 0 END
-             + CASE WHEN xb < xc THEN 1 ELSE 0 END)
-      + (CASE WHEN xa = xc THEN 1 ELSE 0 END
-         + CASE WHEN xb = xc THEN 1 ELSE 0 END) AS rc
-  FROM blocks
-), s AS (
-  SELECT count(*) AS n,
-    SUM(CAST(ra AS DECIMAL(19,0))) AS sa,
-    SUM(CAST(rb AS DECIMAL(19,0))) AS sb,
-    SUM(CAST(rc AS DECIMAL(19,0))) AS sc
-  FROM r
-)
-SELECT CAST(n AS BIGINT) AS n_blocks,
-  CAST(sa AS BIGINT) AS rank2_sum_a,
-  CAST(sb AS BIGINT) AS rank2_sum_b,
-  CAST(sc AS BIGINT) AS rank2_sum_c,
-  CASE WHEN n > 0 THEN
-    round({_FRD_CHI2}, 6)
-  END AS friedman_chi2,
-  CASE WHEN n > 0 THEN
-    round({_FRD_CHI2} / (2.0 * CAST(n AS DOUBLE)), 6)
-  END AS kendalls_w
-FROM s
-"""
-
-_AB_S2V = (
-    "(CAST((lo + b1) * len1 AS DECIMAL(38,0))"
-    " + CAST(2 * np1 * len2 AS DECIMAL(38,0))"
-    " - CAST((a2 + hi) * len2 AS DECIMAL(38,0)))"
-)
-
-_ORACLES["ansari_bradley_price_flag"] = f"""
-WITH vc AS MATERIALIZED (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (
-  SELECT SUM(ca) AS n_a, SUM(cb) AS n_b, SUM(ca + cb) AS nn FROM vc
-), geom AS (
-  SELECT ca, cb, n_a, n_b, nn,
-    CAST(ca + cb AS DECIMAL(19,0)) AS c,
-    CAST(cum AS DECIMAL(19,0)) - CAST(ca + cb AS DECIMAL(19,0)) + 1 AS lo,
-    CAST(cum AS DECIMAL(19,0)) AS hi,
-    CAST((nn + 1) // 2 AS DECIMAL(19,0)) AS t,
-    CAST(nn + 1 AS DECIMAL(19,0)) AS np1
-  FROM cum CROSS JOIN tot
-), series AS (
-  SELECT ca, n_a, n_b, nn, c, lo, hi, np1,
-    least(hi, t) AS b1,
-    greatest(least(hi, t) - lo + 1, CAST(0 AS DECIMAL(19,0))) AS len1,
-    greatest(lo, t + 1) AS a2,
-    greatest(hi - greatest(lo, t + 1) + 1, CAST(0 AS DECIMAL(19,0))) AS len2
-  FROM geom
-), folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, max(nn) AS nn,
-    SUM(CAST(floor(1e6 * CAST(ca AS DOUBLE)
-                   * (({_ddw(_AB_S2V)} / 2.0) / CAST(c AS DOUBLE)))
-             AS DECIMAL(38,0))) AS w_fp,
-    SUM({_AB_S2V}) AS s2_sum,
-    SUM(CAST(floor(1e6 * ({_ddw(_AB_S2V)} / 2.0)
-                   * (({_ddw(_AB_S2V)} / 2.0) / CAST(c AS DOUBLE)))
-             AS DECIMAL(38,0))) AS aa_fp
-  FROM series
-), d AS (
-  SELECT n_a, n_b, nn,
-    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-    CAST(nn AS DOUBLE) AS n,
-    {_ddw('w_fp')} / 1e6 AS w,
-    {_ddw('s2_sum')} / 2.0 AS sa,
-    {_ddw('aa_fp')} / 1e6 AS saa
-  FROM folded
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round(w, 6) AS ab_stat,
-  CASE WHEN n_a > 0 AND n_b > 0 AND
-    na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0)) > 0 THEN
-    round((w - na * (sa / n))
-          / sqrt(na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0))), 6)
-  END AS z_score
-FROM d
-"""
-
-_ORACLES["pr_curve_order_status"] = """
-WITH vc AS MATERIALIZED (
-  SELECT o_totalprice AS v,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS cb
-  FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb, ca + cb AS c,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (SELECT SUM(ca) AS n_pos, SUM(ca + cb) AS n FROM vc),
-grid AS (
-  SELECT k, v, ca, cum_a, c, cum, n_pos, n
-  FROM cum CROSS JOIN tot
-  CROSS JOIN (SELECT unnest(range(1, 10)) AS k)
-  WHERE 10 * cum >= k * n AND 10 * (cum - c) < k * n
-)
-SELECT CAST(k AS BIGINT) AS decile,
-  CAST(v AS DOUBLE) AS threshold,
-  CAST(n - (cum - c) AS BIGINT) AS n_pred_pos,
-  CAST(n_pos - (cum_a - ca) AS BIGINT) AS tp,
-  round(CAST(n_pos - (cum_a - ca) AS DOUBLE) / CAST(n - (cum - c) AS DOUBLE),
-        6) AS precision,
-  CASE WHEN n_pos > 0 THEN
-    round(CAST(n_pos - (cum_a - ca) AS DOUBLE) / CAST(n_pos AS DOUBLE), 6)
-  END AS recall,
-  CASE WHEN n_pos > 0 AND
-    CAST(n_pos - (cum_a - ca) AS DOUBLE) / CAST(n - (cum - c) AS DOUBLE)
-    + CAST(n_pos - (cum_a - ca) AS DOUBLE) / CAST(n_pos AS DOUBLE) > 0 THEN
-    round(2.0 * (CAST(n_pos - (cum_a - ca) AS DOUBLE)
-                 / CAST(n - (cum - c) AS DOUBLE))
-              * (CAST(n_pos - (cum_a - ca) AS DOUBLE) / CAST(n_pos AS DOUBLE))
-          / (CAST(n_pos - (cum_a - ca) AS DOUBLE)
-             / CAST(n - (cum - c) AS DOUBLE)
-             + CAST(n_pos - (cum_a - ca) AS DOUBLE) / CAST(n_pos AS DOUBLE)),
-          6)
-  END AS f1
-FROM grid
-"""
-
-_ORACLES["brier_decomposition_docs"] = f"""
-WITH scored AS (
-  SELECT {_CLF_SCORE_SQL} AS p,
-    CASE WHEN {_HEUR_QUALITY_SQL} >= 0.5 THEN 1 ELSE 0 END AS y
-  FROM documents
-), rows_ AS (
-  SELECT least(CAST(9 AS BIGINT),
-               CAST(round(p * 1000000.0) AS BIGINT) // 100000) AS bin,
-    p, y,
-    CAST(floor((p - y) * (p - y) * 1e8) AS DECIMAL(38,0)) AS bs_fp
-  FROM scored
-), per_bin AS (
-  SELECT bin, count(*) AS n_b,
-    SUM(CAST(round(p, 6) AS DECIMAL(18,6))) AS p_sum,
-    SUM(y) AS pos_b,
-    SUM(bs_fp) AS bs_fp
-  FROM rows_ GROUP BY bin
-), tot AS (SELECT SUM(n_b) AS n, SUM(pos_b) AS pos FROM per_bin),
-folded AS (
-  SELECT max(n) AS n, max(pos) AS pos, SUM(bs_fp) AS bs_fp,
-    SUM(CAST(floor(CAST(n_b AS DOUBLE)
-      * ({_dd('p_sum')} / CAST(n_b AS DOUBLE)
-         - CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-      * ({_dd('p_sum')} / CAST(n_b AS DOUBLE)
-         - CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-      * 1e8) AS DECIMAL(38,0))) AS rel_fp,
-    SUM(CAST(floor(CAST(n_b AS DOUBLE)
-      * (CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-         - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE))
-      * (CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-         - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE))
-      * 1e8) AS DECIMAL(38,0))) AS res_fp
-  FROM per_bin CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n,
-  round({_ddw('bs_fp')} / 1e8 / CAST(n AS DOUBLE), 6) AS brier,
-  round({_ddw('rel_fp')} / 1e8 / CAST(n AS DOUBLE), 6) AS reliability,
-  round({_ddw('res_fp')} / 1e8 / CAST(n AS DOUBLE), 6) AS resolution,
-  round((CAST(pos AS DOUBLE) / CAST(n AS DOUBLE))
-        * (1.0 - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS uncertainty
-FROM folded
-"""
-
-_SW_E = (
-    f"(CAST(y AS DOUBLE) - ({_DW_ICEPT} + {_DW_SLOPE} * CAST(x AS DOUBLE)))"
-)
-
-_SW_EFFECT_COLS = ", ".join(
-    "max(CASE WHEN dow = {w} THEN round({e} / 1e6"
-    " / CAST(n_w AS DOUBLE), 6) END) AS effect_{w}".format(
-        w=w, e=_ddw("se_fp")
-    )
-    for w in range(7)
-)
-
-_ORACLES["seasonal_weekday_value"] = f"""
-WITH {_DAILY_EVENTS},
-mn AS (SELECT min(day) AS d0 FROM daily),
-based AS (
-  SELECT day, y, CAST(day - d0 AS BIGINT) AS x,
-    CAST((day + 3) % 7 AS INTEGER) AS dow
-  FROM daily CROSS JOIN mn
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-    SUM(CAST(y AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-    SUM(CAST(CAST(y AS DECIMAL(24,2)) * x AS DECIMAL(38,4))) AS sxy
-  FROM based
-), resid AS MATERIALIZED (
-  SELECT dow,
-    CAST(floor({_SW_E} * 1e6) AS DECIMAL(38,0)) AS e_fp,
-    {_DW_SLOPE} AS b
-  FROM based CROSS JOIN mom
-), per_dow AS MATERIALIZED (
-  SELECT dow, count(*) AS n_w, SUM(e_fp) AS se_fp, max(b) AS b
-  FROM resid GROUP BY dow
-), effects AS (
-  SELECT SUM(n_w) AS n_days, round(max(b), 6) AS slope,
-    {_SW_EFFECT_COLS}
-  FROM per_dow
-), de AS (
-  SELECT {_ddw('r.e_fp')} / 1e6 AS ev,
-    {_ddw('r.e_fp')} / 1e6
-      - ({_ddw('p.se_fp')} / 1e6 / CAST(p.n_w AS DOUBLE)) AS dv
-  FROM resid r JOIN per_dow p ON r.dow = p.dow
-), var_fold AS (
-  SELECT count(*) AS nn,
-    SUM(CAST(floor(ev * 1e6) AS DECIMAL(38,0))) AS s_e,
-    SUM(CAST(floor(ev * ev * 1e6) AS DECIMAL(38,0))) AS q_e,
-    SUM(CAST(floor(dv * 1e6) AS DECIMAL(38,0))) AS s_d,
-    SUM(CAST(floor(dv * dv * 1e6) AS DECIMAL(38,0))) AS q_d
-  FROM de
-), strength AS (
-  SELECT CASE WHEN
-      ({_ddw('q_e')} / 1e6 / CAST(nn AS DOUBLE)
-       - ({_ddw('s_e')} / 1e6 / CAST(nn AS DOUBLE))
-         * ({_ddw('s_e')} / 1e6 / CAST(nn AS DOUBLE))) > 0 THEN
-    round(greatest(0.0, 1.0 -
-      ({_ddw('q_d')} / 1e6 / CAST(nn AS DOUBLE)
-       - ({_ddw('s_d')} / 1e6 / CAST(nn AS DOUBLE))
-         * ({_ddw('s_d')} / 1e6 / CAST(nn AS DOUBLE)))
-      / ({_ddw('q_e')} / 1e6 / CAST(nn AS DOUBLE)
-         - ({_ddw('s_e')} / 1e6 / CAST(nn AS DOUBLE))
-           * ({_ddw('s_e')} / 1e6 / CAST(nn AS DOUBLE)))), 6)
-    END AS seasonal_strength
-  FROM var_fold
-)
-SELECT CAST(n_days AS BIGINT) AS n_days, slope,
-  effect_0, effect_1, effect_2, effect_3, effect_4, effect_5, effect_6,
-  seasonal_strength
-FROM effects CROSS JOIN strength
-"""
-
-_ORACLES["lagged_xcorr_daily_value"] = f"""
-WITH daily AS MATERIALIZED (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y, count(*) AS c
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), pairs AS (
-  SELECT CAST(a.y AS DECIMAL(18,2)) AS y, b.c AS cp
-  FROM daily a JOIN daily b ON a.day = b.day + 1
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(y AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(cp AS DECIMAL(38,0))) AS sc,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS syy,
-    SUM(CAST(CAST(cp AS DECIMAL(19,0)) * CAST(cp AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS scc,
-    SUM(CAST(y * CAST(cp AS DECIMAL(19,0)) AS DECIMAL(38,2))) AS syc
-  FROM pairs
-), d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddwf('sy')} AS syd, {_ddw('sc')} AS scd,
-    {_ddwf('syy')} AS syyd, {_ddw('scc')} AS sccd,
-    {_ddwf('syc')} AS sycd
-  FROM mom
-)
-SELECT CAST(n AS BIGINT) AS n_pairs, CAST(1 AS BIGINT) AS lag,
-  CASE WHEN (nd * syyd - syd * syd) > 0 AND (nd * sccd - scd * scd) > 0 THEN
-    round((nd * sycd - syd * scd)
-          / sqrt((nd * syyd - syd * syd) * (nd * sccd - scd * scd)), 6)
-  END AS xcorr
-FROM d
-"""
-
-_ORACLES["changepoint_binseg_value"] = f"""
-WITH {_DAILY_EVENTS},
-pre AS (
-  SELECT day,
-    count(*) OVER w AS nl,
-    SUM(CAST(CAST(y AS DECIMAL(18,2)) AS DECIMAL(38,2))) OVER w AS sl,
-    SUM(CAST(CAST(y AS DECIMAL(18,2)) * CAST(y AS DECIMAL(18,2))
-             AS DECIMAL(38,4))) OVER w AS ql
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS UNBOUNDED PRECEDING)
-), tot AS (
-  SELECT count(*) AS n,
-    SUM(CAST(CAST(y AS DECIMAL(18,2)) AS DECIMAL(38,2))) AS s,
-    SUM(CAST(CAST(y AS DECIMAL(18,2)) * CAST(y AS DECIMAL(18,2))
-             AS DECIMAL(38,4))) AS q
-  FROM daily
-), scored AS (
-  SELECT day, n, s, q,
-    ({_ddwf('ql')} - {_ddwf('sl')} * {_ddwf('sl')} / CAST(nl AS DOUBLE))
-    + (({_ddwf('q')} - {_ddwf('ql')})
-       - ({_ddwf('s')} - {_ddwf('sl')}) * ({_ddwf('s')} - {_ddwf('sl')})
-         / CAST(n - nl AS DOUBLE)) AS sse
-  FROM pre CROSS JOIN tot WHERE nl < n
-), ranked AS (
-  SELECT n, s, q, day,
-    CAST(floor(sse * 100.0) AS DECIMAL(38,0)) AS sse_fp,
-    row_number() OVER (
-      ORDER BY CAST(floor(sse * 100.0) AS DECIMAL(38,0)), day
-    ) AS rn
-  FROM scored
-), best AS (
-  SELECT n, s, q, day, sse_fp FROM ranked WHERE rn = 1
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CAST(day AS BIGINT) AS split_day,
-  floor(({_ddwf('q')} - {_ddwf('s')} * {_ddwf('s')} / CAST(n AS DOUBLE))
-        * 100.0) / 100.0 AS sse_total,
-  {_ddw('sse_fp')} / 100.0 AS sse_split,
-  floor((({_ddwf('q')} - {_ddwf('s')} * {_ddwf('s')} / CAST(n AS DOUBLE))
-         - {_ddw('sse_fp')} / 100.0) * 100.0) / 100.0 AS gain
-FROM best
-"""
-
-_ORACLES["theil_u_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-pairs AS (
-  SELECT CAST(a.y AS DECIMAL(18,2)) AS y, CAST(b.y AS DECIMAL(18,2)) AS yp
-  FROM daily a JOIN daily b ON a.day = b.day + 1
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(CAST(y - yp AS DECIMAL(18,2)) * CAST(y - yp AS DECIMAL(18,2))
-             AS DECIMAL(38,4))) AS sdd,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS syy,
-    SUM(CAST(yp * yp AS DECIMAL(38,4))) AS spp
-  FROM pairs
-)
-SELECT CAST(n AS BIGINT) AS n_pairs,
-  CASE WHEN sqrt({_ddwf('syy')} / CAST(n AS DOUBLE))
-            + sqrt({_ddwf('spp')} / CAST(n AS DOUBLE)) > 0 THEN
-    round(sqrt({_ddwf('sdd')} / CAST(n AS DOUBLE))
-          / (sqrt({_ddwf('syy')} / CAST(n AS DOUBLE))
-             + sqrt({_ddwf('spp')} / CAST(n AS DOUBLE))), 6)
-  END AS theil_u
-FROM mom
-"""
-
-_ORACLES["graph_modularity_nation"] = f"""
-WITH e0 AS (
-  SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), canon AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM e0 WHERE src <> dst
-), comm AS (
-  SELECT CAST(c_custkey * 2 AS BIGINT) AS node,
-         CAST(c_nationkey AS VARCHAR) AS comm FROM customer
-  UNION ALL
-  SELECT CAST(s_suppkey * 2 + 1 AS BIGINT) AS node,
-         CAST(s_nationkey AS VARCHAR) AS comm FROM supplier
-), ends AS (
-  SELECT a AS node FROM canon UNION ALL SELECT b AS node FROM canon
-), deg AS (SELECT node, count(*) AS deg FROM ends GROUP BY node),
-deg_c AS (
-  SELECT coalesce(comm, '__singleton:' || CAST(deg.node AS VARCHAR)) AS c, SUM(deg) AS d_c
-  FROM deg LEFT JOIN comm ON deg.node = comm.node
-  GROUP BY 1
-), within AS (
-  SELECT SUM(CASE WHEN coalesce(ca.comm, '__singleton:' || CAST(canon.a AS VARCHAR))
-                     = coalesce(cb.comm, '__singleton:' || CAST(canon.b AS VARCHAR))
-             THEN 1 ELSE 0 END) AS e_in,
-    count(*) AS m
-  FROM canon
-  LEFT JOIN comm ca ON canon.a = ca.node
-  LEFT JOIN comm cb ON canon.b = cb.node
-), folded AS (
-  SELECT count(*) AS n_comm,
-    SUM(CAST(CAST(d_c AS DECIMAL(19,0)) * CAST(d_c AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS sum_d2
-  FROM deg_c
-), nn AS (SELECT count(*) AS n_nodes FROM deg)
-SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-  CAST(m AS BIGINT) AS n_edges,
-  CAST(n_comm AS BIGINT) AS n_communities,
-  CASE WHEN m > 0 THEN
-    round((4.0 * CAST(m AS DOUBLE) * CAST(e_in AS DOUBLE)
-           - {_ddw('sum_d2')})
-          / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6)
-  END AS modularity
-FROM within CROSS JOIN folded CROSS JOIN nn
-"""
-
-_ORACLES["graph_harmonic_centrality"] = f"""
-WITH RECURSIVE e0 AS (
-  SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), edges AS (
-  SELECT src, dst FROM e0 UNION SELECT dst AS src, src AS dst FROM e0
-), reach AS (
-  SELECT CAST((SELECT min(src) FROM e0) AS BIGINT) AS node, 0 AS level
-  UNION
-  SELECT e.dst AS node, r.level + 1 AS level
-  FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.level < 6
-), dist AS (
-  SELECT node, min(level) AS lvl FROM reach GROUP BY node
-), folded AS (
-  SELECT count(*) AS n_reached, max(lvl) AS max_level,
-    SUM(CAST(1000000000000 // lvl AS DECIMAL(38,0))) AS h_fp
-  FROM dist WHERE lvl > 0
-)
-SELECT CAST(n_reached AS BIGINT) AS n_reached,
-  CAST(max_level AS BIGINT) AS max_level,
-  round({_ddw("coalesce(h_fp, CAST(0 AS DECIMAL(38,0)))")} / 1e12, 6)
-    AS harmonic_centrality
-FROM folded
-"""
-
-_ORACLES["embedding_pair_cosine_hist"] = """
-WITH p AS (
-  SELECT a.vec_id AS i,
-    unnest(a.embedding)::DOUBLE AS x, unnest(b.embedding)::DOUBLE AS y
-  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-), d AS (
-  SELECT i, sum(x*y) AS dp, sum(x*x) AS na, sum(y*y) AS nb
-  FROM p GROUP BY i
-), c AS (
-  SELECT round(dp / sqrt(na * nb), 6) AS cs FROM d
-), binned AS (
-  SELECT least(CAST(19 AS BIGINT),
-               CAST(round((cs + 1.0) * 1000000.0) AS BIGINT) // 100000)
-    AS bin
-  FROM c
-)
-SELECT bin,
-  round(-1.0 + CAST(bin AS DOUBLE) * CAST(0.1 AS DOUBLE), 6) AS lo,
-  round(-1.0 + CAST(bin + 1 AS DOUBLE) * CAST(0.1 AS DOUBLE), 6) AS hi,
-  CAST(count(*) AS BIGINT) AS cnt
-FROM binned GROUP BY bin
-"""
-
-_ORACLES["source_ngram_cosine"] = f"""
-WITH norm AS (
-  SELECT source AS s,
-    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),
-                        ' +', ' ', 'g')) AS t
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-), grams AS (
-  SELECT s, substring(t, i, 3) AS g FROM (
-    SELECT s, t, unnest(range(1, greatest(length(t) - 1, 1))) AS i
-    FROM norm
-  )
-), gc AS MATERIALIZED (
-  SELECT s, g, count(*) AS c FROM grams GROUP BY s, g
-), norms AS (
-  SELECT s,
-    SUM(CAST(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS nrm2,
-    SUM(c) AS n_grams
-  FROM gc GROUP BY s
-), dots AS (
-  SELECT a.s AS sa, b.s AS sb,
-    SUM(CAST(CAST(a.c AS DECIMAL(19,0)) * CAST(b.c AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS dp
-  FROM gc a JOIN gc b ON a.g = b.g AND a.s < b.s
-  GROUP BY a.s, b.s
-)
-SELECT sa AS source_a, sb AS source_b,
-  CAST(na.n_grams AS BIGINT) AS n_grams_a,
-  CAST(nb.n_grams AS BIGINT) AS n_grams_b,
-  round({_ddw('dp')} / sqrt({_ddw('na.nrm2')} * {_ddw('nb.nrm2')}), 6)
-    AS cosine
-FROM dots
-JOIN norms na ON na.s = dots.sa
-JOIN norms nb ON nb.s = dots.sb
-"""
-
-_ORACLES["pii_density_by_source"] = """
-WITH per AS (
-  SELECT source, count(*) AS n_docs,
-    SUM(length(text)) AS n_chars,
-    SUM(len(regexp_extract_all(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))) AS n_emails,
-    SUM(len(regexp_extract_all(text,
-      '\\+?[0-9][0-9()\\- ]{7,}[0-9]'))) AS n_phones
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-  GROUP BY source
-)
-SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST(n_chars AS BIGINT) AS n_chars,
-  CAST(n_emails AS BIGINT) AS n_emails,
-  CAST(n_phones AS BIGINT) AS n_phones,
-  CASE WHEN n_chars > 0 THEN
-    round(CAST(n_emails AS DOUBLE) * 1000.0 / CAST(n_chars AS DOUBLE), 6)
-  END AS emails_per_1k_chars,
-  CASE WHEN n_chars > 0 THEN
-    round(CAST(n_phones AS DOUBLE) * 1000.0 / CAST(n_chars AS DOUBLE), 6)
-  END AS phones_per_1k_chars
-FROM per
-"""
-
-_ORACLES["token_budget_mix_docs"] = f"""
-WITH per AS (
-  SELECT source,
-    SUM(len(regexp_extract_all(text, '[A-Za-z0-9_]+'))) AS n_tokens
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-  GROUP BY source
-), tot AS (
-  SELECT SUM(CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1e6)
-                  AS DECIMAL(38,0))) AS sq_sum
-  FROM per
-), d AS (
-  SELECT source, n_tokens,
-    floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1e6) / {_ddw('sq_sum')} AS share
-  FROM per CROSS JOIN tot
-)
-SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-  CASE WHEN n_tokens > 0 THEN round(share, 6) END AS share,
-  CASE WHEN n_tokens > 0 THEN
-    CAST(floor(least(share * 1000000.0 / CAST(n_tokens AS DOUBLE), 4.0)
-               * CAST(n_tokens AS DOUBLE)) AS BIGINT)
-  END AS alloc_tokens,
-  CASE WHEN n_tokens > 0 THEN
-    round(least(share * 1000000.0 / CAST(n_tokens AS DOUBLE), 4.0), 6)
-  END AS epochs
-FROM d
-"""
-
-# one md5 digest carries EIGHT 16-bit uniforms (mirror of
-# sampling.bootstrap_mean_ci's hash economy): digest index b//8,
-# hex slice 4*(b%8)
-_BOOT_U = (
-    "(CAST('0x' || substring(md5(CAST(o_orderkey AS VARCHAR) || '_w'"
-    " || CAST(b // 8 AS VARCHAR)), CAST(1 + 4 * (b % 8) AS INTEGER), 4)"
-    " AS BIGINT) / 65536.0)"
-)
-_BOOT_W = f"""(CASE
-  WHEN {_BOOT_U} < 0.36787944117144233 THEN 0
-  WHEN {_BOOT_U} < 0.7357588823428847 THEN 1
-  WHEN {_BOOT_U} < 0.9196986029286058 THEN 2
-  WHEN {_BOOT_U} < 0.9810118431238462 THEN 3
-  WHEN {_BOOT_U} < 0.9963401531726563 THEN 4
-  WHEN {_BOOT_U} < 0.9994058151824183 THEN 5
-  ELSE 6 END)"""
-
-_ORACLES["bootstrap_mean_orders"] = f"""
-WITH full_ AS (
-  SELECT count(*) AS n_rows,
-    SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DECIMAL(38,2))) AS s
-  FROM orders WHERE o_totalprice IS NOT NULL
-), reps AS (
-  SELECT b, {_BOOT_W} AS w, CAST(o_totalprice AS DECIMAL(18,2)) AS v
-  FROM orders CROSS JOIN (SELECT unnest(range(0, 32)) AS b)
-  WHERE o_totalprice IS NOT NULL
-), per_rep AS (
-  SELECT b, SUM(w) AS nw,
-    SUM(CAST(v * CAST(w AS DECIMAL(3,0)) AS DECIMAL(38,2))) AS sw
-  FROM reps GROUP BY b
-), means AS (
-  SELECT {_ddwf('sw')} / CAST(nw AS DOUBLE) AS m
-  FROM per_rep WHERE nw > 0
-), ci AS (
-  SELECT count(*) AS n_reps,
-    quantile_disc(m, 0.025) AS lo, quantile_disc(m, 0.975) AS hi
-  FROM means
-)
-SELECT CAST(n_rows AS BIGINT) AS n_rows,
-  CAST(n_reps AS BIGINT) AS n_replicates,
-  round({_ddwf('s')} / CAST(n_rows AS DOUBLE), 6) AS mean_full,
-  round(lo, 6) AS ci_lo, round(hi, 6) AS ci_hi
-FROM full_ CROSS JOIN ci
-"""
-
-
-
-def q_average_precision_order_status(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Exact tie-atomic average precision of price vs finished status —
-    the imbalance-honest ranking score beside roc_auc_order_status
-    (operators/hypotests.py:average_precision)."""
-    from breweries_etl_spark.operators.hypotests import average_precision
-
-    return average_precision(
-        load_table(spark, sf_dir, "orders"),
-        "o_totalprice",
-        F.col("o_orderstatus") == "F",
-    )
-
-
-def q_graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rich-club coefficients over the purchase graph at degree
-    thresholds 2/4/8/16 (operators/graph.py:rich_club_coefficients)."""
-    from breweries_etl_spark.operators.graph import rich_club_coefficients
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    return rich_club_coefficients(edges)
-
-
-def q_graph_knn_degree_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Average-neighbor-degree curve (log2 degree buckets) over the
-    purchase graph (operators/graph.py:avg_neighbor_degree_curve)."""
-    from breweries_etl_spark.operators.graph import avg_neighbor_degree_curve
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    return avg_neighbor_degree_curve(edges)
-
-
-def q_ece_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expected + maximum calibration error scalar gate for the
-    hashed-linear classifier (operators/filtering.py:ece_summary)."""
-    from breweries_etl_spark.operators.filtering import ece_summary
-
-    return ece_summary(load_table(spark, sf_dir, "documents"))
-
-
-def q_readability_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading ease per ingest source from regex word/sentence/
-    vowel-group counts (operators/text.py:readability_by_source)."""
-    from breweries_etl_spark.operators.text import readability_by_source
-
-    return readability_by_source(load_table(spark, sf_dir, "documents"))
-
-
-_ORACLES["average_precision_order_status"] = f"""
-WITH vc AS MATERIALIZED (
-  SELECT o_totalprice AS v,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS cb
-  FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb, ca + cb AS c,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (SELECT SUM(ca) AS n_pos, SUM(ca + cb) AS n FROM vc),
-folded AS (
-  SELECT max(n_pos) AS n_pos, max(n) AS n,
-    SUM(CAST(floor(1e6 * CAST(ca AS DOUBLE)
-      * (CAST(n_pos - (cum_a - ca) AS DOUBLE)
-         / CAST(n - (cum - c) AS DOUBLE))) AS DECIMAL(38,0))) AS ap_fp
-  FROM cum CROSS JOIN tot
-)
-SELECT CAST(n_pos AS BIGINT) AS n_pos,
-  CAST(n - n_pos AS BIGINT) AS n_neg,
-  CASE WHEN n_pos > 0 THEN
-    round({_ddw('ap_fp')} / 1e6 / CAST(n_pos AS DOUBLE), 6)
-  END AS average_precision
-FROM folded
-"""
-
-_ORACLES["graph_rich_club"] = """
-WITH e0 AS (
-  SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), canon AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM e0 WHERE src <> dst
-), ends AS (
-  SELECT a AS n FROM canon UNION ALL SELECT b AS n FROM canon
-), deg AS (SELECT n, count(*) AS deg FROM ends GROUP BY n),
-ks AS (SELECT unnest([2, 4, 8, 16]) AS k),
-n_k0 AS (
-  SELECT k, count(*) AS n_nodes FROM deg CROSS JOIN ks
-  WHERE deg > k GROUP BY k
-), n_k AS (
-  SELECT ks.k, coalesce(n_nodes, 0) AS n_nodes
-  FROM ks LEFT JOIN n_k0 ON ks.k = n_k0.k
-), e_k AS (
-  SELECT k, count(*) AS n_edges
-  FROM canon
-  JOIN deg da ON canon.a = da.n
-  JOIN deg db ON canon.b = db.n
-  CROSS JOIN ks
-  WHERE least(da.deg, db.deg) > k
-  GROUP BY k
-)
-SELECT CAST(n_k.k AS BIGINT) AS k,
-  CAST(n_nodes AS BIGINT) AS n_nodes_above,
-  CAST(coalesce(n_edges, 0) AS BIGINT) AS n_edges_within,
-  CASE WHEN n_nodes > 1 THEN
-    round(2.0 * CAST(coalesce(n_edges, 0) AS DOUBLE)
-          / (CAST(n_nodes AS DOUBLE) * (CAST(n_nodes AS DOUBLE) - 1.0)), 6)
-  END AS rich_club_phi
-FROM n_k LEFT JOIN e_k ON n_k.k = e_k.k
-"""
-
-_ORACLES["graph_knn_degree_curve"] = f"""
-WITH e0 AS (
-  SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), both_ AS MATERIALIZED (
-  SELECT DISTINCT src AS u, dst AS v FROM e0
-  UNION SELECT dst AS u, src AS v FROM e0
-), deg AS (SELECT u, count(*) AS deg FROM both_ GROUP BY u),
-per_node AS (
-  SELECT b.u, SUM(dv.deg) AS snd, max(du.deg) AS deg
-  FROM both_ b
-  JOIN deg dv ON b.v = dv.u
-  JOIN deg du ON b.u = du.u
-  GROUP BY b.u
-), per_bucket AS (
-  SELECT CAST(floor(log2(CAST(deg AS DOUBLE))) AS BIGINT) AS deg_bucket,
-    count(*) AS n_nodes,
-    SUM(CAST(floor(1e6 * CAST(snd AS DOUBLE) / CAST(deg AS DOUBLE))
-             AS DECIMAL(38,0))) AS s_fp
-  FROM per_node GROUP BY 1
-)
-SELECT deg_bucket,
-  CAST(pow(2.0, CAST(deg_bucket AS DOUBLE)) AS BIGINT) AS lo_degree,
-  CAST(n_nodes AS BIGINT) AS n_nodes,
-  round({_ddw('s_fp')} / 1e6 / CAST(n_nodes AS DOUBLE), 6)
-    AS avg_neighbor_degree
-FROM per_bucket
-"""
-
-_ORACLES["ece_docs"] = f"""
-WITH scored AS (
-  SELECT {_CLF_SCORE_SQL} AS pred,
-    CASE WHEN {_HEUR_QUALITY_SQL} >= 0.5 THEN 1 ELSE 0 END AS pos
-  FROM documents
-), binned AS (
-  SELECT least(CAST(9 AS BIGINT),
-               CAST(round(pred * 1000000.0) AS BIGINT) // 100000) AS bin,
-         pred, pos
-  FROM scored
-), per_bin AS (
-  SELECT bin, count(*) AS n_b,
-    SUM(CAST(round(pred, 6) AS DECIMAL(18,6))) AS p_sum,
-    SUM(pos) AS pos_b
-  FROM binned GROUP BY bin
-), folded AS (
-  SELECT SUM(n_b) AS n, count(*) AS n_bins_used,
-    SUM(CAST(floor(CAST(n_b AS DOUBLE)
-      * abs({_dd('p_sum')} / CAST(n_b AS DOUBLE)
-            - CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE)) * 1e8)
-      AS DECIMAL(38,0))) AS ece_fp,
-    max(CAST(floor(abs({_dd('p_sum')} / CAST(n_b AS DOUBLE)
-                       - CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-                   * 1e6) AS BIGINT)) AS mce_fp
-  FROM per_bin
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CAST(n_bins_used AS BIGINT) AS n_bins_used,
-  round({_ddw('ece_fp')} / 1e8 / CAST(n AS DOUBLE), 6) AS ece,
-  CAST(mce_fp AS DOUBLE) / 1e6 AS mce
-FROM folded
-"""
-
-_ORACLES["readability_by_source"] = """
-WITH per AS (
-  SELECT source, count(*) AS n_docs,
-    SUM(len(regexp_extract_all(text, '[A-Za-z0-9_]+'))) AS n_words,
-    SUM(greatest(len(regexp_extract_all(text, '[.!?]+')), 1))
-      AS n_sentences,
-    SUM(len(regexp_extract_all(text, '[AEIOUYaeiouy]+'))) AS n_syllables
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-  GROUP BY source
-)
-SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST(n_words AS BIGINT) AS n_words,
-  CAST(n_sentences AS BIGINT) AS n_sentences,
-  CAST(n_syllables AS BIGINT) AS n_syllables,
-  CASE WHEN n_words > 0 AND n_sentences > 0 THEN
-    round(CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE), 6)
-  END AS words_per_sentence,
-  CASE WHEN n_words > 0 AND n_sentences > 0 THEN
-    round(CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE), 6)
-  END AS syllables_per_word,
-  CASE WHEN n_words > 0 AND n_sentences > 0 THEN
-    round(206.835
-          - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
-          - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)),
-          6)
-  END AS flesch_reading_ease
-FROM per
-"""
-
-
-
-def q_g_test_status_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Likelihood-ratio G test of linestatus x returnflag independence
-    — the log-linear dual of cramers_v_status_flag
-    (operators/hypotests.py:g_test_contingency)."""
-    from breweries_etl_spark.operators.hypotests import g_test_contingency
-
-    return g_test_contingency(
-        load_table(spark, sf_dir, "lineitem"), "l_linestatus", "l_returnflag"
-    )
-
-
-def q_ordinal_assoc_qty_discount(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Goodman-Kruskal gamma + both Somers' D directions for quantity
-    vs discount — the tie-handling family around kendall_tau_b
-    (operators/hypotests.py:ordinal_association)."""
-    from breweries_etl_spark.operators.hypotests import ordinal_association
-
-    return ordinal_association(
-        load_table(spark, sf_dir, "lineitem"), "l_quantity", "l_discount"
-    )
-
-
-def q_yuen_trimmed_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yuen 20%-trimmed-mean robust t of price, returned vs other —
-    trimmed/winsorized moments in integer cents off the prefix-count
-    primitive (operators/hypotests.py:yuen_trimmed_t)."""
-    from breweries_etl_spark.operators.hypotests import yuen_trimmed_t
-
-    return yuen_trimmed_t(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_allen_session_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Allen-algebra relation profile of cross-user concurrent session
-    pairs (operators/rangejoin.py:allen_relation_counts)."""
-    from breweries_etl_spark.operators.rangejoin import allen_relation_counts
-
-    return allen_relation_counts(load_events(spark, sf_dir))
-
-
-def q_monotonicity_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type monotonicity audit of each user's value sequence
-    (operators/quality.py:monotonicity_violations)."""
-    from breweries_etl_spark.operators.quality import monotonicity_violations
-
-    return monotonicity_violations(load_events(spark, sf_dir))
-
-
-_ORACLES["g_test_status_flag"] = f"""
-WITH cells AS MATERIALIZED (
-  SELECT l_linestatus AS a, l_returnflag AS b, count(*) AS o
-  FROM lineitem
-  WHERE l_linestatus IS NOT NULL AND l_returnflag IS NOT NULL
-  GROUP BY 1, 2
-), ra AS (SELECT a, SUM(o) AS ra FROM cells GROUP BY a),
-cb AS (SELECT b, SUM(o) AS cb FROM cells GROUP BY b),
-tot AS (
-  SELECT SUM(o) AS n, count(DISTINCT a) AS ka, count(DISTINCT b) AS kb
-  FROM cells
-), g AS (
-  SELECT SUM(CAST(floor(2.0 * CAST(o AS DOUBLE)
-    * ln(CAST(o AS DOUBLE)
-         / (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tot.n AS DOUBLE)))
-    * 1e6) AS DECIMAL(38,0))) AS g_fp
-  FROM cells JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(ka AS BIGINT) AS n_cat_a,
-  CAST(kb AS BIGINT) AS n_cat_b,
-  CAST((ka - 1) * (kb - 1) AS BIGINT) AS dof,
-  CASE WHEN (ka - 1) * (kb - 1) > 0 THEN
-    round({_ddw('g_fp')} / 1e6, 4)
-  END AS g_stat
-FROM tot CROSS JOIN g
-"""
-
-_ORACLES["ordinal_assoc_qty_discount"] = f"""
-WITH cells AS MATERIALIZED (
-  SELECT l_quantity AS x, l_discount AS y, count(*) AS c
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT
-    SUM(CASE WHEN a.y < b.y THEN
-      CAST(CAST(a.c AS DECIMAL(19,0)) * CAST(b.c AS DECIMAL(19,0))
-           AS DECIMAL(38,0)) END) AS nc0,
-    SUM(CASE WHEN a.y > b.y THEN
-      CAST(CAST(a.c AS DECIMAL(19,0)) * CAST(b.c AS DECIMAL(19,0))
-           AS DECIMAL(38,0)) END) AS nd0
-  FROM cells a JOIN cells b ON a.x < b.x
-), tx AS (SELECT x, SUM(c) AS t FROM cells GROUP BY x),
-ty AS (SELECT y, SUM(c) AS t FROM cells GROUP BY y),
-tiex AS (
-  SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * (CAST(t AS DECIMAL(19,0)) - 1)
-                  AS DECIMAL(38,0))) AS tie2x FROM tx
-), tiey AS (
-  SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * (CAST(t AS DECIMAL(19,0)) - 1)
-                  AS DECIMAL(38,0))) AS tie2y FROM ty
-), tot AS (SELECT SUM(c) AS n, count(*) AS n_cells FROM cells),
-f AS (
-  SELECT n, n_cells,
-    {_ddw("coalesce(nc0, CAST(0 AS DECIMAL(38,0)))")} AS ncd,
-    {_ddw("coalesce(nd0, CAST(0 AS DECIMAL(38,0)))")} AS ndd,
-    CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-      - {_ddw('tie2x')} AS den_yx,
-    CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-      - {_ddw('tie2y')} AS den_xy
-  FROM tot CROSS JOIN pairs CROSS JOIN tiex CROSS JOIN tiey
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_cells AS BIGINT) AS n_cells,
-  CASE WHEN ncd + ndd > 0 THEN round((ncd - ndd) / (ncd + ndd), 6) END
-    AS gamma,
-  CASE WHEN den_yx > 0 THEN round(2.0 * (ncd - ndd) / den_yx, 6) END
-    AS somers_dyx,
-  CASE WHEN den_xy > 0 THEN round(2.0 * (ncd - ndd) / den_xy, 6) END
-    AS somers_dxy
-FROM f
-"""
-
-_YUEN_TRIM = "0.2"
-
-
-def _yuen_side(side: str) -> str:
-    """Per-side trimmed/winsorized integer-cent moment folds (twin of
-    hypotests.yuen_trimmed_t's side_moments)."""
-    c = f"c{side}"
-    cum = f"cum_{side}"
-    n = f"n_{side}"
-    # floor over the DOUBLE product, exactly as Spark computes g =
-    # floor(n * trim) — a decimal 0.2 here could disagree at n%5==0
-    gq = f"CAST(floor(CAST({n} AS DOUBLE) * {_YUEN_TRIM}) AS DECIMAL(19,0))"
-    ov = (
-        f"greatest(least({cum}, CAST({n} AS DECIMAL(19,0))"
-        f" - {gq})"
-        f" - greatest({cum} - {c} + 1,"
-        f" {gq} + 1) + 1,"
-        f" CAST(0 AS DECIMAL(19,0)))"
-    )
-    lo = f"({gq} + 1)"
-    hi = (
-        f"(CAST({n} AS DECIMAL(19,0))"
-        f" - {gq})"
-    )
-    return f"""
-    SUM(CAST(vi * {ov} AS DECIMAL(38,0))) AS ts_{side},
-    SUM(CAST(CAST(vi * vi AS DECIMAL(38,0)) * {ov} AS DECIMAL(38,0)))
-      AS tq_{side},
-    min(CASE WHEN {cum} >= {lo} THEN vi END) AS vlo_{side},
-    min(CASE WHEN {cum} >= {hi} THEN vi END) AS vhi_{side}"""
-
-
-def _yuen_close(side: str) -> str:
-    n = f"CAST(n_{side} AS DOUBLE)"
-    g = f"floor({n} * {_YUEN_TRIM})"
-    h = f"({n} - 2.0 * {g})"
-    ts = f"({_ddw(f'ts_{side}')} / 100.0)"
-    tq = f"({_ddw(f'tq_{side}')} / 1e4)"
-    vlo = f"(CAST(vlo_{side} AS DOUBLE) / 100.0)"
-    vhi = f"(CAST(vhi_{side} AS DOUBLE) / 100.0)"
-    wsum = f"({ts} + {g} * {vlo} + {g} * {vhi})"
-    wsq = f"({tq} + {g} * {vlo} * {vlo} + {g} * {vhi} * {vhi})"
-    s2w = f"(({wsq} - {wsum} * {wsum} / {n}) / ({n} - 1.0))"
-    d = f"({s2w} * ({n} - 1.0) / ({h} * ({h} - 1.0)))"
-    return h, f"({ts} / {h})", d
-
-
-_YH_A, _YTM_A, _YD_A = _yuen_close("a")
-_YH_B, _YTM_B, _YD_B = _yuen_close("b")
-
-_ORACLES["yuen_trimmed_price_flag"] = f"""
-WITH vc AS MATERIALIZED (
-  -- explicit half-up integer cents (the _batch_cents discipline)
-  SELECT CAST(CASE WHEN l_extendedprice < 0 THEN -1.0 ELSE 1.0 END
-              * floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)
-              AS BIGINT) AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca0,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb0
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum0 AS (
-  SELECT v,
-    CAST(v AS DECIMAL(19,0)) AS vi,
-    CAST(ca0 AS DECIMAL(19,0)) AS ca, CAST(cb0 AS DECIMAL(19,0)) AS cb,
-    CAST(SUM(ca0) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-         AS DECIMAL(19,0)) AS cum_a,
-    CAST(SUM(cb0) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-         AS DECIMAL(19,0)) AS cum_b
-  FROM vc
-), tot AS (SELECT SUM(ca0) AS n_a, SUM(cb0) AS n_b FROM vc),
-folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-{_yuen_side("a")},
-{_yuen_side("b")}
-  FROM cum0 CROSS JOIN tot
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CAST({_YH_A} AS BIGINT) AS h_a,
-  CAST({_YH_B} AS BIGINT) AS h_b,
-  round({_YTM_A}, 6) AS tmean_a,
-  round({_YTM_B}, 6) AS tmean_b,
-  CASE WHEN {_YH_A} > 1 AND {_YH_B} > 1 AND {_YD_A} + {_YD_B} > 0 THEN
-    round(({_YTM_A} - {_YTM_B}) / sqrt({_YD_A} + {_YD_B}), 6)
-  END AS yuen_t,
-  CASE WHEN {_YH_A} > 1 AND {_YH_B} > 1 AND {_YD_A} + {_YD_B} > 0 THEN
-    round(({_YD_A} + {_YD_B}) * ({_YD_A} + {_YD_B})
-          / ({_YD_A} * {_YD_A} / ({_YH_A} - 1.0)
-             + {_YD_B} * {_YD_B} / ({_YH_B} - 1.0)), 6)
-  END AS df
-FROM folded
-"""
-
-_ORACLES["allen_session_relations"] = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-    lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-  FROM e
-), sess AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-), s AS (
-  SELECT user_id, min(us) AS s_us, max(us) AS e_us
-  FROM sess GROUP BY user_id, session_id
-), p AS (
-  SELECT a.s_us AS ls, a.e_us AS le, b.s_us AS rs, b.e_us AS re_
-  FROM s a JOIN s b
-    ON a.user_id < b.user_id AND a.s_us <= b.e_us AND b.s_us <= a.e_us
-)
-SELECT CASE
-    WHEN ls = rs AND le = re_ THEN 'equals'
-    WHEN ls = rs THEN 'starts'
-    WHEN le = re_ THEN 'finishes'
-    WHEN ls < rs AND re_ < le THEN 'contains'
-    WHEN rs < ls AND le < re_ THEN 'contains'
-    ELSE 'overlaps' END AS relation,
-  CAST(count(*) AS BIGINT) AS n_pairs
-FROM p GROUP BY 1
-"""
-
-_ORACLES["monotonicity_user_value"] = """
-WITH o AS (
-  SELECT event_type AS g, value,
-    lag(value) OVER (PARTITION BY user_id, event_type
-                     ORDER BY ts, event_id) AS prev
-  FROM events
-  WHERE value IS NOT NULL AND user_id IS NOT NULL
-    AND event_type IS NOT NULL
-), per AS (
-  SELECT g, count(*) AS n_rows,
-    SUM(CASE WHEN prev IS NOT NULL THEN 1 ELSE 0 END) AS n_pairs,
-    SUM(CASE WHEN prev IS NOT NULL AND value < prev THEN 1 ELSE 0 END)
-      AS n_violations
-  FROM o GROUP BY g
-)
-SELECT g AS event_type, CAST(n_rows AS BIGINT) AS n_rows,
-  CAST(n_pairs AS BIGINT) AS n_pairs,
-  CAST(n_violations AS BIGINT) AS n_violations,
-  CASE WHEN n_pairs > 0 THEN
-    round(CAST(n_violations AS DOUBLE) / CAST(n_pairs AS DOUBLE), 6)
-  END AS violation_rate
-FROM per
-"""
-
-
-
-def q_kuiper_test_price_returnflag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-sample Kuiper V of extended price, returned vs other — the
-    tail-sensitive rotation-invariant sibling of the KS drift test
-    (operators/hypotests.py:kuiper_test_2samp)."""
-    from breweries_etl_spark.operators.hypotests import kuiper_test_2samp
-
-    return kuiper_test_2samp(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-_KUIPER_SIGNED = (
-    "(CAST(cum_a AS DECIMAL(19,0)) * CAST(n_b AS DECIMAL(19,0))"
-    " - CAST(cum_b AS DECIMAL(19,0)) * CAST(n_a AS DECIMAL(19,0)))"
-)
-
-_ORACLES["kuiper_test_price_returnflag"] = f"""
-WITH {_KS_VC},
-tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM vc),
-m AS (
-  SELECT n_a, n_b,
-    greatest(max(CAST({_KUIPER_SIGNED} AS DECIMAL(38,0))),
-             CAST(0 AS DECIMAL(38,0))) AS dp_int,
-    greatest(max(CAST(-{_KUIPER_SIGNED} AS DECIMAL(38,0))),
-             CAST(0 AS DECIMAL(38,0))) AS dm_int
-  FROM cum CROSS JOIN tot GROUP BY n_a, n_b
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round({_ddw('dp_int')}
-        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6) AS d_plus,
-  round({_ddw('dm_int')}
-        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6) AS d_minus,
-  round({_ddw('dp_int')}
-        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))
-        + {_ddw('dm_int')}
-        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6) AS kuiper_v
-FROM m
-"""
-
-
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The registry, in definition order: every top-level ``q_<name>``
-    function of this module keyed ``<name>``, then every public function
-    defined in ``plans/analytics.py`` keyed by its own name."""
-    own = {
-        name[2:]: fn
-        for name, fn in globals().items()
-        if name.startswith("q_") and inspect.isfunction(fn)
-    }
-    relational = {
-        name: fn
-        for name, fn in vars(analytics).items()
-        if not name.startswith("_")
-        and inspect.isfunction(fn)
-        and fn.__module__ == analytics.__name__
-    }
-    return {name: _wrap(fn) for name, fn in {**own, **relational}.items()}
+def queries() -> dict[str, Builder]:
+    """Every registered query keyed by name, in declaration order."""
+    return {name: _wrap(q.build) for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLES)
-
-
-# ----- round-8 wave: ordered/post-hoc/agreement statistics, corpus
-# growth + diversity, spectral/burstiness temporal screens, forensic
-# digit laws, graph centralization -----
-
-
-def q_jonckheere_qty_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jonckheere-Terpstra ordered-alternative test of l_quantity
-    across the returnflag order A < N < R
-    (operators/hypotests.py:jonckheere_terpstra)."""
-    from breweries_etl_spark.operators.hypotests import jonckheere_terpstra
-
-    return jonckheere_terpstra(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        ["A", "N", "R"],
-    )
-
-
-def q_dunn_pairwise_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dunn post-hoc pairwise z over returnflag groups on
-    l_extendedprice (operators/hypotests.py:dunn_pairwise_z)."""
-    from breweries_etl_spark.operators.hypotests import dunn_pairwise_z
-
-    return dunn_pairwise_z(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_lin_ccc_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lin's concordance correlation between l_extendedprice and
-    l_quantity (operators/hypotests.py:lin_ccc)."""
-    from breweries_etl_spark.operators.hypotests import lin_ccc
-
-    return lin_ccc(
-        load_table(spark, sf_dir, "lineitem"), "l_extendedprice", "l_quantity"
-    )
-
-
-def q_cohens_h_status_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's h for the high-value-order rate between finished and
-    unfinished orders (operators/hypotests.py:cohens_h)."""
-    from breweries_etl_spark.operators.hypotests import cohens_h
-
-    o = load_table(spark, sf_dir, "orders")
-    return cohens_h(
-        o, F.col("o_orderstatus") == "F", F.col("o_totalprice") > 150000
-    )
-
-
-def q_hodges_lehmann_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hodges-Lehmann shift of l_quantity between returnflag R and the
-    rest (operators/hypotests.py:hodges_lehmann_shift; bounded
-    quantity domain)."""
-    from breweries_etl_spark.operators.hypotests import hodges_lehmann_shift
-
-    return hodges_lehmann_shift(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_quantity",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_page_trend_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page's L ordered trend across weekday-0/1/2 daily totals per
-    week block (operators/hypotests.py:page_trend_3)."""
-    from breweries_etl_spark.operators.hypotests import page_trend_3
-
-    ev = load_events(spark, sf_dir)
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    daily = (
-        ev.filter(F.col("value").isNotNull())
-        .select(day.alias("day"), F.col("value").cast("decimal(18,2)").alias("y"))
-        .groupBy("day")
-        .agg(F.sum("y").alias("y"))
-    )
-    wk = daily.select(
-        F.expr("day div 7").alias("week"),
-        (F.col("day") % 7).alias("dow"),
-        "y",
-    ).filter(F.col("dow") < 3)
-    blocks = (
-        wk.groupBy("week")
-        .agg(
-            F.max(F.when(F.col("dow") == 0, F.col("y"))).alias("va"),
-            F.max(F.when(F.col("dow") == 1, F.col("y"))).alias("vb"),
-            F.max(F.when(F.col("dow") == 2, F.col("y"))).alias("vc"),
-        )
-        .filter(
-            F.col("va").isNotNull()
-            & F.col("vb").isNotNull()
-            & F.col("vc").isNotNull()
-        )
-    )
-    return page_trend_3(
-        blocks, "week", F.col("va"), F.col("vb"), F.col("vc")
-    )
-
-
-def q_hellinger_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hellinger/Bhattacharyya distance between returnflag-R and other
-    price distributions over global deciles
-    (operators/hypotests.py:hellinger_bhattacharyya)."""
-    from breweries_etl_spark.operators.hypotests import hellinger_bhattacharyya
-
-    return hellinger_bhattacharyya(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_deviance_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean Poisson/Gamma deviance of the per-returnflag-mean predictor
-    for l_extendedprice (operators/hypotests.py:group_deviance)."""
-    from breweries_etl_spark.operators.hypotests import group_deviance
-
-    return group_deviance(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_tv_distance_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source total-variation distance from the corpus language mix
-    (operators/text.py:tv_distance_lang_by_source)."""
-    from breweries_etl_spark.operators.text import tv_distance_lang_by_source
-
-    return tv_distance_lang_by_source(load_table(spark, sf_dir, "documents"))
-
-
-def q_heaps_law_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps' law vocabulary-growth fit over md5 hash chunks
-    (operators/text.py:heaps_law_fit)."""
-    from breweries_etl_spark.operators.text import heaps_law_fit
-
-    return heaps_law_fit(load_table(spark, sf_dir, "documents"))
-
-
-def q_lexical_diversity_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source type-token ratio and hapax share
-    (operators/text.py:lexical_diversity_by_source)."""
-    from breweries_etl_spark.operators.text import lexical_diversity_by_source
-
-    return lexical_diversity_by_source(load_table(spark, sf_dir, "documents"))
-
-
-def q_cox_stuart_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cox-Stuart half-distance sign trend test of the daily event
-    totals (operators/temporal.py:cox_stuart_trend_daily)."""
-    from breweries_etl_spark.operators.temporal import cox_stuart_trend_daily
-
-    return cox_stuart_trend_daily(load_events(spark, sf_dir))
-
-
-def q_periodogram_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Periodogram power fraction of the daily totals at periods 7 and
-    30 (operators/temporal.py:seasonal_periodogram_daily)."""
-    from breweries_etl_spark.operators.temporal import (
-        seasonal_periodogram_daily,
-    )
-
-    return seasonal_periodogram_daily(load_events(spark, sf_dir))
-
-
-def q_burstiness_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goh-Barabasi burstiness of per-user inter-event times
-    (operators/temporal.py:interarrival_burstiness)."""
-    from breweries_etl_spark.operators.temporal import interarrival_burstiness
-
-    return interarrival_burstiness(load_events(spark, sf_dir))
-
-
-def q_graph_degree_centralization(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Freeman centralization + degree Gini + wedge count of the
-    customer-supplier purchase graph
-    (operators/graph.py:degree_centralization)."""
-    from breweries_etl_spark.operators.graph import degree_centralization
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    return degree_centralization(edges, "src", "dst")
-
-
-def q_benford_second_digit_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Second-significant-digit Benford profile of o_totalprice
-    (operators/quality.py:benford_second_digit)."""
-    from breweries_etl_spark.operators.quality import benford_second_digit
-
-    return benford_second_digit(
-        load_table(spark, sf_dir, "orders"), "o_totalprice"
-    )
-
-
-def q_last_digit_uniformity_price(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Last-cent-digit uniformity chi2 of l_extendedprice
-    (operators/quality.py:last_digit_uniformity)."""
-    from breweries_etl_spark.operators.quality import last_digit_uniformity
-
-    return last_digit_uniformity(
-        load_table(spark, sf_dir, "lineitem"), "l_extendedprice"
-    )
-
-
-def q_ks_doclen_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KS drift test between English and non-English document length
-    distributions (operators/hypotests.py:ks_test_2samp reuse)."""
-    from breweries_etl_spark.operators.hypotests import ks_test_2samp
-
-    return ks_test_2samp(
-        load_table(spark, sf_dir, "documents"),
-        "n_chars",
-        F.col("lang") == "en",
-    )
-
-
-# ----- round-8 oracles -----
-
-def _qm8(c: str) -> str:
-    """SQL twin of operators/hypotests.quantized_money (half-up integer
-    cents -> exact /100)."""
-    return (
-        f"CAST((CASE WHEN {c} < 0 THEN -1.0 ELSE 1.0 END *"
-        f" floor(abs(CAST({c} AS DOUBLE)) * 100.0 + 0.5)) / 100.0"
-        f" AS DECIMAL(18,2))"
-    )
-
-
-def _jt_pair_cte(name: str, lo: str, hi: str) -> str:
-    return f"""{name} AS (
-  SELECT SUM(CAST(2 * CAST(cb AS DECIMAL(19,0)) * CAST(cum_a - ca AS DECIMAL(19,0))
-                  + CAST(ca AS DECIMAL(19,0)) * CAST(cb AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS u2
-  FROM (
-    SELECT v, ca, cb,
-      SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a
-    FROM (
-      SELECT l_quantity AS v,
-        SUM(CASE WHEN l_returnflag = '{lo}' THEN 1 ELSE 0 END) AS ca,
-        SUM(CASE WHEN l_returnflag = '{hi}' THEN 1 ELSE 0 END) AS cb
-      FROM lineitem
-      WHERE l_quantity IS NOT NULL AND l_returnflag IN ('{lo}', '{hi}')
-      GROUP BY 1
-    )
-  )
-)"""
-
-
-_ORACLES["jonckheere_qty_returnflag"] = f"""
-WITH {_jt_pair_cte('p1', 'A', 'N')},
-{_jt_pair_cte('p2', 'A', 'R')},
-{_jt_pair_cte('p3', 'N', 'R')},
-jt AS (
-  SELECT SUM(u2) AS jt2 FROM (
-    SELECT u2 FROM p1 UNION ALL SELECT u2 FROM p2 UNION ALL SELECT u2 FROM p3
-  )
-), sizes AS (
-  SELECT l_returnflag AS g, count(*) AS n_g FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_returnflag IS NOT NULL
-    AND l_returnflag IN ('A', 'N', 'R') GROUP BY 1
-), mom AS (
-  SELECT SUM(n_g) AS n, count(*) AS k,
-    SUM(CAST(CAST(n_g AS DECIMAL(19,0)) * n_g AS DECIMAL(38,0))) AS sn2,
-    SUM(CAST(CAST(n_g AS DECIMAL(19,0)) * CAST(n_g AS DECIMAL(19,0))
-             * (2 * CAST(n_g AS DECIMAL(19,0)) + 3) AS DECIMAL(38,0))) AS sn23
-  FROM sizes
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  round({_ddw('jt2')} / 2.0, 6) AS jt_stat,
-  CASE WHEN (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-             * (2.0 * CAST(n AS DOUBLE) + 3.0) - {_ddw('sn23')}) / 72.0 > 0
-  THEN round(({_ddw('jt2')} / 2.0
-              - (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - {_ddw('sn2')}) / 4.0)
-             / sqrt((CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                     * (2.0 * CAST(n AS DOUBLE) + 3.0) - {_ddw('sn23')})
-                    / 72.0), 6)
-  END AS z_score
-FROM jt CROSS JOIN mom
-"""
-
-_ORACLES["dunn_pairwise_price_flag"] = f"""
-WITH vals AS (
-  SELECT l_returnflag AS g, l_extendedprice AS val FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-), vv AS (SELECT val AS v, count(*) AS c FROM vals GROUP BY 1),
-uu AS (
-  SELECT v, c,
-    2 * SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - c + 1 AS u
-  FROM vv
-), gv AS (SELECT g, val AS v, count(*) AS c_gv FROM vals GROUP BY 1, 2),
-pg AS (
-  SELECT g, SUM(c_gv) AS n_g,
-    SUM(CAST(CAST(c_gv AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS r2
-  FROM gv JOIN uu USING (v) GROUP BY g
-), tie AS (
-  SELECT SUM(CAST(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-                  * CAST(c AS DECIMAL(19,0)) - c AS DECIMAL(38,0))) AS tie_sum
-  FROM vv
-), tot AS (SELECT SUM(n_g) AS n FROM pg)
-SELECT a.g AS group_a, b.g AS group_b,
-  CAST(a.n_g AS BIGINT) AS n_a, CAST(b.n_g AS BIGINT) AS n_b,
-  round({_ddw('a.r2')} / (2.0 * CAST(a.n_g AS DOUBLE)), 6) AS mean_rank_a,
-  round({_ddw('b.r2')} / (2.0 * CAST(b.n_g AS DOUBLE)), 6) AS mean_rank_b,
-  CASE WHEN sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)
-                  - {_ddw('tie_sum')} / (CAST(n AS DOUBLE) - 1.0)) / 12.0
-                 * (1.0 / CAST(a.n_g AS DOUBLE)
-                    + 1.0 / CAST(b.n_g AS DOUBLE))) > 0
-  THEN round(({_ddw('a.r2')} / (2.0 * CAST(a.n_g AS DOUBLE))
-              - {_ddw('b.r2')} / (2.0 * CAST(b.n_g AS DOUBLE)))
-             / sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)
-                     - {_ddw('tie_sum')} / (CAST(n AS DOUBLE) - 1.0)) / 12.0
-                    * (1.0 / CAST(a.n_g AS DOUBLE)
-                       + 1.0 / CAST(b.n_g AS DOUBLE))), 6)
-  END AS z_score
-FROM pg a JOIN pg b ON a.g < b.g CROSS JOIN tot CROSS JOIN tie
-"""
-
-_ORACLES["lin_ccc_price_qty"] = f"""
-WITH base AS (
-  SELECT CAST({_qm8('l_extendedprice')} AS DECIMAL(12,2)) AS x,
-    CAST({_qm8('l_quantity')} AS DECIMAL(12,2)) AS y
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x AS DECIMAL(38,2))) AS sx,
-    SUM(CAST(y AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(x * x AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS syy,
-    SUM(CAST(x * y AS DECIMAL(38,4))) AS sxy
-  FROM base
-), d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_dd('sx')} AS sxd, {_dd('sy')} AS syd,
-    {_dd('sxx')} AS sxxd, {_dd('syy')} AS syyd, {_dd('sxy')} AS sxyd
-  FROM mom
-), c AS (
-  SELECT n, nd,
-    sxxd - sxd * sxd / nd AS sxx_c,
-    syyd - syd * syd / nd AS syy_c,
-    sxyd - sxd * syd / nd AS sxy_c,
-    sxd / nd - syd / nd AS dbar
-  FROM d
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c / sqrt(sxx_c * syy_c), 6) END AS pearson_r,
-  CASE WHEN sxx_c + syy_c + nd * dbar * dbar > 0 THEN
-    round(2.0 * sxy_c / (sxx_c + syy_c + nd * dbar * dbar), 6)
-  END AS ccc,
-  CASE WHEN sxx_c > 0 AND syy_c > 0 THEN
-    round(sqrt(sxx_c / nd) / sqrt(syy_c / nd), 6) END AS scale_shift,
-  CASE WHEN sxx_c > 0 AND syy_c > 0 THEN
-    round(dbar / sqrt(sqrt(sxx_c / nd) * sqrt(syy_c / nd)), 6)
-  END AS location_shift
-FROM c
-"""
-
-_ORACLES["cohens_h_status_price"] = """
-WITH counts AS (
-  SELECT
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS n_a,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS n_b,
-    SUM(CASE WHEN o_orderstatus = 'F' AND o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS k_a,
-    SUM(CASE WHEN o_orderstatus <> 'F' AND o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS k_b
-  FROM orders
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) END AS p_a,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) END AS p_b,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(2.0 * asin(sqrt(CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE)))
-          - 2.0 * asin(sqrt(CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE))), 6)
-  END AS cohens_h
-FROM counts
-"""
-
-_ORACLES["hodges_lehmann_qty_flag"] = """
-WITH ca AS (
-  SELECT l_quantity AS va, count(*) AS ca FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_returnflag = 'R' GROUP BY 1
-), cb AS (
-  SELECT l_quantity AS vb, count(*) AS cb FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_returnflag <> 'R' GROUP BY 1
-), cells AS (
-  SELECT va - vb AS d,
-    SUM(CAST(CAST(ca AS DECIMAL(19,0)) * CAST(cb AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS w
-  FROM ca CROSS JOIN cb GROUP BY 1
-), tot AS (
-  SELECT SUM(w) AS wtot, count(*) AS n_cells FROM cells
-), cum AS (
-  SELECT d, SUM(w) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING) AS cumw
-  FROM cells
-), picked AS (
-  SELECT min(d) AS hl, max(n_cells) AS n_cells
-  FROM cum CROSS JOIN tot
-  WHERE CAST(2 AS DECIMAL(38,0)) * CAST(cumw AS DECIMAL(38,0))
-        >= CAST(wtot AS DECIMAL(38,0))
-), sizes AS (
-  SELECT SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS n_a,
-    SUM(CASE WHEN l_returnflag <> 'R' THEN 1 ELSE 0 END) AS n_b
-  FROM lineitem WHERE l_quantity IS NOT NULL
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CAST(n_cells AS BIGINT) AS n_cells,
-  CAST(hl AS DOUBLE) AS hl_shift
-FROM picked CROSS JOIN sizes
-"""
-
-_ORACLES["page_trend_weekday"] = f"""
-WITH daily AS (
-  SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT)
-    AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-), blocks AS (
-  SELECT day // 7 AS week,
-    MAX(CASE WHEN day % 7 = 0 THEN y END) AS va,
-    MAX(CASE WHEN day % 7 = 1 THEN y END) AS vb,
-    MAX(CASE WHEN day % 7 = 2 THEN y END) AS vc
-  FROM daily WHERE day % 7 < 3 GROUP BY 1
-), ranked AS (
-  SELECT week,
-    2 + 2 * ((CASE WHEN vb < va THEN 1 ELSE 0 END)
-             + (CASE WHEN vc < va THEN 1 ELSE 0 END))
-      + (CASE WHEN vb = va THEN 1 ELSE 0 END)
-      + (CASE WHEN vc = va THEN 1 ELSE 0 END) AS ra,
-    2 + 2 * ((CASE WHEN va < vb THEN 1 ELSE 0 END)
-             + (CASE WHEN vc < vb THEN 1 ELSE 0 END))
-      + (CASE WHEN va = vb THEN 1 ELSE 0 END)
-      + (CASE WHEN vc = vb THEN 1 ELSE 0 END) AS rb,
-    2 + 2 * ((CASE WHEN va < vc THEN 1 ELSE 0 END)
-             + (CASE WHEN vb < vc THEN 1 ELSE 0 END))
-      + (CASE WHEN va = vc THEN 1 ELSE 0 END)
-      + (CASE WHEN vb = vc THEN 1 ELSE 0 END) AS rc
-  FROM blocks
-  WHERE va IS NOT NULL AND vb IS NOT NULL AND vc IS NOT NULL
-), sums AS (
-  SELECT count(*) AS n,
-    SUM(CAST(CAST(ra AS DECIMAL(19,0)) + 2 * CAST(rb AS DECIMAL(19,0))
-             + 3 * CAST(rc AS DECIMAL(19,0)) AS DECIMAL(19,0))) AS l2
-  FROM ranked
-)
-SELECT CAST(n AS BIGINT) AS n_blocks,
-  round({_dd('CAST(l2 AS DECIMAL(38,0))')} / 2.0, 6) AS page_l,
-  CASE WHEN n > 0 THEN
-    round(({_dd('CAST(l2 AS DECIMAL(38,0))')} / 2.0
-           - 12.0 * CAST(n AS DOUBLE))
-          / sqrt(2.0 * CAST(n AS DOUBLE)), 6)
-  END AS z_score
-FROM sums
-"""
-
-
-_HB_CUTS_SQL = ", ".join(
-    f"quantile_disc(l_extendedprice, {i / 10})" for i in range(1, 10)
-)
-
-_ORACLES["hellinger_price_flag"] = """
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM vc),
-cells AS (
-  SELECT ((cum - 1) * 10) // (na + nb) AS bin,
-    SUM(ca) AS ca, SUM(cb) AS cb, max(na) AS na, max(nb) AS nb
-  FROM cum CROSS JOIN tot GROUP BY 1
-), folded AS (
-  SELECT max(na) AS n_a, max(nb) AS n_b, count(*) AS n_bins_used,
-    SUM(CAST(round(sqrt((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-                        * (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))), 6)
-             AS DECIMAL(18,6))) AS bc
-  FROM cells
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CAST(n_bins_used AS BIGINT) AS n_bins_used,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(CAST(bc AS DOUBLE), 6) END AS bhattacharyya,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(sqrt(greatest(0.0, 1.0 - CAST(bc AS DOUBLE))), 6)
-  END AS hellinger
-FROM folded
-""".replace("__CUTS__", _HB_CUTS_SQL)
-
-_ORACLES["deviance_price_flag"] = f"""
-WITH base AS (
-  SELECT l_returnflag AS g, {_qm8('l_extendedprice')} AS y
-  FROM lineitem
-  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-), ntot AS (SELECT count(*) AS n_total FROM base),
-pos AS (SELECT g, y FROM base WHERE y > 0),
-means AS (
-  SELECT g, count(*) AS ng, SUM(CAST(y AS DECIMAL(38,2))) AS s
-  FROM pos GROUP BY g
-), mu AS (
-  SELECT g, {_ddwf('s')} / CAST(ng AS DOUBLE) AS mu FROM means
-), terms AS (
-  SELECT CAST(y AS DOUBLE) AS yd, mu FROM pos JOIN mu USING (g)
-), folded AS (
-  SELECT count(*) AS n,
-    SUM(CAST(round(yd * ln(yd / mu) - (yd - mu), 6)
-             AS DECIMAL(28,6))) AS dp,
-    SUM(CAST(round(-ln(yd / mu) + (yd - mu) / mu, 6)
-             AS DECIMAL(28,6))) AS dg
-  FROM terms
-), kk AS (SELECT count(*) AS k FROM means)
-SELECT CAST(n_total AS BIGINT) AS n_total, CAST(n AS BIGINT) AS n,
-  CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN n > 0 THEN
-    round(2.0 * {_ddwf('dp')} / CAST(n AS DOUBLE), 6)
-  END AS poisson_deviance,
-  CASE WHEN n > 0 THEN
-    round(2.0 * {_ddwf('dg')} / CAST(n AS DOUBLE), 6)
-  END AS gamma_deviance
-FROM folded CROSS JOIN ntot CROSS JOIN kk
-"""
-
-_ORACLES["tv_distance_lang_source"] = """
-WITH cells AS (
-  SELECT source, lang, count(*) AS c FROM documents
-  WHERE source IS NOT NULL AND lang IS NOT NULL GROUP BY 1, 2
-), lang_tot AS (SELECT lang, SUM(c) AS cl FROM cells GROUP BY 1),
-src_tot AS (SELECT source, SUM(c) AS cs FROM cells GROUP BY 1),
-grid AS (
-  SELECT s.source, l.lang, s.cs, l.cl, coalesce(cells.c, 0) AS c,
-    SUM(l.cl) OVER (PARTITION BY s.source) AS n
-  FROM src_tot s CROSS JOIN lang_tot l
-  LEFT JOIN cells ON cells.source = s.source AND cells.lang = l.lang
-)
-SELECT source, CAST(max(cs) AS BIGINT) AS n_docs,
-  CAST(count(*) AS BIGINT) AS n_langs_corpus,
-  round(
-    (CASE WHEN SUM(CAST(abs(CAST(c AS DECIMAL(19,0)) * CAST(n AS DECIMAL(19,0))
-                  - CAST(cl AS DECIMAL(19,0)) * CAST(cs AS DECIMAL(19,0)))
-           AS DECIMAL(38,0))) < 0 THEN -1.0 ELSE 1.0 END *
-     (CAST(CAST(abs(SUM(CAST(abs(CAST(c AS DECIMAL(19,0)) * CAST(n AS DECIMAL(19,0))
-                  - CAST(cl AS DECIMAL(19,0)) * CAST(cs AS DECIMAL(19,0)))
-           AS DECIMAL(38,0)))) AS HUGEINT) // 1000000000 AS DOUBLE) * 1e9
-      + CAST(CAST(abs(SUM(CAST(abs(CAST(c AS DECIMAL(19,0)) * CAST(n AS DECIMAL(19,0))
-                  - CAST(cl AS DECIMAL(19,0)) * CAST(cs AS DECIMAL(19,0)))
-           AS DECIMAL(38,0)))) AS HUGEINT) % 1000000000 AS DOUBLE)))
-    / (2.0 * CAST(max(cs) AS DOUBLE) * CAST(max(n) AS DOUBLE)), 6)
-    AS tv_distance
-FROM grid GROUP BY source
-"""
-
-_ORACLES["heaps_law_docs"] = f"""
-WITH tokens AS (
-  SELECT CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-              AS BIGINT) % 32 AS chunk,
-    unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-  FROM documents WHERE text IS NOT NULL
-), per_term AS (
-  SELECT term, min(chunk) AS first_chunk FROM tokens GROUP BY 1
-), tok_per_chunk AS (
-  SELECT chunk, count(*) AS nt FROM tokens GROUP BY 1
-), new_per_chunk AS (
-  SELECT first_chunk AS chunk, count(*) AS nv FROM per_term GROUP BY 1
-), curve AS (
-  SELECT chunk,
-    SUM(coalesce(nt, 0)) OVER (ORDER BY chunk ROWS UNBOUNDED PRECEDING)
-      AS t_cum,
-    SUM(coalesce(nv, 0)) OVER (ORDER BY chunk ROWS UNBOUNDED PRECEDING)
-      AS v_cum
-  FROM tok_per_chunk FULL JOIN new_per_chunk USING (chunk)
-), pts AS (SELECT * FROM curve WHERE t_cum > 0 AND v_cum > 0),
-mom AS (
-  SELECT count(*) AS n, max(t_cum) AS n_tokens, max(v_cum) AS vocab_size,
-    SUM(CAST(round(ln(CAST(t_cum AS DOUBLE)), 6) AS DECIMAL(18,6))) AS sx,
-    SUM(CAST(round(ln(CAST(v_cum AS DOUBLE)), 6) AS DECIMAL(18,6))) AS sy,
-    SUM(CAST(round(round(ln(CAST(t_cum AS DOUBLE)), 6)
-                   * round(ln(CAST(t_cum AS DOUBLE)), 6), 12)
-             AS DECIMAL(28,12))) AS sxx,
-    SUM(CAST(round(round(ln(CAST(t_cum AS DOUBLE)), 6)
-                   * round(ln(CAST(v_cum AS DOUBLE)), 6), 12)
-             AS DECIMAL(28,12))) AS sxy,
-    SUM(CAST(round(round(ln(CAST(v_cum AS DOUBLE)), 6)
-                   * round(ln(CAST(v_cum AS DOUBLE)), 6), 12)
-             AS DECIMAL(28,12))) AS syy
-  FROM pts
-), d AS (
-  SELECT n, n_tokens, vocab_size, CAST(n AS DOUBLE) AS nd,
-    {_dd('sx')} AS sxd, {_dd('sy')} AS syd,
-    {_dd('sxx')} AS sxxd, {_dd('sxy')} AS sxyd, {_dd('syy')} AS syyd
-  FROM mom
-), c AS (
-  SELECT n, n_tokens, vocab_size, nd,
-    sxxd - sxd * sxd / nd AS sxx_c,
-    sxyd - sxd * syd / nd AS sxy_c,
-    syyd - syd * syd / nd AS syy_c,
-    sxd, syd
-  FROM d
-)
-SELECT CAST(n AS BIGINT) AS n_chunks,
-  CAST(n_tokens AS BIGINT) AS n_tokens,
-  CAST(vocab_size AS BIGINT) AS vocab_size,
-  CASE WHEN n > 2 AND sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c / sxx_c, 6) END AS heaps_beta,
-  CASE WHEN n > 2 AND sxx_c > 0 AND syy_c > 0 THEN
-    round((syd - (sxy_c / sxx_c) * sxd) / nd, 6) END AS heaps_log_k,
-  CASE WHEN n > 2 AND sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c * sxy_c / (sxx_c * syy_c), 6) END AS r2
-FROM c
-"""
-
-_ORACLES["lexical_diversity_source"] = """
-WITH st AS (
-  SELECT source, term, count(*) AS c FROM (
-    SELECT source,
-      unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-    FROM documents WHERE source IS NOT NULL AND text IS NOT NULL
-  ) GROUP BY 1, 2
-)
-SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
-  CAST(count(*) AS BIGINT) AS n_types,
-  CASE WHEN SUM(c) > 0 THEN
-    round(CAST(count(*) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6)
-  END AS ttr,
-  CASE WHEN count(*) > 0 THEN
-    round(CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-          / CAST(count(*) AS DOUBLE), 6)
-  END AS hapax_share
-FROM st GROUP BY source
-"""
-
-_ORACLES["ks_doclen_lang"] = f"""
-WITH vc AS (
-  SELECT n_chars AS v,
-    SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS cb
-  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM vc
-), tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM vc)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round({_ddw(_KS_GAP)}
-        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6) AS ks_stat
-FROM cum CROSS JOIN tot GROUP BY n_a, n_b
-"""
-
-
-_ORACLES["cox_stuart_daily_value"] = """
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), idx AS (
-  SELECT day, y, row_number() OVER (ORDER BY day) - 1 AS i FROM daily
-), tot AS (SELECT count(*) AS n, (count(*) + 1) // 2 AS h FROM idx),
-pairs AS (
-  SELECT a.y AS y, b.y AS y2, n FROM idx a CROSS JOIN tot
-  JOIN idx b ON a.i + h = b.i
-), folded AS (
-  SELECT max(n) AS n_days,
-    SUM(CASE WHEN y2 > y THEN 1 ELSE 0 END) AS n_pos,
-    SUM(CASE WHEN y2 < y THEN 1 ELSE 0 END) AS n_neg
-  FROM pairs
-)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-  CAST(n_pos + n_neg AS BIGINT) AS n_pairs,
-  CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
-  CASE WHEN n_pos + n_neg > 0 THEN
-    round((CAST(n_pos AS DOUBLE)
-           - CAST(n_pos + n_neg AS DOUBLE) / 2.0)
-          / sqrt(CAST(n_pos + n_neg AS DOUBLE) / 4.0), 6)
-  END AS z_score
-FROM folded
-"""
-
-_ORACLES["periodogram_daily_value"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), tot AS (
-  SELECT count(*) AS n, SUM(CAST(y AS DECIMAL(38,2))) AS s,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS q
-  FROM daily
-), pp AS (
-  SELECT p,
-    SUM(CAST(y * CAST(round(cos(6.283185307179586
-                                * CAST(day % p AS DOUBLE)
-                                / CAST(p AS DOUBLE)), 6)
-                      AS DECIMAL(8,6)) AS DECIMAL(38,8))) AS yc,
-    SUM(CAST(y * CAST(round(sin(6.283185307179586
-                                * CAST(day % p AS DOUBLE)
-                                / CAST(p AS DOUBLE)), 6)
-                      AS DECIMAL(8,6)) AS DECIMAL(38,8))) AS ys,
-    SUM(CAST(CAST(round(cos(6.283185307179586
-                            * CAST(day % p AS DOUBLE)
-                            / CAST(p AS DOUBLE)), 6)
-                  AS DECIMAL(8,6)) AS DECIMAL(38,6))) AS sc,
-    SUM(CAST(CAST(round(sin(6.283185307179586
-                            * CAST(day % p AS DOUBLE)
-                            / CAST(p AS DOUBLE)), 6)
-                  AS DECIMAL(8,6)) AS DECIMAL(38,6))) AS ss
-  FROM daily CROSS JOIN (SELECT unnest([7, 30]) AS p) GROUP BY p
-), d AS (
-  SELECT p, n, {_ddwf('s')} / CAST(n AS DOUBLE) AS m,
-    {_ddwf('yc')} AS ycd, {_ddwf('ys')} AS ysd,
-    {_ddwf('sc')} AS scd, {_ddwf('ss')} AS ssd,
-    {_ddwf('q')} AS qd, {_ddwf('s')} AS sd
-  FROM pp CROSS JOIN tot
-), c AS (
-  SELECT p, n,
-    ycd - m * scd AS a, ysd - m * ssd AS b, qd - sd * m AS den
-  FROM d
-)
-SELECT CAST(p AS BIGINT) AS period, CAST(n AS BIGINT) AS n_days,
-  CASE WHEN den > 0 THEN
-    round(2.0 * (a * a + b * b) / (CAST(n AS DOUBLE) * den), 6)
-  END AS power_fraction
-FROM c
-"""
-
-_ORACLES["burstiness_user_events"] = f"""
-WITH ev AS (
-  SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS tsu
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), gaps AS (
-  SELECT u, tsu - lag(tsu) OVER (PARTITION BY u ORDER BY tsu) AS g
-  FROM ev
-), gg AS (SELECT u, g FROM gaps WHERE g IS NOT NULL),
-per_u AS (
-  SELECT u, count(*) AS ng,
-    SUM(CAST(g AS DECIMAL(38,0))) AS sg,
-    SUM(CAST(CAST(g AS DECIMAL(19,0)) * g AS DECIMAL(38,0))) AS qg
-  FROM gg GROUP BY 1
-), scored AS (
-  SELECT ng,
-    CASE WHEN sqrt(greatest({_ddw('qg')} / CAST(ng AS DOUBLE)
-                   - ({_ddw('sg')} / CAST(ng AS DOUBLE))
-                     * ({_ddw('sg')} / CAST(ng AS DOUBLE)), 0.0))
-              + {_ddw('sg')} / CAST(ng AS DOUBLE) > 0
-    THEN round((sqrt(greatest({_ddw('qg')} / CAST(ng AS DOUBLE)
-                     - ({_ddw('sg')} / CAST(ng AS DOUBLE))
-                       * ({_ddw('sg')} / CAST(ng AS DOUBLE)), 0.0))
-                - {_ddw('sg')} / CAST(ng AS DOUBLE))
-               / (sqrt(greatest({_ddw('qg')} / CAST(ng AS DOUBLE)
-                       - ({_ddw('sg')} / CAST(ng AS DOUBLE))
-                         * ({_ddw('sg')} / CAST(ng AS DOUBLE)), 0.0))
-                  + {_ddw('sg')} / CAST(ng AS DOUBLE)), 6)
-    END AS b
-  FROM per_u WHERE ng >= 2
-), folded AS (
-  SELECT count(*) AS n_users, SUM(ng) AS n_gaps,
-    SUM(CAST(b AS DECIMAL(18,6))) AS sb,
-    SUM(CASE WHEN b > 0 THEN 1 ELSE 0 END) AS nb
-  FROM scored WHERE b IS NOT NULL
-)
-SELECT CAST(n_users AS BIGINT) AS n_users,
-  CAST(n_gaps AS BIGINT) AS n_gaps,
-  CASE WHEN n_users > 0 THEN
-    round(CAST(sb AS DOUBLE) / CAST(n_users AS DOUBLE), 6)
-  END AS mean_burstiness,
-  CASE WHEN n_users > 0 THEN
-    round(CAST(nb AS DOUBLE) / CAST(n_users AS DOUBLE), 6)
-  END AS share_bursty
-FROM folded
-"""
-
-_ORACLES["graph_degree_centralization"] = f"""
-WITH e0 AS (
-  SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), canon AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM e0 WHERE src <> dst
-), ends AS (
-  SELECT a AS node FROM canon UNION ALL SELECT b AS node FROM canon
-), deg AS (SELECT node, count(*) AS deg FROM ends GROUP BY 1),
-vv AS (SELECT deg AS v, count(*) AS c FROM deg GROUP BY 1),
-cum AS (
-  SELECT v, c, SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cumc
-  FROM vv
-), sums AS (
-  SELECT SUM(c) AS n_nodes,
-    SUM(CAST(CAST(v AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-             AS DECIMAL(38,0))) AS sum_deg,
-    SUM(CAST(CAST(v AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-             * (2 * CAST(cumc AS DECIMAL(19,0))
-                - CAST(c AS DECIMAL(19,0)) + 1)
-             AS DECIMAL(38,0))) AS num2,
-    max(v) AS d_max,
-    SUM(CAST(CAST(CAST(v AS DECIMAL(19,0))
-                  * (CAST(v AS DECIMAL(19,0)) - 1) AS DECIMAL(38,0))
-             * CAST(c AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS wedge2
-  FROM cum
-)
-SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-  CAST(sum_deg // 2 AS BIGINT) AS n_edges,
-  CAST(d_max AS BIGINT) AS max_degree,
-  CASE WHEN n_nodes > 2 THEN
-    round((CAST(n_nodes AS DOUBLE) * CAST(d_max AS DOUBLE)
-           - {_ddw('sum_deg')})
-          / ((CAST(n_nodes AS DOUBLE) - 1.0)
-             * (CAST(n_nodes AS DOUBLE) - 2.0)), 6)
-  END AS centralization,
-  CASE WHEN n_nodes > 0 AND sum_deg > 0 THEN
-    round({_ddw('num2')} / (CAST(n_nodes AS DOUBLE) * {_ddw('sum_deg')})
-          - (CAST(n_nodes AS DOUBLE) + 1.0) / CAST(n_nodes AS DOUBLE), 6)
-  END AS degree_gini,
-  CAST({_ddw('wedge2')} / 2.0 AS BIGINT) AS wedge_count
-FROM sums
-"""
-
-
-_ORACLES["benford_second_digit_orders"] = """
-WITH sigs AS (
-  SELECT regexp_replace(regexp_replace(
-           CAST(CAST(abs(o_totalprice) AS DECIMAL(12,2)) AS VARCHAR),
-           '\\.', ''), '^0+', '') AS sig
-  FROM orders WHERE o_totalprice IS NOT NULL
-), base AS (
-  SELECT CAST(substring(sig, 2, 1) AS INTEGER) AS digit, count(*) AS n
-  FROM sigs WHERE len(sig) >= 2 GROUP BY 1
-), w AS (
-  SELECT digit, n, SUM(n) OVER () AS tot,
-    CAST(([0.119679, 0.11389, 0.108821, 0.10433, 0.100308, 0.096677, 0.093375, 0.090352, 0.08757, 0.084997])[digit + 1] AS DOUBLE) AS exp_f
-  FROM base
-)
-SELECT digit, n,
-  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS observed_freq,
-  round(exp_f, 6) AS benford_freq,
-  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) - exp_f, 6) AS deviation
-FROM w
-"""
-
-_ORACLES["last_digit_uniformity_price"] = """
-WITH dd AS (
-  SELECT CAST(floor(abs(CAST(l_extendedprice AS DOUBLE)) * 100.0 + 0.5)
-              AS BIGINT) % 10 AS digit,
-    count(*) AS c
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), w AS (SELECT digit, c, SUM(c) OVER () AS n FROM dd),
-chi AS (
-  SELECT max(n) AS n, count(*) AS n_digits_seen,
-    round(CAST(SUM(CAST(round(
-      (CAST(c AS DOUBLE) - CAST(n AS DOUBLE) / 10.0)
-      * (CAST(c AS DOUBLE) - CAST(n AS DOUBLE) / 10.0)
-      / (CAST(n AS DOUBLE) / 10.0), 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
-      AS chi2
-  FROM w
-), top AS (
-  SELECT digit AS max_digit, c AS top_c FROM w
-  ORDER BY c DESC, digit ASC LIMIT 1
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_digits_seen AS BIGINT) AS n_digits_seen,
-  chi2, CAST(max_digit AS BIGINT) AS max_digit,
-  round(CAST(top_c AS DOUBLE) / CAST(n AS DOUBLE), 6) AS max_digit_share
-FROM chi CROSS JOIN top
-"""
-
-
-# ----- round-8 wave 2 -----
-
-
-def q_mantel_haenszel_status_price(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Mantel-Haenszel pooled odds ratio of finished-status vs
-    high-value orders across priority strata
-    (operators/hypotests.py:mantel_haenszel_or)."""
-    from breweries_etl_spark.operators.hypotests import mantel_haenszel_or
-
-    return mantel_haenszel_or(
-        load_table(spark, sf_dir, "orders"),
-        "o_orderpriority",
-        F.col("o_orderstatus") == "F",
-        F.col("o_totalprice") > 150000,
-    )
-
-
-def q_cochran_armitage_priority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cochran-Armitage trend in the high-value-order rate along the
-    priority order (operators/hypotests.py:cochran_armitage_trend)."""
-    from breweries_etl_spark.operators.hypotests import cochran_armitage_trend
-
-    return cochran_armitage_trend(
-        load_table(spark, sf_dir, "orders"),
-        "o_orderpriority",
-        F.col("o_totalprice") > 150000,
-        ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"],
-    )
-
-
-def q_poisson_rate_ratio_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Poisson event-rate ratio (events per active day) between even-
-    and odd-id users (operators/hypotests.py:poisson_rate_ratio)."""
-    from breweries_etl_spark.operators.hypotests import poisson_rate_ratio
-
-    ev = load_events(spark, sf_dir).withColumn(
-        "day", F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    )
-    return poisson_rate_ratio(ev, F.col("user_id") % 2 == 0, "day")
-
-
-def q_robust_shape_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bowley skew / Moors kurtosis / quartile dispersion of
-    l_extendedprice (operators/hypotests.py:robust_shape_profile)."""
-    from breweries_etl_spark.operators.hypotests import robust_shape_profile
-
-    return robust_shape_profile(
-        load_table(spark, sf_dir, "lineitem"), "l_extendedprice"
-    )
-
-
-def q_variance_homogeneity_price_flag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cochran's C + Hartley F_max across returnflag groups on
-    l_extendedprice (operators/hypotests.py:variance_homogeneity)."""
-    from breweries_etl_spark.operators.hypotests import variance_homogeneity
-
-    return variance_homogeneity(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_yules_k_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yule's K / Simpson's D repeat-rate constants of the corpus
-    (operators/text.py:yules_k)."""
-    from breweries_etl_spark.operators.text import yules_k
-
-    return yules_k(load_table(spark, sf_dir, "documents"))
-
-
-def q_bigram_cond_entropy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus bigram conditional entropy H(w2|w1)
-    (operators/text.py:bigram_cond_entropy)."""
-    from breweries_etl_spark.operators.text import bigram_cond_entropy
-
-    return bigram_cond_entropy(load_table(spark, sf_dir, "documents"))
-
-
-def q_source_vocab_jaccard_docs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pairwise vocabulary Jaccard between sources
-    (operators/text.py:source_vocab_jaccard)."""
-    from breweries_etl_spark.operators.text import source_vocab_jaccard
-
-    return source_vocab_jaccard(load_table(spark, sf_dir, "documents"))
-
-
-def q_hurst_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hurst exponent of the daily event-value series by R/S analysis
-    (operators/temporal.py:hurst_rs_daily)."""
-    from breweries_etl_spark.operators.temporal import hurst_rs_daily
-
-    return hurst_rs_daily(load_events(spark, sf_dir))
-
-
-def q_spiegelhalter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spiegelhalter calibration z of the hashed-linear classifier vs
-    the heuristic quality label
-    (operators/hypotests.py:spiegelhalter_z)."""
-    from breweries_etl_spark.operators.filtering import classifier_score_expr
-    from breweries_etl_spark.operators.hypotests import spiegelhalter_z
-    from breweries_etl_spark.operators.text import quality_score_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    return spiegelhalter_z(
-        docs,
-        classifier_score_expr(F.col("text")),
-        quality_score_expr(F.col("text")) >= F.lit(0.5),
-    )
-
-
-def q_uncertainty_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil's uncertainty coefficient U(event_type | weekday)
-    (operators/hypotests.py:uncertainty_coefficient)."""
-    from breweries_etl_spark.operators.hypotests import uncertainty_coefficient
-
-    ev = load_events(spark, sf_dir).withColumn(
-        "dow",
-        (
-            F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-            % 7
-        ).cast("string"),
-    )
-    return uncertainty_coefficient(ev, "event_type", "dow")
-
-
-_ORACLES["mantel_haenszel_status_price"] = f"""
-WITH per_k AS (
-  SELECT o_orderpriority AS s,
-    SUM(CASE WHEN o_orderstatus = 'F' AND o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS a,
-    SUM(CASE WHEN o_orderstatus = 'F' AND NOT o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS b,
-    SUM(CASE WHEN o_orderstatus <> 'F' AND o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS c,
-    SUM(CASE WHEN o_orderstatus <> 'F' AND NOT o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS d
-  FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY 1
-), folded AS (
-  SELECT SUM(CAST(a + b + c + d AS DECIMAL(38,0))) AS n, count(*) AS k,
-    SUM(CAST(round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                   / CAST(a + b + c + d AS DOUBLE), 6)
-             AS DECIMAL(28,6))) AS num,
-    SUM(CAST(round(CAST(b AS DOUBLE) * CAST(c AS DOUBLE)
-                   / CAST(a + b + c + d AS DOUBLE), 6)
-             AS DECIMAL(28,6))) AS den
-  FROM per_k
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_strata,
-  CASE WHEN num > 0 AND den > 0 THEN
-    round({_ddwf('num')} / {_ddwf('den')}, 6) END AS or_mh,
-  CASE WHEN num > 0 AND den > 0 THEN
-    round(ln({_ddwf('num')} / {_ddwf('den')}), 6) END AS log_or_mh
-FROM folded
-"""
-
-_ORACLES["cochran_armitage_priority"] = f"""
-WITH per_g AS (
-  SELECT o_orderpriority AS g, count(*) AS n_g,
-    SUM(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END) AS y_g,
-    CAST(substring(o_orderpriority, 1, 1) AS INTEGER) AS s
-  FROM orders WHERE o_orderpriority IN
-    ('1-URGENT', '2-HIGH', '3-MEDIUM', '4-NOT SPECIFIED', '5-LOW')
-  GROUP BY 1
-), folded AS (
-  SELECT SUM(n_g) AS n, count(*) AS k, SUM(y_g) AS y,
-    SUM(CAST(CAST(s AS DECIMAL(19,0)) * y_g AS DECIMAL(38,0))) AS sy,
-    SUM(CAST(CAST(s AS DECIMAL(19,0)) * n_g AS DECIMAL(38,0))) AS sn,
-    SUM(CAST(CAST(s AS DECIMAL(19,0)) * CAST(s AS DECIMAL(19,0)) * n_g
-             AS DECIMAL(38,0))) AS ssn
-  FROM per_g
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN n > 0 THEN
-    round(CAST(y AS DOUBLE) / CAST(n AS DOUBLE), 6) END AS p_pooled,
-  CASE WHEN (CAST(y AS DOUBLE) / CAST(n AS DOUBLE))
-       * (1.0 - CAST(y AS DOUBLE) / CAST(n AS DOUBLE))
-       * ({_ddw('ssn')} - {_ddw('sn')} * {_ddw('sn')} / CAST(n AS DOUBLE))
-       > 0 THEN
-    round(({_ddw('sy')}
-           - (CAST(y AS DOUBLE) / CAST(n AS DOUBLE)) * {_ddw('sn')})
-          / sqrt((CAST(y AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (1.0 - CAST(y AS DOUBLE) / CAST(n AS DOUBLE))
-                 * ({_ddw('ssn')}
-                    - {_ddw('sn')} * {_ddw('sn')} / CAST(n AS DOUBLE))), 6)
-  END AS z_score
-FROM folded
-"""
-
-_ORACLES["poisson_rate_ratio_events"] = """
-WITH base AS (
-  SELECT (user_id % 2 = 0) AS in_a,
-    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS e
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-), counts AS (
-  SELECT SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS k_a,
-    SUM(CASE WHEN in_a THEN 0 ELSE 1 END) AS k_b
-  FROM base
-), expo AS (
-  SELECT SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS e_a,
-    SUM(CASE WHEN in_a THEN 0 ELSE 1 END) AS e_b
-  FROM (SELECT DISTINCT in_a, e FROM base)
-)
-SELECT CAST(k_a AS BIGINT) AS events_a, CAST(k_b AS BIGINT) AS events_b,
-  CAST(e_a AS BIGINT) AS exposure_a, CAST(e_b AS BIGINT) AS exposure_b,
-  CASE WHEN k_a > 0 AND k_b > 0 AND e_a > 0 AND e_b > 0 THEN
-    round((CAST(k_a AS DOUBLE) / CAST(e_a AS DOUBLE))
-          / (CAST(k_b AS DOUBLE) / CAST(e_b AS DOUBLE)), 6)
-  END AS rate_ratio,
-  CASE WHEN k_a > 0 AND k_b > 0 AND e_a > 0 AND e_b > 0 THEN
-    round(ln((CAST(k_a AS DOUBLE) / CAST(e_a AS DOUBLE))
-             / (CAST(k_b AS DOUBLE) / CAST(e_b AS DOUBLE)))
-          / sqrt(1.0 / CAST(k_a AS DOUBLE) + 1.0 / CAST(k_b AS DOUBLE)), 6)
-  END AS z_score
-FROM counts CROSS JOIN expo
-"""
-
-_ORACLES["robust_shape_price"] = """
-WITH vc AS (
-  SELECT l_extendedprice AS v, count(*) AS c FROM lineitem
-  WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (SELECT SUM(c) AS n FROM vc),
-agg AS (
-  SELECT max(n) AS n,
-    min(CASE WHEN 8 * cum >= 1 * n THEN v END) AS e1,
-    min(CASE WHEN 8 * cum >= 2 * n THEN v END) AS e2,
-    min(CASE WHEN 8 * cum >= 3 * n THEN v END) AS e3,
-    min(CASE WHEN 8 * cum >= 4 * n THEN v END) AS e4,
-    min(CASE WHEN 8 * cum >= 5 * n THEN v END) AS e5,
-    min(CASE WHEN 8 * cum >= 6 * n THEN v END) AS e6,
-    min(CASE WHEN 8 * cum >= 7 * n THEN v END) AS e7
-  FROM cum CROSS JOIN tot
-), d AS (
-  SELECT n,
-    CAST(e1 AS DOUBLE) AS e1, CAST(e2 AS DOUBLE) AS e2,
-    CAST(e3 AS DOUBLE) AS e3, CAST(e4 AS DOUBLE) AS e4,
-    CAST(e5 AS DOUBLE) AS e5, CAST(e6 AS DOUBLE) AS e6,
-    CAST(e7 AS DOUBLE) AS e7
-  FROM agg
-)
-SELECT CAST(n AS BIGINT) AS n, e2 AS q1, e4 AS median, e6 AS q3,
-  CASE WHEN e6 - e2 > 0 THEN
-    round((e6 + e2 - 2.0 * e4) / (e6 - e2), 6) END AS bowley_skew,
-  CASE WHEN e6 - e2 > 0 THEN
-    round(((e7 - e5) + (e3 - e1)) / (e6 - e2), 6) END AS moors_kurtosis,
-  CASE WHEN e6 + e2 <> 0 THEN
-    round((e6 - e2) / (e6 + e2), 6) END AS quartile_dispersion
-FROM d
-"""
-
-_ORACLES["variance_homogeneity_price_flag"] = f"""
-WITH per_g AS (
-  SELECT l_returnflag AS g, count(*) AS n_g,
-    SUM(CAST({_qm8('l_extendedprice')} AS DECIMAL(38,2))) AS s,
-    SUM(CAST({_qm8('l_extendedprice')} * {_qm8('l_extendedprice')}
-             AS DECIMAL(38,4))) AS q
-  FROM lineitem
-  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-  GROUP BY 1
-), scored AS (
-  SELECT n_g,
-    round(({_ddwf('q')} - {_ddwf('s')}
-           * ({_ddwf('s')} / CAST(n_g AS DOUBLE)))
-          / (CAST(n_g AS DOUBLE) - 1.0), 6) AS v
-  FROM per_g WHERE n_g > 1
-), folded AS (
-  SELECT SUM(n_g) AS n, count(*) AS k, max(v) AS vmax, min(v) AS vmin,
-    SUM(CAST(v AS DECIMAL(28,6))) AS vsum
-  FROM scored WHERE v IS NOT NULL
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  vmax AS max_var, vmin AS min_var,
-  CASE WHEN vsum > 0 THEN round(vmax / {_ddwf('vsum')}, 6) END AS cochran_c,
-  CASE WHEN k > 1 AND vmin > 0 THEN round(vmax / vmin, 6) END AS hartley_fmax
-FROM folded
-"""
-
-_ORACLES["yules_k_docs"] = f"""
-WITH tf AS (
-  SELECT term, count(*) AS f FROM (
-    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-    FROM documents WHERE text IS NOT NULL
-  ) GROUP BY 1
-), folded AS (
-  SELECT SUM(f) AS n, count(*) AS v,
-    SUM(CAST(CAST(f AS DECIMAL(19,0)) * f AS DECIMAL(38,0))) AS f2
-  FROM tf
-)
-SELECT CAST(n AS BIGINT) AS n_tokens, CAST(v AS BIGINT) AS n_types,
-  CASE WHEN n > 0 THEN
-    round(1e4 * ({_ddw('f2')} - CAST(n AS DOUBLE))
-          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6)
-  END AS yules_k,
-  CASE WHEN n > 1 THEN
-    round(({_ddw('f2')} - CAST(n AS DOUBLE))
-          / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)), 6)
-  END AS simpson_d
-FROM folded
-"""
-
-_ORACLES["bigram_cond_entropy_docs"] = """
-WITH norm AS (
-  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ',
-    'g'), ' +', ' ', 'g')) AS nt
-  FROM documents WHERE text IS NOT NULL
-), words AS (SELECT string_split(nt, ' ') AS w FROM norm),
-pairs AS (
-  SELECT w1, w2, count(*) AS c FROM (
-    SELECT unnest([w[i] FOR i IN range(1, len(w))]) AS w1,
-      unnest([w[i + 1] FOR i IN range(1, len(w))]) AS w2
-    FROM words
-  ) WHERE w1 <> '' AND w2 <> '' GROUP BY 1, 2
-), hb AS (
-  SELECT max(n) AS nb, count(*) AS tb,
-    CAST(SUM(CAST(round(
-      -(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-      * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-      AS DECIMAL(18,6))) AS DOUBLE) AS h_b
-  FROM (SELECT c, SUM(c) OVER () AS n FROM pairs)
-), hp AS (
-  SELECT count(*) AS tp,
-    CAST(SUM(CAST(round(
-      -(CAST(cp AS DOUBLE) / CAST(n AS DOUBLE))
-      * ln(CAST(cp AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-      AS DECIMAL(18,6))) AS DOUBLE) AS h_p
-  FROM (SELECT cp, SUM(cp) OVER () AS n FROM
-        (SELECT w1, SUM(c) AS cp FROM pairs GROUP BY 1))
-)
-SELECT CAST(nb AS BIGINT) AS n_bigrams, CAST(tb AS BIGINT) AS n_bigram_types,
-  CAST(tp AS BIGINT) AS n_prefix_types,
-  round(h_b, 6) AS h_bigram, round(h_p, 6) AS h_prefix,
-  round(h_b - h_p, 6) AS cond_entropy
-FROM hb CROSS JOIN hp
-"""
-
-_ORACLES["source_vocab_jaccard_docs"] = """
-WITH st AS (
-  SELECT DISTINCT source, term FROM (
-    SELECT source,
-      unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-    FROM documents WHERE source IS NOT NULL AND text IS NOT NULL
-  )
-), sizes AS (SELECT source, count(*) AS nv FROM st GROUP BY 1),
-inter AS (
-  SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_common
-  FROM st a JOIN st b ON a.term = b.term AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT source_a, source_b,
-  CAST(sa.nv AS BIGINT) AS n_a, CAST(sb.nv AS BIGINT) AS n_b,
-  CAST(n_common AS BIGINT) AS n_common,
-  round(CAST(n_common AS DOUBLE)
-        / CAST(sa.nv + sb.nv - n_common AS DOUBLE), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.source = inter.source_a
-JOIN sizes sb ON sb.source = inter.source_b
-"""
-
-_ORACLES["hurst_daily_value"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y0
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), idx AS (
-  SELECT row_number() OVER (ORDER BY day) - 1 AS i,
-    CAST(y0 AS DECIMAL(18,2)) AS y
-  FROM daily
-), rows_ AS (
-  SELECT s, i, y, i // s AS blk
-  FROM idx CROSS JOIN (SELECT unnest([8, 16, 32]) AS s)
-), t AS (
-  SELECT s, blk, i, y,
-    count(*) OVER (PARTITION BY s, blk) AS cnt,
-    SUM(CAST(y AS DECIMAL(38,2))) OVER (PARTITION BY s, blk) AS tot,
-    SUM(CAST(y * y AS DECIMAL(38,4))) OVER (PARTITION BY s, blk) AS q,
-    SUM(CAST(y AS DECIMAL(38,2))) OVER (PARTITION BY s, blk ORDER BY i
-      ROWS UNBOUNDED PRECEDING) AS cumy,
-    row_number() OVER (PARTITION BY s, blk ORDER BY i) AS r
-  FROM rows_
-), full_t AS (SELECT * FROM t WHERE cnt = s),
-per_blk AS (
-  SELECT s, blk, max(cnt) AS cnt, max(tot) AS tot, max(q) AS q,
-    max({_dd('cumy')} - CAST(r AS DOUBLE)
-        * ({_dd('tot')} / CAST(cnt AS DOUBLE))) AS cd_max,
-    min({_dd('cumy')} - CAST(r AS DOUBLE)
-        * ({_dd('tot')} / CAST(cnt AS DOUBLE))) AS cd_min
-  FROM full_t GROUP BY 1, 2
-), scored AS (
-  SELECT s,
-    CASE WHEN {_dd('q')} / CAST(cnt AS DOUBLE)
-              - ({_dd('tot')} / CAST(cnt AS DOUBLE))
-                * ({_dd('tot')} / CAST(cnt AS DOUBLE)) > 0
-    THEN round((cd_max - cd_min)
-               / sqrt({_dd('q')} / CAST(cnt AS DOUBLE)
-                      - ({_dd('tot')} / CAST(cnt AS DOUBLE))
-                        * ({_dd('tot')} / CAST(cnt AS DOUBLE))), 6)
-    END AS rs
-  FROM per_blk
-), per_size AS (
-  SELECT s, count(*) AS nb, SUM(CAST(rs AS DECIMAL(28,6))) AS rs_sum
-  FROM scored WHERE rs IS NOT NULL GROUP BY 1
-  HAVING SUM(CAST(rs AS DECIMAL(28,6))) > 0
-), logs AS (
-  SELECT round(ln(CAST(s AS DOUBLE)), 6) AS lx,
-    round(ln(CAST(rs_sum AS DOUBLE) / CAST(nb AS DOUBLE)), 6) AS ly,
-    nb
-  FROM per_size
-), mom AS (
-  SELECT count(*) AS np, SUM(nb) AS n_blocks_used,
-    CAST(SUM(CAST(lx AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-    CAST(SUM(CAST(ly AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-    CAST(SUM(CAST(round(lx * lx, 12) AS DECIMAL(28,12))) AS DOUBLE) AS sxx,
-    CAST(SUM(CAST(round(lx * ly, 12) AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
-    CAST(SUM(CAST(round(ly * ly, 12) AS DECIMAL(28,12))) AS DOUBLE) AS syy
-  FROM logs
-), nd AS (SELECT count(*) AS n_days FROM daily),
-c AS (
-  SELECT np, n_blocks_used, n_days,
-    sxx - sx * sx / CAST(np AS DOUBLE) AS sxx_c,
-    sxy - sx * sy / CAST(np AS DOUBLE) AS sxy_c,
-    syy - sy * sy / CAST(np AS DOUBLE) AS syy_c
-  FROM mom CROSS JOIN nd
-)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-  CAST(n_blocks_used AS BIGINT) AS n_blocks_used,
-  CASE WHEN np > 1 AND sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c / sxx_c, 6) END AS hurst_h,
-  CASE WHEN np > 1 AND sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c * sxy_c / (sxx_c * syy_c), 6) END AS r2
-FROM c
-"""
-
-_ORACLES["spiegelhalter_docs"] = f"""
-WITH scored AS (
-  SELECT {_CLF_SCORE_SQL} AS p,
-    CASE WHEN {_HEUR_QUALITY_SQL} >= 0.5 THEN 1 ELSE 0 END AS y
-  FROM documents
-), folded AS (
-  SELECT count(*) AS n, SUM(y) AS n_pos,
-    SUM(CAST(round((CAST(y AS DOUBLE) - p) * (1.0 - 2.0 * p), 6)
-             AS DECIMAL(28,6))) AS num,
-    SUM(CAST(round((1.0 - 2.0 * p) * (1.0 - 2.0 * p) * p * (1.0 - p), 6)
-             AS DECIMAL(28,6))) AS den
-  FROM scored
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_pos AS BIGINT) AS n_pos,
-  CASE WHEN {_ddwf('den')} > 0 THEN
-    round({_ddwf('num')} / sqrt({_ddwf('den')}), 6)
-  END AS spiegelhalter_z
-FROM folded
-"""
-
-_ORACLES["uncertainty_event_dow"] = """
-WITH cells AS (
-  SELECT event_type AS x,
-    CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 % 7 AS VARCHAR)
-      AS y,
-    count(*) AS c
-  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2
-), t AS (
-  SELECT x, y, c, SUM(c) OVER () AS n, SUM(c) OVER (PARTITION BY y) AS cy
-  FROM cells
-), folded AS (
-  SELECT max(n) AS n, count(*) AS n_cells,
-    CAST(SUM(CAST(round(
-      -(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-      * ln((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-           / (CAST(cy AS DOUBLE) / CAST(n AS DOUBLE))), 6)
-      AS DECIMAL(18,6))) AS DOUBLE) AS hxy
-  FROM t
-), hx AS (
-  SELECT CAST(SUM(CAST(round(
-    -(CAST(cx AS DOUBLE) / CAST(n AS DOUBLE))
-    * ln(CAST(cx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-    AS DECIMAL(18,6))) AS DOUBLE) AS hx
-  FROM (SELECT cx, SUM(cx) OVER () AS n FROM
-        (SELECT x, SUM(c) AS cx FROM cells GROUP BY 1))
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_cells AS BIGINT) AS n_cells,
-  round(hx, 6) AS h_x, round(hxy, 6) AS h_x_given_y,
-  CASE WHEN hx > 0 THEN round((hx - hxy) / hx, 6) END AS uncertainty_xy
-FROM folded CROSS JOIN hx
-"""
-
-
-# ----- round-8 wave 3 -----
-
-
-def q_ad_ksample_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scholz-Stephens k-sample Anderson-Darling across the three
-    returnflag groups on l_extendedprice
-    (operators/hypotests.py:ad_ksample)."""
-    from breweries_etl_spark.operators.hypotests import ad_ksample
-
-    return ad_ksample(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_extendedprice",
-        ["A", "N", "R"],
-    )
-
-
-def q_bland_altman_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bland-Altman agreement between the RECORDED n_chars column and
-    the recomputed text length (operators/hypotests.py:bland_altman) —
-    a data-quality audit of a stored derived column."""
-    from breweries_etl_spark.operators.hypotests import bland_altman
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "len_actual", F.length(F.col("text")).cast("double")
-    )
-    return bland_altman(docs, "n_chars", "len_actual")
-
-
-def q_pinball_loss_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean pinball loss of the per-returnflag exact-quantile predictor
-    at tau 0.5/0.9 (operators/hypotests.py:pinball_loss)."""
-    from breweries_etl_spark.operators.hypotests import pinball_loss
-
-    return pinball_loss(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice"
-    )
-
-
-def q_type_mix_entropy_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily event-type mix entropy and its linear trend
-    (operators/temporal.py:type_mix_entropy_trend)."""
-    from breweries_etl_spark.operators.temporal import type_mix_entropy_trend
-
-    return type_mix_entropy_trend(load_events(spark, sf_dir))
-
-
-def q_embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension variance / anisotropy health row of the embedding
-    table (operators/similarity.py:embedding_dim_profile)."""
-    from breweries_etl_spark.operators.similarity import embedding_dim_profile
-
-    return embedding_dim_profile(load_table(spark, sf_dir, "embeddings"))
-
-
-def q_lang_pred_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-class precision/recall/F1 of the heuristic language router
-    vs the labeled lang column (operators/text.py:lang_pred_quality)."""
-    from breweries_etl_spark.operators.text import lang_pred_quality
-
-    return lang_pred_quality(load_table(spark, sf_dir, "documents"))
-
-
-def _adk_group_cte(name: str, g: str) -> str:
-    return f"""{name} AS (
-  SELECT max(nn) AS nn, max(n_i) AS n_i,
-    {_ddw('SUM(t_fp)')} / 1e9 / CAST(max(n_i) AS DOUBLE) AS a_i
-  FROM (
-    SELECT nn, n_i,
-      CASE WHEN CAST(cum_a + cum_b AS DOUBLE) < CAST(nn AS DOUBLE) THEN
-        CAST(floor(CAST(ca + cb AS DOUBLE)
-          * (CAST(nn AS DOUBLE) * CAST(cum_a AS DOUBLE)
-             - CAST(n_i AS DOUBLE) * CAST(cum_a + cum_b AS DOUBLE))
-          * (CAST(nn AS DOUBLE) * CAST(cum_a AS DOUBLE)
-             - CAST(n_i AS DOUBLE) * CAST(cum_a + cum_b AS DOUBLE))
-          / (CAST(cum_a + cum_b AS DOUBLE)
-             * (CAST(nn AS DOUBLE) - CAST(cum_a + cum_b AS DOUBLE)))
-          * 1e9) AS DECIMAL(38,0))
-      END AS t_fp
-    FROM (
-      SELECT v, ca, cb,
-        SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-        SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-        SUM(ca) OVER () AS n_i, SUM(ca + cb) OVER () AS nn
-      FROM (
-        SELECT l_extendedprice AS v,
-          SUM(CASE WHEN l_returnflag = '{g}' THEN 1 ELSE 0 END) AS ca,
-          SUM(CASE WHEN l_returnflag = '{g}' THEN 0 ELSE 1 END) AS cb
-        FROM lineitem
-        WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-          AND l_returnflag IN ('A', 'N', 'R')
-        GROUP BY 1
-      )
-    )
-  )
-)"""
-
-
-_ORACLES["ad_ksample_price_flag"] = f"""
-WITH {_adk_group_cte('ga', 'A')},
-{_adk_group_cte('gn', 'N')},
-{_adk_group_cte('gr', 'R')},
-allp AS (
-  SELECT nn, n_i, a_i FROM ga UNION ALL SELECT nn, n_i, a_i FROM gn
-  UNION ALL SELECT nn, n_i, a_i FROM gr
-), folded AS (
-  -- k counts PRESENT groups (n_i > 0): each group CTE is a 1-row
-  -- aggregate that emits NULLs when its sample is absent, and a bare
-  -- count(*) read 3 on an empty table (empty-table sweep r10)
-  SELECT max(nn) AS n, count(CASE WHEN n_i > 0 THEN 1 END) AS k,
-    SUM(CAST(round(a_i, 6) AS DECIMAL(28,6))) AS a
-  FROM allp
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  round({_ddwf('a')}, 6) AS ad_ksample
-FROM folded
-"""
-
-
-def q_ad_ksample_standardized(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scholz-Stephens k-sample AD with the eq. 4-7 standardized form
-    (A2_kN - (k-1))/sigma_N — the run-size-free scale; sigma_N's
-    harmonic sums fold from one bucketed-prefix pipeline over
-    range(1, N) (operators/hypotests.py:ad_ksample standardized=True,
-    the round-9 ADVICE item)."""
-    from breweries_etl_spark.operators.hypotests import ad_ksample
-
-    return ad_ksample(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_extendedprice",
-        ["A", "N", "R"],
-        standardized=True,
-    )
-
-
-# sigma_N twin: h_fp/g_fp are all-integer floor(10^15/.) folds (DuckDB
-# // mirrors Spark's div bit-exactly on positive operands); the pooled
-# index j = 1..N-1 derives from row_number over the pool (DuckDB range()
-# rejects subquery bounds); the eq. 4-7 polynomial mirrors the Spark
-# column expressions in exact textual order.
-_ORACLES["ad_ksample_standardized"] = f"""
-WITH {_adk_group_cte('ga', 'A')},
-{_adk_group_cte('gn', 'N')},
-{_adk_group_cte('gr', 'R')},
-allp AS (
-  SELECT nn, n_i, a_i FROM ga WHERE n_i > 0
-  UNION ALL SELECT nn, n_i, a_i FROM gn WHERE n_i > 0
-  UNION ALL SELECT nn, n_i, a_i FROM gr WHERE n_i > 0
-), folded AS (
-  SELECT max(nn) AS n, count(*) AS k,
-    SUM(CAST(round(a_i, 6) AS DECIMAL(28,6))) AS a,
-    SUM(1000000000000000 // n_i) AS hs_fp
-  FROM allp
-), pool AS (
-  SELECT l_extendedprice AS v FROM lineitem
-  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-    AND l_returnflag IN ('A', 'N', 'R')
-), idx AS (
-  SELECT CAST(row_number() OVER () AS BIGINT) AS j FROM pool
-  QUALIFY j <= (SELECT count(*) FROM pool) - 1
-), harm AS (
-  SELECT j, 1000000000000000 // j AS ht FROM idx
-), hcum AS (
-  SELECT j, SUM(ht) OVER (ORDER BY j ROWS UNBOUNDED PRECEDING) AS hc,
-    SUM(ht) OVER () AS h_fp
-  FROM harm
-), gf AS (
-  SELECT max(h_fp) AS h_fp,
-    SUM((h_fp - hc) // ((SELECT count(*) FROM pool) - j)) AS g_fp
-  FROM hcum WHERE j <= (SELECT count(*) FROM pool) - 2
-), sc AS (
-  SELECT n, k, a,
-    CAST(k AS DOUBLE) AS kk, CAST(n AS DOUBLE) AS nn_d,
-    {_ddw('h_fp')} / 1e15 AS hh,
-    {_ddw('g_fp')} / 1e15 AS gg,
-    (CAST(CAST(floor(hs_fp) AS BIGINT) AS DOUBLE)
-     + CAST(hs_fp - floor(hs_fp) AS DOUBLE)) / 1e15 AS caph
-  FROM folded, gf
-), poly AS (
-  SELECT n, k, a, kk, nn_d,
-    (4.0*gg - 6.0)*(kk - 1.0) + (10.0 - 6.0*gg)*caph AS t_a,
-    (2.0*gg - 4.0)*kk*kk + 8.0*hh*kk
-      + (2.0*gg - 14.0*hh - 4.0)*caph - 8.0*hh + 4.0*gg - 6.0 AS t_b,
-    (6.0*hh + 2.0*gg - 2.0)*kk*kk + (4.0*hh - 4.0*gg + 6.0)*kk
-      + (2.0*hh - 6.0)*caph + 4.0*hh AS t_c,
-    (2.0*hh + 6.0)*kk*kk - 4.0*hh*kk AS t_d
-  FROM sc
-), sig AS (
-  SELECT n, k, a, kk, nn_d,
-    (t_a*nn_d*nn_d*nn_d + t_b*nn_d*nn_d + t_c*nn_d + t_d)
-      / ((nn_d - 1.0)*(nn_d - 2.0)*(nn_d - 3.0)) AS sig2
-  FROM poly
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  round({_ddwf('a')}, 6) AS ad_ksample,
-  CASE WHEN sig2 > 0.0 THEN
-    round(({_ddwf('a')} / nn_d - (kk - 1.0)) / sqrt(sig2), 6)
-  END AS standardized_stat
-FROM sig
-"""
-
-_ORACLES["bland_altman_doclen"] = f"""
-WITH base AS (
-  SELECT CAST({_qm8('n_chars')} - {_qm8('CAST(len(text) AS DOUBLE)')}
-              AS DECIMAL(18,2)) AS d
-  FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(d AS DECIMAL(38,2))) AS s,
-    SUM(CAST(d * d AS DECIMAL(38,4))) AS q
-  FROM base
-), c AS (
-  SELECT n,
-    {_ddwf('s')} / CAST(n AS DOUBLE) AS mu,
-    sqrt(greatest(({_ddwf('q')} - {_ddwf('s')}
-                   * ({_ddwf('s')} / CAST(n AS DOUBLE)))
-                  / (CAST(n AS DOUBLE) - 1.0), 0.0)) AS sd
-  FROM mom
-), c2 AS (
-  SELECT n, mu, sd, mu - 1.96 * sd AS lo, mu + 1.96 * sd AS hi FROM c
-), outside AS (
-  SELECT SUM(CASE WHEN CAST(d AS DOUBLE) < lo OR CAST(d AS DOUBLE) > hi
-             THEN 1 ELSE 0 END) AS n_out
-  FROM base CROSS JOIN c2
-)
-SELECT CAST(n AS BIGINT) AS n,
-  round(mu, 6) AS mean_diff,
-  CASE WHEN n > 1 THEN round(sd, 6) END AS sd_diff,
-  CASE WHEN n > 1 THEN round(lo, 6) END AS loa_low,
-  CASE WHEN n > 1 THEN round(hi, 6) END AS loa_high,
-  CASE WHEN n > 0 THEN
-    round(CAST(n_out AS DOUBLE) / CAST(n AS DOUBLE), 6)
-  END AS pct_outside
-FROM c2 CROSS JOIN outside
-"""
-
-_ORACLES["pinball_loss_price"] = f"""
-WITH preds AS (
-  SELECT l_returnflag AS g,
-    quantile_disc(l_extendedprice, 0.5) AS q0,
-    quantile_disc(l_extendedprice, 0.9) AS q1
-  FROM lineitem
-  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-  GROUP BY 1
-), kk AS (SELECT count(*) AS k FROM preds),
-base AS (
-  SELECT l_returnflag AS g,
-    CAST({_qm8('l_extendedprice')} AS DOUBLE) AS y
-  FROM lineitem
-  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-), j AS (
-  SELECT y, CAST(q0 AS DOUBLE) AS q0, CAST(q1 AS DOUBLE) AS q1
-  FROM base JOIN preds USING (g)
-), rows_ AS (
-  SELECT CAST(0.5 AS DOUBLE) AS tau, y, q0 AS q FROM j
-  UNION ALL
-  SELECT CAST(0.9 AS DOUBLE) AS tau, y, q1 AS q FROM j
-), folded AS (
-  SELECT tau, count(*) AS n,
-    SUM(CAST(round(CASE WHEN y >= q THEN tau * (y - q)
-                   ELSE (1.0 - tau) * (q - y) END, 6)
-             AS DECIMAL(28,6))) AS ls
-  FROM rows_ GROUP BY 1
-)
-SELECT tau, CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN n > 0 THEN
-    round({_ddwf('ls')} / CAST(n AS DOUBLE), 6)
-  END AS mean_pinball
-FROM folded CROSS JOIN kk
-"""
-
-_ORACLES["type_mix_entropy_trend"] = f"""
-WITH cells AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    event_type AS t, count(*) AS c
-  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2
-), td AS (
-  SELECT day, c, SUM(c) OVER (PARTITION BY day) AS nd FROM cells
-), per_day AS (
-  SELECT day,
-    SUM(CAST(round(-(CAST(c AS DOUBLE) / CAST(nd AS DOUBLE))
-                   * ln(CAST(c AS DOUBLE) / CAST(nd AS DOUBLE)), 6)
-             AS DECIMAL(18,6))) AS h
-  FROM td GROUP BY 1
-), idx AS (
-  SELECT row_number() OVER (ORDER BY day) - 1 AS i, h FROM per_day
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(i AS DECIMAL(38,0))) AS sx,
-    SUM(CAST(h AS DECIMAL(38,6))) AS sy,
-    SUM(CAST(CAST(i AS DECIMAL(19,0)) * i AS DECIMAL(38,0))) AS sxx,
-    SUM(CAST(round(CAST(i AS DOUBLE) * CAST(h AS DOUBLE), 12)
-             AS DECIMAL(38,12))) AS sxy,
-    SUM(CAST(round(CAST(h AS DOUBLE) * CAST(h AS DOUBLE), 12)
-             AS DECIMAL(38,12))) AS syy
-  FROM idx
-), c AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddw('sx')} AS sxd, {_ddwf('sy')} AS syd,
-    {_ddw('sxx')} AS sxxd, {_ddwf('sxy')} AS sxyd, {_ddwf('syy')} AS syyd
-  FROM mom
-), cc AS (
-  SELECT n, nd, syd,
-    sxxd - sxd * sxd / nd AS sxx_c,
-    sxyd - sxd * syd / nd AS sxy_c,
-    syyd - syd * syd / nd AS syy_c
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CASE WHEN n > 0 THEN round(syd / nd, 6) END AS mean_entropy,
-  CASE WHEN n > 1 AND sxx_c > 0 THEN round(sxy_c / sxx_c, 6)
-  END AS slope_per_day,
-  CASE WHEN n > 1 AND sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c * sxy_c / (sxx_c * syy_c), 6)
-  END AS r2
-FROM cc
-"""
-
-_ORACLES["embedding_dim_profile"] = """
-WITH ex AS (
-  SELECT unnest(embedding) AS x0,
-    unnest(range(1, len(embedding) + 1)) AS ord
-  FROM embeddings WHERE embedding IS NOT NULL
-), dims AS (
-  SELECT CAST(ord - 1 AS BIGINT) AS pos, count(*) AS n,
-    SUM(CAST(round(CAST(x0 AS DOUBLE), 6) AS DECIMAL(28,6))) AS s,
-    SUM(CAST(round(CAST(x0 AS DOUBLE) * CAST(x0 AS DOUBLE), 12)
-             AS DECIMAL(28,12))) AS q
-  FROM ex GROUP BY 1
-), scored AS (
-  SELECT pos, n,
-    round(CAST(q AS DOUBLE) / CAST(n AS DOUBLE)
-          - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-            * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS v
-  FROM dims
-), folded AS (
-  SELECT max(n) AS n_vectors, count(*) AS n_dims,
-    SUM(CAST(v AS DECIMAL(28,6))) AS vsum,
-    max(v) AS vmax, min(v) AS vmin
-  FROM scored
-), top AS (
-  SELECT pos AS max_var_dim FROM scored ORDER BY v DESC, pos ASC LIMIT 1
-)
-SELECT CAST(n_vectors AS BIGINT) AS n_vectors,
-  CAST(n_dims AS BIGINT) AS n_dims,
-  round(CAST(vsum AS DOUBLE) / CAST(n_dims AS DOUBLE), 6) AS mean_var,
-  vmax AS max_var, vmin AS min_var,
-  CASE WHEN vmin > 0 THEN round(vmax / vmin, 6) END AS anisotropy_ratio,
-  CAST(max_var_dim AS BIGINT) AS max_var_dim
-FROM folded CROSS JOIN top
-"""
-
-_ORACLES["lang_pred_quality"] = f"""
-WITH hits AS (
-  SELECT lang, text,
-    {_marker_hits("en")} AS h_en,
-    {_marker_hits("es")} AS h_es,
-    {_marker_hits("de")} AS h_de,
-    {_marker_hits("fr")} AS h_fr
-  FROM documents WHERE lang IS NOT NULL AND text IS NOT NULL
-), p AS (
-  SELECT lang AS a,
-    CASE WHEN len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]')) > 0 THEN 'zh'
-         WHEN {_GREATEST} = 0 THEN 'unknown'
-         WHEN h_en = {_GREATEST} THEN 'en'
-         WHEN h_es = {_GREATEST} THEN 'es'
-         WHEN h_de = {_GREATEST} THEN 'de'
-         ELSE 'fr' END AS b
-  FROM hits
-), cells AS (SELECT a, b, count(*) AS c FROM p GROUP BY 1, 2),
-ma AS (SELECT a AS cls, SUM(c) AS n_true FROM cells GROUP BY 1),
-mb AS (SELECT b AS cls, SUM(c) AS n_pred FROM cells GROUP BY 1),
-tp AS (SELECT a AS cls, c AS tp FROM cells WHERE a = b),
-marg AS (
-  SELECT cls, coalesce(n_true, 0) AS n_true, coalesce(n_pred, 0) AS n_pred,
-    coalesce(tp, 0) AS tp
-  FROM ma FULL OUTER JOIN mb USING (cls) LEFT JOIN tp USING (cls)
-)
-SELECT cls AS lang, CAST(n_true AS BIGINT) AS n_true,
-  CAST(n_pred AS BIGINT) AS n_pred, CAST(tp AS BIGINT) AS tp,
-  CASE WHEN n_pred > 0 THEN
-    round(CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE), 6) END AS precision,
-  CASE WHEN n_true > 0 THEN
-    round(CAST(tp AS DOUBLE) / CAST(n_true AS DOUBLE), 6) END AS recall,
-  CASE WHEN n_pred > 0 AND n_true > 0
-       AND CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE)
-           + CAST(tp AS DOUBLE) / CAST(n_true AS DOUBLE) > 0 THEN
-    round(2.0 * (CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE))
-          * (CAST(tp AS DOUBLE) / CAST(n_true AS DOUBLE))
-          / (CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE)
-             + CAST(tp AS DOUBLE) / CAST(n_true AS DOUBLE)), 6)
-  END AS f1
-FROM marg
-"""
-
-
-# ----- round-8 wave 4 -----
-
-
-def q_wasserstein_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 1-Wasserstein distance of l_quantity between returnflag R
-    and the rest (operators/hypotests.py:wasserstein_1; bounded
-    quantity domain)."""
-    from breweries_etl_spark.operators.hypotests import wasserstein_1
-
-    return wasserstein_1(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_quantity",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_energy_distance_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Szekely energy distance of l_quantity between returnflag R and
-    the rest (operators/hypotests.py:energy_distance; bounded
-    domain)."""
-    from breweries_etl_spark.operators.hypotests import energy_distance
-
-    return energy_distance(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_quantity",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_qq_fit_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-Q line (scale/shift) between returnflag-R and other price
-    distributions over the decile grid
-    (operators/hypotests.py:qq_fit)."""
-    from breweries_etl_spark.operators.hypotests import qq_fit
-
-    return qq_fit(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_neyman_allocation_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neyman-optimal stratified sample allocation across returnflag
-    strata on l_extendedprice
-    (operators/sampling.py:neyman_allocation)."""
-    from breweries_etl_spark.operators.sampling import neyman_allocation
-
-    return neyman_allocation(
-        load_table(spark, sf_dir, "lineitem"), "l_returnflag",
-        "l_extendedprice",
-    )
-
-
-def q_evt_block_maxima_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gumbel block-maxima fit + 10-week return level of the daily
-    event totals (operators/temporal.py:evt_block_maxima)."""
-    from breweries_etl_spark.operators.temporal import evt_block_maxima
-
-    return evt_block_maxima(load_events(spark, sf_dir))
-
-
-def q_mase_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Naive-vs-seasonal-naive MASE of the daily event totals
-    (operators/temporal.py:mase_daily)."""
-    from breweries_etl_spark.operators.temporal import mase_daily
-
-    return mase_daily(load_events(spark, sf_dir))
-
-
-_ORACLES["wasserstein_qty_flag"] = f"""
-WITH vc AS (
-  SELECT l_quantity AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_quantity IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-    lead(v) OVER (ORDER BY v) AS v_next
-  FROM vc
-), tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM vc),
-folded AS (
-  SELECT
-    SUM(CAST(CAST(abs(CAST(cum_a AS DECIMAL(19,0)) * CAST(n_b AS DECIMAL(19,0))
-                      - CAST(cum_b AS DECIMAL(19,0)) * CAST(n_a AS DECIMAL(19,0)))
-                  AS DECIMAL(38,0))
-             * (CAST(v_next AS DECIMAL(18,2)) - CAST(v AS DECIMAL(18,2)))
-             AS DECIMAL(38,2))) AS w_sum
-  FROM cum CROSS JOIN tot WHERE v_next IS NOT NULL
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round({_ddwf("COALESCE(w_sum, CAST(0 AS DECIMAL(38,2)))")}
-          / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-  END AS wasserstein_1
-FROM folded CROSS JOIN tot
-"""
-
-_ORACLES["energy_distance_qty_flag"] = f"""
-WITH base AS (
-  SELECT CAST(l_quantity AS DECIMAL(18,2)) AS v,
-    (l_returnflag = 'R') AS in_a
-  FROM lineitem WHERE l_quantity IS NOT NULL
-), ca AS (
-  SELECT v AS va, count(*) AS ca FROM base WHERE in_a GROUP BY 1
-), cb AS (
-  SELECT v AS vb, count(*) AS cb FROM base WHERE NOT in_a GROUP BY 1
-), sxy AS (
-  SELECT SUM(CAST(CAST(CAST(CAST(ca AS DECIMAL(19,0)) * CAST(cb AS DECIMAL(19,0))
-                            AS DECIMAL(38,0)) AS DECIMAL(38,2))
-                  * CAST(abs(va - vb) AS DECIMAL(18,2))
-             AS DECIMAL(38,2))) AS sxy
-  FROM ca CROSS JOIN cb
-), sxx AS (
-  SELECT SUM(CAST(CAST(CAST(CAST(a1.ca AS DECIMAL(19,0)) * CAST(a2.ca AS DECIMAL(19,0))
-                            AS DECIMAL(38,0)) AS DECIMAL(38,2))
-                  * CAST(abs(a1.va - a2.va) AS DECIMAL(18,2))
-             AS DECIMAL(38,2))) AS sxx
-  FROM ca a1 CROSS JOIN ca a2
-), syy AS (
-  SELECT SUM(CAST(CAST(CAST(CAST(b1.cb AS DECIMAL(19,0)) * CAST(b2.cb AS DECIMAL(19,0))
-                            AS DECIMAL(38,0)) AS DECIMAL(38,2))
-                  * CAST(abs(b1.vb - b2.vb) AS DECIMAL(18,2))
-             AS DECIMAL(38,2))) AS syy
-  FROM cb b1 CROSS JOIN cb b2
-), sizes AS (
-  SELECT SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS n_a,
-    SUM(CASE WHEN in_a THEN 0 ELSE 1 END) AS n_b
-  FROM base
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round({_ddwf('sxy')} / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-  END AS e_xy,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round({_ddwf('sxx')} / (CAST(n_a AS DOUBLE) * CAST(n_a AS DOUBLE)), 6)
-  END AS e_xx,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round({_ddwf('syy')} / (CAST(n_b AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-  END AS e_yy,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(sqrt(greatest(
-      2.0 * ({_ddwf('sxy')} / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))
-      - {_ddwf('sxx')} / (CAST(n_a AS DOUBLE) * CAST(n_a AS DOUBLE))
-      - {_ddwf('syy')} / (CAST(n_b AS DOUBLE) * CAST(n_b AS DOUBLE)),
-      0.0)), 6)
-  END AS energy_distance
-FROM sxy CROSS JOIN sxx CROSS JOIN syy CROSS JOIN sizes
-"""
-
-_QQ_PICKS = ",\n    ".join(
-    f"min(CASE WHEN 10 * cum_{s} >= {k} * n_{s} THEN v END) AS q{s}{k}"
-    for s in ("a", "b")
-    for k in range(1, 10)
-)
-
-_ORACLES["qq_fit_price_flag"] = f"""
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-    SUM(ca) OVER () AS n_a, SUM(cb) OVER () AS n_b
-  FROM vc
-), grid AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-    {_QQ_PICKS}
-  FROM cum
-), pts AS (
-  SELECT n_a, n_b,
-    round(CAST(qa AS DOUBLE), 6) AS ly, round(CAST(qb AS DOUBLE), 6) AS lx
-  FROM grid, (VALUES (1),(2),(3),(4),(5),(6),(7),(8),(9)) t(k),
-  LATERAL (SELECT CASE k WHEN 1 THEN qa1 WHEN 2 THEN qa2 WHEN 3 THEN qa3
-                  WHEN 4 THEN qa4 WHEN 5 THEN qa5 WHEN 6 THEN qa6
-                  WHEN 7 THEN qa7 WHEN 8 THEN qa8 ELSE qa9 END AS qa,
-             CASE k WHEN 1 THEN qb1 WHEN 2 THEN qb2 WHEN 3 THEN qb3
-                  WHEN 4 THEN qb4 WHEN 5 THEN qb5 WHEN 6 THEN qb6
-                  WHEN 7 THEN qb7 WHEN 8 THEN qb8 ELSE qb9 END AS qb)
-), mom AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, count(*) AS np,
-    SUM(CAST(lx AS DECIMAL(28,6))) AS sx,
-    SUM(CAST(ly AS DECIMAL(28,6))) AS sy,
-    SUM(CAST(round(lx * lx, 12) AS DECIMAL(38,12))) AS sxx,
-    SUM(CAST(round(lx * ly, 12) AS DECIMAL(38,12))) AS sxy,
-    SUM(CAST(round(ly * ly, 12) AS DECIMAL(38,12))) AS syy
-  FROM pts
-), c AS (
-  SELECT n_a, n_b, np, CAST(np AS DOUBLE) AS npd,
-    {_ddwf('sx')} AS sxd, {_ddwf('sy')} AS syd,
-    {_ddwf('sxx')} AS sxxd, {_ddwf('sxy')} AS sxyd, {_ddwf('syy')} AS syyd
-  FROM mom
-), cc AS (
-  SELECT n_a, n_b, np, npd, sxd, syd,
-    sxxd - sxd * sxd / npd AS sxx_c,
-    sxyd - sxd * syd / npd AS sxy_c,
-    syyd - syd * syd / npd AS syy_c
-  FROM c
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CAST(np AS BIGINT) AS n_points,
-  CASE WHEN np > 1 AND sxx_c > 0 THEN round(sxy_c / sxx_c, 6)
-  END AS slope,
-  CASE WHEN np > 1 AND sxx_c > 0 THEN
-    round((syd - (sxy_c / sxx_c) * sxd) / npd, 6) END AS intercept,
-  CASE WHEN np > 1 AND sxx_c > 0 AND syy_c > 0 THEN
-    round(sxy_c * sxy_c / (sxx_c * syy_c), 6) END AS r2
-FROM cc
-"""
-
-_ORACLES["neyman_allocation_price"] = f"""
-WITH per_h AS (
-  SELECT l_returnflag AS stratum, count(*) AS n_rows,
-    SUM(CAST({_qm8('l_extendedprice')} AS DECIMAL(38,2))) AS s,
-    SUM(CAST({_qm8('l_extendedprice')} * {_qm8('l_extendedprice')}
-             AS DECIMAL(38,4))) AS q
-  FROM lineitem
-  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-  GROUP BY 1
-), scored AS (
-  SELECT stratum, n_rows,
-    round(CASE WHEN n_rows > 1 THEN
-      sqrt(greatest(({_ddwf('q')} - {_ddwf('s')}
-                     * ({_ddwf('s')} / CAST(n_rows AS DOUBLE)))
-                    / (CAST(n_rows AS DOUBLE) - 1.0), 0.0)) END, 6) AS sd,
-    round(CAST(n_rows AS DOUBLE)
-          * CASE WHEN n_rows > 1 THEN
-              sqrt(greatest(({_ddwf('q')} - {_ddwf('s')}
-                             * ({_ddwf('s')} / CAST(n_rows AS DOUBLE)))
-                            / (CAST(n_rows AS DOUBLE) - 1.0), 0.0)) END,
-          6) AS w
-  FROM per_h
-), tot AS (SELECT SUM(CAST(w AS DECIMAL(28,6))) AS wsum FROM scored)
-SELECT stratum, CAST(n_rows AS BIGINT) AS n_rows, sd,
-  CASE WHEN wsum > 0 THEN round(w / {_ddwf('wsum')}, 6) END AS share,
-  CASE WHEN wsum > 0 THEN
-    CAST(floor(w / {_ddwf('wsum')} * 1000.0) AS BIGINT) END AS alloc_n
-FROM scored CROSS JOIN tot
-"""
-
-_ORACLES["evt_block_maxima_daily"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), blocks AS (
-  SELECT day // 7 AS blk, max(CAST(y AS DECIMAL(18,2))) AS m
-  FROM daily GROUP BY 1
-), mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(m AS DECIMAL(38,2))) AS s,
-    SUM(CAST(m * m AS DECIMAL(38,4))) AS q
-  FROM blocks
-), c AS (
-  SELECT n,
-    {_ddwf('s')} / CAST(n AS DOUBLE) AS mean,
-    sqrt(greatest(({_ddwf('q')} - {_ddwf('s')}
-                   * ({_ddwf('s')} / CAST(n AS DOUBLE)))
-                  / (CAST(n AS DOUBLE) - 1.0), 0.0)) AS sd
-  FROM mom
-), g AS (
-  SELECT n, mean, sd, sd * 0.7796968012336293 AS beta FROM c
-), g2 AS (
-  SELECT n, mean, sd, beta,
-    mean - 0.5772156649015329 * beta AS mu
-  FROM g
-)
-SELECT CAST(n AS BIGINT) AS n_blocks,
-  CASE WHEN n > 0 THEN round(mean, 6) END AS max_mean,
-  CASE WHEN n > 2 THEN round(sd, 6) END AS max_sd,
-  CASE WHEN n > 2 THEN round(mu, 6) END AS gumbel_mu,
-  CASE WHEN n > 2 THEN round(beta, 6) END AS gumbel_beta,
-  CASE WHEN n > 2 THEN round(mu + beta * 2.250367327069, 6)
-  END AS return_level_10
-FROM g2
-"""
-
-_ORACLES["mase_daily_value"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), m1 AS (
-  SELECT count(*) AS n_one,
-    SUM(CAST(abs(a.y - b.y) AS DECIMAL(38,2))) AS s_one
-  FROM daily a JOIN daily b ON a.day = b.day + 1
-), ms AS (
-  SELECT count(*) AS n_sea,
-    SUM(CAST(abs(a.y - b.y) AS DECIMAL(38,2))) AS s_sea
-  FROM daily a JOIN daily b ON a.day = b.day + 7
-), nd AS (SELECT count(*) AS n_days FROM daily)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-  CAST(n_one AS BIGINT) AS n_pairs_1, CAST(n_sea AS BIGINT) AS n_pairs_s,
-  CASE WHEN n_one > 0 THEN
-    round({_ddwf('s_one')} / CAST(n_one AS DOUBLE), 6) END AS mae_naive,
-  CASE WHEN n_sea > 0 THEN
-    round({_ddwf('s_sea')} / CAST(n_sea AS DOUBLE), 6) END AS mae_seasonal,
-  CASE WHEN n_one > 0 AND n_sea > 0
-       AND {_ddwf('s_sea')} / CAST(n_sea AS DOUBLE) > 0 THEN
-    round(({_ddwf('s_one')} / CAST(n_one AS DOUBLE))
-          / ({_ddwf('s_sea')} / CAST(n_sea AS DOUBLE)), 6)
-  END AS mase
-FROM m1 CROSS JOIN ms CROSS JOIN nd
-"""
-
-
-# ----- round-8 wave 5 -----
-
-
-def q_split_gain_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Information/Gini gain of the priority column predicting
-    high-value orders (operators/profiling.py:categorical_split_gain)."""
-    from breweries_etl_spark.operators.profiling import categorical_split_gain
-
-    return categorical_split_gain(
-        load_table(spark, sf_dir, "orders"),
-        "o_orderpriority",
-        F.col("o_totalprice") > 150000,
-    )
-
-
-def q_concentration_customer_revenue(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CR-4/8/20 revenue concentration across customers
-    (operators/profiling.py:concentration_ratios)."""
-    from breweries_etl_spark.operators.profiling import concentration_ratios
-
-    return concentration_ratios(
-        load_table(spark, sf_dir, "orders"), "o_custkey", "o_totalprice"
-    )
-
-
-def q_hill_tail_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill power-law tail index of o_totalprice over the top-100
-    order statistics (operators/profiling.py:hill_tail_index)."""
-    from breweries_etl_spark.operators.profiling import hill_tail_index
-
-    return hill_tail_index(
-        load_table(spark, sf_dir, "orders"), "o_totalprice"
-    )
-
-
-def q_ranking_stability_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau between nations ranked by customer revenue vs by
-    order count (operators/profiling.py:ranking_stability)."""
-    from breweries_etl_spark.operators.profiling import ranking_stability
-
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    joined = o.join(c, o.o_custkey == c.c_custkey).select(
-        "c_nationkey", "o_totalprice"
-    )
-    return ranking_stability(
-        joined,
-        "c_nationkey",
-        F.sum(
-            F.col("o_totalprice").cast("decimal(18,2)").cast("decimal(38,2)")
-        ),
-        F.count(F.lit(1)).cast("decimal(38,0)"),
-    )
-
-
-_ORACLES["split_gain_priority_price"] = """
-WITH per_c AS (
-  SELECT o_orderpriority AS c, count(*) AS n_c,
-    SUM(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END) AS y_c
-  FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY 1
-), t AS (
-  SELECT c, n_c, y_c, SUM(n_c) OVER () AS n, SUM(y_c) OVER () AS yt
-  FROM per_c
-), folded AS (
-  SELECT max(n) AS n, max(yt) AS yt, count(*) AS k,
-    SUM(CAST(round(CAST(n_c AS DOUBLE) / CAST(n AS DOUBLE)
-      * ((CASE WHEN CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE) > 0 THEN
-            -(CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-            * ln(CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE)) ELSE 0.0 END)
-         + (CASE WHEN 1.0 - CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE) > 0
-            THEN -(1.0 - CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-            * ln(1.0 - CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-            ELSE 0.0 END)), 6) AS DECIMAL(18,6))) AS ch,
-    SUM(CAST(round(CAST(n_c AS DOUBLE) / CAST(n AS DOUBLE)
-      * (1.0 - (CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-              * (CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-            - (1.0 - CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-              * (1.0 - CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE))),
-      6) AS DECIMAL(18,6))) AS cg
-  FROM t
-), p AS (
-  SELECT n, yt, k, ch, cg,
-    CAST(yt AS DOUBLE) / CAST(n AS DOUBLE) AS pp FROM folded
-), p2 AS (
-  SELECT n, k, ch, cg,
-    (CASE WHEN pp > 0 THEN -pp * ln(pp) ELSE 0.0 END)
-    + (CASE WHEN 1.0 - pp > 0 THEN -(1.0 - pp) * ln(1.0 - pp)
-       ELSE 0.0 END) AS ph,
-    1.0 - pp * pp - (1.0 - pp) * (1.0 - pp) AS pg
-  FROM p
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_categories,
-  round(ph, 6) AS parent_entropy,
-  round(ph - CAST(ch AS DOUBLE), 6) AS info_gain,
-  round(pg, 6) AS parent_gini,
-  round(pg - CAST(cg AS DOUBLE), 6) AS gini_gain
-FROM p2
-"""
-
-_ORACLES["concentration_customer_revenue"] = f"""
-WITH per_key AS (
-  SELECT o_custkey AS k, SUM({_qm8('o_totalprice')}) AS r
-  FROM orders WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
-  GROUP BY 1
-), tot AS (
-  SELECT count(*) AS n_keys, SUM(CAST(r AS DECIMAL(38,2))) AS total
-  FROM per_key
-), ranked AS (
-  SELECT r, row_number() OVER (ORDER BY r DESC, k) AS rank FROM per_key
-), tops AS (
-  SELECT kk AS k,
-    (SELECT SUM(CAST(r AS DECIMAL(38,2))) FROM ranked
-     WHERE rank <= kk) AS top_sum
-  FROM (SELECT unnest([4, 8, 20]) AS kk)
-)
-SELECT CAST(k AS BIGINT) AS k, CAST(n_keys AS BIGINT) AS n_keys,
-  {_ddwf('total')} AS total_value,
-  CASE WHEN total > 0 THEN
-    round({_ddwf('top_sum')} / {_ddwf('total')}, 6)
-  END AS top_share
-FROM tops CROSS JOIN tot
-"""
-
-_ORACLES["hill_tail_price"] = """
-WITH base AS (
-  SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
-  WHERE o_totalprice > 0
-), nn AS (SELECT count(*) AS n FROM base),
-ranked AS (
-  SELECT x, row_number() OVER (ORDER BY x DESC) AS rank FROM base
-), xk1 AS (
-  SELECT MAX(CASE WHEN rank = 101 THEN x END) AS xk1 FROM ranked
-),
-lsum AS (
-  SELECT SUM(CAST(round(ln(x / xk1), 6) AS DECIMAL(18,6))) AS ls
-  FROM ranked CROSS JOIN xk1 WHERE rank <= 100
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(100 AS BIGINT) AS k,
-  xk1 AS x_k1,
-  CASE WHEN CAST(ls AS DOUBLE) > 0 THEN
-    round(100.0 / CAST(ls AS DOUBLE), 6) END AS hill_alpha
-FROM lsum CROSS JOIN nn CROSS JOIN xk1
-"""
-
-_ORACLES["ranking_stability_nations"] = """
-WITH per_key AS (
-  SELECT c_nationkey AS k,
-    SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DECIMAL(38,2))) AS ma,
-    CAST(count(*) AS DECIMAL(38,0)) AS mb
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE c_nationkey IS NOT NULL GROUP BY 1
-), pairs AS (
-  SELECT CASE
-    WHEN (a.ma < b.ma AND a.mb > b.mb) OR (a.ma > b.ma AND a.mb < b.mb)
-    THEN 2
-    WHEN a.ma = b.ma AND a.mb = b.mb THEN 0
-    WHEN a.ma = b.ma OR a.mb = b.mb THEN 1
-    ELSE 0 END AS d2
-  FROM per_key a JOIN per_key b ON a.k < b.k
-), folded AS (
-  SELECT SUM(CAST(d2 AS DECIMAL(19,0))) AS d2s FROM pairs
-), kk AS (SELECT count(*) AS n_keys FROM per_key)
-SELECT CAST(n_keys AS BIGINT) AS n_keys,
-  CAST(d2s AS BIGINT) AS n_discordant2,
-  CASE WHEN n_keys > 1 THEN
-    round(1.0 - 4.0 * (CAST(d2s AS DOUBLE) / 2.0)
-          / (CAST(n_keys AS DOUBLE) * (CAST(n_keys AS DOUBLE) - 1.0)), 6)
-  END AS kendall_tau
-FROM folded CROSS JOIN kk
-"""
-
-
-# ----- round-9 wave 1: Brunner-Munzel heteroscedastic rank test,
-# Theil-L/Atkinson low-tail inequality, Chao1/Good-Turing vocabulary
-# coverage, turning-points randomness screen, Cronbach item
-# consistency, multiclass MCC -----
-
-
-def q_brunner_munzel_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brunner-Munzel stochastic-superiority test of l_extendedprice,
-    group B = returned lines (operators/hypotests.py:brunner_munzel)."""
-    from breweries_etl_spark.operators.hypotests import brunner_munzel
-
-    return brunner_munzel(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_theil_l_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil L (mean log deviation) + Atkinson(1) of per-customer
-    revenue (operators/hypotests.py:theil_l_atkinson)."""
-    from breweries_etl_spark.operators.hypotests import theil_l_atkinson
-
-    return theil_l_atkinson(
-        load_table(spark, sf_dir, "orders"), "o_custkey", "o_totalprice"
-    )
-
-
-def q_vocab_richness_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chao1 vocabulary-size estimate + Good-Turing unseen mass over
-    the documents corpus (operators/text.py:vocab_richness)."""
-    from breweries_etl_spark.operators.text import vocab_richness
-
-    return vocab_richness(load_table(spark, sf_dir, "documents"))
-
-
-def q_turning_points_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Turning-points randomness test on the daily event-value totals
-    (operators/temporal.py:turning_points_daily)."""
-    from breweries_etl_spark.operators.temporal import turning_points_daily
-
-    return turning_points_daily(load_events(spark, sf_dir))
-
-
-def q_cronbach_alpha_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cronbach's alpha across the four lineitem value columns
-    (operators/profiling.py:cronbach_alpha)."""
-    from breweries_etl_spark.operators.profiling import cronbach_alpha
-
-    return cronbach_alpha(
-        load_table(spark, sf_dir, "lineitem"),
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-    )
-
-
-def q_mcc_lang_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiclass Matthews correlation of the heuristic language-ID
-    prediction vs the corpus lang labels
-    (operators/profiling.py:mcc_multiclass)."""
-    from breweries_etl_spark.operators.profiling import mcc_multiclass
-
-    docs = load_table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.col("lang"), text.lang_pred_expr(F.col("text")).alias("lang_pred")
-    )
-    return mcc_multiclass(labeled, "lang", "lang_pred")
-
-
-_ORACLES["brunner_munzel_price_flag"] = f"""
-WITH vals AS (
-  SELECT l_extendedprice AS v,
-    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS ga
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-), vc AS (
-  SELECT v, SUM(ga) AS ca, count(*) - SUM(ga) AS cb FROM vals GROUP BY 1
-), pc AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM vc
-), agg AS (
-  SELECT SUM(ca) AS n_a, SUM(cb) AS n_b,
-    SUM(CAST(CAST(ca AS DECIMAL(19,0))
-        * (2 * CAST(cum_a + cum_b AS DECIMAL(19,0)) - (ca + cb) + 1)
-        AS DECIMAL(38,0))) AS t_a,
-    SUM(CAST(CAST(cb AS DECIMAL(19,0))
-        * (2 * CAST(cum_a + cum_b AS DECIMAL(19,0)) - (ca + cb) + 1)
-        AS DECIMAL(38,0))) AS t_b,
-    SUM(CAST(CAST(ca AS DECIMAL(19,0))
-        * (2 * CAST(cum_b AS DECIMAL(19,0)) - cb) AS DECIMAL(38,0))) AS a1,
-    SUM(CAST(CAST(ca AS DECIMAL(19,0))
-        * (2 * CAST(cum_b AS DECIMAL(19,0)) - cb)
-        * (2 * CAST(cum_b AS DECIMAL(19,0)) - cb) AS DECIMAL(38,0))) AS a2,
-    SUM(CAST(CAST(cb AS DECIMAL(19,0))
-        * (2 * CAST(cum_a AS DECIMAL(19,0)) - ca) AS DECIMAL(38,0))) AS b1,
-    SUM(CAST(CAST(cb AS DECIMAL(19,0))
-        * (2 * CAST(cum_a AS DECIMAL(19,0)) - ca)
-        * (2 * CAST(cum_a AS DECIMAL(19,0)) - ca) AS DECIMAL(38,0))) AS b2
-  FROM pc
-), d AS (
-  SELECT n_a, n_b,
-    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-    {_ddw('t_a')} AS ta, {_ddw('t_b')} AS tb,
-    {_ddw('a1')} AS a1d, {_ddw('a2')} AS a2d,
-    {_ddw('b1')} AS b1d, {_ddw('b2')} AS b2d
-  FROM agg
-), e AS (
-  SELECT *, ta - na * (na + 1.0) AS ua, tb - nb * (nb + 1.0) AS ub,
-    ta / (2.0 * na) AS rca, tb / (2.0 * nb) AS rcb
-  FROM d
-), f AS (
-  SELECT *,
-    (a2d - (2.0 * ua * a1d - ua * ua) / na) / (4.0 * (na - 1.0)) AS s2a,
-    (b2d - (2.0 * ub * b1d - ub * ub) / nb) / (4.0 * (nb - 1.0)) AS s2b
-  FROM e
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round((rcb - (nb + 1.0) / 2.0) / na, 6) END AS p_hat,
-  CASE WHEN n_a > 1 AND n_b > 1 AND na * s2a + nb * s2b > 0 THEN
-    round(na * nb * (rcb - rca)
-          / ((na + nb) * sqrt(na * s2a + nb * s2b)), 6)
-  END AS bm_stat
-FROM f
-"""
-
-_ORACLES["theil_l_customer_revenue"] = f"""
-WITH per_key AS (
-  SELECT o_custkey AS k, SUM({_qm8('o_totalprice')}) AS r
-  FROM orders GROUP BY 1 HAVING SUM({_qm8('o_totalprice')}) > 0
-), folded AS (
-  SELECT count(*) AS n,
-    SUM(CAST(r AS DECIMAL(38,2))) AS total,
-    SUM(CAST(round(ln(CAST(r AS DOUBLE)), 6) AS DECIMAL(18,6))) AS lsum
-  FROM per_key
-)
-SELECT CAST(n AS BIGINT) AS n_keys,
-  CASE WHEN n > 0 THEN round({_ddwf('total')} / CAST(n AS DOUBLE), 6)
-  END AS mean_value,
-  CASE WHEN n > 0 THEN
-    round(ln({_ddwf('total')} / CAST(n AS DOUBLE))
-          - CAST(lsum AS DOUBLE) / CAST(n AS DOUBLE), 6)
-  END AS theil_l,
-  CASE WHEN n > 0 THEN
-    round(1.0 - exp(-(ln({_ddwf('total')} / CAST(n AS DOUBLE))
-                      - CAST(lsum AS DOUBLE) / CAST(n AS DOUBLE))), 6)
-  END AS atkinson_1
-FROM folded
-"""
-
-_ORACLES["vocab_richness_docs"] = """
-WITH tf AS (
-  SELECT term, count(*) AS f FROM (
-    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-    FROM documents WHERE text IS NOT NULL
-  ) GROUP BY 1
-), folded AS (
-  SELECT SUM(f) AS n, count(*) AS v,
-    SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS f1,
-    SUM(CASE WHEN f = 2 THEN 1 ELSE 0 END) AS f2
-  FROM tf
-)
-SELECT CAST(n AS BIGINT) AS n_tokens, CAST(v AS BIGINT) AS n_types,
-  CAST(f1 AS BIGINT) AS f1, CAST(f2 AS BIGINT) AS f2,
-  CASE WHEN v > 0 THEN
-    round(CAST(v AS DOUBLE)
-          + CAST(f1 AS DOUBLE) * (CAST(f1 AS DOUBLE) - 1.0)
-          / (2.0 * (CAST(f2 AS DOUBLE) + 1.0)), 6)
-  END AS chao1,
-  CASE WHEN n > 0 THEN
-    round(CAST(f1 AS DOUBLE) / CAST(n AS DOUBLE), 6)
-  END AS gt_unseen_mass
-FROM folded
-"""
-
-_ORACLES["turning_points_daily_value"] = """
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), walked AS (
-  SELECT y, lag(y) OVER (ORDER BY day) AS yp,
-    lead(y) OVER (ORDER BY day) AS yn
-  FROM daily
-), folded AS (
-  SELECT count(*) AS n_days,
-    SUM(CASE WHEN (yp < y AND y > yn) OR (yp > y AND y < yn)
-        THEN 1 ELSE 0 END) AS n_turning
-  FROM walked
-)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-  CAST(n_turning AS BIGINT) AS n_turning,
-  CASE WHEN n_days > 2 THEN
-    round(2.0 * (CAST(n_days AS DOUBLE) - 2.0) / 3.0, 6) END AS expected,
-  CASE WHEN n_days > 2 AND (16.0 * CAST(n_days AS DOUBLE) - 29.0) / 90.0 > 0
-  THEN round((CAST(n_turning AS DOUBLE)
-              - 2.0 * (CAST(n_days AS DOUBLE) - 2.0) / 3.0)
-             / sqrt((16.0 * CAST(n_days AS DOUBLE) - 29.0) / 90.0), 6)
-  END AS z_score
-FROM folded
-"""
-
-_ORACLES["cronbach_alpha_lineitem"] = f"""
-WITH base AS (
-  SELECT {_qm8('l_quantity')} AS x0, {_qm8('l_extendedprice')} AS x1,
-    {_qm8('l_discount')} AS x2, {_qm8('l_tax')} AS x3
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    AND l_discount IS NOT NULL AND l_tax IS NOT NULL
-), folded AS (
-  SELECT count(*) AS n,
-    SUM(CAST(x0 AS DECIMAL(38,2))) AS s0,
-    SUM(CAST(CAST(x0 AS DECIMAL(24,2)) * x0 AS DECIMAL(38,4))) AS q0,
-    SUM(CAST(x1 AS DECIMAL(38,2))) AS s1,
-    SUM(CAST(CAST(x1 AS DECIMAL(24,2)) * x1 AS DECIMAL(38,4))) AS q1,
-    SUM(CAST(x2 AS DECIMAL(38,2))) AS s2,
-    SUM(CAST(CAST(x2 AS DECIMAL(24,2)) * x2 AS DECIMAL(38,4))) AS q2,
-    SUM(CAST(x3 AS DECIMAL(38,2))) AS s3,
-    SUM(CAST(CAST(x3 AS DECIMAL(24,2)) * x3 AS DECIMAL(38,4))) AS q3,
-    SUM(CAST(CAST(x0 + x1 + x2 + x3 AS DECIMAL(18,2))
-        AS DECIMAL(38,2))) AS st,
-    SUM(CAST(CAST(CAST(x0 + x1 + x2 + x3 AS DECIMAL(18,2))
-        AS DECIMAL(24,2)) * CAST(x0 + x1 + x2 + x3 AS DECIMAL(18,2))
-        AS DECIMAL(38,4))) AS qt
-  FROM base
-), v AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    ({_ddwf('q0')} - {_ddwf('s0')} * {_ddwf('s0')} / CAST(n AS DOUBLE))
-      / (CAST(n AS DOUBLE) - 1.0)
-    + ({_ddwf('q1')} - {_ddwf('s1')} * {_ddwf('s1')} / CAST(n AS DOUBLE))
-      / (CAST(n AS DOUBLE) - 1.0)
-    + ({_ddwf('q2')} - {_ddwf('s2')} * {_ddwf('s2')} / CAST(n AS DOUBLE))
-      / (CAST(n AS DOUBLE) - 1.0)
-    + ({_ddwf('q3')} - {_ddwf('s3')} * {_ddwf('s3')} / CAST(n AS DOUBLE))
-      / (CAST(n AS DOUBLE) - 1.0) AS item_var_sum,
-    ({_ddwf('qt')} - {_ddwf('st')} * {_ddwf('st')} / CAST(n AS DOUBLE))
-      / (CAST(n AS DOUBLE) - 1.0) AS total_var
-  FROM folded
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(4 AS BIGINT) AS k_items,
-  CASE WHEN n > 1 AND total_var > 0 THEN
-    round(CAST(4.0 / 3.0 AS DOUBLE) * (1.0 - item_var_sum / total_var), 6)
-  END AS alpha
-FROM v
-"""
-
-_ORACLES["mcc_lang_pred"] = f"""
-WITH hits AS (
-  SELECT lang, text,
-    {_marker_hits("en")} AS h_en,
-    {_marker_hits("es")} AS h_es,
-    {_marker_hits("de")} AS h_de,
-    {_marker_hits("fr")} AS h_fr
-  FROM documents
-), p AS (
-  SELECT lang AS t,
-    CASE WHEN len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]')) > 0 THEN 'zh'
-         WHEN {_GREATEST} = 0 THEN 'unknown'
-         WHEN h_en = {_GREATEST} THEN 'en'
-         WHEN h_es = {_GREATEST} THEN 'es'
-         WHEN h_de = {_GREATEST} THEN 'de'
-         ELSE 'fr' END AS pr
-  FROM hits
-), cells AS (
-  SELECT t, pr, count(*) AS c FROM p
-  WHERE t IS NOT NULL AND pr IS NOT NULL GROUP BY 1, 2
-), tm AS (SELECT t AS cls, SUM(c) AS tk FROM cells GROUP BY 1),
-pm AS (SELECT pr AS cls, SUM(c) AS pk FROM cells GROUP BY 1),
-joint AS (
-  SELECT coalesce(tk, 0) AS tk, coalesce(pk, 0) AS pk
-  FROM tm FULL OUTER JOIN pm USING (cls)
-), marg AS (
-  SELECT SUM(tk) AS s, count(*) AS k,
-    SUM(CAST(CAST(tk AS DECIMAL(19,0)) * CAST(pk AS DECIMAL(19,0))
-        AS DECIMAL(38,0))) AS tp,
-    SUM(CAST(CAST(tk AS DECIMAL(19,0)) * CAST(tk AS DECIMAL(19,0))
-        AS DECIMAL(38,0))) AS t2,
-    SUM(CAST(CAST(pk AS DECIMAL(19,0)) * CAST(pk AS DECIMAL(19,0))
-        AS DECIMAL(38,0))) AS p2
-  FROM joint
-), diag AS (
-  SELECT SUM(CASE WHEN t = pr THEN c ELSE 0 END) AS corr FROM cells
-)
-SELECT CAST(s AS BIGINT) AS n, CAST(k AS BIGINT) AS n_classes,
-  CASE WHEN s > 0 THEN
-    round(CAST(corr AS DOUBLE) / CAST(s AS DOUBLE), 6) END AS accuracy,
-  CASE WHEN s > 0
-    AND sqrt(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) - {_ddw('p2')})
-      * sqrt(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) - {_ddw('t2')}) > 0
-  THEN round((CAST(corr AS DOUBLE) * CAST(s AS DOUBLE) - {_ddw('tp')})
-             / (sqrt(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) - {_ddw('p2')})
-                * sqrt(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                       - {_ddw('t2')})), 6)
-  END AS mcc
-FROM diag CROSS JOIN marg
-"""
-
-
-# ----- round-9 wave 2: Hoeffding general-dependence D, Kendall W
-# concordance, sample/spectral entropy of the daily series -----
-
-
-def q_hoeffding_d_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hoeffding's D general-dependence test between l_quantity and
-    l_discount (operators/hypotests.py:hoeffding_d)."""
-    from breweries_etl_spark.operators.hypotests import hoeffding_d
-
-    return hoeffding_d(
-        load_table(spark, sf_dir, "lineitem"), "l_quantity", "l_discount"
-    )
-
-
-def q_kendalls_w_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall's W concordance of three per-nation revenue rankings:
-    total, order count, max order (operators/profiling.py:kendalls_w)."""
-    from breweries_etl_spark.operators.hypotests import quantized_money
-    from breweries_etl_spark.operators.profiling import kendalls_w
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    joined = orders.join(
-        F.broadcast(customer.select("c_custkey", "c_nationkey")),
-        orders.o_custkey == F.col("c_custkey"),
-    )
-    return kendalls_w(
-        joined,
-        "c_nationkey",
-        [
-            F.sum(quantized_money(F.col("o_totalprice"))),
-            F.count(F.lit(1)),
-            F.max(quantized_money(F.col("o_totalprice"))),
-        ],
-    )
-
-
-def q_sample_entropy_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SampEn(2, 0.2sigma) regularity of the daily event-value totals
-    (operators/temporal.py:sample_entropy_daily)."""
-    from breweries_etl_spark.operators.temporal import sample_entropy_daily
-
-    return sample_entropy_daily(load_events(spark, sf_dir))
-
-
-def q_spectral_entropy_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Normalized spectral entropy + dominant Fourier frequency of the
-    daily event-value totals
-    (operators/temporal.py:spectral_entropy_daily)."""
-    from breweries_etl_spark.operators.temporal import spectral_entropy_daily
-
-    return spectral_entropy_daily(load_events(spark, sf_dir))
-
-
-_ORACLES["hoeffding_d_qty_discount"] = """
-WITH cells AS (
-  SELECT l_quantity AS x, l_discount AS y, count(*) AS c FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL GROUP BY 1, 2
-), mxr AS (SELECT x, SUM(c) AS lx FROM cells GROUP BY 1),
-mx AS (
-  SELECT x, 2 * COALESCE(SUM(lx) OVER (ORDER BY x
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + lx + 1 AS r2
-  FROM mxr
-), myr AS (SELECT y, SUM(c) AS ly FROM cells GROUP BY 1),
-my AS (
-  SELECT y, 2 * COALESCE(SUM(ly) OVER (ORDER BY y
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + ly + 1 AS s2
-  FROM myr
-), q4 AS (
-  SELECT a.x, a.y, a.c,
-    COALESCE(SUM(CASE
-      WHEN b.x < a.x AND b.y < a.y THEN 4 * b.c
-      WHEN b.x = a.x AND b.y < a.y THEN 2 * b.c
-      WHEN b.x < a.x AND b.y = a.y THEN 2 * b.c
-      ELSE 0 END), 0) + a.c - 1 AS q4
-  FROM cells a LEFT JOIN cells b ON b.x <= a.x AND b.y <= a.y
-  GROUP BY 1, 2, 3
-), tot AS (SELECT SUM(c) AS n FROM cells),
-fullc AS (
-  SELECT q4.c, q4.q4, mx.r2, my.s2, tot.n, CAST(tot.n AS DOUBLE) AS nd
-  FROM q4 JOIN mx USING (x) JOIN my USING (y) CROSS JOIN tot
-), terms AS (
-  SELECT n, CAST(c AS DOUBLE) AS cd, nd,
-    CAST(q4 AS DOUBLE) / 4.0 AS q1,
-    (CAST(r2 AS DOUBLE) - 2.0) / 2.0 AS r1,
-    (CAST(s2 AS DOUBLE) - 2.0) / 2.0 AS s1
-  FROM fullc
-), folded AS (
-  SELECT max(n) AS n, count(*) AS n_cells,
-    SUM(CAST(round(
-      cd * ((nd - 2.0) * (nd - 3.0) * (q1 * (q1 - 1.0))
-            + (r1 * (r1 - 1.0) * s1 * (s1 - 1.0))
-            - 2.0 * (nd - 2.0) * ((r1 - 1.0) * (s1 - 1.0) * q1))
-      / (nd * (nd - 1.0) * (nd - 2.0) * (nd - 3.0) * (nd - 4.0)),
-      12) AS DECIMAL(38,12))) AS dsum
-  FROM terms
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_cells AS BIGINT) AS n_cells,
-  CASE WHEN n > 4 THEN round(30.0 * CAST(dsum AS DOUBLE), 6)
-  END AS hoeffding_d
-FROM folded
-"""
-
-_ORACLES["kendalls_w_nations"] = f"""
-WITH per_key AS (
-  SELECT c_nationkey AS k,
-    SUM({_qm8('o_totalprice')}) AS m0,
-    count(*) AS m1,
-    MAX({_qm8('o_totalprice')}) AS m2
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE c_nationkey IS NOT NULL GROUP BY 1
-  HAVING SUM({_qm8('o_totalprice')}) IS NOT NULL
-     AND MAX({_qm8('o_totalprice')}) IS NOT NULL
-), ranked AS (
-  SELECT k,
-    2 * rank() OVER (ORDER BY m0) + count(*) OVER (PARTITION BY m0) - 1 AS r0,
-    2 * rank() OVER (ORDER BY m1) + count(*) OVER (PARTITION BY m1) - 1 AS r1,
-    2 * rank() OVER (ORDER BY m2) + count(*) OVER (PARTITION BY m2) - 1 AS r2,
-    count(*) OVER () AS nk
-  FROM per_key
-), s4 AS (
-  SELECT max(nk) AS n,
-    SUM(CAST(CAST(CAST(r0 + r1 + r2 AS BIGINT) - 3 * (nk + 1)
-        AS DECIMAL(19,0))
-        * (CAST(r0 + r1 + r2 AS BIGINT) - 3 * (nk + 1))
-        AS DECIMAL(38,0))) AS s4
-  FROM ranked
-), ties AS (
-  SELECT SUM(tsum) AS tt FROM (
-    SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * t * t - t
-        AS DECIMAL(38,0))) AS tsum
-    FROM (SELECT m0 AS mv, count(*) AS t FROM per_key GROUP BY 1) GROUP BY ()
-    UNION ALL
-    SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * t * t - t
-        AS DECIMAL(38,0))) AS tsum
-    FROM (SELECT m1 AS mv, count(*) AS t FROM per_key GROUP BY 1) GROUP BY ()
-    UNION ALL
-    SELECT SUM(CAST(CAST(t AS DECIMAL(19,0)) * t * t - t
-        AS DECIMAL(38,0))) AS tsum
-    FROM (SELECT m2 AS mv, count(*) AS t FROM per_key GROUP BY 1) GROUP BY ()
-  )
-)
-SELECT CAST(n AS BIGINT) AS n_keys, CAST(3 AS BIGINT) AS m_judges,
-  CASE WHEN n > 1
-    AND 9.0 * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-               - CAST(n AS DOUBLE)) - 3.0 * {_ddw('tt')} > 0
-  THEN round(3.0 * {_ddw('s4')}
-             / (9.0 * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                       * CAST(n AS DOUBLE) - CAST(n AS DOUBLE))
-                - 3.0 * {_ddw('tt')}), 6)
-  END AS kendall_w
-FROM s4 CROSS JOIN ties
-"""
-
-_ORACLES["sample_entropy_daily_value"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), idx AS (
-  SELECT row_number() OVER (ORDER BY day) - 1 AS i,
-    CAST(y AS DOUBLE) AS y0,
-    CAST(lead(y, 1) OVER (ORDER BY day) AS DOUBLE) AS y1,
-    CAST(lead(y, 2) OVER (ORDER BY day) AS DOUBLE) AS y2
-  FROM daily
-), walked AS (SELECT * FROM idx WHERE y2 IS NOT NULL),
-mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST(y AS DECIMAL(38,2))) AS s,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS q
-  FROM daily
-), rr AS (
-  SELECT n, 0.2 * sqrt(greatest(
-    ({_ddwf('q')} - {_ddwf('s')} * {_ddwf('s')} / CAST(n AS DOUBLE))
-    / CAST(n AS DOUBLE), 0.0)) AS r
-  FROM mom
-), folded AS (
-  SELECT max(n) AS n_days, max(r) AS r,
-    SUM(CASE WHEN greatest(abs(a.y0 - b.y0), abs(a.y1 - b.y1)) < r
-        THEN 1 ELSE 0 END) AS b_cnt,
-    SUM(CASE WHEN greatest(greatest(abs(a.y0 - b.y0), abs(a.y1 - b.y1)),
-                           abs(a.y2 - b.y2)) < r
-        THEN 1 ELSE 0 END) AS a_cnt
-  FROM walked a JOIN walked b ON a.i < b.i CROSS JOIN rr
-)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-  round(r, 6) AS r_threshold,
-  CAST(b_cnt AS BIGINT) AS b_count,
-  CAST(a_cnt AS BIGINT) AS a_count,
-  CASE WHEN a_cnt > 0 AND b_cnt > 0 THEN
-    round(ln(CAST(b_cnt AS DOUBLE)) - ln(CAST(a_cnt AS DOUBLE)), 6)
-  END AS sampen
-FROM folded
-"""
-
-_ORACLES["spectral_entropy_daily_value"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), idx AS (
-  SELECT y, row_number() OVER (ORDER BY day) - 1 AS t FROM daily
-), tot AS (
-  SELECT count(*) AS n, SUM(CAST(y AS DECIMAL(38,2))) AS s FROM daily
-), kt AS (
-  SELECT y, k, n, s,
-    CAST(round(cos(6.283185307179586
-      * CAST((k * t) % n AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-      AS DECIMAL(8,6)) AS cw,
-    CAST(round(sin(6.283185307179586
-      * CAST((k * t) % n AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-      AS DECIMAL(8,6)) AS sw
-  FROM idx CROSS JOIN tot
-  CROSS JOIN (SELECT unnest(range(1, ((SELECT n FROM tot) - 1) // 2 + 1))
-              AS k)
-), per_k AS (
-  SELECT k, max(n) AS n, max(s) AS s,
-    SUM(CAST(y * cw AS DECIMAL(38,8))) AS yc,
-    SUM(CAST(y * sw AS DECIMAL(38,8))) AS ys,
-    SUM(CAST(cw AS DECIMAL(38,6))) AS sc,
-    SUM(CAST(sw AS DECIMAL(38,6))) AS ss
-  FROM kt GROUP BY 1
-), powered AS (
-  SELECT k, n,
-    ({_ddwf('yc')} - ({_ddwf('s')} / CAST(n AS DOUBLE)) * {_ddwf('sc')})
-    * ({_ddwf('yc')} - ({_ddwf('s')} / CAST(n AS DOUBLE)) * {_ddwf('sc')})
-    + ({_ddwf('ys')} - ({_ddwf('s')} / CAST(n AS DOUBLE)) * {_ddwf('ss')})
-    * ({_ddwf('ys')} - ({_ddwf('s')} / CAST(n AS DOUBLE)) * {_ddwf('ss')})
-    AS p
-  FROM per_k
-), ptot AS (
-  SELECT count(*) AS kk,
-    SUM(CAST(round(p, 6) AS DECIMAL(38,6))) AS pt
-  FROM powered
-), peak AS (
-  SELECT k, p FROM powered QUALIFY
-    row_number() OVER (ORDER BY p DESC, k ASC) = 1
-), hfold AS (
-  SELECT SUM(CASE
-    WHEN CAST(CAST(round(p, 6) AS DECIMAL(38,6)) AS DOUBLE)
-         / {_ddwf('pt')} > 0
-    THEN CAST(round(-(CAST(CAST(round(p, 6) AS DECIMAL(38,6)) AS DOUBLE)
-                      / {_ddwf('pt')})
-                    * ln(CAST(CAST(round(p, 6) AS DECIMAL(38,6)) AS DOUBLE)
-                         / {_ddwf('pt')}), 6) AS DECIMAL(18,6))
-    ELSE CAST(0.0 AS DECIMAL(18,6)) END) AS h
-  FROM powered CROSS JOIN ptot
-)
-SELECT CAST(tot.n AS BIGINT) AS n_days, CAST(kk AS BIGINT) AS n_freqs,
-  CAST(peak.k AS BIGINT) AS peak_k,
-  CASE WHEN {_ddwf('pt')} > 0 THEN
-    round(round(peak.p, 6) / {_ddwf('pt')}, 6) END AS peak_share,
-  CASE WHEN kk > 1 THEN
-    round(CAST(h AS DOUBLE) / ln(CAST(kk AS DOUBLE)), 6)
-  END AS spectral_entropy
-FROM ptot CROSS JOIN hfold CROSS JOIN tot LEFT JOIN peak ON TRUE
-"""
-
-
-# ----- round-9 wave 3: stylometric source distance, top-weighted
-# ranking agreement, sampled distinct estimation -----
-
-
-def q_burrows_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burrows' Delta stylometric distances between document sources
-    over the corpus top-30 terms (operators/text.py:burrows_delta)."""
-    from breweries_etl_spark.operators.text import burrows_delta
-
-    return burrows_delta(load_table(spark, sf_dir, "documents"))
-
-
-def q_rbo_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-biased overlap of the top-20 customers by revenue vs by
-    order count (operators/profiling.py:rank_biased_overlap)."""
-    from breweries_etl_spark.operators.hypotests import quantized_money
-    from breweries_etl_spark.operators.profiling import rank_biased_overlap
-
-    return rank_biased_overlap(
-        load_table(spark, sf_dir, "orders"),
-        "o_custkey",
-        F.sum(quantized_money(F.col("o_totalprice"))),
-        F.count(F.lit(1)),
-    )
-
-
-def q_capture_recapture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chapman capture-recapture estimate of the corpus's distinct
-    document-text count from two independent 10% hash samples
-    (operators/sampling.py:capture_recapture_distinct)."""
-    from breweries_etl_spark.operators.sampling import (
-        capture_recapture_distinct,
-    )
-
-    return capture_recapture_distinct(load_table(spark, sf_dir, "documents"))
-
-
-_ORACLES["burrows_delta_sources"] = f"""
-WITH toks AS (
-  SELECT source AS src,
-    unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-), tf AS (SELECT src, term, count(*) AS c FROM toks GROUP BY 1, 2),
-totals AS (SELECT src, SUM(c) AS n_s FROM tf GROUP BY 1),
-topk AS (
-  SELECT term FROM (SELECT term, SUM(c) AS ct FROM tf GROUP BY 1)
-  ORDER BY ct DESC, term ASC LIMIT 30
-), grid AS (
-  SELECT topk.term, totals.src,
-    CAST(floor(CAST(COALESCE(tf.c, 0) AS DOUBLE) * 1e9
-               / CAST(totals.n_s AS DOUBLE)) AS BIGINT) AS f9
-  FROM topk CROSS JOIN totals
-  LEFT JOIN tf ON tf.src = totals.src AND tf.term = topk.term
-), per_term AS (
-  SELECT term, count(*) AS s, SUM(f9) AS sf,
-    SUM(CAST(CAST(f9 AS DECIMAL(19,0)) * f9 AS DECIMAL(38,0))) AS qf
-  FROM grid GROUP BY 1
-), stats AS (
-  SELECT term, CAST(sf AS DOUBLE) / CAST(s AS DOUBLE) AS mu,
-    sqrt(greatest({_ddw('qf')} / CAST(s AS DOUBLE)
-                  - (CAST(sf AS DOUBLE) / CAST(s AS DOUBLE))
-                  * (CAST(sf AS DOUBLE) / CAST(s AS DOUBLE)),
-                  CAST(0.0 AS DOUBLE))) AS sd
-  FROM per_term
-), z AS (
-  SELECT grid.term, grid.src,
-    CASE WHEN sd > 0 THEN (CAST(f9 AS DOUBLE) - mu) / sd
-         ELSE CAST(0.0 AS DOUBLE) END AS z
-  FROM grid JOIN stats USING (term)
-), pairs AS (
-  SELECT a.src AS source_a, b.src AS source_b, a.z AS za, b.z AS zb
-  FROM z a JOIN z b ON a.term = b.term AND a.src < b.src
-)
-SELECT source_a, source_b,
-  CAST(count(*) AS BIGINT) AS n_terms,
-  round(CAST(SUM(CAST(round(abs(za - zb), 6) AS DECIMAL(18,6)))
-             AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS burrows_delta
-FROM pairs GROUP BY 1, 2
-"""
-
-_ORACLES["rbo_customers"] = f"""
-WITH per_key AS (
-  SELECT o_custkey AS kk, SUM({_qm8('o_totalprice')}) AS ma,
-    count(*) AS mb
-  FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1
-), la AS (
-  SELECT kk, row_number() OVER (ORDER BY ma DESC, kk ASC) AS ra
-  FROM per_key QUALIFY row_number() OVER (ORDER BY ma DESC, kk ASC) <= 20
-), lb AS (
-  SELECT kk, row_number() OVER (ORDER BY mb DESC, kk ASC) AS rb
-  FROM per_key QUALIFY row_number() OVER (ORDER BY mb DESC, kk ASC) <= 20
-), matched AS (
-  SELECT greatest(ra, rb) AS m FROM la JOIN lb USING (kk)
-), depths AS (
-  SELECT d, CAST(round(power(CAST(0.9 AS DOUBLE), CAST(d AS DOUBLE) - 1.0)
-                       / CAST(d AS DOUBLE), 12) AS DECIMAL(14,12)) AS w
-  FROM (SELECT unnest(range(1, 21)) AS d)
-), folded AS (
-  SELECT SUM(w) AS wsum FROM matched JOIN depths ON d >= m
-), nm AS (SELECT count(*) AS n_matched FROM matched)
-SELECT CAST(20 AS BIGINT) AS k, CAST(n_matched AS BIGINT) AS n_matched,
-  round((CAST(1.0 AS DOUBLE) - CAST(0.9 AS DOUBLE))
-        * COALESCE(CAST(wsum AS DOUBLE), CAST(0.0 AS DOUBLE)), 6) AS rbo
-FROM folded CROSS JOIN nm
-"""
-
-_ORACLES["capture_recapture_docs"] = """
-WITH folded AS (
-  SELECT
-    count(DISTINCT CASE
-      WHEN CAST('0x' || substring(md5(CAST(text AS VARCHAR)), 1, 4)
-           AS BIGINT) < 6553 THEN CAST(text AS VARCHAR) END) AS n1,
-    count(DISTINCT CASE
-      WHEN CAST('0x' || substring(md5(CAST(text AS VARCHAR)), 5, 4)
-           AS BIGINT) < 6553 THEN CAST(text AS VARCHAR) END) AS n2,
-    count(DISTINCT CASE
-      WHEN CAST('0x' || substring(md5(CAST(text AS VARCHAR)), 1, 4)
-           AS BIGINT) < 6553
-       AND CAST('0x' || substring(md5(CAST(text AS VARCHAR)), 5, 4)
-           AS BIGINT) < 6553 THEN CAST(text AS VARCHAR) END) AS m
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT CAST(n1 AS BIGINT) AS n_sample1, CAST(n2 AS BIGINT) AS n_sample2,
-  CAST(m AS BIGINT) AS n_both,
-  round((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-        / (CAST(m AS DOUBLE) + 1.0) - 1.0, 6) AS est_distinct
-FROM folded
-"""
-
-
-# ----- round-9 wave 4: covariate balance, Fightin' Words keyness,
-# Breslow-Day OR homogeneity -----
-
-
-def q_covariate_balance_lineitem(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Standardized-mean-difference balance table of the four lineitem
-    value columns across the returned-line flag
-    (operators/profiling.py:covariate_balance)."""
-    from breweries_etl_spark.operators.profiling import covariate_balance
-
-    return covariate_balance(
-        load_table(spark, sf_dir, "lineitem"),
-        F.col("l_returnflag") == "R",
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-    )
-
-
-def q_log_odds_dirichlet_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monroe log-odds-with-Dirichlet-prior keyness: which terms
-    distinguish English documents from the rest
-    (operators/text.py:log_odds_dirichlet)."""
-    from breweries_etl_spark.operators.text import log_odds_dirichlet
-
-    return log_odds_dirichlet(
-        load_table(spark, sf_dir, "documents"), F.col("lang") == "en"
-    )
-
-
-def q_breslow_day_status_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breslow-Day homogeneity of the finished-status/high-value odds
-    ratio across priority strata — the companion check for
-    mantel_haenszel_status_price
-    (operators/hypotests.py:breslow_day)."""
-    from breweries_etl_spark.operators.hypotests import breslow_day
-
-    return breslow_day(
-        load_table(spark, sf_dir, "orders"),
-        "o_orderpriority",
-        F.col("o_orderstatus") == "F",
-        F.col("o_totalprice") > 150000,
-    )
-
-
-_ORACLES["covariate_balance_lineitem"] = f"""
-WITH folded AS (
-  SELECT
-    {", ".join(
-        f'''COUNT(CASE WHEN {cond} AND {c} IS NOT NULL THEN 1 END) AS n{arm}{i},
-    SUM(CASE WHEN {cond} THEN CAST({{0}} AS DECIMAL(38,2)) END) AS s{arm}{i},
-    SUM(CASE WHEN {cond} THEN CAST(CAST({{0}} AS DECIMAL(24,2)) * {{0}}
-        AS DECIMAL(38,4)) END) AS q{arm}{i}'''.format(_qm8(c))
-        for i, c in enumerate(
-            ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-        for arm, cond in (
-            ("t", "l_returnflag = 'R'"),
-            ("c", "NOT (l_returnflag = 'R')"),
-        )
-    )}
-  FROM lineitem
-), rows_ AS (
-  {" UNION ALL ".join(
-      f"SELECT '{c}' AS covariate, nt{i} AS nt, st{i} AS st, qt{i} AS qt, "
-      f"nc{i} AS nc, sc{i} AS sc, qc{i} AS qc FROM folded"
-      for i, c in enumerate(
-          ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-  )}
-), v AS (
-  SELECT covariate, nt, nc,
-    {_ddwf('st')} / CAST(nt AS DOUBLE) AS mu1,
-    {_ddwf('sc')} / CAST(nc AS DOUBLE) AS mu0,
-    ({_ddwf('qt')} - {_ddwf('st')} * ({_ddwf('st')} / CAST(nt AS DOUBLE)))
-      / (CAST(nt AS DOUBLE) - 1.0) AS v1,
-    ({_ddwf('qc')} - {_ddwf('sc')} * ({_ddwf('sc')} / CAST(nc AS DOUBLE)))
-      / (CAST(nc AS DOUBLE) - 1.0) AS v0
-  FROM rows_
-)
-SELECT covariate, CAST(nt AS BIGINT) AS n_treat,
-  CAST(nc AS BIGINT) AS n_control,
-  CASE WHEN nt > 0 THEN round(mu1, 6) END AS mean_treat,
-  CASE WHEN nc > 0 THEN round(mu0, 6) END AS mean_control,
-  CASE WHEN nt > 1 AND nc > 1
-    AND sqrt(greatest((v1 + v0) / 2.0, CAST(0.0 AS DOUBLE))) > 0
-  THEN round((mu1 - mu0)
-             / sqrt(greatest((v1 + v0) / 2.0, CAST(0.0 AS DOUBLE))), 6)
-  END AS smd
-FROM v
-"""
-
-_ORACLES["log_odds_dirichlet_lang"] = """
-WITH base AS (
-  SELECT (lang = 'en') AS in_a,
-    unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS term
-  FROM documents WHERE text IS NOT NULL
-), tf AS (
-  SELECT term, SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS ya,
-    SUM(CASE WHEN in_a THEN 0 ELSE 1 END) AS yb
-  FROM base GROUP BY 1
-  HAVING SUM(CASE WHEN in_a THEN 1 ELSE 0 END)
-       + SUM(CASE WHEN in_a THEN 0 ELSE 1 END) >= 5
-), tot AS (
-  SELECT SUM(ya) AS na, SUM(yb) AS nb, SUM(ya + yb) AS n FROM tf
-), scored AS (
-  SELECT term, ya, yb,
-    round((ln((CAST(ya AS DOUBLE)
-               + CAST(100.0 AS DOUBLE) * CAST(ya + yb AS DOUBLE)
-                 / CAST(n AS DOUBLE))
-              / (CAST(na AS DOUBLE) + CAST(100.0 AS DOUBLE)
-                 - CAST(ya AS DOUBLE)
-                 - CAST(100.0 AS DOUBLE) * CAST(ya + yb AS DOUBLE)
-                   / CAST(n AS DOUBLE)))
-           - ln((CAST(yb AS DOUBLE)
-                 + CAST(100.0 AS DOUBLE) * CAST(ya + yb AS DOUBLE)
-                   / CAST(n AS DOUBLE))
-                / (CAST(nb AS DOUBLE) + CAST(100.0 AS DOUBLE)
-                   - CAST(yb AS DOUBLE)
-                   - CAST(100.0 AS DOUBLE) * CAST(ya + yb AS DOUBLE)
-                     / CAST(n AS DOUBLE))))
-          / sqrt(1.0 / (CAST(ya AS DOUBLE)
-                        + CAST(100.0 AS DOUBLE) * CAST(ya + yb AS DOUBLE)
-                          / CAST(n AS DOUBLE))
-                 + 1.0 / (CAST(yb AS DOUBLE)
-                          + CAST(100.0 AS DOUBLE) * CAST(ya + yb AS DOUBLE)
-                            / CAST(n AS DOUBLE))), 6) AS z
-  FROM tf CROSS JOIN tot
-), top_a AS (
-  SELECT term, 'a' AS side, CAST(ya AS BIGINT) AS y_a,
-    CAST(yb AS BIGINT) AS y_b, z AS log_odds_z
-  FROM scored QUALIFY row_number() OVER (ORDER BY z DESC, term ASC) <= 20
-), top_b AS (
-  SELECT term, 'b' AS side, CAST(ya AS BIGINT) AS y_a,
-    CAST(yb AS BIGINT) AS y_b, z AS log_odds_z
-  FROM scored QUALIFY row_number() OVER (ORDER BY z ASC, term ASC) <= 20
-)
-SELECT * FROM top_a UNION ALL SELECT * FROM top_b
-"""
-
-_ORACLES["breslow_day_status_price"] = f"""
-WITH per_k AS (
-  SELECT o_orderpriority AS s,
-    SUM(CASE WHEN o_orderstatus = 'F' AND o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS a,
-    SUM(CASE WHEN o_orderstatus = 'F' AND NOT o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS b,
-    SUM(CASE WHEN o_orderstatus <> 'F' AND o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS c,
-    SUM(CASE WHEN o_orderstatus <> 'F' AND NOT o_totalprice > 150000
-        THEN 1 ELSE 0 END) AS d
-  FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY 1
-), folded AS (
-  SELECT SUM(CAST(a + b + c + d AS DECIMAL(38,0))) AS n, count(*) AS k,
-    SUM(CAST(round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                   / CAST(a + b + c + d AS DOUBLE), 6)
-             AS DECIMAL(28,6))) AS num,
-    SUM(CAST(round(CAST(b AS DOUBLE) * CAST(c AS DOUBLE)
-                   / CAST(a + b + c + d AS DOUBLE), 6)
-             AS DECIMAL(28,6))) AS den
-  FROM per_k
-), pooled AS (
-  SELECT n, k,
-    CASE WHEN num > 0 AND den > 0 THEN {_ddwf('num')} / {_ddwf('den')}
-    END AS psi
-  FROM folded
-), terms AS (
-  SELECT a, psi,
-    CAST(a + b AS DOUBLE) AS m1, CAST(a + c AS DOUBLE) AS n1d,
-    CAST(a + b + c + d AS DOUBLE) AS nn
-  FROM per_k CROSS JOIN pooled
-), q AS (
-  SELECT *, 1.0 - psi AS qa,
-    (m1 + n1d) * psi + (nn - m1 - n1d) AS qb,
-    -psi * m1 * n1d AS qc
-  FROM terms
-), ee AS (
-  SELECT *, CASE WHEN abs(qa) < 1e-12 THEN -qc / qb
-    ELSE (-qb + sqrt(greatest(qb * qb - 4.0 * qa * qc,
-                              CAST(0.0 AS DOUBLE)))) / (2.0 * qa)
-    END AS e
-  FROM q
-), tt AS (
-  SELECT CASE WHEN psi IS NOT NULL AND e > 0 AND m1 - e > 0
-    AND n1d - e > 0 AND nn - m1 - n1d + e > 0
-  THEN CAST(round((CAST(a AS DOUBLE) - e) * (CAST(a AS DOUBLE) - e)
-                  * (1.0 / e + 1.0 / (m1 - e) + 1.0 / (n1d - e)
-                     + 1.0 / (nn - m1 - n1d + e)), 6) AS DECIMAL(18,6))
-  ELSE CAST(0.0 AS DECIMAL(18,6)) END AS term
-  FROM ee
-), chi AS (SELECT SUM(term) AS chi2 FROM tt)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_strata,
-  CASE WHEN psi IS NOT NULL THEN round(psi, 6) END AS or_mh,
-  CASE WHEN psi IS NOT NULL THEN round(CAST(chi2 AS DOUBLE), 6)
-  END AS bd_chi2
-FROM chi CROSS JOIN pooled
-"""
-
-
-# ----- round-9 wave 5: tokenization cost profile, empirical-Bernstein
-# monitoring CI -----
-
-
-def q_token_fertility_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language chars/token and tokens/doc profile
-    (operators/text.py:token_fertility_by_lang)."""
-    from breweries_etl_spark.operators.text import token_fertility_by_lang
-
-    return token_fertility_by_lang(load_table(spark, sf_dir, "documents"))
-
-
-def q_bernstein_ci_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bernstein 95% CI for the mean order price
-    (operators/profiling.py:bernstein_ci)."""
-    from breweries_etl_spark.operators.profiling import bernstein_ci
-
-    return bernstein_ci(load_table(spark, sf_dir, "orders"), "o_totalprice")
-
-
-_ORACLES["token_fertility_lang"] = """
-WITH base AS (
-  SELECT lang,
-    len(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS nt,
-    length(text) AS nc
-  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
-), folded AS (
-  SELECT lang, count(*) AS n_docs, SUM(nt) AS n_tokens,
-    SUM(nc) AS n_chars
-  FROM base GROUP BY 1
-)
-SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST(n_tokens AS BIGINT) AS n_tokens,
-  CAST(n_chars AS BIGINT) AS n_chars,
-  CASE WHEN n_tokens > 0 THEN
-    round(CAST(n_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
-  END AS chars_per_token,
-  CASE WHEN n_docs > 0 THEN
-    round(CAST(n_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-  END AS tokens_per_doc
-FROM folded
-"""
-
-_ORACLES["bernstein_ci_order_price"] = f"""
-WITH mom AS (
-  SELECT count(*) AS n,
-    SUM(CAST({_qm8('o_totalprice')} AS DECIMAL(38,2))) AS s,
-    SUM(CAST(CAST({_qm8('o_totalprice')} AS DECIMAL(24,2))
-        * {_qm8('o_totalprice')} AS DECIMAL(38,4))) AS q,
-    MIN({_qm8('o_totalprice')}) AS mn,
-    MAX({_qm8('o_totalprice')}) AS mx
-  FROM orders WHERE o_totalprice IS NOT NULL
-), v AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddwf('s')} / CAST(n AS DOUBLE) AS mean,
-    ({_ddwf('q')} - {_ddwf('s')} * ({_ddwf('s')} / CAST(n AS DOUBLE)))
-      / (CAST(n AS DOUBLE) - 1.0) AS var,
-    CAST(mx - mn AS DOUBLE) AS rng
-  FROM mom
-), h AS (
-  SELECT *, sqrt(greatest(
-      2.0 * var * CAST(4.094344562222 AS DECIMAL(18,12)) / nd,
-      CAST(0.0 AS DOUBLE)))
-    + 3.0 * rng * CAST(4.094344562222 AS DECIMAL(18,12)) / nd AS half
-  FROM v
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN n > 0 THEN round(mean, 6) END AS mean_value,
-  CASE WHEN n > 0 THEN round(rng, 6) END AS value_range,
-  CASE WHEN n > 1 THEN round(half, 6) END AS half_width,
-  CASE WHEN n > 1 THEN round(mean - half, 6) END AS ci_lo,
-  CASE WHEN n > 1 THEN round(mean + half, 6) END AS ci_hi
-FROM h
-"""
-
-
-# ----- round-9 wave 6: dispersion screen + a distributed, fully
-# SQL-replayable boosted-stump trainer -----
-
-
-def q_dispersion_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fano factor + dispersion chi-square of the daily event counts
-    (operators/temporal.py:dispersion_daily_counts)."""
-    from breweries_etl_spark.operators.temporal import dispersion_daily_counts
-
-    return dispersion_daily_counts(load_events(spark, sf_dir))
-
-
-def q_boosted_stumps_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-round boosted stump regression of extendedprice on the
-    bounded quantity domain — trained in one fact scan
-    (operators/mltrain.py:boosted_stumps_2)."""
-    from breweries_etl_spark.operators.mltrain import boosted_stumps_2
-
-    return boosted_stumps_2(
-        load_table(spark, sf_dir, "lineitem"), "l_quantity", "l_extendedprice"
-    )
-
-
-_ORACLES["dispersion_daily_events"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    count(*) AS x
-  FROM events WHERE ts IS NOT NULL GROUP BY 1
-), folded AS (
-  SELECT count(*) AS n, SUM(x) AS s,
-    SUM(CAST(CAST(x AS DECIMAL(19,0)) * x AS DECIMAL(38,0))) AS q
-  FROM daily
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CASE WHEN n > 0 THEN
-    round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) END AS mean_count,
-  CASE WHEN n > 1 AND CAST(s AS DOUBLE) / CAST(n AS DOUBLE) > 0 THEN
-    round((({_ddw('q')} - CAST(s AS DOUBLE)
-            * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0))
-          / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-  END AS fano,
-  CASE WHEN n > 1 AND CAST(s AS DOUBLE) / CAST(n AS DOUBLE) > 0 THEN
-    round((CAST(n AS DOUBLE) - 1.0)
-          * (({_ddw('q')} - CAST(s AS DOUBLE)
-              * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-             / (CAST(n AS DOUBLE) - 1.0))
-          / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-  END AS dispersion_chi2
-FROM folded
-"""
-
-_ORACLES["boosted_stumps_price_qty"] = f"""
-WITH per_x AS (
-  SELECT l_quantity AS x, count(*) AS nx,
-    SUM(CAST({_qm8('l_extendedprice')} AS DECIMAL(38,2))) AS sy,
-    SUM(CAST(CAST({_qm8('l_extendedprice')} AS DECIMAL(24,2))
-        * {_qm8('l_extendedprice')} AS DECIMAL(38,4))) AS qy
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-  GROUP BY 1
-), tot AS (
-  SELECT SUM(nx) AS n, SUM(sy) AS syt, SUM(qy) AS qyt, MAX(x) AS xmax
-  FROM per_x
-), pre AS (
-  SELECT x,
-    SUM(nx) OVER wo AS nl, SUM(sy) OVER wo AS syl, SUM(qy) OVER wo AS qyl
-  FROM per_x
-  WINDOW wo AS (ORDER BY x ROWS UNBOUNDED PRECEDING)
-), cand AS (
-  SELECT x AS s,
-    round(({_ddwf('qyl')} - {_ddwf('syl')} * {_ddwf('syl')}
-           / CAST(nl AS DOUBLE))
-          + (({_ddwf('qyt')} - {_ddwf('qyl')})
-             - ({_ddwf('syt')} - {_ddwf('syl')})
-               * ({_ddwf('syt')} - {_ddwf('syl')})
-               / CAST(n - nl AS DOUBLE)), 6) AS sse,
-    {_ddwf('syl')} / CAST(nl AS DOUBLE) AS pl,
-    ({_ddwf('syt')} - {_ddwf('syl')}) / CAST(n - nl AS DOUBLE) AS pr
-  FROM pre CROSS JOIN tot WHERE x < xmax
-), best1 AS (
-  SELECT sse AS sse_1, s AS split_1, pl, pr FROM cand
-  QUALIFY row_number() OVER (ORDER BY sse, s) = 1
-), resid AS (
-  SELECT x, nx,
-    CAST(round({_ddwf('sy')} - CAST(nx AS DOUBLE)
-        * (CASE WHEN x <= split_1 THEN pl ELSE pr END), 6)
-      AS DECIMAL(28,6)) AS rs,
-    CAST(round({_ddwf('qy')} - 2.0
-        * (CASE WHEN x <= split_1 THEN pl ELSE pr END) * {_ddwf('sy')}
-        + CAST(nx AS DOUBLE)
-          * (CASE WHEN x <= split_1 THEN pl ELSE pr END)
-          * (CASE WHEN x <= split_1 THEN pl ELSE pr END), 6)
-      AS DECIMAL(38,6)) AS rq
-  FROM per_x CROSS JOIN best1
-), rtot AS (
-  SELECT SUM(nx) AS n, SUM(rs) AS rst, SUM(rq) AS rqt, MAX(x) AS xmax
-  FROM resid
-), rpre AS (
-  SELECT x,
-    SUM(nx) OVER wo AS nl, SUM(rs) OVER wo AS rsl, SUM(rq) OVER wo AS rql
-  FROM resid
-  WINDOW wo AS (ORDER BY x ROWS UNBOUNDED PRECEDING)
-), cand2 AS (
-  SELECT x AS s,
-    round(({_ddwf('rql')} - {_ddwf('rsl')} * {_ddwf('rsl')}
-           / CAST(nl AS DOUBLE))
-          + (({_ddwf('rqt')} - {_ddwf('rql')})
-             - ({_ddwf('rst')} - {_ddwf('rsl')})
-               * ({_ddwf('rst')} - {_ddwf('rsl')})
-               / CAST(n - nl AS DOUBLE)), 6) AS sse,
-    {_ddwf('rsl')} / CAST(nl AS DOUBLE) AS al,
-    ({_ddwf('rst')} - {_ddwf('rsl')}) / CAST(n - nl AS DOUBLE) AS ar
-  FROM rpre CROSS JOIN rtot WHERE x < xmax
-), best2 AS (
-  SELECT sse AS sse_2, s AS split_2, al, ar FROM cand2
-  QUALIFY row_number() OVER (ORDER BY sse, s) = 1
-)
-SELECT CAST(n AS BIGINT) AS n,
-  round({_ddwf('qyt')} - {_ddwf('syt')} * {_ddwf('syt')}
-        / CAST(n AS DOUBLE), 6) AS sse_base,
-  split_1,
-  round(pl, 6) AS pred_left_1, round(pr, 6) AS pred_right_1,
-  sse_1, split_2,
-  round(al, 6) AS adj_left_2, round(ar, 6) AS adj_right_2,
-  sse_2
-FROM tot CROSS JOIN best1 CROSS JOIN best2
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 7: Cuzick trend, Goodman-Kruskal lambda, max drawdown
-# ---------------------------------------------------------------------------
-
-
-def q_cuzick_trend_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cuzick (1985) Wilcoxon-type trend across the ordered returnflag
-    groups A < N < R on l_quantity — tie-exact midrank moments from one
-    multigroup prefix-count pass
-    (operators/hypotests.py:cuzick_trend)."""
-    from breweries_etl_spark.operators.hypotests import cuzick_trend
-
-    return cuzick_trend(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_returnflag",
-        "l_quantity",
-        ["A", "N", "R"],
-    )
-
-
-def q_gk_lambda_status_priority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Goodman-Kruskal lambda (both directions + symmetric) between
-    order status and priority (operators/hypotests.py:gk_lambda)."""
-    from breweries_etl_spark.operators.hypotests import gk_lambda
-
-    return gk_lambda(
-        load_table(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority"
-    )
-
-
-def q_max_drawdown_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Maximum drawdown (absolute + pct-of-peak) of the daily event
-    value series (operators/temporal.py:max_drawdown_daily)."""
-    from breweries_etl_spark.operators.temporal import max_drawdown_daily
-
-    return max_drawdown_daily(load_events(spark, sf_dir))
-
-
-_ORACLES["cuzick_trend_qty_flag"] = f"""
-WITH vc AS (
-  SELECT l_quantity AS v,
-    SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS c0,
-    SUM(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS c1,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS c2
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_returnflag IS NOT NULL
-    AND l_returnflag IN ('A', 'N', 'R')
-  GROUP BY 1
-), pc AS (
-  SELECT c0, c1, c2, (c0 + c1 + c2) AS l,
-    SUM(c0 + c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), mid AS (
-  SELECT c0, c1, c2, l,
-    CAST(2 * cum - l + 1 AS HUGEINT) AS mid2
-  FROM pc
-), folded AS (
-  SELECT SUM(c0) AS n0, SUM(c1) AS n1, SUM(c2) AS n2,
-    SUM(CAST(c0 AS HUGEINT) * mid2) AS r2_0,
-    SUM(CAST(c1 AS HUGEINT) * mid2) AS r2_1,
-    SUM(CAST(c2 AS HUGEINT) * mid2) AS r2_2,
-    SUM(CAST(l AS HUGEINT) * mid2 * mid2) AS ss4
-  FROM mid
-), scalars AS (
-  SELECT (n0 + n1 + n2) AS n,
-    (r2_0 * 0 + r2_1 * 1 + r2_2 * 2) AS t2,
-    (n0 * 0 + n1 * 1 + n2 * 2) AS snl,
-    (n0 * 0 + n1 * 1 + n2 * 4) AS snl2,
-    ss4
-  FROM folded
-), dbl AS (
-  SELECT n,
-    {_ddw('t2')} / 2.0 AS t_stat,
-    CAST(snl AS DOUBLE) AS snl_d, CAST(snl2 AS DOUBLE) AS snl2_d,
-    CAST(n AS DOUBLE) AS nd,
-    {_ddw('ss4')} / 4.0 AS ssq
-  FROM scalars
-), fin AS (
-  SELECT n, t_stat, nd,
-    snl_d * (nd + 1.0) / 2.0 AS e_t,
-    (snl2_d - snl_d * snl_d / nd)
-      * (ssq - nd * ((nd + 1.0) / 2.0) * ((nd + 1.0) / 2.0))
-      / (nd - 1.0) AS var_t
-  FROM dbl
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(3 AS BIGINT) AS k_groups,
-  round(t_stat, 6) AS t_stat,
-  CASE WHEN n > 0 THEN round(e_t, 6) END AS expected_t,
-  CASE WHEN n > 1 AND var_t > 0
-    THEN round((t_stat - e_t) / sqrt(var_t), 6) END AS z_score
-FROM fin
-"""
-
-_ORACLES["gk_lambda_status_priority"] = """
-WITH cells AS (
-  SELECT o_orderstatus AS x, o_orderpriority AS y, count(*) AS c
-  FROM orders
-  WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
-  GROUP BY 1, 2
-), per_x AS (
-  SELECT x, max(c) AS mx_c, sum(c) AS row_c FROM cells GROUP BY x
-), per_y AS (
-  SELECT y, max(c) AS my_c, sum(c) AS col_c FROM cells GROUP BY y
-), tot AS (
-  SELECT sum(c) AS n, count(*) AS n_cells FROM cells
-), fx AS (
-  SELECT sum(mx_c) AS sum_max_y, max(row_c) AS max_row FROM per_x
-), fy AS (
-  SELECT sum(my_c) AS sum_max_x, max(col_c) AS max_col FROM per_y
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(n_cells AS BIGINT) AS n_cells,
-  CASE WHEN CAST(n AS DOUBLE) > CAST(max_col AS DOUBLE) THEN
-    round((CAST(sum_max_y AS DOUBLE) - CAST(max_col AS DOUBLE))
-          / (CAST(n AS DOUBLE) - CAST(max_col AS DOUBLE)), 6)
-  END AS lambda_y_given_x,
-  CASE WHEN CAST(n AS DOUBLE) > CAST(max_row AS DOUBLE) THEN
-    round((CAST(sum_max_x AS DOUBLE) - CAST(max_row AS DOUBLE))
-          / (CAST(n AS DOUBLE) - CAST(max_row AS DOUBLE)), 6)
-  END AS lambda_x_given_y,
-  CASE WHEN 2.0 * CAST(n AS DOUBLE)
-         > CAST(max_col AS DOUBLE) + CAST(max_row AS DOUBLE) THEN
-    round((CAST(sum_max_y AS DOUBLE) + CAST(sum_max_x AS DOUBLE)
-           - CAST(max_col AS DOUBLE) - CAST(max_row AS DOUBLE))
-          / (2.0 * CAST(n AS DOUBLE)
-             - CAST(max_col AS DOUBLE) - CAST(max_row AS DOUBLE)), 6)
-  END AS lambda_sym
-FROM tot, fx, fy
-"""
-
-_ORACLES["max_drawdown_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-walked AS (
-  SELECT y,
-    MAX(y) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS peak
-  FROM daily
-)
-SELECT CAST(count(*) AS BIGINT) AS n_days,
-  CAST(max(peak) AS DOUBLE) AS peak_value,
-  CAST(max(peak - y) AS DOUBLE) AS max_drawdown,
-  round(max(CASE WHEN peak > 0 THEN
-    CAST(peak - y AS DOUBLE) / CAST(peak AS DOUBLE) END), 6)
-    AS max_drawdown_pct
-FROM walked
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 8: Youden J, BWS two-sample, Mardia kurtosis
-# ---------------------------------------------------------------------------
-
-
-def q_youden_j_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Youden-J optimal threshold of order price vs finished status —
-    exact-integer argmax over the prefix-count relation, struct-max
-    pick (operators/hypotests.py:youden_j)."""
-    from breweries_etl_spark.operators.hypotests import youden_j
-
-    o = load_table(spark, sf_dir, "orders")
-    return youden_j(o, "o_totalprice", F.col("o_orderstatus") == "F")
-
-
-def q_bws_test_price_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baumgartner-Weiss-Schindler tail-sensitive two-sample test of
-    l_extendedprice between open and finished line items
-    (operators/hypotests.py:bws_test)."""
-    from breweries_etl_spark.operators.hypotests import bws_test
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return bws_test(li, "l_extendedprice", F.col("l_linestatus") == "O")
-
-
-def q_mardia_kurtosis_price_qty(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Mardia bivariate kurtosis of (price, quantity) — joint-tail
-    normality screen, two map-combinable scans
-    (operators/hypotests.py:mardia_kurtosis)."""
-    from breweries_etl_spark.operators.hypotests import mardia_kurtosis
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return mardia_kurtosis(li, "l_extendedprice", "l_quantity")
-
-
-_ORACLES["youden_j_order_status"] = f"""
-WITH vc AS (
-  SELECT o_totalprice AS v,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS cb
-  FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-), pc AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-    SUM(ca) OVER () AS n_pos, SUM(cb) OVER () AS n_neg
-  FROM vc
-), cand AS (
-  SELECT n_pos, n_neg, v, cum_a, cum_b,
-    CAST(n_neg * (n_pos - cum_a) - n_pos * (n_neg - cum_b) AS HUGEINT)
-      AS jnum
-  FROM pc
-), best AS (
-  SELECT * FROM cand
-  QUALIFY row_number() OVER (ORDER BY jnum DESC, v ASC) = 1
-)
-SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
-  CAST(v AS DOUBLE) AS best_threshold,
-  CASE WHEN n_pos > 0 THEN
-    round((CAST(n_pos AS DOUBLE) - CAST(cum_a AS DOUBLE))
-          / CAST(n_pos AS DOUBLE), 6) END AS tpr,
-  CASE WHEN n_neg > 0 THEN
-    round((CAST(n_neg AS DOUBLE) - CAST(cum_b AS DOUBLE))
-          / CAST(n_neg AS DOUBLE), 6) END AS fpr,
-  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-    round({_dd('jnum')}
-          / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 6)
-  END AS youden_j
-FROM best
-"""
-
-
-def _bws_side_cte(tag: str, c: str, cum: str, n_own: str, n_oth: str) -> str:
-    return f"""e{tag} AS (
-  SELECT n_own,
-    CAST(floor(dev * dev / den * 1e9) AS HUGEINT) AS t_fp
-  FROM (
-    SELECT {n_own} AS n_own,
-      CAST(mid2 AS DOUBLE) / 2.0
-        - (CAST({n_own} AS DOUBLE) + CAST({n_oth} AS DOUBLE))
-          / CAST({n_own} AS DOUBLE) * CAST(i AS DOUBLE) AS dev,
-      (CAST(i AS DOUBLE) / (CAST({n_own} AS DOUBLE) + 1.0))
-        * (1.0 - CAST(i AS DOUBLE) / (CAST({n_own} AS DOUBLE) + 1.0))
-        * (CAST({n_oth} AS DOUBLE)
-           * (CAST({n_own} AS DOUBLE) + CAST({n_oth} AS DOUBLE))
-           / CAST({n_own} AS DOUBLE)) AS den
-    FROM (
-      SELECT mid2, {n_own}, {n_oth},
-        unnest(generate_series(CAST({cum} - {c} + 1 AS BIGINT),
-                               CAST({cum} AS BIGINT))) AS i
-      FROM mid WHERE {c} > 0
-    )
-  )
-), f{tag} AS (
-  SELECT max(n_own) AS fold_n_{tag}, SUM(t_fp) AS fold_t_{tag} FROM e{tag}
-)"""
-
-
-_ORACLES["bws_test_price_status"] = f"""
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_linestatus = 'O' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), pc AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-    SUM(ca) OVER () AS n_a, SUM(cb) OVER () AS n_b
-  FROM vc
-), mid AS (
-  SELECT ca, cb, cum_a, cum_b, n_a, n_b,
-    (2 * (cum_a + cum_b) - (ca + cb) + 1) AS mid2
-  FROM pc
-), {_bws_side_cte('ca', 'ca', 'cum_a', 'n_a', 'n_b')},
-{_bws_side_cte('cb', 'cb', 'cum_b', 'n_b', 'n_a')}
-SELECT CAST(fold_n_ca AS BIGINT) AS n_a,
-  CAST(fold_n_cb AS BIGINT) AS n_b,
-  round({_ddw('fold_t_ca')} / 1e9 / CAST(fold_n_ca AS DOUBLE), 6) AS b_a,
-  round({_ddw('fold_t_cb')} / 1e9 / CAST(fold_n_cb AS DOUBLE), 6) AS b_b,
-  round(({_ddw('fold_t_ca')} / 1e9 / CAST(fold_n_ca AS DOUBLE)
-         + {_ddw('fold_t_cb')} / 1e9 / CAST(fold_n_cb AS DOUBLE))
-        / 2.0, 6) AS bws_b
-FROM fca, fcb
-"""
-
-_MARDIA_MX = f"{_ddwf('sx')} / CAST(n AS DOUBLE)"
-_MARDIA_MY = f"{_ddwf('sy')} / CAST(n AS DOUBLE)"
-
-_ORACLES["mardia_kurtosis_price_qty"] = f"""
-WITH base AS (
-  SELECT {_qm8('l_extendedprice')} AS xq, {_qm8('l_quantity')} AS yq
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-), sums AS (
-  SELECT count(*) AS n, SUM(xq) AS sx, SUM(yq) AS sy,
-    SUM(CAST(xq * xq AS DECIMAL(38,4))) AS sxx,
-    SUM(CAST(yq * yq AS DECIMAL(38,4))) AS syy,
-    SUM(CAST(xq * yq AS DECIMAL(38,4))) AS sxy
-  FROM base
-), mom AS (
-  SELECT n, {_MARDIA_MX} AS mx, {_MARDIA_MY} AS my,
-    {_ddwf('sxx')} / CAST(n AS DOUBLE)
-      - ({_MARDIA_MX}) * ({_MARDIA_MX}) AS vxx,
-    {_ddwf('syy')} / CAST(n AS DOUBLE)
-      - ({_MARDIA_MY}) * ({_MARDIA_MY}) AS vyy,
-    {_ddwf('sxy')} / CAST(n AS DOUBLE)
-      - ({_MARDIA_MX}) * ({_MARDIA_MY}) AS vxy
-  FROM sums
-), per AS (
-  SELECT n, vxx, vyy, vxy, (vxx * vyy - vxy * vxy) AS det,
-    CAST(xq AS DOUBLE) - mx AS dx, CAST(yq AS DOUBLE) - my AS dy
-  FROM base, mom
-), terms AS (
-  SELECT n, CASE WHEN det > 0 THEN CAST(floor(
-    (vyy * (dx * dx) - 2.0 * vxy * (dx * dy) + vxx * (dy * dy)) / det
-    * ((vyy * (dx * dx) - 2.0 * vxy * (dx * dy) + vxx * (dy * dy))
-       / det)
-    * 1e9) AS HUGEINT) END AS q_fp
-  FROM per
-), folded AS (
-  SELECT max(n) AS n, SUM(q_fp) AS qq_fp FROM terms
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN qq_fp IS NOT NULL THEN
-    round({_ddw('qq_fp')} / 1e9 / CAST(n AS DOUBLE), 6)
-  END AS b2_kurtosis,
-  CASE WHEN qq_fp IS NOT NULL AND n > 0 THEN
-    round(({_ddw('qq_fp')} / 1e9 / CAST(n AS DOUBLE) - 8.0)
-          / sqrt(32.0 / CAST(n AS DOUBLE)), 6)
-  END AS z_score
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 9: Gries DP dispersion, lexical constants, KPSS
-# ---------------------------------------------------------------------------
-
-
-def q_term_dispersion_dp_docs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Gries deviation-of-proportions dispersion of the top corpus
-    terms across sources — exact-integer numerators, present-cells-only
-    identity (operators/text.py:term_dispersion_dp)."""
-    from breweries_etl_spark.operators.text import term_dispersion_dp
-
-    return term_dispersion_dp(load_table(spark, sf_dir, "documents"))
-
-
-def q_lexical_constants_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herdan C / Brunet W / Sichel S / Honore R lexical-richness
-    constants over the document corpus
-    (operators/text.py:lexical_constants)."""
-    from breweries_etl_spark.operators.text import lexical_constants
-
-    return lexical_constants(load_table(spark, sf_dir, "documents"))
-
-
-def q_kpss_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPSS level-stationarity statistic of the daily event-value
-    series, Bartlett bandwidth 7
-    (operators/temporal.py:kpss_level_daily)."""
-    from breweries_etl_spark.operators.temporal import kpss_level_daily
-
-    return kpss_level_daily(load_events(spark, sf_dir))
-
-
-
-_ORACLES["term_dispersion_dp_docs"] = f"""
-WITH toks AS (
-  SELECT source AS s,
-    unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS term
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-), ts AS (
-  SELECT term, s, count(*) AS c_ts FROM toks GROUP BY 1, 2
-), src_tot AS (
-  SELECT s, sum(c_ts) AS tok_s FROM ts GROUP BY 1
-), term_tot AS (
-  SELECT term, sum(c_ts) AS c_t, count(*) AS n_sources FROM ts GROUP BY 1
-), big_t AS (
-  SELECT sum(tok_s) AS tt FROM src_tot
-), folded AS (
-  SELECT term, max(c_t) AS c_t, max(n_sources) AS n_sources,
-    max(tt) AS tt,
-    SUM(abs(CAST(c_ts AS HUGEINT) * tt - CAST(tok_s AS HUGEINT) * c_t)
-        - CAST(tok_s AS HUGEINT) * c_t) AS s_num
-  FROM ts JOIN src_tot USING (s) JOIN term_tot USING (term)
-  CROSS JOIN big_t
-  GROUP BY term
-)
-SELECT term, CAST(c_t AS BIGINT) AS corpus_freq,
-  CAST(n_sources AS BIGINT) AS n_sources,
-  round(({_ddw('s_num')} / CAST(c_t AS DOUBLE) / CAST(tt AS DOUBLE)
-         + 1.0) / 2.0, 6) AS dp
-FROM folded WHERE c_t >= 10
-ORDER BY corpus_freq DESC, term ASC LIMIT 25
-"""
-
-_ORACLES["lexical_constants_docs"] = """
-WITH tf AS (
-  SELECT term, count(*) AS f FROM (
-    SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS term
-    FROM documents WHERE text IS NOT NULL
-  ) GROUP BY 1
-), folded AS (
-  SELECT SUM(f) AS n, count(*) AS v,
-    SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS v1,
-    SUM(CASE WHEN f = 2 THEN 1 ELSE 0 END) AS v2
-  FROM tf
-)
-SELECT CAST(n AS BIGINT) AS n_tokens, CAST(v AS BIGINT) AS n_types,
-  CAST(v1 AS BIGINT) AS v1, CAST(v2 AS BIGINT) AS v2,
-  CASE WHEN n > 1 AND v > 0 THEN
-    round(ln(CAST(v AS DOUBLE)) / ln(CAST(n AS DOUBLE)), 6)
-  END AS herdan_c,
-  CASE WHEN n > 1 AND v > 1 THEN
-    round(exp(ln(CAST(n AS DOUBLE))
-              * exp(-0.165 * ln(CAST(v AS DOUBLE)))), 6)
-  END AS brunet_w,
-  CASE WHEN v > 0 THEN
-    round(CAST(v2 AS DOUBLE) / CAST(v AS DOUBLE), 6)
-  END AS sichel_s,
-  CASE WHEN n > 1 AND v > v1 THEN
-    round(100.0 * ln(CAST(n AS DOUBLE))
-          / (1.0 - CAST(v1 AS DOUBLE) / CAST(v AS DOUBLE)), 6)
-  END AS honore_r
-FROM folded
-"""
-
-_ORACLES["kpss_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-tot AS (SELECT count(*) AS n, SUM(y) AS sy FROM daily),
-walked AS (
-  SELECT n, day,
-    CAST(y AS DOUBLE) - {_dd('sy')} / CAST(n AS DOUBLE) AS e
-  FROM daily CROSS JOIN tot
-), cum AS (
-  SELECT n, e,
-    SUM(e) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS s_t,
-    lag(e, 1) OVER (ORDER BY day) AS e_lag1,
-    lag(e, 2) OVER (ORDER BY day) AS e_lag2,
-    lag(e, 3) OVER (ORDER BY day) AS e_lag3,
-    lag(e, 4) OVER (ORDER BY day) AS e_lag4,
-    lag(e, 5) OVER (ORDER BY day) AS e_lag5,
-    lag(e, 6) OVER (ORDER BY day) AS e_lag6,
-    lag(e, 7) OVER (ORDER BY day) AS e_lag7
-  FROM walked
-), folded AS (
-  SELECT max(n) AS n,
-    SUM(CAST(floor(s_t * s_t * 1e4) AS HUGEINT)) AS num_fp,
-    SUM(CAST(floor(e * e * 1e4) AS HUGEINT)) AS g0_fp,
-    SUM(CAST(floor(e * e_lag1 * 1e4) AS HUGEINT)) AS g1_fp,
-    SUM(CAST(floor(e * e_lag2 * 1e4) AS HUGEINT)) AS g2_fp,
-    SUM(CAST(floor(e * e_lag3 * 1e4) AS HUGEINT)) AS g3_fp,
-    SUM(CAST(floor(e * e_lag4 * 1e4) AS HUGEINT)) AS g4_fp,
-    SUM(CAST(floor(e * e_lag5 * 1e4) AS HUGEINT)) AS g5_fp,
-    SUM(CAST(floor(e * e_lag6 * 1e4) AS HUGEINT)) AS g6_fp,
-    SUM(CAST(floor(e * e_lag7 * 1e4) AS HUGEINT)) AS g7_fp
-  FROM cum
-), dbl AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddw('num_fp')} / 1e4 AS num,
-    ({_ddw('g0_fp')} / 1e4
-      + 2.0 * 0.875 * (COALESCE({_ddw('g1_fp')}, 0.0) / 1e4)
-      + 2.0 * 0.75 * (COALESCE({_ddw('g2_fp')}, 0.0) / 1e4)
-      + 2.0 * 0.625 * (COALESCE({_ddw('g3_fp')}, 0.0) / 1e4)
-      + 2.0 * 0.5 * (COALESCE({_ddw('g4_fp')}, 0.0) / 1e4)
-      + 2.0 * 0.375 * (COALESCE({_ddw('g5_fp')}, 0.0) / 1e4)
-      + 2.0 * 0.25 * (COALESCE({_ddw('g6_fp')}, 0.0) / 1e4)
-      + 2.0 * 0.125 * (COALESCE({_ddw('g7_fp')}, 0.0) / 1e4)
-    ) / CAST(n AS DOUBLE) AS s2
-  FROM folded
-)
-SELECT CAST(n AS BIGINT) AS n_days, CAST(7 AS BIGINT) AS lags,
-  CASE WHEN n > 0 THEN round(s2, 6) END AS s2_longrun,
-  CASE WHEN n > 0 AND s2 > 0 THEN
-    round(num / (nd * nd) / s2, 6) END AS kpss_stat
-FROM dbl
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 10: Rayleigh circular uniformity, Mood dispersion,
-# join-key discovery profile
-# ---------------------------------------------------------------------------
-
-_JK_PAIRS = [
-    ("orders.custkey->customer.custkey", "orders", "o_custkey",
-     "customer", "c_custkey"),
-    ("lineitem.orderkey->orders.orderkey", "lineitem", "l_orderkey",
-     "orders", "o_orderkey"),
-    ("customer.nationkey->nation.nationkey", "customer", "c_nationkey",
-     "nation", "n_nationkey"),
-    ("orders.orderkey->customer.custkey", "orders", "o_orderkey",
-     "customer", "c_custkey"),
-]
-
-
-def q_rayleigh_hour_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rayleigh circular-uniformity test of event time-of-day
-    (operators/temporal.py:rayleigh_hour_uniformity)."""
-    from breweries_etl_spark.operators.temporal import (
-        rayleigh_hour_uniformity,
-    )
-
-    return rayleigh_hour_uniformity(load_events(spark, sf_dir))
-
-
-def q_mood_dispersion_price_status(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Mood quadratic-score rank dispersion of l_extendedprice between
-    open and finished line items
-    (operators/hypotests.py:mood_dispersion)."""
-    from breweries_etl_spark.operators.hypotests import mood_dispersion
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return mood_dispersion(li, "l_extendedprice", F.col("l_linestatus") == "O")
-
-
-def q_join_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inclusion-dependency / joinability profile over four candidate
-    column pairs incl. one negative
-    (operators/profiling.py:join_key_profile)."""
-    from breweries_etl_spark.operators.profiling import join_key_profile
-
-    return join_key_profile(
-        [
-            (name, load_table(spark, sf_dir, ta), ca,
-             load_table(spark, sf_dir, tb), cb)
-            for name, ta, ca, tb, cb in _JK_PAIRS
-        ]
-    )
-
-
-def _jk_pair_sql(name: str, ta: str, ca: str, tb: str, cb: str) -> str:
-    return f"""SELECT '{name}' AS pair,
-  COALESCE(SUM(ra), 0) AS n_rows_a, COUNT(ra) AS n_distinct_a,
-  COALESCE(SUM(rb), 0) AS n_rows_b, COUNT(rb) AS n_distinct_b,
-  COUNT(CASE WHEN ra IS NOT NULL AND rb IS NOT NULL THEN 1 END)
-    AS n_intersect,
-  SUM(ra) AS raw_rows_a, SUM(rb) AS raw_rows_b
-FROM (
-  SELECT CAST({ca} AS VARCHAR) AS v, count(*) AS ra
-  FROM {ta} WHERE {ca} IS NOT NULL GROUP BY 1
-) a FULL OUTER JOIN (
-  SELECT CAST({cb} AS VARCHAR) AS v, count(*) AS rb
-  FROM {tb} WHERE {cb} IS NOT NULL GROUP BY 1
-) b USING (v)"""
-
-
-
-_ORACLES["rayleigh_hour_events"] = f"""
-WITH base AS (
-  SELECT
-    CAST(round(cos(2.0 * 3.141592653589793
-      * CAST(epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 AS DOUBLE)
-      / 86400000000.0), 6) AS DECIMAL(8,6)) AS cw,
-    CAST(round(sin(2.0 * 3.141592653589793
-      * CAST(epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 AS DOUBLE)
-      / 86400000000.0), 6) AS DECIMAL(8,6)) AS sw
-  FROM events WHERE ts IS NOT NULL
-), folded AS (
-  SELECT count(*) AS n,
-    SUM(CAST(cw AS DECIMAL(38,6))) AS c,
-    SUM(CAST(sw AS DECIMAL(38,6))) AS s
-  FROM base
-), pre AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddwf('c')} AS cd, {_ddwf('s')} AS sd
-  FROM folded
-), mid AS (
-  SELECT n, nd, sqrt(cd * cd + sd * sd) / nd AS rbar,
-    atan2(sd, cd) / 6.283185307179586 * 24.0 AS h0
-  FROM pre
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN n > 0 THEN round(rbar, 6) END AS resultant_len,
-  CASE WHEN n > 0 THEN round(nd * rbar * rbar, 6) END AS rayleigh_z,
-  CASE WHEN n > 0 THEN
-    round(CASE WHEN h0 < 0 THEN h0 + 24.0 ELSE h0 END, 6)
-  END AS mean_hour
-FROM mid
-"""
-
-_ORACLES["mood_dispersion_price_status"] = f"""
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_linestatus = 'O' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), pc AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-    SUM(ca) OVER () AS n_a, SUM(cb) OVER () AS n_b,
-    SUM(ca + cb) OVER () AS nn
-  FROM vc
-), mid AS (
-  SELECT ca, cb, n_a, n_b, nn,
-    CAST((2 * (cum_a + cum_b) - (ca + cb) + 1) - (nn + 1) AS DOUBLE)
-      / (2.0 * CAST(nn AS DOUBLE)) AS u
-  FROM pc
-), folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, max(nn) AS nn,
-    SUM(CAST(floor(CAST(ca AS DOUBLE) * (u * u) * 1e12) AS HUGEINT))
-      AS t_fp,
-    SUM(CAST(floor(CAST(ca + cb AS DOUBLE) * (u * u) * 1e12)
-        AS HUGEINT)) AS sq_fp,
-    SUM(CAST(floor(CAST(ca + cb AS DOUBLE) * ((u * u) * (u * u)) * 1e12)
-        AS HUGEINT)) AS sqq_fp
-  FROM mid
-), dbl AS (
-  SELECT n_a, n_b, nn,
-    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-    CAST(nn AS DOUBLE) AS nd,
-    {_ddw('t_fp')} / 1e12 AS t_stat,
-    {_ddw('sq_fp')} / 1e12 AS sq,
-    {_ddw('sqq_fp')} / 1e12 AS sqq
-  FROM folded
-), fin AS (
-  SELECT n_a, n_b, nn, t_stat,
-    na * sq / nd AS e_t,
-    na * nb / (nd * (nd - 1.0)) * (sqq - sq * sq / nd) AS var_t
-  FROM dbl
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round(t_stat, 6) AS t_stat,
-  CASE WHEN nn > 0 THEN round(e_t, 6) END AS expected_t,
-  CASE WHEN nn > 1 AND var_t > 0 THEN
-    round((t_stat - e_t) / sqrt(var_t), 6) END AS z_score
-FROM fin
-"""
-
-_ORACLES["join_key_discovery"] = f"""
-WITH allp AS (
-{_jk_pair_sql('orders.custkey->customer.custkey', 'orders', 'o_custkey', 'customer', 'c_custkey')}
-UNION ALL
-{_jk_pair_sql('lineitem.orderkey->orders.orderkey', 'lineitem', 'l_orderkey', 'orders', 'o_orderkey')}
-UNION ALL
-{_jk_pair_sql('customer.nationkey->nation.nationkey', 'customer', 'c_nationkey', 'nation', 'n_nationkey')}
-UNION ALL
-{_jk_pair_sql('orders.orderkey->customer.custkey', 'orders', 'o_orderkey', 'customer', 'c_custkey')}
-)
-SELECT pair,
-  CAST(n_rows_a AS BIGINT) AS n_rows_a,
-  CAST(n_distinct_a AS BIGINT) AS n_distinct_a,
-  CAST(n_rows_b AS BIGINT) AS n_rows_b,
-  CAST(n_distinct_b AS BIGINT) AS n_distinct_b,
-  CAST(n_intersect AS BIGINT) AS n_intersect,
-  CASE WHEN CAST(n_distinct_a AS DOUBLE) > 0 THEN
-    round(CAST(n_intersect AS DOUBLE) / CAST(n_distinct_a AS DOUBLE), 6)
-  END AS containment_ab,
-  CASE WHEN CAST(n_distinct_b AS DOUBLE) > 0 THEN
-    round(CAST(n_intersect AS DOUBLE) / CAST(n_distinct_b AS DOUBLE), 6)
-  END AS containment_ba,
-  CASE WHEN CAST(n_distinct_a AS DOUBLE) + CAST(n_distinct_b AS DOUBLE)
-         - CAST(n_intersect AS DOUBLE) > 0 THEN
-    round(CAST(n_intersect AS DOUBLE)
-          / (CAST(n_distinct_a AS DOUBLE) + CAST(n_distinct_b AS DOUBLE)
-             - CAST(n_intersect AS DOUBLE)), 6)
-  END AS jaccard,
-  CASE WHEN raw_rows_a > 0 THEN
-    round(CAST(n_distinct_a AS DOUBLE) / CAST(raw_rows_a AS DOUBLE), 6)
-  END AS uniqueness_a,
-  CASE WHEN raw_rows_b > 0 THEN
-    round(CAST(n_distinct_b AS DOUBLE) / CAST(raw_rows_b AS DOUBLE), 6)
-  END AS uniqueness_b
-FROM allp
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 11: PACF, seasonal strength, Welch ANOVA
-# ---------------------------------------------------------------------------
-
-
-def q_pacf_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial autocorrelation (Durbin-Levinson, lags 1-3) of the daily
-    event-value series (operators/temporal.py:pacf_daily)."""
-    from breweries_etl_spark.operators.temporal import pacf_daily
-
-    return pacf_daily(load_events(spark, sf_dir))
-
-
-def q_seasonal_strength_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STL-style weekly seasonal-strength decomposition of the daily
-    event-value series
-    (operators/temporal.py:seasonal_strength_daily)."""
-    from breweries_etl_spark.operators.temporal import (
-        seasonal_strength_daily,
-    )
-
-    return seasonal_strength_daily(load_events(spark, sf_dir))
-
-
-def q_welch_anova_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch heteroscedastic one-way ANOVA of l_extendedprice across
-    the three returnflag groups
-    (operators/hypotests.py:welch_anova)."""
-    from breweries_etl_spark.operators.hypotests import welch_anova
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return welch_anova(li, "l_returnflag", "l_extendedprice", ["A", "N", "R"])
-
-
-
-_ORACLES["pacf_daily_value"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), tot AS (
-  SELECT count(*) AS n,
-    SUM(CAST(y AS DECIMAL(38,2))) AS s,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS q
-  FROM daily
-), lags AS (SELECT unnest(range(1, 4)) AS lag),
-pairs AS (
-  SELECT lags.lag, a.y AS y, b.y AS y2
-  FROM daily a CROSS JOIN lags JOIN daily b ON b.day = a.day + lags.lag
-), per_lag AS (
-  SELECT lag, count(*) AS n_pairs,
-    SUM(CAST(y * y2 AS DECIMAL(38,4))) AS p,
-    SUM(CAST(y AS DECIMAL(38,2))) AS a,
-    SUM(CAST(y2 AS DECIMAL(38,2))) AS b
-  FROM pairs GROUP BY lag
-), rhos AS (
-  SELECT lag,
-    CASE WHEN {_dd('q')} - {_dd('s')} * ({_dd('s')} / CAST(n AS DOUBLE))
-           > 0 THEN
-      round(({_dd('p')}
-             - ({_dd('s')} / CAST(n AS DOUBLE))
-               * ({_dd('a')} + {_dd('b')})
-             + CAST(n_pairs AS DOUBLE)
-               * ({_dd('s')} / CAST(n AS DOUBLE))
-               * ({_dd('s')} / CAST(n AS DOUBLE)))
-            / ({_dd('q')}
-               - {_dd('s')} * ({_dd('s')} / CAST(n AS DOUBLE))), 6)
-    END AS rho
-  FROM per_lag CROSS JOIN tot
-), pivoted AS (
-  SELECT max(CASE WHEN lag = 1 THEN rho END) AS rho1,
-    max(CASE WHEN lag = 2 THEN rho END) AS rho2,
-    max(CASE WHEN lag = 3 THEN rho END) AS rho3
-  FROM rhos
-), wide AS (
-  SELECT n, rho1, rho2, rho3 FROM tot CROSS JOIN pivoted
-), s1 AS (
-  SELECT n, rho1, rho2, rho3, rho1 AS p11,
-    CASE WHEN (1.0 - rho1 * rho1) <> 0 THEN
-      (rho2 - rho1 * rho1) / (1.0 - rho1 * rho1) END AS p22
-  FROM wide
-), s2 AS (
-  SELECT *, (p11 - p22 * p11) AS p21 FROM s1
-)
-SELECT CAST(n AS BIGINT) AS n_days, rho1, rho2, rho3,
-  p11 AS pacf1, round(p22, 6) AS pacf2,
-  round(CASE WHEN (1.0 - p21 * rho1 - p22 * rho2) <> 0 THEN
-    (rho3 - p21 * rho2 - p22 * rho1)
-      / (1.0 - p21 * rho1 - p22 * rho2) END, 6) AS pacf3
-FROM s2
-"""
-
-_ORACLES["seasonal_strength_daily"] = f"""
-WITH {_DAILY_EVENTS},
-base AS (
-  SELECT day % 7 AS dow,
-    CAST(y AS DOUBLE)
-      - CAST(SUM(y) OVER (ORDER BY day
-          RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS DOUBLE)
-        / CAST(COUNT(y) OVER (ORDER BY day
-          RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS DOUBLE) AS detr
-  FROM daily
-), dmeans AS (
-  SELECT dow, SUM(CAST(floor(detr * 1e6) AS HUGEINT)) AS sd_fp,
-    count(*) AS c
-  FROM base GROUP BY dow
-), joined AS (
-  SELECT detr,
-    detr - ({_ddw('sd_fp')} / 1e6 / CAST(c AS DOUBLE)) AS resid
-  FROM base JOIN dmeans USING (dow)
-), folded AS (
-  SELECT count(*) AS n,
-    SUM(CAST(floor(detr * detr * 1e6) AS HUGEINT)) AS dd_fp,
-    SUM(CAST(floor(detr * 1e6) AS HUGEINT)) AS d_fp,
-    SUM(CAST(floor(resid * resid * 1e6) AS HUGEINT)) AS rr_fp,
-    SUM(CAST(floor(resid * 1e6) AS HUGEINT)) AS r_fp
-  FROM joined
-), dbl AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddw('dd_fp')} / 1e6 / CAST(n AS DOUBLE)
-      - ({_ddw('d_fp')} / 1e6 / CAST(n AS DOUBLE))
-        * ({_ddw('d_fp')} / 1e6 / CAST(n AS DOUBLE)) AS var_d,
-    {_ddw('rr_fp')} / 1e6 / CAST(n AS DOUBLE)
-      - ({_ddw('r_fp')} / 1e6 / CAST(n AS DOUBLE))
-        * ({_ddw('r_fp')} / 1e6 / CAST(n AS DOUBLE)) AS var_r
-  FROM folded
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CASE WHEN n > 0 THEN round(var_d, 6) END AS var_detrended,
-  CASE WHEN n > 0 THEN round(var_r, 6) END AS var_residual,
-  CASE WHEN n > 0 AND var_d > 0 THEN
-    round(greatest(0.0, 1.0 - var_r / var_d), 6)
-  END AS seasonal_strength
-FROM dbl
-"""
-
-_ORACLES["welch_anova_price_flag"] = f"""
-WITH g AS (
-  SELECT l_returnflag AS g, count(*) AS n_i,
-    SUM({_qm8('l_extendedprice')}) AS s_i,
-    SUM(CAST({_qm8('l_extendedprice')} * {_qm8('l_extendedprice')}
-        AS DECIMAL(38,4))) AS q_i
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-    AND l_returnflag IN ('A', 'N', 'R')
-  GROUP BY 1
-), per AS (
-  SELECT n_i, CAST(n_i AS DOUBLE) AS nd, m, v
-  FROM (
-    SELECT n_i,
-      {_ddwf('s_i')} / CAST(n_i AS DOUBLE) AS m,
-      ({_ddwf('q_i')} - {_ddwf('s_i')}
-         * ({_ddwf('s_i')} / CAST(n_i AS DOUBLE)))
-        / (CAST(n_i AS DOUBLE) - 1.0) AS v
-    FROM g
-  ) WHERE n_i >= 2 AND v > 0
-), fold1 AS (
-  SELECT count(*) AS k, SUM(n_i) AS n,
-    SUM(CAST(round(nd / v, 12) AS DECIMAL(38,12))) AS w12,
-    SUM(CAST(round(nd / v * m, 12) AS DECIMAL(38,12))) AS wm12
-  FROM per
-), per2 AS (
-  SELECT k, n, nd, m, v, nd / v AS w,
-    CAST(w12 AS DOUBLE) AS wtot,
-    CAST(wm12 AS DOUBLE) / CAST(w12 AS DOUBLE) AS xbar
-  FROM per CROSS JOIN fold1
-), fold2 AS (
-  SELECT max(k) AS k, max(n) AS n,
-    SUM(CAST(round(w * (m - xbar) * (m - xbar), 12)
-        AS DECIMAL(38,12))) AS a12,
-    SUM(CAST(round((1.0 - w / wtot) * (1.0 - w / wtot) / (nd - 1.0),
-        12) AS DECIMAL(38,12))) AS h12
-  FROM per2
-), fin AS (
-  SELECT k, n, CAST(k AS DOUBLE) AS kd,
-    CAST(a12 AS DOUBLE) / (CAST(k AS DOUBLE) - 1.0) AS a_stat,
-    1.0 + 2.0 * (CAST(k AS DOUBLE) - 2.0)
-      / (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)
-      * CAST(h12 AS DOUBLE) AS b_stat,
-    CAST(h12 AS DOUBLE) AS lam
-  FROM fold2
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN k > 1 AND b_stat > 0 THEN round(a_stat / b_stat, 6)
-  END AS w_stat,
-  CASE WHEN k > 1 THEN (kd - 1.0) END AS df1,
-  CASE WHEN k > 1 AND lam > 0 THEN
-    round((kd * kd - 1.0) / (3.0 * lam), 6) END AS df2
-FROM fin
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 12: portable inverse-normal-CDF twin + normal-scores tests
-# ---------------------------------------------------------------------------
-
-from breweries_etl_spark.operators.hypotests import (  # noqa: E402
-    _PPF_A, _PPF_B, _PPF_C, _PPF_D, _PPF_PLOW,
-)
-
-
-def _horner_sql(coefs: list, x: str) -> str:
-    acc = repr(coefs[0])
-    for c in coefs[1:]:
-        acc = f"({acc} * {x} + {repr(c)})"
-    return acc
-
-
-def _norm_ppf_sql(p: str) -> str:
-    """SQL twin of operators/hypotests.norm_ppf — generated from the
-    SAME Acklam coefficient lists with repr() round-tripping, identical
-    Horner association, so both engines produce bit-identical doubles
-    (ln/sqrt are the accepted 1-ulp-class primitives)."""
-    q_lo = f"sqrt(-2.0 * ln({p}))"
-    q_hi = f"sqrt(-2.0 * ln(1.0 - {p}))"
-    lower = (
-        f"({_horner_sql(_PPF_C, q_lo)} / {_horner_sql(_PPF_D + [1.0], q_lo)})"
-    )
-    upper = (
-        f"(-({_horner_sql(_PPF_C, q_hi)}"
-        f" / {_horner_sql(_PPF_D + [1.0], q_hi)}))"
-    )
-    q_m = f"({p} - 0.5)"
-    r_m = f"({q_m} * {q_m})"
-    middle = (
-        f"({_horner_sql(_PPF_A, r_m)} * {q_m}"
-        f" / {_horner_sql(_PPF_B + [1.0], r_m)})"
-    )
-    return (
-        f"(CASE WHEN {p} > 0.0 AND {p} < {_PPF_PLOW!r} THEN {lower}"
-        f" WHEN {p} >= {_PPF_PLOW!r} AND {p} <= {1.0 - _PPF_PLOW!r}"
-        f" THEN {middle}"
-        f" WHEN {p} > {1.0 - _PPF_PLOW!r} AND {p} < 1.0 THEN {upper}"
-        f" END)"
-    )
-
-
-def q_van_der_waerden_price_flag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Van der Waerden normal-scores k-sample test of l_extendedprice
-    across returnflag groups
-    (operators/hypotests.py:van_der_waerden)."""
-    from breweries_etl_spark.operators.hypotests import van_der_waerden
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return van_der_waerden(
-        li, "l_returnflag", "l_extendedprice", ["A", "N", "R"]
-    )
-
-
-def q_fligner_killeen_price_flag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Fligner-Killeen robust scale test of l_extendedprice across
-    returnflag groups (operators/hypotests.py:fligner_killeen)."""
-    from breweries_etl_spark.operators.hypotests import fligner_killeen
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return fligner_killeen(
-        li, "l_returnflag", "l_extendedprice", ["A", "N", "R"]
-    )
-
-_ORACLES["van_der_waerden_price_flag"] = f"""
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS c0,
-    SUM(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS c1,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS c2
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-    AND l_returnflag IN ('A', 'N', 'R')
-  GROUP BY 1
-),
-pc AS (
-  SELECT v, c0, c1, c2,
-    SUM(c0) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m0,
-    SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m1,
-    SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m2,
-    SUM(c0) OVER () AS n0,
-    SUM(c1) OVER () AS n1,
-    SUM(c2) OVER () AS n2,
-    SUM(c0 + c1 + c2) OVER () AS nn
-  FROM vc
-),
-scored AS (
-  SELECT c0, c1, c2, (c0 + c1 + c2) AS l, n0, n1, n2, nn,
-    CAST(round({_norm_ppf_sql('p')}, 6) AS DECIMAL(9,6)) AS a6
-  FROM (
-    SELECT c0, c1, c2, n0, n1, n2, nn,
-      CAST(2 * (m0 + m1 + m2) - (c0 + c1 + c2) + 1 AS DOUBLE) / 2.0
-        / (CAST(nn AS DOUBLE) + 1.0) AS p
-    FROM pc
-  )
-), folded AS (
-  SELECT max(nn) AS nn, max(n0) AS n0, max(n1) AS n1, max(n2) AS n2,
-    SUM(CAST(CAST(c0 AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS s0,
-    SUM(CAST(CAST(c1 AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS s1,
-    SUM(CAST(CAST(c2 AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS s2,
-    SUM(CAST(CAST(l AS DECIMAL(19,0)) * a6 * a6 AS DECIMAL(38,12)))
-      AS ss
-  FROM scored
-), allp AS (
-  SELECT nn, ss, n0 AS n_i, s0 AS s_i FROM folded WHERE n0 > 0
-  UNION ALL SELECT nn, ss, n1 AS n_i, s1 AS s_i FROM folded WHERE n1 > 0
-  UNION ALL SELECT nn, ss, n2 AS n_i, s2 AS s_i FROM folded WHERE n2 > 0
-), fin AS (
-  SELECT max(nn) AS n, count(*) AS k, max(ss) AS ss,
-    SUM(CAST(round({_ddwf('s_i')} * {_ddwf('s_i')}
-        / CAST(n_i AS DOUBLE), 9) AS DECIMAL(38,9))) AS num9
-  FROM allp
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN n > 1 AND {_ddwf('ss')} / (CAST(n AS DOUBLE) - 1.0) > 0
-  THEN round(CAST(num9 AS DOUBLE)
-             / ({_ddwf('ss')} / (CAST(n AS DOUBLE) - 1.0)), 6)
-  END AS t_stat
-FROM fin
-"""
-
-_ORACLES["fligner_killeen_price_flag"] = f"""
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS c0,
-    SUM(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS c1,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS c2
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-    AND l_returnflag IN ('A', 'N', 'R')
-  GROUP BY 1
-),
-pc AS (
-  SELECT v, c0, c1, c2,
-    SUM(c0) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m0,
-    SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m1,
-    SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m2,
-    SUM(c0) OVER () AS n0,
-    SUM(c1) OVER () AS n1,
-    SUM(c2) OVER () AS n2,
-    SUM(c0 + c1 + c2) OVER () AS nn
-  FROM vc
-),
-meds AS (
-  SELECT
-    min(CASE WHEN m0 >= CAST(floor((n0 + 1) / 2) AS BIGINT) THEN CAST(v AS DOUBLE) END) AS vlo0,
-    min(CASE WHEN m0 >= CAST(floor(n0 / 2) AS BIGINT) + 1 THEN CAST(v AS DOUBLE) END) AS vhi0,
-    min(CASE WHEN m1 >= CAST(floor((n1 + 1) / 2) AS BIGINT) THEN CAST(v AS DOUBLE) END) AS vlo1,
-    min(CASE WHEN m1 >= CAST(floor(n1 / 2) AS BIGINT) + 1 THEN CAST(v AS DOUBLE) END) AS vhi1,
-    min(CASE WHEN m2 >= CAST(floor((n2 + 1) / 2) AS BIGINT) THEN CAST(v AS DOUBLE) END) AS vlo2,
-    min(CASE WHEN m2 >= CAST(floor(n2 / 2) AS BIGINT) + 1 THEN CAST(v AS DOUBLE) END) AS vhi2
-  FROM pc
-), centered AS (
-  SELECT l_returnflag AS g,
-    abs(CAST(l_extendedprice AS DOUBLE) - CASE l_returnflag
-      WHEN 'A' THEN (vlo0 + vhi0) / 2.0
-      WHEN 'N' THEN (vlo1 + vhi1) / 2.0
-      WHEN 'R' THEN (vlo2 + vhi2) / 2.0
-    END) AS z
-  FROM lineitem CROSS JOIN meds
-), vc2 AS (
-  SELECT z AS v,
-    SUM(CASE WHEN g = 'A' THEN 1 ELSE 0 END) AS c0,
-    SUM(CASE WHEN g = 'N' THEN 1 ELSE 0 END) AS c1,
-    SUM(CASE WHEN g = 'R' THEN 1 ELSE 0 END) AS c2
-  FROM centered
-  WHERE z IS NOT NULL AND g IS NOT NULL AND g IN ('A', 'N', 'R')
-  GROUP BY 1
-), pc2 AS (
-  SELECT v, c0, c1, c2,
-    SUM(c0) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m0,
-    SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m1,
-    SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS m2,
-    SUM(c0) OVER () AS n0,
-    SUM(c1) OVER () AS n1,
-    SUM(c2) OVER () AS n2,
-    SUM(c0 + c1 + c2) OVER () AS nn
-  FROM vc2
-), scored AS (
-  SELECT c0, c1, c2, (c0 + c1 + c2) AS l, n0, n1, n2, nn,
-    CAST(round({_norm_ppf_sql('p')}, 6) AS DECIMAL(9,6)) AS a6
-  FROM (
-    SELECT c0, c1, c2, n0, n1, n2, nn,
-      0.5 + CAST(2 * (m0 + m1 + m2) - (c0 + c1 + c2) + 1 AS DOUBLE)
-        / 2.0 / (2.0 * (CAST(nn AS DOUBLE) + 1.0)) AS p
-    FROM pc2
-  )
-), folded AS (
-  SELECT max(nn) AS nn, max(n0) AS n0, max(n1) AS n1, max(n2) AS n2,
-    SUM(CAST(CAST(c0 AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS s0,
-    SUM(CAST(CAST(c1 AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS s1,
-    SUM(CAST(CAST(c2 AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS s2,
-    SUM(CAST(CAST(l AS DECIMAL(19,0)) * a6 AS DECIMAL(38,6))) AS sa,
-    SUM(CAST(CAST(l AS DECIMAL(19,0)) * a6 * a6 AS DECIMAL(38,12)))
-      AS ss
-  FROM scored
-), allp AS (
-  SELECT nn, sa, ss, n0 AS n_i, s0 AS s_i FROM folded WHERE n0 > 0
-  UNION ALL SELECT nn, sa, ss, n1 AS n_i, s1 AS s_i FROM folded
-  WHERE n1 > 0
-  UNION ALL SELECT nn, sa, ss, n2 AS n_i, s2 AS s_i FROM folded
-  WHERE n2 > 0
-), fin AS (
-  SELECT max(nn) AS n, count(*) AS k, max(sa) AS sa, max(ss) AS ss,
-    SUM(CAST(round(CAST(n_i AS DOUBLE)
-        * ({_ddwf('s_i')} / CAST(n_i AS DOUBLE)
-           - {_ddwf('sa')} / CAST(nn AS DOUBLE))
-        * ({_ddwf('s_i')} / CAST(n_i AS DOUBLE)
-           - {_ddwf('sa')} / CAST(nn AS DOUBLE)), 9)
-        AS DECIMAL(38,9))) AS num9
-  FROM allp
-), dbl AS (
-  SELECT n, k, num9, CAST(n AS DOUBLE) AS nd,
-    {_ddwf('sa')} / CAST(n AS DOUBLE) AS gbar,
-    {_ddwf('ss')} AS ssd
-  FROM fin
-), fin2 AS (
-  SELECT n, k, num9,
-    (ssd - nd * gbar * gbar) / (nd - 1.0) AS v_all
-  FROM dbl
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-  CASE WHEN n > 1 AND v_all > 0 THEN
-    round(CAST(num9 AS DOUBLE) / v_all, 6) END AS x2_stat
-FROM fin2
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 13: Cucconi joint location-scale, BH-FDR daily screen
-# ---------------------------------------------------------------------------
-
-from breweries_etl_spark.operators.hypotests import (  # noqa: E402
-    _CDF_B, _CDF_P,
-)
-
-
-def _norm_sf_sql(x: str) -> str:
-    """SQL twin of operators/hypotests.norm_sf (A&S 7.1.26 upper tail;
-    caller passes a non-negative column/expression), generated from
-    the same coefficients with identical Horner association."""
-    z = f"({x} / 1.4142135623730951)"
-    t = f"(1.0 / (1.0 + {_CDF_P!r} * {z}))"
-    poly = f"({_horner_sql(_CDF_B, t)} * {t})"
-    return f"({poly} * exp(-({z} * {z})) / 2.0)"
-
-
-def q_cucconi_price_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cucconi joint location-scale rank test of l_extendedprice
-    between open and finished line items
-    (operators/hypotests.py:cucconi_test)."""
-    from breweries_etl_spark.operators.hypotests import cucconi_test
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return cucconi_test(li, "l_extendedprice", F.col("l_linestatus") == "O")
-
-
-def q_bh_fdr_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benjamini-Hochberg FDR screen over per-day event-count z-scores
-    (operators/temporal.py:bh_fdr_daily_counts)."""
-    from breweries_etl_spark.operators.temporal import bh_fdr_daily_counts
-
-    return bh_fdr_daily_counts(load_events(spark, sf_dir))
-
-
-
-_ORACLES["cucconi_price_status"] = f"""
-WITH vc AS (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_linestatus = 'O' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), pc AS (
-  SELECT v, ca, cb,
-    SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-    SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b,
-    SUM(ca) OVER () AS n_a, SUM(cb) OVER () AS n_b,
-    SUM(ca + cb) OVER () AS nn
-  FROM vc
-), mid AS (
-  SELECT ca, n_a, n_b, nn,
-    CAST(2 * (cum_a + cum_b) - (ca + cb) + 1 AS HUGEINT) AS mid2,
-    CAST(2 * (nn + 1) AS HUGEINT)
-      - CAST(2 * (cum_a + cum_b) - (ca + cb) + 1 AS HUGEINT) AS con2
-  FROM pc
-), folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, max(nn) AS nn,
-    SUM(CAST(ca AS HUGEINT) * mid2 * mid2) AS r4,
-    SUM(CAST(ca AS HUGEINT) * con2 * con2) AS s4
-  FROM mid
-), dbl AS (
-  SELECT n_a, n_b, nn,
-    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-    CAST(nn AS DOUBLE) AS nd,
-    {_ddw('r4')} / 4.0 AS sum_r2,
-    {_ddw('s4')} / 4.0 AS sum_s2
-  FROM folded
-), uv AS (
-  SELECT n_a, n_b, nn, nd,
-    (6.0 * sum_r2 - na * (nd + 1.0) * (2.0 * nd + 1.0))
-      / sqrt(na * nb * (nd + 1.0) * (2.0 * nd + 1.0)
-             * (8.0 * nd + 11.0) / 5.0) AS u,
-    (6.0 * sum_s2 - na * (nd + 1.0) * (2.0 * nd + 1.0))
-      / sqrt(na * nb * (nd + 1.0) * (2.0 * nd + 1.0)
-             * (8.0 * nd + 11.0) / 5.0) AS v,
-    2.0 * (nd * nd - 4.0)
-      / ((2.0 * nd + 1.0) * (8.0 * nd + 11.0)) - 1.0 AS rho
-  FROM dbl
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CASE WHEN nn > 1 THEN round(u, 6) END AS u_stat,
-  CASE WHEN nn > 1 THEN round(v, 6) END AS v_stat,
-  CASE WHEN nn > 2 AND 1.0 - rho * rho > 0 THEN
-    round((u * u + v * v - 2.0 * rho * u * v)
-          / (2.0 * (1.0 - rho * rho)), 6) END AS cucconi_c
-FROM uv
-"""
-
-_ORACLES["bh_fdr_daily_events"] = f"""
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    count(*) AS c
-  FROM events WHERE ts IS NOT NULL GROUP BY 1
-), tot AS (
-  SELECT count(*) AS m, SUM(c) AS n FROM daily
-), base0 AS (
-  SELECT day, m,
-    abs((CAST(c AS DOUBLE) - CAST(n AS DOUBLE) / CAST(m AS DOUBLE))
-        / sqrt(CAST(n AS DOUBLE) / CAST(m AS DOUBLE))) AS az
-  FROM daily CROSS JOIN tot
-), base AS (
-  SELECT day, m, round(2.0 * {_norm_sf_sql('az')}, 6) AS p FROM base0
-), ranked AS (
-  SELECT m, p,
-    row_number() OVER (ORDER BY p ASC, day ASC) AS i
-  FROM base
-), folded AS (
-  SELECT max(m) AS m,
-    max(CASE WHEN p <= 0.05 * CAST(i AS DOUBLE) / CAST(m AS DOUBLE)
-        THEN i END) AS khat,
-    max(CASE WHEN p <= 0.05 * CAST(i AS DOUBLE) / CAST(m AS DOUBLE)
-        THEN p END) AS thresh,
-    min(p) AS min_p
-  FROM ranked
-)
-SELECT CAST(m AS BIGINT) AS m_days,
-  CAST(COALESCE(khat, 0) AS BIGINT) AS n_significant,
-  thresh AS bh_threshold, min_p
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 14: Bartels rank von Neumann, difference-sign test
-# ---------------------------------------------------------------------------
-
-
-def q_bartels_rank_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bartels rank von Neumann serial-randomness ratio of the daily
-    event-value series (operators/temporal.py:bartels_rank_daily)."""
-    from breweries_etl_spark.operators.temporal import bartels_rank_daily
-
-    return bartels_rank_daily(load_events(spark, sf_dir))
-
-
-def q_difference_sign_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Difference-sign monotone-trend screen of the daily event-value
-    series (operators/temporal.py:difference_sign_daily)."""
-    from breweries_etl_spark.operators.temporal import (
-        difference_sign_daily,
-    )
-
-    return difference_sign_daily(load_events(spark, sf_dir))
-
-
-
-_ORACLES["bartels_rank_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-ranked AS (
-  SELECT day, y, 2 * row_number() OVER (ORDER BY y) AS rr2_raw
-  FROM daily
-), mid AS (
-  SELECT y, SUM(rr2_raw) AS sum2, count(*) AS c FROM ranked GROUP BY y
-), r2 AS (
-  SELECT day,
-    CAST(CAST(sum2 AS DOUBLE) / CAST(c AS DOUBLE) AS BIGINT) AS r2
-  FROM ranked JOIN mid USING (y)
-), walked AS (
-  SELECT r2, lead(r2) OVER (ORDER BY day) AS r2n FROM r2
-), folded AS (
-  SELECT count(*) AS n, SUM(r2) AS s2,
-    SUM(CAST(CAST(r2 AS HUGEINT) * CAST(r2 AS HUGEINT) AS HUGEINT))
-      AS q4,
-    SUM(CAST(CAST(r2 - r2n AS HUGEINT) * CAST(r2 - r2n AS HUGEINT)
-        AS HUGEINT)) AS d4
-  FROM walked
-), dbl AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddw('d4')} / 4.0 AS num,
-    {_ddw('q4')} / 4.0
-      - CAST(n AS DOUBLE)
-        * (CAST(s2 AS DOUBLE) / 2.0 / CAST(n AS DOUBLE))
-        * (CAST(s2 AS DOUBLE) / 2.0 / CAST(n AS DOUBLE)) AS den
-  FROM folded
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CASE WHEN n > 1 AND den > 0 THEN round(num / den, 6) END
-    AS rvn_ratio,
-  CASE WHEN n > 1 AND den > 0 THEN
-    round((num / den - 2.0) / sqrt(4.0 / nd), 6) END AS z_score
-FROM dbl
-"""
-
-_ORACLES["difference_sign_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-walked AS (
-  SELECT y, lag(y) OVER (ORDER BY day) AS yp FROM daily
-), filtered AS (
-  SELECT y, yp FROM walked WHERE yp IS NOT NULL
-), folded AS (
-  SELECT count(*) AS m,
-    SUM(CASE WHEN y > yp THEN 1 ELSE 0 END) AS n_asc
-  FROM filtered
-)
-SELECT CAST(m + 1 AS BIGINT) AS n_days, CAST(n_asc AS BIGINT) AS n_ascents,
-  round(((CAST(m AS DOUBLE) + 1.0) - 1.0) / 2.0, 6) AS expected,
-  CASE WHEN ((CAST(m AS DOUBLE) + 1.0) + 1.0) / 12.0 > 0 THEN
-    round((CAST(n_asc AS DOUBLE)
-           - ((CAST(m AS DOUBLE) + 1.0) - 1.0) / 2.0)
-          / sqrt(((CAST(m AS DOUBLE) + 1.0) + 1.0) / 12.0), 6)
-  END AS z_score
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 15: seasonal Mann-Kendall, Chatterjee xi
-# ---------------------------------------------------------------------------
-
-
-def q_seasonal_mann_kendall_daily(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hirsch-Slack seasonal Mann-Kendall trend test (weekday seasons)
-    on the daily event-value series
-    (operators/temporal.py:seasonal_mann_kendall)."""
-    from breweries_etl_spark.operators.temporal import (
-        seasonal_mann_kendall,
-    )
-
-    return seasonal_mann_kendall(load_events(spark, sf_dir))
-
-
-def q_chatterjee_xi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chatterjee xi dependence between per-day event count and
-    per-day total value (operators/temporal.py:chatterjee_xi_daily)."""
-    from breweries_etl_spark.operators.temporal import chatterjee_xi_daily
-
-    return chatterjee_xi_daily(load_events(spark, sf_dir))
-
-
-
-_ORACLES["seasonal_mann_kendall_daily"] = """
-WITH daily AS MATERIALIZED (
-  SELECT day, y, day % 7 AS season FROM (
-    SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-      SUM(CAST(value AS DECIMAL(18,2))) AS y
-    FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-  )
-), s AS (
-  SELECT SUM(CAST(sign(b.y - a.y) AS BIGINT)) AS s
-  FROM daily a JOIN daily b
-    ON a.day < b.day AND a.season = b.season
-), nt AS (
-  SELECT count(*) AS n, count(DISTINCT season) AS n_seasons FROM daily
-), vn AS (
-  SELECT SUM(CAST(c AS HUGEINT) * (c - 1) * (2 * c + 5)) AS var_n
-  FROM (SELECT count(*) AS c FROM daily GROUP BY season)
-), tie AS (
-  SELECT SUM(CAST(c AS HUGEINT) * (c - 1) * (2 * c + 5)) AS tie_sum
-  FROM (SELECT count(*) AS c FROM daily GROUP BY season, y)
-), fin AS (
-  SELECT n, n_seasons, s,
-    CAST(var_n - COALESCE(tie_sum, 0) AS DOUBLE) / 18.0 AS var_s
-  FROM nt CROSS JOIN s CROSS JOIN vn CROSS JOIN tie
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CAST(n_seasons AS BIGINT) AS n_seasons,
-  CAST(s AS BIGINT) AS s_stat,
-  CASE WHEN n > 1 THEN round(var_s, 6) END AS var_s,
-  CASE WHEN n > 1 AND var_s > 0 THEN round(
-    CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) / sqrt(var_s)
-         WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) / sqrt(var_s)
-         ELSE 0.0 END, 6) END AS z_score
-FROM fin
-"""
-
-_ORACLES["chatterjee_xi_daily"] = f"""
-WITH daily AS MATERIALIZED (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    count(*) AS x,
-    SUM(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events WHERE ts IS NOT NULL GROUP BY 1
-  HAVING SUM(CAST(value AS DECIMAL(18,2))) IS NOT NULL
-), yc AS (
-  SELECT y, count(*) AS c FROM daily GROUP BY y
-), ycum AS (
-  SELECT y, c,
-    SUM(c) OVER (ORDER BY y ROWS UNBOUNDED PRECEDING) AS r
-  FROM yc
-), joined AS (
-  SELECT day, x, r, c FROM daily JOIN ycum USING (y)
-), walked AS (
-  SELECT r, c, lead(r) OVER (ORDER BY x ASC, day ASC) AS rn
-  FROM joined
-), tot AS (
-  SELECT count(*) AS n FROM daily
-), folded AS (
-  SELECT max(n) AS n, SUM(abs(r - rn)) AS sum_dr,
-    SUM(CAST(n - (r - c) AS HUGEINT) * CAST(r - c AS HUGEINT))
-      AS denom2
-  FROM walked CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CAST(sum_dr AS BIGINT) AS sum_abs_dr,
-  CAST(denom2 AS BIGINT) AS denom,
-  CASE WHEN denom2 > 0 THEN
-    round(1.0 - CAST(n AS DOUBLE) * CAST(sum_dr AS DOUBLE)
-          / (2.0 * {_ddw('denom2')}), 6) END AS xi
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 16: Wilson score CIs, cluster-jackknife ratio SE
-# ---------------------------------------------------------------------------
-
-
-def q_wilson_ci_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wilson 95% score intervals for the finished-order share per
-    priority class (operators/profiling.py:wilson_ci_by_group)."""
-    from breweries_etl_spark.operators.profiling import wilson_ci_by_group
-
-    o = load_table(spark, sf_dir, "orders")
-    return wilson_ci_by_group(
-        o, "o_orderpriority", F.col("o_orderstatus") == "F"
-    )
-
-
-def q_jackknife_ratio_nation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Delete-one-nation jackknife SE for mean customer balance —
-    cluster-respecting uncertainty
-    (operators/profiling.py:jackknife_ratio_by_group)."""
-    from breweries_etl_spark.operators.profiling import (
-        jackknife_ratio_by_group,
-    )
-
-    c = load_table(spark, sf_dir, "customer")
-    return jackknife_ratio_by_group(c, "c_nationkey", "c_acctbal")
-
-
-
-_ORACLES["wilson_ci_priority"] = """
-WITH g AS (
-  SELECT o_orderpriority AS grp, count(*) AS n,
-    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS successes
-  FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY 1
-), dbl AS (
-  SELECT grp, n, successes,
-    CAST(successes AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-    1.959963984540054 * 1.959963984540054 AS z2,
-    CAST(n AS DOUBLE) AS nd
-  FROM g
-), fin AS (
-  SELECT grp, n, successes, p, nd,
-    (p + z2 / (2.0 * nd)) / (1.0 + z2 / nd) AS center,
-    1.959963984540054
-      * sqrt(p * (1.0 - p) / nd + z2 / (4.0 * nd * nd))
-      / (1.0 + z2 / nd) AS half
-  FROM dbl
-)
-SELECT grp AS "group", CAST(n AS BIGINT) AS n,
-  CAST(successes AS BIGINT) AS successes,
-  CASE WHEN n > 0 THEN round(p, 6) END AS p_hat,
-  -- + 0.0 normalizes -0.0 (see wilson_ci_by_group)
-  CASE WHEN n > 0 THEN round(center - half, 6) + 0.0 END AS ci_low,
-  CASE WHEN n > 0 THEN round(center + half, 6) + 0.0 END AS ci_high
-FROM fin
-"""
-
-_ORACLES["jackknife_ratio_nation"] = f"""
-WITH per_g AS (
-  SELECT c_nationkey AS g,
-    SUM(CAST(COALESCE(CAST(c_acctbal AS DECIMAL(18,2)), 0)
-        AS DECIMAL(38,2))) AS x_g,
-    count(*) AS n_g
-  FROM customer
-  WHERE c_nationkey IS NOT NULL AND c_acctbal IS NOT NULL
-  GROUP BY 1
-), tot AS (
-  SELECT count(*) AS gg, SUM(x_g) AS xx, SUM(n_g) AS nn FROM per_g
-), base AS (
-  SELECT * FROM per_g CROSS JOIN tot
-), f1 AS (
-  SELECT max(gg) AS gg, max(xx) AS xx, max(nn) AS nn,
-    SUM(CAST(round({_ddwf('xx - x_g')}
-        / CAST(nn - n_g AS DOUBLE), 9) AS DECIMAL(38,9))) AS s_loo
-  FROM base
-), b2 AS (
-  SELECT base.*,
-    CAST(f1.s_loo AS DOUBLE) / CAST(f1.gg AS DOUBLE) AS theta_bar
-  FROM base CROSS JOIN f1
-), f2 AS (
-  SELECT max(gg) AS gg, max(xx) AS xx, max(nn) AS nn,
-    max(theta_bar) AS theta_bar,
-    SUM(CAST(round(
-      ({_ddwf('xx - x_g')} / CAST(nn - n_g AS DOUBLE) - theta_bar)
-      * ({_ddwf('xx - x_g')} / CAST(nn - n_g AS DOUBLE) - theta_bar),
-      9) AS DECIMAL(38,9))) AS ss_dev
-  FROM b2
-)
-SELECT CAST(gg AS BIGINT) AS n_groups,
-  CASE WHEN nn > 0 THEN
-    round({_ddwf('xx')} / CAST(nn AS DOUBLE), 6) END AS ratio,
-  CASE WHEN gg > 1 THEN
-    round(sqrt((CAST(gg AS DOUBLE) - 1.0) / CAST(gg AS DOUBLE)
-               * CAST(ss_dev AS DOUBLE)), 6) END AS jackknife_se,
-  CASE WHEN gg > 1 THEN
-    round((CAST(gg AS DOUBLE) - 1.0)
-          * (theta_bar - {_ddwf('xx')} / CAST(nn AS DOUBLE)), 6)
-  END AS jackknife_bias
-FROM f2
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-9 wave 17: log-rank retention test
-# ---------------------------------------------------------------------------
-
-
-def q_logrank_retention_cohorts(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Mantel-Cox log-rank test between engaged (>= 5 events) and
-    casual user retention cohorts, censoring identical to the KM
-    operator (operators/behavior.py:logrank_retention)."""
-    from breweries_etl_spark.operators.behavior import logrank_retention
-
-    return logrank_retention(load_events(spark, sf_dir))
-
-
-
-_ORACLES["logrank_retention_cohorts"] = """
-WITH us AS (
-  SELECT user_id,
-    MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
-    MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
-    count(*) AS n_ev
-  FROM events GROUP BY user_id
-), mx AS (
-  SELECT MAX(last_us) AS max_us FROM us
-), per AS (
-  SELECT (last_us - first_us) // 86400000000 AS day,
-    CASE WHEN last_us < max_us - 604800000000 THEN 1 ELSE 0 END
-      AS churn,
-    CASE WHEN n_ev >= 5 THEN 1 ELSE 0 END AS grp
-  FROM us CROSS JOIN mx
-), per_day AS (
-  SELECT day,
-    SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS ends_a,
-    SUM(CASE WHEN grp = 1 AND churn = 1 THEN 1 ELSE 0 END) AS churn_a,
-    SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS ends_b,
-    SUM(CASE WHEN grp = 0 AND churn = 1 THEN 1 ELSE 0 END) AS churn_b
-  FROM per GROUP BY day
-), at_risk AS (
-  SELECT day, churn_a, churn_b, ends_a, ends_b,
-    SUM(ends_a) OVER (ORDER BY day DESC ROWS UNBOUNDED PRECEDING)
-      AS nr_a,
-    SUM(ends_b) OVER (ORDER BY day DESC ROWS UNBOUNDED PRECEDING)
-      AS nr_b
-  FROM per_day
-), folded AS (
-  SELECT SUM(ends_a) AS n_a, SUM(ends_b) AS n_b,
-    SUM(churn_a) AS o1,
-    SUM(CASE WHEN CAST(churn_a + churn_b AS DOUBLE) > 0 THEN
-      CAST(round(CAST(churn_a + churn_b AS DOUBLE)
-           * CAST(nr_a AS DOUBLE)
-           / CAST(nr_a + nr_b AS DOUBLE), 9) AS DECIMAL(38,9))
-      ELSE CAST(0 AS DECIMAL(38,9)) END) AS e1,
-    SUM(CASE WHEN CAST(churn_a + churn_b AS DOUBLE) > 0
-          AND CAST(nr_a + nr_b AS DOUBLE) > 1 THEN
-      CAST(round(CAST(churn_a + churn_b AS DOUBLE)
-           * (CAST(nr_a AS DOUBLE) / CAST(nr_a + nr_b AS DOUBLE))
-           * (1.0 - CAST(nr_a AS DOUBLE)
-              / CAST(nr_a + nr_b AS DOUBLE))
-           * (CAST(nr_a + nr_b AS DOUBLE)
-              - CAST(churn_a + churn_b AS DOUBLE))
-           / (CAST(nr_a + nr_b AS DOUBLE) - 1.0), 9)
-        AS DECIMAL(38,9))
-      ELSE CAST(0 AS DECIMAL(38,9)) END) AS v
-  FROM at_risk
-)
-SELECT CAST(n_a AS BIGINT) AS n_engaged,
-  CAST(n_b AS BIGINT) AS n_casual,
-  CAST(o1 AS BIGINT) AS observed_a,
-  round(CAST(e1 AS DOUBLE), 6) AS expected_a,
-  CASE WHEN CAST(v AS DOUBLE) > 0 THEN
-    round((CAST(o1 AS DOUBLE) - CAST(e1 AS DOUBLE))
-          * (CAST(o1 AS DOUBLE) - CAST(e1 AS DOUBLE))
-          / CAST(v AS DOUBLE), 6) END AS chi2
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-10 wave 18: Lepage omnibus, Pettitt change-point, Foster-Stuart
-# ---------------------------------------------------------------------------
-
-
-def q_lepage_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lepage location-or-scale omnibus on price, returned vs other —
-    one prefix-count pass serving both the Wilcoxon and Ansari parts
-    (operators/hypotests.py:lepage_test)."""
-    from breweries_etl_spark.operators.hypotests import lepage_test
-
-    return lepage_test(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_pettitt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pettitt rank change-point over the daily value series
-    (operators/temporal.py:pettitt_changepoint)."""
-    from breweries_etl_spark.operators.temporal import pettitt_changepoint
-
-    return pettitt_changepoint(load_events(spark, sf_dir))
-
-
-def q_foster_stuart_daily_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Foster-Stuart records trend/dispersion test over the daily
-    value series (operators/temporal.py:foster_stuart_records)."""
-    from breweries_etl_spark.operators.temporal import (
-        foster_stuart_records,
-    )
-
-    return foster_stuart_records(load_events(spark, sf_dir))
-
-
-_ORACLES["lepage_price_flag"] = f"""
-WITH vc AS MATERIALIZED (
-  SELECT l_extendedprice AS v,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS cb
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-), cum AS (
-  SELECT v, ca, cb,
-    SUM(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (
-  SELECT SUM(ca) AS n_a, SUM(cb) AS n_b, SUM(ca + cb) AS nn FROM vc
-), geom AS (
-  SELECT ca, cb, n_a, n_b, nn,
-    CAST(ca + cb AS DECIMAL(19,0)) AS c,
-    CAST(2 AS DECIMAL(19,0)) * CAST(cum AS DECIMAL(19,0))
-      - CAST(ca + cb AS DECIMAL(19,0)) + 1 AS u,
-    CAST(cum AS DECIMAL(19,0)) - CAST(ca + cb AS DECIMAL(19,0)) + 1 AS lo,
-    CAST(cum AS DECIMAL(19,0)) AS hi,
-    CAST((nn + 1) // 2 AS DECIMAL(19,0)) AS t,
-    CAST(nn + 1 AS DECIMAL(19,0)) AS np1
-  FROM cum CROSS JOIN tot
-), series AS (
-  SELECT ca, n_a, n_b, nn, c, u, lo, hi, np1,
-    least(hi, t) AS b1,
-    greatest(least(hi, t) - lo + 1, CAST(0 AS DECIMAL(19,0))) AS len1,
-    greatest(lo, t + 1) AS a2,
-    greatest(hi - greatest(lo, t + 1) + 1, CAST(0 AS DECIMAL(19,0))) AS len2
-  FROM geom
-), folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, max(nn) AS nn,
-    SUM(CAST(CAST(ca AS DECIMAL(19,0)) * u AS DECIMAL(38,0))) AS r2a,
-    SUM(CAST(c * c * c - c AS DECIMAL(38,0))) AS ties,
-    SUM(CAST(floor(1e6 * CAST(ca AS DOUBLE)
-                   * (({_ddw(_AB_S2V)} / 2.0) / CAST(c AS DOUBLE)))
-             AS DECIMAL(38,0))) AS w_fp,
-    SUM({_AB_S2V}) AS s2_sum,
-    SUM(CAST(floor(1e6 * ({_ddw(_AB_S2V)} / 2.0)
-                   * (({_ddw(_AB_S2V)} / 2.0) / CAST(c AS DOUBLE)))
-             AS DECIMAL(38,0))) AS aa_fp
-  FROM series
-), d AS (
-  SELECT n_a, n_b, nn,
-    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-    CAST(nn AS DOUBLE) AS n,
-    {_ddw('r2a')} / 2.0 AS wa,
-    {_ddw('ties')} AS tiesum,
-    {_ddw('w_fp')} / 1e6 AS w,
-    {_ddw('s2_sum')} / 2.0 AS sa,
-    {_ddw('aa_fp')} / 1e6 AS saa
-  FROM folded
-), z AS (
-  SELECT n_a, n_b,
-    (wa - na * (n + 1.0) / 2.0)
-      / sqrt(na * nb / 12.0 * ((n + 1.0) - tiesum / (n * (n - 1.0))))
-      AS zw,
-    (w - na * (sa / n))
-      / sqrt(na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0))) AS zab,
-    (n_a > 0 AND n_b > 0
-     AND na * nb / 12.0 * ((n + 1.0) - tiesum / (n * (n - 1.0))) > 0
-     AND na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0)) > 0) AS ok
-  FROM d
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  CASE WHEN ok THEN round(zw, 6) END AS z_wilcoxon,
-  CASE WHEN ok THEN round(zab, 6) END AS z_ansari,
-  CASE WHEN ok THEN round(zw * zw + zab * zab, 6) END AS lepage_l,
-  CASE WHEN ok THEN
-    round(exp(-round(zw * zw + zab * zab, 6) / 2.0), 6) END AS p_value
-FROM z
-"""
-
-_ORACLES["pettitt_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-yc AS (
-  SELECT y, count(*) AS c FROM daily GROUP BY y
-), ycum AS (
-  SELECT y, c,
-    SUM(c) OVER (ORDER BY y ROWS UNBOUNDED PRECEDING) AS cum
-  FROM yc
-), joined AS (
-  SELECT day, CAST(2 * cum - c + 1 AS BIGINT) AS u
-  FROM daily JOIN ycum USING (y)
-), tot AS (SELECT count(*) AS n FROM daily),
-stepped AS (
-  SELECT day,
-    SUM(u) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-      - CAST(row_number() OVER (ORDER BY day) AS BIGINT) * (n + 1) AS ut
-  FROM joined CROSS JOIN tot
-  QUALIFY row_number() OVER (ORDER BY day) < n
-), kk AS (SELECT max(abs(ut)) AS k_stat FROM stepped),
-arg AS (
-  SELECT min(day) AS change_day
-  FROM stepped CROSS JOIN kk WHERE abs(ut) = k_stat
-), final AS (
-  SELECT n, k_stat, change_day FROM tot CROSS JOIN kk CROSS JOIN arg
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CAST(k_stat AS BIGINT) AS k_stat,
-  CAST(change_day AS BIGINT) AS change_day,
-  CASE WHEN n > 1 THEN
-    round(least(1.0, 2.0 * exp(-6.0 * CAST(k_stat AS DOUBLE)
-      * CAST(k_stat AS DOUBLE)
-      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-         + CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))), 6) END AS p_approx
-FROM final
-"""
-
-_ORACLES["foster_stuart_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-walked AS (
-  SELECT y,
-    row_number() OVER (ORDER BY day) AS t,
-    max(y) OVER (ORDER BY day
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax,
-    min(y) OVER (ORDER BY day
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmin
-  FROM daily
-), flagged AS (SELECT * FROM walked WHERE t >= 2),
-folded AS (
-  SELECT
-    SUM(CASE WHEN y > pmax THEN 1 ELSE 0 END) AS u,
-    SUM(CASE WHEN y < pmin THEN 1 ELSE 0 END) AS l,
-    SUM(CAST(round(2.0 / CAST(t AS DOUBLE), 12) AS DECIMAL(38,12)))
-      AS vd12,
-    SUM(CAST(round(2.0 / CAST(t AS DOUBLE)
-          - 4.0 / (CAST(t AS DOUBLE) * CAST(t AS DOUBLE)), 12)
-        AS DECIMAL(38,12))) AS vs12
-  FROM flagged
-), tot AS (SELECT count(*) AS n FROM daily),
-final AS (SELECT * FROM folded CROSS JOIN tot)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CAST(u AS BIGINT) AS n_upper,
-  CAST(l AS BIGINT) AS n_lower,
-  CAST(u - l AS BIGINT) AS d_stat,
-  CAST(u + l AS BIGINT) AS s_stat,
-  CASE WHEN CAST(vd12 AS DOUBLE) > 0 THEN
-    round((CAST(u AS DOUBLE) - CAST(l AS DOUBLE))
-          / sqrt(CAST(vd12 AS DOUBLE)), 6) END AS z_trend,
-  CASE WHEN CAST(vs12 AS DOUBLE) > 0 THEN
-    round((CAST(u AS DOUBLE) + CAST(l AS DOUBLE) - CAST(vd12 AS DOUBLE))
-          / sqrt(CAST(vs12 AS DOUBLE)), 6) END AS z_disp
-FROM final
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-10 wave 19: Fleiss' kappa, D'Agostino K^2, permutation entropy
-# ---------------------------------------------------------------------------
-
-
-def q_fleiss_kappa_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fleiss' kappa across three deterministic doc-quality raters
-    (length, token count, stopword hit) — inter-heuristic agreement
-    before trusting a label ensemble
-    (operators/profiling.py:fleiss_kappa_binary)."""
-    from breweries_etl_spark.operators.profiling import fleiss_kappa_binary
-
-    docs = load_table(spark, sf_dir, "documents")
-    return fleiss_kappa_binary(
-        docs,
-        [
-            F.length("text") >= 200,
-            F.size(
-                F.regexp_extract_all(
-                    F.lower(F.col("text")), F.lit("[a-z0-9_]+"), 0
-                )
-            )
-            >= 30,
-            F.lower(F.col("text")).contains(" the "),
-        ],
-    )
-
-
-def q_dagostino_k2_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D'Agostino-Pearson K^2 omnibus normality on l_extendedprice —
-    small-sample-corrected skew/kurtosis z-scores
-    (operators/hypotests.py:dagostino_k2)."""
-    from breweries_etl_spark.operators.hypotests import dagostino_k2
-
-    return dagostino_k2(load_table(spark, sf_dir, "lineitem"), "l_extendedprice")
-
-
-def q_permutation_entropy_daily(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Order-3 Bandt-Pompe permutation entropy of the daily value
-    series (operators/temporal.py:permutation_entropy_daily)."""
-    from breweries_etl_spark.operators.temporal import (
-        permutation_entropy_daily,
-    )
-
-    return permutation_entropy_daily(load_events(spark, sf_dir))
-
-
-_ORACLES["fleiss_kappa_docs"] = """
-WITH per AS (
-  SELECT
-    (CASE WHEN length(text) >= 200 THEN 1 ELSE 0 END
-     + CASE WHEN len(regexp_extract_all(lower(text), '[a-z0-9_]+')) >= 30
-            THEN 1 ELSE 0 END
-     + CASE WHEN contains(lower(text), ' the ') THEN 1 ELSE 0 END)
-    AS np
-  FROM documents
-), sums AS (
-  SELECT count(*) AS n,
-    SUM(CAST(np AS DECIMAL(38,0))) AS s1,
-    SUM(CAST(CAST(np AS DECIMAL(19,0)) * CAST(np AS DECIMAL(19,0))
-        AS DECIMAL(38,0))) AS s2
-  FROM per
-), d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    CAST(s1 AS DOUBLE) AS s1d, CAST(s2 AS DOUBLE) AS s2d
-  FROM sums
-), k AS (
-  SELECT n, nd, 3.0 AS md,
-    s1d / (3.0 * nd) AS p_pass,
-    ((2.0 * s2d - 2.0 * 3.0 * s1d + 3.0 * 3.0 * nd) - 3.0 * nd)
-      / (nd * 3.0 * (3.0 - 1.0)) AS p_bar
-  FROM d
-), e AS (
-  SELECT *, p_pass * p_pass + (1.0 - p_pass) * (1.0 - p_pass) AS p_e
-  FROM k
-)
-SELECT CAST(n AS BIGINT) AS n_subjects, CAST(3 AS BIGINT) AS m_raters,
-  CASE WHEN n > 0 THEN round(p_pass, 6) END AS p_pass,
-  CASE WHEN n > 0 THEN round(p_bar, 6) END AS p_bar,
-  CASE WHEN n > 0 THEN round(p_e, 6) END AS p_e,
-  CASE WHEN n > 0 AND 1.0 - p_e > 0 THEN
-    round((p_bar - p_e) / (1.0 - p_e), 6) END AS fleiss_kappa
-FROM e
-"""
-
-_ORACLES["dagostino_k2_price"] = f"""
-WITH {_JB_BASE},
-d AS (
-  SELECT n, CAST(n AS DOUBLE) AS nd,
-    {_ddw('s1')} / 1e12 AS s1d, {_ddw('s2')} / 1e14 AS s2d,
-    {_ddw('s3')} / 1e15 AS s3d, {_ddw('s4')} / 1e16 AS s4d
-  FROM m
-), c AS (SELECT *, s1d / nd AS mu FROM d),
-cm AS (
-  SELECT n, nd,
-    s2d / nd - mu * mu AS m2,
-    s3d / nd - 3.0 * mu * (s2d / nd) + 2.0 * mu * mu * mu AS m3,
-    s4d / nd - 4.0 * mu * (s3d / nd) + 6.0 * mu * mu * (s2d / nd)
-      - 3.0 * mu * mu * mu * mu AS m4
-  FROM c
-), g AS (
-  SELECT n, nd, m2,
-    m3 / pow(m2, 1.5) AS g1,
-    m4 / (m2 * m2) - 3.0 AS g2
-  FROM cm
-), z1c AS (
-  -- n >= 20 guard INSIDE the chain: DuckDB evaluates CTE expressions
-  -- eagerly, and at n < 20 the w2 radicand goes negative (empty-table
-  -- sweep r10); NULLs propagate through the rest of the chain
-  SELECT *,
-    CASE WHEN nd >= 20 THEN
-      g1 * sqrt((nd + 1.0) * (nd + 3.0) / (6.0 * (nd - 2.0))) END AS y,
-    CASE WHEN nd >= 20 THEN
-      -1.0 + sqrt(2.0 * (3.0 * (nd * nd + 27.0 * nd - 70.0) * (nd + 1.0)
-        * (nd + 3.0) / ((nd - 2.0) * (nd + 5.0) * (nd + 7.0) * (nd + 9.0))
-        - 1.0)) END AS w2
-  FROM g
-), z1 AS (
-  SELECT n, nd, m2, g2,
-    (1.0 / sqrt(ln(sqrt(w2))))
-      * ln(y / sqrt(2.0 / (w2 - 1.0))
-           + sqrt((y / sqrt(2.0 / (w2 - 1.0)))
-                  * (y / sqrt(2.0 / (w2 - 1.0))) + 1.0)) AS z_skew
-  FROM z1c
-), z2c AS (
-  SELECT *,
-    CASE WHEN nd >= 20 THEN
-      (g2 + 6.0 / (nd + 1.0))
-        / sqrt(24.0 * nd * (nd - 2.0) * (nd - 3.0)
-               / ((nd + 1.0) * (nd + 1.0) * (nd + 3.0) * (nd + 5.0))) END
-      AS x,
-    CASE WHEN nd >= 20 THEN
-      (6.0 * (nd * nd - 5.0 * nd + 2.0) / ((nd + 7.0) * (nd + 9.0)))
-        * sqrt(6.0 * (nd + 3.0) * (nd + 5.0)
-               / (nd * (nd - 2.0) * (nd - 3.0))) END AS bb
-  FROM z1
-), z2a AS (
-  SELECT *,
-    6.0 + (8.0 / bb) * (2.0 / bb + sqrt(1.0 + 4.0 / (bb * bb))) AS aa
-  FROM z2c
-), z2b AS (
-  SELECT *,
-    1.0 + x * sqrt(2.0 / (aa - 4.0)) AS den_inner
-  FROM z2a
-), z2 AS (
-  SELECT n, nd, m2, z_skew,
-    CASE WHEN den_inner <> 0 THEN
-      ((1.0 - 2.0 / (9.0 * aa))
-       - (CASE WHEN (1.0 - 2.0 / aa) / den_inner = 0 THEN 0.0
-          ELSE (CASE WHEN (1.0 - 2.0 / aa) / den_inner < 0
-                THEN -1.0 ELSE 1.0 END)
-               * exp(ln(abs((1.0 - 2.0 / aa) / den_inner)) / 3.0) END))
-      / sqrt(2.0 / (9.0 * aa))
-    END AS z_kurt
-  FROM z2b
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN n >= 20 AND m2 > 0 THEN round(z_skew, 6) END AS z_skew,
-  CASE WHEN n >= 20 AND m2 > 0 THEN round(z_kurt, 6) END AS z_kurt,
-  CASE WHEN n >= 20 AND m2 > 0 THEN
-    round(z_skew * z_skew + z_kurt * z_kurt, 6) END AS k2_stat,
-  CASE WHEN n >= 20 AND m2 > 0 THEN
-    round(exp(-round(z_skew * z_skew + z_kurt * z_kurt, 6) / 2.0), 6)
-  END AS p_value
-FROM z2
-"""
-
-_ORACLES["permutation_entropy_daily"] = f"""
-WITH {_DAILY_EVENTS},
-trip AS (
-  SELECT y AS a,
-    lead(y, 1) OVER (ORDER BY day) AS b,
-    lead(y, 2) OVER (ORDER BY day) AS c
-  FROM daily QUALIFY lead(y, 2) OVER (ORDER BY day) IS NOT NULL
-), pats AS (
-  SELECT
-    ((CASE WHEN b < a THEN 1 ELSE 0 END + CASE WHEN c < a THEN 1 ELSE 0 END)
-       * 100
-     + (CASE WHEN a <= b THEN 1 ELSE 0 END
-        + CASE WHEN c < b THEN 1 ELSE 0 END) * 10
-     + (CASE WHEN a <= c THEN 1 ELSE 0 END
-        + CASE WHEN b <= c THEN 1 ELSE 0 END)) AS pattern
-  FROM trip
-), hist AS (
-  SELECT pattern, count(*) AS cnt FROM pats GROUP BY pattern
-), tot AS (SELECT SUM(cnt) AS n FROM hist),
-folded AS (
-  SELECT max(n) AS n, count(*) AS k,
-    SUM(CAST(round(-(CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE))
-        * ln(CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-        AS DECIMAL(18,6))) AS h
-  FROM hist CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n_triples, CAST(k AS BIGINT) AS n_patterns,
-  CASE WHEN n > 0 THEN round(CAST(h AS DOUBLE), 6) END AS perm_entropy,
-  CASE WHEN n > 0 THEN
-    round(CAST(h AS DOUBLE) / 1.791759469228055, 6) END AS normalized_pe
-FROM folded
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-10 wave 20: variance ratio, Buishand range, diversity indices
-# ---------------------------------------------------------------------------
-
-
-def q_variance_ratio_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lo-MacKinlay VR(5) random-walk test on the daily value series
-    (operators/temporal.py:variance_ratio_daily)."""
-    from breweries_etl_spark.operators.temporal import variance_ratio_daily
-
-    return variance_ratio_daily(load_events(spark, sf_dir))
-
-
-def q_buishand_range_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Buishand rescaled-range level-shift test on the daily value
-    series (operators/temporal.py:buishand_range_daily)."""
-    from breweries_etl_spark.operators.temporal import buishand_range_daily
-
-    return buishand_range_daily(load_events(spark, sf_dir))
-
-
-def q_diversity_sources_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon/Simpson/Pielou/Berger-Parker diversity of the corpus
-    source mix (operators/corpus.py:diversity_indices)."""
-    from breweries_etl_spark.operators.corpus import diversity_indices
-
-    return diversity_indices(load_table(spark, sf_dir, "documents"), "source")
-
-
-_ORACLES["variance_ratio_daily"] = f"""
-WITH {_DAILY_EVENTS},
-lagged AS (
-  SELECT y,
-    lag(y, 1) OVER (ORDER BY day) AS y1,
-    lag(y, 5) OVER (ORDER BY day) AS yq
-  FROM daily
-), tot AS (
-  SELECT count(*) AS n_days, count(y1) AS nr,
-    SUM(CAST(y - y1 AS DECIMAL(38,2))) AS sr
-  FROM lagged
-), j AS (
-  SELECT y, y1, yq, n_days, nr,
-    {_ddwf('sr')} / CAST(nr AS DOUBLE) AS mu
-  FROM lagged CROSS JOIN tot
-), folded AS (
-  SELECT max(n_days) AS n_days, max(nr) AS nr,
-    SUM(CASE WHEN y1 IS NOT NULL THEN
-      CAST(round((CAST(y - y1 AS DOUBLE) - mu)
-                 * (CAST(y - y1 AS DOUBLE) - mu), 6) AS DECIMAL(38,6))
-    END) AS d1,
-    SUM(CASE WHEN yq IS NOT NULL THEN
-      CAST(round((CAST(y - yq AS DOUBLE) - mu * 5.0)
-                 * (CAST(y - yq AS DOUBLE) - mu * 5.0), 6)
-          AS DECIMAL(38,6))
-    END) AS dq
-  FROM j
-), d AS (
-  SELECT n_days, nr, CAST(nr AS DOUBLE) AS n,
-    {_ddwf('d1')} AS d1d, {_ddwf('dq')} AS dqd
-  FROM folded
-), v AS (
-  SELECT n_days, nr, n,
-    d1d / (n - 1.0) AS var1,
-    5.0 * (n - 5.0 + 1.0) * (1.0 - 5.0 / n) AS mq,
-    dqd AS dqd
-  FROM d
-)
-SELECT CAST(n_days AS BIGINT) AS n_days, CAST(nr AS BIGINT) AS n_returns,
-  CASE WHEN nr > 5 AND var1 > 0 AND mq > 0 THEN
-    round((dqd / mq) / (5.0 * var1), 6) END AS vr_stat,
-  CASE WHEN nr > 5 AND var1 > 0 AND mq > 0 THEN
-    round(((dqd / mq) / (5.0 * var1) - 1.0)
-          / sqrt({2.0 * (2 * 5 - 1) * (5 - 1) / (3.0 * 5)} / n), 6)
-  END AS z_score
-FROM v
-"""
-
-_ORACLES["buishand_range_daily"] = f"""
-WITH {_DAILY_EVENTS},
-tot AS (
-  SELECT count(*) AS n,
-    SUM(CAST(y AS DECIMAL(38,2))) AS s,
-    SUM(CAST(y * y AS DECIMAL(38,4))) AS ss
-  FROM daily
-), cum AS (
-  SELECT SUM(CAST(y AS DECIMAL(38,2)))
-           OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS cum,
-    row_number() OVER (ORDER BY day) AS k
-  FROM daily
-), sk AS (
-  SELECT n, s, ss,
-    {_ddwf('cum')} - CAST(k AS DOUBLE) * ({_ddwf('s')} / CAST(n AS DOUBLE))
-      AS skv
-  FROM cum CROSS JOIN tot
-), folded AS (
-  SELECT max(n) AS n, max(s) AS s, max(ss) AS ss,
-    max(abs(skv)) AS q_stat, max(skv) AS s_max, min(skv) AS s_min
-  FROM sk
-), d AS (
-  SELECT n, q_stat, s_max, s_min, CAST(n AS DOUBLE) AS nd,
-    {_ddwf('ss')} / CAST(n AS DOUBLE)
-      - ({_ddwf('s')} / CAST(n AS DOUBLE))
-        * ({_ddwf('s')} / CAST(n AS DOUBLE)) AS var
-  FROM folded
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-  CASE WHEN n > 0 THEN round(q_stat, 6) END AS q_stat,
-  CASE WHEN n > 0 THEN round(s_max - s_min, 6) END AS r_stat,
-  CASE WHEN n > 1 AND var > 0 THEN
-    round(q_stat / (sqrt(var) * sqrt(nd)), 6) END AS q_scaled,
-  CASE WHEN n > 1 AND var > 0 THEN
-    round((s_max - s_min) / (sqrt(var) * sqrt(nd)), 6) END AS r_scaled
-FROM d
-"""
-
-_ORACLES["diversity_sources_docs"] = """
-WITH counts AS (
-  SELECT source AS cat, count(*) AS c FROM documents GROUP BY source
-), tot AS (SELECT SUM(c) AS n FROM counts),
-folded AS (
-  SELECT max(n) AS n, count(*) AS k,
-    SUM(CAST(round(-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-        * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-        AS DECIMAL(18,6))) AS h,
-    SUM(CAST(round((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-        * (CAST(c AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-        AS DECIMAL(18,6))) AS p2,
-    max(c) AS cmax
-  FROM counts CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n_rows, CAST(k AS BIGINT) AS n_categories,
-  CASE WHEN n > 0 THEN round(CAST(h AS DOUBLE), 6) END AS shannon_h,
-  CASE WHEN n > 0 THEN round(1.0 - CAST(p2 AS DOUBLE), 6) END AS simpson_d,
-  CASE WHEN k > 1 THEN
-    round(CAST(h AS DOUBLE) / ln(CAST(k AS DOUBLE)), 6) END AS pielou_j,
-  CASE WHEN n > 0 THEN
-    round(CAST(cmax AS DOUBLE) / CAST(n AS DOUBLE), 6) END AS berger_parker
-FROM folded
-"""
-
-
-# ----- round-11 wave: Rosner generalized-ESD outlier rounds, Hill-number
-# diversity profile, Quade blocked-rank test -----
-
-
-def q_generalized_esd_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rosner generalized-ESD rounds on o_totalprice — the iterative
-    multi-outlier screen; R_i statistics for 3 removal rounds
-    (operators/hypotests.py:generalized_esd_rounds)."""
-    from breweries_etl_spark.operators.hypotests import generalized_esd_rounds
-
-    return generalized_esd_rounds(
-        load_table(spark, sf_dir, "orders"), "o_totalprice", k=3
-    )
-
-
-def q_hill_diversity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill-number diversity profile (q = 0, 1, 2, ∞) of the document
-    source mix (operators/corpus.py:hill_diversity_profile)."""
-    from breweries_etl_spark.operators.corpus import hill_diversity_profile
-
-    return hill_diversity_profile(
-        load_table(spark, sf_dir, "documents"), "source"
-    )
-
-
-def q_quade_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quade blocked-rank test: does order priority shift revenue,
-    blocking by customer nation — blocks weighted by their within-block
-    range rank (operators/hypotests.py:quade_test)."""
-    from breweries_etl_spark.operators.hypotests import quade_test
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    j = o.join(c, o.o_custkey == c.c_custkey).select(
-        c.c_nationkey.alias("blk"),
-        o.o_orderpriority.alias("trt"),
-        o.o_totalprice.alias("v"),
-    )
-    return quade_test(j, "blk", "trt", "v")
-
-
-_ESD_BRANCH = "abs(t[ti] * n - s) >= abs(b[bi] * n - s)"
-
-_ORACLES["generalized_esd_orders"] = f"""
-WITH base AS (
-  SELECT CAST(CASE WHEN o_totalprice < 0 THEN -1.0 ELSE 1.0 END
-         * floor(abs(CAST(o_totalprice AS DOUBLE)) * 100.0 + 0.5)
-         AS HUGEINT) AS c
-  FROM orders WHERE o_totalprice IS NOT NULL
-), m AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         COALESCE(SUM(c), 0) AS s, COALESCE(SUM(c * c), 0) AS q
-  FROM base
-), tops AS (
-  SELECT list(c ORDER BY c DESC) AS t
-  FROM (SELECT c FROM base ORDER BY c DESC LIMIT 3)
-), bots AS (
-  SELECT list(c ORDER BY c ASC) AS b
-  FROM (SELECT c FROM base ORDER BY c ASC LIMIT 3)
-), st0 AS (
-  SELECT n, s, q, t, b, 1 AS ti, 1 AS bi
-  FROM m CROSS JOIN tops CROSS JOIN bots
-), r1 AS (
-  SELECT st0.*, CASE WHEN n >= 3 AND q * n - s * s > 0 THEN
-    CASE WHEN {_ESD_BRANCH} THEN t[ti] ELSE b[bi] END END AS x
-  FROM st0
-), o1 AS (
-  SELECT CAST(1 AS BIGINT) AS round, CAST(n AS BIGINT) AS n_before,
-    round(CAST(x AS DOUBLE) / 100.0, 6) AS removed_value,
-    round((CAST(abs(x * n - s) AS DOUBLE) / CAST(n AS DOUBLE))
-      / sqrt(CAST(q * n - s * s AS DOUBLE)
-             / CAST(n * (n - 1) AS DOUBLE)), 6) AS r_stat
-  FROM r1 WHERE x IS NOT NULL
-), st1 AS (
-  SELECT n - 1 AS n, s - x AS s, q - x * x AS q, t, b,
-    CASE WHEN {_ESD_BRANCH} THEN ti + 1 ELSE ti END AS ti,
-    CASE WHEN {_ESD_BRANCH} THEN bi ELSE bi + 1 END AS bi
-  FROM r1 WHERE x IS NOT NULL
-), r2 AS (
-  SELECT st1.*, CASE WHEN n >= 3 AND q * n - s * s > 0 THEN
-    CASE WHEN {_ESD_BRANCH} THEN t[ti] ELSE b[bi] END END AS x
-  FROM st1
-), o2 AS (
-  SELECT CAST(2 AS BIGINT) AS round, CAST(n AS BIGINT) AS n_before,
-    round(CAST(x AS DOUBLE) / 100.0, 6) AS removed_value,
-    round((CAST(abs(x * n - s) AS DOUBLE) / CAST(n AS DOUBLE))
-      / sqrt(CAST(q * n - s * s AS DOUBLE)
-             / CAST(n * (n - 1) AS DOUBLE)), 6) AS r_stat
-  FROM r2 WHERE x IS NOT NULL
-), st2 AS (
-  SELECT n - 1 AS n, s - x AS s, q - x * x AS q, t, b,
-    CASE WHEN {_ESD_BRANCH} THEN ti + 1 ELSE ti END AS ti,
-    CASE WHEN {_ESD_BRANCH} THEN bi ELSE bi + 1 END AS bi
-  FROM r2 WHERE x IS NOT NULL
-), r3 AS (
-  SELECT st2.*, CASE WHEN n >= 3 AND q * n - s * s > 0 THEN
-    CASE WHEN {_ESD_BRANCH} THEN t[ti] ELSE b[bi] END END AS x
-  FROM st2
-), o3 AS (
-  SELECT CAST(3 AS BIGINT) AS round, CAST(n AS BIGINT) AS n_before,
-    round(CAST(x AS DOUBLE) / 100.0, 6) AS removed_value,
-    round((CAST(abs(x * n - s) AS DOUBLE) / CAST(n AS DOUBLE))
-      / sqrt(CAST(q * n - s * s AS DOUBLE)
-             / CAST(n * (n - 1) AS DOUBLE)), 6) AS r_stat
-  FROM r3 WHERE x IS NOT NULL
-)
-SELECT * FROM o1 UNION ALL SELECT * FROM o2 UNION ALL SELECT * FROM o3
-"""
-
-_ORACLES["hill_diversity_docs"] = """
-WITH counts AS (
-  SELECT source AS cat, count(*) AS c FROM documents GROUP BY source
-), tot AS (SELECT SUM(c) AS n FROM counts),
-folded AS (
-  SELECT max(n) AS n, count(*) AS k,
-    SUM(CAST(round(-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-        * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-        AS DECIMAL(18,6))) AS h,
-    SUM(CAST(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))
-        AS DECIMAL(38,0))) AS sc2,
-    max(c) AS cmax
-  FROM counts CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n_rows, CAST(k AS BIGINT) AS hill_d0,
-  CASE WHEN n > 0 THEN round(exp(CAST(h AS DOUBLE)), 6) END AS hill_d1,
-  CASE WHEN n > 0 THEN
-    round((CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / CAST(sc2 AS DOUBLE), 6)
-  END AS hill_d2,
-  CASE WHEN n > 0 THEN
-    round(CAST(n AS DOUBLE) / CAST(cmax AS DOUBLE), 6) END AS hill_dinf
-FROM folded
-"""
-
-def q_snht_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alexandersson SNHT standardized-mean changepoint on the daily
-    value series — completes the pettitt (rank) / buishand (range)
-    family (operators/temporal.py:snht_daily_value)."""
-    from breweries_etl_spark.operators.temporal import snht_daily_value
-
-    return snht_daily_value(load_events(spark, sf_dir))
-
-
-def q_dcor_daily_value_volume(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Székely distance correlation between daily total value and
-    daily event count — zero iff independent
-    (operators/temporal.py:distance_correlation_daily)."""
-    from breweries_etl_spark.operators.temporal import (
-        distance_correlation_daily,
-    )
-
-    return distance_correlation_daily(load_events(spark, sf_dir))
-
-
-_ORACLES["snht_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-base AS (SELECT day, CAST(y * 100 AS HUGEINT) AS c FROM daily),
-tot AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, COALESCE(SUM(c), 0) AS s,
-         COALESCE(SUM(c * c), 0) AS ss
-  FROM base
-), stepped AS (
-  SELECT day, CAST(row_number() OVER (ORDER BY day) AS HUGEINT) AS k,
-    SUM(c) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS cum, n, s, ss
-  FROM base CROSS JOIN tot
-), vals AS (
-  SELECT day, k, n,
-    (n * cum - k * s) * (n * cum - k * s) AS d,
-    n * ss - s * s AS den
-  FROM stepped WHERE k < n
-), tq AS (
-  SELECT day, n, k, d, den,
-    CAST(floor((({_ddw('n * d')})
-      / ((CAST(k AS DOUBLE) * CAST(n - k AS DOUBLE)) * ({_ddw('den')})))
-      * 1e9) AS BIGINT) AS tq
-  FROM vals WHERE den > 0
-), arg AS (
-  SELECT day, n AS nw, k, d, den FROM tq ORDER BY tq DESC, day ASC LIMIT 1
-)
-SELECT CAST(t.n AS BIGINT) AS n_days,
-  CASE WHEN a.day IS NOT NULL THEN
-    round(({_ddw('a.nw * a.d')})
-      / ((CAST(a.k AS DOUBLE) * CAST(a.nw - a.k AS DOUBLE))
-         * ({_ddw('a.den')})), 6)
-  END AS t_stat,
-  CAST(a.day AS BIGINT) AS change_day
-FROM tot t LEFT JOIN arg a ON TRUE
-"""
-
-_ORACLES["dcor_daily_value_volume"] = f"""
-WITH daily2 AS MATERIALIZED (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS HUGEINT) AS yc,
-    CAST(count(*) AS HUGEINT) AS m
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-), pairs AS (
-  SELECT a.day AS da, b.day AS db,
-    abs(a.yc - b.yc) AS av, abs(a.m - b.m) AS bv
-  FROM daily2 a CROSS JOIN daily2 b
-), rows_ AS (
-  SELECT da AS day, SUM(av) AS ra, SUM(bv) AS rb FROM pairs GROUP BY da
-), tot AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, SUM(ra) AS ga, SUM(rb) AS gb
-  FROM rows_
-), guard AS (
-  -- exact digit-count overflow guard, identical to the engine's
-  -- (temporal.py:distance_correlation_daily): su2 <= 16*n^6*R^2 must
-  -- fit HUGEINT, else BOTH engines NULL the stats
-  SELECT (2 + 6 * length(CAST(count(*) AS VARCHAR))
-        + 2 * greatest(
-            length(CAST(COALESCE(max(yc) - min(yc), 0) AS VARCHAR)),
-            length(CAST(COALESCE(max(m) - min(m), 0) AS VARCHAR))))
-        <= 38 AS fits
-  FROM daily2
-), folded AS (
-  SELECT SUM(u * v) AS suv, SUM(u * u) AS su2, SUM(v * v) AS sv2
-  FROM (
-    SELECT
-      t.n * t.n * p.av - t.n * ja.ra - t.n * jb.ra + t.ga AS u,
-      t.n * t.n * p.bv - t.n * ja.rb - t.n * jb.rb + t.gb AS v
-    FROM pairs p
-    JOIN rows_ ja ON p.da = ja.day
-    JOIN rows_ jb ON p.db = jb.day
-    CROSS JOIN tot t
-    CROSS JOIN guard g
-    WHERE g.fits
-  )
-)
-SELECT CAST((SELECT count(*) FROM daily2) AS BIGINT) AS n_days,
-  CASE WHEN su2 > 0 AND sv2 > 0 THEN
-    round(({_ddw('suv')}) / sqrt(({_ddw('su2')}) * ({_ddw('sv2')})), 6)
-  END AS dcor2,
-  CASE WHEN su2 > 0 AND sv2 > 0 THEN
-    round(sqrt(({_ddw('suv')}) / sqrt(({_ddw('su2')}) * ({_ddw('sv2')}))), 6)
-  END AS dcor
-FROM folded
-"""
-
-_ORACLES["quade_nation_priority"] = """
-WITH cells AS (
-  SELECT c.c_nationkey AS blk, o.o_orderpriority AS trt,
-    SUM(CAST((CASE WHEN o.o_totalprice < 0 THEN -1.0 ELSE 1.0 END
-        * floor(abs(CAST(o.o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0
-        AS DECIMAL(18,2))) AS y
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE c.c_nationkey IS NOT NULL AND o.o_orderpriority IS NOT NULL
-    AND o.o_totalprice IS NOT NULL
-  GROUP BY 1, 2
-), kk AS (SELECT count(DISTINCT trt) AS kt FROM cells),
-comp AS (
-  SELECT blk, trt, y FROM (
-    SELECT cells.*, count(*) OVER (PARTITION BY blk) AS kb,
-           (SELECT kt FROM kk) AS kt
-    FROM cells
-  ) WHERE kb = kt
-), ranked AS (
-  SELECT blk, trt,
-    CAST(2 * rank() OVER (PARTITION BY blk ORDER BY y)
-         + count(*) OVER (PARTITION BY blk, y) - 1 AS BIGINT) AS m2
-  FROM comp
-), ranges AS (
-  SELECT blk, max(y) - min(y) AS rng FROM comp GROUP BY blk
-), q2t AS (
-  SELECT blk,
-    CAST(2 * rank() OVER (ORDER BY rng)
-         + count(*) OVER (PARTITION BY rng) - 1 AS BIGINT) AS q2
-  FROM ranges
-), s4 AS (
-  SELECT r.trt,
-    CAST(CAST(q.q2 AS DECIMAL(19,0))
-         * CAST(r.m2 - (SELECT kt FROM kk) - 1 AS DECIMAL(19,0))
-         AS DECIMAL(38,0)) AS s4
-  FROM ranked r JOIN q2t q ON r.blk = q.blk
-), per_t AS (
-  SELECT trt, SUM(s4) AS s4j FROM s4 GROUP BY trt
-), folded AS (
-  SELECT
-    (SELECT count(*) FROM ranges) AS b,
-    (SELECT kt FROM kk) AS kt,
-    (SELECT SUM(CAST(CAST(s4 AS DECIMAL(19,0)) * CAST(s4 AS DECIMAL(19,0))
-                AS DECIMAL(38,0))) FROM s4) AS a16,
-    (SELECT SUM(CAST(CAST(s4j AS DECIMAL(19,0)) * CAST(s4j AS DECIMAL(19,0))
-                AS DECIMAL(38,0))) FROM per_t) AS b16
-)
-SELECT
-  CASE WHEN kt >= 2 THEN CAST(b AS BIGINT) ELSE 0 END AS n_blocks,
-  CAST(kt AS BIGINT) AS k_treatments,
-  CASE WHEN kt >= 2 AND b > 1
-       AND CAST(b AS DECIMAL(19,0)) * a16 - b16 > 0 THEN
-    round(CAST(CAST((CAST(b AS DECIMAL(19,0)) - 1) * b16 AS DECIMAL(38,0))
-               AS DOUBLE)
-          / CAST(CAST(CAST(b AS DECIMAL(19,0)) * a16 AS DECIMAL(38,0)) - b16
-                 AS DOUBLE), 6)
-  END AS quade_stat,
-  CASE WHEN kt >= 2 AND b > 0 THEN CAST(kt - 1 AS BIGINT) END AS df1,
-  CASE WHEN kt >= 2 AND b > 0
-       THEN CAST((b - 1) * (kt - 1) AS BIGINT) END AS df2
-FROM folded
-"""
-
-
-# --- round-12 wave 22 -------------------------------------------------------
-
-
-def q_siegel_tukey_price_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Siegel–Tukey zig-zag-rank dispersion test of price, returned vs
-    other (operators/hypotests.py:siegel_tukey)."""
-    from breweries_etl_spark.operators.hypotests import siegel_tukey
-
-    return siegel_tukey(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_conover_sqranks_price_flag(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Conover squared-ranks variance test of price, returned vs other —
-    own-group-mean centering, no equal-median assumption
-    (operators/hypotests.py:conover_squared_ranks)."""
-    from breweries_etl_spark.operators.hypotests import (
-        conover_squared_ranks,
-    )
-
-    return conover_squared_ranks(
-        load_table(spark, sf_dir, "lineitem"),
-        "l_extendedprice",
-        F.col("l_returnflag") == "R",
-    )
-
-
-def q_watson_u2_minute_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watson's U² circular-uniformity test of event minute-of-day —
-    rotation-invariant; catches the bimodal load patterns Rayleigh
-    calls uniform (operators/temporal.py:watson_u2_minute)."""
-    from breweries_etl_spark.operators.temporal import watson_u2_minute
-
-    return watson_u2_minute(load_events(spark, sf_dir))
-
-
-def q_epps_pulley_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epps–Pulley / BHEP(β=1) characteristic-function normality test
-    of the daily value series (operators/temporal.py:epps_pulley_daily)."""
-    from breweries_etl_spark.operators.temporal import epps_pulley_daily
-
-    return epps_pulley_daily(load_events(spark, sf_dir))
-
-
-def q_aligned_ranks_nation_priority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Friedman ALIGNED-ranks test of order priority effect on revenue,
-    blocked by customer nation — pooled cross-block ranking after
-    removing block means
-    (operators/hypotests.py:friedman_aligned_ranks)."""
-    from breweries_etl_spark.operators.hypotests import (
-        friedman_aligned_ranks,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    j = o.join(c, o.o_custkey == c.c_custkey).select(
-        c.c_nationkey.alias("blk"),
-        o.o_orderpriority.alias("trt"),
-        o.o_totalprice.alias("v"),
-    )
-    return friedman_aligned_ranks(j, "blk", "trt", "v")
-
-
-_ORACLES["siegel_tukey_price_flag"] = f"""
-WITH pos AS (
-  SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS ga,
-    l_extendedprice AS v,
-    row_number() OVER (ORDER BY l_extendedprice) AS p,
-    count(*) OVER () AS n
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-), st AS (
-  -- published zig-zag pattern incl. middle -> N when N odd
-  SELECT v, ga, n, CASE
-    WHEN p <= n // 2 THEN 2 * p - (p % 2)
-    WHEN n % 2 = 1 AND p = n // 2 + 1 THEN n
-    ELSE 2 * (n + 1 - p) - 1 + ((n + 1 - p) % 2) END AS r
-  FROM pos
-), byv AS MATERIALIZED (
-  SELECT v, count(*) AS c, CAST(SUM(r) AS DECIMAL(38,0)) AS t,
-    SUM(ga) AS ca, max(n) AS nn
-  FROM st GROUP BY v
-), folded AS (
-  SELECT max(nn) AS nn, SUM(ca) AS n_a,
-    SUM(CAST(floor(1e6 * CAST(ca AS DOUBLE)
-                   * (({_ddw('t')}) / CAST(c AS DOUBLE)))
-             AS DECIMAL(38,0))) AS w_fp,
-    SUM(t) AS s_sum,
-    SUM(CAST(floor(1e6 * ({_ddw('t')})
-                   * (({_ddw('t')}) / CAST(c AS DOUBLE)))
-             AS DECIMAL(38,0))) AS aa_fp
-  FROM byv
-), d AS (
-  SELECT n_a, nn - n_a AS n_b, nn,
-    CAST(n_a AS DOUBLE) AS na, CAST(nn - n_a AS DOUBLE) AS nb,
-    CAST(nn AS DOUBLE) AS n,
-    {_ddw('w_fp')} / 1e6 AS w,
-    {_ddw('s_sum')} AS sa,
-    {_ddw('aa_fp')} / 1e6 AS saa
-  FROM folded
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round(w, 6) AS st_stat,
-  CASE WHEN n_a > 0 AND n_b > 0 AND
-    na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0)) > 0 THEN
-    round((w - na * (sa / n))
-          / sqrt(na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0))), 6)
-  END AS z_score
-FROM d
-"""
-
-_ORACLES["conover_sqranks_price_flag"] = f"""
-WITH base AS (
-  SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS g,
-    {_qm8('l_extendedprice')} AS v
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-), means AS (
-  SELECT g, count(*) AS n, SUM(CAST(v AS DECIMAL(38,2))) AS s
-  FROM base GROUP BY g
-), mu AS (
-  SELECT g, ({_ddwf('s')}) / CAST(n AS DOUBLE) AS mu FROM means
-), dev AS (
-  SELECT base.g,
-    CAST(floor(abs(CAST(v AS DOUBLE) - mu) * 100.0) AS HUGEINT) AS u
-  FROM base JOIN mu ON base.g = mu.g
-), vc AS MATERIALIZED (
-  SELECT u, SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS ca,
-    SUM(CASE WHEN g = 1 THEN 0 ELSE 1 END) AS cb
-  FROM dev GROUP BY u
-), cum AS (
-  SELECT u, ca, cb,
-    SUM(ca + cb) OVER (ORDER BY u ROWS UNBOUNDED PRECEDING) AS cum
-  FROM vc
-), tot AS (
-  SELECT SUM(ca) AS n_a, SUM(cb) AS n_b, SUM(ca + cb) AS nn FROM vc
-), geom AS (
-  SELECT ca, CAST(ca + cb AS HUGEINT) AS c, n_a, n_b, nn,
-    CAST(2 * cum - (ca + cb) + 1 AS HUGEINT) AS m2
-  FROM cum CROSS JOIN tot
-), split AS (
-  SELECT ca, c, n_a, n_b, nn, m2 * m2 AS m2sq,
-    (m2 * m2) // 1000000000 AS a_hi,
-    (m2 * m2) % 1000000000 AS b_lo
-  FROM geom
-), split2 AS (
-  SELECT ca, c, n_a, n_b, nn, m2sq, a_hi, b_lo,
-    (2 * a_hi * b_lo) * 1000000000 + b_lo * b_lo AS crs
-  FROM split
-), split3 AS (
-  SELECT ca, c, n_a, n_b, nn, m2sq,
-    a_hi * a_hi + crs // 1000000000000000000 AS q_hi,
-    crs % 1000000000000000000 AS c_lo
-  FROM split2
-), folded AS (
-  SELECT max(n_a) AS n_a, max(n_b) AS n_b, max(nn) AS nn,
-    SUM(CAST(ca AS HUGEINT) * m2sq) AS t4,
-    SUM(c * m2sq) AS s4,
-    SUM(c * q_hi) AS q16_hi,
-    SUM(c * c_lo) AS q16_lo
-  FROM split3
-), d AS (
-  SELECT n_a, n_b, nn,
-    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-    CAST(nn AS DOUBLE) AS n,
-    {_ddw('t4')} / 4.0 AS t_stat,
-    {_ddw('s4')} / 4.0 AS sa,
-    ({_ddw('q16_hi')} * 1e18 + {_ddw('q16_lo')}) / 16.0 AS saa
-  FROM folded
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round(t_stat, 6) AS t_stat,
-  CASE WHEN n_a > 0 AND n_b > 0 AND
-    na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0)) > 0 THEN
-    round((t_stat - na * (sa / n))
-          / sqrt(na * nb * (n * saa - sa * sa) / (n * n * (n - 1.0))), 6)
-  END AS z_score
-FROM d
-"""
-
-_ORACLES["watson_u2_minute_events"] = f"""
-WITH base AS (
-  SELECT ((epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000)
-          + 86400000000) % 86400000000 // 60000000 AS m
-  FROM events WHERE ts IS NOT NULL
-), pos AS (
-  SELECT CAST(m AS HUGEINT) AS m,
-    CAST(row_number() OVER (ORDER BY m) AS HUGEINT) AS i,
-    CAST(count(*) OVER () AS HUGEINT) AS n
-  FROM base
-), tot AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-    CAST(COALESCE(SUM(m), 0) AS HUGEINT) AS sa
-  FROM base
-), p3 AS (
-  SELECT SUM(3 * d * d) AS p3 FROM (
-    SELECT 2 * n * m - (2 * i - 1) * 1440 AS d FROM pos
-  )
-), t AS (
-  SELECT tot.n AS n, p3.p3 AS p3,
-    2 * tot.sa - tot.n * 1440 AS dv
-  FROM tot CROSS JOIN p3
-)
-SELECT CAST(n AS BIGINT) AS n,
-  CASE WHEN n > 0 THEN
-    round(({_ddw('p3 - 3 * n * (dv * dv) + n * 1440 * 1440')})
-          / (12.0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * 2073600.0), 6)
-  END AS u2_stat
-FROM t
-"""
-
-_ORACLES["epps_pulley_daily_value"] = f"""
-WITH {_DAILY_EVENTS},
-base AS (SELECT day, CAST(y * 100 AS HUGEINT) AS c FROM daily),
-tot AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, COALESCE(SUM(c), 0) AS s,
-    COALESCE(SUM(c * c), 0) AS ss
-  FROM base
-), ys AS (
-  SELECT ({_ddw('(t.n * b.c - t.s)')})
-    / sqrt({_ddw('(t.n * t.ss - t.s * t.s)')}) AS y
-  FROM base b CROSS JOIN tot t WHERE t.n * t.ss - t.s * t.s > 0
-), s1 AS (
-  SELECT COALESCE(SUM(CAST(round(
-      exp((a.y - b.y) * (a.y - b.y) / -2.0), 6) AS DECIMAL(8,6))),
-      0) AS s1
-  FROM ys a CROSS JOIN ys b
-), s2 AS (
-  SELECT COALESCE(SUM(CAST(round(exp(y * y / -4.0), 6)
-      AS DECIMAL(8,6))), 0) AS s2
-  FROM ys
-)
-SELECT CAST(t.n AS BIGINT) AS n_days,
-  CASE WHEN t.n > 0 AND t.n * t.ss - t.s * t.s > 0 THEN
-    round(({_ddwf('s1.s1')}) / CAST(t.n AS DOUBLE)
-          - sqrt(2.0) * ({_ddwf('s2.s2')})
-          + CAST(t.n AS DOUBLE) / sqrt(3.0), 6)
-  END AS tep_stat
-FROM tot t CROSS JOIN s1 CROSS JOIN s2
-"""
-
-_ORACLES["aligned_ranks_nation_priority"] = f"""
-WITH cells AS (
-  SELECT c.c_nationkey AS blk, o.o_orderpriority AS trt,
-    SUM(CAST((CASE WHEN o.o_totalprice < 0 THEN -1.0 ELSE 1.0 END
-        * floor(abs(CAST(o.o_totalprice AS DOUBLE)) * 100.0 + 0.5)) / 100.0
-        AS DECIMAL(18,2))) AS y
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE c.c_nationkey IS NOT NULL AND o.o_orderpriority IS NOT NULL
-    AND o.o_totalprice IS NOT NULL
-  GROUP BY 1, 2
-), kk AS (SELECT count(DISTINCT trt) AS kt FROM cells),
-comp AS (
-  SELECT blk, trt, y FROM (
-    SELECT cells.*, count(*) OVER (PARTITION BY blk) AS kb,
-           (SELECT kt FROM kk) AS kt
-    FROM cells
-  ) WHERE kb = kt
-), blks AS (
-  SELECT blk, SUM(y) AS sj FROM comp GROUP BY blk
-), align AS (
-  SELECT c.blk, c.trt,
-    CAST((SELECT kt FROM kk) AS HUGEINT) * CAST(c.y * 100 AS HUGEINT)
-      - CAST(b.sj * 100 AS HUGEINT) AS a
-  FROM comp c JOIN blks b ON c.blk = b.blk
-), rk AS (
-  SELECT blk, trt,
-    CAST(2 * rank() OVER (ORDER BY a)
-         + count(*) OVER (PARTITION BY a) - 1 AS HUGEINT) AS m2
-  FROM align
-), dt AS (SELECT trt, SUM(m2) AS d FROM rk GROUP BY trt),
-db AS (SELECT blk, SUM(m2) AS d FROM rk GROUP BY blk),
-f AS (
-  SELECT (SELECT kt FROM kk) AS kt,
-    (SELECT count(*) FROM db) AS b,
-    (SELECT SUM(d * d) FROM dt) AS sdt2,
-    (SELECT SUM(d * d) FROM db) AS sdb2
-), g AS (
-  SELECT kt, b, sdt2, sdb2,
-    CAST(kt AS HUGEINT) * CAST(b AS HUGEINT) AS nkb
-  FROM f
-), h AS (
-  SELECT kt, b,
-    CAST(kt AS HUGEINT) * sdt2
-      - (CAST(kt AS HUGEINT) * kt * b * b) * ((nkb + 1) * (nkb + 1))
-      AS numer,
-    CAST(kt AS HUGEINT)
-      * ((2 * nkb * (nkb + 1) * (2 * nkb + 1)) // 3)
-      - sdb2 AS denom
-  FROM g
-)
-SELECT
-  CASE WHEN kt >= 2 THEN CAST(b AS BIGINT) ELSE 0 END AS n_blocks,
-  CAST(kt AS BIGINT) AS k_treatments,
-  CASE WHEN kt >= 2 AND b > 0 AND denom > 0 THEN
-    round((CAST(kt - 1 AS DOUBLE) * ({_ddw('numer')}))
-          / ({_ddw('denom')}), 6)
-  END AS aligned_stat,
-  CASE WHEN kt >= 2 AND b > 0 THEN CAST(kt - 1 AS BIGINT) END AS df
-FROM h
-"""
-
-
-# ---------------------------------------------------------------------------
-# Round-10 empty-input anchors: the engine side of every statistic
-# guarantees ONE output row on empty input (the annihilation-hardened
-# contract), but these twelve twins' final stages read FROM a relation
-# that is empty at zero rows, so the SQL replay emitted nothing
-# (empty-table sweep). Each twin is wrapped with
-# a NOT EXISTS anchor that emits exactly the engine's empty-input row
-# (typed NULLs; count columns that the engine prints as 0 are 0 here
-# too). No effect whatsoever on non-empty input.
-# ---------------------------------------------------------------------------
-
-_B = "CAST(NULL AS BIGINT)"
-_D = "CAST(NULL AS DOUBLE)"
-_EMPTY_ANCHORS = {
-    "ab_test_value": (
-        f"SELECT CAST(0 AS BIGINT) AS arm, CAST(0 AS BIGINT) AS n, "
-        f"{_D} AS mean, {_D} AS var, {_D} AS z, "
-        f"CAST(NULL AS BOOLEAN) AS significant "
-        f"UNION ALL SELECT CAST(1 AS BIGINT), CAST(0 AS BIGINT), "
-        f"{_D}, {_D}, {_D}, CAST(NULL AS BOOLEAN)"
-    ),
-    "changepoint_binseg_value": (
-        f"SELECT {_B} AS n_days, {_B} AS split_day, {_D} AS sse_total, "
-        f"{_D} AS sse_split, {_D} AS gain"
-    ),
-    "cusum_daily_value": (
-        f"SELECT {_B} AS n_days, {_B} AS change_day, {_D} AS cusum_max"
-    ),
-    "embedding_dim_profile": (
-        f"SELECT {_B} AS n_vectors, CAST(0 AS BIGINT) AS n_dims, "
-        f"{_D} AS mean_var, {_D} AS max_var, {_D} AS min_var, "
-        f"{_D} AS anisotropy_ratio, {_B} AS max_var_dim"
-    ),
-    "grubbs_order_price": (
-        f"SELECT {_B} AS n, {_D} AS mean_value, {_D} AS sd_value, "
-        f"{_B} AS outlier_key, {_D} AS outlier_value, {_D} AS grubbs_g"
-    ),
-    "ks_doclen_lang": (
-        f"SELECT {_B} AS n_a, {_B} AS n_b, {_D} AS ks_stat"
-    ),
-    "ks_test_price_returnflag": (
-        f"SELECT {_B} AS n_a, {_B} AS n_b, {_D} AS ks_stat"
-    ),
-    "kuiper_test_price_returnflag": (
-        f"SELECT {_B} AS n_a, {_B} AS n_b, {_D} AS d_plus, "
-        f"{_D} AS d_minus, {_D} AS kuiper_v"
-    ),
-    "last_digit_uniformity_price": (
-        f"SELECT {_B} AS n, CAST(0 AS BIGINT) AS n_digits_seen, "
-        f"{_D} AS chi2, {_B} AS max_digit, {_D} AS max_digit_share"
-    ),
-    "moods_median_price_flag": (
-        f"SELECT {_B} AS n, {_B} AS k_groups, {_D} AS grand_median, "
-        f"{_D} AS chi2"
-    ),
-    "theil_customer_revenue": (
-        f"SELECT {_B} AS n_keys, {_D} AS total_value, {_D} AS theil_t"
-    ),
-    "youden_j_order_status": (
-        f"SELECT {_B} AS n_pos, {_B} AS n_neg, {_D} AS best_threshold, "
-        f"{_D} AS tpr, {_D} AS fpr, {_D} AS youden_j"
-    ),
-}
-
-for _name, _anchor in _EMPTY_ANCHORS.items():
-    _ORACLES[_name] = (
-        f"WITH __orig AS ({_ORACLES[_name]}\n)\n"
-        f"SELECT * FROM __orig\nUNION ALL\n"
-        f"SELECT * FROM ({_anchor})\n"
-        f"WHERE NOT EXISTS (SELECT 1 FROM __orig)"
-    )
+    """The DuckDB twin of every query that has one; the rest are rows-only."""
+    return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}

@@ -33,418 +33,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Families group queries whose cost profiles belong together; each runs
-# in a fresh JVM. Order within a family: cheap scans/aggs before
-# cache-heavy pipelines.
+from breweries_etl_spark import queries as registry  # noqa: E402
+
+# Each family runs in a fresh JVM, its bench queries in declaration
+# order (see breweries_etl_spark/queries/__init__.py).
 FAMILIES: dict[str, list[str]] = {
-    # r7: the 27-query "core" family is split three ways at the
-    # merge/diff boundary (judge r6 #4) — 27 queries in one shared JVM
-    # bled 1.4-2.4x phantom deltas into the tail queries
-    # (asof/robust_scale/cdc/snapshot in UNCHANGED code), the same
-    # intra-family interference that split the text family in r6.
-    "core": [
-        "gold_by_type_location",
-        "silver_transform",
-        "tpch_q1",
-        "tpch_q3",
-        "tpch_q5",
-        "tpch_q6",
-        "tpch_q10",
-        "tpch_q17_small_quantity",
-        "tpch_q18_large_orders",
-        "topk_orders_per_customer",
-        "window_function_suite",
-        "rollup_orders",
-        "pivot_events",
-    ],
-    # merge/diff/state pipelines: cache-heavy, multi-action
-    "corestate": [
-        "gold_incremental_merge",
-        "salted_skew_join",
-        "weighted_sample_docs",
-        "bloom_prefilter_join",
-        "cms_heavy_hitters",
-        "winsorized_price_stats",
-        "robust_scale_orders",
-        "cdc_apply_customers",
-        "snapshot_diff_orders",
-    ],
-    # contract/profiling scans
-    "coreprofile": [
-        "contract_check_orders",
-        "lang_distribution_shift",
-        "k_anonymity_customers",
-        "column_entropy_orders",
-        "join_size_orders_lineitem",
-    ],
-    # the text family is split: 17 queries in one JVM bled ~2x into the
-    # gram-relation heavyweights at the tail (winnowing 1.6 s fresh vs
-    # 4.0 s in-family) — same isolation rationale as the dedup/graph
-    # splits below
-    "text": [
-        "text_stats",
-        "classifier_quality_score",
-        "json_extract_stats",
-        "text_fingerprint",
-        "gopher_quality_flags",
-        "feature_hash_counts",
-        "corpus_dup_ngrams",
-        "split_sentences_udtf",
-        "audio_frame_features",
-    ],
-    "textgrams": [
-        "ngram_diversity",
-        "winnowing_fingerprints",
-        "collocation_pmi",
-        "bigram_lm_scores",
-        "ccnet_perplexity_buckets",
-        "contamination_check",
-        "decontaminate_train",
-        "logreg_train_weights",
-    ],
-    # r7: temporal split at the same merge/diff boundary as core —
-    # asof_purchase_view showed a 2.37x phantom delta riding 16
-    # queries deep in one JVM
-    "temporal": [
-        "events_sessionize",
-        "events_sessionize_capped",
-        "events_session_window",
-        "downsample_events",
-        "ab_test_value",
-        "conversion_latency",
-        "event_cooccurrence",
-        "event_gap_stats",
-        "user_event_novelty",
-    ],
-    "temporal_state": [
-        "asof_purchase_view",
-        "merge_upsert",
-        "range_join_error_window",
-        "distinct_sketch_merge",
-        "streaming_gold_merge",
-        "decayed_user_value",
-        "rolling_hour_user_value",
-    ],
-    "dedup": [
-        "dedup_exact",
-        "paragraph_dedup",
-        "dedup_exact_keep_best",
-        "dedup_edit_distance",
-        "dedup_containment",
-        "source_overlap_matrix",
-    ],
-    # Near-dup pipelines and iterative graph loops each get a JVM to
-    # themselves: measured in-session interference (pinned shingle
-    # caches, localCheckpoint block churn, context-cleaner backlog)
-    # inflates WHICHEVER of them runs second by 1.5-2x — e.g. pagerank
-    # 5.0 s fresh vs 9.8 s after BFS in the same JVM, incremental
-    # jaccard 2.8 s fresh vs 6.4 s after minhash. On a cluster these
-    # run as separate applications; benching them that way attributes
-    # plan cost, not neighbor hygiene.
-    "dedup_minhash": ["dedup_minhash_pairs"],
-    "dedup_incremental": ["dedup_incremental_jaccard"],
-    "vector": [
-        "similarity_topk",
-        "similarity_topk_pandas",
-        "cluster_assign",
-        "pack_sequences",
-        "semantic_dedup",
-        "kmeans_train_centroids",
-        "embedding_norm_profile",
-    ],
-    "graph_bfs": ["graph_bfs_levels"],
-    "graph_pagerank": ["graph_pagerank_top"],
-    # round-4 additions: light scan/agg profiling queries...
-    "profile": [
-        "doc_length_histogram",
-        "char_class_profile",
-        "seasonal_hour_profile",
-        "rolling_count_anomaly",
-        "session_bounce_rate",
-        "mode_event_type",
-        "weighted_median_price",
-        "benford_orders",
-        "fd_audit_orders",
-        "skyline_price_quantity",
-        "time_weighted_value",
-        "user_activity_streaks",
-        "reservoir_sample_docs",
-        "cusum_changepoint_users",
-        "abc_parts_revenue",
-        "incremental_join_maintenance",
-        "hourly_coverage_gaps",
-        "loo_encoding_orders",
-        "mutual_information_orders",
-        "chi2_day_drift",
-        "lateness_profile",
-        "wow_change",
-        "shipping_sla_report",
-        "cohort_ltv",
-        "numeric_corr_matrix",
-        "frequent_brand_pairs",
-        "price_percent_rank",
-        "user_feature_store",
-        "psi_value_drift",
-        "decayed_type_popularity",
-        # round 5: scale-safe twins of the global-sort window forms
-        "curriculum_stages_scalable",
-        "rfm_segments_scalable",
-    ],
-    # round 5: model diagnostics + sortless rank statistics
-    "stats": [
-        "score_calibration_bins",
-        "decision_stump_price_split",
-        "ols2_price_qty_discount",
-        "ewma_user_value",
-        "cohens_kappa_lang",
-        "ks_test_price_returnflag",
-        "mann_whitney_price_returnflag",
-        "gini_customer_revenue",
-        "lineitem_price_ecdf",
-        "conversion_ab_ztest",
-        "kaplan_meier_retention",
-        "theil_customer_revenue",
-        "lorenz_customer_revenue",
-        "quantile_normalize_price",
-    ],
-    # round-6 wave: rank/parametric tests, daily-series trend ops,
-    # link prediction + k-core (the two graph queries are join-heavy
-    # but non-iterative — no BFS/PageRank-style JIT warm-up cliff)
-    "r6wave": [
-        "spearman_price_qty",
-        "kruskal_wallis_price_flag",
-        "anova_f_price_flag",
-        "welch_t_price_returnflag",
-        "acf_daily_revenue",
-        "theil_sen_daily_trend",
-        "ridge2_price_qty_discount",
-        "hapax_vocab_stats",
-        "referential_orphans",
-        "graph_edge_embeddedness",
-        "graph_kcore_summary",
-        "mann_kendall_daily",
-        "brown_forsythe_price_flag",
-        "cramers_v_status_flag",
-        "partial_corr_price_qty",
-        "event_transition_entropy",
-        "js_divergence_docs_lang",
-        "gini_by_nation_revenue",
-        "chow_test_price_qty_flag",
-        "graph_degree_assortativity",
-        "graph_local_clustering",
-    ],
-    # round-6 wave 5: classifier-eval rank stats + outlier/variance
-    # screens + daily-series diagnostics (own JVM: the r6wave family
-    # was 21 queries and still growing)
-    "r6eval": [
-        "roc_auc_order_status",
-        "score_lift_deciles",
-        "mcnemar_doc_filters",
-        "cohens_d_price_returnflag",
-        "grubbs_order_price",
-        "levene_price_flag",
-        "durbin_watson_daily_value",
-        "runs_test_daily_value",
-        "rolling_slope_daily_value",
-        "graph_degree_powerlaw",
-        "keyness_llr_sources",
-        "kendall_tau_qty_discount",
-        "cochran_q_doc_filters",
-        "moods_median_price_flag",
-    ],
-    # round-6 wave 6: ECDF drift family completion + paired/2x2 tests
-    "r6drift": [
-        "cvm_test_price_returnflag",
-        "anderson_darling_price_flag",
-        "cliffs_delta_price_returnflag",
-        "wilcoxon_signed_user_value",
-        "cusum_daily_value",
-        "odds_ratio_doc_flags",
-        "jarque_bera_price",
-        "breusch_pagan_price_qty",
-        "cooks_distance_price_qty",
-        "ljung_box_daily_value",
-    ],
-    # round-7 waves, split by cost profile from day one (the 27-query
-    # shared-JVM bleed lesson): rank/moment statistics, graph joins,
-    # document scans, daily-series/interval ops
-    "r7stats": [
-        "bartlett_price_flag",
-        "friedman_order_status",
-        "g_test_status_flag",
-        "ordinal_assoc_qty_discount",
-        "ansari_bradley_price_flag",
-        "yuen_trimmed_price_flag",
-        "pr_curve_order_status",
-        "average_precision_order_status",
-        "kuiper_test_price_returnflag",
-        "bootstrap_mean_orders",
-    ],
-    "r7graph": [
-        "graph_modularity_nation",
-        "graph_harmonic_centrality",
-        "graph_rich_club",
-        "graph_knn_degree_curve",
-    ],
-    "r7docs": [
-        "pii_density_by_source",
-        "readability_by_source",
-        "token_budget_mix_docs",
-        "embedding_pair_cosine_hist",
-        "ece_docs",
-        "brier_decomposition_docs",
-        "source_ngram_cosine",
-    ],
-    "r7series": [
-        "theil_u_daily_value",
-        "lagged_xcorr_daily_value",
-        "changepoint_binseg_value",
-        "seasonal_weekday_value",
-        "monotonicity_user_value",
-        "allen_session_relations",
-    ],
-    # ...and the heavier image/ML queries (PCA's scatter join dominates)
-    "mlx": [
-        "bpe_pair_counts",
-        "multimodal_decode_stats",
-        "multimodal_resize_stats",
-        "label_centroid_similarity",
-        "ols_price_on_quantity",
-        "pca_top_component",
-    ],
-    # round-8 wave: fact-scan statistics (cheap) before the prefix-count
-    # pipelines (jonckheere runs 3 of them)
-    "r8stats": [
-        "cohens_h_status_price",
-        "lin_ccc_price_qty",
-        "mantel_haenszel_status_price",
-        "cochran_armitage_priority",
-        "variance_homogeneity_price_flag",
-        "robust_shape_price",
-        "last_digit_uniformity_price",
-        "benford_second_digit_orders",
-        "deviance_price_flag",
-        "hellinger_price_flag",
-        "hodges_lehmann_qty_flag",
-        "bland_altman_doclen",
-        "pinball_loss_price",
-        "split_gain_priority_price",
-        "hill_tail_price",
-        "ranking_stability_nations",
-        "concentration_customer_revenue",
-        "qq_fit_price_flag",
-        "wasserstein_qty_flag",
-        "energy_distance_qty_flag",
-        "neyman_allocation_price",
-        "dunn_pairwise_price_flag",
-        "jonckheere_qty_returnflag",
-        "ad_ksample_price_flag",
-    ],
-    # round-8 corpus/temporal/graph: vocabulary shuffles and day-grid
-    # series (ks/spiegelhalter cheap; vocab-jaccard's term join last)
-    "r8corpus": [
-        "ks_doclen_lang",
-        "page_trend_weekday",
-        "cox_stuart_daily_value",
-        "periodogram_daily_value",
-        "hurst_daily_value",
-        "burstiness_user_events",
-        "uncertainty_event_dow",
-        "poisson_rate_ratio_events",
-        "spiegelhalter_docs",
-        "tv_distance_lang_source",
-        "lexical_diversity_source",
-        "yules_k_docs",
-        "heaps_law_docs",
-        "bigram_cond_entropy_docs",
-        "source_vocab_jaccard_docs",
-        "type_mix_entropy_trend",
-        "evt_block_maxima_daily",
-        "mase_daily_value",
-        "embedding_dim_profile",
-        "lang_pred_quality",
-        "graph_degree_centralization",
-    ],
-    # round-9 wave: fact-scan statistics and bounded-grid tests first,
-    # then the vocabulary/day-grid shuffles, prefix-count BM last
-    "r9wave": [
-        "cronbach_alpha_lineitem",
-        "theil_l_customer_revenue",
-        "mcc_lang_pred",
-        "kendalls_w_nations",
-        "rbo_customers",
-        "capture_recapture_docs",
-        "hoeffding_d_qty_discount",
-        "turning_points_daily_value",
-        "sample_entropy_daily_value",
-        "spectral_entropy_daily_value",
-        "vocab_richness_docs",
-        "burrows_delta_sources",
-        "brunner_munzel_price_flag",
-        "covariate_balance_lineitem",
-        "log_odds_dirichlet_lang",
-        "breslow_day_status_price",
-        "token_fertility_lang",
-        "bernstein_ci_order_price",
-        "dispersion_daily_events",
-        "boosted_stumps_price_qty",
-        "ad_ksample_standardized",
-        "cuzick_trend_qty_flag",
-        "gk_lambda_status_priority",
-        "max_drawdown_daily_value",
-        "youden_j_order_status",
-        "bws_test_price_status",
-        "mardia_kurtosis_price_qty",
-        "term_dispersion_dp_docs",
-        "lexical_constants_docs",
-        "kpss_daily_value",
-        "rayleigh_hour_events",
-        "mood_dispersion_price_status",
-        "join_key_discovery",
-        "pacf_daily_value",
-        "seasonal_strength_daily",
-        "welch_anova_price_flag",
-        "van_der_waerden_price_flag",
-        "fligner_killeen_price_flag",
-        "cucconi_price_status",
-        "bh_fdr_daily_events",
-        "bartels_rank_daily_value",
-        "difference_sign_daily_value",
-        "seasonal_mann_kendall_daily",
-        "chatterjee_xi_daily",
-        "wilson_ci_priority",
-        "jackknife_ratio_nation",
-        "logrank_retention_cohorts",
-    ],
-    # round-10 wave 18: omnibus two-sample + changepoint/records series
-    "r10stats": [
-        "foster_stuart_daily_value",
-        "permutation_entropy_daily",
-        "fleiss_kappa_docs",
-        "pettitt_daily_value",
-        "dagostino_k2_price",
-        "lepage_price_flag",
-        "diversity_sources_docs",
-        "buishand_range_daily",
-        "variance_ratio_daily",
-    ],
-    # round-11 wave 21: iterative outlier rounds, Hill numbers, Quade
-    "r11stats": [
-        "generalized_esd_orders",
-        "hill_diversity_docs",
-        "quade_nation_priority",
-        "snht_daily_value",
-        "dcor_daily_value_volume",
-    ],
-    # round-12 wave 22: dispersion ranks, circular uniformity, CF
-    # normality, aligned-rank blocks
-    "r12stats": [
-        "siegel_tukey_price_flag",
-        "conover_sqranks_price_flag",
-        "watson_u2_minute_events",
-        "epps_pulley_daily_value",
-        "aligned_ranks_nation_priority",
-    ],
+    family: [q.name for q in registry.REGISTRY.values() if q.bench and q.family == family]
+    for family in registry.FAMILIES
 }
 
 HEADLINE = [q for qs in FAMILIES.values() for q in qs]
@@ -458,7 +53,7 @@ def run_family(family: str) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(f"bench_{family}")
     qs = entrymod.queries()
-    names = [n for n in FAMILIES[family] if n in qs]
+    names = FAMILIES[family]
 
     # Pre-warm the JVM and the Python worker pool outside any timing.
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(

@@ -27,11 +27,12 @@ def create_aggregation(
 def gold_aggregations(silver: DataFrame) -> dict[str, DataFrame]:
     """A2+A3 — the two fixed gold tables (ref: T/silver_to_gold.py:116-123).
 
-    The reference computes them as two independent passes; ``by_location``
-    is an exact rollup level of ``by_type_location``, so we derive it from
-    the coarser aggregate instead of re-scanning silver — at 100 TB that
-    saves a full second scan+shuffle (re-aggregating the small aggregate
-    is ~free and arithmetic-exact for counts).
+    ``by_location`` is an exact rollup level of ``by_type_location`` and
+    is derived from it (arithmetic-exact for counts). Both results are
+    lazy and uncached, and ``sinks.write_gold`` runs one action per
+    table, so writing both still scans silver and runs the first
+    aggregate twice, as the reference's two independent passes do
+    (ROADMAP item 6).
     """
     by_type_location = create_aggregation(
         silver, ["brewery_type", "location", "state", "city"], "brewery_count"
@@ -315,7 +316,8 @@ def frequent_item_pairs(
     supports and the basket-count denominator still see every basket,
     so support/lift for surviving pairs keep their global meaning.
     ``None`` disables the cap. Any registered oracle must mirror the
-    cap in its pair CTE (see _ORACLES["frequent_brand_pairs"]).
+    cap in its pair CTE (see the ``frequent_brand_pairs`` record in
+    ``breweries_etl_spark/queries/profile.py``).
     """
     items = df.select(
         F.col(basket_col).alias("b"), F.col(item_col).alias("i")

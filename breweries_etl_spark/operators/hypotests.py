@@ -6181,7 +6181,7 @@ def welch_anova(
 
 # Acklam (2003) inverse normal CDF coefficients — public rational
 # approximation, |relative error| < 1.15e-9 everywhere: far inside the
-# 6-dp oracle grid. The SQL twin (__spark_entry__._norm_ppf_sql) is
+# 6-dp oracle grid. The SQL twin (queries/shared.py:_norm_ppf_sql) is
 # GENERATED from these same literals with repr() round-tripping, and
 # both sides evaluate the identical Horner order, so the doubles agree
 # bit-for-bit (ln/sqrt are the usual 1-ulp-class primitives).
@@ -6479,7 +6479,7 @@ def fligner_killeen(
 # Abramowitz & Stegun 7.1.26 erf polynomial — public rational
 # approximation, |error| < 7.5e-8 in the CDF: inside the 6-dp oracle
 # grid. SQL twin generated from these literals (repr round-trip) with
-# identical Horner association (__spark_entry__._norm_sf_sql).
+# identical Horner association (queries/shared.py:_norm_sf_sql).
 _CDF_B = [1.061405429, -1.453152027, 1.421413741, -0.284496736,
           0.254829592]
 _CDF_P = 0.3275911

@@ -13,8 +13,9 @@ expressed as declarative DataFrame plans Catalyst can optimize:
 - Filters are written against base columns before joins so Catalyst
   pushes them into the parquet scan (check: PushedFilters in .explain).
 
-Every public function here is a registered query under its own name
-(``__spark_entry__.queries()``); helpers take a leading underscore.
+Every public function here is a registered query under its own name,
+declared with its oracle in ``breweries_etl_spark/queries/core.py``;
+helpers take a leading underscore.
 """
 
 from __future__ import annotations

@@ -31,7 +31,7 @@ def _spark_convert(spark, fn, dec_str: str, dec_type: str) -> float:
 
 
 def _duck_convert(macro, dec_str: str, dec_type: str) -> float:
-    import __spark_entry__ as entry
+    from breweries_etl_spark.queries import shared as entry
 
     m = getattr(entry, macro)
     return duckdb.sql(

@@ -28,9 +28,9 @@ import duckdb
 import pandas as pd
 import pytest
 
-from __spark_entry__ import _capped_collapse_cte
 from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
+from breweries_etl_spark.queries.shared import _capped_collapse_cte
 
 BOILER = "the quick brown fox jumps"
 RARE = "zeta eta theta iota"

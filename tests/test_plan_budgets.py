@@ -81,7 +81,7 @@ def test_topk_single_shuffle(spark, sf_dir):
 
 
 def test_gold_pipeline_budget(spark, sf_dir):
-    from __spark_entry__ import q_gold_by_type_location
+    from breweries_etl_spark.queries.core import q_gold_by_type_location
 
     # silver transform is shuffle-free (projections/filters only);
     # the gold groupBy adds the single hash exchange, dims broadcast
@@ -161,21 +161,21 @@ def test_paragraph_dedup_two_data_shuffles(spark, sf_dir):
 
 
 def test_rolling_time_window_single_exchange(spark, sf_dir):
-    from __spark_entry__ import q_rolling_hour_user_value
+    from breweries_etl_spark.queries.temporal_state import q_rolling_hour_user_value
 
     # one hash exchange: the per-user window partitioning
     assert _exchanges(q_rolling_hour_user_value(spark, sf_dir)) <= 1
 
 
 def test_downsample_single_exchange(spark, sf_dir):
-    from __spark_entry__ import q_downsample_events
+    from breweries_etl_spark.queries.temporal import q_downsample_events
 
     # one hash exchange on (user, bucket); argmin struct combines map-side
     assert _exchanges(q_downsample_events(spark, sf_dir)) <= 1
 
 
 def test_winsorize_budget(spark, sf_dir):
-    from __spark_entry__ import q_winsorized_price_stats
+    from breweries_etl_spark.queries.corestate import q_winsorized_price_stats
 
     plan_df = q_winsorized_price_stats(spark, sf_dir)
     # bounds agg + final agg; the bounds join itself must broadcast
@@ -183,7 +183,7 @@ def test_winsorize_budget(spark, sf_dir):
 
 
 def test_cms_heavy_hitters_budget(spark, sf_dir):
-    from __spark_entry__ import q_cms_heavy_hitters
+    from breweries_etl_spark.queries.corestate import q_cms_heavy_hitters
 
     # sketch groupBy + two bounded pivot merges (<= depth x width rows)
     # + candidate distinct + exact verify groupBy; the one-row sketch
@@ -200,7 +200,7 @@ def test_cms_heavy_hitters_budget(spark, sf_dir):
 
 
 def test_snapshot_diff_budget(spark, sf_dir):
-    from __spark_entry__ import q_snapshot_diff_orders
+    from breweries_etl_spark.queries.corestate import q_snapshot_diff_orders
 
     # two join sides + status agg (digests only — no payload shuffle
     # appears as extra exchanges)
@@ -208,14 +208,14 @@ def test_snapshot_diff_budget(spark, sf_dir):
 
 
 def test_event_gap_stats_single_exchange(spark, sf_dir):
-    from __spark_entry__ import q_event_gap_stats
+    from breweries_etl_spark.queries.temporal import q_event_gap_stats
 
     # lag window + groupBy share the user_id partitioning
     assert _exchanges(q_event_gap_stats(spark, sf_dir)) <= 1
 
 
 def test_user_event_novelty_two_exchanges(spark, sf_dir):
-    from __spark_entry__ import q_user_event_novelty
+    from breweries_etl_spark.queries.temporal import q_user_event_novelty
 
     # (user, type) first-occurrence window, then the user running sum
     assert _exchanges(q_user_event_novelty(spark, sf_dir)) <= 2
