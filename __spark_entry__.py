@@ -28,17 +28,23 @@ from breweries_etl_spark.queries.core import q_gold_by_type_location
 from breweries_etl_spark.queries.record import Builder
 
 
+# The runtime confs correctness and plan shape depend on: UTC, so
+# timestamp rendering matches the tz-naive oracle; nanos-as-long, so the
+# events parquet reads; 32 shuffle partitions, which right-size shuffles
+# for the local test SFs (Spark's default 200 over-parallelizes 60k-row
+# inputs ~6×), and AQE on, which still coalesces further.
+PINNED_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.adaptive.enabled": "true",
+}
+
+
 def _pin_session(spark: SparkSession) -> None:
-    """The driver supplies its own SparkSession; pin the four runtime
-    confs correctness and plan shape depend on: UTC, so timestamp
-    rendering matches the tz-naive oracle; nanos-as-long, so the events
-    parquet reads; 32 shuffle partitions and AQE on."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Right-size shuffles for the local test SFs (Spark's default 200
-    # over-parallelizes 60k-row inputs ~6×); AQE still coalesces further.
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    """The caller supplies its own SparkSession; pin ``PINNED_CONFS``."""
+    for key, value in PINNED_CONFS.items():
+        spark.conf.set(key, value)
 
 
 def _wrap(fn: Builder) -> Builder:

@@ -11,8 +11,10 @@ Pieces:
 
 - ``persist(df)`` caches ``df`` and registers it in the current scope.
 - ``materialized(df)`` (persist + count) and ``truncated(df)`` (eager
-  localCheckpoint) are the per-round barriers of iterative loops;
-  ``checkpoint(df)`` is the eager reliable checkpoint.
+  localCheckpoint) are the barriers of iterative loops;
+  ``checkpoint(df)`` is the eager reliable checkpoint. A loop that needs
+  a count from a barrier observes it on the barrier's own action
+  (``DataFrame.observe``) instead of running a second one.
 - A scope, opened by ``@operator`` or ``with scope():``, records the
   persistent RDDs that already exist when it opens. Freeing it
   unpersists the frames it registered, then every unnamed RDD pinned
@@ -140,23 +142,19 @@ def materialized(df: DataFrame) -> tuple[DataFrame, int]:
     self-reference per round, as in label propagation). A loop whose
     round references the previous frame k >= 2 times grows a 3^N-node
     plan tree that Catalyst must re-analyze every action; use
-    ``truncated`` there instead (measured: BFS hop 5 at sf0.1 built a
-    164 MB plan string and spent 90 s in analysis)."""
+    ``truncated`` there instead (measured: hop 5 of the old frontier BFS
+    at sf0.1 built a 164 MB plan string and spent 90 s in analysis)."""
     out = persist(df)
     return out, out.count()
 
 
-def truncated(df: DataFrame, with_count: bool = True) -> tuple[DataFrame, int]:
+def truncated(df: DataFrame) -> DataFrame:
     """localCheckpoint(eager): materialize AND cut the logical plan to a
     single leaf, the barrier for loops with multiplicative plan growth.
-    In-memory, no reliable-storage write; the count after is a cached
-    scan. The blocks are freed with the scope's id-diff.
-
-    ``with_count=False`` skips the count for loops that don't consume
-    it (PageRank runs a FIXED iteration count)."""
+    In-memory, no reliable-storage write; one job. The blocks are freed
+    with the scope's id-diff."""
     _current()
-    out = df.localCheckpoint(eager=True)
-    return out, (out.count() if with_count else -1)
+    return df.localCheckpoint(eager=True)
 
 
 def checkpoint(df: DataFrame) -> DataFrame:

@@ -1,26 +1,31 @@
 """Connected components over near-duplicate pair lists — the step that
 turns pairwise dedup output into canonical document groups ("keep one
 doc per near-dup cluster"), which is how web-scale corpora actually
-apply MinHash/SimHash results.
+apply MinHash/SimHash results — plus BFS, PageRank and the graph
+statistics built on the same edge relations.
 
 Scale design: iterative min-label propagation. Each round is one
 aggregate + one join over (node, label) pairs — never the documents —
 and converges in O(cluster diameter) rounds; near-dup clusters are
 shallow (a page and its variants), so 3-5 rounds is typical. Each
-round's frame goes through a lineage barrier (``lifecycle.truncated``
-or ``lifecycle.materialized``), with a reliable checkpoint every
-CHECKPOINT_EVERY rounds: iterative plans otherwise double in depth each
-pass and re-execute from the source (lineage truncation is the standard
-Spark pattern for Pregel-style loops; GraphX checkpoints periodically
-for the same reason). How the barriers are released is in
-``functions/lifecycle.py``. The per-round convergence check is one
-count() of changed labels — a driver action per iteration is inherent
-to iterative algorithms, not a collect() of data.
+round's frame goes through a lineage barrier (``lifecycle.truncated``),
+with a reliable checkpoint every CHECKPOINT_EVERY rounds: iterative
+plans otherwise double in depth each pass and re-execute from the
+source (lineage truncation is the standard Spark pattern for
+Pregel-style loops; GraphX checkpoints periodically for the same
+reason). How the barriers are released is in ``functions/lifecycle.py``.
+The convergence check, the count of changed labels, is observed on the
+barrier's own job (``DataFrame.observe``), so a round costs one action.
+
+BFS (``bfs_levels``) needs no barrier per round: it is min-plus
+relaxation, and each round references the previous one once, so
+CHECKPOINT_EVERY rounds chain lazily inside one plan and share one
+barrier, whose action also reports whether the search has converged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import lifecycle
@@ -122,13 +127,13 @@ def _cc_loop(edges: DataFrame, max_iterations: int) -> DataFrame:
         # label update), so persist alone would double the logical plan
         # every round (see pagerank) — localCheckpoint cuts it to a
         # leaf; the reliable checkpoint every CHECKPOINT_EVERY rounds
-        # additionally caps recompute depth on block loss.
-        if rnd % CHECKPOINT_EVERY == 0:
-            updated = lifecycle.checkpoint(updated)
-        else:
-            updated, _ = lifecycle.truncated(updated)
-        n_changed = updated.filter(F.col("changed")).count()
-        current = updated
+        # additionally caps recompute depth on block loss. Either
+        # barrier's job also counts the changed labels.
+        current, n_changed = _barrier_count(
+            updated,
+            lifecycle.checkpoint if rnd % CHECKPOINT_EVERY == 0 else lifecycle.truncated,
+            F.col("changed"),
+        )
         if n_changed == 0:
             break
     return current.select(
@@ -146,90 +151,86 @@ def bfs_levels(
 ) -> DataFrame:
     """Unweighted BFS over the UNDIRECTED graph of ``pairs``: (node,
     level) with level = hop distance from the nearest source node.
-    Unreached nodes are absent.
+    Unreached nodes are absent; every source keeps level 0, also one
+    missing from ``pairs`` or NULL. A NULL endpoint is reached (once, at
+    its nearest level) but leads nowhere.
 
-    Frontier-based: each round joins only the LAST round's newly-reached
-    nodes against the edge list (anti-join drops already-visited), so
-    total work is O(edges × diameter-reached-fraction), not O(edges ×
-    rounds). First visit = minimum level (unweighted), so results are
-    exact integers — deterministic under any partitioning, which is what
-    lets a recursive-CTE oracle hash-match.
+    Min-plus relaxation over the arcs a → b, both directions of every
+    edge. Round k joins dist ⋈ arcs on a; each joined arc emits (b,
+    level + 1) and (a, level), the weight-0 self-loop that keeps a
+    reached node's level, and level_k is the min per node. Emitting the
+    self-loop from the joined arc, rather than as arc rows of its own,
+    keeps the arcs at two rows per edge. The sources join the same
+    aggregate at level 0, so a source with no arc survives every round.
+    Levels are exact integers — deterministic under any partitioning,
+    which is what lets a recursive-CTE oracle hash-match.
 
-    Per hop, the new frontier is materialized with persist + count — ONE
-    job whose count doubles as the emptiness check (r2 paid a reliable
-    checkpoint write PLUS an isEmpty() probe every hop, which dominated
-    wall time: O(nodes × diameter) checkpoint I/O). The visited set is
-    the lazy union of the already-persisted hop frames, so lineage grows
-    only linearly in hops; one final reliable checkpoint of the full
-    level table truncates everything, so every persist is released
-    before returning.
-
-    The edge list stays DIRECTED (half the rows of the materialized
-    undirected doubling r2 built); each hop probes both directions.
-    Frontier/visited frames are materialized with exact size stats, so
-    Catalyst plans their joins as broadcasts whenever they fit — the
-    per-hop shuffle is then only the distinct over NEW nodes (the
-    anti-join runs map-side, before the distinct, so visited nodes never
-    shuffle at all).
-
-    Each hop references the frontier twice (both directions) plus every
-    prior frame (visited union), so the logical plan would grow ~3^hops
-    without truncation — per-hop frames therefore go through
-    ``lifecycle.truncated`` (localCheckpoint), not
-    ``lifecycle.materialized``; see their docstrings.
+    Each round references the previous one ONCE, so the plan grows
+    linearly and rounds chain lazily: CHECKPOINT_EVERY rounds form one
+    plan ending in one ``lifecycle.truncated`` barrier, and Spark's
+    exchange reuse evaluates ``pairs`` and the sources once per block.
+    The barrier's job also counts, through ``DataFrame.observe``, the
+    nodes at the block's last level. BFS levels are contiguous, so a
+    count of 0 means nothing lies further out and the loop stops; the
+    rounds after the last barrier stay lazy and are materialized by the
+    release checkpoint. No round runs an action of its own.
 
     ``sources``: one-column DataFrame of starting node ids (column
-    ``node``) — OR a callable ``(materialized_edges) -> DataFrame``
-    evaluated against the PERSISTED (src, dst) edge relation. The
-    callable form exists because a seed derived from the same
-    expensive plan as ``pairs`` (e.g. ``edges.agg(min(src))``) would
-    otherwise re-run that plan from the fact tables: the persist
-    below caches only bfs_levels' own copy of the lineage, not the
-    caller's, so the seed aggregate was a SECOND full fact scan
-    (the dunn_pairwise class of bug; judge r10 open item #2).
+    ``node``) — OR a callable ``(edges) -> DataFrame`` evaluated against
+    the distinct (src, dst) edge relation. The callable form exists
+    because a seed derived from the same expensive plan as ``pairs``
+    (e.g. ``edges.agg(min(src))``) then shares that relation's exchange
+    with the arcs instead of re-running the plan from the fact tables
+    (the dunn_pairwise class of bug).
     """
-    # Persisted because every hop re-joins the full edge list.
-    edges, n_edges = lifecycle.materialized(
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    )
+    edges = pairs.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).distinct()
     if callable(sources):
         sources = sources(edges)
-    with _loop_shuffle_partitions(pairs.sparkSession, n_edges):
-        return _bfs_loop(edges, sources, max_hops)
-
-
-def _bfs_loop(edges, sources, max_hops: int) -> DataFrame:
-    frontier, _ = lifecycle.truncated(
-        sources.select("node").distinct().withColumn("level", F.lit(0))
-    )
-    hop_frames = [frontier]
+    seeds = sources.select("node").distinct().withColumn("level", F.lit(0))
+    arcs = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("a"), F.col("dst").alias("b")),
+                F.struct(F.col("dst").alias("a"), F.col("src").alias("b")),
+            )
+        ).alias("__arc")
+    ).select("__arc.*")
+    dist = seeds
     for hop in range(1, max_hops + 1):
-        visited = hop_frames[0]
-        for f in hop_frames[1:]:
-            visited = visited.union(f)
-        fwd = edges.join(frontier, edges.src == frontier.node).select(
-            F.col("dst").alias("node")
+        dist = (
+            dist.join(arcs, dist.node == arcs.a)
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("a").alias("node"), "level"),
+                        F.struct(
+                            F.col("b").alias("node"), (F.col("level") + 1).alias("level")
+                        ),
+                    )
+                ).alias("__to")
+            )
+            .select("__to.*")
+            .union(seeds)
+            .groupBy("node")
+            .agg(F.min("level").alias("level"))
         )
-        bwd = edges.join(frontier, edges.dst == frontier.node).select(
-            F.col("src").alias("node")
-        )
-        new, n_new = lifecycle.truncated(
-            fwd.union(bwd)
-            .join(visited.select("node"), "node", "left_anti")
-            .distinct()
-            .withColumn("level", F.lit(hop))
-        )
-        if n_new == 0:
-            break
-        hop_frames.append(new)
-        frontier = new
-    out = hop_frames[0]
-    for f in hop_frames[1:]:
-        out = out.union(f)
-    # The level table is node-scale but the union drags ~32 partitions per
-    # hop frame into the release checkpoint — coalesce so the write is a
-    # handful of files, not hops×partitions shards.
-    return out.coalesce(16)
+        if hop % CHECKPOINT_EVERY == 0 and hop < max_hops:
+            dist, n_last = _barrier_count(
+                dist, lifecycle.truncated, F.col("level") == hop
+            )
+            if n_last == 0:
+                break
+    return dist
+
+
+def _barrier_count(df: DataFrame, barrier, condition) -> tuple[DataFrame, int]:
+    """``barrier(df)``, and the number of ``df``'s rows that meet
+    ``condition``, counted by the barrier's own job."""
+    seen = Observation()
+    out = barrier(df.observe(seen, F.count(F.when(condition, 1)).alias("n")))
+    return out, seen.get["n"]
 
 
 def _undirected(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -398,7 +399,7 @@ def pagerank(
     plan that Catalyst re-analyzes on every action (measured: round 5
     at sf0.1 spent >10 s in pure plan analysis with execution fully
     cached). The per-round barrier is therefore ``lifecycle.truncated``
-    (localCheckpoint — plan cut to a leaf), same as BFS.
+    (localCheckpoint — plan cut to a leaf), same as connected components.
 
     Rows-only for the driver gate (float accumulation order makes exact
     cross-engine hashing meaningless); pytest verifies against a dense
@@ -434,7 +435,7 @@ def _pagerank_loop(edges, iterations: int, damping: float) -> DataFrame:
     wedges, _ = lifecycle.materialized(
         edges.join(out_deg, "src").select("src", "dst", "out_deg")
     )
-    ranks, _ = lifecycle.truncated(nodes.withColumn("rank", F.lit(1.0 / n)), with_count=False)
+    ranks = lifecycle.truncated(nodes.withColumn("rank", F.lit(1.0 / n)))
     for _it in range(1, iterations + 1):
         # One pass over ranks per round: the edge join yields both the
         # per-node in-mass AND (by mass conservation) the dangling
@@ -474,7 +475,7 @@ def _pagerank_loop(edges, iterations: int, damping: float) -> DataFrame:
                 ).alias("rank"),
             )
         )
-        ranks, _ = lifecycle.truncated(new_ranks, with_count=False)
+        ranks = lifecycle.truncated(new_ranks)
     return ranks
 
 
@@ -611,8 +612,8 @@ def kcore_summary(
     surviving core — the standard "dense nucleus" statistic for
     community/spam analysis at graph scale.
 
-    O(rounds) driver loop like ``bfs_levels``: each round is one degree
-    aggregate + one semi-join filter, all hash-partitioned, lineage
+    O(rounds) driver loop like ``connected_components``: each round is
+    one degree aggregate + one semi-join filter, all hash-partitioned, lineage
     truncated by per-round checkpoint-free persists (the edge relation
     shrinks monotonically). The loop runs AT MOST ``max_rounds`` and
     stops early at the fixed point (no node dropped) — a converged
@@ -955,8 +956,9 @@ def harmonic_centrality_from(
     """Harmonic centrality of a seed set: Σ_v 1/dist(seed-set, v) over
     all nodes reached within ``max_hops`` — the closeness variant that
     handles disconnection gracefully (unreached nodes contribute 0,
-    no infinite means). Rides ``bfs_levels``' frontier machinery
-    unchanged; the fold quantizes 1/level as the exact integer
+    no infinite means). Folds the levels of ``bfs_levels`` (min-plus
+    relaxation, one barrier per block of CHECKPOINT_EVERY rounds); the
+    fold quantizes 1/level as the exact integer
     floor(10¹²/level) so the cross-level sum is order-independent and
     engine-exact. Output one row:
     (n_reached, max_level, harmonic_centrality)."""

@@ -34,8 +34,9 @@ FROM dist GROUP BY lvl
 def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop-distance distribution over the customer–supplier bipartite
     graph (nodes encoded 2·custkey / 2·suppkey+1) from the minimum
-    customer node — frontier BFS with per-round checkpoints, oracled by
-    a DuckDB recursive CTE (integer levels are engine-deterministic)."""
+    customer node — BFS as min-plus relaxation, one barrier per block
+    of 4 rounds, oracled by a DuckDB recursive CTE (integer levels are
+    engine-deterministic)."""
     from breweries_etl_spark.operators.graph import bfs_levels
 
     orders = load_table(spark, sf_dir, "orders")
@@ -48,10 +49,11 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # seed = min customer node, derived from the MATERIALIZED edge
-    # relation inside bfs_levels (callable form) — deriving it from
-    # the edges plan here would re-run the orders⋈lineitem join +
-    # distinct a second time (the dunn uncached-multi-consumer class)
+    # seed = min customer node, derived from bfs_levels' own edge
+    # relation (callable form), so it shares that relation's exchange —
+    # deriving it from the edges plan here would re-run the
+    # orders⋈lineitem join + distinct a second time (the dunn
+    # uncached-multi-consumer class)
     levels = bfs_levels(
         edges, lambda e: e.agg(F.min("src").alias("node")), max_hops=6
     )

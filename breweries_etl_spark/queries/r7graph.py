@@ -116,7 +116,7 @@ FROM folded
 """)
 def q_graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Harmonic centrality of the minimum customer node over the
-    purchase graph — 1/distance fold over the same frontier BFS as
+    purchase graph — 1/distance fold over the same BFS levels as
     graph_bfs_levels (operators/graph.py:harmonic_centrality_from)."""
     from breweries_etl_spark.operators.graph import harmonic_centrality_from
 
@@ -130,7 +130,7 @@ def q_graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # seed from the materialized edge relation (callable form): the
+    # seed from bfs_levels' own edge relation (callable form): the
     # eager seed aggregate was a SECOND full orders⋈lineitem scan —
     # the judge-r10 driver-vs-solo gap suspect for this query
     return harmonic_centrality_from(

@@ -8,6 +8,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import SparkSession
+
+from __spark_entry__ import PINNED_CONFS
 from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.session import get_spark
 
@@ -16,6 +19,18 @@ from breweries_etl_spark.session import get_spark
 def spark():
     s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _restore_pinned_confs():
+    """Building through ``queries()`` pins ``PINNED_CONFS`` on the shared
+    session; put back what the session had before the test, so no test
+    sees another's partition count or AQE setting."""
+    spark = SparkSession.getActiveSession()
+    before = {k: spark.conf.get(k) for k in PINNED_CONFS} if spark else {}
+    yield
+    for k, v in before.items():
+        spark.conf.set(k, v)
 
 
 @pytest.fixture(scope="session")

@@ -35,6 +35,21 @@ def test_disjoint_components_keep_separate_labels(spark):
     assert got == {1: 1, 2: 1, 5: 5, 6: 5, 7: 5, 10: 10, 11: 10}
 
 
+def test_components_round_reads_its_count_off_the_barrier(spark, jobs_in):
+    """Lengthening a chain by one edge adds one label-propagation round
+    (here round 7, a localCheckpoint round). That round costs the
+    barrier's job and one broadcast job; the changed-label count rides
+    the barrier's job instead of running two more (4 jobs a round
+    before). AQE is off so job counts do not depend on stage timing."""
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+    def jobs_for_chain(n_edges):
+        pairs = _pairs(spark, [(i, i + 1) for i in range(1, n_edges + 1)])
+        return jobs_in(lambda: connected_components(pairs).collect())[1]
+
+    assert jobs_for_chain(6) - jobs_for_chain(5) <= 2
+
+
 def test_cluster_canonical_counts(spark):
     pairs = _pairs(spark, [(1, 2), (2, 3), (8, 9)])
     rows = {r["cluster_id"]: r for r in dedup_cluster_canonical(pairs).collect()}
@@ -75,6 +90,46 @@ def test_bfs_levels_multi_source_takes_nearest(spark):
         for r in bfs_levels(pairs, _sources(spark, [1, 5]), "id_a", "id_b").collect()
     }
     assert got == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
+
+
+def test_bfs_exits_at_the_first_block_past_the_diameter(spark, jobs_in):
+    """A 3-hop chain converges inside the first CHECKPOINT_EVERY block, so
+    the barrier ending it finds no node at its last level and the loop
+    stops: a budget of 20 hops launches exactly the jobs of a budget of
+    5, the smallest whose first block ends in that barrier (a budget of
+    4 ends in no barrier at all and launches fewer). AQE is off here
+    because its runtime pruning of empty relations makes the number of
+    small stage jobs depend on which stage finishes first."""
+    pairs = _pairs(spark, [(1, 2), (2, 3), (3, 4)])
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+    def run(max_hops):
+        return jobs_in(
+            lambda: bfs_levels(
+                pairs, _sources(spark, [1]), "id_a", "id_b", max_hops=max_hops
+            ).collect()
+        )
+
+    (near, near_jobs), (far, far_jobs) = run(5), run(20)
+    assert sorted(far) == sorted(near)
+    assert far_jobs == near_jobs
+
+
+def test_graph_bfs_levels_job_budget(spark, sf_dir, jobs_in):
+    """Building and collecting graph_bfs_levels at sf0.001 (schemas
+    already inferred) launched 31 jobs with the frontier loop, about 7
+    per hop; as min-plus relaxation it must launch at most half that,
+    and pin nothing once it returns."""
+    import __spark_entry__ as e
+
+    spark.catalog.clearCache()
+    build = e.queries()["graph_bfs_levels"]
+    build(spark, sf_dir)
+    rows, jobs = jobs_in(lambda: build(spark, sf_dir).collect())
+    assert rows
+    assert jobs <= 31 // 2
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    assert persistent.size() == 0, f"leaked {persistent.size()} persisted RDDs"
 
 
 def test_triangle_stats_k4(spark):
@@ -142,10 +197,11 @@ def test_components_release_caches(spark):
 def test_bfs_converges_in_diameter_rounds_on_large_tree(spark):
     """Round-4 lock-in for the iterative-loop wins: a complete 10-ary
     tree with 1,111,110 edges (depth 6). BFS from the root must (a)
-    terminate on frontier exhaustion BEFORE the max_hops budget — round
-    count == diameter, (b) assign every node its exact tree depth
-    (per-level counts are 10^k, closed form), and (c) pin nothing after
-    return."""
+    terminate BEFORE the max_hops budget, once a block barrier finds no
+    node at its last level — rounds run to the diameter rounded up to a
+    whole block of CHECKPOINT_EVERY (8 here), (b) assign every node its
+    exact tree depth (per-level counts are 10^k, closed form), and (c)
+    pin nothing after return."""
     spark.catalog.clearCache()
     n = (10**7 - 1) // 9  # 1,111,111 nodes: levels 0..6, level k has 10^k
     edges = (
@@ -153,7 +209,7 @@ def test_bfs_converges_in_diameter_rounds_on_large_tree(spark):
         .selectExpr("CAST((id - 1) DIV 10 AS LONG) AS src", "id AS dst")
     )
     sources = spark.range(1).select(F.col("id").alias("node"))
-    # max_hops far above the diameter: if the frontier-empty exit were
+    # max_hops far above the diameter: if the empty-last-level exit were
     # broken the loop would burn 20 rounds and the level histogram
     # would still catch it; terminating fast IS the property.
     levels = bfs_levels(edges, sources, max_hops=20)

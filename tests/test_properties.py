@@ -10,6 +10,7 @@ against a plain-Python model of the reference semantics
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -181,4 +182,79 @@ def test_incremental_merge_monoid_law(spark, rows, split):
         )
     # sum over an empty side contributes 0 via coalesce; a key absent from
     # the input must be absent from the output
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# BFS levels: for ANY undirected graph — duplicate edges, self-edges, NULL
+# endpoints, isolated and NULL sources — and any hop budget, bfs_levels
+# equals a plain-Python BFS. Budgets up to 9 cross the CHECKPOINT_EVERY
+# block boundary twice; a random path through the graph makes runs that
+# converge inside, at and past a block boundary likely.
+# ---------------------------------------------------------------------------
+
+NODE = st.one_of(st.none(), st.integers(min_value=0, max_value=11))
+
+
+def model_bfs(edges, sources, max_hops):
+    """Level of every node within ``max_hops`` of a source. A NULL
+    endpoint is reached like a node but has no neighbours; a source keeps
+    level 0 whether or not it has an edge."""
+    adj = {}
+    for a, b in edges:
+        if a is not None:
+            adj.setdefault(a, set()).add(b)
+        if b is not None:
+            adj.setdefault(b, set()).add(a)
+    level = {s: 0 for s in sources}
+    frontier = {s for s in sources if s is not None}
+    for hop in range(1, max_hops + 1):
+        reached = {v for u in frontier for v in adj.get(u, ())} - level.keys()
+        level.update((v, hop) for v in reached)
+        frontier = reached - {None}
+    return level
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    path=st.tuples(st.permutations(range(12)), st.integers(0, 12)).map(
+        lambda t: t[0][: t[1]]
+    ),
+    extra=st.lists(st.tuples(NODE, NODE), max_size=12),
+    sources=st.lists(
+        st.one_of(NODE, st.integers(min_value=100, max_value=102)),
+        min_size=1,
+        max_size=4,
+    ),
+    max_hops=st.integers(min_value=0, max_value=9),
+)
+def test_bfs_levels_match_python_bfs(spark, path, extra, sources, max_hops):
+    from breweries_etl_spark.operators.graph import bfs_levels
+
+    edges = list(zip(path, path[1:])) + extra
+    pairs = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(s,) for s in sources], "node long")
+    rows = bfs_levels(pairs, seeds, max_hops=max_hops).collect()
+    got = {r["node"]: r["level"] for r in rows}
+    assert len(got) == len(rows), rows
+    assert got == model_bfs(edges, sources, max_hops)
+
+
+@pytest.mark.parametrize(
+    "edges, sources, want",
+    [
+        ([], [1], {1: 0}),
+        ([(1, 2)], [], {}),
+        ([], [], {}),
+    ],
+    ids=["empty-pairs", "empty-sources", "both-empty"],
+)
+def test_bfs_levels_on_empty_input_returns(spark, edges, sources, want):
+    """A budget past the block boundary runs the observed barrier on an
+    empty frame; it must report 0 and return, not wait forever."""
+    from breweries_etl_spark.operators.graph import bfs_levels
+
+    pairs = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(s,) for s in sources], "node long")
+    got = {r["node"]: r["level"] for r in bfs_levels(pairs, seeds, max_hops=9).collect()}
     assert got == want
