@@ -27,20 +27,26 @@ def create_aggregation(
 def gold_aggregations(silver: DataFrame) -> dict[str, DataFrame]:
     """A2+A3 — the two fixed gold tables (ref: T/silver_to_gold.py:116-123).
 
-    ``by_location`` is an exact rollup level of ``by_type_location`` and
-    is derived from it (arithmetic-exact for counts). Both results are
-    lazy and uncached, and ``sinks.write_gold`` runs one action per
-    table, so writing both still scans silver and runs the first
-    aggregate twice, as the reference's two independent passes do
-    (ROADMAP item 6).
+    ``by_location`` is an exact rollup level of ``by_type_location``
+    (:func:`location_rollup`, arithmetic-exact for counts). Both frames
+    are lazy and uncached, so acting on ``by_location`` here re-runs the
+    silver scan and the first aggregate. The pipeline's gold stage does
+    not: it writes ``by_type_location`` and rolls ``by_location`` up from
+    that written table (``plans.pipeline.silver_to_gold``), one silver
+    scan per run.
     """
     by_type_location = create_aggregation(
         silver, ["brewery_type", "location", "state", "city"], "brewery_count"
     )
-    by_location = by_type_location.groupBy("location", "state", "city").agg(
+    return {"by_type_location": by_type_location, "by_location": location_rollup(by_type_location)}
+
+
+def location_rollup(by_type_location: DataFrame) -> DataFrame:
+    """A3 — ``by_location`` from ``by_type_location``: sum the per-type
+    counts of each (location, state, city)."""
+    return by_type_location.groupBy("location", "state", "city").agg(
         F.sum("brewery_count").alias("brewery_count")
     )
-    return {"by_type_location": by_type_location, "by_location": by_location}
 
 
 def value_counts(df: DataFrame, column: str, count_name: str = "count") -> DataFrame:

@@ -22,12 +22,17 @@ from ..config import KEY_FIELDS
 from .standardize import add_quarantine_metadata
 
 
-def validate_schema(df: DataFrame, expected_columns: list[str] | None = None) -> None:
+def validate_schema(
+    df: DataFrame | list[str], expected_columns: list[str] | None = None
+) -> None:
     """P1 — column-presence validation (ref: U/helpers.py:23-40): raise
-    ValueError listing missing columns. Static against the declared
-    schema — no job is launched."""
+    ValueError listing missing columns. ``df`` is a frame or the column
+    names a layer's files hold (``sources.tables.stored_columns``; a
+    frame read with a declared schema has every declared column). No
+    job is launched."""
     expected = KEY_FIELDS if expected_columns is None else expected_columns
-    missing = sorted(set(expected) - set(df.columns))
+    present = df.columns if isinstance(df, DataFrame) else df
+    missing = sorted(set(expected) - set(present))
     if missing:
         raise ValueError(f"Schema validation failed: missing columns {missing}")
 

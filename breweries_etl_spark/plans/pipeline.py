@@ -8,8 +8,20 @@ not engine; here each stage is a plain function over one SparkSession,
 hand-off is the durable layer path (same restart/replay property: any
 stage reruns from its input layer), and retries are a decorator.
 
-Every stage builds a LAZY plan and materializes exactly once at its sink —
-Catalyst fuses the whole silver transform chain into a single scan.
+Every stage builds a LAZY plan, and a run launches only the Spark jobs
+that write a layer: 7, down from 12 when the bronze and silver reads
+inferred their schemas, the silver sink probed its output with a read,
+and ``by_location`` re-scanned silver and re-ran the first aggregate
+(tests/test_pipeline.py holds the budget).
+
+- landing → bronze: 1 job, the JSON scan fused with the bronze write.
+- bronze → silver: 3 jobs, the silver shuffle and write and the
+  quarantine write. Bronze is read with the declared ``BRONZE_SCHEMA``
+  and validated against the column names in one file footer.
+- silver → gold: 3 jobs, the ``by_type_location`` shuffle and write and
+  the ``by_location`` write. Silver is read with the declared
+  ``SILVER_SCHEMA``; ``by_location`` rolls up the one-partition
+  ``by_type_location`` table just written, in one task with no shuffle.
 """
 
 from __future__ import annotations
@@ -17,18 +29,17 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-
-from pyspark.sql import Observation
+from pyspark.sql import Observation, SparkSession
 
 from ..config import SILVER_PARTITION_COLUMN, MedallionPaths
-from ..operators.aggregate import gold_aggregations
+from ..operators.aggregate import gold_aggregations, location_rollup
 from ..operators.quality import split_invalid_records, validate_schema
 from ..operators.standardize import add_ingestion_metadata, silver_transform
 from ..plans.metrics import MetricsRegistry, drain_observation, observed
 from ..sinks.writers import write_gold, write_partitioned, write_table
 from ..sources.json_source import read_landing_json
-from ..sources.tables import read_layer
+from ..schemas import BRONZE_SCHEMA, SILVER_SCHEMA
+from ..sources.tables import read_layer, stored_columns
 
 
 def with_retries(fn: Callable, retries: int = 3, delay_s: float = 0.0) -> Callable:
@@ -76,13 +87,15 @@ def bronze_to_silver(
     validate → quarantine split → standardize chain → partitioned silver
     overwrite + quarantine append.
 
-    One scan feeds both branches' sinks; the split predicate and the
-    silver transform chain each fuse into the scan via codegen.
+    Silver and quarantine are two writes, each its own scan of bronze;
+    the split predicate and the silver transform chain fuse into the
+    scans via codegen.
     """
     metrics = metrics or MetricsRegistry()
     with metrics.time_operation("bronze_to_silver", "silver"):
-        bronze = read_layer(spark, paths.bronze, fmt=fmt)
-        validate_schema(bronze)
+        bronze = read_layer(spark, paths.bronze, fmt=fmt, schema=BRONZE_SCHEMA)
+        # the declared schema has every column; the files may not
+        validate_schema(stored_columns(spark, paths.bronze, fmt=fmt))
         valid, quarantined = split_invalid_records(bronze)
         silver = silver_transform(valid)
         silver_obs, quarantine_obs = Observation(), Observation()
@@ -107,16 +120,23 @@ def silver_to_gold(
 ) -> None:
     """Stage 4 (ref: T/silver_to_gold.py:22-76): read silver (partition
     discovery built-in — the reference's manual glob fallback S6 is
-    obsolete) → two group-count gold tables."""
+    obsolete) → two group-count gold tables, the coarser one rolled up
+    from the finer one's written rows."""
     metrics = metrics or MetricsRegistry()
     with metrics.time_operation("silver_to_gold", "gold"):
-        silver = read_layer(spark, paths.silver, fmt=fmt)
-        aggs = gold_aggregations(silver)
+        silver = read_layer(spark, paths.silver, fmt=fmt, schema=SILVER_SCHEMA)
+        by_type_location = gold_aggregations(silver)["by_type_location"]
         # one Observation per gold table: each write is its own action,
         # and an Observation may ride exactly one dataset
-        observations = {name: Observation() for name in aggs}
+        observations = {name: Observation() for name in ("by_type_location", "by_location")}
         write_gold(
-            {name: observed(df, observations[name]) for name, df in aggs.items()},
+            {
+                "by_type_location": observed(by_type_location, observations["by_type_location"]),
+                # rolled up from the table just written, not from silver
+                "by_location": lambda written: observed(
+                    location_rollup(written("by_type_location")), observations["by_location"]
+                ),
+            },
             paths.gold,
             fmt=fmt,
         )

@@ -3,7 +3,13 @@
 The reference infers its schema from JSON at ingestion time
 (pd.DataFrame(all_data), ref: T/landing_to_bronze.py:70). At 100 TB,
 inference is nondeterministic (per-file sampling) and expensive (extra
-pass); we declare the StructType once and pass it to every reader.
+pass); we declare the StructType once and pass it to every reader:
+``BREWERY_SCHEMA`` to the landing JSON scan, ``BRONZE_SCHEMA`` and
+``SILVER_SCHEMA`` to the bronze and silver layer reads
+(``sources.tables.read_layer``), so no read infers a schema with a Spark
+job. ``SILVER_SCHEMA`` declares the partition column ``location`` as a
+string rather than letting partition discovery infer its type; a
+country name that looks like a number stays a string.
 
 Temporal typing preserved from the reference (SURVEY.md §1.2):
 ``ingestion_timestamp`` is a true timestamp, while ``processed_at`` and
@@ -42,6 +48,20 @@ BREWERY_SCHEMA = T.StructType(
 # Bronze = landing record + ingestion metadata (ref: U/helpers.py:312-323).
 BRONZE_SCHEMA = T.StructType(
     BREWERY_SCHEMA.fields + [T.StructField("ingestion_timestamp", T.TimestampType(), True)]
+)
+
+# Silver = bronze + processing metadata (ref: U/helpers.py:134-147), as a
+# partitioned read returns it: the partition column ``location`` (the
+# uppercased country) comes last. tests/test_pipeline.py checks it against
+# ``operators.standardize.silver_transform`` and against Spark's inference
+# over a written silver layer.
+SILVER_SCHEMA = T.StructType(
+    BRONZE_SCHEMA.fields
+    + [
+        T.StructField("processed_at", T.StringType(), True),
+        T.StructField("etl_version", T.StringType(), True),
+        T.StructField("location", T.StringType(), True),
+    ]
 )
 
 

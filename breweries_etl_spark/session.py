@@ -29,14 +29,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cores() -> int:
+    """Cores of the ``local[N]`` master: ``SPARK_GRAFT_CPUS`` when set,
+    else the CPUs this process may run on (its affinity mask, which a
+    container or ``taskset`` narrows below the host's count)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return int(cpus)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity call on this platform (macOS)
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "breweries_etl_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

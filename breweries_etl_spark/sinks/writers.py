@@ -22,10 +22,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.tables import read_layer
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -53,13 +56,12 @@ def write_table(
     fmt: str = "parquet",
 ) -> None:
     """K5 — generic parameterized sink (ref: U/helpers.py:363-417);
-    K2 (bronze overwrite) and K4 (quarantine append) are direct calls."""
-    if df.rdd.getNumPartitions() == 0:
-        # a ZERO-partition frame (e.g. an empty landing page) writes no
-        # part files at all, leaving a schema-less layer the next stage
-        # cannot read (empty-table sweep r10); one empty partition
-        # still writes the parquet footer with the schema
-        df = df.repartition(1)
+    K2 (bronze overwrite) and K4 (quarantine append) are direct calls.
+
+    An unpartitioned write of a zero-partition frame (an empty landing
+    page or directory) still lays down one footer-bearing part file in
+    parquet and ORC, so the layer keeps its schema without a planning
+    call here (tests/test_pipeline.py runs both empty landings)."""
     writer = df.write.mode(mode).format(fmt)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -95,18 +97,23 @@ def write_partitioned(
         .save(path)
     )
     # Dynamic-partition writes of ZERO rows create no directories and
-    # no parquet footer, leaving the layer unreadable
-    # (UNABLE_TO_INFER_SCHEMA; empty-table sweep r10). Probe AFTER the
-    # write — a pre-write emptiness action would consume any attached
-    # Observation (it reports the FIRST action's rows) — and lay down
-    # one unpartitioned empty file so the schema survives; pruning is
-    # moot on an empty layer. The rewrite is gated on the two POSITIVE
-    # no-data-files conditions (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA,
-    # both probed against this Spark build in tests): a transient FS or
-    # reader error after a populated write must propagate, not trigger
-    # an overwrite that would destroy the data (ADVICE r10 medium).
+    # no footer, leaving the layer unreadable (UNABLE_TO_INFER_SCHEMA;
+    # empty-table sweep r10). Probe AFTER the write — a pre-write
+    # emptiness action would consume any attached Observation (it
+    # reports the FIRST action's rows) — and lay down one unpartitioned
+    # empty file so the schema survives; pruning is moot on an empty
+    # layer. The probe loads the path with the frame's own schema and
+    # lists its files on the driver: no inference, no job. The rewrite
+    # is gated on POSITIVE no-data-files conditions only — no files
+    # listed, or PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA (both probed
+    # against this Spark build in tests): a transient FS or reader error
+    # after a populated write must propagate, not trigger an overwrite
+    # that would destroy the data (ADVICE r10 medium).
     try:
-        df.sparkSession.read.format(fmt).load(path).schema
+        layer = read_layer(df.sparkSession, path, fmt=fmt, schema=df.schema)
+        # Delta keeps the schema in its log: a readable table is anchored
+        if fmt == "delta" or layer.inputFiles():
+            return
     except AnalysisException as exc:
         cond = None
         for meth in ("getCondition", "getErrorClass"):
@@ -118,19 +125,36 @@ def write_partitioned(
                 break
         if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             raise
-        empty = df.sparkSession.createDataFrame([], df.schema)
-        write_table(empty.repartition(1), path, mode="overwrite", fmt=fmt)
+    empty = df.sparkSession.createDataFrame([], df.schema)
+    write_table(empty.repartition(1), path, mode="overwrite", fmt=fmt)
 
 
-def write_gold(aggregations: dict[str, DataFrame], gold_path: str, fmt: str = "parquet") -> None:
+def write_gold(
+    aggregations: dict[str, DataFrame | Callable[[Callable[[str], DataFrame]], DataFrame]],
+    gold_path: str,
+    fmt: str = "parquet",
+) -> None:
     """K6 — one table per aggregation under GOLD/{name}
-    (ref: T/silver_to_gold.py:134-151). Gold aggregates are tiny relative
-    to silver; coalesce(1) keeps them single-file for cheap downstream
-    reads (drop the coalesce if a gold table ever grows)."""
-    for name, df in aggregations.items():
-        df.coalesce(1).write.mode("overwrite").format(fmt).save(
-            os.path.join(gold_path, name)
-        )
+    (ref: T/silver_to_gold.py:134-151), written in order. Gold aggregates
+    are tiny relative to silver; coalesce(1) keeps them single-file for
+    cheap downstream reads (drop the coalesce if a gold table ever grows).
+
+    An entry may instead be a function that builds its frame from
+    ``written(name)``, a table written earlier in this call, read back
+    with its known schema (no inference job) as the one partition it was
+    written as: a coarser gold table then rolls up a finer one's few
+    rows in a single task, with no shuffle, rather than re-running the
+    finer one's plan."""
+    frames: dict[str, DataFrame] = {}
+
+    def written(name: str) -> DataFrame:
+        df = frames[name]
+        path = os.path.join(gold_path, name)
+        return read_layer(df.sparkSession, path, fmt=fmt, schema=df.schema).coalesce(1)
+
+    for name, agg in aggregations.items():
+        df = frames[name] = agg if isinstance(agg, DataFrame) else agg(written)
+        df.coalesce(1).write.mode("overwrite").format(fmt).save(os.path.join(gold_path, name))
 
 
 def write_bucketed_table(

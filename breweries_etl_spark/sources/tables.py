@@ -156,7 +156,45 @@ def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = N
         df.createOrReplaceTempView(n)
 
 
-def read_layer(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+def read_layer(
+    spark: SparkSession, path: str, fmt: str = "parquet", schema: StructType | None = None
+) -> DataFrame:
     """S5/S6 — read a medallion layer; partitioned layers (silver) get
-    automatic partition discovery + pruning."""
-    return spark.read.format(fmt).load(path)
+    automatic partition discovery + pruning.
+
+    With a declared ``schema`` (``schemas.BRONZE_SCHEMA``,
+    ``schemas.SILVER_SCHEMA``) the read launches no schema-inference
+    job. Delta ignores it and reads its schema from the table log."""
+    reader = spark.read.format(fmt)
+    if schema is not None and fmt != "delta":
+        reader = reader.schema(schema)
+    return reader.load(path)
+
+
+def stored_columns(spark: SparkSession, path: str, fmt: str = "parquet") -> list[str]:
+    """The column names a layer's files actually hold, for validation
+    against a layer read with a declared schema (which would report a
+    missing column as all NULLs instead).
+
+    For a local parquet or ORC layer, the footer of its first data file
+    (pyarrow, on the driver, no Spark job); an existing directory with
+    no data file holds no columns. Partition columns live in directory
+    names, not footers, and are not reported. Anything else asks Spark
+    for the stored schema: Delta reads its log, a remote path is
+    inferred."""
+    if fmt in ("parquet", "orc") and os.path.isdir(path):
+        for dirpath, dirs, names in os.walk(path):
+            dirs.sort()
+            for name in sorted(names):
+                if name.startswith(("_", ".")):  # markers and checksums
+                    continue
+                file = os.path.join(dirpath, name)
+                if fmt == "parquet":
+                    import pyarrow.parquet as pq
+
+                    return pq.read_schema(file).names
+                import pyarrow.orc as po
+
+                return po.ORCFile(file).schema.names
+        return []
+    return spark.read.format(fmt).load(path).columns

@@ -143,3 +143,27 @@ def test_write_partitioned_probe_gates_on_no_data_conditions(
     anchored = spark.read.parquet(empty_out)
     assert anchored.count() == 0
     assert set(anchored.columns) == {"id", "location", "v"}
+
+
+def test_write_partitioned_launches_no_job_after_its_write(spark, tmp_path, monkeypatch, jobs_in):
+    """The post-write probe lists files on the driver: a populated
+    partitioned write launches its jobs inside ``save`` and none after."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    at_save = []
+    real_save = DataFrameWriter.save
+
+    def save(self, *args, **kwargs):
+        real_save(self, *args, **kwargs)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        at_save.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(DataFrameWriter, "save", save)
+    df = spark.createDataFrame(
+        [Row(id=str(i), location="USA" if i % 2 else "CANADA", v=i) for i in range(20)]
+    )
+    out = str(tmp_path / "silver")
+    _, jobs = jobs_in(lambda: write_partitioned(df, out, ["location"], files_per_partition=2))
+    assert len(at_save) == 1 and jobs == at_save[0]
