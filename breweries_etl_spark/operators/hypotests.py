@@ -367,6 +367,121 @@ def multigroup_value_prefix_counts(
     return out
 
 
+def _totals(pc: DataFrame) -> tuple:
+    """``(n_a, n_b, nn, nn_v)`` of a ``grouped_value_prefix_counts``
+    relation: the group totals and their sum as LITERAL long columns,
+    plus the sum as a Python int (None on an empty relation).
+
+    The totals ride out of the primitive's one collect (r13), so
+    inlining them costs no totals broadcast-subquery job + BNLJ per
+    query — the old ``pc.agg(...)`` broadcast subquery RE-RAN the whole
+    bucketed prefix pipeline (exchange + windows + join) as its own
+    job."""
+    tot_a = pc._tot_a  # type: ignore[attr-defined]
+    tot_b = pc._tot_b  # type: ignore[attr-defined]
+    nn_v = None if tot_a is None else tot_a + tot_b
+    return _lit_long(tot_a), _lit_long(tot_b), _lit_long(nn_v), nn_v
+
+
+def _ecdf_gap(n_a: Column, n_b: Column) -> Column:
+    """The signed ECDF gap (F_A − F_B)·n_a·n_b at each distinct value
+    as the INTEGER cum_a·n_b − cum_b·n_a, decimal-widened so n² cannot
+    overflow at 100 TB scale."""
+    d19 = "decimal(19,0)"
+    return F.col("cum_a").cast(d19) * n_b.cast(d19) - F.col("cum_b").cast(
+        d19
+    ) * n_a.cast(d19)
+
+
+def _with_totals(fold: DataFrame, n_a: Column, n_b: Column, *stats) -> DataFrame:
+    """The one-row ``fold`` with the literal totals in front:
+    ``(n_a, n_b, *stats)``."""
+    return fold.select(n_a.alias("n_a"), n_b.alias("n_b"), *stats)
+
+
+def _pooled_block() -> tuple:
+    """``(c, cum, lo)`` of the pooled tied block at each distinct value:
+    its size, its last and its first sorted position (decimal(19,0))."""
+    d19 = "decimal(19,0)"
+    c = (F.col("ca") + F.col("cb")).cast(d19)
+    cum = (F.col("cum_a") + F.col("cum_b")).cast(d19)
+    return c, cum, cum - c + F.lit(1).cast(d19)
+
+
+def _ansari_block_total(lo: Column, hi: Column, nn_v, lit_nn: Column) -> Column:
+    """DOUBLED Ansari–Bradley score total 2·S_v of the tied block at
+    positions lo..hi: Σ min(p, n+1−p) split into two arithmetic series
+    around the midpoint t = ⌊(n+1)/2⌋, (lo+b₁)·len₁ + 2(n+1)·len₂ −
+    (a₂+hi)·len₂ — pure integer decimal, no division. The midpoint
+    embeds nn as a SQL long literal (`or 0` only guards the empty
+    relation, where no row evaluates it)."""
+    d19 = "decimal(19,0)"
+    d38 = "decimal(38,0)"
+    t = F.expr(f"({nn_v or 0}L + 1L) div 2L").cast(d19)
+    np1 = (lit_nn + F.lit(1)).cast(d19)
+    b1 = F.least(hi, t)
+    len1 = F.greatest(b1 - lo + F.lit(1).cast(d19), F.lit(0).cast(d19))
+    a2 = F.greatest(lo, t + F.lit(1).cast(d19))
+    len2 = F.greatest(hi - a2 + F.lit(1).cast(d19), F.lit(0).cast(d19))
+    return (
+        ((lo + b1) * len1).cast(d38)
+        + (F.lit(2).cast(d19) * np1 * len2).cast(d38)
+        - ((a2 + hi) * len2).cast(d38)
+    )
+
+
+def _block_score_folds(score: Column, c: Column) -> tuple:
+    """``(w_fp, aa_fp)`` per-value fixed-point terms of a linear rank
+    statistic whose tied block of c positions scores ``score`` in
+    total: each of the block's ca A-members gets the block-average
+    score, so W folds as floor(10⁶·ca·(score/c)) and Σa² as
+    floor(10⁶·score²/c)."""
+    cd = c.cast("double")
+    w_fp = F.floor(
+        F.lit(1e6) * F.col("ca").cast("double") * (score / cd)
+    ).cast("decimal(38,0)")
+    aa_fp = F.floor(F.lit(1e6) * score * (score / cd)).cast("decimal(38,0)")
+    return w_fp, aa_fp
+
+
+def _closing_row(fold: DataFrame, *stats) -> DataFrame:
+    """The output row of a two-sample test: the group totals ``n_a`` and
+    ``n_b`` as longs, then ``stats``."""
+    return fold.select(
+        F.col("n_a").cast("long").alias("n_a"),
+        F.col("n_b").cast("long").alias("n_b"),
+        *stats,
+    )
+
+
+def _linear_rank_moments(sa: Column, saa: Column) -> tuple:
+    """Hollander–Wolfe tied-variance moments ``(E, Var)`` of a linear
+    rank statistic over the scores actually assigned, read off a fold
+    with ``n_a``/``n_b``/``nn`` columns: E = n_a·ā with ā = Σa/N,
+    Var = n_a·n_b·(N·Σa² − (Σa)²)/(N²(N−1))."""
+    na = F.col("n_a").cast("double")
+    nb = F.col("n_b").cast("double")
+    n = F.col("nn").cast("double")
+    mean = na * (sa / n)
+    var = na * nb * (n * saa - sa * sa) / (n * n * (n - F.lit(1.0)))
+    return mean, var
+
+
+def _linear_rank_test(
+    folded: DataFrame, w: Column, sa: Column, saa: Column, stat: str
+) -> DataFrame:
+    """Close a linear rank test: one row (n_a, n_b, ``stat``, z_score)
+    with z = (W − E)/√Var from ``_linear_rank_moments``, NULL when a
+    group is empty or the variance vanishes."""
+    mean, var = _linear_rank_moments(sa, saa)
+    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0) & (var > 0)
+    return _closing_row(
+        folded,
+        F.round(w, 6).alias(stat),
+        F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
+    )
+
+
 @lifecycle.operator
 def ks_test_2samp(
     df: DataFrame,
@@ -385,28 +500,19 @@ def ks_test_2samp(
     divided once by n_a·n_b at the end. No floating comparison decides
     the max, so the result is partition- and engine-independent."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # group totals inlined as literals from the primitive's one collect
-    # (r13): no totals broadcast-subquery job + BNLJ per query.
-    n_a = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    n_b = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    d19 = "decimal(19,0)"
-    gap = F.abs(
-        F.col("cum_a").cast(d19) * n_b.cast(d19)
-        - F.col("cum_b").cast(d19) * n_a.cast(d19)
+    n_a, n_b, _, _ = _totals(pc)
+    gap = F.abs(_ecdf_gap(n_a, n_b))
+    stat = _with_totals(
+        pc.agg(F.max(gap).alias("ks_int")), n_a, n_b, F.col("ks_int")
     )
-    stat = pc.agg(F.max(gap).alias("ks_int")).select(
-        n_a.alias("n_a"), n_b.alias("n_b"), F.col("ks_int")
-    )
-    result = stat.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        stat,
         F.round(
             dec_double_wide(F.col("ks_int"))
             / (F.col("n_a").cast("double") * F.col("n_b").cast("double")),
             6,
         ).alias("ks_stat"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -455,13 +561,11 @@ def mann_whitney_u(
             - dec_double_wide(F.col("ties3")) / (n * (n - F.lit(1.0)))
         )
     )
-    result = sums.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        sums,
         u.alias("u_stat"),
         F.when(var > 0, F.round((u - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -481,10 +585,9 @@ def global_ecdf(
     integers. Output is one row per distinct value (counts carried, so
     the full per-row feature is a broadcast-free join away)."""
     pc = grouped_value_prefix_counts(df, value_col, F.lit(True), n_buckets)
-    # total inlined from the primitive's collect (r13) — no broadcast
-    # subquery job per query; see ks_test_2samp.
-    n = _lit_long(pc._tot_a).cast("double")  # type: ignore[attr-defined]
-    result = pc.withColumn("n", _lit_long(pc._tot_a)).select(  # type: ignore[attr-defined]
+    lit_n, _, _, _ = _totals(pc)
+    n = lit_n.cast("double")
+    result = pc.withColumn("n", lit_n).select(
         F.col("v"),
         F.col("ca").cast("long").alias("n_rows"),
         F.col("cum_a").cast("long").alias("cum_n"),
@@ -1604,16 +1707,9 @@ def score_decile_lift(
     lift = tile rate / overall rate and cum_gain = share of all
     positives captured at or above the tile."""
     pc = grouped_value_prefix_counts(df, score_col, label_expr)
-    # totals inlined from the primitive's collect (r13): tp/tn become
-    # literals (the tile expression embeds tn as a SQL integer literal —
-    # `or 1` only guards the empty relation, where no row evaluates it);
-    # no totals broadcast-subquery job + BNLJ. See ks_test_2samp.
-    tp_v = pc._tot_a  # type: ignore[attr-defined]
-    tn_v = (
-        None
-        if tp_v is None
-        else tp_v + pc._tot_b  # type: ignore[attr-defined]
-    )
+    # the tile expression embeds tn as a SQL integer literal (`or 1`
+    # only guards the empty relation, where no row evaluates it)
+    lit_tp, _, lit_tn, tn_v = _totals(pc)
     cum = (F.col("cum_a") + F.col("cum_b")).cast("long")
     tiles = (
         pc.withColumn("cum_all", cum)
@@ -1626,8 +1722,8 @@ def score_decile_lift(
             F.sum(F.col("ca") + F.col("cb")).alias("n"),
             F.sum("ca").alias("n_pos"),
         )
-        .withColumn("tp", _lit_long(tp_v))
-        .withColumn("tn", _lit_long(tn_v))
+        .withColumn("tp", lit_tp)
+        .withColumn("tn", lit_tn)
     )
     w = Window.orderBy(F.col("tile").desc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -2115,7 +2211,7 @@ def moods_median_test(
     pc = value_prefix_counts(base, "v")
     # total count inlined from the primitive's collect (r13) — the old
     # broadcast-subquery re-read the persisted value-count relation as
-    # its own job; see ks_test_2samp.
+    # its own job; see _totals.
     med = pc.filter(
         F.lit(2) * F.col("cum") >= _lit_long(pc._tot)  # type: ignore[attr-defined]
     ).agg(F.min("v").alias("med"))
@@ -2194,34 +2290,24 @@ def cvm_test_2samp(
     sub-picounit detail dropped identically on every engine. Output one
     row: (n_a, n_b, cvm_t)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # group totals inlined as literals from the primitive's one collect
-    # (r13) — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    d19 = "decimal(19,0)"
-    g_int = (
-        F.col("cum_a").cast(d19) * lit_nb.cast(d19)
-        - F.col("cum_b").cast(d19) * lit_na.cast(d19)
-    )
+    lit_na, lit_nb, _, _ = _totals(pc)
     na = lit_na.cast("double")
     nb = lit_nb.cast("double")
-    gap = dec_double_wide(F.abs(g_int)) / (na * nb)
+    gap = dec_double_wide(F.abs(_ecdf_gap(lit_na, lit_nb))) / (na * nb)
     c = (F.col("ca") + F.col("cb")).cast("double")
     term = F.floor(c * gap * gap * F.lit(1e12)).cast("decimal(38,0)")
-    sums = pc.agg(F.sum(term).alias("t_fp")).select(
-        lit_na.alias("n_a"), lit_nb.alias("n_b"), F.col("t_fp")
+    sums = _with_totals(
+        pc.agg(F.sum(term).alias("t_fp")), lit_na, lit_nb, F.col("t_fp")
     )
     nn = na + nb
-    result = sums.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        sums,
         F.round(
             (na * nb / (nn * nn))
             * (F.col("t_fp").cast("double") / F.lit(1e12)),
             6,
         ).alias("cvm_t"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -2246,9 +2332,7 @@ def anderson_darling_2samp(
     The top value (H = 1) is excluded before the division. Output one
     row: (n_a, n_b, ad_stat)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals (r13) — see ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
+    lit_na, lit_nb, _, _ = _totals(pc)
     na = lit_na.cast("double")
     nb = lit_nb.cast("double")
     nn = na + nb
@@ -2261,17 +2345,15 @@ def anderson_darling_2samp(
         hh > 0,
         F.floor(c * d * d / hh * F.lit(1e9)).cast("decimal(38,0)"),
     )
-    sums = pc.agg(F.sum(term).alias("a_fp")).select(
-        lit_na.alias("n_a"), lit_nb.alias("n_b"), F.col("a_fp")
+    sums = _with_totals(
+        pc.agg(F.sum(term).alias("a_fp")), lit_na, lit_nb, F.col("a_fp")
     )
-    result = sums.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        sums,
         F.round(
             na / nb * (dec_double_wide(F.col("a_fp")) / F.lit(1e9)), 6
         ).alias("ad_stat"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -2308,9 +2390,8 @@ def cliffs_delta(
     )
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
-    result = sums.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        sums,
         F.col("n_gt").cast("long").alias("n_gt"),
         F.col("n_lt").cast("long").alias("n_lt"),
         F.when(
@@ -2322,7 +2403,6 @@ def cliffs_delta(
             ),
         ).alias("cliffs_delta"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -2969,69 +3049,23 @@ def ansari_bradley(
     documented envelope). Output one row:
     (n_a, n_b, ab_stat, z_score)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    d19 = "decimal(19,0)"
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp. The
-    # midpoint embeds nn as a SQL long literal (`or 0` only guards the
-    # empty relation, where no row evaluates it).
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    nn_v = (
-        None
-        if pc._tot_a is None  # type: ignore[attr-defined]
-        else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-    )
-    lit_nn = _lit_long(nn_v)
-    c = (F.col("ca") + F.col("cb")).cast(d19)
-    cum = (F.col("cum_a") + F.col("cum_b")).cast(d19)
-    lo = cum - c + F.lit(1).cast(d19)
-    hi = cum
-    t = F.expr(f"({nn_v or 0}L + 1L) div 2L").cast(d19)
-    np1 = (lit_nn + F.lit(1)).cast(d19)
-    b1 = F.least(hi, t)
-    len1 = F.greatest(b1 - lo + F.lit(1).cast(d19), F.lit(0).cast(d19))
-    a2 = F.greatest(lo, t + F.lit(1).cast(d19))
-    len2 = F.greatest(hi - a2 + F.lit(1).cast(d19), F.lit(0).cast(d19))
-    s2v = (
-        ((lo + b1) * len1).cast("decimal(38,0)")
-        + (F.lit(2).cast(d19) * np1 * len2).cast("decimal(38,0)")
-        - ((a2 + hi) * len2).cast("decimal(38,0)")
-    )
-    s_v = dec_double_wide(s2v) / F.lit(2.0)
-    term_fp = F.floor(
-        F.lit(1e6) * F.col("ca").cast("double") * (s_v / c.cast("double"))
-    ).cast("decimal(38,0)")
-    aa_fp = F.floor(
-        F.lit(1e6) * s_v * (s_v / c.cast("double"))
-    ).cast("decimal(38,0)")
-    folded = pc.agg(
+    lit_na, lit_nb, lit_nn, nn_v = _totals(pc)
+    c, cum, lo = _pooled_block()
+    s2v = _ansari_block_total(lo, cum, nn_v, lit_nn)
+    term_fp, aa_fp = _block_score_folds(dec_double_wide(s2v) / F.lit(2.0), c)
+    sums = pc.agg(
         F.sum(term_fp).alias("w_fp"),
         F.sum(s2v).alias("s2_sum"),
         F.sum(aa_fp).alias("aa_fp"),
-    ).select(
-        lit_na.alias("n_a"),
-        lit_nb.alias("n_b"),
-        lit_nn.alias("nn"),
-        "w_fp",
-        "s2_sum",
-        "aa_fp",
     )
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    n = F.col("nn").cast("double")
-    w = dec_double_wide(F.col("w_fp")) / F.lit(1e6)
-    sa = dec_double_wide(F.col("s2_sum")) / F.lit(2.0)
-    saa = dec_double_wide(F.col("aa_fp")) / F.lit(1e6)
-    mean = na * (sa / n)
-    var = na * nb * (n * saa - sa * sa) / (n * n * (n - F.lit(1.0)))
-    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0) & (var > 0)
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.round(w, 6).alias("ab_stat"),
-        F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
+    folded = _with_totals(sums, lit_na, lit_nb, lit_nn.alias("nn"), "*")
+    return _linear_rank_test(
+        folded,
+        dec_double_wide(F.col("w_fp")) / F.lit(1e6),
+        dec_double_wide(F.col("s2_sum")) / F.lit(2.0),
+        dec_double_wide(F.col("aa_fp")) / F.lit(1e6),
+        "ab_stat",
     )
-    return result
 
 
 @lifecycle.operator
@@ -3061,14 +3095,7 @@ def pr_curve_points(
     round-6 ratios. Output n_points rows:
     (decile, threshold, n_pred_pos, tp, precision, recall, f1)."""
     pc = grouped_value_prefix_counts(df, score_col, label_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_npos = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_n = _lit_long(
-        None
-        if pc._tot_a is None  # type: ignore[attr-defined]
-        else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-    )
+    lit_npos, _, lit_n, _ = _totals(pc)
     ks = F.array(*[F.lit(k) for k in range(1, n_points + 1)])
     cum = F.col("cum_a") + F.col("cum_b")
     c = F.col("ca") + F.col("cb")
@@ -3217,14 +3244,7 @@ def average_precision(
     floor(10⁶·ca·P) fixed point (deterministic IEEE on both engines).
     Output one row: (n_pos, n_neg, average_precision)."""
     pc = grouped_value_prefix_counts(df, score_col, label_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_npos = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_n = _lit_long(
-        None
-        if pc._tot_a is None  # type: ignore[attr-defined]
-        else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-    )
+    lit_npos, _, lit_n, _ = _totals(pc)
     cum = F.col("cum_a") + F.col("cum_b")
     c = F.col("ca") + F.col("cb")
     ge_pos = (lit_npos - (F.col("cum_a") - F.col("ca"))).cast("double")
@@ -3421,12 +3441,8 @@ def yuen_trimmed_t(
         cents.alias("__v"), group_expr.alias("__g")
     )
     pc = grouped_value_prefix_counts(base, "__v", F.col("__g"), n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lits = {
-        "a": _lit_long(pc._tot_a),  # type: ignore[attr-defined]
-        "b": _lit_long(pc._tot_b),  # type: ignore[attr-defined]
-    }
+    lit_na, lit_nb, _, _ = _totals(pc)
+    lits = {"a": lit_na, "b": lit_nb}
     d19 = "decimal(19,0)"
     d38 = "decimal(38,0)"
     vi = F.col("v").cast(d19)
@@ -3451,10 +3467,9 @@ def yuen_trimmed_t(
         vhi = F.min(F.when(cum >= hi, vi)).alias(f"vhi_{side}")
         return [tsum, tsumsq, vlo, vhi]
 
-    folded = pc.agg(
-        *side_moments("a"),
-        *side_moments("b"),
-    ).select(lits["a"].alias("n_a"), lits["b"].alias("n_b"), "*")
+    folded = _with_totals(
+        pc.agg(*side_moments("a"), *side_moments("b")), lit_na, lit_nb, "*"
+    )
 
     def close(side: str):
         n = F.col(f"n_{side}").cast("double")
@@ -3479,9 +3494,8 @@ def yuen_trimmed_t(
         d_a * d_a / (h_a - F.lit(1.0)) + d_b * d_b / (h_b - F.lit(1.0))
     )
     ok = (h_a > 1) & (h_b > 1) & (se2 > 0)
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        folded,
         h_a.cast("long").alias("h_a"),
         h_b.cast("long").alias("h_b"),
         F.round(tm_a, 6).alias("tmean_a"),
@@ -3489,7 +3503,6 @@ def yuen_trimmed_t(
         F.when(ok, F.round(t, 6)).alias("yuen_t"),
         F.when(ok, F.round(dof, 6)).alias("df"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -3511,32 +3524,25 @@ def kuiper_test_2samp(
     division by n_a·n_b. Output one row:
     (n_a, n_b, d_plus, d_minus, kuiper_v)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    d19 = "decimal(19,0)"
-    signed = F.col("cum_a").cast(d19) * lit_nb.cast(d19) - F.col(
-        "cum_b"
-    ).cast(d19) * lit_na.cast(d19)
+    lit_na, lit_nb, _, _ = _totals(pc)
+    signed = _ecdf_gap(lit_na, lit_nb)
     z = F.lit(0).cast("decimal(38,0)")
     stat = pc.agg(
         F.greatest(F.max(signed.cast("decimal(38,0)")), z).alias("dp_int"),
         F.greatest(F.max((-signed).cast("decimal(38,0)")), z).alias(
             "dm_int"
         ),
-    ).select(lit_na.alias("n_a"), lit_nb.alias("n_b"), "dp_int", "dm_int")
+    )
+    stat = _with_totals(stat, lit_na, lit_nb, "dp_int", "dm_int")
     nn = F.col("n_a").cast("double") * F.col("n_b").cast("double")
     dp = dec_double_wide(F.col("dp_int")) / nn
     dm = dec_double_wide(F.col("dm_int")) / nn
-    result = stat.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        stat,
         F.round(dp, 6).alias("d_plus"),
         F.round(dm, 6).alias("d_minus"),
         F.round(dp + dm, 6).alias("kuiper_v"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -3967,15 +3973,9 @@ def hellinger_bhattacharyya(
     Output one row: (n_a, n_b, n_bins_used, bhattacharyya,
     hellinger)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp. The
-    # bin expression embeds na+nb as a SQL long literal (`or 1` only
-    # guards the empty relation, where no row evaluates it).
-    na_v = pc._tot_a  # type: ignore[attr-defined]
-    nb_v = pc._tot_b  # type: ignore[attr-defined]
-    nn_v = None if na_v is None else na_v + nb_v
-    lit_na = _lit_long(na_v)
-    lit_nb = _lit_long(nb_v)
+    # the bin expression embeds na+nb as a SQL long literal (`or 1`
+    # only guards the empty relation, where no row evaluates it)
+    lit_na, lit_nb, _, nn_v = _totals(pc)
     cells = (
         pc.select(
             F.expr(
@@ -4001,9 +4001,8 @@ def hellinger_bhattacharyya(
     )
     bc = F.col("bc").cast("double")
     ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        folded,
         F.col("n_bins_used").cast("long").alias("n_bins_used"),
         F.when(ok, F.round(bc, 6)).alias("bhattacharyya"),
         F.when(
@@ -4306,7 +4305,7 @@ def robust_shape_profile(df: DataFrame, value_col: str) -> DataFrame:
         "v",
     )
     # total inlined as a literal from the primitive's collect (r13) —
-    # no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
+    # no totals broadcast-subquery job + BNLJ; see _totals.
     lit_n = _lit_long(pc._tot)  # type: ignore[attr-defined]
     agg = pc.agg(
         *[
@@ -4571,7 +4570,7 @@ def ad_ksample(
     # group totals inlined as literals from the primitive's one collect
     # (r13) — no totals broadcast-subquery job + BNLJ, and the
     # standardized branch reuses nn_v instead of collecting a totals
-    # row a second time; see ks_test_2samp.
+    # row a second time; see _totals.
     tots = mg._tots  # type: ignore[attr-defined]
     nn_v = None if tots[0] is None else sum(tots)
     lit_nn = _lit_long(nn_v)
@@ -4941,11 +4940,7 @@ def wasserstein_1(
     segment term folds as exact decimal gap·Δz before one closing
     division. Output one row: (n_a, n_b, wasserstein_1)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    d19 = "decimal(19,0)"
+    lit_na, lit_nb, _, _ = _totals(pc)
     w = Window.orderBy("v")
     seg = pc.select(
         "v",
@@ -4953,10 +4948,7 @@ def wasserstein_1(
         "cum_b",
         F.lead("v").over(w).alias("v_next"),
     ).filter(F.col("v_next").isNotNull())
-    gap = F.abs(
-        F.col("cum_a").cast(d19) * lit_nb.cast(d19)
-        - F.col("cum_b").cast(d19) * lit_na.cast(d19)
-    )
+    gap = F.abs(_ecdf_gap(lit_na, lit_nb))
     dz = (
         F.col("v_next").cast("decimal(18,2)")
         - F.col("v").cast("decimal(18,2)")
@@ -4966,12 +4958,11 @@ def wasserstein_1(
     # distinct values seg is empty and w_sum folds to NULL while the
     # totals stay intact — the correct answer is (n_a, n_b, 0.0), the
     # hill_tail_index empty-relation lesson (round-9 self-audit).
-    folded = seg.agg(F.sum(term).alias("w_sum")).select(
-        lit_na.alias("n_a"), lit_nb.alias("n_b"), "w_sum"
+    folded = _with_totals(
+        seg.agg(F.sum(term).alias("w_sum")), lit_na, lit_nb, "w_sum"
     )
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        folded,
         F.when(
             (F.col("n_a") > 0) & (F.col("n_b") > 0),
             F.round(
@@ -4986,7 +4977,6 @@ def wasserstein_1(
             ),
         ).alias("wasserstein_1"),
     )
-    return result
 
 
 def energy_distance(
@@ -5088,10 +5078,7 @@ def qq_fit(
     with round-6/round-12 portable folds. Output one row:
     (n_a, n_b, n_points, slope, intercept, r2)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
+    lit_na, lit_nb, _, _ = _totals(pc)
     kgrid = pc.agg(
         *[
             F.min(
@@ -5151,9 +5138,8 @@ def qq_fit(
     syy_c = dec_double_wide_frac(F.col("syy")) - sy * sy / npd
     slope = sxy_c / sxx_c
     ok = (F.col("np") > 1) & (sxx_c > 0)
-    result = mom.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        mom,
         F.col("np").cast("long").alias("n_points"),
         F.when(ok, F.round(slope, 6)).alias("slope"),
         F.when(ok, F.round((sy - slope * sx) / npd, 6)).alias("intercept"),
@@ -5162,7 +5148,6 @@ def qq_fit(
             F.round(sxy_c * sxy_c / (sxx_c * syy_c), 6),
         ).alias("r2"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -5230,9 +5215,8 @@ def brunner_munzel(
     r_ca = t_a / (F.lit(2.0) * na)
     r_cb = t_b / (F.lit(2.0) * nb)
     var = na * s2_a + nb * s2_b
-    result = agg.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        agg,
         F.when(
             (F.col("n_a") > 0) & (F.col("n_b") > 0),
             F.round((r_cb - (nb + F.lit(1.0)) / F.lit(2.0)) / na, 6),
@@ -5242,7 +5226,6 @@ def brunner_munzel(
             F.round(na * nb * (r_cb - r_ca) / (nn * F.sqrt(var)), 6),
         ).alias("bm_stat"),
     )
-    return result
 
 
 def theil_l_atkinson(
@@ -5742,11 +5725,7 @@ def youden_j(
     never negative. Output one row: (n_pos, n_neg, best_threshold,
     tpr, fpr, youden_j)."""
     pc = grouped_value_prefix_counts(df, score_col, label_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13):
-    # the old pc.agg(...) broadcast subquery RE-RAN the whole bucketed
-    # prefix pipeline as its own job. See ks_test_2samp.
-    lit_npos = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nneg = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
+    lit_npos, lit_nneg, _, _ = _totals(pc)
     d19 = "decimal(19,0)"
     jnum = (
         lit_nneg.cast(d19)
@@ -5816,15 +5795,8 @@ def bws_test(
     ordinal domains should prefer ``cvm_test``/``ad_ksample``.
     Output one row: (n_a, n_b, b_a, b_b, bws_b)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13):
-    # the old pc.agg(...) broadcast subquery RE-RAN the whole bucketed
-    # prefix pipeline (exchange + windows + join) as its own job — the
-    # worst of the totals shapes. See ks_test_2samp.
-    base = pc.withColumn(
-        "n_a", _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    ).withColumn(
-        "n_b", _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    )
+    lit_na, lit_nb, _, _ = _totals(pc)
+    base = pc.withColumn("n_a", lit_na).withColumn("n_b", lit_nb)
     mid2 = (
         F.lit(2) * (F.col("cum_a") + F.col("cum_b"))
         - (F.col("ca") + F.col("cb"))
@@ -6019,24 +5991,11 @@ def mood_dispersion(
     both engines. Output one row: (n_a, n_b, t_stat, expected_t,
     z_score)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13):
-    # the old pc.agg(...) broadcast subquery RE-RAN the whole bucketed
-    # prefix pipeline as its own job. See ks_test_2samp.
+    lit_na, lit_nb, lit_nn, _ = _totals(pc)
     base = (
-        pc.withColumn(
-            "n_a", _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-        )
-        .withColumn(
-            "n_b", _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-        )
-        .withColumn(
-            "nn",
-            _lit_long(
-                None
-                if pc._tot_a is None  # type: ignore[attr-defined]
-                else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-            ),
-        )
+        pc.withColumn("n_a", lit_na)
+        .withColumn("n_b", lit_nb)
+        .withColumn("nn", lit_nn)
     )
     l_v = F.col("ca") + F.col("cb")
     mid2 = (
@@ -6075,9 +6034,8 @@ def mood_dispersion(
     sqq = dec_double_wide(F.col("sqq_fp")) / F.lit(1e12)
     e_t = na * sq / nn
     var_t = na * nb / (nn * (nn - F.lit(1.0))) * (sqq - sq * sq / nn)
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        folded,
         F.round(t_stat, 6).alias("t_stat"),
         F.when(F.col("nn") > 0, F.round(e_t, 6)).alias("expected_t"),
         F.when(
@@ -6085,7 +6043,6 @@ def mood_dispersion(
             F.round((t_stat - e_t) / F.sqrt(var_t), 6),
         ).alias("z_score"),
     )
-    return result
 
 
 def welch_anova(
@@ -6279,7 +6236,7 @@ def van_der_waerden(
         lsum = c if lsum is None else lsum + c
         msum = m_c if msum is None else msum + m_c
     # group totals inlined as literals from the primitive's one collect
-    # (r13) — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
+    # (r13) — no totals broadcast-subquery job + BNLJ; see _totals.
     tots = mg._tots  # type: ignore[attr-defined]
     nn_v = None if tots[0] is None else sum(tots)
     lit_nn = _lit_long(nn_v)
@@ -6366,8 +6323,7 @@ def fligner_killeen(
         df, value_col, group_col, groups, n_buckets
     )
     # group totals inlined as literals from the primitive's one collect
-    # (r13) — no totals broadcast-subquery job + BNLJ per pass; see
-    # ks_test_2samp.
+    # (r13) — no totals broadcast-subquery job + BNLJ per pass; see _totals.
     tots1 = mg1._tots  # type: ignore[attr-defined]
     vd = F.col("v").cast("double")
     med_aggs = []
@@ -6517,24 +6473,11 @@ def cucconi_test(
     agree bit-for-bit into the closing double sequence. Output one
     row: (n_a, n_b, u_stat, v_stat, cucconi_c)."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
-    # totals inlined as literals from the primitive's one collect (r13):
-    # the old pc.agg(...) broadcast subquery RE-RAN the whole bucketed
-    # prefix pipeline as its own job. See ks_test_2samp.
+    lit_na, lit_nb, lit_nn, _ = _totals(pc)
     base = (
-        pc.withColumn(
-            "n_a", _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-        )
-        .withColumn(
-            "n_b", _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-        )
-        .withColumn(
-            "nn",
-            _lit_long(
-                None
-                if pc._tot_a is None  # type: ignore[attr-defined]
-                else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-            ),
-        )
+        pc.withColumn("n_a", lit_na)
+        .withColumn("n_b", lit_nb)
+        .withColumn("nn", lit_nn)
     )
     l_v = F.col("ca") + F.col("cb")
     mid2 = (
@@ -6574,9 +6517,8 @@ def cucconi_test(
     c_stat = (u * u + v * v - F.lit(2.0) * rho * u * v) / (
         F.lit(2.0) * (F.lit(1.0) - rho * rho)
     )
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        folded,
         F.when(F.col("nn") > 1, F.round(u, 6)).alias("u_stat"),
         F.when(F.col("nn") > 1, F.round(v, 6)).alias("v_stat"),
         F.when(
@@ -6584,7 +6526,6 @@ def cucconi_test(
             F.round(c_stat, 6),
         ).alias("cucconi_c"),
     )
-    return result
 
 
 @lifecycle.operator
@@ -6616,52 +6557,19 @@ def lepage_test(
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
     d19 = "decimal(19,0)"
     d38 = "decimal(38,0)"
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; the midpoint embeds nn
-    # as a SQL long literal (`or 0` only guards the empty relation,
-    # where no row evaluates it). See ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    nn_v = (
-        None
-        if pc._tot_a is None  # type: ignore[attr-defined]
-        else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-    )
-    lit_nn = _lit_long(nn_v)
-    c = (F.col("ca") + F.col("cb")).cast(d19)
-    cum = (F.col("cum_a") + F.col("cum_b")).cast(d19)
+    lit_na, lit_nb, lit_nn, nn_v = _totals(pc)
+    c, cum, lo = _pooled_block()
     u = F.lit(2).cast(d19) * cum - c + F.lit(1).cast(d19)
-    lo = cum - c + F.lit(1).cast(d19)
-    hi = cum
-    t = F.expr(f"({nn_v or 0}L + 1L) div 2L").cast(d19)
-    np1 = (lit_nn + F.lit(1)).cast(d19)
-    b1 = F.least(hi, t)
-    len1 = F.greatest(b1 - lo + F.lit(1).cast(d19), F.lit(0).cast(d19))
-    a2 = F.greatest(lo, t + F.lit(1).cast(d19))
-    len2 = F.greatest(hi - a2 + F.lit(1).cast(d19), F.lit(0).cast(d19))
-    s2v = (
-        ((lo + b1) * len1).cast(d38)
-        + (F.lit(2).cast(d19) * np1 * len2).cast(d38)
-        - ((a2 + hi) * len2).cast(d38)
-    )
-    s_v = dec_double_wide(s2v) / F.lit(2.0)
-    folded = pc.agg(
+    s2v = _ansari_block_total(lo, cum, nn_v, lit_nn)
+    w_fp, aa_fp = _block_score_folds(dec_double_wide(s2v) / F.lit(2.0), c)
+    sums = pc.agg(
         F.sum((F.col("ca").cast(d19) * u).cast(d38)).alias("r2a"),
         F.sum((c * c * c - c).cast(d38)).alias("ties"),
-        F.sum(
-            F.floor(
-                F.lit(1e6)
-                * F.col("ca").cast("double")
-                * (s_v / c.cast("double"))
-            ).cast(d38)
-        ).alias("w_fp"),
+        F.sum(w_fp).alias("w_fp"),
         F.sum(s2v).alias("s2_sum"),
-        F.sum(
-            F.floor(F.lit(1e6) * s_v * (s_v / c.cast("double"))).cast(d38)
-        ).alias("aa_fp"),
-    ).select(
-        lit_na.alias("n_a"), lit_nb.alias("n_b"), lit_nn.alias("nn"), "*"
+        F.sum(aa_fp).alias("aa_fp"),
     )
+    folded = _with_totals(sums, lit_na, lit_nb, lit_nn.alias("nn"), "*")
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     n = F.col("nn").cast("double")
@@ -6677,10 +6585,10 @@ def lepage_test(
         )
     )
     w = dec_double_wide(F.col("w_fp")) / F.lit(1e6)
-    sa = dec_double_wide(F.col("s2_sum")) / F.lit(2.0)
-    saa = dec_double_wide(F.col("aa_fp")) / F.lit(1e6)
-    mean_ab = na * (sa / n)
-    var_ab = na * nb * (n * saa - sa * sa) / (n * n * (n - F.lit(1.0)))
+    mean_ab, var_ab = _linear_rank_moments(
+        dec_double_wide(F.col("s2_sum")) / F.lit(2.0),
+        dec_double_wide(F.col("aa_fp")) / F.lit(1e6),
+    )
     zw = (wa - ew) / F.sqrt(var_w)
     zab = (w - mean_ab) / F.sqrt(var_ab)
     ll = F.round(zw * zw + zab * zab, 6)
@@ -6690,15 +6598,13 @@ def lepage_test(
         & (var_w > 0)
         & (var_ab > 0)
     )
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
+    return _closing_row(
+        folded,
         F.when(ok, F.round(zw, 6)).alias("z_wilcoxon"),
         F.when(ok, F.round(zab, 6)).alias("z_ansari"),
         F.when(ok, ll).alias("lepage_l"),
         F.when(ok, F.round(F.exp(-ll / F.lit(2.0)), 6)).alias("p_value"),
     )
-    return result
 
 
 def dagostino_k2(df: DataFrame, value_col: str) -> DataFrame:
@@ -6882,23 +6788,11 @@ def siegel_tukey(
     st_stat = the A-sample score sum W."""
     pc = grouped_value_prefix_counts(df, value_col, group_expr, n_buckets)
     d19 = "decimal(19,0)"
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; N div 2 embeds nn as a
-    # SQL long literal (`or 0` only guards the empty relation, where no
-    # row evaluates it). See ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    nn_v = (
-        None
-        if pc._tot_a is None  # type: ignore[attr-defined]
-        else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-    )
-    lit_nn = _lit_long(nn_v)
+    # N div 2 embeds nn as a SQL long literal (`or 0` only guards the
+    # empty relation, where no row evaluates it)
+    lit_na, lit_nb, lit_nn, nn_v = _totals(pc)
     one = F.lit(1).cast(d19)
-    two = F.lit(2).cast(d19)
-    c = (F.col("ca") + F.col("cb")).cast(d19)
-    cum = (F.col("cum_a") + F.col("cum_b")).cast(d19)
-    lo = cum - c + one
+    c, cum, lo = _pooled_block()
     hi = cum
     nnd = lit_nn.cast(d19)
     l_half = F.expr(f"{nn_v or 0}L div 2L").cast(d19)
@@ -6937,36 +6831,20 @@ def siegel_tukey(
         + odd2.cast("decimal(38,0)")
     )
     t_v = (t_low + t_mid + t_high).cast("decimal(38,0)")
-    t_d = dec_double_wide(t_v)
-    term_fp = F.floor(
-        F.lit(1e6) * F.col("ca").cast("double") * (t_d / c.cast("double"))
-    ).cast("decimal(38,0)")
-    aa_fp = F.floor(
-        F.lit(1e6) * t_d * (t_d / c.cast("double"))
-    ).cast("decimal(38,0)")
-    folded = pc.agg(
+    term_fp, aa_fp = _block_score_folds(dec_double_wide(t_v), c)
+    sums = pc.agg(
         F.sum(term_fp).alias("w_fp"),
         F.sum(t_v).alias("s_sum"),
         F.sum(aa_fp).alias("aa_fp"),
-    ).select(
-        lit_na.alias("n_a"), lit_nb.alias("n_b"), lit_nn.alias("nn"), "*"
     )
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    n = F.col("nn").cast("double")
-    w = dec_double_wide(F.col("w_fp")) / F.lit(1e6)
-    sa = dec_double_wide(F.col("s_sum"))
-    saa = dec_double_wide(F.col("aa_fp")) / F.lit(1e6)
-    mean = na * (sa / n)
-    var = na * nb * (n * saa - sa * sa) / (n * n * (n - F.lit(1.0)))
-    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0) & (var > 0)
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.round(w, 6).alias("st_stat"),
-        F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
+    folded = _with_totals(sums, lit_na, lit_nb, lit_nn.alias("nn"), "*")
+    return _linear_rank_test(
+        folded,
+        dec_double_wide(F.col("w_fp")) / F.lit(1e6),
+        dec_double_wide(F.col("s_sum")),
+        dec_double_wide(F.col("aa_fp")) / F.lit(1e6),
+        "st_stat",
     )
-    return result
 
 
 @lifecycle.operator
@@ -7023,17 +6901,8 @@ def conover_squared_ranks(
     pc = grouped_value_prefix_counts(
         dev, "u", F.col("__g") == 1, n_buckets
     )
-    # totals inlined as literals from the primitive's one collect (r13)
-    # — no totals broadcast-subquery job + BNLJ; see ks_test_2samp.
-    lit_na = _lit_long(pc._tot_a)  # type: ignore[attr-defined]
-    lit_nb = _lit_long(pc._tot_b)  # type: ignore[attr-defined]
-    lit_nn = _lit_long(
-        None
-        if pc._tot_a is None  # type: ignore[attr-defined]
-        else pc._tot_a + pc._tot_b  # type: ignore[attr-defined]
-    )
-    c = (F.col("ca") + F.col("cb")).cast(d19)
-    cum = (F.col("cum_a") + F.col("cum_b")).cast(d19)
+    lit_na, lit_nb, lit_nn, _ = _totals(pc)
+    c, cum, _ = _pooled_block()
     m2 = (two_cum_m2 := cum + cum - c + F.lit(1).cast(d19))
     m2sq = (m2 * m2).cast(d38)
     # hi/lo split of m2⁴: m2² = a·10⁹ + b → m2⁴ = a²·10¹⁸ + cross,
@@ -7050,35 +6919,24 @@ def conover_squared_ranks(
         (cross - cross_lo) / F.lit(1000000000000000000).cast(d38)
     ).cast(d38)
     q_hi = ((a_hi * a_hi).cast(d38) + cross_hi).cast(d38)
-    folded = pc.agg(
+    sums = pc.agg(
         F.sum((F.col("ca").cast(d19) * m2sq).cast(d38)).alias("t4"),
         F.sum((c * m2sq).cast(d38)).alias("s4"),
         F.sum((c * q_hi).cast(d38)).alias("q16_hi"),
         F.sum((c * cross_lo).cast(d38)).alias("q16_lo"),
-    ).select(
-        lit_na.alias("n_a"), lit_nb.alias("n_b"), lit_nn.alias("nn"), "*"
     )
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    n = F.col("nn").cast("double")
-    t_stat = dec_double_wide(F.col("t4")) / F.lit(4.0)
-    sa = dec_double_wide(F.col("s4")) / F.lit(4.0)
+    folded = _with_totals(sums, lit_na, lit_nb, lit_nn.alias("nn"), "*")
     saa = (
         dec_double_wide(F.col("q16_hi")) * F.lit(1e18)
         + dec_double_wide(F.col("q16_lo"))
     ) / F.lit(16.0)
-    mean = na * (sa / n)
-    var = na * nb * (n * saa - sa * sa) / (n * n * (n - F.lit(1.0)))
-    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0) & (var > 0)
-    result = folded.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.round(t_stat, 6).alias("t_stat"),
-        F.when(ok, F.round((t_stat - mean) / F.sqrt(var), 6)).alias(
-            "z_score"
-        ),
+    return _linear_rank_test(
+        folded,
+        dec_double_wide(F.col("t4")) / F.lit(4.0),
+        dec_double_wide(F.col("s4")) / F.lit(4.0),
+        saa,
+        "t_stat",
     )
-    return result
 
 
 @lifecycle.operator
