@@ -10,6 +10,9 @@ with every checkpoint-and-free operator re-wrapped, INSIDE THIS TOOL
 ONLY, to hand its caches over the way a ``release=False`` operator does:
 the release checkpoint would otherwise mask the plan as a scan of the
 checkpointed result. The SF directory comes from SPARK_GRAFT_SF_DIR.
+Both paths strip expression and plan ids (``normalize_plan``), so two
+dumps — say of a parent commit and of a change that must keep every
+plan — compare with ``diff -r``.
 """
 
 from __future__ import annotations
@@ -215,6 +218,23 @@ def formatted_plan(df) -> str:
     )
 
 
+def normalize_plan(plan: str) -> str:
+    """Strip the volatile expression ids, plan ids and lambda-variable
+    counters, so two dumps of the same plan compare equal with
+    ``diff``."""
+    plan = re.sub(r"#\d+L?", "#x", plan)
+    plan = re.sub(r"\[plan_id=\d+\]", "", plan)
+    # PySpark numbers higher-order-function variables per process
+    plan = re.sub(r"(lambda \w+?)_\d+\b", r"\1_n", plan)
+    # literal control chars (e.g. the \x00 null-tag sentinel in
+    # fd_audit's digest) would make the artifact a binary file
+    return re.sub(
+        r"[\x00-\x08\x0b-\x1f]",
+        lambda m: f"\\x{ord(m.group(0)):02x}",
+        plan,
+    )
+
+
 def dump_unreleased(out_dir: str, suffix: str, names: list[str]) -> None:
     import breweries_etl_spark
     from breweries_etl_spark.functions import lifecycle
@@ -239,7 +259,7 @@ def dump_unreleased(out_dir: str, suffix: str, names: list[str]) -> None:
     for name in names:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(formatted_plan(qs[name](spark, sf_dir)))
+            f.write(normalize_plan(formatted_plan(qs[name](spark, sf_dir))))
         print(f"wrote {path}")
 
 
@@ -263,17 +283,7 @@ def main() -> None:
     for name in INTERESTING:
         if name not in qs:
             continue
-        plan = formatted_plan(qs[name](spark, sf_dir))
-        # strip volatile ids for a stable, diffable artifact
-        plan = re.sub(r"#\d+L?", "#x", plan)
-        plan = re.sub(r"\[plan_id=\d+\]", "", plan)
-        # literal control chars (e.g. the \x00 null-tag sentinel in
-        # fd_audit's digest) would make the artifact a binary file
-        plan = re.sub(
-            r"[\x00-\x08\x0b-\x1f]",
-            lambda m: f"\\x{ord(m.group(0)):02x}",
-            plan,
-        )
+        plan = normalize_plan(formatted_plan(qs[name](spark, sf_dir)))
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
     with open(os.path.join(REPO, "PLANS.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(out))
