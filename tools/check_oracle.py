@@ -21,13 +21,6 @@ the command line are incompatible with --sample; ``--include a,b,c``
 (round-12) instead UNIONS named queries into the seeded draw and
 records them in the artifact — guaranteed coverage for specific
 never-driver-checked names without unseeding the draw.
-
-``--exclude-driver`` (round-9 verdict #4) restricts the --sample pool
-to names that have NEVER earned a driver CORRECTNESS row: it unions
-the keys of every CORRECTNESS_r*.json in the repo root and removes
-them from the sorted name list before sampling, so each round's
-committed sample artifact spends its budget entirely on fresh
-coverage (the driver has replayed the identical 50 names since r1).
 """
 
 from __future__ import annotations
@@ -81,10 +74,6 @@ def main() -> int:
         i = argv.index("--seed")
         seed = int(argv[i + 1])
         del argv[i : i + 2]
-    exclude_driver = False
-    if "--exclude-driver" in argv:
-        exclude_driver = True
-        argv.remove("--exclude-driver")
     include: list[str] = []
     if "--include" in argv:
         # judge r11 #2: names UNIONED into the seeded draw and recorded
@@ -96,22 +85,10 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     if sample_n is not None:
-        import glob
         import random
 
         assert not only, "--sample is incompatible with explicit names"
         names = sorted(__import__("__spark_entry__").queries())
-        if exclude_driver:
-            driver_names: set[str] = set()
-            for p in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-                with open(p) as fh:
-                    driver_names.update(json.load(fh))
-            before = len(names)
-            names = [n for n in names if n not in driver_names]
-            print(
-                f"--exclude-driver: {before} registry names minus "
-                f"{len(driver_names)} driver-sampled -> pool {len(names)}"
-            )
         only = set(random.Random(seed).sample(names, sample_n))
         print(f"sampled {sample_n}/{len(names)} names with seed {seed}")
         if include:
@@ -198,6 +175,7 @@ def main() -> int:
         _, dn = normalize(d_rows, d_cols)
         if sn != dn:
             failures.append(name)
+            results[name] = {"status": "fail", "rows": len(s_rows), "err": "values"}
             diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
             print(f"FAIL {name}: value mismatch, first diffs: {diff}")
             continue
