@@ -507,10 +507,13 @@ def ks_test_2samp(
     )
     return _closing_row(
         stat,
-        F.round(
-            dec_double_wide(F.col("ks_int"))
-            / (F.col("n_a").cast("double") * F.col("n_b").cast("double")),
-            6,
+        F.when(
+            (F.col("n_a") > 0) & (F.col("n_b") > 0),
+            F.round(
+                dec_double_wide(F.col("ks_int"))
+                / (F.col("n_a").cast("double") * F.col("n_b").cast("double")),
+                6,
+            ),
         ).alias("ks_stat"),
     )
 
@@ -2295,17 +2298,25 @@ def cvm_test_2samp(
     nb = lit_nb.cast("double")
     gap = dec_double_wide(F.abs(_ecdf_gap(lit_na, lit_nb))) / (na * nb)
     c = (F.col("ca") + F.col("cb")).cast("double")
-    term = F.floor(c * gap * gap * F.lit(1e12)).cast("decimal(38,0)")
+    # one-sided input (a zero total) folds no term: the per-value gap
+    # divides by n_a·n_b
+    term = F.when(
+        (lit_na > 0) & (lit_nb > 0),
+        F.floor(c * gap * gap * F.lit(1e12)).cast("decimal(38,0)"),
+    )
     sums = _with_totals(
         pc.agg(F.sum(term).alias("t_fp")), lit_na, lit_nb, F.col("t_fp")
     )
     nn = na + nb
     return _closing_row(
         sums,
-        F.round(
-            (na * nb / (nn * nn))
-            * (F.col("t_fp").cast("double") / F.lit(1e12)),
-            6,
+        F.when(
+            (F.col("n_a") > 0) & (F.col("n_b") > 0),
+            F.round(
+                (na * nb / (nn * nn))
+                * (F.col("t_fp").cast("double") / F.lit(1e12)),
+                6,
+            ),
         ).alias("cvm_t"),
     )
 
@@ -2341,8 +2352,9 @@ def anderson_darling_2samp(
     d = f_a - h
     hh = h * (F.lit(1.0) - h)
     c = (F.col("ca") + F.col("cb")).cast("double")
+    # one-sided input (a zero total) folds no term: F_A divides by n_a
     term = F.when(
-        hh > 0,
+        (lit_na > 0) & (lit_nb > 0) & (hh > 0),
         F.floor(c * d * d / hh * F.lit(1e9)).cast("decimal(38,0)"),
     )
     sums = _with_totals(
@@ -2350,8 +2362,11 @@ def anderson_darling_2samp(
     )
     return _closing_row(
         sums,
-        F.round(
-            na / nb * (dec_double_wide(F.col("a_fp")) / F.lit(1e9)), 6
+        F.when(
+            (F.col("n_a") > 0) & (F.col("n_b") > 0),
+            F.round(
+                na / nb * (dec_double_wide(F.col("a_fp")) / F.lit(1e9)), 6
+            ),
         ).alias("ad_stat"),
     )
 
@@ -3537,11 +3552,12 @@ def kuiper_test_2samp(
     nn = F.col("n_a").cast("double") * F.col("n_b").cast("double")
     dp = dec_double_wide(F.col("dp_int")) / nn
     dm = dec_double_wide(F.col("dm_int")) / nn
+    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
     return _closing_row(
         stat,
-        F.round(dp, 6).alias("d_plus"),
-        F.round(dm, 6).alias("d_minus"),
-        F.round(dp + dm, 6).alias("kuiper_v"),
+        F.when(ok, F.round(dp, 6)).alias("d_plus"),
+        F.when(ok, F.round(dm, 6)).alias("d_minus"),
+        F.when(ok, F.round(dp + dm, 6)).alias("kuiper_v"),
     )
 
 
@@ -5850,7 +5866,12 @@ def bws_test(
         * (F.lit(1.0) - i_d / (no + F.lit(1.0)))
         * (nt * nn / no)
     )
-    t_fp = F.floor(dev * dev / denom * F.lit(1e9)).cast("decimal(38,0)")
+    # one-sided input (a zero total) folds no term: the denominator
+    # carries the other side's count, so b_a/b_b/bws_b come out NULL
+    t_fp = F.when(
+        (F.col("n_a") > 0) & (F.col("n_b") > 0),
+        F.floor(dev * dev / denom * F.lit(1e9)).cast("decimal(38,0)"),
+    )
     j = rows.agg(
         F.max(F.when(F.col("side") == 0, F.col("n_a"))).alias(
             "fold_n_ca"
@@ -6517,12 +6538,14 @@ def cucconi_test(
     c_stat = (u * u + v * v - F.lit(2.0) * rho * u * v) / (
         F.lit(2.0) * (F.lit(1.0) - rho * rho)
     )
+    # U and V divide by √(n_a·n_b·…): NULL on one-sided input
+    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
     return _closing_row(
         folded,
-        F.when(F.col("nn") > 1, F.round(u, 6)).alias("u_stat"),
-        F.when(F.col("nn") > 1, F.round(v, 6)).alias("v_stat"),
+        F.when(ok & (F.col("nn") > 1), F.round(u, 6)).alias("u_stat"),
+        F.when(ok & (F.col("nn") > 1), F.round(v, 6)).alias("v_stat"),
         F.when(
-            (F.col("nn") > 2) & (F.lit(1.0) - rho * rho > 0),
+            ok & (F.col("nn") > 2) & (F.lit(1.0) - rho * rho > 0),
             F.round(c_stat, 6),
         ).alias("cucconi_c"),
     )

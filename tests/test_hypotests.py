@@ -4,6 +4,7 @@ prefix counts — no global data-sized sort anywhere."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -213,3 +214,189 @@ def test_pinball_loss_past_group_cap_matches_collected_path(spark, monkeypatch):
     assert "percentile_disc" in plan(planned)
     assert sorted(planned.collect()) == collected
     assert {r["k_groups"] for r in collected} == {3}
+
+
+# Degenerate inputs for the two-sample tests built on the prefix-count
+# primitive: no rows, one group only, every value tied, and a NULL value
+# plus NULL groups (a NULL group counts as group B). The B-only frame
+# runs for the operators that divide by both group sizes.
+_DEGENERATE_FRAMES = {
+    "empty": [],
+    "only_a": [(v, "A") for v in (1.0, 2.0, 2.0, 3.0, 5.0, 8.0)],
+    "only_b": [(v, "B") for v in (1.0, 2.0, 2.0, 3.0, 5.0, 8.0)],
+    "all_tied": [(4.0, "A")] * 4 + [(4.0, "B")] * 3,
+    "nulls": [
+        (1.0, "A"), (3.0, "A"), (None, "A"), (7.0, "A"), (2.0, "B"),
+        (3.0, "B"), (6.0, "B"), (5.0, None), (4.0, None),
+    ],
+}
+
+# Exact output rows per operator and frame, sorted by repr. A one-sided
+# frame gives NULL statistics where a statistic divides by the other
+# group's size, as the DuckDB twins do.
+_DEGENERATE_ROWS = {
+    "ks_test_2samp": {
+        "empty": [(None, None, None)],
+        "only_a": [(6, 0, None)],
+        "only_b": [(0, 6, None)],
+        "all_tied": [(4, 3, 0.0)],
+        "nulls": [(3, 5, 0.333333)],
+    },
+    "mann_whitney_u": {
+        "empty": [(None, None, None, None)],
+        "only_a": [(6, 0, 0.0, None)],
+        "all_tied": [(4, 3, 6.0, None)],
+        "nulls": [(3, 5, 6.5, -0.299933)],
+    },
+    "kuiper_test_2samp": {
+        "empty": [(None, None, None, None, None)],
+        "only_a": [(6, 0, None, None, None)],
+        "only_b": [(0, 6, None, None, None)],
+        "all_tied": [(4, 3, 0.0, 0.0, 0.0)],
+        "nulls": [(3, 5, 0.333333, 0.333333, 0.666667)],
+    },
+    "cvm_test_2samp": {
+        "empty": [(None, None, None)],
+        "only_a": [(6, 0, None)],
+        "only_b": [(0, 6, None)],
+        "all_tied": [(4, 3, 0.0)],
+        "nulls": [(3, 5, 0.094792)],
+    },
+    "anderson_darling_2samp": {
+        "empty": [(None, None, None)],
+        "only_a": [(6, 0, None)],
+        "only_b": [(0, 6, None)],
+        "all_tied": [(4, 3, None)],
+        "nulls": [(3, 5, 0.658413)],
+    },
+    "wasserstein_1": {
+        "empty": [(None, None, None)],
+        "only_a": [(6, 0, None)],
+        "all_tied": [(4, 3, 0.0)],
+        "nulls": [(3, 5, 1.266667)],
+    },
+    "qq_fit": {
+        "empty": [(None, None, 9, None, None, None)],
+        "only_a": [(6, 0, 9, None, None, None)],
+        "all_tied": [(4, 3, 9, None, None, None)],
+        "nulls": [(3, 5, 9, 1.757143, -2.971429, 0.857653)],
+    },
+    "bws_test": {
+        "empty": [(None, None, None, None, None)],
+        "only_a": [(6, None, None, None, None)],
+        "only_b": [(None, 6, None, None, None)],
+        "all_tied": [(4, 3, 4.544891, 2.306878, 3.425885)],
+        "nulls": [(3, 5, 0.706481, 0.401542, 0.554012)],
+    },
+    "cliffs_delta": {
+        "empty": [(None, None, None, None, None)],
+        "only_a": [(6, 0, 0, 0, None)],
+        "all_tied": [(4, 3, 0, 0, 0.0)],
+        "nulls": [(3, 5, 6, 8, -0.133333)],
+    },
+    "ansari_bradley": {
+        "empty": [(None, None, None, None)],
+        "only_a": [(6, 0, 12.0, None)],
+        "all_tied": [(4, 3, 9.142857, None)],
+        "nulls": [(3, 5, 5.5, -1.253766)],
+    },
+    "siegel_tukey": {
+        "empty": [(None, None, None, None)],
+        "only_a": [(6, 0, 21.0, None)],
+        "all_tied": [(4, 3, 16.0, None)],
+        "nulls": [(3, 5, 9.5, -1.262097)],
+    },
+    "conover_squared_ranks": {
+        "empty": [(None, None, None, None)],
+        "only_a": [(6, 0, 89.0, None)],
+        "all_tied": [(4, 3, 64.0, None)],
+        "nulls": [(3, 5, 117.0, 1.336285)],
+    },
+    "lepage_test": {
+        "empty": [(None, None, None, None, None, None)],
+        "only_a": [(6, 0, None, None, None, None)],
+        "all_tied": [(4, 3, None, None, None, None)],
+        "nulls": [(3, 5, -0.299933, -1.253766, 1.66189, 0.435637)],
+    },
+    "mood_dispersion": {
+        "empty": [(None, None, None, None, None)],
+        "only_a": [(6, 0, 0.472222, 0.472222, None)],
+        "all_tied": [(4, 3, 0.0, 0.0, None)],
+        "nulls": [(3, 5, 0.398438, 0.243164, 1.472249)],
+    },
+    "cucconi_test": {
+        "empty": [(None, None, None, None, None)],
+        "only_a": [(6, 0, None, None, None)],
+        "only_b": [(0, 6, None, None, None)],
+        "all_tied": [(4, 3, -0.691095, -0.691095, 5.333333)],
+        "nulls": [(3, 5, 0.024254, 0.606339, 1.100694)],
+    },
+    "pr_curve_points": {
+        "empty": [],
+        "only_a": [
+            (1, 1.0, 6, 6, 1.0, 1.0, 1.0),
+            (2, 2.0, 5, 5, 1.0, 0.833333, 0.909091),
+            (3, 2.0, 5, 5, 1.0, 0.833333, 0.909091),
+            (4, 2.0, 5, 5, 1.0, 0.833333, 0.909091),
+            (5, 2.0, 5, 5, 1.0, 0.833333, 0.909091),
+            (6, 3.0, 3, 3, 1.0, 0.5, 0.666667),
+            (7, 5.0, 2, 2, 1.0, 0.333333, 0.5),
+            (8, 5.0, 2, 2, 1.0, 0.333333, 0.5),
+            (9, 8.0, 1, 1, 1.0, 0.166667, 0.285714),
+        ],
+        "all_tied": [
+            (1, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (2, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (3, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (4, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (5, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (6, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (7, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (8, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+            (9, 4.0, 7, 4, 0.571429, 1.0, 0.727273),
+        ],
+        "nulls": [
+            (1, 1.0, 8, 3, 0.375, 1.0, 0.545455),
+            (2, 2.0, 7, 2, 0.285714, 0.666667, 0.4),
+            (3, 3.0, 6, 2, 0.333333, 0.666667, 0.444444),
+            (4, 3.0, 6, 2, 0.333333, 0.666667, 0.444444),
+            (5, 3.0, 6, 2, 0.333333, 0.666667, 0.444444),
+            (6, 4.0, 4, 1, 0.25, 0.333333, 0.285714),
+            (7, 5.0, 3, 1, 0.333333, 0.333333, 0.333333),
+            (8, 6.0, 2, 1, 0.5, 0.333333, 0.4),
+            (9, 7.0, 1, 1, 1.0, 0.333333, 0.5),
+        ],
+    },
+    "average_precision": {
+        "empty": [(None, None, None)],
+        "only_a": [(6, 0, 1.0)],
+        "all_tied": [(4, 3, 0.571429)],
+        "nulls": [(3, 5, 0.569444)],
+    },
+    "youden_j": {
+        "empty": [(None, None, None, None, None, None)],
+        "only_a": [(6, 0, 1.0, 0.833333, None, None)],
+        "all_tied": [(4, 3, 4.0, 0.0, 0.0, 0.0)],
+        "nulls": [(3, 5, 6.0, 0.333333, 0.0, 0.333333)],
+    },
+}
+
+
+@pytest.fixture(scope="module")
+def degenerate_frames(spark):
+    return {
+        name: spark.createDataFrame(rows, schema="v double, g string")
+        for name, rows in _DEGENERATE_FRAMES.items()
+    }
+
+
+@pytest.mark.parametrize(
+    "op,frame",
+    [(op, frame) for op, by_frame in _DEGENERATE_ROWS.items() for frame in by_frame],
+)
+def test_two_sample_degenerate_frames_exact_rows(degenerate_frames, op, frame):
+    from breweries_etl_spark.operators import hypotests
+
+    out = getattr(hypotests, op)(degenerate_frames[frame], "v", F.col("g") == "A")
+    rows = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert rows == _DEGENERATE_ROWS[op][frame]
