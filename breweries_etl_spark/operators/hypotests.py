@@ -3542,13 +3542,13 @@ def kuiper_test_2samp(
     lit_na, lit_nb, _, _ = _totals(pc)
     signed = _ecdf_gap(lit_na, lit_nb)
     z = F.lit(0).cast("decimal(38,0)")
-    stat = pc.agg(
+    maxima = pc.agg(
         F.greatest(F.max(signed.cast("decimal(38,0)")), z).alias("dp_int"),
         F.greatest(F.max((-signed).cast("decimal(38,0)")), z).alias(
             "dm_int"
         ),
     )
-    stat = _with_totals(stat, lit_na, lit_nb, "dp_int", "dm_int")
+    stat = _with_totals(maxima, lit_na, lit_nb, "dp_int", "dm_int")
     nn = F.col("n_a").cast("double") * F.col("n_b").cast("double")
     dp = dec_double_wide(F.col("dp_int")) / nn
     dm = dec_double_wide(F.col("dm_int")) / nn
@@ -6926,7 +6926,7 @@ def conover_squared_ranks(
     )
     lit_na, lit_nb, lit_nn, _ = _totals(pc)
     c, cum, _ = _pooled_block()
-    m2 = (two_cum_m2 := cum + cum - c + F.lit(1).cast(d19))
+    m2 = cum + cum - c + F.lit(1).cast(d19)
     m2sq = (m2 * m2).cast(d38)
     # hi/lo split of m2⁴: m2² = a·10⁹ + b → m2⁴ = a²·10¹⁸ + cross,
     # cross = 2ab·10⁹ + b² (each partial < 10³⁸; see docstring)
